@@ -1,14 +1,16 @@
 """Layered benchmark for instructions_mr_spark.
 
-    python3 perfbench/run.py --workload olap_cold --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload curation_session --seed 1 --seconds 10 --trace 0
 
 Runs from the root of a checkout.  One process, one client, a closed
 loop: the workload's items run one after another on ``local[<cores>]``,
-pass after pass, until the next pass would end after ``--seconds``.
-Before the timed passes, set-up starts Spark, loads the query registry,
-stages the inputs and runs one warm-up pass that also collects every
-output, which is checked against its DuckDB oracle after the timed
-passes.
+pass after pass: at least ``MIN_PASSES`` timed passes (untraced runs),
+then more until the next one would end after ``--seconds``; it reports
+their median.  Before the timed passes, set-up starts Spark, loads the
+query registry, stages the inputs and runs ``WARMUP_PASSES`` warm-up
+passes; the first also collects every output, which is checked against
+its DuckDB oracle after the timed passes.  The query items read the
+fixed sf0.01 test tables in ``perfbench/testdata/``.
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` alternates
 untraced and traced passes and prints the per-layer metrics, including
@@ -38,7 +40,9 @@ import sys  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(ROOT, ".perfbench_cache")
-SCALE = 1.0  # 1.0 = the engine's sf0.01 row counts
+DATA = os.path.join(HERE, "testdata", "sf0.01")
+WARMUP_PASSES = 2  # untimed: the first pass alone runs 2-3x slower (class loading, JIT)
+MIN_PASSES = 5  # timed passes an untraced run takes its median of
 
 E2E_UNITS = {"setup_s": "s", "pass_s": "s", "item_geomean_s": "s"}
 
@@ -217,27 +221,24 @@ def main(argv: list[str] | None = None) -> int:
     import instructions_mr_spark  # noqa: F401  fail fast outside a checkout
 
     import workloads
-    from data import ensure_tables
     from spans import Tracer
 
     units = per_layer_units() if args.trace else E2E_UNITS
-    t0 = time.perf_counter()
-    data_dir = ensure_tables(os.path.join(CACHE, "tables"), SCALE)
-    datagen_s = time.perf_counter() - t0  # a one-off build, not set-up
-
     tracer = Tracer()
-    bench = Bench(data_dir, tracer, cores=len(os.sched_getaffinity(0)))
+    bench = Bench(DATA, tracer, cores=len(os.sched_getaffinity(0)))
     wl = None
     try:
         bench.start()
         wl = workloads.make(args.workload, bench, args.seed)
         wl.stage()
         bindings = install_wrappers(tracer)
-        # warm-up pass, which also collects the outputs for the check
+        # warm-up passes; the first also collects the outputs for the check
         wl.run_pass(collect=True)
+        for _ in range(WARMUP_PASSES - 1):
+            wl.run_pass()
 
         t_loop = time.perf_counter()
-        setup_s = t_loop - T_START - datagen_s
+        setup_s = t_loop - T_START
         walls: dict[bool, list[float]] = {False: [], True: []}
         items: dict[str, list[float]] = {}
         layers: list[dict[str, float]] = []
@@ -260,7 +261,9 @@ def main(argv: list[str] | None = None) -> int:
                 for k, v in item_walls.items():
                     items.setdefault(k, []).append(v)
             elapsed = time.perf_counter() - t_loop
-            if (not args.trace or n % 4 == 0) and elapsed + wall > args.seconds:
+            # a traced run stops only after a whole U T T U group
+            done = n % 4 == 0 if args.trace else len(walls[False]) >= MIN_PASSES
+            if done and elapsed + wall > args.seconds:
                 break
         rss_mb = bench.peak_rss_mb()
 
@@ -273,7 +276,7 @@ def main(argv: list[str] | None = None) -> int:
             "untraced_passes_s": walls[False],
             "traced_passes_s": walls[True],
             "item_median_s": item_med,
-            "setup": {**bench.timings, "setup_s": setup_s, "datagen_s": datagen_s},
+            "setup": {**bench.timings, "setup_s": setup_s},
             "peak_rss_mb": rss_mb,
             "fail_ratio": failed / attempted if attempted else 1.0,
             "problems": problems,

@@ -1,4 +1,4 @@
-"""Self-test of the per-layer tracing on sf0.001-size tables.
+"""Self-test of the per-layer tracing on the sf0.001 test tables.
 
     python3 perfbench/selftest.py
 
@@ -16,10 +16,9 @@ import sys
 import time
 
 import run as R
-from data import ensure_tables
 from spans import Tracer
 
-SCALE = 0.1  # sf0.001 row counts
+DATA = os.path.join(R.HERE, "testdata", "sf0.001")
 
 
 def main() -> int:
@@ -35,8 +34,7 @@ def main() -> int:
             failures.append(what)
 
     tracer = Tracer()
-    bench = R.Bench(ensure_tables(os.path.join(R.CACHE, "tables"), SCALE), tracer,
-                    cores=len(os.sched_getaffinity(0)))
+    bench = R.Bench(DATA, tracer, cores=len(os.sched_getaffinity(0)))
     try:
         bench.start()
         bindings = R.install_wrappers(tracer)
@@ -49,7 +47,7 @@ def main() -> int:
 
         per_item: dict[str, dict[str, float]] = {}
         whole: dict[str, dict[str, float]] = {}
-        for name in ("olap_cold", "curation_session", "instr_mr_http"):
+        for name in ("curation_session", "instr_mr_http"):
             wl = workloads.make(name, bench, seed=1)
             try:
                 wl.stage()
@@ -76,16 +74,17 @@ def main() -> int:
                 if sp["name"] == "item":
                     per_item[sp["item"]] = R.pass_layers(tracer, [sp] + tracer.descendants(sp), {})
 
-        o, c, h = whole["olap_cold"], whole["curation_session"], whole["instr_mr_http"]
-        check(o["sources.tables.load_table.calls"] > 0, "olap_cold: load_table.calls > 0")
-        check(o["spark.exec.tasks"] > 0 and o["spark.exec.stages"] > 0, "olap_cold: exec stages and tasks counted")
-        check(o["spark.exec.input_bytes"] > 0, "olap_cold: exec input_bytes > 0")
-        check(o["queries._util.shared_checkpoint.hits"] == 0, "olap_cold: shared_checkpoint.hits == 0")
-        check(o["operators.llm_map.tasks"] == 0, "olap_cold: no Python map tasks")
+        c, h = whole["curation_session"], whole["instr_mr_http"]
+        check(c["sources.tables.load_table.calls"] > 0, "curation_session: load_table.calls > 0")
+        check(c["spark.exec.tasks"] > 0 and c["spark.exec.stages"] > 0,
+              "curation_session: exec stages and tasks counted")
+        check(c["spark.exec.input_bytes"] > 0, "curation_session: exec input_bytes > 0")
         check(per_item["semdedup_cells"]["plans.guard.certified_local_checkpoint.calls"] > 0,
               "semdedup_cells: certified_local_checkpoint.calls > 0")
-        check(per_item["graph_conductance_brand"]["queries._util.shared_checkpoint.hits"] == 0,
+        g = per_item["graph_conductance_brand"]
+        check(g["queries._util.shared_checkpoint.hits"] == 0,
               "graph_conductance_brand: builds the shared edge stage (0 hits)")
+        check(g["operators.llm_map.tasks"] == 0, "graph_conductance_brand: no Python map tasks")
         check(per_item["graph_hits_unnormalized"]["queries._util.shared_checkpoint.hits"] > 0,
               "graph_hits_unnormalized: shared_checkpoint.hits > 0 after graph_conductance_brand")
         check(c["queries._util.free_staged_checkpoints.freed"] > 0, "curation_session: staged checkpoints freed")
