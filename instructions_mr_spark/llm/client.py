@@ -16,7 +16,8 @@ max_tokens cap, optional JSON-schema response format
   in environments without the ``openai`` package.  One client per
   executor task, shared across the async fan-out inside a partition.
 
-Clients are created *inside* mapInPandas partitions via
+Clients are created *inside* the LLM executor's partitions
+(``operators/llm_map.py``, one per ``mapInArrow`` task) via
 ``make_client`` (a picklable factory), never captured from the driver.
 """
 
@@ -39,14 +40,13 @@ class EchoLlmClient:
     ``tag=True`` prepends ``[model]`` so tests can distinguish the
     response from its prompt.
 
-    Also exposes ``complete_sync`` — the executor operators dispatch
-    to a loop-free synchronous path when a client provides it (r8
-    verdict item #6: the echo family's cost was pure asyncio
-    scaffolding — per-row coroutine trees, a semaphore, and an event
-    loop around a function that never awaits anything).  Network
-    clients deliberately do NOT provide it, so the async fan-out path
-    with bounded concurrency remains the only way to run real LLM
-    calls.
+    Also exposes ``complete_sync`` — the LLM executor
+    (``operators/llm_map._run_fanout``) dispatches to a loop-free
+    synchronous path when a client provides it, because for a client
+    that never awaits anything the asyncio scaffolding (coroutine per
+    call, semaphore, event loop) is the whole cost.  Network clients
+    deliberately do NOT provide it, so the async fan-out path with
+    bounded concurrency remains the only way to run real LLM calls.
     """
 
     def __init__(self, conf: LlmConfig | None = None, tag: bool = False):

@@ -1,4 +1,4 @@
-"""The async micro-batched LLM map operator (SURVEY.md §2.3).
+"""The async micro-batched LLM executor (SURVEY.md §2.3).
 
 Reference execution model: per record, ALL map instructions run
 concurrently via ``asyncio.gather``, one LLM call per instruction,
@@ -10,18 +10,24 @@ Spark-first re-expression — the scale-out win:
 
 * Record parallelism comes from partitions (Spark schedules them
   across executors); instruction parallelism comes from one asyncio
-  event loop per Arrow batch inside ``mapInPandas``.
+  event loop per Arrow batch inside ONE ``mapInArrow`` boundary
+  (``_llm_columns``) that every LLM stage shares: the map fan-out
+  (``instr_fanout_map``) and the xml-wrap reduce
+  (``group_concat_reduce``) differ only in their prompt columns.
 * Prompts are assembled JVM-side as columns *before* the Python
   boundary (system message is a plan-time literal, user message is
   ``to_json(struct(scope))``) so the Python stage only does the I/O
-  fan-out — no per-row Python string assembly.
+  fan-out — no per-row Python string assembly, and keep columns pass
+  through as Arrow arrays untouched.
 * Calls are issued instruction-major (all rows of instruction 0, then
   instruction 1, ...), so calls that share an identical system-prompt
   prefix are adjacent — the prefix-cache affinity the reference
   README recommends exploiting (README.md:19,85), done as batch
   ordering instead of server configuration.
 * Bounded concurrency via a semaphore; deterministic result order via
-  ``asyncio.gather``.
+  ``asyncio.gather``.  Every call goes through ``call_with_retry``
+  (the only ``client.complete`` call site in the package); clients
+  without I/O take the loop-free ``complete_sync`` path.
 
 At 100 TB the bottleneck is the LLM service, not Spark: this operator
 keeps every deterministic step distributed and JVM-side, and makes
@@ -34,15 +40,13 @@ from __future__ import annotations
 import asyncio
 from collections.abc import Callable, Iterator, Sequence
 
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import LlmConfig, Stage
 from instructions_mr_spark.llm.client import LlmClient, make_client
-from instructions_mr_spark.operators.prompts import build_sys_msg, user_msg_col
+from instructions_mr_spark.operators.prompts import build_sys_msg, user_msg_col, xml_tag_wrap
 
 _PROMPT_PREFIX = "__prompt__"
 
@@ -121,15 +125,14 @@ def call_with_retry_sync(
 
 def _run_fanout(
     client: LlmClient,
-    names: Sequence[str],
     sys_msgs: dict[str, str],
     prompts: dict[str, list[str]],
     model: str,
     concurrency: int,
-    max_retries: int = 3,
-    on_error: str = "fail",
+    max_retries: int,
+    on_error: str,
 ) -> dict[str, list[str | None]]:
-    """Run |names| × n_rows calls on one event loop, instruction-major.
+    """Run |prompts| × n_rows calls on one event loop, instruction-major.
 
     Clients that expose ``complete_sync`` (no real I/O) take the
     loop-free path: same calls, same retry semantics, zero coroutine
@@ -138,39 +141,91 @@ def _run_fanout(
         return {
             name: [
                 call_with_retry_sync(
-                    client,
-                    _chatml(sys_msgs[name], user_msg, model),
-                    max_retries=max_retries,
-                    on_error=on_error,
+                    client, _chatml(sys_msgs[name], user_msg, model),
+                    max_retries=max_retries, on_error=on_error,
                 )
-                for user_msg in prompts[name]
+                for user_msg in msgs
             ]
-            for name in names
+            for name, msgs in prompts.items()
         }
 
-    async def _go() -> dict[str, list[str | None]]:
+    async def _go() -> list[str | None]:
         sem = asyncio.Semaphore(concurrency)
 
         async def one(name: str, user_msg: str) -> str | None:
             async with sem:
                 return await call_with_retry(
-                    client,
-                    _chatml(sys_msgs[name], user_msg, model),
-                    max_retries=max_retries,
-                    on_error=on_error,
+                    client, _chatml(sys_msgs[name], user_msg, model),
+                    max_retries=max_retries, on_error=on_error,
                 )
 
-        tasks = [
-            one(name, user_msg) for name in names for user_msg in prompts[name]
-        ]
-        flat = await asyncio.gather(*tasks)
-        out: dict[str, list[str | None]] = {}
-        n = len(prompts[names[0]]) if names else 0
-        for i, name in enumerate(names):
-            out[name] = list(flat[i * n : (i + 1) * n])
-        return out
+        return await asyncio.gather(
+            *[one(name, um) for name, msgs in prompts.items() for um in msgs]
+        )
 
-    return asyncio.run(_go())
+    flat = asyncio.run(_go())
+    n = len(next(iter(prompts.values()), []))
+    return {name: flat[i * n : (i + 1) * n] for i, name in enumerate(prompts)}
+
+
+def _project_prompts(
+    df: DataFrame, keep: Sequence[str], prompts: dict[str, Column]
+) -> DataFrame:
+    """Keep columns plus one ``__prompt__{name}`` column per prompt —
+    the JVM-side projection every LLM operator feeds to its Python
+    boundary."""
+    return df.select(
+        *[F.col(c) for c in keep],
+        *[col.alias(f"{_PROMPT_PREFIX}{name}") for name, col in prompts.items()],
+    )
+
+
+def _llm_columns(
+    df: DataFrame,
+    keep: Sequence[str],
+    prompts: dict[str, Column],
+    sys_msgs: dict[str, str],
+    conf: LlmConfig,
+    concurrency: int,
+    client_factory: Callable[[LlmConfig], LlmClient],
+    max_retries: int,
+    on_error: str,
+) -> DataFrame:
+    """The one LLM executor: keep columns plus one string column per
+    prompt, each cell the LLM response to (system message, prompt).
+
+    Batches stay in Arrow end to end: prompt columns go RecordBatch ->
+    py list, results go list -> ``pa.array``, keep columns pass through
+    as the same Arrow arrays."""
+    import pyarrow as pa
+
+    from instructions_mr_spark.shipping import ensure_shipped
+
+    ensure_shipped(df.sparkSession)
+    keep = list(keep)
+    names = list(prompts)
+    prompted = _project_prompts(df, keep, prompts)
+    out_schema = T.StructType(
+        [prompted.schema[c] for c in keep]
+        + [T.StructField(n, T.StringType()) for n in names]
+    )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        client = client_factory(conf)
+        for batch in batches:
+            prompts_py = {
+                n: batch.column(f"{_PROMPT_PREFIX}{n}").to_pylist() for n in names
+            }
+            results = _run_fanout(
+                client, sys_msgs, prompts_py, conf.model, concurrency,
+                max_retries, on_error,
+            )
+            arrays = [batch.column(c) for c in keep] + [
+                pa.array(results[n], pa.string()) for n in names
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, names=keep + names)
+
+    return prompted.mapInArrow(run, schema=out_schema)
 
 
 def instr_fanout_map(
@@ -195,112 +250,18 @@ def instr_fanout_map(
     result dict (instructions.py:39-59) — pass ``keep_cols=None`` for
     exact reference semantics.
     """
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    conf = llm_conf or LlmConfig()
     available = [f.name for f in df.schema.fields]
     stage.validate_against(available)
-    keep = list(keep_cols) if keep_cols else []
-    names = stage.output_columns
-    sys_msgs = {ins.name: build_sys_msg(ins) for ins in stage.instructions}
-
-    # JVM-side prompt assembly: one user-message column per instruction.
-    prompted = df.select(
-        *[F.col(c) for c in keep],
-        *[
-            user_msg_col(ins.scope, available, pretty=pretty).alias(
-                f"{_PROMPT_PREFIX}{ins.name}"
-            )
+    return _llm_columns(
+        df,
+        keep_cols or [],
+        {
+            ins.name: user_msg_col(ins.scope, available, pretty=pretty)
             for ins in stage.instructions
-        ],
+        },
+        {ins.name: build_sys_msg(ins) for ins in stage.instructions},
+        llm_conf or LlmConfig(), concurrency, client_factory, max_retries, on_error,
     )
-
-    out_schema = T.StructType(
-        [prompted.schema[c] for c in keep]
-        + [T.StructField(n, T.StringType()) for n in names]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory(conf)
-        for pdf in batches:
-            prompts = {n: pdf[f"{_PROMPT_PREFIX}{n}"].tolist() for n in names}
-            results = _run_fanout(
-                client, names, sys_msgs, prompts, conf.model, concurrency,
-                max_retries=max_retries, on_error=on_error,
-            )
-            out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
-            for n in names:
-                out[n] = results[n]
-            yield out
-
-    return prompted.mapInPandas(run, schema=out_schema)
-
-
-def instr_fanout_map_arrow(
-    df: DataFrame,
-    stage: Stage,
-    llm_conf: LlmConfig | None = None,
-    keep_cols: Sequence[str] | None = None,
-    concurrency: int = 32,
-    client_factory: Callable[[LlmConfig], LlmClient] = make_client,
-    pretty: bool = False,
-    max_retries: int = 3,
-    on_error: str = "fail",
-) -> DataFrame:
-    """``instr_fanout_map`` on the ``mapInArrow`` fast path.
-
-    Same semantics and prompts as ``instr_fanout_map`` (shared JVM-side
-    prompt assembly and ``_run_fanout``), but the Python boundary stays
-    in Arrow: no pandas Series materialization per batch — prompt
-    columns go RecordBatch -> py list, results go list -> pa.array.
-    For an I/O-bound LLM stage the saving is small; for echo/template
-    clients (backfills, dry runs) it removes the dominant per-batch
-    conversion cost.  Keep ``instr_fanout_map`` as the default; use
-    this when profiling shows pandas conversion in the worker flame.
-    """
-    import pyarrow as pa
-
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    conf = llm_conf or LlmConfig()
-    available = [f.name for f in df.schema.fields]
-    stage.validate_against(available)
-    keep = list(keep_cols) if keep_cols else []
-    names = stage.output_columns
-    sys_msgs = {ins.name: build_sys_msg(ins) for ins in stage.instructions}
-
-    prompted = df.select(
-        *[F.col(c) for c in keep],
-        *[
-            user_msg_col(ins.scope, available, pretty=pretty).alias(
-                f"{_PROMPT_PREFIX}{ins.name}"
-            )
-            for ins in stage.instructions
-        ],
-    )
-    out_schema = T.StructType(
-        [prompted.schema[c] for c in keep]
-        + [T.StructField(n, T.StringType()) for n in names]
-    )
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        client = client_factory(conf)
-        for batch in batches:
-            prompts = {
-                n: batch.column(f"{_PROMPT_PREFIX}{n}").to_pylist() for n in names
-            }
-            results = _run_fanout(
-                client, names, sys_msgs, prompts, conf.model, concurrency,
-                max_retries=max_retries, on_error=on_error,
-            )
-            arrays = [batch.column(c) for c in keep] + [
-                pa.array(results[n], pa.string()) for n in names
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + list(names))
-
-    return prompted.mapInArrow(run, schema=out_schema)
 
 
 def group_concat_reduce(
@@ -310,7 +271,6 @@ def group_concat_reduce(
     keep_cols: Sequence[str] | None = None,
     concurrency: int = 32,
     client_factory: Callable[[LlmConfig], LlmClient] = make_client,
-    template: str | None = None,
     max_retries: int = 3,
     on_error: str = "fail",
 ) -> DataFrame:
@@ -322,210 +282,12 @@ def group_concat_reduce(
     Deterministic part (regroup + wrap + concat) stays JVM-side via
     ``xml_tag_wrap``; only the rewrite call crosses into Python.
     """
-    from instructions_mr_spark.operators.prompts import prompt_template_sub, xml_tag_wrap
-
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    conf = llm_conf or LlmConfig()
     available = [f.name for f in df.schema.fields]
     stage.validate_against(available)
-    keep = list(keep_cols) if keep_cols else []
-    names = stage.output_columns
-
-    if template is not None:
-        sys_msgs = {
-            ins.name: prompt_template_sub(
-                template,
-                {
-                    "__ROLE__": ins.role or "",
-                    "__INPUT_DESC__": ins.input_desc or "",
-                    "__OUTPUT_DESC__": ins.output_desc or "",
-                },
-            )
-            for ins in stage.instructions
-        }
-    else:
-        sys_msgs = {ins.name: build_sys_msg(ins) for ins in stage.instructions}
-
-    prompted = df.select(
-        *[F.col(c) for c in keep],
-        *[
-            xml_tag_wrap(ins.scope or available).alias(f"{_PROMPT_PREFIX}{ins.name}")
-            for ins in stage.instructions
-        ],
+    return _llm_columns(
+        df,
+        keep_cols or [],
+        {ins.name: xml_tag_wrap(ins.scope or available) for ins in stage.instructions},
+        {ins.name: build_sys_msg(ins) for ins in stage.instructions},
+        llm_conf or LlmConfig(), concurrency, client_factory, max_retries, on_error,
     )
-
-    out_schema = T.StructType(
-        [prompted.schema[c] for c in keep]
-        + [T.StructField(n, T.StringType()) for n in names]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory(conf)
-        for pdf in batches:
-            prompts = {n: pdf[f"{_PROMPT_PREFIX}{n}"].tolist() for n in names}
-            results = _run_fanout(
-                client, names, sys_msgs, prompts, conf.model, concurrency,
-                max_retries=max_retries, on_error=on_error,
-            )
-            out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
-            for n in names:
-                out[n] = results[n]
-            yield out
-
-    return prompted.mapInPandas(run, schema=out_schema)
-
-
-def instr_fanout_mapreduce_fused(
-    df: DataFrame,
-    map_stage: Stage,
-    reduce_stage: Stage,
-    llm_conf: LlmConfig | None = None,
-    keep_cols: Sequence[str] | None = None,
-    concurrency: int = 32,
-    client_factory: Callable[[LlmConfig], LlmClient] = make_client,
-    max_retries: int = 3,
-    on_error: str = "fail",
-    reduce_style: str = "xmlwrap",
-) -> DataFrame:
-    """Map + reduce stages fused into ONE mapInPandas pass.
-
-    The unfused chain crosses the Arrow boundary twice (map outputs
-    materialize, JVM builds reduce prompts, second Python stage runs
-    the rewrites).  Fusing keeps the map outputs in the Python worker
-    and issues the reduce calls on the same event loop — one Arrow
-    round trip, and per-record map->reduce latency overlaps across
-    rows instead of waiting on a stage boundary.  Semantics identical
-    to instr_fanout_map >> group_concat_reduce (xml-wrap reduce):
-    same prompts, same outputs; the echo-mode oracle is shared.
-
-    Trade-off vs the unfused chain: no intermediate DataFrame to
-    inspect/checkpoint, and map outputs aren't reusable by two
-    different reduce stages — use the unfused operators for DAG-shaped
-    pipelines.
-    """
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    conf = llm_conf or LlmConfig()
-    available = [f.name for f in df.schema.fields]
-    map_stage.validate_against(available)
-    reduce_stage.validate_against(map_stage.output_columns)
-    keep = list(keep_cols) if keep_cols else []
-    map_names = map_stage.output_columns
-    red_names = reduce_stage.output_columns
-    map_sys = {ins.name: build_sys_msg(ins) for ins in map_stage.instructions}
-    red_sys = {ins.name: build_sys_msg(ins) for ins in reduce_stage.instructions}
-    red_scopes = {
-        ins.name: list(ins.scope) if ins.scope is not None else list(map_names)
-        for ins in reduce_stage.instructions
-    }
-
-    prompted = df.select(
-        *[F.col(c) for c in keep],
-        *[
-            user_msg_col(ins.scope, available).alias(f"{_PROMPT_PREFIX}{ins.name}")
-            for ins in map_stage.instructions
-        ],
-    )
-    out_schema = T.StructType(
-        [prompted.schema[c] for c in keep]
-        + [T.StructField(n, T.StringType()) for n in red_names]
-    )
-
-    def _reduce_prompt(name: str, map_out: dict[str, str | None]) -> str:
-        if reduce_style == "xmlwrap":
-            return "".join(
-                f"<{k}>\n{map_out[k] or ''}\n</{k}>\n\n" for k in red_scopes[name]
-            )
-        import json as _json
-
-        return _json.dumps(
-            {k: map_out[k] for k in red_scopes[name]},
-            ensure_ascii=False,
-            separators=(",", ":"),
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory(conf)
-
-        if hasattr(client, "complete_sync"):
-            # Loop-free path for no-I/O clients (echo/template): same
-            # calls and prompts, same retry semantics, no coroutine
-            # scaffolding — see _run_fanout's sync branch.
-            def sync_row(row_prompts: dict[str, str]) -> dict[str, str | None]:
-                map_out = {
-                    n: call_with_retry_sync(
-                        client,
-                        _chatml(map_sys[n], row_prompts[n], conf.model),
-                        max_retries=max_retries,
-                        on_error=on_error,
-                    )
-                    for n in map_names
-                }
-                return {
-                    name: call_with_retry_sync(
-                        client,
-                        _chatml(red_sys[name], _reduce_prompt(name, map_out), conf.model),
-                        max_retries=max_retries,
-                        on_error=on_error,
-                    )
-                    for name in red_names
-                }
-
-            for pdf in batches:
-                results = [
-                    sync_row({n: pdf[f"{_PROMPT_PREFIX}{n}"].iloc[i] for n in map_names})
-                    for i in range(len(pdf))
-                ]
-                out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
-                for n in red_names:
-                    out[n] = [r[n] for r in results]
-                yield out
-            return
-
-        async def per_row(row_prompts: dict[str, str], sem: asyncio.Semaphore):
-            async def call(sys_msg: str, user_msg: str):
-                async with sem:
-                    return await call_with_retry(
-                        client,
-                        _chatml(sys_msg, user_msg, conf.model),
-                        max_retries=max_retries,
-                        on_error=on_error,
-                    )
-
-            map_out = dict(
-                zip(
-                    map_names,
-                    await asyncio.gather(
-                        *[call(map_sys[n], row_prompts[n]) for n in map_names]
-                    ),
-                )
-            )
-            # reduce prompt: either the POC xml-wrap group concat
-            # (self_verification_mr.py:457-471) or the library v0
-            # serialize path (compact JSON of the scoped result dict,
-            # byte-matching JVM to_json)
-            async def reduce_one(name: str):
-                return await call(red_sys[name], _reduce_prompt(name, map_out))
-
-            red_out = await asyncio.gather(*[reduce_one(n) for n in red_names])
-            return dict(zip(red_names, red_out))
-
-        async def run_batch(pdf: pd.DataFrame) -> list[dict[str, str]]:
-            sem = asyncio.Semaphore(concurrency)
-            rows = [
-                {n: pdf[f"{_PROMPT_PREFIX}{n}"].iloc[i] for n in map_names}
-                for i in range(len(pdf))
-            ]
-            return list(await asyncio.gather(*[per_row(r, sem) for r in rows]))
-
-        for pdf in batches:
-            results = asyncio.run(run_batch(pdf))
-            out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
-            for n in red_names:
-                out[n] = [r[n] for r in results]
-            yield out
-
-    return prompted.mapInPandas(run, schema=out_schema)

@@ -17,6 +17,8 @@ The reference runs a *global* asyncio.gather barrier between phases
 (:404-415).  Spark-first, the phases become sequential turns inside
 ONE ``mapInPandas`` partition pass: each row advances through all 4
 phases with its own transcript, rows fan out concurrently per batch.
+Every turn goes through ``llm_map.call_with_retry``, so a transient
+LLM failure backs off and retries as in every other LLM operator.
 No global barrier — better pipelining than the reference, identical
 per-record transcript semantics.
 
@@ -34,12 +36,16 @@ from collections.abc import Callable, Iterator, Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import LlmConfig, Stage
 from instructions_mr_spark.llm.client import LlmClient, make_client
-from instructions_mr_spark.operators.llm_map import _chatml
+from instructions_mr_spark.operators.llm_map import (
+    _PROMPT_PREFIX,
+    _chatml,
+    _project_prompts,
+    call_with_retry,
+)
 from instructions_mr_spark.operators.prompts import build_sys_msg, user_msg_col
 
 DEFAULT_EXTRACT_PROMPT = (
@@ -54,8 +60,6 @@ DEFAULT_EVIDENCE_PROMPT = (
     "For each extracted item, find the span of the input text that "
     "supports it. Output a JSON array of {content, evidence} objects."
 )
-
-_PROMPT_PREFIX = "__prompt__"
 
 
 def self_verified_map(
@@ -89,12 +93,10 @@ def self_verified_map(
         ins.name: build_sys_msg(ins) + extract_prompt for ins in stage.instructions
     }
 
-    prompted = df.select(
-        *[F.col(c) for c in keep],
-        *[
-            user_msg_col(ins.scope, available).alias(f"{_PROMPT_PREFIX}{ins.name}")
-            for ins in stage.instructions
-        ],
+    prompted = _project_prompts(
+        df,
+        keep,
+        {ins.name: user_msg_col(ins.scope, available) for ins in stage.instructions},
     )
 
     fields = [prompted.schema[c] for c in keep] + [
@@ -126,7 +128,7 @@ def self_verified_map(
                 if turn is not None:
                     msgs.append({"role": "user", "content": turn})
                 async with sem:
-                    resp = await client.complete(msgs)
+                    resp = await call_with_retry(client, msgs)
                 msgs.append({"role": "assistant", "content": resp})
             # phase 4 (prune) is rule-based and an identity stub in the
             # reference (self_verification_mr.py:387-393)

@@ -69,14 +69,8 @@ def run_pipeline(
     concurrency: int = 32,
     reduce_style: str = "serialize",
     pretty: bool = False,
-    fused: bool = False,
 ) -> DataFrame:
     """Compile + run: init(stringify) -> map -> reduce -> [md].
-
-    ``fused=True`` collapses each consecutive (map, reduce) stage pair
-    into one mapInPandas pass (same outputs, one Arrow round trip —
-    see operators/llm_map.instr_fanout_mapreduce_fused; requires
-    pretty=False).
 
     ``keep_cols`` flow through every stage so outputs stay joinable to
     the input records (an engine extension; the reference loses record
@@ -84,28 +78,7 @@ def run_pipeline(
     the reference's indent=2 serialization everywhere.
     """
     out = stringify_kv(df, pretty=pretty)  # init pseudo-stage (v0.py:40-44)
-    stages = list(config.stages)
-    i = 0
-    while i < len(stages):
-        stage = stages[i]
-        nxt = stages[i + 1] if i + 1 < len(stages) else None
-        if fused and not pretty and stage.kind == "map" and nxt is not None and nxt.kind == "reduce":
-            from instructions_mr_spark.operators.llm_map import (
-                instr_fanout_mapreduce_fused,
-            )
-
-            out = instr_fanout_mapreduce_fused(
-                out,
-                stage,
-                nxt,
-                config.llm,
-                keep_cols=keep_cols,
-                concurrency=concurrency,
-                client_factory=client_factory,
-                reduce_style=reduce_style,
-            )
-            i += 2
-            continue
+    for stage in config.stages:
         out = run_stage(
             out,
             stage,
@@ -116,7 +89,6 @@ def run_pipeline(
             reduce_style=reduce_style,
             pretty=pretty,
         )
-        i += 1
     if with_md and config.stages:
         out = md_sink(out, config.stages[-1].output_columns, out_col="result_md")
     return out

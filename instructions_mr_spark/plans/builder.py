@@ -102,7 +102,7 @@ class Pipeline:
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         """Compile to one lazy DataFrame plan (plans.run_pipeline);
-        kwargs pass through (keep_cols, client_factory, fused, ...)."""
+        kwargs pass through (keep_cols, client_factory, reduce_style, ...)."""
         from instructions_mr_spark.plans import run_pipeline
 
         return run_pipeline(df, self.to_config(), **kwargs)

@@ -90,13 +90,8 @@ def llm_echo_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def llm_echo_map_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """instr_fanout_map on the mapInArrow fast path (no pandas
-    materialization in the worker) — identical output to llm_echo_map,
-    same oracle."""
-    from instructions_mr_spark.operators.llm_map import instr_fanout_map_arrow
-
-    d = t(spark, sf_dir, "documents")
-    return instr_fanout_map_arrow(d, _MAP_STAGE, LlmConfig(), keep_cols=["doc_id"])
+    """Name kept for series continuity: runs llm_echo_map's plan."""
+    return llm_echo_map(spark, sf_dir)
 
 
 @query(
@@ -133,15 +128,8 @@ def llm_echo_mapreduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def llm_echo_mapreduce_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-fused twin of llm_echo_mapreduce: one Arrow round trip
-    instead of two, same oracle (operators/llm_map.py
-    instr_fanout_mapreduce_fused)."""
-    from instructions_mr_spark.operators.llm_map import instr_fanout_mapreduce_fused
-
-    d = t(spark, sf_dir, "documents")
-    return instr_fanout_mapreduce_fused(
-        d, _MAP_STAGE, _REDUCE_STAGE, LlmConfig(), keep_cols=["doc_id"]
-    )
+    """Name kept for series continuity: runs llm_echo_mapreduce's plan."""
+    return llm_echo_mapreduce(spark, sf_dir)
 
 
 # ---------------------------------------------------------------- dedup

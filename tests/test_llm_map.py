@@ -45,13 +45,47 @@ def test_fanout_map_tagged_client(spark):
     assert out.collect()[0].s.startswith("[m1] ")
 
 
-def test_fanout_calls_are_instruction_major(spark):
-    """Prefix-cache affinity contract (llm_map.py:18-22): within a
-    partition, ALL calls for instruction 0 must be issued before any
-    call for instruction 1, so calls sharing a system-prompt prefix
-    are adjacent at the LLM service.  Verified with a sequence-stamping
-    client at concurrency=1 (strict issue order): every 'first' seq
-    must be below every 'second' seq."""
+def test_keep_cols_round_trip_unchanged(spark):
+    """Keep columns cross the Python boundary untouched, whatever their
+    type: nullable bigint, decimal, timestamp, array and struct values
+    (nulls included) come back equal, under the same Spark types."""
+    import datetime as dt
+    from decimal import Decimal
+
+    keep = ["id", "amt", "ts", "tags", "meta"]
+    df = spark.createDataFrame(
+        [
+            (1, Decimal("1234567890.12"), dt.datetime(2024, 2, 29, 23, 59, 59, 123456),
+             ["a", None], (7, "x"), "one"),
+            (None, None, None, None, None, "two"),
+            (3, Decimal("-0.05"), dt.datetime(1970, 1, 1), [], (None, "é"), "three"),
+        ],
+        "id bigint, amt decimal(12,2), ts timestamp, tags array<string>, "
+        "meta struct<a:int,b:string>, text string",
+    )
+    stage = Stage([Instruction(name="s", content="c", scope=["text"])])
+    out = instr_fanout_map(df, stage, LlmConfig(), keep_cols=keep)
+    assert out.columns == keep + ["s"]
+    assert [out.schema[c] for c in keep] == [df.schema[c] for c in keep]
+    got = sorted(out.collect(), key=lambda r: json.loads(r.s)["text"])
+    want = sorted(df.collect(), key=lambda r: r.text)
+    assert [tuple(r[c] for c in keep) for r in got] == [
+        tuple(r[c] for c in keep) for r in want
+    ]
+    assert [json.loads(r.s) for r in got] == [{"text": r.text} for r in want]
+
+
+@pytest.mark.parametrize(
+    "op", [instr_fanout_map, group_concat_reduce], ids=lambda op: op.__name__
+)
+def test_fanout_calls_are_instruction_major(spark, op):
+    """Prefix-cache affinity contract (llm_map.py module docstring):
+    within a partition, ALL calls for instruction 0 must be issued
+    before any call for instruction 1, so calls sharing a system-prompt
+    prefix are adjacent at the LLM service.  Verified with a
+    sequence-stamping client at concurrency=1 (strict issue order):
+    every 'first' seq must be below every 'second' seq.  Both stage
+    kinds run through the same executor, so both must hold it."""
 
     class _SeqClient:
         def __init__(self, conf):
@@ -70,7 +104,7 @@ def test_fanout_calls_are_instruction_major(spark):
     docs = spark.createDataFrame(
         [(i, f"t{i}", "en") for i in range(20)], "doc_id int, text string, lang string"
     ).coalesce(1)
-    out = instr_fanout_map(
+    out = op(
         docs,
         stage,
         LlmConfig(),
@@ -106,7 +140,14 @@ def test_group_concat_reduce_echo(spark):
 
 def test_run_pipeline_reference_config_shape(spark):
     """Full mr_chain from the reference's JSON config format
-    (bin/text_mr_pipe.json topology: pipe[0]=map, pipe[1]=reduce)."""
+    (bin/text_mr_pipe.json topology: pipe[0]=map, pipe[1]=reduce).
+    Inputs carry non-ASCII text, a quote and a backslash, so both
+    reduce styles are pinned to exact prompt bytes through two JSON
+    escaping levels."""
+    docs = spark.createDataFrame(
+        [(1, "héllo wörld", "en"), (2, 'quote " backslash \\', "fr")],
+        "doc_id int, text string, lang string",
+    )
     conf = PipelineConfig.from_dict(
         {
             "llm": {"api_type": "echo", "model": "echo"},
@@ -119,19 +160,27 @@ def test_run_pipeline_reference_config_shape(spark):
             ],
         }
     )
+    m1 = {"1": r'{"text":"héllo wörld"}', "2": r'{"text":"quote \" backslash \\"}'}
+    m2 = {"1": r'{"lang":"en"}', "2": r'{"lang":"fr"}'}
+
     # default reduce style mirrors the library pipeline (v0.py:48-50):
     # the reduce prompt is the scoped map-result dict, serialized
-    out = run_pipeline(_docs(spark), conf, keep_cols=["doc_id"])
-    row = {r.doc_id: r for r in out.collect()}["2"]  # stringify_kv casts keep_cols too
-    assert json.loads(row.final).keys() == {"m1", "m2"}
+    out = run_pipeline(docs, conf, keep_cols=["doc_id"])
+    rows = {r.doc_id: r for r in out.collect()}  # stringify_kv casts keep_cols too
+    assert {k: r.final for k, r in rows.items()} == {
+        "1": r'{"m1":"{\"text\":\"héllo wörld\"}","m2":"{\"lang\":\"en\"}"}',
+        "2": r'{"m1":"{\"text\":\"quote \\\" backslash \\\\\"}","m2":"{\"lang\":\"fr\"}"}',
+    }
+    assert json.loads(rows["2"].final) == {"m1": m1["2"], "m2": m2["2"]}
     # markdown rendering of the final stage (v0.py:51-55)
-    assert row.result_md.startswith("# final\n")
-    assert row.result_md.endswith("\n\n")
+    assert rows["2"].result_md.startswith("# final\n")
+    assert rows["2"].result_md.endswith("\n\n")
 
     # POC reduce style: tag-wrapped group concat
-    out_xml = run_pipeline(_docs(spark), conf, keep_cols=["doc_id"], reduce_style="xmlwrap")
-    row_xml = {r.doc_id: r for r in out_xml.collect()}["2"]
-    assert row_xml.final.startswith("<m1>\n")
+    out_xml = run_pipeline(docs, conf, keep_cols=["doc_id"], reduce_style="xmlwrap")
+    assert {r.doc_id: r.final for r in out_xml.collect()} == {
+        k: f"<m1>\n{m1[k]}\n</m1>\n\n<m2>\n{m2[k]}\n</m2>\n\n" for k in ("1", "2")
+    }
 
 
 def test_pipeline_stringifies_init_stage(spark):
@@ -275,76 +324,6 @@ def test_duplicate_instruction_names_rejected():
                 Instruction(name="x", content="b"),
             ]
         )
-
-
-def test_fused_pipeline_equals_unfused(spark):
-    """run_pipeline(fused=True) must be byte-identical to the unfused
-    chain for both reduce styles (incl. unicode payloads)."""
-    docs = spark.createDataFrame(
-        [(1, "héllo wörld", "en"), (2, 'quote " backslash \\', "fr")],
-        "doc_id int, text string, lang string",
-    )
-    conf = PipelineConfig.from_dict(
-        {
-            "pipe": [
-                [
-                    {"name": "m1", "content": "a", "scope": ["text"]},
-                    {"name": "m2", "content": "b", "scope": ["lang"]},
-                ],
-                [{"name": "final", "content": "c", "scope": ["m1", "m2"]}],
-            ]
-        }
-    )
-    for style in ("serialize", "xmlwrap"):
-        plain = {
-            r.doc_id: r.final
-            for r in run_pipeline(
-                docs, conf, keep_cols=["doc_id"], with_md=False, reduce_style=style
-            ).collect()
-        }
-        fused = {
-            r.doc_id: r.final
-            for r in run_pipeline(
-                docs,
-                conf,
-                keep_cols=["doc_id"],
-                with_md=False,
-                reduce_style=style,
-                fused=True,
-            ).collect()
-        }
-        assert plain == fused, f"style={style}"
-
-
-def test_fanout_map_arrow_matches_pandas_path(spark):
-    from instructions_mr_spark.operators.llm_map import instr_fanout_map_arrow
-
-    stage = Stage(
-        [
-            Instruction(name="summary", content="Summarize.", scope=["text"]),
-            Instruction(name="tag", content="Tag.", scope=["lang"]),
-        ]
-    )
-    base = instr_fanout_map(_docs(spark), stage, LlmConfig(), keep_cols=["doc_id"])
-    arrow = instr_fanout_map_arrow(_docs(spark), stage, LlmConfig(), keep_cols=["doc_id"])
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, arrow.collect()))
-    assert base.schema == arrow.schema
-
-
-def test_fanout_map_arrow_http(spark):
-    """Arrow path exercises retry + a real client factory too."""
-    from instructions_mr_spark.llm.client import EchoLlmClient
-    from instructions_mr_spark.operators.llm_map import instr_fanout_map_arrow
-
-    stage = Stage([Instruction(name="s", content="c", scope=["text"])])
-    out = instr_fanout_map_arrow(
-        _docs(spark),
-        stage,
-        LlmConfig(model="m1"),
-        keep_cols=["doc_id"],
-        client_factory=lambda conf: EchoLlmClient(conf, tag=True),
-    )
-    assert out.collect()[0].s.startswith("[m1] ")
 
 
 def test_fluent_builder_equals_config_pipeline(spark):

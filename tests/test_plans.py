@@ -511,10 +511,10 @@ def test_band_self_joins_extract_equi_keys(spark, sf_dir):
         assert "NestedLoop" not in plan and "CartesianProduct" not in plan, name
 
 
-def _package_lines_containing(needle: str) -> list[str]:
+def _package_lines_containing(needle: str, seam: str) -> list[str]:
     """``rel:lineno`` for every package line containing ``needle``,
-    excluding plans/guard.py — the one file that hosts the sanctioned
-    seams (certified_local_checkpoint, literal_df)."""
+    excluding ``seam`` — the one file (path relative to the package)
+    that hosts the sanctioned use."""
     import glob
     import os
 
@@ -524,7 +524,7 @@ def _package_lines_containing(needle: str) -> list[str]:
     offenders = []
     for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
         rel = os.path.relpath(path, pkg)
-        if rel == os.path.join("plans", "guard.py"):
+        if rel == os.path.normpath(seam):
             continue  # the seam itself
         for i, line in enumerate(open(path), 1):
             if needle in line:
@@ -543,7 +543,7 @@ def test_no_bare_localcheckpoint_in_package():
     exactly this way; r10 verdict item #3: operators/graph.py's
     iterative-loop checkpoints had the same blind spot outside
     queries/)."""
-    offenders = _package_lines_containing(".localCheckpoint(")
+    offenders = _package_lines_containing(".localCheckpoint(", "plans/guard.py")
     assert not offenders, f"bare localCheckpoint outside the seam: {offenders}"
 
 
@@ -557,8 +557,17 @@ def test_no_bare_createdataframe_in_package():
     package would make its literal flag as an unbounded broadcast (a
     false positive that would tempt someone to weaken the strict
     default)."""
-    offenders = _package_lines_containing("createDataFrame(")
+    offenders = _package_lines_containing("createDataFrame(", "plans/guard.py")
     assert not offenders, f"bare createDataFrame outside literal_df: {offenders}"
+
+
+def test_llm_calls_only_through_the_retry_seam():
+    """Every LLM call in the PACKAGE must go through
+    operators/llm_map.py (call_with_retry), which backs off and retries
+    transient failures — a bare ``client.complete`` elsewhere fails the
+    whole job on one HTTP 500 under local[N] (task maxFailures 1)."""
+    offenders = _package_lines_containing(".complete(", "operators/llm_map.py")
+    assert not offenders, f"LLM call outside operators/llm_map.py: {offenders}"
 
 
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):

@@ -55,3 +55,43 @@ def test_mistral_dialect_in_chain(spark):
     ).collect()[0]
     roles = [m.role for m in out.facts__transcript]
     assert roles[:3] == ["user", "assistant", "user"]  # dialect rewrite applied
+
+
+def test_transient_failures_are_retried(spark):
+    """Every turn of the chain goes through the shared retry policy: a
+    client that fails twice per prompt still completes all three
+    turns (under local[N] one unretried failure fails the job)."""
+
+    # defined inside the test so cloudpickle ships it by value — test
+    # modules aren't importable from executor Python workers
+    class _FlakyClient:
+        """Fails the first N calls per prompt, then echoes."""
+
+        def __init__(self, conf, fail_times: int):
+            self.conf = conf
+            self.fail_times = fail_times
+            self.attempts: dict[str, int] = {}
+
+        async def complete(self, messages, json_schema=None):
+            key = messages[-1]["content"]
+            n = self.attempts.get(key, 0)
+            self.attempts[key] = n + 1
+            if n < self.fail_times:
+                raise RuntimeError("transient")
+            return key
+
+    df = spark.createDataFrame([(1, "t")], "doc_id int, text string")
+    out = self_verified_map(
+        df,
+        _stage(),
+        LlmConfig(),
+        keep_cols=["doc_id"],
+        client_factory=lambda conf: _FlakyClient(conf, fail_times=2),
+        with_transcript=True,
+    ).collect()[0]
+    assert out.facts == DEFAULT_EVIDENCE_PROMPT
+    assert [m.content for m in out.facts__transcript if m.role == "assistant"] == [
+        json.dumps({"text": "t"}, separators=(",", ":")),
+        DEFAULT_OMISSION_PROMPT,
+        DEFAULT_EVIDENCE_PROMPT,
+    ]

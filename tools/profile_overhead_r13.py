@@ -29,8 +29,7 @@ QUERIES = {
     "join_inner_eq": ["lineitem", "orders"],
     "join_broadcast": ["lineitem", "supplier", "nation", "region"],
     "q1_pricing_summary": ["lineitem"],
-    "q9_product_profit": ["lineitem", "orders", "part", "supplier", "nation",
-                          "partsupp" if False else "nation"],
+    "q9_product_profit": ["lineitem", "orders", "part", "supplier", "nation"],
     "q21_waiting_supplier": ["lineitem", "orders", "supplier", "nation"],
 }
 
