@@ -10,7 +10,8 @@ over JSON records.  This engine re-expresses that surface Spark-first:
 * scope        -> column pruning (``df.select``), optimized by Catalyst
 * stage        -> one DataFrame -> DataFrame transform
 * pipeline     -> a chain of lazy ``.transform`` calls (one logical plan)
-* LLM call     -> an async micro-batched ``mapInArrow`` operator
+* LLM call     -> a ``mapInArrow`` operator fanning calls over a
+                  bounded worker pool
 * reduce       -> within-record column regroup + concat (reference
                   semantics) and cross-record ``groupBy`` (extension)
 

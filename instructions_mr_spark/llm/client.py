@@ -6,19 +6,20 @@ max_tokens cap, optional JSON-schema response format
 (``src/python/instructionspipe/llm_cli.py:20-82``; Azure branch
 :36-41).  Here:
 
-* ``LlmClient`` — minimal async protocol: ``complete(messages) -> str``.
+* ``LlmClient`` — minimal blocking protocol: ``complete(messages) -> str``.
 * ``EchoLlmClient`` — deterministic pure-function client used for the
   DuckDB-oracle checks of the *scaffolding* (scope, prompt assembly,
   fan-out, regroup, sinks): the "LLM" echoes the last user message,
   optionally tagged.  This is what makes the LLM-bound operators
   hash-checkable (SURVEY.md §2.7 note).
-* ``OpenAILlmClient`` — the real path; import-gated so the engine works
-  in environments without the ``openai`` package.  One client per
-  executor task, shared across the async fan-out inside a partition.
+* ``HttpLlmClient`` (stdlib urllib) and ``OpenAILlmClient`` (import-
+  gated ``openai``) — the real paths.
 
-Clients are created *inside* the LLM executor's partitions
-(``operators/llm_map.py``, one per ``mapInArrow`` task) via
-``make_client`` (a picklable factory), never captured from the driver.
+Every client blocks (or, like echo, returns at once), so one code path
+serves all of them: clients are created *inside* the LLM executor's
+partitions (``operators/llm_map.py``, one per ``mapInArrow`` task) via
+``make_client`` (a picklable factory), never captured from the driver,
+and shared by that task's ``concurrency`` worker threads.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from instructions_mr_spark.config import LlmConfig
 
 
 class LlmClient(Protocol):
-    async def complete(
+    def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str: ...
 
@@ -38,39 +39,29 @@ class EchoLlmClient:
     """Deterministic stand-in: response = last user message content.
 
     ``tag=True`` prepends ``[model]`` so tests can distinguish the
-    response from its prompt.
-
-    Also exposes ``complete_sync`` — the LLM executor
-    (``operators/llm_map._run_fanout``) dispatches to a loop-free
-    synchronous path when a client provides it, because for a client
-    that never awaits anything the asyncio scaffolding (coroutine per
-    call, semaphore, event loop) is the whole cost.  Network clients
-    deliberately do NOT provide it, so the async fan-out path with
-    bounded concurrency remains the only way to run real LLM calls.
+    response from its prompt.  No I/O, so a call costs microseconds and
+    runs through the same worker pool as a network client.
     """
 
     def __init__(self, conf: LlmConfig | None = None, tag: bool = False):
         self.conf = conf or LlmConfig()
         self.tag = tag
 
-    def complete_sync(
+    def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str:
         users = [m["content"] for m in messages if m["role"] == "user"]
         body = users[-1] if users else ""
         return f"[{self.conf.model}] {body}" if self.tag else body
 
-    async def complete(
-        self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
-    ) -> str:
-        return self.complete_sync(messages, json_schema)
-
 
 class OpenAILlmClient:
     """OpenAI/Azure chat-completions client with the reference's knobs.
 
     Mirrors llm_cli.py:60-82: model, seed, temperature (default 0.0),
-    top_p, max_tokens, optional ``response_format`` JSON schema.
+    top_p, max_tokens, optional ``response_format`` JSON schema.  Uses
+    the blocking ``OpenAI`` / ``AzureOpenAI`` clients; the executor's
+    worker threads provide the concurrency.
     """
 
     def __init__(self, conf: LlmConfig):
@@ -80,19 +71,19 @@ class OpenAILlmClient:
             raise ImportError(
                 "openai package not installed; use api_type='echo' or install openai"
             ) from e
-        from openai import AsyncAzureOpenAI, AsyncOpenAI
+        from openai import AzureOpenAI, OpenAI
 
         self.conf = conf
         if conf.api_type == "azure":
-            self.cli = AsyncAzureOpenAI(
+            self.cli = AzureOpenAI(
                 api_key=conf.api_key,
                 api_version=conf.api_version,
                 azure_endpoint=conf.api_url,
             )
         else:
-            self.cli = AsyncOpenAI(api_key=conf.api_key, base_url=conf.api_url)
+            self.cli = OpenAI(api_key=conf.api_key, base_url=conf.api_url)
 
-    async def complete(
+    def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str:
         kwargs: dict[str, Any] = dict(
@@ -108,7 +99,7 @@ class OpenAILlmClient:
                 "type": "json_schema",
                 "json_schema": json_schema,
             }
-        resp = await self.cli.chat.completions.create(**kwargs)
+        resp = self.cli.chat.completions.create(**kwargs)
         return resp.choices[0].message.content or ""
 
 
@@ -118,10 +109,9 @@ class HttpLlmClient:
     Speaks the same ``POST {base}/chat/completions`` JSON protocol as
     llm_cli.py:60-82 but without requiring the ``openai`` package —
     the path that actually runs inside Spark Python workers in minimal
-    executor images.  Blocking I/O is pushed to a thread via
-    ``asyncio.to_thread`` so the per-partition event loop keeps the
-    instruction fan-out concurrent; HTTP errors raise and flow into
-    ``call_with_retry``'s backoff.
+    executor images.  ``complete`` blocks on the POST; the executor's
+    worker threads keep ``concurrency`` requests in flight.  HTTP
+    errors raise and flow into ``call_with_retry``'s backoff.
     """
 
     def __init__(self, conf: LlmConfig):
@@ -147,11 +137,9 @@ class HttpLlmClient:
             body = json.loads(resp.read().decode("utf-8"))
         return body["choices"][0]["message"]["content"] or ""
 
-    async def complete(
+    def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str:
-        import asyncio
-
         payload: dict[str, Any] = dict(
             model=self.conf.model,
             messages=messages,
@@ -165,7 +153,7 @@ class HttpLlmClient:
                 "type": "json_schema",
                 "json_schema": json_schema,
             }
-        return await asyncio.to_thread(self._post, payload)
+        return self._post(payload)
 
 
 def make_client(conf: LlmConfig) -> LlmClient:

@@ -1,7 +1,7 @@
-"""The async micro-batched LLM executor (SURVEY.md §2.3).
+"""The LLM executor (SURVEY.md §2.3).
 
 Reference execution model: per record, ALL map instructions run
-concurrently via ``asyncio.gather``, one LLM call per instruction,
+concurrently (one gathered coroutine each), one LLM call per instruction,
 each yielding one named output column
 (instructions_runners.py:107-130); records themselves are processed
 *sequentially* in a single process (bin/text_mr_pipe.py:51-58).
@@ -9,11 +9,11 @@ each yielding one named output column
 Spark-first re-expression — the scale-out win:
 
 * Record parallelism comes from partitions (Spark schedules them
-  across executors); instruction parallelism comes from one asyncio
-  event loop per Arrow batch inside ONE ``mapInArrow`` boundary
-  (``_llm_columns``) that every LLM stage shares: the map fan-out
-  (``instr_fanout_map``) and the xml-wrap reduce
-  (``group_concat_reduce``) differ only in their prompt columns.
+  across executors); call parallelism comes from one bounded pool of
+  worker threads per Arrow batch (``_pool_map``) inside ONE
+  ``mapInArrow`` boundary (``_llm_columns``) that every LLM stage
+  shares: the map fan-out (``instr_fanout_map``) and the xml-wrap
+  reduce (``group_concat_reduce``) differ only in their prompt columns.
 * Prompts are assembled JVM-side as columns *before* the Python
   boundary (system message is a plan-time literal, user message is
   ``to_json(struct(scope))``) so the Python stage only does the I/O
@@ -24,10 +24,11 @@ Spark-first re-expression — the scale-out win:
   prefix are adjacent — the prefix-cache affinity the reference
   README recommends exploiting (README.md:19,85), done as batch
   ordering instead of server configuration.
-* Bounded concurrency via a semaphore; deterministic result order via
-  ``asyncio.gather``.  Every call goes through ``call_with_retry``
-  (the only ``client.complete`` call site in the package); clients
-  without I/O take the loop-free ``complete_sync`` path.
+* The LLM call is a plain blocking function: ``concurrency`` worker
+  threads pull calls in list order, so at most ``concurrency`` are in
+  flight and results keep their list positions.  Every call goes
+  through ``call_with_retry`` (the only ``client.complete`` call site
+  in the package).
 
 At 100 TB the bottleneck is the LLM service, not Spark: this operator
 keeps every deterministic step distributed and JVM-side, and makes
@@ -37,8 +38,10 @@ knob.
 
 from __future__ import annotations
 
-import asyncio
+import threading
+import time
 from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,7 +69,7 @@ def _chatml(sys_msg: str, user_msg: str, model: str) -> list[dict[str, str]]:
     ]
 
 
-async def call_with_retry(
+def call_with_retry(
     client: LlmClient,
     messages: list[dict[str, str]],
     max_retries: int = 3,
@@ -87,33 +90,7 @@ async def call_with_retry(
     attempt = 0
     while True:
         try:
-            return await client.complete(messages)
-        except Exception:
-            if attempt >= max_retries:
-                if on_error == "null":
-                    return None
-                raise
-            await asyncio.sleep(backoff_base * (2**attempt))
-            attempt += 1
-
-
-def call_with_retry_sync(
-    client: LlmClient,
-    messages: list[dict[str, str]],
-    max_retries: int = 3,
-    backoff_base: float = 0.5,
-    on_error: str = "fail",
-) -> str | None:
-    """Synchronous twin of :func:`call_with_retry` for clients that
-    expose ``complete_sync`` (echo/template/dry-run clients — no I/O,
-    so an event loop is pure overhead).  Identical retry/on_error
-    semantics."""
-    import time
-
-    attempt = 0
-    while True:
-        try:
-            return client.complete_sync(messages)  # type: ignore[attr-defined]
+            return client.complete(messages)
         except Exception:
             if attempt >= max_retries:
                 if on_error == "null":
@@ -121,6 +98,52 @@ def call_with_retry_sync(
                 raise
             time.sleep(backoff_base * (2**attempt))
             attempt += 1
+
+
+def _check_llm_args(concurrency: int, on_error: str = "fail") -> None:
+    """Plan-time check of the knobs every LLM operator shares."""
+    if not isinstance(concurrency, int) or concurrency < 1:
+        raise ValueError(f"concurrency must be an int >= 1, got {concurrency!r}")
+    if on_error not in ("fail", "null"):
+        raise ValueError(f"on_error must be 'fail' or 'null', got {on_error!r}")
+
+
+def _pool_map(fn: Callable[[Any], Any], items: list, concurrency: int) -> list:
+    """``[fn(x) for x in items]`` on ``min(concurrency, len(items))``
+    worker threads (the caller is one).  Workers pull items from one
+    shared iterator, so items start in list order (strictly sequential
+    at ``concurrency=1``) — no future per call, whose scheduling costs
+    more than an echo call.  After the first exception no worker
+    starts another item; it is re-raised once in-flight calls finish."""
+    results: list = [None] * len(items)
+    errors: list[BaseException] = []
+    # next() on a shared enumerate(list) iterator is atomic under
+    # CPython's GIL (both are C iterators), so claiming an item needs
+    # no lock; a lock per item costs more than an echo call
+    todo = enumerate(items)
+
+    def work() -> None:
+        for i, item in todo:
+            if errors:
+                return
+            try:
+                results[i] = fn(item)
+            except BaseException as e:  # re-raised in the caller below
+                errors.append(e)
+                return
+
+    threads = [
+        threading.Thread(target=work, daemon=True)
+        for _ in range(min(concurrency, len(items)) - 1)
+    ]
+    for t in threads:
+        t.start()
+    work()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def _run_fanout(
@@ -132,38 +155,19 @@ def _run_fanout(
     max_retries: int,
     on_error: str,
 ) -> dict[str, list[str | None]]:
-    """Run |prompts| × n_rows calls on one event loop, instruction-major.
-
-    Clients that expose ``complete_sync`` (no real I/O) take the
-    loop-free path: same calls, same retry semantics, zero coroutine
-    scaffolding — concurrency is meaningless without I/O to overlap."""
-    if hasattr(client, "complete_sync"):
-        return {
-            name: [
-                call_with_retry_sync(
-                    client, _chatml(sys_msgs[name], user_msg, model),
-                    max_retries=max_retries, on_error=on_error,
-                )
-                for user_msg in msgs
-            ]
-            for name, msgs in prompts.items()
-        }
-
-    async def _go() -> list[str | None]:
-        sem = asyncio.Semaphore(concurrency)
-
-        async def one(name: str, user_msg: str) -> str | None:
-            async with sem:
-                return await call_with_retry(
-                    client, _chatml(sys_msgs[name], user_msg, model),
-                    max_retries=max_retries, on_error=on_error,
-                )
-
-        return await asyncio.gather(
-            *[one(name, um) for name, msgs in prompts.items() for um in msgs]
-        )
-
-    flat = asyncio.run(_go())
+    """Run |prompts| × n_rows calls through one pool, instruction-major."""
+    calls = [
+        _chatml(sys_msgs[name], user_msg, model)
+        for name, msgs in prompts.items()
+        for user_msg in msgs
+    ]
+    flat = _pool_map(
+        lambda messages: call_with_retry(
+            client, messages, max_retries=max_retries, on_error=on_error
+        ),
+        calls,
+        concurrency,
+    )
     n = len(next(iter(prompts.values()), []))
     return {name: flat[i * n : (i + 1) * n] for i, name in enumerate(prompts)}
 
@@ -201,6 +205,7 @@ def _llm_columns(
 
     from instructions_mr_spark.shipping import ensure_shipped
 
+    _check_llm_args(concurrency, on_error)
     ensure_shipped(df.sparkSession)
     keep = list(keep)
     names = list(prompts)

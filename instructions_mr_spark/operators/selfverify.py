@@ -13,10 +13,12 @@ chain where state is the growing ChatML transcript:
 4. prune     — rule-based prune; a stub in the reference (it only
                marks finished=True, :387-393)
 
-The reference runs a *global* asyncio.gather barrier between phases
+The reference runs a *global* gather barrier between phases
 (:404-415).  Spark-first, the phases become sequential turns inside
-ONE ``mapInPandas`` partition pass: each row advances through all 4
-phases with its own transcript, rows fan out concurrently per batch.
+ONE ``mapInPandas`` partition pass: each (instruction, row) chain
+advances through all 4 phases with its own transcript, and a batch's
+chains run on the LLM executor's bounded worker pool
+(``llm_map._pool_map``, ``concurrency`` chains in flight).
 Every turn goes through ``llm_map.call_with_retry``, so a transient
 LLM failure backs off and retries as in every other LLM operator.
 No global barrier — better pipelining than the reference, identical
@@ -30,7 +32,6 @@ the full transcript deterministic and unit-checkable.
 
 from __future__ import annotations
 
-import asyncio
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
@@ -43,6 +44,8 @@ from instructions_mr_spark.llm.client import LlmClient, make_client
 from instructions_mr_spark.operators.llm_map import (
     _PROMPT_PREFIX,
     _chatml,
+    _check_llm_args,
+    _pool_map,
     _project_prompts,
     call_with_retry,
 )
@@ -83,6 +86,7 @@ def self_verified_map(
     """
     from instructions_mr_spark.shipping import ensure_shipped
 
+    _check_llm_args(concurrency)
     ensure_shipped(df.sparkSession)
     conf = llm_conf or LlmConfig()
     available = [f.name for f in df.schema.fields]
@@ -122,31 +126,27 @@ def self_verified_map(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = client_factory(conf)
 
-        async def chain(name: str, user_msg: str, sem: asyncio.Semaphore):
+        def chain(call: tuple[str, str]) -> list[dict[str, str]]:
+            name, user_msg = call
             msgs = _chatml(sys_msgs[name], user_msg, conf.model)
             for turn in (None, omission_prompt, evidence_prompt):
                 if turn is not None:
                     msgs.append({"role": "user", "content": turn})
-                async with sem:
-                    resp = await call_with_retry(client, msgs)
+                resp = call_with_retry(client, msgs)
                 msgs.append({"role": "assistant", "content": resp})
             # phase 4 (prune) is rule-based and an identity stub in the
             # reference (self_verification_mr.py:387-393)
             return msgs
 
-        async def run_batch(pdf: pd.DataFrame) -> dict[str, list]:
-            sem = asyncio.Semaphore(concurrency)
-            tasks = [
-                chain(name, um, sem)
+        for pdf in batches:
+            calls = [
+                (name, um)
                 for name in names
                 for um in pdf[f"{_PROMPT_PREFIX}{name}"].tolist()
             ]
-            flat = await asyncio.gather(*tasks)
+            flat = _pool_map(chain, calls, concurrency)
             n = len(pdf)
-            return {name: flat[i * n : (i + 1) * n] for i, name in enumerate(names)}
-
-        for pdf in batches:
-            transcripts = asyncio.run(run_batch(pdf))
+            transcripts = {name: flat[i * n : (i + 1) * n] for i, name in enumerate(names)}
             out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
             for name in names:
                 out[name] = [m[-1]["content"] for m in transcripts[name]]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.functions import cosine_sim, dot_product
+from instructions_mr_spark.plans.guard import sql_double, sql_double_array, sql_ident
 
 
 def _collect_train_sample(
@@ -123,15 +124,17 @@ def _centroid_dots_sql(vec_col: str, centroids: list[list[float]]) -> str:
     repr'd double (shortest-roundtrip both ways) and the fold is the
     same aggregate/zip_with/CAST tree dot_product builds — verified
     cell-identical on every sf0.1 vector before the swap."""
-    def dot(c: list[float]) -> str:
-        arr = "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
+    vec = sql_ident(vec_col)
+
+    def dot(j: int, c: list[float]) -> str:
+        arr = sql_double_array(c, f"centroid {j}")
         return (
-            f"aggregate(zip_with({vec_col}, {arr},"
+            f"aggregate(zip_with({vec}, {arr},"
             " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
             " 0.0D, (acc, x) -> acc + x)"
         )
 
-    return "array(" + ",".join(dot(c) for c in centroids) + ")"
+    return "array(" + ",".join(dot(j, c) for j, c in enumerate(centroids)) + ")"
 
 
 def assign_ivf_cell(
@@ -264,15 +267,16 @@ def pq_encode(
     enc = df
     packed_terms = ["CAST(0 AS BIGINT)"]
     for s in range(m):
-        sub = f"slice({vec_col}, {s * ds + 1}, {ds})"
+        sub = f"slice({sql_ident(vec_col)}, {s * ds + 1}, {ds})"
         cells = []
-        for c in codebooks[s]:
-            arr = "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
-            half = sum(x * x for x in c) / 2.0
+        for j, c in enumerate(codebooks[s]):
+            what = f"codebook {s} codeword {j}"
+            arr = sql_double_array(c, what)
+            half = sql_double(sum(x * x for x in c) / 2.0, what + " half-norm")
             cells.append(
                 f"aggregate(zip_with({sub}, {arr},"
                 " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                f" 0.0D, (acc, x) -> acc + x) - {float(half)!r}D"
+                f" 0.0D, (acc, x) -> acc + x) - {half}"
             )
         col = f"__pq_s{s}"
         enc = enc.withColumn(col, F.expr("array(" + ",".join(cells) + ")"))
@@ -316,13 +320,14 @@ def pq_adc_search(
     # lookup tables + exact re-rank fold built as SQL strings for the
     # same plan-build-cost reason as pq_encode (round 13); identical
     # expression trees and literal values
+    qarr = sql_double_array(query_vec, "query_vec")
     dist_terms = ["0.0D"]
     for s in range(m):
         q = query_vec[s * ds : (s + 1) * ds]
         lut = [
             float(sum((qx - cx) ** 2 for qx, cx in zip(q, c))) for c in codebooks[s]
         ]
-        arr = "array(" + ",".join(f"{x!r}D" for x in lut) + ")"
+        arr = sql_double_array(lut, f"ADC lookup table of subspace {s}")
         code_s = f"pmod(CAST(pq_code / {k ** s} AS BIGINT), {k})"
         dist_terms.append(
             f"element_at({arr}, CAST({code_s} AS INT) + 1)"
@@ -333,9 +338,8 @@ def pq_adc_search(
         .orderBy(F.col("approx_l2").asc(), F.col(id_col))
         .limit(rerank * top_k)
     )
-    qarr = "array(" + ",".join(f"{float(x)!r}D" for x in query_vec) + ")"
     exact_l2 = F.expr(
-        f"aggregate(zip_with({vec_col}, {qarr},"
+        f"aggregate(zip_with({sql_ident(vec_col)}, {qarr},"
         " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
         " 0.0D, (acc, x) -> acc + x)"
     )

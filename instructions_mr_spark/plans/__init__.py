@@ -156,7 +156,7 @@ def run_with_configs(
     (``instructionspipe.pipelines.mapreduce.run_with_configs``,
     v0.py:26-31): one record dict in, the reference's output dict out
     — ``{"map_results": {...}, "reduce_results": {...}, "result":
-    markdown}`` (v0.py:51-55).  Synchronous (no asyncio — Spark owns
+    markdown}`` (v0.py:51-55).  Synchronous (no event loop — Spark owns
     the concurrency); ``llm`` is the config's ``llm`` dict or an
     LlmConfig.  For datasets use run_pipeline — this single-record
     path exists so reference callers can migrate line-for-line.

@@ -42,6 +42,7 @@ every registered query, and runnable standalone:
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass, field
 
@@ -318,6 +319,34 @@ def literal_df(spark, data, schema=None):
         df = spark.createDataFrame(data, schema)
     register_checkpoint_bounds(df, True)
     return df
+
+
+def sql_double(value: float, what: str) -> str:
+    """One double as a SQL literal: ``'<repr>D'`` parses back to exactly
+    the repr'd double (shortest round trip both ways).  NaN and +-Inf
+    would render as ``nanD`` / ``infD``, which ``F.expr`` cannot parse,
+    so they raise here, naming ``what`` held them."""
+    x = float(value)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"{what} holds a non-finite value {x!r}; SQL double literals must be finite"
+        )
+    return f"{x!r}D"
+
+
+def sql_double_array(values, what: str) -> str:
+    """``array(<d>D,...)`` for hand-built SQL strings.  With
+    ``sql_double`` the ONLY place the package renders doubles into SQL
+    text (a grep-guard, tests/test_plans.py::
+    test_sql_double_literals_only_in_guard, keeps it that way).  One parsed string instead of a py4j ``F.lit`` per
+    element is what keeps k x d centroid arrays cheap to build."""
+    return "array(" + ",".join(sql_double(x, what) for x in values) + ")"
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, embedded
+    backticks doubled, so a dotted or odd name resolves as one column."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def unregister_checkpoint_bounds(df_ck) -> None:

@@ -133,34 +133,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def observed(
-    df: DataFrame,
-    name: str = "metrics",
-    null_check_cols: list[str] | tuple[str, ...] = (),
-) -> DataFrame:
-    """Attach ``observe()`` data-quality counters to a DataFrame:
-    row count plus a null count per requested column, collected as a
-    side effect of whatever action runs downstream — ZERO extra passes
-    over the data (contrast a separate ``df.count()`` audit, which
-    re-scans; at 100 TB that second scan is the whole cost).
-
-    Read the values after an action via
-    ``df.sparkSession...`` QueryExecutionListener or, simplest, the
-    returned observation name in ``df.collectResult`` — tests use the
-    ``Observation`` helper variant ``observed_with``."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
-        for c in null_check_cols
-    ]
-    return df.observe(name, *aggs)
-
-
 def observed_with(
     df: DataFrame, null_check_cols: list[str] | tuple[str, ...] = ()
 ):
-    """``observe()`` with a pyspark Observation handle: returns
-    (df, observation); after any action on df, ``observation.get``
-    yields {n_rows, nulls_<col>...} — free metrics riding the job."""
+    """Attach ``observe()`` data-quality counters to a DataFrame: row
+    count plus a null count per requested column.  Returns (df,
+    observation); after any action on df, ``observation.get`` yields
+    {n_rows, nulls_<col>...} — metrics riding the job with ZERO extra
+    passes over the data (a separate ``df.count()`` audit re-scans; at
+    100 TB that second scan is the whole cost)."""
     from pyspark.sql import Observation
 
     obs = Observation()

@@ -1,15 +1,21 @@
-"""Tests for the async LLM map/reduce operators and the config->plan
+"""Tests for the LLM map/reduce operators and the config->plan
 compiler (SURVEY.md §2.3-2.4), echo mode."""
 
 from __future__ import annotations
 
 import json
+import sys
+import threading
 
 import pytest
 
 from instructions_mr_spark.config import Instruction, LlmConfig, PipelineConfig, Stage
 from instructions_mr_spark.llm.client import EchoLlmClient
-from instructions_mr_spark.operators.llm_map import group_concat_reduce, instr_fanout_map
+from instructions_mr_spark.operators.llm_map import (
+    _pool_map,
+    group_concat_reduce,
+    instr_fanout_map,
+)
 from instructions_mr_spark.plans import run_pipeline
 
 
@@ -91,7 +97,7 @@ def test_fanout_calls_are_instruction_major(spark, op):
         def __init__(self, conf):
             self.seq = 0
 
-        async def complete(self, messages):
+        def complete(self, messages):
             self.seq += 1
             return str(self.seq)
 
@@ -118,10 +124,73 @@ def test_fanout_calls_are_instruction_major(spark, op):
     assert sorted(first_seqs + second_seqs) == list(range(1, 41))
 
 
+def test_pool_map_claims_every_item_once_under_contention():
+    """The pool's workers share one iterator and one result list with no
+    lock: with more workers than cores and a tiny GIL switch interval,
+    every item must still run exactly once and land in its slot."""
+    items = list(range(20000))
+    seen: list[tuple[int, int]] = []
+
+    def fn(x):
+        seen.append((x, threading.get_ident()))
+        return 2 * x
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = _pool_map(fn, items, concurrency=16)
+    finally:
+        sys.setswitchinterval(interval)
+    assert out == [2 * x for x in items]
+    assert sorted(x for x, _ in seen) == items
+    assert len({ident for _, ident in seen}) > 1  # really ran on several threads
+
+
+def test_pool_map_stops_on_first_error_and_reraises_it():
+    """After the first exception no worker starts another item, and the
+    caller sees that exception object itself."""
+    boom = RuntimeError("boom")
+    started: list[int] = []
+
+    def fn(x):
+        started.append(x)
+        if x == 3:
+            raise boom
+        return x
+
+    with pytest.raises(RuntimeError) as exc:
+        _pool_map(fn, list(range(100)), concurrency=1)
+    assert exc.value is boom
+    assert started == [0, 1, 2, 3]
+    assert _pool_map(fn, [], concurrency=8) == []
+
+
 def test_scope_validation_fails_fast(spark):
     stage = Stage([Instruction(name="s", content="c", scope=["nope"])])
     with pytest.raises(ValueError, match="nope"):
         instr_fanout_map(_docs(spark), stage, LlmConfig())
+
+
+@pytest.mark.parametrize(
+    "op", [instr_fanout_map, group_concat_reduce], ids=lambda op: op.__name__
+)
+def test_zero_concurrency_rejected_at_build(spark, op):
+    """A pool needs at least one worker: concurrency=0 must fail the
+    plan build, not hang a task waiting for a free slot."""
+    stage = Stage([Instruction(name="s", content="c", scope=["text"])])
+    with pytest.raises(ValueError, match="concurrency must be an int >= 1, got 0"):
+        op(_docs(spark), stage, LlmConfig(), concurrency=0)
+
+
+@pytest.mark.parametrize(
+    "op", [instr_fanout_map, group_concat_reduce], ids=lambda op: op.__name__
+)
+def test_unknown_on_error_rejected_at_build(spark, op):
+    """Only 'fail' and 'null' are error policies; any other value must
+    fail the plan build instead of silently behaving as 'fail'."""
+    stage = Stage([Instruction(name="s", content="c", scope=["text"])])
+    with pytest.raises(ValueError, match="on_error must be 'fail' or 'null', got 'skip'"):
+        op(_docs(spark), stage, LlmConfig(), on_error="skip")
 
 
 def test_group_concat_reduce_echo(spark):
@@ -206,7 +275,7 @@ def test_retry_recovers_from_transient_failures(spark):
             self.fail_times = fail_times
             self.attempts: dict[str, int] = {}
 
-        async def complete(self, messages, json_schema=None):
+        def complete(self, messages, json_schema=None):
             key = messages[-1]["content"]
             n = self.attempts.get(key, 0)
             self.attempts[key] = n + 1
@@ -240,7 +309,7 @@ def test_on_error_null_quarantines_column(spark):
         def __init__(self, conf):
             self.conf = conf
 
-        async def complete(self, messages, json_schema=None):
+        def complete(self, messages, json_schema=None):
             raise RuntimeError("permanent")
 
     out = instr_fanout_map(
@@ -292,7 +361,7 @@ def test_split_quarantine(spark):
         def __init__(self, conf):
             self.conf = conf
 
-        async def complete(self, messages, json_schema=None):
+        def complete(self, messages, json_schema=None):
             body = messages[-1]["content"]
             if "alpha" in body:
                 return body

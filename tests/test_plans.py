@@ -570,6 +570,15 @@ def test_llm_calls_only_through_the_retry_seam():
     assert not offenders, f"LLM call outside operators/llm_map.py: {offenders}"
 
 
+def test_sql_double_literals_only_in_guard():
+    """Doubles rendered into hand-built SQL text (``'<repr>D'``) must go
+    through plans.guard.sql_double / sql_double_array, which reject NaN
+    and +-Inf with a message naming the array — a bare render turns a
+    non-finite value into ``nanD``, which ``F.expr`` cannot parse."""
+    offenders = _package_lines_containing("!r}D", "plans/guard.py")
+    assert not offenders, f"SQL double literal outside plans/guard.py: {offenders}"
+
+
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):
     """The supersede_checkpoint certification must fire on a hinted
     unbounded subtree that would afterwards hide behind the

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
 from instructions_mr_spark.operators.selfverify import (
     DEFAULT_EVIDENCE_PROMPT,
@@ -72,7 +74,7 @@ def test_transient_failures_are_retried(spark):
             self.fail_times = fail_times
             self.attempts: dict[str, int] = {}
 
-        async def complete(self, messages, json_schema=None):
+        def complete(self, messages, json_schema=None):
             key = messages[-1]["content"]
             n = self.attempts.get(key, 0)
             self.attempts[key] = n + 1
@@ -95,3 +97,11 @@ def test_transient_failures_are_retried(spark):
         DEFAULT_OMISSION_PROMPT,
         DEFAULT_EVIDENCE_PROMPT,
     ]
+
+
+def test_zero_concurrency_rejected_at_build(spark):
+    """Same plan-time check as the LLM executor: concurrency=0 fails the
+    build instead of reaching a worker pool with no workers."""
+    df = spark.createDataFrame([(1, "t")], "doc_id int, text string")
+    with pytest.raises(ValueError, match="concurrency must be an int >= 1, got 0"):
+        self_verified_map(df, _stage(), LlmConfig(), concurrency=0)

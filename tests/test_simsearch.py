@@ -42,6 +42,26 @@ def test_assignment_is_deterministic_and_total(emb, centroids):
     assert len(da) == emb.count()  # every vector assigned
 
 
+def test_non_finite_centroid_fails_with_clear_message(emb, centroids):
+    """A NaN centroid would render as ``nanD``, which the SQL parser
+    rejects with an unrelated syntax error; the literal seam names the
+    offending array instead."""
+    planted = [list(c) for c in centroids]
+    planted[3][5] = float("nan")
+    with pytest.raises(ValueError, match="centroid 3 holds a non-finite value nan"):
+        assign_ivf_cell(emb, planted)
+
+
+def test_dotted_vector_column_name(emb, centroids):
+    """The vector column is quoted as an identifier, so a column whose
+    NAME contains a dot is read as that column, not as a struct field."""
+    plain = assign_ivf_cell(emb, centroids).select("vec_id", "cell")
+    dotted = assign_ivf_cell(
+        emb.withColumnRenamed("embedding", "emb.v"), centroids, vec_col="emb.v"
+    ).select("vec_id", "cell")
+    assert sorted(dotted.collect()) == sorted(plain.collect())
+
+
 def test_ivf_recall_vs_brute_force(emb, centroids):
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
     qlit = F.array(*[F.lit(x) for x in qv])
