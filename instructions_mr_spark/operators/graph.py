@@ -26,68 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.plans.guard import certified_local_checkpoint
-
-
-def _free_checkpoint(df: DataFrame | None) -> None:
-    """Release the block-manager storage of a SUPERSEDED
-    localCheckpoint()ed DataFrame.
-
-    Spark never frees local-checkpoint blocks on its own: every round
-    of an iterative algorithm otherwise leaves one cached RDD behind
-    for the life of the session — in a long-lived driver process
-    (bench loops, notebook, streaming foreachBatch) that accumulation
-    turns into executor-memory pressure and GC churn.  The checkpoint
-    RDD hides inside the LogicalRDD node of the checkpointed plan;
-    unpersisting the DataFrame's visible .rdd would miss it.
-
-    The freed DataFrame must never be referenced again (its lineage is
-    truncated — recompute is impossible by design).  Freeing is
-    best-effort: a non-checkpointed plan simply no-ops.
-    """
-    if df is None:
-        return
-    try:
-        # drop the freed plan's attr-id boundedness entries: the plan
-        # is dead (lineage truncated, blocks released), so the ids can
-        # never be looked up again — without this, a long-lived driver
-        # calling the iterative operators per batch grows the guard
-        # registry by ~2 registrations x rounds per call.  Residual
-        # growth (ADVICE r11): the per-CALL registrations — the
-        # round-0 checkpoints (cc_star_nodes/edges0, cc_labels0,
-        # pagerank_nodes) and each call's RETURNED labels/ranks
-        # checkpoint — stay registered while the result is live (the
-        # round-0 checkpoints can sit inside the returned plan's
-        # lineage, so they cannot be freed here).  Growth is
-        # O(live results), not O(calls x rounds): query-path callers
-        # go through supersede_checkpoint, whose
-        # free_staged_checkpoints() clears the whole registry between
-        # queries; a direct operator caller releases a consumed
-        # result by passing it to _free_checkpoint (which drops its
-        # entries via this same unregister).
-        from instructions_mr_spark.plans.guard import unregister_checkpoint_bounds
-
-        unregister_checkpoint_bounds(df)
-        analyzed = df._jdf.queryExecution().analyzed()
-        # Only a LogicalRDD node carries the checkpoint RDD; if a
-        # future Spark wraps the checkpointed plan in something else,
-        # freeing silently no-ops — log it so the per-round leak is
-        # observable instead of invisible.
-        if analyzed.nodeName() != "LogicalRDD":
-            import logging
-
-            logging.getLogger(__name__).debug(
-                "_free_checkpoint skipped: analyzed plan is %s, not LogicalRDD",
-                analyzed.nodeName(),
-            )
-            return
-        analyzed.rdd().unpersist(False)
-    except Exception:
-        import logging
-
-        logging.getLogger(__name__).debug(
-            "_free_checkpoint failed (leak possible)", exc_info=True
-        )
+from instructions_mr_spark.plans.guard import certified_local_checkpoint, free_checkpoint
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -121,8 +60,8 @@ def connected_components_star(
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # collect nodes BEFORE dropping self-loops so a node appearing
     # only in a self-loop still gets a (node, node) label
-    # (superseded per-round checkpoints are freed via _free_checkpoint;
-    # see its docstring)
+    # (superseded per-round checkpoints are freed via
+    # plans.guard.free_checkpoint; see its docstring)
     nodes = certified_local_checkpoint(
         raw.select(F.col("src").alias("node"))
         .unionByName(raw.select(F.col("dst").alias("node")))
@@ -163,7 +102,6 @@ def connected_components_star(
             large.filter(F.col("src") != F.col("dst")).distinct(),
             "cc_star_large",
             eager=False,
-            certify_once=True,
         )
         # ---- small-star: edges already point large->small; group by
         # src, link every smaller neighbor (and src) to the minimum
@@ -177,11 +115,10 @@ def connected_components_star(
             small.filter(F.col("src") != F.col("dst")).distinct(),
             "cc_star_small",
             eager=False,
-            certify_once=True,
         )
         sig = _edge_checksum(e)
-        _free_checkpoint(prev_e)
-        _free_checkpoint(e_large)
+        free_checkpoint(prev_e)
+        free_checkpoint(e_large)
         if sig == prev_sig:
             converged = True
             break
@@ -249,10 +186,9 @@ def connected_components(
             ),
             "cc_labels",
             eager=False,
-            certify_once=True,
         )
         cur_sum = labels.agg(F.sum("component")).first()[0]
-        _free_checkpoint(prev_labels)
+        free_checkpoint(prev_labels)
         if cur_sum == prev_sum:
             converged = True
             break
@@ -376,10 +312,8 @@ def pagerank(
         # re-plans the stacked rounds as one job).  Cadence chosen by
         # the r8 sf2 interleaved A/B recorded in BENCH_sf1.json.
         if (i + 1) % PR_CKPT_EVERY == 0 or i == iterations - 1:
-            ranks = certified_local_checkpoint(
-                ranks, "pagerank_ranks", certify_once=True
-            )
-            _free_checkpoint(last_ck)
+            ranks = certified_local_checkpoint(ranks, "pagerank_ranks")
+            free_checkpoint(last_ck)
             last_ck = ranks
     edeg.unpersist()
     if q is not None:

@@ -1,13 +1,4 @@
-"""Unbounded-broadcast-hint certification on logical plans.
-
-Core logic for the mechanical no-unbounded-broadcast guard (VERDICT r8
-item #1), moved into the package in round 10 so
-``queries._util.supersede_checkpoint`` can certify every checkpointed
-subtree on its PRE-checkpoint plan (VERDICT r9 item #1: an eager
-``localCheckpoint()`` truncates lineage to a ``LogicalRDD``, so a hint
-executed at checkpoint time was invisible to the registry-wide sweep,
-which walks only final plans).  ``tools/broadcast_guard.py`` re-exports
-everything here and keeps the standalone CLI sweep.
+"""Unbounded-broadcast-hint certification and the checkpoint seam.
 
 A forced ``F.broadcast()`` hint — unlike an AQE- or estimate-chosen
 broadcast, which backs off when the measured size is large — is a
@@ -22,11 +13,14 @@ with the corpus and fails at 100x.
 This module parses the OPTIMIZED logical plan (where
 ``EliminateResolvedHint`` has attached every user hint to its join as
 ``leftHint=/rightHint=(strategy=broadcast)``), extracts each hinted
-subtree, and certifies it bounded by recursion:
+subtree, and certifies it bounded by recursion (one rule walk,
+:func:`_why_unbounded`):
 
 * leaf ``Relation`` nodes are classified by their column fingerprint
   (``n_nationkey`` -> nation, ``c_custkey`` -> customer, ...): only
   nation / region / LocalRelation / Range / OneRowRelation are bounded;
+* ``LogicalRDD`` leaves (checkpoints and driver literals) are bounded
+  only if their attrs were registered bounded — fail-closed;
 * ``Aggregate`` / ``Deduplicate`` bound everything beneath them IFF no
   grouping key references an entity-id column;
 * ``GlobalLimit`` bounds unconditionally;
@@ -34,14 +28,22 @@ subtree, and certifies it bounded by recursion:
   iff ALL children are bounded; every other node inherits from its
   children (no children -> unbounded, conservatively).
 
-Used by tests/test_plans.py::test_no_unbounded_broadcast_hints over
-every registered query, and runnable standalone:
+The checkpoint seam lives here too: :func:`certified_local_checkpoint`
+certifies a plan, checkpoints it and registers the checkpoint's attrs
+with the plan's boundedness; :func:`free_checkpoint` releases the
+blocks and drops the registration.  An eager ``localCheckpoint()``
+truncates lineage to a ``LogicalRDD``, so certifying the
+PRE-checkpoint plan is the only moment a hint behind it is visible.
+
+The registry-wide sweep is ``tools/broadcast_guard.py`` (also run by
+tests/test_plans.py::test_no_unbounded_broadcast_hints):
 
     python tools/broadcast_guard.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import logging
 import math
 import re
 from dataclasses import dataclass, field
@@ -196,64 +198,31 @@ def _filter_pins_entity(text: str) -> bool:
     return " OR " not in text and bool(_ID_PIN.search(text))
 
 
-# Output-attribute ids of certified checkpoints -> the boundedness of
-# the PRE-checkpoint plan (round 10 hardening): a ``LogicalRDD`` leaf
-# is either a driver-side literal (createDataFrame — bounded) or a
-# materialized checkpoint, and for checkpoints made through
-# supersede_checkpoint the original plan's boundedness is recorded
-# here by attr id, so broadcasting a corpus-scale CHECKPOINTED table
-# downstream is flagged instead of waved through.  Limitation
-# (documented, tested): Spark's DeduplicateRelations re-ids one side
-# of a self-join, and those re-id'd attrs fall back to the literal
-# default — the certification at checkpoint-build time (which sees
-# the un-truncated plan) remains the primary seam; this lookup closes
-# the downstream-reuse window.
+# Output-attribute ids of registered LogicalRDD leaves -> boundedness.
+# A ``LogicalRDD`` leaf is either a driver-side literal (``literal_df``,
+# registered bounded) or a checkpoint made by
+# ``certified_local_checkpoint``, registered with the boundedness of
+# the PRE-checkpoint plan, so broadcasting a corpus-scale CHECKPOINTED
+# table downstream is flagged instead of waved through.  An attr id
+# nobody registered is unbounded (fail-closed): every package-made
+# LogicalRDD goes through one of the two registering seams (both
+# grep-guarded in tests/test_plans.py).
 CHECKPOINT_COLS_BOUNDED: dict[str, bool] = {}
-# Name-SET fallback for strict mode: Spark's DeduplicateRelations
-# re-ids one side of a self-join, so a checkpoint's attrs can appear
-# in a plan under ids the registry has never seen.  The column-NAME
-# frozenset survives the re-id; if the same name-set was ever
-# registered with conflicting boundedness, the conservative AND wins.
-# Accepted conservatism (round-11 review): the AND is sticky for the
-# session — once any UNBOUNDED checkpoint shares a name-set with a
-# bounded one, the bounded one's re-id'd self-joins flag under strict
-# mode (a false POSITIVE, never a false negative).  No registered
-# query trips this today (the strict sweep is green); if one ever
-# does, rename a column at the seam rather than weakening the AND.
+# Name-SET fallback: Spark's DeduplicateRelations re-ids one side of a
+# self-join, so a checkpoint's attrs can appear in a plan under ids the
+# registry has never seen.  The column-NAME frozenset survives the
+# re-id; if the same name-set was ever registered with conflicting
+# boundedness, the conservative AND wins.  Accepted conservatism
+# (round-11 review): the AND is sticky for the session — once any
+# UNBOUNDED checkpoint shares a name-set with a bounded one, the
+# bounded one's re-id'd self-joins flag (a false POSITIVE, never a
+# false negative).  No registered query trips this today (the sweep
+# is green); if one ever does, rename a column at the seam rather than
+# weakening the AND.
 CHECKPOINT_NAMES_BOUNDED: dict[frozenset, bool] = {}
 _CHECKPOINT_APP: list[str] = []  # appId the registry belongs to
 
-# Fail-closed toggle (ADVICE r10): _logical_rdd_bounded's literal
-# default ("unknown LogicalRDD = bounded") is right at a single query
-# seam — certification runs on the PRE-checkpoint plan, and literals
-# (arrow createDataFrame) are the only other LogicalRDD source — but
-# it inverts the guard's otherwise-conservative default for the
-# registry-wide sweep, where every package checkpoint IS registered
-# (the certified_local_checkpoint seam is grep-guard-enforced).  In
-# strict mode an unknown LogicalRDD falls back to the name-set
-# registry, then to UNBOUNDED.
-_STRICT_LOGICAL_RDD: list[bool] = []
-
-
-class strict_logical_rdd:
-    """Context manager: classify unregistered LogicalRDD leaves as
-    unbounded (fail-closed) for the duration.  Used by the
-    registry-wide sweep in tests/test_plans.py and by the
-    certification seam itself (certified_local_checkpoint).
-
-    Caller contract: the plan text must be rendered with
-    ``spark.sql.debug.maxToStringFields`` raised (certify/sweep paths
-    set 2000) — a truncated attr list yields a wrong name-set, and in
-    strict mode a wrong name-set fails CLOSED (a registered bounded
-    checkpoint with >25 columns would flag as an offender)."""
-
-    def __enter__(self):
-        _STRICT_LOGICAL_RDD.append(True)
-        return self
-
-    def __exit__(self, *exc):
-        _STRICT_LOGICAL_RDD.pop()
-        return False
+_log = logging.getLogger(__name__)
 
 
 def clear_checkpoint_bounds() -> None:
@@ -267,23 +236,28 @@ def clear_checkpoint_bounds() -> None:
     _CHECKPOINT_APP.clear()
 
 
+def _output_attrs(df) -> list[tuple[str, str]]:
+    """``(name, "name#id")`` of each output attr of ``df``'s analyzed
+    plan — the registry key is the id form plan text prints."""
+    out = df._jdf.queryExecution().analyzed().output()
+    attrs = [out.apply(i) for i in range(out.size())]
+    return [(a.name(), f"{a.name()}#{a.exprId().id()}") for a in attrs]
+
+
 def register_checkpoint_bounds(df_ck, is_bounded: bool) -> None:
-    """Record a checkpointed DataFrame's output attribute ids with the
-    boundedness of the plan it truncated (see CHECKPOINT_COLS_BOUNDED).
-    Called by plans.guard.certified_local_checkpoint."""
+    """Record a LogicalRDD-rooted DataFrame's output attribute ids with
+    the boundedness of the plan it truncated (see
+    CHECKPOINT_COLS_BOUNDED).  Called by certified_local_checkpoint and
+    literal_df."""
     app = df_ck.sparkSession.sparkContext.applicationId
     if _CHECKPOINT_APP and _CHECKPOINT_APP[0] != app:
         clear_checkpoint_bounds()
     if not _CHECKPOINT_APP:
         _CHECKPOINT_APP.append(app)
-    out = df_ck._jdf.queryExecution().analyzed().output()
-    names = []
-    for i in range(out.size()):
-        attr = out.apply(i)
-        key = f"{attr.name()}#{attr.exprId().id()}"
+    attrs = _output_attrs(df_ck)
+    for _, key in attrs:
         CHECKPOINT_COLS_BOUNDED[key] = is_bounded
-        names.append(attr.name())
-    nameset = frozenset(names)
+    nameset = frozenset(name for name, _ in attrs)
     CHECKPOINT_NAMES_BOUNDED[nameset] = (
         CHECKPOINT_NAMES_BOUNDED.get(nameset, True) and is_bounded
     )
@@ -293,11 +267,11 @@ def literal_df(spark, data, schema=None):
     """The ONLY sanctioned ``createDataFrame`` call in the package:
     build a driver-side literal table and register its output attrs
     as bounded.  PySpark's createDataFrame compiles to a LogicalRDD
-    (same leaf a checkpoint truncates to), so under the fail-closed
-    sweep (``strict_logical_rdd``) an unregistered literal would be
-    classified corpus-scale; registering at creation keeps the strict
-    default sound — every package-made LogicalRDD is registered, so
-    "unknown = unbounded" has no false positives.  A grep-guard
+    (same leaf a checkpoint truncates to), and the guard classifies an
+    unregistered LogicalRDD as corpus-scale; registering at creation
+    keeps that fail-closed default sound — every package-made
+    LogicalRDD is registered, so "unknown = unbounded" has no false
+    positives.  A grep-guard
     (tests/test_plans.py::test_no_bare_createdataframe_in_package)
     keeps bare createDataFrame calls out of every other module.
 
@@ -349,36 +323,16 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def unregister_checkpoint_bounds(df_ck) -> None:
-    """Drop a freed checkpoint's attr-id entries (called by
-    operators.graph._free_checkpoint once the blocks are released and
-    the plan can never be referenced again).  Name-SET entries stay:
-    other live checkpoints may share the schema, and the set count is
-    bounded by distinct schemas, not by iterations."""
-    try:
-        out = df_ck._jdf.queryExecution().analyzed().output()
-        for i in range(out.size()):
-            attr = out.apply(i)
-            CHECKPOINT_COLS_BOUNDED.pop(
-                f"{attr.name()}#{attr.exprId().id()}", None
-            )
-    except Exception:
-        pass  # best-effort, like the block free itself
-
-
 def _logical_rdd_bounded(text: str) -> bool:
-    """A LogicalRDD is bounded unless a registered checkpoint column
-    says its source plan was corpus-scale.  Plan text prints attrs as
-    ``name#123L`` (type suffix after the id); the lookup key is
-    ``name#123``, which the id regex extracts directly.
-
-    Unknown attrs (never registered): bounded by default — at the
-    certification seam the only unregistered LogicalRDDs are driver
-    literals.  Under ``strict_logical_rdd()`` (the registry-wide
-    sweep) the default flips to fail-closed: an unknown LogicalRDD is
-    unbounded unless its column-name SET matches a checkpoint the
-    seam registered as bounded (DeduplicateRelations re-ids self-join
-    attrs; the name-set survives)."""
+    """A LogicalRDD is bounded only if the registry says so, and it
+    fails closed: a registered-unbounded attr makes it unbounded; all
+    attrs registered bounded make it bounded; otherwise (ids nobody
+    registered, e.g. DeduplicateRelations re-id'd a self-join side) its
+    column-name SET decides, and a name-set never registered bounded is
+    unbounded.  Plan text prints attrs as ``name#123L`` (type suffix
+    after the id); the lookup key is ``name#123``, which the id regex
+    extracts directly.  The text must be rendered untruncated (see
+    optimized_plan): a truncated attr list yields a wrong name-set."""
     attrs = [
         m.group(0)
         for m in re.finditer(
@@ -388,50 +342,15 @@ def _logical_rdd_bounded(text: str) -> bool:
     known = [CHECKPOINT_COLS_BOUNDED[a] for a in attrs if a in CHECKPOINT_COLS_BOUNDED]
     if any(k is False for k in known):
         return False
-    if not _STRICT_LOGICAL_RDD:
-        return True
     if attrs and len(known) == len(attrs):
         return True  # every attr registered bounded
     nameset = frozenset(a.split("#", 1)[0] for a in attrs)
     return CHECKPOINT_NAMES_BOUNDED.get(nameset, False)
 
 
-def bounded(node: Node) -> bool:
-    name = node.name
-    if name in ("GlobalLimit", "LocalLimit"):
-        return True
-    if name == "Filter" and _filter_pins_entity(node.text):
-        return True
-    if name == "LogicalRDD":
-        return _logical_rdd_bounded(node.text)
-    if name in ("LocalRelation", "OneRowRelation", "Range"):
-        # driver-side literal tables
-        return True
-    if name == "Relation":
-        return classify_relation(node.text)[1]
-    if name == "Aggregate":
-        if _keys_unbounded(_grouping_keys(node.text)):
-            return False
-        return True
-    if name == "Deduplicate":
-        if _keys_unbounded(_first_bracket(node.text)):
-            return False
-        return True
-    if name == "Join":
-        kind = node.text.split(" ")[1].rstrip(",") if " " in node.text else ""
-        kids = node.children
-        if not kids:
-            return False
-        if kind in ("LeftSemi", "LeftAnti") and len(kids) >= 1:
-            return bounded(kids[0])
-        return all(bounded(k) for k in kids)
-    if not node.children:
-        return False
-    return all(bounded(k) for k in node.children)
-
-
 def _why_unbounded(node: Node) -> str:
-    """First node that breaks the bounded certificate, for diagnosis."""
+    """The boundedness rules: ``""`` if ``node``'s subtree is provably
+    bounded, else the first node that breaks the certificate."""
     name = node.name
     if name == "LogicalRDD":
         return (
@@ -477,6 +396,10 @@ def _why_unbounded(node: Node) -> str:
     return ""
 
 
+def bounded(node: Node) -> bool:
+    return not _why_unbounded(node)
+
+
 def _hinted_offenders_of(root: Node) -> list[str]:
     bad: list[str] = []
 
@@ -484,12 +407,12 @@ def _hinted_offenders_of(root: Node) -> list[str]:
         if n.name == "Join" and "strategy=broadcast" in n.text:
             kids = list(n.children)
             if "leftHint=(strategy=broadcast" in n.text and kids:
-                if not bounded(kids[0]):
-                    why = _why_unbounded(kids[0])
+                why = _why_unbounded(kids[0])
+                if why:
                     bad.append(f"LEFT [{why}] of: " + n.text[:140])
             if "rightHint=(strategy=broadcast" in n.text and len(kids) >= 2:
-                if not bounded(kids[-1]):
-                    why = _why_unbounded(kids[-1])
+                why = _why_unbounded(kids[-1])
+                if why:
                     bad.append(f"RIGHT [{why}] of: " + n.text[:140])
         for k in n.children:
             walk(k)
@@ -506,150 +429,82 @@ def hinted_offenders(plan: str) -> list[str]:
 
 
 def optimized_plan(df) -> str:
+    """``df``'s optimized logical plan text with untruncated node
+    strings: at Spark's default ``maxToStringFields`` (25) a long
+    Aggregate line hides its grouping keys, and a LogicalRDD's attr
+    list its name-set, from the rules above."""
+    df.sparkSession.conf.set("spark.sql.debug.maxToStringFields", "2000")
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-_CERT_ONCE: dict[tuple, bool] = {}
+def certified_local_checkpoint(df, label: str, eager: bool = True):
+    """The ONLY sanctioned ``localCheckpoint`` call in the package:
+    certify the PRE-checkpoint optimized plan hint-bounded (raise on
+    an unbounded broadcast hint — afterwards the plan is one
+    ``LogicalRDD`` leaf and the hint is invisible), checkpoint, then
+    register the checkpoint's output attr ids with the whole plan's
+    boundedness so a downstream ``F.broadcast()`` of it is
+    classifiable.  Every checkpoint is certified; release one with
+    :func:`free_checkpoint`.
 
-
-def _cert_profile(df) -> tuple:
-    """Cache key payload for ``certify_once``: a fingerprint of the
-    ANALYZED plan's shape plus the registered boundedness of every
-    LogicalRDD leaf (round 12, ADVICE r11).
-
-    The r11 cache keyed only (appId, label), which reused a verdict
-    across CALLS with different inputs: a first connected_components
-    over a bounded test graph cached ``cc_labels=True``, so a later
-    corpus-scale call registered ITS loop checkpoints as bounded and a
-    downstream broadcast of them passed the strict sweep — a false
-    negative in the very guard the seam hardens (and the reverse
-    direction stuck false positives).  Quantized and unquantized
-    pagerank also shared the 'pagerank_ranks' key despite different
-    loop bodies.
-
-    This profile makes the key input- and shape-sensitive while
-    keeping the saving (one full Catalyst optimizer pass per loop
-    round) intact:
-
-    * shape: the analyzed plan text with attr ids stripped — stable
-      across a loop's rounds (each round re-ids its checkpoint
-      leaves but the body is fixed code), different between loop
-      bodies (quantized pagerank embeds FLOOR/decimal casts and
-      n-dependent literals the plain body doesn't) and between scans
-      of different paths.  Analysis is already done eagerly by
-      PySpark, so rendering it costs a toString, not an optimizer
-      pass.
-    * leaves: each LogicalRDD leaf's strict-mode boundedness under
-      the CURRENT checkpoint registry.  Equal profiles ⇒ the
-      boundedness classifier sees the same tree with the same leaf
-      verdicts ⇒ the cached full-plan verdict is the verdict this
-      call would compute.
-    """
-    spark = df.sparkSession
-    # full node strings (same contract as certify_no_unbounded_hints):
-    # a truncated attr list would fingerprint a wrong name-set
-    if spark.conf.get("spark.sql.debug.maxToStringFields", "25") != "2000":
-        spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
-    txt = df._jdf.queryExecution().analyzed().toString()
-    leaves: list[tuple] = []
-
-    def walk(n: Node) -> None:
-        if n.name == "LogicalRDD":
-            with strict_logical_rdd():
-                verdict = _logical_rdd_bounded(n.text)
-            leaves.append(
-                (frozenset(_COLREF.findall(n.text)), verdict)
-            )
-        for k in n.children:
-            walk(k)
-
-    walk(parse_plan(txt))
-    shape = re.sub(r"#\d+", "#", txt)
-    return (hash(shape), tuple(leaves))
-
-
-def certified_local_checkpoint(
-    df, label: str, eager: bool = True, certify_once: bool = False
-):
-    """The ONLY sanctioned ``localCheckpoint`` call in the package
-    (round 11, VERDICT r10 item #3): certify the PRE-checkpoint
-    optimized plan hint-bounded, checkpoint, then register the
-    truncated plan's output attr ids with its boundedness so a
-    downstream ``F.broadcast()`` of the checkpoint is classifiable.
-
-    ``queries._util.supersede_checkpoint`` wraps this with staging /
-    free-on-release lifecycle for query builders; ``operators/graph.py``
-    calls it directly inside its iterative loops (which run their own
-    free-on-supersede lifecycle via ``_free_checkpoint``).  A grep-guard
+    ``queries._util.supersede_checkpoint`` wraps this with a staging
+    lifecycle for query builders; ``operators/graph.py`` calls it
+    directly inside its iterative loops and frees each superseded
+    round.  A grep-guard
     (tests/test_plans.py::test_no_bare_localcheckpoint_in_package)
-    keeps bare ``.localCheckpoint(`` out of every other module, so no
-    checkpoint seam can bypass certification.
+    keeps bare ``.localCheckpoint(`` out of every other module.
 
     ``eager=False`` defers materialization to the caller's next action
     (the iterative loops' per-round checksum/convergence aggregate) —
-    certification happens at plan-build time either way.
-
-    Certification runs fail-closed (``strict_logical_rdd``): at this
-    seam every LogicalRDD leaf is either an earlier certified
-    checkpoint or a ``literal_df`` literal — both registered — so an
-    UNREGISTERED LogicalRDD under a hint here is a bypass, not a
-    literal.  This extends the registry-wide sweep's strict default to
-    the plans the sweep can't see: the per-iteration loop plans of the
-    iterative operators it SKIPs (CC / star / PageRank).
-
-    ``certify_once=True`` (the iterative-loop sites): certify the
-    FIRST plan built under this (app, label, profile) and reuse its
-    verdict for later rounds — the loop body is fixed code, so every
-    round's plan is shape-identical up to LogicalRDD leaf ids and a
-    hint introduced by a code change is present in round 1; skipping
-    rounds 2..k saves one full Catalyst optimizer pass per round on
-    the driver's critical path (~50 passes per cc_star call at
-    max_iter=25).  The key carries :func:`_cert_profile` (analyzed
-    shape + per-leaf boundedness), so a later call with DIFFERENT
-    inputs or a different loop body recomputes instead of reusing a
-    stale verdict (ADVICE r11: the (app, label)-only key leaked a
-    bounded test graph's verdict onto a corpus-scale call)."""
-    if certify_once:
-        app = df.sparkSession.sparkContext.applicationId
-        key = (app, label, _cert_profile(df))
-        if key in _CERT_ONCE:
-            is_bounded = _CERT_ONCE[key]
-        else:
-            # a fresh JVM restarts exprIds; stale-app entries can
-            # never hit again — drop them instead of growing forever
-            for k in [k for k in _CERT_ONCE if k[0] != app]:
-                del _CERT_ONCE[k]
-            with strict_logical_rdd():
-                is_bounded = certify_no_unbounded_hints(df, label)
-            _CERT_ONCE[key] = is_bounded
-    else:
-        with strict_logical_rdd():
-            is_bounded = certify_no_unbounded_hints(df, label)
-    ck = df.localCheckpoint(eager=eager)
-    register_checkpoint_bounds(ck, is_bounded)
-    return ck
-
-
-
-
-def certify_no_unbounded_hints(df, label: str) -> bool:
-    """Raise if ``df``'s optimized plan carries a broadcast hint on a
-    subtree not provably bounded.  Called by
-    ``queries._util.supersede_checkpoint`` on every staged table
-    BEFORE ``localCheckpoint()`` materializes it — the only moment the
-    hinted lineage is still visible (afterwards the plan is one
-    ``LogicalRDD`` leaf and the registry-wide sweep certifies a
-    vacuous truth).  Returns whether the WHOLE plan is bounded, so the
-    caller can register the checkpoint's columns for downstream
-    LogicalRDD classification (see CHECKPOINT_COLS_BOUNDED)."""
-    # full node strings: a length-truncated Aggregate line hides its
-    # grouping keys from the boundedness classifier (set once/session)
-    if df.sparkSession.conf.get("spark.sql.debug.maxToStringFields", "25") != "2000":
-        df.sparkSession.conf.set("spark.sql.debug.maxToStringFields", "2000")
+    certification happens at plan-build time either way."""
     root = parse_plan(optimized_plan(df))
     hits = _hinted_offenders_of(root)
     if hits:
         raise AssertionError(
             f"unbounded broadcast hint behind checkpoint {label!r}: {hits}"
         )
-    return bounded(root)
+    ck = df.localCheckpoint(eager=eager)
+    register_checkpoint_bounds(ck, bounded(root))
+    return ck
+
+
+def free_checkpoint(df) -> None:
+    """Release the block-manager storage of a SUPERSEDED checkpoint
+    and drop its attr ids from the guard registry.
+
+    Spark never frees local-checkpoint blocks on its own: every round
+    of an iterative algorithm otherwise leaves one cached RDD behind
+    for the life of the session — in a long-lived driver process
+    (bench loops, notebook, streaming foreachBatch) that accumulation
+    turns into executor-memory pressure and GC churn, and the registry
+    grows by one entry per attr per round.  The checkpoint RDD hides
+    inside the LogicalRDD node of the checkpointed plan; unpersisting
+    the DataFrame's visible .rdd would miss it.  Name-SET entries
+    stay: other live checkpoints may share the schema, and their count
+    is bounded by distinct schemas, not by rounds.  The iterative
+    operators free every superseded round themselves; each call's
+    round-0 and returned checkpoints stay registered while the result
+    is live, so a direct operator caller releases a consumed result by
+    passing it here.
+
+    The freed DataFrame must never be referenced again (its lineage is
+    truncated — recompute is impossible by design).  Freeing is
+    best-effort: ``None`` or a non-checkpointed plan simply no-ops."""
+    if df is None:
+        return
+    try:
+        for _, key in _output_attrs(df):
+            CHECKPOINT_COLS_BOUNDED.pop(key, None)
+        analyzed = df._jdf.queryExecution().analyzed()
+        # Only a LogicalRDD node carries the checkpoint RDD; if a
+        # future Spark wraps the checkpointed plan in something else,
+        # freeing silently no-ops — log it so the leak is observable.
+        if analyzed.nodeName() != "LogicalRDD":
+            _log.debug(
+                "free_checkpoint skipped: analyzed plan is %s, not LogicalRDD",
+                analyzed.nodeName(),
+            )
+            return
+        analyzed.rdd().unpersist(False)
+    except Exception:
+        _log.debug("free_checkpoint failed (leak possible)", exc_info=True)

@@ -75,39 +75,25 @@ _STAGED_CKPTS: list[DataFrame] = []
 
 
 def supersede_checkpoint(key: str, df: DataFrame) -> DataFrame:
-    """Certify, localCheckpoint, and stage a query builder's
-    intermediate table; the harness releases staged tables between
-    iterations.  ``df`` is the UN-checkpointed plan — the checkpoint
-    happens HERE, after certification.
-
-    Certification (round 10, VERDICT r9 item #1): an eager
-    ``localCheckpoint()`` truncates lineage to a ``LogicalRDD``, so a
-    broadcast hint executed at checkpoint time was invisible to the
-    registry-wide final-plan sweep (tests/test_plans.py).  Running
-    the guard on the pre-checkpoint optimized plan closes that blind
-    spot mechanically: every staged subtree is certified
-    hint-bounded at build time, and a grep-guard test keeps bare
-    localCheckpoint calls out of the whole package (round 11: the
-    seam moved to plans.guard.certified_local_checkpoint and now
-    covers operators/ too) so it cannot be bypassed.
+    """Checkpoint and stage a query builder's intermediate table; the
+    harness releases staged tables between iterations.  ``df`` is the
+    UN-checkpointed plan: plans.guard.certified_local_checkpoint
+    certifies it (fail-closed, raising on an unbounded broadcast hint),
+    checkpoints it and registers the result; this wrapper adds only the
+    staging lifecycle.  ``key`` labels the site for guard diagnostics.
 
     Staging: query builders that eagerly checkpoint a staged table
     (PMI / bigram pair tables, LSH signature tables) otherwise leak
-    one cached RDD per invocation for the life of the session — the
-    exact accumulation graph.py's _free_checkpoint fixes for
-    iterative loops.  Auto-freeing on rebuild is NOT safe here: two
-    related queries (e.g. dedup_minhash_lsh and dedup_cluster_cc) may
-    stage the same table while both returned plans are still pending,
-    so freeing is explicit — bench.py calls
-    free_staged_checkpoints() after each query's timing loop;
+    one cached RDD per invocation for the life of the session.
+    Auto-freeing on rebuild is NOT safe here: two related queries
+    (e.g. dedup_minhash_lsh and dedup_cluster_cc) may stage the same
+    table while both returned plans are still pending, so freeing is
+    explicit — bench.py, perfbench and tools/check_oracle.py call
+    free_staged_checkpoints() once a query's results are consumed;
     one-shot drivers leak at most one block set per staged table.
-    ``key`` labels the site for debugging and guard diagnostics.
     """
     from instructions_mr_spark.plans.guard import certified_local_checkpoint
 
-    # certify-then-checkpoint-then-register lives in plans/guard.py
-    # (round 11: the same seam now also serves operators/graph.py's
-    # iterative loops); this wrapper adds the staging lifecycle only
     ck = certified_local_checkpoint(df, key)
     _STAGED_CKPTS.append(ck)
     return ck
@@ -137,8 +123,7 @@ def free_staged_checkpoints() -> int:
     Call ONLY when all previously-built query results are fully
     consumed (their lineage is truncated — recompute is impossible).
     Returns the number of checkpoints freed."""
-    from instructions_mr_spark.operators.graph import _free_checkpoint
-    from instructions_mr_spark.plans.guard import clear_checkpoint_bounds
+    from instructions_mr_spark.plans.guard import clear_checkpoint_bounds, free_checkpoint
 
     _SHARED_STAGE.clear()
     # freed checkpoints' plans are gone, so their recorded attr-id
@@ -147,7 +132,7 @@ def free_staged_checkpoints() -> int:
     clear_checkpoint_bounds()
     n = len(_STAGED_CKPTS)
     for df in _STAGED_CKPTS:
-        _free_checkpoint(df)
+        free_checkpoint(df)
     _STAGED_CKPTS.clear()
     return n
 

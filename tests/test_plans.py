@@ -476,27 +476,14 @@ def test_no_unbounded_broadcast_hints(spark, sf_dir):
     per-user/customer hints) plus the part/supplier/customer TPC-H
     dim hints and the uncapped probe/bench sets were all removed or
     capped this round; a returning hint fails here, not in a 100 TB
-    run.  Certification logic lives in tools/broadcast_guard.py
-    (parses the optimized logical plan, where EliminateResolvedHint
-    has attached each user hint to its join)."""
+    run.  The rules live in plans/guard.py (they parse the optimized
+    logical plan, where EliminateResolvedHint has attached each user
+    hint to its join); tools/broadcast_guard.sweep applies them to
+    every registered query.  An unregistered LogicalRDD behind a hint
+    fails closed."""
     import tools.broadcast_guard as bg
 
-    spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
-    offenders = []
-    # fail-closed LogicalRDD default (ADVICE r10): every package
-    # checkpoint registers its boundedness through the
-    # certified_local_checkpoint seam (grep-guard-enforced below), so
-    # in this registry-wide sweep an UNREGISTERED LogicalRDD behind a
-    # hint is classified unbounded unless its column-name set matches
-    # a seam-registered bounded checkpoint (self-join re-id fallback).
-    with bg.strict_logical_rdd():
-        for name, fn in sorted(registry.QUERIES.items()):
-            if name in bg.SKIP:
-                continue
-            hits = bg.hinted_offenders(bg.optimized_plan(fn(spark, sf_dir)))
-            if hits:
-                offenders.append((name, hits))
-    assert not offenders, f"unbounded broadcast hints in: {offenders}"
+    assert bg.sweep(spark, sf_dir) == []
 
 
 def test_band_self_joins_extract_equi_keys(spark, sf_dir):
@@ -551,12 +538,11 @@ def test_no_bare_createdataframe_in_package():
     """Every driver-side literal table must flow through
     plans.guard.literal_df, which registers the literal's output
     attrs as bounded — PySpark's createDataFrame compiles to the same
-    LogicalRDD leaf a checkpoint truncates to, and the fail-closed
-    sweep above (strict_logical_rdd) classifies UNREGISTERED
-    LogicalRDDs as corpus-scale.  A bare createDataFrame in the
-    package would make its literal flag as an unbounded broadcast (a
-    false positive that would tempt someone to weaken the strict
-    default)."""
+    LogicalRDD leaf a checkpoint truncates to, and the guard fails
+    closed: it classifies UNREGISTERED LogicalRDDs as corpus-scale.  A
+    bare createDataFrame in the package would make its literal flag as
+    an unbounded broadcast (a false positive that would tempt someone
+    to weaken the fail-closed default)."""
     offenders = _package_lines_containing("createDataFrame(", "plans/guard.py")
     assert not offenders, f"bare createDataFrame outside literal_df: {offenders}"
 
@@ -577,6 +563,15 @@ def test_sql_double_literals_only_in_guard():
     non-finite value into ``nanD``, which ``F.expr`` cannot parse."""
     offenders = _package_lines_containing("!r}D", "plans/guard.py")
     assert not offenders, f"SQL double literal outside plans/guard.py: {offenders}"
+
+
+def test_checkpoint_free_only_in_guard():
+    """Checkpoint blocks are released only by plans.guard.free_checkpoint,
+    next to the certified_local_checkpoint that created them: it also
+    drops the freed plan's attr ids from the guard registry, which a
+    bare unpersist elsewhere would leave behind."""
+    offenders = _package_lines_containing("rdd().unpersist(", "plans/guard.py")
+    assert not offenders, f"checkpoint free outside plans/guard.py: {offenders}"
 
 
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):
@@ -606,7 +601,7 @@ def test_checkpoint_guard_sees_downstream_broadcast(spark, sf_dir):
     broadcastable."""
     from pyspark.sql import functions as F
 
-    import tools.broadcast_guard as bg
+    from instructions_mr_spark.plans.guard import hinted_offenders, optimized_plan
     from instructions_mr_spark.queries._util import supersede_checkpoint, t
 
     li = t(spark, sf_dir, "lineitem")
@@ -618,7 +613,7 @@ def test_checkpoint_guard_sees_downstream_broadcast(spark, sf_dir):
         F.broadcast(big.select(F.col("l_orderkey").alias("k"))),
         F.col("l_orderkey") == F.col("k"),
     )
-    hits = bg.hinted_offenders(bg.optimized_plan(hinted))
+    hits = hinted_offenders(optimized_plan(hinted))
     assert hits and "LogicalRDD(checkpoint of an unbounded plan)" in hits[0]
     # bounded: returnflag-keyed aggregate (value domain)
     small = supersede_checkpoint(
@@ -626,23 +621,22 @@ def test_checkpoint_guard_sees_downstream_broadcast(spark, sf_dir):
         li.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n")),
     )
     ok = li.join(F.broadcast(small), "l_returnflag")
-    assert bg.hinted_offenders(bg.optimized_plan(ok)) == []
+    assert hinted_offenders(optimized_plan(ok)) == []
 
 
 def test_strict_mode_fails_closed_on_unregistered_logicalrdd(spark):
-    """ADVICE r10: _logical_rdd_bounded failed OPEN — any LogicalRDD
-    with unregistered attrs was classified bounded, so a checkpoint
-    made outside the certified seam was waved through a downstream
-    broadcast hint.  Under strict_logical_rdd() (the registry-wide
-    sweep's mode) the default flips: an unregistered LogicalRDD under
-    a hint is an offender; registering it (literal_df / the seam)
-    clears it."""
+    """ADVICE r10: _logical_rdd_bounded used to fail OPEN — any
+    LogicalRDD with unregistered attrs was classified bounded, so a
+    checkpoint made outside the certified seam was waved through a
+    downstream broadcast hint.  The guard now always fails closed: an
+    unregistered LogicalRDD under a hint is an offender; registering
+    it (literal_df / the seam) clears it."""
     from pyspark.sql import functions as F
 
-    import tools.broadcast_guard as bg
     from instructions_mr_spark.plans.guard import (
+        hinted_offenders,
+        optimized_plan,
         register_checkpoint_bounds,
-        strict_logical_rdd,
     )
 
     # a bare checkpoint the certification seam never saw
@@ -652,12 +646,10 @@ def test_strict_mode_fails_closed_on_unregistered_logicalrdd(spark):
     hinted = spark.range(10).join(
         F.broadcast(rogue), F.col("id") == F.col("rogue_k")
     )
-    plan = bg.optimized_plan(hinted)
-    assert bg.hinted_offenders(plan) == []            # fail-open default
-    with strict_logical_rdd():
-        assert bg.hinted_offenders(plan)              # fail-closed sweep
-        register_checkpoint_bounds(rogue, True)       # seam registration
-        assert bg.hinted_offenders(plan) == []        # ...clears it
+    plan = optimized_plan(hinted)
+    assert hinted_offenders(plan)                     # flagged, no context manager
+    register_checkpoint_bounds(rogue, True)           # seam registration
+    assert hinted_offenders(plan) == []               # ...clears it
 
 
 def test_strict_mode_nameset_fallback_covers_reid(spark):
@@ -668,14 +660,15 @@ def test_strict_mode_nameset_fallback_covers_reid(spark):
     and a name-set recorded UNBOUNDED stays flagged."""
     from pyspark.sql import functions as F
 
-    import tools.broadcast_guard as bg
     from instructions_mr_spark.plans.guard import (
         CHECKPOINT_NAMES_BOUNDED,
-        strict_logical_rdd,
+        hinted_offenders,
+        optimized_plan,
     )
-    from instructions_mr_spark.queries._util import supersede_checkpoint
-
-    from instructions_mr_spark.queries._util import free_staged_checkpoints
+    from instructions_mr_spark.queries._util import (
+        free_staged_checkpoints,
+        supersede_checkpoint,
+    )
 
     small = supersede_checkpoint(
         "test_nameset_small",
@@ -689,27 +682,54 @@ def test_strict_mode_nameset_fallback_covers_reid(spark):
             F.broadcast(small.alias("b")),
             F.col("a.ns_key") == F.col("b.ns_val"),
         )
-        with strict_logical_rdd():
-            assert bg.hinted_offenders(bg.optimized_plan(j)) == []
-            # flip the recorded boundedness: the same plan must now flag
-            CHECKPOINT_NAMES_BOUNDED[frozenset({"ns_key", "ns_val"})] = False
-            try:
-                assert bg.hinted_offenders(bg.optimized_plan(j))
-            finally:
-                CHECKPOINT_NAMES_BOUNDED[frozenset({"ns_key", "ns_val"})] = True
+        assert hinted_offenders(optimized_plan(j)) == []
+        # flip the recorded boundedness: the same plan must now flag
+        CHECKPOINT_NAMES_BOUNDED[frozenset({"ns_key", "ns_val"})] = False
+        try:
+            assert hinted_offenders(optimized_plan(j))
+        finally:
+            CHECKPOINT_NAMES_BOUNDED[frozenset({"ns_key", "ns_val"})] = True
     finally:
         # don't leak the staged checkpoint's blocks or its {ns_key,
         # ns_val} registrations into the rest of the shared session
         free_staged_checkpoints()
 
 
+def test_optimized_plan_renders_long_aggregate_keys(spark):
+    """optimized_plan renders node strings untruncated on its own: at
+    Spark's default maxToStringFields (25) an Aggregate grouped by 30
+    value columns plus user_id prints "... more fields" in place of
+    the entity key, and the hinted aggregate would pass as
+    value-domain."""
+    from pyspark.sql import functions as F
+
+    from instructions_mr_spark.plans.guard import hinted_offenders, optimized_plan
+
+    keys = [f"v{i}" for i in range(30)] + ["user_id"]
+    wide = spark.range(8).selectExpr(
+        *[f"id % 2 AS v{i}" for i in range(30)], "id AS user_id"
+    )
+    agg = wide.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+    hinted = spark.range(8).join(
+        F.broadcast(agg), F.col("id") == F.col("user_id")
+    )
+    conf = "spark.sql.debug.maxToStringFields"
+    prev = spark.conf.get(conf, "25")
+    spark.conf.set(conf, "25")
+    try:
+        hits = hinted_offenders(optimized_plan(hinted))
+    finally:
+        spark.conf.set(conf, prev)
+    assert hits and "Aggregate keyed" in hits[0] and "user_id" in hits[0]
+
+
 def test_guard_registry_does_not_grow_across_loop_frees(spark):
     """Long-lived-driver lifecycle (round-11 review): an iterative
-    operator registers each round's checkpoint attrs; _free_checkpoint
-    must prune the freed plan's ids so the guard registry stays
-    bounded by LIVE checkpoints, and connected components over a bare
-    edge table must still be correct after many register/free
-    cycles."""
+    operator certifies and registers every round's checkpoint, and
+    plans.guard.free_checkpoint must prune each superseded round's ids
+    so the guard registry stays bounded by LIVE checkpoints, and
+    connected components over a bare edge table must still be correct
+    after many register/free cycles."""
     from instructions_mr_spark.operators.graph import connected_components
     from instructions_mr_spark.plans.guard import CHECKPOINT_COLS_BOUNDED
 
@@ -724,134 +744,6 @@ def test_guard_registry_does_not_grow_across_loop_frees(spark):
     # only the FINAL labels checkpoint (+ its re-id'd twin at most)
     # may remain registered after the per-round frees
     assert after - before <= 4, (before, after)
-
-
-def test_certify_once_caches_per_label(spark, monkeypatch):
-    """certify_once=True must run the Catalyst certification exactly
-    once per (app, label): the loop body is fixed code, so a hint
-    introduced by a code change is present in round 1 and re-proving
-    the same shape every round is pure driver cost."""
-    import instructions_mr_spark.plans.guard as g
-
-    calls = []
-    real = g.certify_no_unbounded_hints
-    monkeypatch.setattr(
-        g, "certify_no_unbounded_hints",
-        lambda df, label: calls.append(label) or real(df, label),
-    )
-    df = spark.range(5).selectExpr("id AS co_key")
-    for _ in range(3):
-        ck = g.certified_local_checkpoint(
-            df, "test_certify_once", certify_once=True
-        )
-        g.unregister_checkpoint_bounds(ck)
-    assert calls == ["test_certify_once"]
-    for k in [k for k in g._CERT_ONCE if k[1] == "test_certify_once"]:
-        del g._CERT_ONCE[k]
-
-
-def test_certify_once_recomputes_for_different_inputs(spark, monkeypatch):
-    """The certify_once cache key must be input-sensitive (ADVICE
-    r11): with an (app, label)-only key, a first call over a BOUNDED
-    plan cached True and a later call over a corpus-scale plan under
-    the same label registered its checkpoint as bounded — so a
-    downstream F.broadcast() of that checkpoint passed the strict
-    sweep (false negative in the guard itself)."""
-    import instructions_mr_spark.plans.guard as g
-    from instructions_mr_spark.sources.tables import load_table
-
-    calls = []
-    real = g.certify_no_unbounded_hints
-    monkeypatch.setattr(
-        g, "certify_no_unbounded_hints",
-        lambda df, label: calls.append(label) or real(df, label),
-    )
-    label = "test_certify_once_inputs"
-    try:
-        bounded_df = spark.range(7).selectExpr("id AS co_key")
-        ck1 = g.certified_local_checkpoint(bounded_df, label, certify_once=True)
-        key1 = next(iter(
-            f"{a.name()}#{a.exprId().id()}"
-            for a in _out_attrs(ck1)
-        ))
-        assert g.CHECKPOINT_COLS_BOUNDED[key1] is True
-
-        # same label, corpus-scale input: the documents scan is
-        # unbounded by the classifier's relation markers
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        unbounded_df = docs.selectExpr("doc_id AS co_key")
-        ck2 = g.certified_local_checkpoint(
-            unbounded_df, label, certify_once=True
-        )
-        key2 = next(iter(
-            f"{a.name()}#{a.exprId().id()}"
-            for a in _out_attrs(ck2)
-        ))
-        assert g.CHECKPOINT_COLS_BOUNDED[key2] is False, (
-            "corpus-scale checkpoint inherited the bounded test-graph "
-            "verdict through the certify_once cache"
-        )
-        # both certifications actually ran (no stale reuse) ...
-        assert calls == [label, label]
-        # ... and the SAME input still hits the cache (the saving the
-        # cache exists for)
-        g.certified_local_checkpoint(
-            docs.selectExpr("doc_id AS co_key"), label, certify_once=True
-        )
-        assert calls == [label, label]
-        g.unregister_checkpoint_bounds(ck1)
-        g.unregister_checkpoint_bounds(ck2)
-    finally:
-        for k in [k for k in g._CERT_ONCE if k[1] == label]:
-            del g._CERT_ONCE[k]
-
-
-def _out_attrs(df):
-    out = df._jdf.queryExecution().analyzed().output()
-    return [out.apply(i) for i in range(out.size())]
-
-
-def test_certify_once_still_amortizes_across_loop_rounds(spark, monkeypatch):
-    """The input-sensitive cache key (shape hash + leaf boundedness
-    profile) must still HIT across the rounds of one iterative-operator
-    call — that per-round Catalyst-pass saving is the reason
-    certify_once exists.  A profile that accidentally varies per round
-    (e.g. leaking attr ids into the shape hash) would silently turn
-    every round into a full certification; pin the call count."""
-    import instructions_mr_spark.plans.guard as g
-    from instructions_mr_spark.operators.graph import connected_components
-    from instructions_mr_spark.plans.guard import literal_df
-
-    calls = []
-    real = g.certify_no_unbounded_hints
-    monkeypatch.setattr(
-        g, "certify_no_unbounded_hints",
-        lambda df, label: calls.append(label) or real(df, label),
-    )
-    # start from a clean cache: earlier suite tests (test_graph.py) run
-    # connected_components over same-SHAPED bounded literal edge tables,
-    # and an equal profile legitimately hits (equal shape + equal leaf
-    # verdicts => equal full-plan verdict), which would record 0 calls
-    # here and fail the lower bound for test-ordering reasons only
-    for k in [k for k in g._CERT_ONCE if k[1] == "cc_labels"]:
-        del g._CERT_ONCE[k]
-    # a 12-node chain: diameter forces >= 11 label-propagation rounds
-    edges = literal_df(
-        spark, [(i, i + 1) for i in range(11)], "src long, dst long"
-    )
-    comp = connected_components(edges).collect()
-    assert {(r.node, r.component) for r in comp} == {(i, 0) for i in range(12)}
-    once = [c for c in calls if c == "cc_labels"]
-    # round 1 certifies; rounds 2+ must reuse (the round-1 plan reads
-    # the labels0 leaf, round 2+ read a loop checkpoint leaf — one
-    # extra miss for that shape transition is acceptable, more means
-    # the key is unstable per round)
-    assert 1 <= len(once) <= 2, (
-        f"certify ran {len(once)}x for cc_labels across >=11 rounds — "
-        "the certify_once key is varying per round"
-    )
-    for k in [k for k in g._CERT_ONCE if k[1] == "cc_labels"]:
-        del g._CERT_ONCE[k]
 
 
 def test_literal_df_is_single_slice(spark):

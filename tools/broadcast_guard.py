@@ -1,9 +1,8 @@
-"""Mechanical no-unbounded-broadcast plan guard — CLI + sweep.
+"""Mechanical no-unbounded-broadcast plan guard — registry-wide sweep.
 
-Certification core lives in instructions_mr_spark/plans/guard.py
-(moved there in round 10 so supersede_checkpoint can certify
-pre-checkpoint plans); this module re-exports it and keeps the
-registry-wide sweep and the standalone CLI:
+The certification rules live in instructions_mr_spark/plans/guard.py;
+this module sweeps every registered query's final optimized plan with
+them and keeps the standalone CLI:
 
     python tools/broadcast_guard.py [sf_dir]
 """
@@ -18,22 +17,10 @@ if __package__ in (None, ""):  # ran as a script: repo root onto sys.path
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
 
-from instructions_mr_spark.plans.guard import (  # noqa: F401
-    UNBOUNDED_COLS,
-    Node,
-    bounded,
-    certified_local_checkpoint,
-    certify_no_unbounded_hints,
-    classify_relation,
-    hinted_offenders,
-    optimized_plan,
-    parse_plan,
-    strict_logical_rdd,
-)
-
 # Queries that execute work at plan-build time (iterative algorithms) —
-# their inner per-iteration plans are checked by their own tests; the
-# sweep skips them to stay fast, matching test_plans.py's SKIP set.
+# the sweep skips them to stay fast; the graph loops' per-round
+# checkpoints are certified by certified_local_checkpoint as they are
+# built.
 SKIP = {
     "dedup_cluster_cc", "dedup_cluster_cc_star", "sim_search_ivf_kmeans",
     "graph_pagerank",
@@ -41,37 +28,27 @@ SKIP = {
 
 
 def sweep(spark, sf_dir: str) -> list[tuple[str, list[str]]]:
+    """``(query, offenders)`` for every registered query outside SKIP
+    whose final plan carries an unbounded broadcast hint; a plan
+    failure is reported as an offender, not hidden."""
     from instructions_mr_spark import registry
+    from instructions_mr_spark.plans.guard import hinted_offenders, optimized_plan
 
     registry.load_all()
-    # full node strings — a truncated 'Aggregate' line hides its keys
-    spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
     offenders = []
-    # fail-closed LogicalRDD classification (ADVICE r10): in the
-    # registry-wide sweep every package checkpoint is registered by
-    # the certified_local_checkpoint seam, so an UNREGISTERED
-    # LogicalRDD under a broadcast hint is unbounded unless its
-    # column-name set matches a seam-registered bounded checkpoint
-    with strict_logical_rdd():
-        for name, fn in sorted(registry.QUERIES.items()):
-            if name in SKIP:
-                continue
-            try:
-                hits = hinted_offenders(optimized_plan(fn(spark, sf_dir)))
-            except Exception as exc:  # surface, don't hide, plan failures
-                hits = [f"PLAN ERROR: {exc}"]
-            if hits:
-                offenders.append((name, hits))
+    for name, fn in sorted(registry.QUERIES.items()):
+        if name in SKIP:
+            continue
+        try:
+            hits = hinted_offenders(optimized_plan(fn(spark, sf_dir)))
+        except Exception as exc:
+            hits = [f"PLAN ERROR: {exc}"]
+        if hits:
+            offenders.append((name, hits))
     return offenders
 
 
 if __name__ == "__main__":
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     from instructions_mr_spark.session import get_spark
 
     sf = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
