@@ -11,22 +11,26 @@ Spark-first re-expression — the scale-out win:
 * Record parallelism comes from partitions (Spark schedules them
   across executors); call parallelism comes from one bounded pool of
   worker threads per Arrow batch (``_pool_map``) inside ONE
-  ``mapInArrow`` boundary (``_llm_columns``) that every LLM stage
-  shares: the map fan-out (``instr_fanout_map``) and the xml-wrap
-  reduce (``group_concat_reduce``) differ only in their prompt columns.
+  ``mapInArrow`` boundary (``_llm_columns``) that all three LLM
+  operators share.  Each unit of work is a chain: the
+  ``(system, user)`` opening call, then zero or more follow-up user
+  turns.  The map fan-out (``instr_fanout_map``) and the xml-wrap
+  reduce (``group_concat_reduce``) send no follow-ups and differ only
+  in their prompt columns; the self-verified map
+  (``selfverify.self_verified_map``) sends two.
 * Prompts are assembled JVM-side as columns *before* the Python
   boundary (system message is a plan-time literal, user message is
   ``to_json(struct(scope))``) so the Python stage only does the I/O
   fan-out — no per-row Python string assembly, and keep columns pass
   through as Arrow arrays untouched.
-* Calls are issued instruction-major (all rows of instruction 0, then
+* Chains are issued instruction-major (all rows of instruction 0, then
   instruction 1, ...), so calls that share an identical system-prompt
   prefix are adjacent — the prefix-cache affinity the reference
   README recommends exploiting (README.md:19,85), done as batch
   ordering instead of server configuration.
 * The LLM call is a plain blocking function: ``concurrency`` worker
-  threads pull calls in list order, so at most ``concurrency`` are in
-  flight and results keep their list positions.  Every call goes
+  threads pull chains in list order, so at most ``concurrency`` calls
+  are in flight and results keep their list positions.  Every call goes
   through ``call_with_retry`` (the only ``client.complete`` call site
   in the package).
 
@@ -49,7 +53,12 @@ from pyspark.sql import types as T
 
 from instructions_mr_spark.config import LlmConfig, Stage
 from instructions_mr_spark.llm.client import LlmClient, make_client
-from instructions_mr_spark.operators.prompts import build_sys_msg, user_msg_col, xml_tag_wrap
+from instructions_mr_spark.operators.prompts import (
+    CHATML_TYPE,
+    build_sys_msg,
+    user_msg_col,
+    xml_tag_wrap,
+)
 
 _PROMPT_PREFIX = "__prompt__"
 
@@ -150,24 +159,35 @@ def _run_fanout(
     client: LlmClient,
     sys_msgs: dict[str, str],
     prompts: dict[str, list[str]],
+    follow_ups: Sequence[str],
     model: str,
     concurrency: int,
     max_retries: int,
     on_error: str,
-) -> dict[str, list[str | None]]:
-    """Run |prompts| × n_rows calls through one pool, instruction-major."""
-    calls = [
+) -> dict[str, list[list[dict[str, str]]]]:
+    """Run |prompts| × n_rows chains through one pool, instruction-major.
+
+    A chain opens with ``_chatml(system, user)`` and then sends each of
+    ``follow_ups`` as one more user turn; every reply goes through
+    ``call_with_retry`` and is appended to the chain's transcript, which
+    is what the chain returns.  With no follow-ups a chain is one call."""
+
+    def chain(messages: list[dict[str, str]]) -> list[dict[str, str]]:
+        for turn in (None, *follow_ups):
+            if turn is not None:
+                messages.append({"role": "user", "content": turn})
+            reply = call_with_retry(
+                client, messages, max_retries=max_retries, on_error=on_error
+            )
+            messages.append({"role": "assistant", "content": reply})
+        return messages
+
+    openings = [
         _chatml(sys_msgs[name], user_msg, model)
         for name, msgs in prompts.items()
         for user_msg in msgs
     ]
-    flat = _pool_map(
-        lambda messages: call_with_retry(
-            client, messages, max_retries=max_retries, on_error=on_error
-        ),
-        calls,
-        concurrency,
-    )
+    flat = _pool_map(chain, openings, concurrency)
     n = len(next(iter(prompts.values()), []))
     return {name: flat[i * n : (i + 1) * n] for i, name in enumerate(prompts)}
 
@@ -194,14 +214,20 @@ def _llm_columns(
     client_factory: Callable[[LlmConfig], LlmClient],
     max_retries: int,
     on_error: str,
+    follow_ups: Sequence[str] = (),
+    with_transcript: bool = False,
 ) -> DataFrame:
     """The one LLM executor: keep columns plus one string column per
-    prompt, each cell the LLM response to (system message, prompt).
+    prompt, each cell the last reply of the chain that opens with
+    (system message, prompt) and continues with ``follow_ups``; with
+    ``with_transcript``, also one ``{name}__transcript`` column
+    (``CHATML_TYPE``) per prompt holding the whole chain.
 
     Batches stay in Arrow end to end: prompt columns go RecordBatch ->
     py list, results go list -> ``pa.array``, keep columns pass through
     as the same Arrow arrays."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from instructions_mr_spark.shipping import ensure_shipped
 
@@ -209,11 +235,14 @@ def _llm_columns(
     ensure_shipped(df.sparkSession)
     keep = list(keep)
     names = list(prompts)
+    transcripts = [f"{n}__transcript" for n in names] if with_transcript else []
     prompted = _project_prompts(df, keep, prompts)
     out_schema = T.StructType(
         [prompted.schema[c] for c in keep]
         + [T.StructField(n, T.StringType()) for n in names]
+        + [T.StructField(n, CHATML_TYPE) for n in transcripts]
     )
+    chatml_arrow = to_arrow_type(CHATML_TYPE)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         client = client_factory(conf)
@@ -221,14 +250,17 @@ def _llm_columns(
             prompts_py = {
                 n: batch.column(f"{_PROMPT_PREFIX}{n}").to_pylist() for n in names
             }
-            results = _run_fanout(
-                client, sys_msgs, prompts_py, conf.model, concurrency,
+            chains = _run_fanout(
+                client, sys_msgs, prompts_py, follow_ups, conf.model, concurrency,
                 max_retries, on_error,
             )
             arrays = [batch.column(c) for c in keep] + [
-                pa.array(results[n], pa.string()) for n in names
+                pa.array([m[-1]["content"] for m in chains[n]], pa.string())
+                for n in names
             ]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + names)
+            if with_transcript:
+                arrays += [pa.array(chains[n], chatml_arrow) for n in names]
+            yield pa.RecordBatch.from_arrays(arrays, names=keep + names + transcripts)
 
     return prompted.mapInArrow(run, schema=out_schema)
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import Instruction
+from instructions_mr_spark.operators.scope import scoped_json_col
 
 CHATML_TYPE = T.ArrayType(
     T.StructType(
@@ -58,35 +59,13 @@ def build_sys_msg(ins: Instruction) -> str:
     return "".join(parts)
 
 
-def scope_in_record_order(scope: Sequence[str] | None, available: Sequence[str]) -> list[str]:
-    """The reference's scope filter preserves the INPUT record's key
-    order, not the scope list's (instructions_runners.py:39 iterates
-    ``input_data.items()``)."""
-    if scope is None:
-        return list(available)
-    wanted = set(scope)
-    return [c for c in available if c in wanted]
-
-
 def user_msg_col(
     scope: Sequence[str] | None, available: Sequence[str], pretty: bool = False
 ) -> Column:
-    """User message column = JSON-serialized scoped record, keys in
-    record order (see scope_in_record_order).
-
-    Compact JSON (JVM ``to_json``) by default; ``pretty=True``
-    byte-matches the reference's ``json.dumps(indent=2,
-    ensure_ascii=False)`` via an Arrow-batched UDF.
-    """
-    cols = scope_in_record_order(scope, available)
-    from instructions_mr_spark.operators.scope import to_json_keep_nulls
-
-    c = to_json_keep_nulls(F.struct(*[F.col(x) for x in cols]))
-    if pretty:
-        from instructions_mr_spark.operators.scope import _pretty_json_str
-
-        c = _pretty_json_str(c)
-    return c
+    """User message column = the JSON-serialized scoped record
+    (``scope.scoped_json_col``: keys in record order, ``pretty=True``
+    for the reference's exact indent=2 form)."""
+    return scoped_json_col(scope, available, pretty)
 
 
 def _msg(role: str, content: Column | str) -> Column:

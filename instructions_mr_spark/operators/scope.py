@@ -94,14 +94,27 @@ def stringify_kv(df: DataFrame, pretty: bool = False) -> DataFrame:
     return df.select(*cols)
 
 
-def _scoped_cols(df: DataFrame, scope: Sequence[str] | None) -> list[str]:
-    # Reference semantics: scope filters but the record's own key
-    # order wins (instructions_runners.py:39).
-    names = [f.name for f in df.schema.fields]
+def scope_in_record_order(scope: Sequence[str] | None, available: Sequence[str]) -> list[str]:
+    """The reference's scope filter preserves the INPUT record's key
+    order, not the scope list's (instructions_runners.py:39 iterates
+    ``input_data.items()``); ``scope=None`` keeps every key."""
     if scope is None:
-        return names
+        return list(available)
     wanted = set(scope)
-    return [c for c in names if c in wanted]
+    return [c for c in available if c in wanted]
+
+
+def scoped_json_col(
+    scope: Sequence[str] | None, available: Sequence[str], pretty: bool = False
+) -> Column:
+    """The scoped record as one JSON string, keys in record order.
+
+    Compact JSON (JVM ``to_json``, nulls kept) by default;
+    ``pretty=True`` byte-matches the reference's ``json.dumps(indent=2,
+    ensure_ascii=False)`` via an Arrow-batched UDF."""
+    cols = scope_in_record_order(scope, available)
+    c = to_json_keep_nulls(F.struct(*[F.col(x) for x in cols]))
+    return _pretty_json_str(c) if pretty else c
 
 
 def json_serialize(
@@ -111,18 +124,7 @@ def json_serialize(
     pretty: bool = False,
 ) -> DataFrame:
     """Scoped record -> one JSON string column (the LLM user message)."""
-    c = to_json_keep_nulls(F.struct(*[F.col(x) for x in _scoped_cols(df, scope)]))
-    if pretty:
-        c = _pretty_json_str(c)
-    return df.withColumn(out_col, c)
-
-
-def serialized_scope_col(
-    df: DataFrame, scope: Sequence[str] | None, pretty: bool = False
-) -> Column:
-    """Column-valued variant of ``json_serialize`` for composition."""
-    c = to_json_keep_nulls(F.struct(*[F.col(x) for x in _scoped_cols(df, scope)]))
-    return _pretty_json_str(c) if pretty else c
+    return df.withColumn(out_col, scoped_json_col(scope, df.columns, pretty))
 
 
 def any_to_str(col: Column, dt: T.DataType) -> Column:

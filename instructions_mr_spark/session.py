@@ -48,8 +48,8 @@ def get_spark(
         # files.maxPartitionBytes left at default 128m: right for both
         # the local sf dirs and a production parquet lake.
         # autoBroadcastJoinThreshold left at the 10 MB default:
-        # tools/sweep_broadcast.py at sf0.1 (results checked in at
-        # tools/sweep_broadcast_results.json) measured -1 / 1 MB / 10 MB;
+        # a sweep at sf0.1 (tools/sweep_broadcast.py and its results
+        # file, in git at commit 28b8bd6) measured -1 / 1 MB / 10 MB;
         # 10 MB and 1 MB tie, fully-off is ~25% slower because
         # AQE-derived interior broadcasts demote to shuffle.  The star
         # dims are hinted explicitly (F.broadcast), so dimension growth

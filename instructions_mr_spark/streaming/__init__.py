@@ -361,24 +361,16 @@ def user_stats_apws(events: DataFrame) -> DataFrame:
     )
 
 
-def user_stats_stateful(events: DataFrame, engine: str = "auto") -> DataFrame:
+def user_stats_stateful(events: DataFrame) -> DataFrame:
     """Environment-adaptive stateful user stats: the TWS path
     (RocksDB ValueState, Spark 4's arbitrary-state successor API) when
     ``google.protobuf`` is importable, else the dependency-free
-    ``applyInPandasWithState`` twin.  ``engine`` forces one
-    ("tws" | "apws") for tests."""
-    if engine == "auto":
-        try:
-            import google.protobuf  # noqa: F401 - capability probe only
-
-            engine = "tws"
-        except ImportError:
-            engine = "apws"
-    if engine == "tws":
-        return user_stats_tws(events)
-    if engine == "apws":
+    ``applyInPandasWithState`` twin."""
+    try:
+        import google.protobuf  # noqa: F401 - capability probe only
+    except ImportError:
         return user_stats_apws(events)
-    raise ValueError(f"unknown engine {engine!r}: expected auto|tws|apws")
+    return user_stats_tws(events)
 
 
 def running_max_per_user(events: DataFrame) -> DataFrame:

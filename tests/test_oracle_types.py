@@ -21,7 +21,7 @@ import duckdb
 import pytest
 
 from instructions_mr_spark import registry
-from instructions_mr_spark.sources.tables import TABLE_NAMES
+from tools.check_oracle import duck_con
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
@@ -32,13 +32,7 @@ BANNED_TYPES = {"HUGEINT", "UHUGEINT"}
 def con() -> duckdb.DuckDBPyConnection:
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"testdata dir missing: {SF_DIR}")
-    c = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(SF_DIR, f"{name}.parquet")
-        if os.path.isdir(path):
-            path = os.path.join(path, "*.parquet")
-        c.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-    return c
+    return duck_con(SF_DIR)
 
 
 def test_no_oracle_column_is_hugeint(con: duckdb.DuckDBPyConnection) -> None:

@@ -15,11 +15,8 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.config import Instruction
-from instructions_mr_spark.operators.prompts import (
-    build_sys_msg,
-    prompt_template_sub,
-    scope_in_record_order,
-)
+from instructions_mr_spark.operators.prompts import build_sys_msg, prompt_template_sub
+from instructions_mr_spark.operators.scope import scope_in_record_order
 
 # text without surrogates (Spark/Arrow round-trip constraint)
 _txt = st.text(

@@ -211,8 +211,8 @@ def test_user_stats_fallback_apws(spark, events_stream):
 
 
 def test_user_stats_auto_engine_selection(spark, events_stream):
-    """engine="auto" must pick TWS exactly when protobuf imports, and
-    the apws twin otherwise — never raise, never silently no-op."""
+    """user_stats_stateful must pick TWS exactly when protobuf imports,
+    and the apws twin otherwise — never raise, never silently no-op."""
     from instructions_mr_spark import streaming as S
 
     stream, _ = events_stream
@@ -227,12 +227,10 @@ def test_user_stats_auto_engine_selection(spark, events_stream):
     S.user_stats_tws = lambda df: called.setdefault("engine", "tws") and orig_tws(df)
     S.user_stats_apws = lambda df: called.setdefault("engine", "apws") and orig_apws(df)
     try:
-        S.user_stats_stateful(stream, engine="auto")
+        S.user_stats_stateful(stream)
     finally:
         S.user_stats_tws, S.user_stats_apws = orig_tws, orig_apws
     assert called["engine"] == ("tws" if has_protobuf else "apws")
-    with pytest.raises(ValueError, match="unknown engine"):
-        S.user_stats_stateful(stream, engine="bogus")
 
 
 def test_stateful_session_funnel(spark, events_stream, sf_dir, tmp_path):
