@@ -10,9 +10,10 @@ Spark-first re-expression — the scale-out win:
 
 * Record parallelism comes from partitions (Spark schedules them
   across executors); call parallelism comes from one bounded pool of
-  worker threads per Arrow batch (``_pool_map``) inside ONE
-  ``mapInArrow`` boundary (``_llm_columns``) that all three LLM
-  operators share.  Each unit of work is a chain: the
+  worker threads per Arrow batch (``_pool_map``) inside ONE executor
+  (``_llm_columns``) that all three LLM operators share; it crosses
+  into Python through the package's one ``mapInArrow`` boundary
+  (``arrow_map.map_columns``).  Each unit of work is a chain: the
   ``(system, user)`` opening call, then zero or more follow-up user
   turns.  The map fan-out (``instr_fanout_map``) and the xml-wrap
   reduce (``group_concat_reduce``) send no follow-ups and differ only
@@ -44,24 +45,21 @@ from __future__ import annotations
 
 import threading
 import time
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import LlmConfig, Stage
 from instructions_mr_spark.llm.client import LlmClient, make_client
+from instructions_mr_spark.operators.arrow_map import map_columns
 from instructions_mr_spark.operators.prompts import (
     CHATML_TYPE,
     build_sys_msg,
     user_msg_col,
     xml_tag_wrap,
 )
-
-_PROMPT_PREFIX = "__prompt__"
-
 
 def _chatml(sys_msg: str, user_msg: str, model: str) -> list[dict[str, str]]:
     """Python-side twin of prompts.chatml_col (instructions_runners.py:69-91),
@@ -192,18 +190,6 @@ def _run_fanout(
     return {name: flat[i * n : (i + 1) * n] for i, name in enumerate(prompts)}
 
 
-def _project_prompts(
-    df: DataFrame, keep: Sequence[str], prompts: dict[str, Column]
-) -> DataFrame:
-    """Keep columns plus one ``__prompt__{name}`` column per prompt —
-    the JVM-side projection every LLM operator feeds to its Python
-    boundary."""
-    return df.select(
-        *[F.col(c) for c in keep],
-        *[col.alias(f"{_PROMPT_PREFIX}{name}") for name, col in prompts.items()],
-    )
-
-
 def _llm_columns(
     df: DataFrame,
     keep: Sequence[str],
@@ -221,48 +207,28 @@ def _llm_columns(
     prompt, each cell the last reply of the chain that opens with
     (system message, prompt) and continues with ``follow_ups``; with
     ``with_transcript``, also one ``{name}__transcript`` column
-    (``CHATML_TYPE``) per prompt holding the whole chain.
-
-    Batches stay in Arrow end to end: prompt columns go RecordBatch ->
-    py list, results go list -> ``pa.array``, keep columns pass through
-    as the same Arrow arrays."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from instructions_mr_spark.shipping import ensure_shipped
-
+    (``CHATML_TYPE``) per prompt holding the whole chain.  Runs on the
+    shared ``arrow_map.map_columns`` boundary, one client per task."""
     _check_llm_args(concurrency, on_error)
-    ensure_shipped(df.sparkSession)
-    keep = list(keep)
     names = list(prompts)
-    transcripts = [f"{n}__transcript" for n in names] if with_transcript else []
-    prompted = _project_prompts(df, keep, prompts)
-    out_schema = T.StructType(
-        [prompted.schema[c] for c in keep]
-        + [T.StructField(n, T.StringType()) for n in names]
-        + [T.StructField(n, CHATML_TYPE) for n in transcripts]
-    )
-    chatml_arrow = to_arrow_type(CHATML_TYPE)
+    out = [T.StructField(n, T.StringType()) for n in names]
+    if with_transcript:
+        out += [T.StructField(f"{n}__transcript", CHATML_TYPE) for n in names]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def make_fn() -> Callable[..., list[list]]:
         client = client_factory(conf)
-        for batch in batches:
-            prompts_py = {
-                n: batch.column(f"{_PROMPT_PREFIX}{n}").to_pylist() for n in names
-            }
-            chains = _run_fanout(
-                client, sys_msgs, prompts_py, follow_ups, conf.model, concurrency,
-                max_retries, on_error,
-            )
-            arrays = [batch.column(c) for c in keep] + [
-                pa.array([m[-1]["content"] for m in chains[n]], pa.string())
-                for n in names
-            ]
-            if with_transcript:
-                arrays += [pa.array(chains[n], chatml_arrow) for n in names]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + names + transcripts)
 
-    return prompted.mapInArrow(run, schema=out_schema)
+        def fan_out(*prompt_lists: list[str]) -> list[list]:
+            chains = _run_fanout(
+                client, sys_msgs, dict(zip(names, prompt_lists)), follow_ups,
+                conf.model, concurrency, max_retries, on_error,
+            )
+            replies = [[m[-1]["content"] for m in chains[n]] for n in names]
+            return (replies + [chains[n] for n in names]) if with_transcript else replies
+
+        return fan_out
+
+    return map_columns(df, keep, list(prompts.values()), out, make_fn)
 
 
 def instr_fanout_map(

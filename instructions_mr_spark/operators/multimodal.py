@@ -12,24 +12,27 @@ real and tested.  Swapping in PIL/ffmpeg later only changes the body
 of ``_decode_one``.
 
 Scale notes: binary payloads ride normal parquet pages; metadata
-extraction is a narrow projection (never decodes); decode/resize runs
-in ``mapInPandas`` so one Python worker amortizes across an Arrow
-batch, and ``spark.sql.files.maxPartitionBytes`` bounds memory per
-task.  Frame sampling emits rows (one per frame) — an explode-shaped
-operator, so downstream filters prune frames before any heavy model.
+extraction is a narrow projection (never decodes); every decoder runs
+on the package's one ``mapInArrow`` boundary
+(``arrow_map.map_columns``), so one Python worker amortizes across an
+Arrow batch and the other columns pass through as Arrow arrays, and
+``spark.sql.files.maxPartitionBytes`` bounds memory per task.  Frame
+sampling emits rows (one per frame) — an explode-shaped operator, a
+JVM ``inline`` over the sampled-frames array, so downstream filters
+prune frames before any heavy model.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from instructions_mr_spark.operators.arrow_map import map_columns
 
 IMAGE_META_TYPE = T.StructType(
     [
@@ -118,39 +121,52 @@ def parse_image_dims(payload: bytes | None) -> tuple[str, int | None, int | None
     return "unknown", None, None
 
 
+# half-open magnitude bound of each integer column type: a parser
+# returns raw u32/u64 header fields, which a corrupt header can push
+# past the column's range
+_INT_BOUND = {T.IntegerType: 2**31, T.LongType: 2**63}
+
+
+def _fits(v: object, bound: int | None) -> bool:
+    return v is None or bound is None or -bound <= v < bound
+
+
+def _decode(
+    df: DataFrame,
+    col: str,
+    parse: Callable[[bytes | None], Sequence],
+    fields: str,
+) -> DataFrame:
+    """Every column of ``df`` plus the DDL ``fields``, filled from
+    ``parse(payload)`` row by row.  A parsed integer outside its
+    column type's range becomes null: corrupt bytes are data, not a
+    failed task."""
+    schema = T.StructType.fromDDL(fields)
+    bounds = [_INT_BOUND.get(type(f.dataType)) for f in schema]
+
+    def decode(payloads: list) -> list[list]:
+        rows = [parse(p) for p in payloads]
+        return [
+            [r[i] if _fits(r[i], b) else None for r in rows]
+            for i, b in enumerate(bounds)
+        ]
+
+    return map_columns(df, df.columns, [F.col(col)], schema, lambda: decode)
+
+
 def decode_image_headers(df: DataFrame, col: str) -> DataFrame:
     """Real (non-fake) decode of format/width/height from container
     headers via :func:`parse_image_dims` — the PIL-free metadata
-    contract.  Same mapInPandas shape as :func:`decode_images` so
+    contract.  Same :func:`_decode` shape as :func:`decode_images` so
     swapping in a full pixel decode later changes only the kernel."""
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    fields = list(df.schema.fields) + [
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-    out_schema = T.StructType(fields)
-    in_cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_dims(p) for p in pdf[col]]
-            out = pdf[in_cols].copy()
-            out["format"] = [p[0] for p in parsed]
-            out["width"] = pd.array([p[1] for p in parsed], dtype="Int32")
-            out["height"] = pd.array([p[2] for p in parsed], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _decode(df, col, parse_image_dims, "format string, width int, height int")
 
 
 def _decode_one(payload: bytes, fake: bool) -> tuple[int, int]:
     """Return (width, height).
 
     ``fake=True``: deterministic function of the payload's md5 digest,
-    so tests are stable AND the whole mapInPandas decode path is
+    so tests are stable AND the whole Arrow decode path is
     oracle-checkable (DuckDB can compute the identical md5-derived
     dims in SQL — see queries/advanced.py multimodal_decode_fake).
 
@@ -174,30 +190,10 @@ def _decode_one(payload: bytes, fake: bool) -> tuple[int, int]:
         return int(im.width), int(im.height)
 
 
-def decode_images(
-    df: DataFrame, col: str, fake: bool = False, batch_hint: int | None = None
-) -> DataFrame:
+def decode_images(df: DataFrame, col: str, fake: bool = False) -> DataFrame:
     """Decode stage: fills width/height next to the payload.  Arrow
     batches stream through one Python worker per partition."""
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    fields = list(df.schema.fields) + [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-    out_schema = T.StructType(fields)
-    in_cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [_decode_one(p, fake) for p in pdf[col]]
-            out = pdf[in_cols].copy()
-            out["width"] = [d[0] for d in dims]
-            out["height"] = [d[1] for d in dims]
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _decode(df, col, lambda p: _decode_one(p, fake), "width int, height int")
 
 
 def _sample_frames_one(payload: bytes, every_n: int, fake: bool) -> list[tuple[int, bytes]]:
@@ -239,29 +235,15 @@ def sample_frames(
     """Video frame sampling: one output row per sampled frame
     (id, frame_idx, frame_bytes).  The fake emits digest-derived
     pseudo-frames; ``fake=False`` routes through the optional
-    imageio/pyav branch of :func:`_sample_frames_one`."""
-    from instructions_mr_spark.shipping import ensure_shipped
+    imageio/pyav branch of :func:`_sample_frames_one`.  Python builds
+    one frames array per video; a JVM ``inline`` explodes it."""
 
-    ensure_shipped(df.sparkSession)
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
+    def sample(payloads: list) -> list[list]:
+        return [[_sample_frames_one(p, every_n, fake) for p in payloads]]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[col]):
-                for i, fb in _sample_frames_one(payload, every_n, fake):
-                    ids.append(rid)
-                    idxs.append(i)
-                    frames.append(fb)
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return df.mapInPandas(run, schema=out_schema)
+    frames = T.StructType.fromDDL("__frames array<struct<frame_idx: int, frame: binary>>")
+    sampled = map_columns(df, [id_col], [F.col(col)], frames, lambda: sample)
+    return sampled.select(id_col, F.inline("__frames"))
 
 
 def parse_audio_meta(
@@ -301,32 +283,13 @@ def parse_audio_meta(
 
 def decode_audio_headers(df: DataFrame, col: str) -> DataFrame:
     """Arrow-batched real WAV header decode via
-    :func:`parse_audio_meta` — same mapInPandas shape as
+    :func:`parse_audio_meta` — same :func:`_decode` shape as
     :func:`decode_image_headers`, so a full PCM decode later swaps
     only the kernel."""
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    fields = list(df.schema.fields) + [
-        T.StructField("format", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_samples", T.IntegerType()),
-    ]
-    out_schema = T.StructType(fields)
-    in_cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_audio_meta(p) for p in pdf[col]]
-            out = pdf[in_cols].copy()
-            out["format"] = [p[0] for p in parsed]
-            out["sample_rate"] = pd.array([p[1] for p in parsed], dtype="Int32")
-            out["channels"] = pd.array([p[2] for p in parsed], dtype="Int32")
-            out["n_samples"] = pd.array([p[3] for p in parsed], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _decode(
+        df, col, parse_audio_meta,
+        "format string, sample_rate int, channels int, n_samples int",
+    )
 
 
 def parse_video_meta(
@@ -384,28 +347,9 @@ def parse_video_meta(
 
 def decode_video_headers(df: DataFrame, col: str) -> DataFrame:
     """Arrow-batched real MP4 header decode via
-    :func:`parse_video_meta` — same mapInPandas shape as the image and
-    audio header decoders."""
-    from instructions_mr_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    fields = list(df.schema.fields) + [
-        T.StructField("format", T.StringType()),
-        T.StructField("timescale", T.IntegerType()),
-        T.StructField("duration", T.LongType()),
-        T.StructField("n_tracks", T.IntegerType()),
-    ]
-    out_schema = T.StructType(fields)
-    in_cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_video_meta(p) for p in pdf[col]]
-            out = pdf[in_cols].copy()
-            out["format"] = [p[0] for p in parsed]
-            out["timescale"] = pd.array([p[1] for p in parsed], dtype="Int32")
-            out["duration"] = pd.array([p[2] for p in parsed], dtype="Int64")
-            out["n_tracks"] = pd.array([p[3] for p in parsed], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    :func:`parse_video_meta` — same :func:`_decode` shape as the image
+    and audio header decoders."""
+    return _decode(
+        df, col, parse_video_meta,
+        "format string, timescale int, duration bigint, n_tracks int",
+    )

@@ -12,7 +12,7 @@ algebra here):
   string (utils.py:10-17, ``json.dumps(..., ensure_ascii=False,
   indent=2)``).  Spark: ``F.to_json`` per non-string column (compact,
   JVM-side) by default; ``pretty=True`` byte-matches the reference via
-  an Arrow-batched pandas UDF (only needed for parity tests / prompt
+  an Arrow-batched Python UDF (only needed for parity tests / prompt
   byte-stability — the hot path stays JVM-side).
 * ``json_serialize``: serialize the scoped record to one JSON string —
   the LLM "user message" (instructions_runners.py:40-44).
@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Sequence
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,20 +47,17 @@ def to_json_keep_nulls(col: Column) -> Column:
     return F.to_json(col, {"ignoreNullFields": "false"})
 
 
-@F.pandas_udf(T.StringType())
-def _pretty_json_str(s: pd.Series) -> pd.Series:
+@F.udf(T.StringType(), useArrow=True)
+def _pretty_json_str(x: str | None) -> str | None:
     """json.dumps(indent=2, ensure_ascii=False) over already-JSON text.
 
     Input is compact JSON text (from F.to_json); output is the
-    reference's exact pretty form.  Vectorized via Arrow; used only on
+    reference's exact pretty form.  Arrow-batched; used only on
     parity paths.
     """
-    def _pretty(x: str | None) -> str | None:
-        if x is None:
-            return None
-        return json.dumps(json.loads(x), indent=2, ensure_ascii=False)
-
-    return s.map(_pretty)
+    if x is None:
+        return None
+    return json.dumps(json.loads(x), indent=2, ensure_ascii=False)
 
 
 def _is_string_type(dt: T.DataType) -> bool:

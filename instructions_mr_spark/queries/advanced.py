@@ -393,7 +393,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decode stage end-to-end through its real Arrow/mapInPandas
+    """The decode stage end-to-end through its real Arrow/mapInArrow
     plumbing (operators/multimodal.decode_images), with the
     deterministic fake decoder — so the oracle verifies the batch
     schema, column threading, and the exact per-payload function, not
@@ -541,7 +541,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL header decode, no fake and no PIL: JVM-side expressions
     synthesize valid PNG IHDR / JPEG SOF0 / GIF screen-descriptor bytes
     with dims derived from doc_id, and parse_image_dims (stdlib struct
-    parsing in the mapInPandas kernel) must recover exactly those dims
+    parsing in the mapInArrow kernel) must recover exactly those dims
     from the binary layout.  The oracle recomputes the dims from the
     same doc_id formulas — a hash mismatch means the byte layout or the
     parser is wrong.  Reference: no media surface at all (SURVEY §2.6);
@@ -748,7 +748,7 @@ def multimodal_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions synthesize a valid WAV header (RIFF size, fmt chunk
     with channels/sample-rate/block-align, data chunk size) with
     parameters derived from doc_id, and parse_audio_meta (stdlib
-    struct parsing in the mapInPandas kernel) must walk the chunk
+    struct parsing in the mapInArrow kernel) must walk the chunk
     layout and recover exactly those parameters.  The oracle recomputes
     them from the same doc_id formulas — a hash mismatch means the
     byte layout or the chunk walker is wrong.  The audio twin of
@@ -781,7 +781,7 @@ def multimodal_video_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side expressions synthesize a valid box tree (ftyp, moov
     containing an mvhd movie header and N empty trak boxes, every box
     size correct) with parameters derived from doc_id, and
-    parse_video_meta (stdlib box walker in the mapInPandas kernel)
+    parse_video_meta (stdlib box walker in the mapInArrow kernel)
     must recurse the tree and recover exactly those parameters.
     Completes the REAL-header-decode trio with multimodal_decode_real
     (image) and multimodal_audio_real (audio)."""
@@ -987,7 +987,7 @@ def multimodal_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a mismatch means either the box walker or the schedule
     arithmetic drifted.  The frame DECODE itself needs codec
     libraries this container lacks; the schedule is the Spark-side
-    contract a decode kernel plugs into (same mapInPandas shape as
+    contract a decode kernel plugs into (same mapInArrow shape as
     the header walkers).
 
     Scale shape: header synthesis + Arrow-batched header walk are

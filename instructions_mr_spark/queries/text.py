@@ -12,7 +12,9 @@ from instructions_mr_spark.plans.guard import literal_df
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from instructions_mr_spark.operators.arrow_map import map_columns
 from instructions_mr_spark.queries._util import (
     duck_h60,
     kernel_floor,
@@ -3303,7 +3305,7 @@ _WIN_W = 4
 _WIN_CAP = 200
 
 
-def _winnow_batches(batches):
+def _winnow_kernel():
     """Arrow-batched winnowing kernel (round 12, optimization session
     5; guide §4.2): gram-hash + window-select + distinct + checksum
     for whole record batches in native code.  Exactly the values the
@@ -3328,52 +3330,45 @@ def _winnow_batches(batches):
     transform() is CodegenFallback).  Measured interleaved at sf0.1:
     3.23–3.30 s (JVM, min-of-3) -> 1.26–1.46 s Arrow.  Construction
     (imports) happens once per task before the batch loop (§4.5);
-    only (doc_id, text<=cap) crosses the boundary."""
+    only (doc_id, text<=cap) crosses the boundary.  Returns the
+    per-batch function: texts -> (n_grams, n_fingerprints,
+    fp_checksum) columns, all null for a document too short to fill
+    one window."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     cap, k, w = _WIN_CAP, _WIN_K, _WIN_W
-    for pdf in batches:
-        out_id, out_ng, out_nf, out_ck = [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            s = text[:cap]
-            n = len(s) - k + 1
-            if n < w:  # same drop as .filter(size(gh) >= w)
-                continue
-            gh = np.fromiter(
-                (
-                    int(
-                        hashlib.md5(s[i : i + k].encode("utf-8")).hexdigest()[:8],
-                        16,
-                    )
-                    for i in range(n)
-                ),
-                dtype=np.int64,
-                count=n,
-            )
-            sw = np.lib.stride_tricks.sliding_window_view(gh, w)
-            # argmin takes the FIRST minimum; the winnowing tie rule is
-            # RIGHTMOST, so argmin over the reversed window
-            pos_in_win = w - 1 - sw[:, ::-1].argmin(axis=1)
-            rows = np.arange(len(sw))
-            fps = (rows + pos_in_win + 1).astype(np.int64) * 4294967296 + sw[
-                rows, pos_in_win
-            ]
-            uf = np.unique(fps)
-            out_id.append(doc_id)
-            out_ng.append(n)
-            out_nf.append(len(uf))
-            out_ck.append(int(uf.sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out_id, dtype="int64"),
-                "n_grams": pd.Series(out_ng, dtype="int64"),
-                "n_fingerprints": pd.Series(out_nf, dtype="int64"),
-                "fp_checksum": pd.Series(out_ck, dtype="int64"),
-            }
+
+    def one(text: str) -> tuple[int, int, int] | None:
+        s = text[:cap]
+        n = len(s) - k + 1
+        if n < w:  # same drop as .filter(size(gh) >= w)
+            return None
+        gh = np.fromiter(
+            (
+                int(hashlib.md5(s[i : i + k].encode("utf-8")).hexdigest()[:8], 16)
+                for i in range(n)
+            ),
+            dtype=np.int64,
+            count=n,
         )
+        sw = np.lib.stride_tricks.sliding_window_view(gh, w)
+        # argmin takes the FIRST minimum; the winnowing tie rule is
+        # RIGHTMOST, so argmin over the reversed window
+        pos_in_win = w - 1 - sw[:, ::-1].argmin(axis=1)
+        rows = np.arange(len(sw))
+        fps = (rows + pos_in_win + 1).astype(np.int64) * 4294967296 + sw[
+            rows, pos_in_win
+        ]
+        uf = np.unique(fps)
+        return n, len(uf), int(uf.sum())
+
+    def winnow(texts: list[str]) -> list[list]:
+        rows = [one(t) for t in texts]
+        return [[None if r is None else r[i] for r in rows] for i in range(3)]
+
+    return winnow
 
 
 @query(
@@ -3437,19 +3432,27 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the GRAM-HASH stage (2.58 s of the 3.1 s sf0.1 wall — ~965k
     interpreted md5+CONV HOF elements at ~73 us each, transform()
     being CodegenFallback), and moved the whole kernel to an
-    Arrow-batched mapInPandas per guide §4.2: 3.23–3.30 ->
+    Arrow-batched Python kernel per guide §4.2: 3.23–3.30 ->
     1.26–1.46 s interleaved at sf0.1, row-identical output for all
-    5,000 documents (see _winnow_batches for the exactness
-    argument; the DuckDB oracle revalidates every value)."""
+    5,000 documents (see _winnow_kernel for the exactness
+    argument; the DuckDB oracle revalidates every value).  The
+    kernel runs on the package's one mapInArrow boundary
+    (operators/arrow_map.py): a document too short for one window
+    comes back as a null row, which a JVM filter drops."""
+    docs = kernel_floor(t(spark, sf_dir, "documents"), full=True).filter(
+        F.length("text") >= _WIN_K
+    )
     return (
-        kernel_floor(t(spark, sf_dir, "documents"), full=True)
-        .filter(F.length("text") >= _WIN_K)
-        .select("doc_id", "text")
-        .mapInPandas(
-            _winnow_batches,
-            "doc_id bigint, n_grams bigint, n_fingerprints bigint,"
-            " fp_checksum bigint",
+        map_columns(
+            docs,
+            ["doc_id"],
+            [F.col("text")],
+            T.StructType.fromDDL(
+                "n_grams bigint, n_fingerprints bigint, fp_checksum bigint"
+            ),
+            _winnow_kernel,
         )
+        .filter(F.col("n_grams").isNotNull())
         .orderBy("doc_id")
     )
 

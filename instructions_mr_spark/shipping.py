@@ -1,6 +1,6 @@
 """Ship this package to Spark executors' Python workers.
 
-mapInPandas/applyInPandas closures are cloudpickled *by reference* to
+mapInArrow/applyInPandas closures are cloudpickled *by reference* to
 their defining module, so executor Python workers must be able to
 ``import instructions_mr_spark``.  That holds when the driver's cwd is
 the repo root (cwd is on the worker path in local mode) but breaks

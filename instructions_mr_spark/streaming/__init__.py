@@ -1,87 +1,25 @@
 """Structured Streaming surface (SURVEY.md §2.7 stream_*; M6).
 
 The reference cannot stream at all (README.md:96-97 "Can Not
-Streaming E2E"); this module defines the engine's streaming operators
-as readStream -> transform -> writeStream builders whose
-*transformations are shared with the batch queries* (same F.window /
-F.session_window expressions), so batch results are the oracle for
-streaming results.
+Streaming E2E"); this module holds the engine's stateful streaming
+operators — sessionization with an event-time timeout, per-user stats
+via transformWithState or applyInPandasWithState, a running max — and
+its ``foreachBatch`` sinks, including an incremental MERGE emulation.
+``session_funnel``'s batch twin,
+queries/streaming_batch.stream_funnel_sessions, is its DuckDB-oracled
+contract.
 
-Scale notes: all aggregations are keyed (window, event_type, user_id)
-so state partitions across executors; watermarks bound state size;
-``foreachBatch`` gives exactly-once-per-epoch sinks for stores without
-a streaming writer.
+Scale notes: state is keyed by user so it partitions across
+executors; watermarks bound state size; ``foreachBatch`` gives
+exactly-once-per-epoch sinks for stores without a streaming writer.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-
-def stream_events(
-    spark: SparkSession, events_dir: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """File-source stream over an events directory.  ``ts`` arriving as
-    raw nanos (bigint) converts to microseconds exactly like the batch
-    loader (sources/tables.py)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).format("parquet").load(events_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return stream
-
-
-def tumbling_counts(
-    events: DataFrame, width: str = "1 hour", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling event-time aggregate with late-data handling — the
-    streaming twin of queries/streaming_batch.stream_tumble."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-    )
-
-
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Session windows per user (state merges as events arrive)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def watermark_dedup(
-    events: DataFrame, keys: list[str], watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming keep-first dedup; watermark bounds the key state."""
-    return events.withWatermark("ts", watermark).dropDuplicates(keys)
-
-
-def run_to_memory(df: DataFrame, name: str, mode: str = "append") -> None:
-    """Drive a (bounded) stream to completion into a memory sink —
-    the test/driver harness path."""
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def foreach_batch_sink(

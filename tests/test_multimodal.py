@@ -347,3 +347,79 @@ def test_decode_video_headers_dataframe(spark):
     }
     assert out[1] == ("mp4", 1000, 5000, 3)
     assert out[2] == ("unknown", None, None, None)
+
+
+def test_out_of_range_header_field_is_null_not_a_failed_task(spark):
+    """A corrupt PNG IHDR width of 0x80000000 does not fit the int
+    column: it decodes to a null width, the row and the task survive."""
+    from instructions_mr_spark.operators.multimodal import decode_image_headers
+
+    df = spark.createDataFrame([(1, _png(0x80000000, 10))], "media_id int, payload binary")
+    [r] = decode_image_headers(df, "payload").collect()
+    assert (r.format, r.width, r.height) == ("png", None, 10)
+
+
+def test_every_media_stage_runs_on_the_arrow_boundary(spark, media):
+    """Each decoder and the frame sampler crosses into Python through
+    the one mapInArrow shell (operators/arrow_map.py), never pandas."""
+    from instructions_mr_spark.operators import multimodal as M
+
+    stages = {
+        "decode_images": M.decode_images(media, "payload", fake=True),
+        "decode_image_headers": M.decode_image_headers(media, "payload"),
+        "decode_audio_headers": M.decode_audio_headers(media, "payload"),
+        "decode_video_headers": M.decode_video_headers(media, "payload"),
+        "sample_frames": M.sample_frames(media, "payload", "media_id", fake=True),
+    }
+    for name, out in stages.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, name
+
+
+def test_decode_keep_columns_round_trip_unchanged(spark):
+    """Every input column passes the decoder untouched, whatever its
+    type: a null payload plus nullable bigint, decimal, timestamp,
+    array and struct values come back equal, under the same types."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from instructions_mr_spark.operators.multimodal import decode_image_headers
+
+    df = spark.createDataFrame(
+        [
+            (1, Decimal("1234567890.12"), dt.datetime(2024, 2, 29, 23, 59, 59, 123456),
+             ["a", None], (7, "x"), _png(4, 3)),
+            (None, None, None, None, None, None),
+            (3, Decimal("-0.05"), dt.datetime(1970, 1, 1), [], (None, "é"), b"opaque"),
+        ],
+        "id bigint, amt decimal(12,2), ts timestamp, tags array<string>, "
+        "meta struct<a:int,b:string>, payload binary",
+    )
+    out = decode_image_headers(df, "payload")
+    assert out.schema.fields[: len(df.columns)] == df.schema.fields
+    got = sorted(out.collect(), key=lambda r: r.id or 0)
+    want = sorted(df.collect(), key=lambda r: r.id or 0)
+    assert [tuple(r)[: len(df.columns)] for r in got] == [tuple(r) for r in want]
+    assert [(r.format, r.width, r.height) for r in got] == [
+        ("unknown", None, None), ("png", 4, 3), ("unknown", None, None)
+    ]
+
+
+def test_empty_input_keeps_the_declared_schema(spark):
+    """A 0-row input yields 0 rows under each stage's declared schema."""
+    from instructions_mr_spark.operators.multimodal import (
+        decode_image_headers,
+        sample_frames,
+    )
+
+    empty = spark.createDataFrame([], "media_id int, payload binary")
+    headers = decode_image_headers(empty, "payload")
+    assert headers.collect() == []
+    assert headers.schema.simpleString() == (
+        "struct<media_id:int,payload:binary,format:string,width:int,height:int>"
+    )
+    frames = sample_frames(empty, "payload", "media_id", fake=True)
+    assert frames.collect() == []
+    assert frames.schema.simpleString() == (
+        "struct<media_id:int,frame_idx:int,frame:binary>"
+    )

@@ -99,8 +99,9 @@ def test_no_python_stage_outside_allowlist(spark, sf_dir):
         # next-fit packing is a sequential capped-reset fold — not
         # expressible in window algebra, Python by design (packing.py)
         "pack_greedy", "pack_greedy_sharded",
-        # real header decode runs stdlib struct parsing in the
-        # mapInPandas kernel — Python by design (multimodal.py)
+        # real header decode runs stdlib struct parsing on the one
+        # mapInArrow boundary (arrow_map.py) — Python by design
+        # (multimodal.py)
         "multimodal_decode_real",
         "multimodal_audio_real",
         "multimodal_video_real",
@@ -118,12 +119,13 @@ def test_no_python_stage_outside_allowlist(spark, sf_dir):
         "pandas_grouped_agg_udf",
         "pandas_udf_over_window",
         "cogrouped_pandas_event_order_merge",
-        # the winnowing kernel moved to an Arrow-batched mapInPandas
-        # (round 12 session 5, guide §4.2): ~965k interpreted md5+CONV
+        # the winnowing kernel moved to an Arrow-batched Python kernel
+        # (round 12 session 5, guide §4.2), now on the one mapInArrow
+        # boundary (arrow_map.py): ~965k interpreted md5+CONV
         # HOF elements dominated the JVM chain (73 us/element,
         # transform() is CodegenFallback); the Arrow kernel measured
         # 3.23-3.30 -> 1.26-1.46 s at sf0.1 with row-identical output
-        # (queries/text.py::_winnow_batches has the exactness
+        # (queries/text.py::_winnow_kernel has the exactness
         # argument; the DuckDB oracle revalidates every value)
         "winnowing_fingerprints",
     }
@@ -554,6 +556,22 @@ def test_llm_calls_only_through_the_retry_seam():
     whole job on one HTTP 500 under local[N] (task maxFailures 1)."""
     offenders = _package_lines_containing(".complete(", "operators/llm_map.py")
     assert not offenders, f"LLM call outside operators/llm_map.py: {offenders}"
+
+
+def test_map_in_arrow_only_in_the_arrow_boundary():
+    """Every per-row Python operator in the PACKAGE crosses into Python
+    through operators/arrow_map.py (map_columns): one shell that passes
+    keep columns through as Arrow arrays, types each output column and
+    ships the package — not a hand-written copy per operator."""
+    offenders = _package_lines_containing(".mapInArrow(", "operators/arrow_map.py")
+    assert not offenders, f"mapInArrow outside operators/arrow_map.py: {offenders}"
+
+
+def test_no_map_in_pandas_in_package():
+    """The pandas boundary is gone from the package: per-row Python runs
+    on the Arrow shell in operators/arrow_map.py."""
+    offenders = _package_lines_containing(".mapInPandas(", "")
+    assert not offenders, f"mapInPandas in the package: {offenders}"
 
 
 def test_sql_double_literals_only_in_guard():

@@ -1,5 +1,5 @@
 """Focused pin for the Arrow-batched winnowing kernel (round 12,
-optimization session 5): queries/text.py::_winnow_batches replaced the
+optimization session 5): queries/text.py::_winnow_kernel replaced the
 JVM HOF expression chain, so the algorithm's exact values are pinned
 here against an INDEPENDENT brute-force reference (plain Python loops,
 no numpy, the textbook Schleimer/Wilkerson/Aiken selection) over the
@@ -61,3 +61,13 @@ def test_kernel_matches_brute_force_reference(spark):
             expected[doc_id] = ref
     assert got == expected
     assert len(got) > 0
+
+
+def test_kernel_runs_on_the_arrow_boundary(spark):
+    """The kernel crosses into Python through the one mapInArrow shell
+    (operators/arrow_map.py), never pandas."""
+    registry.load_all()
+    df = registry.QUERIES["winnowing_fingerprints"](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
