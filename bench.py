@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from instructions_mr_spark import registry
 from instructions_mr_spark.queries._util import free_staged_checkpoints
-from instructions_mr_spark.session import get_spark
+from instructions_mr_spark.session import codegen_compiles, get_spark
 
 # Estimator/harness version, recorded in the output line so cross-round
 # deltas are only read within one harness (the r3->r4 min-of-2 ->
@@ -160,6 +160,7 @@ def main() -> None:
     ) -> tuple[dict[str, float], dict[str, float]]:
         out: dict[str, float] = {}
         ab: dict[str, float] = {}
+        compiled_before = codegen_compiles(spark)
         for name in set_names:
             fn = registry.QUERIES[name]
             if ab_noise:
@@ -183,6 +184,8 @@ def main() -> None:
                 + (f" (A/A noise {ab[name]:.3f}x)" if ab_noise else ""),
                 file=sys.stderr,
             )
+        compiled = codegen_compiles(spark) - compiled_before
+        print(f"# codegen: {compiled} classes compiled", file=sys.stderr)
         return out, ab
 
     # A/A noise pass only on the default headline invocation — an env
@@ -266,7 +269,8 @@ def main() -> None:
         ),
     ):
         print(line)
-    print(final_line(timings, total, noise_band, sf, sf_dir))
+    sc = spark.sparkContext
+    print(final_line(timings, total, noise_band, sf, sf_dir, sc.master, sc.defaultParallelism))
 
 
 def aux_lines(noise_band: dict, series) -> list[str]:
@@ -327,13 +331,17 @@ def final_line(
     noise_band: dict,
     sf: str,
     sf_dir: str,
+    master: str,
+    default_parallelism: int,
 ) -> str:
     """The ONE final stdout line the driver parses.  Compact by
     contract: headline metric + per-query timings + band summary
     (median/max only — the per-query band detail travels on an earlier
-    headline_noise_detail line).  tests/test_bench_emit.py pins the
-    emitted length < 1500 chars so the driver's 2000-char tail capture
-    can never truncate it again (the r11 incident)."""
+    headline_noise_detail line) + the effective master and
+    ``sc.defaultParallelism``, so every number carries its core count.
+    tests/test_bench_emit.py pins the emitted length < 1500 chars so
+    a 2000-char tail capture of stdout can never truncate it again
+    (the r11 incident)."""
     return json.dumps(
         {
             "metric": "headline_total_sec",
@@ -345,6 +353,8 @@ def final_line(
             },
             "sf": float(sf) if sf else sf_dir,
             "harness": HARNESS,
+            "master": master,
+            "default_parallelism": default_parallelism,
         }
     )
 

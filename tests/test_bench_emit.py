@@ -76,6 +76,8 @@ class TestFinalLineLength:
                         "per_query": {n: 9.999 for n in bench.HEADLINE}},
             sf="0.1",
             sf_dir="/root/testdata/sf0.1",
+            master="local[9999]",
+            default_parallelism=9999,
         )
         assert len(line) < 1500, (
             f"final bench line is {len(line)} chars; the driver tail "
@@ -84,9 +86,13 @@ class TestFinalLineLength:
 
     def test_final_line_is_parseable_headline(self):
         timings = self._worst_case_timings()
-        obj = json.loads(bench.final_line(timings, 1.0, {}, "0.1", "x"))
+        obj = json.loads(bench.final_line(timings, 1.0, {}, "0.1", "x", "local[4]", 4))
         assert obj["metric"] == "headline_total_sec"
         assert obj["value"] == 1.0
+        # parallelism travels in-band: a record without it cannot show
+        # which core count its timings were measured at
+        assert obj["master"] == "local[4]"
+        assert obj["default_parallelism"] == 4
         assert set(obj["queries"]) == set(bench.HEADLINE)
         assert obj["harness"] == bench.HARNESS
         # per-query band detail must NOT be inlined here — it travels
@@ -97,7 +103,7 @@ class TestFinalLineLength:
 
     def test_final_line_band_summary_only(self):
         nb = {"median": 1.03, "max": 1.07, "per_query": {"q1": 1.03}}
-        obj = json.loads(bench.final_line({"q1": 1.0}, 1.0, nb, "0.1", "x"))
+        obj = json.loads(bench.final_line({"q1": 1.0}, 1.0, nb, "0.1", "x", "local[4]", 4))
         assert obj["noise_band"] == {"median": 1.03, "max": 1.07}
 
 
@@ -160,6 +166,8 @@ class TestAuxLines:
             noise_band={"median": 1.999, "max": 9.999},
             sf="0.1",
             sf_dir="/root/testdata/sf0.1",
+            master="local[9999]",
+            default_parallelism=9999,
         )
         tail = "\n".join(lines + [final])
         assert len(tail) < 2000, len(tail)
