@@ -41,7 +41,7 @@ from instructions_mr_spark.session import codegen_compiles, get_spark
 # heavies_r8_noise_band — r10's dedup_span_cut read 2.864s in the
 # recorded bench and 2.107s in a same-session preview, a 36% spread
 # that was unreadable without a per-query band.  Round 11 also adds a
-# fourth tracked list (HEAVIES_R11, same estimator + band) — a new
+# fourth tracked series (heavies_r11, same estimator + band) — a new
 # series, so no existing series' comparability changes.
 HARNESS = "min3-noop-warmup-v3-abnoise-heavies"
 
@@ -63,58 +63,54 @@ HEADLINE = [
     "q21_waiting_supplier",
 ]
 
-# Second tracked list (r7 verdict item 7): the heaviest round-7
-# operator families, timed with the SAME min-3 harness and emitted
-# under "heavies" in the output line so regressions in the new
-# families are visible round-over-round.  Kept separate from HEADLINE
-# so the headline_total_sec series stays comparable across rounds.
-HEAVIES = [
-    "embedding_top_pc",
-    "semdedup_cells",
-    "dedup_span_cut",
-    "rolling_retention_7d",
-    "greedy_set_cover_sources",
-    "copurchase_lift",
-]
-
-# Third tracked list (round 8): the heaviest round-8 operator families
-# — iterative graph oracles, the wedge/banded self-joins and the
-# corpus-scan regex batch — emitted under "heavies_r8" so their
-# round-over-round movement is visible without disturbing the two
-# existing series.
-HEAVIES_R8 = [
-    "k_core_peel3",
-    "attribution_markov_removal",
-    "graph_resource_allocation",
-    "event_cooccurrence_60s",
-    "embedding_covariance_terms",
-    "interval_merge_overlaps",
-    "doc_truncation_loss",
-    "repeat_purchase_rate_by_brand",
-]
-
-# Fourth tracked list (round 11): the biggest walls the existing
-# series didn't cover — the shingle-winnowing fingerprint scan (the
-# text family's heavy: 12.8s at sf1), the cold conductance query
-# (measures the shared copurchase stage build, not just the warm
-# family reuse), and the salted-LSH skew twin.  Emitted under
-# "heavies_r11" with its own A/A band.
-HEAVIES_R11 = [
-    "winnowing_fingerprints",
-    "graph_conductance_brand",
-    "dedup_minhash_lsh_salted",
-]
-
-# Fifth tracked list (round 12): the fixed-overhead rewrites of this
-# round that no existing series covers — the HOF-fold MMR selection
-# (was 5 chained anti-join/agg stage groups) and the LSH candidate
-# join-back with hoisted pair-cosine norms.  markov and semdedup, the
-# other r12 rewrites, already ride heavies_r8/heavies.  Emitted under
-# "heavies_r12" with its own A/A band.
-HEAVIES_R12 = [
-    "mmr_diverse_topk",
-    "dedup_embedding_cosine",
-]
+# Tracked heavies series, one (metric, queries) row each in the order
+# they are timed, oldest first.  Each runs with the SAME min-3 harness
+# as HEADLINE plus its own interleaved A/A band and is emitted on its
+# own stdout line, kept apart from HEADLINE so the headline_total_sec
+# series stays comparable across rounds.
+# - heavies (r7): the heaviest round-7 operator families.
+# - heavies_r8: iterative graph oracles, the wedge/banded self-joins
+#   and the corpus-scan regex batch.
+# - heavies_r11: the shingle-winnowing fingerprint scan, the cold
+#   conductance query (the shared copurchase stage build) and the
+#   salted-LSH skew twin.
+# - heavies_r12: the HOF-fold MMR selection and the LSH candidate
+#   join-back with hoisted pair-cosine norms.
+SERIES = (
+    (
+        "heavies",
+        [
+            "embedding_top_pc",
+            "semdedup_cells",
+            "dedup_span_cut",
+            "rolling_retention_7d",
+            "greedy_set_cover_sources",
+            "copurchase_lift",
+        ],
+    ),
+    (
+        "heavies_r8",
+        [
+            "k_core_peel3",
+            "attribution_markov_removal",
+            "graph_resource_allocation",
+            "event_cooccurrence_60s",
+            "embedding_covariance_terms",
+            "interval_merge_overlaps",
+            "doc_truncation_loss",
+            "repeat_purchase_rate_by_brand",
+        ],
+    ),
+    (
+        "heavies_r11",
+        [
+            "winnowing_fingerprints",
+            "graph_conductance_brand",
+            "dedup_minhash_lsh_salted",
+        ],
+    ),
+    ("heavies_r12", ["mmr_diverse_topk", "dedup_embedding_cosine"]),
+)
 
 
 def main() -> None:
@@ -191,21 +187,12 @@ def main() -> None:
     # A/A noise pass only on the default headline invocation — an env
     # override is a one-off scale/curve run and never reads noise_band
     timings, ab_ratios = time_set(names, ab_noise=not names_env)
-    # the heavies lists only run on a default invocation (an env
-    # override is a one-off scale/curve run, keep it minimal); round 11
-    # (r10 verdict item #4): the heavies carry their own A/A bands now
-    heavies, heavies_ab = ({}, {}) if names_env else time_set(
-        HEAVIES, ab_noise=True
-    )
-    heavies_r8, heavies_r8_ab = ({}, {}) if names_env else time_set(
-        HEAVIES_R8, ab_noise=True
-    )
-    heavies_r11, heavies_r11_ab = ({}, {}) if names_env else time_set(
-        HEAVIES_R11, ab_noise=True
-    )
-    heavies_r12, heavies_r12_ab = ({}, {}) if names_env else time_set(
-        HEAVIES_R12, ab_noise=True
-    )
+    # the heavies series only run on a default invocation (an env
+    # override is a one-off scale/curve run, keep it minimal), each with
+    # its own A/A band
+    series = [] if names_env else [
+        (metric, *time_set(queries, ab_noise=True)) for metric, queries in SERIES
+    ]
 
     total = round(sum(timings.values()), 3)
     noise_band = band(ab_ratios)
@@ -259,15 +246,7 @@ def main() -> None:
     # and each series line carries only the band SUMMARY (median/max;
     # per-query A/A ratios stay on stderr), roughly halving its width
     # so all five lines + the final line fit a ~2000-char tail.
-    for line in aux_lines(
-        noise_band,
-        (
-            ("heavies_r12", heavies_r12, heavies_r12_ab),
-            ("heavies_r11", heavies_r11, heavies_r11_ab),
-            ("heavies_r8", heavies_r8, heavies_r8_ab),
-            ("heavies", heavies, heavies_ab),
-        ),
-    ):
+    for line in aux_lines(noise_band, reversed(series)):
         print(line)
     sc = spark.sparkContext
     print(final_line(timings, total, noise_band, sf, sf_dir, sc.master, sc.defaultParallelism))

@@ -45,7 +45,7 @@ def run(sf_dir: str, out_dir: str) -> dict[str, int]:
     registry.load_all()
     spark = get_spark("recsys_training_pipeline")
     from instructions_mr_spark.queries._util import t
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
+    from instructions_mr_spark.functions import spark_hash
 
     o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
@@ -60,7 +60,7 @@ def run(sf_dir: str, out_dir: str) -> dict[str, int]:
 
     # -- 2. deterministic negatives (2 per positive, collision-filtered)
     mx = li.agg(F.max("l_partkey").alias("maxp"))
-    h = _spark_h32(
+    h = spark_hash(
         "CAST(cust AS STRING) || ':' || CAST(part AS STRING) || ':' "
         "|| CAST(j AS STRING)",
         17,
@@ -120,7 +120,7 @@ def run(sf_dir: str, out_dir: str) -> dict[str, int]:
     split = rows.withColumn(
         "split",
         F.when(
-            F.expr(_spark_h32("CAST(cust AS STRING)", 23)) % 10 < 8, "train"
+            F.expr(spark_hash("CAST(cust AS STRING)", 23)) % 10 < 8, "train"
         ).otherwise("valid"),
     )
     n_train = split.filter(F.col("split") == "train").count()

@@ -1,9 +1,10 @@
 """Reusable Column-level function library (SURVEY.md §2.7 scalar
 families + the LLM-pipeline kernels).
 
-Everything here returns Column expressions (JVM-side, codegen'd);
-the portable-hash helpers have exact DuckDB twins for oracle checks
-(see queries/llm_pipeline.py).
+Everything here returns Column expressions (JVM-side, codegen'd),
+except the portable digest: ``spark_hash`` / ``duck_hash`` render the
+same md5-derived integer as Spark SQL and DuckDB text, the one place
+the digest format lives.
 """
 
 from __future__ import annotations
@@ -12,13 +13,33 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def h32(col_expr: str, seed: int) -> str:
-    """Portable 32-bit hash (SQL fragment): first 8 hex digits of
-    md5(x || '#seed') as a bigint.  Identical in DuckDB via
-    ('0x' || substr(md5(...),1,8))::BIGINT."""
+def _salted(key: str, seed: int | None) -> str:
+    return key if seed is None else f"{key} || '#{seed}'"
+
+
+def spark_hash(key: str, seed: int | None = None, hex_digits: int = 8) -> str:
+    """Portable integer digest of a SQL expression (Spark SQL side):
+    the first ``hex_digits`` hex digits of ``md5(key || '#<seed>')``
+    as a BIGINT, i.e. ``int(md5(..).hexdigest()[:hex_digits], 16)``.
+
+    ``key`` is inserted unchanged; an int ``seed`` appends
+    ``|| '#<seed>'``, and a key salted with a column expression is
+    passed whole with no seed.  8 digits give a 32-bit hash; 15 (the
+    most that fits a signed BIGINT) give a 60-bit one, for
+    gram/url-cardinality keys where 32 bits birthday-collide past
+    ~100k keys.  :func:`duck_hash` renders the same
+    bits in DuckDB, so dedup, sampling and sketch oracles can be
+    checked exactly; this module is the only one that knows the
+    format."""
     return (
-        f"CAST(CONV(SUBSTRING(MD5(CAST({col_expr} || '#{seed}' AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
+        f"CAST(CONV(SUBSTRING(MD5(CAST({_salted(key, seed)} AS BINARY)), 1, {hex_digits}),"
+        " 16, 10) AS BIGINT)"
     )
+
+
+def duck_hash(key: str, seed: int | None = None, hex_digits: int = 8) -> str:
+    """DuckDB twin of :func:`spark_hash` (same arguments, same value)."""
+    return f"('0x' || substr(md5({_salted(key, seed)}), 1, {hex_digits}))::BIGINT"
 
 
 def cosine_sim(a: Column, b: Column, digits: int = 6) -> Column:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import cosine_sim, dot_product
+from instructions_mr_spark.functions import cosine_sim, dot_product, spark_hash
 from instructions_mr_spark.plans.guard import sql_double, sql_double_array, sql_ident
 
 
@@ -47,9 +47,7 @@ def _collect_train_sample(
 
     hashed = df.select(
         F.col(vec_col).alias("v"),
-        F.conv(F.substring(F.md5(F.col(vec_col).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        F.expr(spark_hash(f"CAST({sql_ident(vec_col)} AS STRING)", hex_digits=15)).alias("h"),
     )
     if train_cap is not None:
         n = df.count()
@@ -209,9 +207,7 @@ def train_pq_codebooks(
 
     hashed = df.select(
         F.col(vec_col).alias("v"),
-        F.conv(F.substring(F.md5(F.col(vec_col).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        F.expr(spark_hash(f"CAST({sql_ident(vec_col)} AS STRING)", hex_digits=15)).alias("h"),
     )
     rows = hashed.orderBy("h", "v").limit(train_cap).collect()
     X = np.array([r.v for r in rows], dtype=np.float64)

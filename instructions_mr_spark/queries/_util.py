@@ -6,6 +6,8 @@ cast to DOUBLE), because summing doubles in engine-dependent order
 drifts in the low bits and can flip a rounded value at large
 magnitudes.  Fragments are shared verbatim between the Spark F.expr
 side and the DuckDB oracle string so the two sides cannot drift.
+The portable md5 digest that dedup and sampling queries key on is
+rendered by ``functions.spark_hash`` / ``functions.duck_hash``.
 """
 
 from __future__ import annotations
@@ -24,23 +26,6 @@ CHARGE = f"{DEC_PRICE} * (1 - {DEC_DISC}) * (1 + {DEC_TAX})"
 DEC_TOTAL = "CAST(o_totalprice AS DECIMAL(12,2))"
 DEC_BAL = "CAST(c_acctbal AS DECIMAL(12,2))"
 DEC_VALUE = "CAST(value AS DECIMAL(12,2))"
-
-
-def spark_h60(expr: str, seed: int) -> str:
-    """Portable 60-bit digest fragment (Spark SQL side): first 15 hex
-    chars of md5 — fits a signed BIGINT with headroom, and byte-
-    identical to :func:`duck_h60`, so a digest used as a GROUP BY /
-    join key produces the same buckets on both engines (the 32-bit
-    twin in queries/llm_pipeline.py birthday-collides past ~100k keys;
-    use THIS one for gram/url-cardinality keys)."""
-    return (
-        f"CAST(CONV(SUBSTRING(MD5(CAST({expr} || '#{seed}' AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-    )
-
-
-def duck_h60(expr: str, seed: int) -> str:
-    """DuckDB twin of :func:`spark_h60` (same bytes, same value)."""
-    return f"('0x' || substr(md5({expr} || '#{seed}'), 1, 15))::BIGINT"
 
 
 def sum_d(fragment: str, alias: str) -> str:

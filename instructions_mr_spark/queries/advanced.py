@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
+from instructions_mr_spark.functions import duck_hash
 from instructions_mr_spark.queries._util import REVENUE, sum_d, t, ts_epoch_seconds
 from instructions_mr_spark.registry import query
 
@@ -385,10 +386,10 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_decode_fake",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           (('0x' || substr(md5(text), 1, 4))::INT % 1920) + 1 AS width,
-           (('0x' || substr(md5(text), 5, 4))::INT % 1080) + 1 AS height
+           (({duck_hash('text')} // 65536)::INT % 1920) + 1 AS width,
+           (({duck_hash('text')} % 65536)::INT % 1080) + 1 AS height
     FROM documents
     """,
 )

@@ -10,6 +10,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -1761,7 +1762,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "negative_sampling_pairs",
-    oracle="""
+    oracle=f"""
     WITH pos AS (
       SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part
       FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -1769,9 +1770,9 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx AS (SELECT MAX(l_partkey) AS maxp FROM lineitem),
     cand AS (
       SELECT cust, part,
-             (('0x' || substr(md5(CAST(cust AS VARCHAR) || ':'
-                 || CAST(part AS VARCHAR) || ':' || CAST(j AS VARCHAR) || '#17'),
-                 1, 8))::BIGINT % (maxp + 1)) AS neg_part
+             ({duck_hash("CAST(cust AS VARCHAR) || ':' || CAST(part AS VARCHAR)"
+                         " || ':' || CAST(j AS VARCHAR)", 17)}
+              % (maxp + 1)) AS neg_part
       FROM pos, mx, (SELECT unnest([0, 1]) AS j)
     ),
     kept AS (
@@ -1817,8 +1818,6 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — the same digest-keyed shape every dedup op here uses.  At
     100 TB the positives table is bucketed by cust and both the
     explode and anti join stay co-partitioned."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
     pos = (
@@ -1827,7 +1826,7 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     mx = li.agg(F.max("l_partkey").alias("maxp"))
-    h = _spark_h32(
+    h = spark_hash(
         "CAST(cust AS STRING) || ':' || CAST(part AS STRING) || ':' || CAST(j AS STRING)",
         17,
     )
@@ -2012,12 +2011,11 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "experiment_assignment_srm",
-    oracle="""
+    oracle=f"""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     assigned AS (
       SELECT user_id, user_id % 4 AS stratum,
-             CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':exp1#29'),
-                        1, 8))::BIGINT % 2 = 0
+             CASE WHEN {duck_hash("CAST(user_id AS VARCHAR) || ':exp1#29'")} % 2 = 0
                   THEN 'control' ELSE 'treat' END AS arm
       FROM u
     ),
@@ -2048,11 +2046,9 @@ def experiment_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one distinct-user aggregate, in-row hash
     assignment, a (stratum)-keyed rollup — nothing else touches the
     fact table."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     e = t(spark, sf_dir, "events")
     u = e.select("user_id").distinct()
-    h = _spark_h32("CAST(user_id AS STRING) || ':exp1'", 29)
+    h = spark_hash("CAST(user_id AS STRING) || ':exp1'", 29)
     assigned = u.selectExpr(
         "user_id",
         "user_id % 4 AS stratum",
@@ -2329,12 +2325,11 @@ def churn_label_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "experiment_uplift_report",
-    oracle="""
+    oracle=f"""
     WITH u AS (SELECT DISTINCT user_id FROM events),
     assigned AS (
       SELECT user_id, user_id % 4 AS stratum,
-             CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':exp1#29'),
-                        1, 8))::BIGINT % 2 = 0
+             CASE WHEN {duck_hash("CAST(user_id AS VARCHAR) || ':exp1#29'")} % 2 = 0
                   THEN 'control' ELSE 'treat' END AS arm
       FROM u
     ),
@@ -2360,11 +2355,9 @@ def experiment_uplift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: distinct-user and distinct-converter aggregates, a
     user-keyed left join, an 8-row rollup."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     e = t(spark, sf_dir, "events")
     u = e.select("user_id").distinct()
-    h = _spark_h32("CAST(user_id AS STRING) || ':exp1'", 29)
+    h = spark_hash("CAST(user_id AS STRING) || ':exp1'", 29)
     assigned = u.selectExpr(
         "user_id",
         "user_id % 4 AS stratum",

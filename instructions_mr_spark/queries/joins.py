@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import spark_hash
 from instructions_mr_spark.operators.asof import asof_join
 from instructions_mr_spark.queries._util import REVENUE, sum_d, t
 from instructions_mr_spark.registry import query
@@ -593,18 +594,16 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-invariant, so relabeling is safe; a hash collision would
     # merge clusters and diverge from the string-labeled oracle, so
     # the oracle doubles as the collision check)
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     iedges = matches.selectExpr(
-        f"{_spark_h32('cnode', 3)} AS cid", f"{_spark_h32('dnode', 3)} AS did"
+        f"{spark_hash('cnode', 3)} AS cid", f"{spark_hash('dnode', 3)} AS did"
     )
     labeled = connected_components(iedges, src="cid", dst="did").select(
         "node", F.col("component").alias("cluster_id")
     )
     sides = (
-        matches.selectExpr(f"{_spark_h32('cnode', 3)} AS node", "1 AS is_clean")
+        matches.selectExpr(f"{spark_hash('cnode', 3)} AS node", "1 AS is_clean")
         .unionAll(
-            matches.selectExpr(f"{_spark_h32('dnode', 3)} AS node", "0 AS is_clean")
+            matches.selectExpr(f"{spark_hash('dnode', 3)} AS node", "0 AS is_clean")
         )
         .distinct()
     )

@@ -15,6 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -1303,9 +1304,9 @@ def shipment_latency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hash_shard_balance",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT ('0x' || substr(md5(o_orderkey::VARCHAR || '#13'), 1, 15))::BIGINT % 32 AS shard FROM orders
+      SELECT {duck_hash('o_orderkey::VARCHAR', 13, hex_digits=15)} % 32 AS shard FROM orders
     ),
     c AS (SELECT shard, COUNT(*) AS n FROM s GROUP BY 1),
     tot AS (SELECT SUM(n) AS total FROM c)
@@ -1321,7 +1322,7 @@ def hash_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     perfectly even).  This is the pre-flight check before committing
     a partitioning/bucketing key at 100 TB: a key whose load_e6
     spread is wide (skewed or low-cardinality) will hotspot every
-    downstream shuffle, and the SAME digest (spark_h60/duck_h60) is
+    downstream shuffle, and the SAME digest (functions.spark_hash) is
     what the repo's digest-keyed dedup ops shuffle on — so this
     audits the actual production key function, cross-engine exact.
 
@@ -1329,7 +1330,7 @@ def hash_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable count per 32 bounded keys; the total is a
     1-row broadcast."""
     s = t(spark, sf_dir, "orders").selectExpr(
-        "CAST(CONV(SUBSTRING(MD5(CAST(CAST(o_orderkey AS STRING) || '#13' AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 32 AS shard"
+        f"{spark_hash('CAST(o_orderkey AS STRING)', 13, hex_digits=15)} % 32 AS shard"
     )
     c = s.groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
     tot = c.agg(F.sum("n").alias("total"))
@@ -1719,19 +1720,26 @@ def header_detail_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _line_content_key(text_type: str) -> str:
+    """Pipe-joined business fields of a line item (exact cents)."""
+    return " || '|' || ".join(
+        f"CAST({c} AS {text_type})"
+        for c in (
+            "l_partkey",
+            "l_suppkey",
+            "l_linenumber",
+            "CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)",
+            "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)",
+        )
+    )
+
+
 @query(
     "order_content_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH lines AS (
       SELECT l_orderkey,
-             ('0x' || substr(md5(
-                CAST(l_partkey AS VARCHAR) || '|' ||
-                CAST(l_suppkey AS VARCHAR) || '|' ||
-                CAST(l_linenumber AS VARCHAR) || '|' ||
-                CAST(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)
-                     AS VARCHAR) || '|' ||
-                CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
-                     AS VARCHAR) || '#31'), 1, 15))::BIGINT AS h
+             {duck_hash(_line_content_key('VARCHAR'), 31, hex_digits=15)} AS h
       FROM lineitem
     )
     SELECT l_orderkey,
@@ -1753,16 +1761,7 @@ def order_content_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row hashing on the scan, one order-keyed
     map-side-combinable aggregate — digests shuffle, bodies never
     do."""
-    h_expr = (
-        "CAST(CONV(SUBSTRING(MD5(CAST("
-        "CAST(l_partkey AS STRING) || '|' ||"
-        " CAST(l_suppkey AS STRING) || '|' ||"
-        " CAST(l_linenumber AS STRING) || '|' ||"
-        " CAST(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT) AS STRING)"
-        " || '|' ||"
-        " CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
-        " AS STRING) || '#31' AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-    )
+    h_expr = spark_hash(_line_content_key("STRING"), 31, hex_digits=15)
     lines = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.expr(h_expr).alias("h")
     )
@@ -1895,8 +1894,7 @@ _SKEW_K = 200  # the hypothetical shuffle partition count being sized
     "shuffle_skew_forecast",
     oracle=f"""
     WITH parts AS (
-      SELECT ('0x' || substr(md5(user_id || '#77'), 1, 15))::BIGINT % {_SKEW_K}
-               AS pid,
+      SELECT {duck_hash('user_id', 77, hex_digits=15)} % {_SKEW_K} AS pid,
              COUNT(*) AS rows_in
       FROM events GROUP BY 1
     ),
@@ -1927,13 +1925,11 @@ def shuffle_skew_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable (pid) count — {_SKEW_K}
     rows; the median/max roll-up is constant-size.  The window runs
     over the {_SKEW_K}-row partition table (bounded)."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     from pyspark.sql import Window
 
     parts = (
         t(spark, sf_dir, "events")
-        .selectExpr(f"({spark_h60('user_id', 77)}) % {_SKEW_K} AS pid")
+        .selectExpr(f"({spark_hash('user_id', 77, hex_digits=15)}) % {_SKEW_K} AS pid")
         .groupBy("pid")
         .agg(F.count(F.lit(1)).alias("rows_in"))
     )

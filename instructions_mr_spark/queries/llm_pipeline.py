@@ -8,10 +8,10 @@ checkable end-to-end; the remote-LLM path reuses the identical plan
 with a different client factory.
 
 Dedup + similarity search use a cross-engine-portable hash:
-``int(md5(x || seed)[:8], 16)`` — identical in Spark
-(conv(substring(md5(..),1,8),16,10)) and DuckDB
-(('0x' || substr(md5(..),1,8))::BIGINT), so even MinHash/LSH is
-hash-checkable, not just rows-only.
+``int(md5(x || seed)[:8], 16)``, rendered for Spark and DuckDB by
+``functions.spark_hash`` / ``functions.duck_hash`` with the same bits
+on both engines, so even MinHash/LSH is hash-checkable, not just
+rows-only.
 
 Scale notes: exact dedup is one hash-aggregate; MinHash-LSH is
 signature (narrow projection) -> band explode -> equi-join on band
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.operators.llm_map import group_concat_reduce, instr_fanout_map
 from instructions_mr_spark.queries._util import supersede_checkpoint, t
 from instructions_mr_spark.registry import query
@@ -134,15 +135,6 @@ def llm_echo_mapreduce_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- dedup
 
-# Portable 32-bit hash fragments (see module docstring).
-def _spark_h32(expr: str, seed: int) -> str:
-    return f"CAST(CONV(SUBSTRING(MD5(CAST({expr} || '#{seed}' AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
-
-
-def _duck_h32(expr: str, seed: int) -> str:
-    return f"('0x' || substr(md5({expr} || '#{seed}'), 1, 8))::BIGINT"
-
-
 @query(
     "dedup_exact",
     oracle="""
@@ -182,7 +174,7 @@ _MH_B = [s * 1299709 + 31 for s in range(_MINHASH_K)]
 
 
 def _minhash_cols_duck() -> str:
-    base = f"list_transform(shingles, w -> {_duck_h32('w', 0)})"
+    base = f"list_transform(shingles, w -> {duck_hash('w', 0)})"
     return (
         f"{base} AS hs, "
         + ", ".join(
@@ -224,7 +216,7 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     variant de-duplicating shingle digests across docs was 1.5x
     SLOWER here: two extra shuffles outweigh 27x fewer md5s.)"""
     sh = _shingle_docs(docs)
-    base = f"TRANSFORM(shingles, w -> {_spark_h32('w', 0)})"
+    base = f"TRANSFORM(shingles, w -> {spark_hash('w', 0)})"
     return sh.selectExpr(
         "doc_id",
         f"{base} AS hs",
@@ -325,7 +317,7 @@ def _lsh_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
     sh = _shingle_docs(docs)
-    base = f"TRANSFORM(shingles, w -> {_spark_h32('w', 0)})"
+    base = f"TRANSFORM(shingles, w -> {spark_hash('w', 0)})"
     sigs = sh.selectExpr("doc_id", "shingles", f"{base} AS hs").selectExpr(
         "doc_id",
         "shingles",
@@ -389,7 +381,7 @@ def _lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
       FROM sigs
     ),
     sides AS (
-      SELECT doc_id, {_duck_h32('doc_id', 13)} % 100 AS b FROM documents
+      SELECT doc_id, {duck_hash('doc_id', 13)} % 100 AS b FROM documents
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS test_doc, t.doc_id AS train_doc
@@ -468,7 +460,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("leaked", F.lit(True))
     )
     docs = t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "source", f"{_spark_h32('doc_id', 13)} % 100 AS b"
+        "doc_id", "source", f"{spark_hash('doc_id', 13)} % 100 AS b"
     )
     test_docs = docs.filter(F.col("b") >= 90)
     return (
@@ -493,7 +485,7 @@ def _split_leakage_candidates(sigs: DataFrame) -> DataFrame:
     subtree (tests/test_plans.py asserts the band exchange carries
     none)."""
     bands = _band_rows(sigs, with_shingles=False)
-    b_expr = F.expr(f"{_spark_h32('doc_id', 13)} % 100")
+    b_expr = F.expr(f"{spark_hash('doc_id', 13)} % 100")
     test_b = bands.withColumn("b", b_expr).filter(F.col("b") >= 90).alias("a")
     train_b = bands.withColumn("b", b_expr).filter(F.col("b") < 80).alias("t")
     return (
@@ -599,7 +591,7 @@ def _lsh_candidate_pairs_salted(
     hot = (
         flagged.filter(F.col("is_hot"))
         .drop("is_hot", "bucket_n")
-        .withColumn("salt", F.expr(_spark_h32("CAST(doc_id AS STRING)", 7)) % n_salt)
+        .withColumn("salt", F.expr(spark_hash("CAST(doc_id AS STRING)", 7)) % n_salt)
     )
     repl = hot.select(
         "doc_id",
@@ -771,7 +763,7 @@ _SIMHASH_BITS = 16
     "dedup_simhash",
     oracle=f"""
     SELECT doc_id,
-           {' + '.join(f"(CASE WHEN (list_sum(list_transform(words, w -> CASE WHEN (({_duck_h32('w', 99)} >> {b}) & 1) = 1 THEN 1 ELSE -1 END))) > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS))}
+           {' + '.join(f"(CASE WHEN (list_sum(list_transform(words, w -> CASE WHEN (({duck_hash('w', 99)} >> {b}) & 1) = 1 THEN 1 ELSE -1 END))) > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS))}
              AS simhash
     FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
     """,
@@ -785,7 +777,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bit_terms = " + ".join(
         f"(CASE WHEN AGGREGATE(words, 0, (acc, w) -> acc + "
-        f"CASE WHEN (SHIFTRIGHT({_spark_h32('w', 99)}, {b}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
+        f"CASE WHEN (SHIFTRIGHT({spark_hash('w', 99)}, {b}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
         f"THEN {1 << b} ELSE 0 END)"
         for b in range(_SIMHASH_BITS)
     )
@@ -1575,7 +1567,7 @@ def _band_rows_of(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles, band, key) band rows for an arbitrary doc
     subset — the generalized front half of _lsh_sigs + _band_rows."""
     sh = _shingle_docs(docs)
-    base = f"TRANSFORM(shingles, w -> {_spark_h32('w', 0)})"
+    base = f"TRANSFORM(shingles, w -> {spark_hash('w', 0)})"
     sigs = sh.selectExpr("doc_id", "shingles", f"{base} AS hs").selectExpr(
         "doc_id",
         "shingles",
@@ -2352,7 +2344,7 @@ def source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS ({_DUCK_SHINGLE_DOCS}
     ), sig AS (
       SELECT doc_id,
-             {', '.join(f"list_min(list_transform(list_transform(shingles, w -> {_duck_h32('w', 0)}), h -> ({_MH_A[s]} * h + {_MH_B[s]}) % {_MH_P})) AS mh{s}" for s in range(_MINHASH_K))}
+             {', '.join(f"list_min(list_transform(list_transform(shingles, w -> {duck_hash('w', 0)}), h -> ({_MH_A[s]} * h + {_MH_B[s]}) % {_MH_P})) AS mh{s}" for s in range(_MINHASH_K))}
       FROM sh
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -2424,14 +2416,12 @@ def _simhash60_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     60 digest passes), sign-summed per bit.  localCheckpoint'd because
     the hamming join reads it on both sides (the LSH staging
     precedent: never let a self-join duplicate the digest pass)."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     words = (
         t(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .selectExpr("doc_id", "split(text, ' ') AS words")
         .filter(F.size("words") >= 1)
-        .selectExpr("doc_id", f"TRANSFORM(words, w -> {spark_h60('w', 7)}) AS hs")
+        .selectExpr("doc_id", f"TRANSFORM(words, w -> {spark_hash('w', 7, hex_digits=15)}) AS hs")
     )
     bit_terms = " + ".join(
         f"(CASE WHEN AGGREGATE(hs, 0, (acc, h) -> acc + "
@@ -2444,8 +2434,6 @@ def _simhash60_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_simhash60() -> str:
-    from instructions_mr_spark.queries._util import duck_h60
-
     bit_terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform(hs, h -> "
         f"CASE WHEN ((h >> {b}) & 1) = 1 THEN 1 ELSE -1 END)) > 0 "
@@ -2458,7 +2446,7 @@ def _duck_simhash60() -> str:
       WHERE len(string_split(text, ' ')) >= 1
     ),
     hashed AS (
-      SELECT doc_id, list_transform(words, w -> {duck_h60('w', 7)}) AS hs
+      SELECT doc_id, list_transform(words, w -> {duck_hash('w', 7, hex_digits=15)}) AS hs
       FROM toks
     ),
     fp AS (SELECT doc_id, {bit_terms} AS fp FROM hashed)
@@ -2543,7 +2531,7 @@ _LINE_DF_MIN_DROP = 2  # drop a paragraph EVERYWHERE once it appears in >= 2 doc
              1, CAST(ceil(len(w) / {_PARA_W}.0) AS BIGINT))) AS i) s
     ), keyed AS (
       SELECT doc_id, para_idx, para,
-             ('0x' || substr(md5(para || '#31'), 1, 15))::BIGINT AS para_h
+             {duck_hash('para', 31, hex_digits=15)} AS para_h
       FROM paras
     ), freq AS (
       SELECT para_h, COUNT(DISTINCT doc_id) AS df
@@ -2578,8 +2566,6 @@ def dedup_line_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg.  No self-join, no window over the corpus.  A
     same-paragraph repeat WITHIN one doc has df=1 and is kept —
     in-doc repetition is quality_repetition's job, not dedup's."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     d = t(spark, sf_dir, "documents")
     toked = d.select("doc_id", F.split("text", " ").alias("w"))
     n_paras = F.ceil(F.size("w") / F.lit(float(_PARA_W)))
@@ -2599,7 +2585,7 @@ def dedup_line_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.para_idx").alias("para_idx"),
             F.col("p.para").alias("para"),
         )
-        .withColumn("para_h", F.expr(spark_h60("para", 31)))
+        .withColumn("para_h", F.expr(spark_hash("para", 31, hex_digits=15)))
     )
     freq = keyed.groupBy("para_h").agg(F.countDistinct("doc_id").alias("df"))
     joined = keyed.join(freq, "para_h").withColumn(
@@ -2900,13 +2886,11 @@ def set_sim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_prefix_suffix_block",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             ('0x' || substr(md5(left(text, 32) || '#21'), 1, 15))::BIGINT
-               AS pre_d,
-             ('0x' || substr(md5(right(text, 32) || '#22'), 1, 15))::BIGINT
-               AS suf_d
+             {duck_hash('left(text, 32)', 21, hex_digits=15)} AS pre_d,
+             {duck_hash('right(text, 32)', 22, hex_digits=15)} AS suf_d
       FROM documents
     ),
     pre AS (SELECT pre_d, MIN(doc_id) AS pre_grp FROM d GROUP BY 1),
@@ -2932,12 +2916,10 @@ def dedup_prefix_suffix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on 60-bit integers — document bodies never shuffle (the
     house digest-only convention); block election is the same keyed
     argmin as dedup_exact."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr(spark_h60("left(text, 32)", 21)).alias("pre_d"),
-        F.expr(spark_h60("right(text, 32)", 22)).alias("suf_d"),
+        F.expr(spark_hash("left(text, 32)", 21, hex_digits=15)).alias("pre_d"),
+        F.expr(spark_hash("right(text, 32)", 22, hex_digits=15)).alias("suf_d"),
     )
     pre = d.groupBy("pre_d").agg(F.min("doc_id").alias("pre_grp"))
     suf = d.groupBy("suf_d").agg(F.min("doc_id").alias("suf_grp"))
@@ -3419,7 +3401,7 @@ def embedding_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH fp AS (
       SELECT source,
-           {' + '.join(f"(CASE WHEN (list_sum(list_transform(words, w -> CASE WHEN (({_duck_h32('w', 99)} >> {b}) & 1) = 1 THEN 1 ELSE -1 END))) > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS))}
+           {' + '.join(f"(CASE WHEN (list_sum(list_transform(words, w -> CASE WHEN (({duck_hash('w', 99)} >> {b}) & 1) = 1 THEN 1 ELSE -1 END))) > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS))}
              AS simhash
       FROM (SELECT source, string_split(text, ' ') AS words FROM documents)
     ),
@@ -3455,7 +3437,7 @@ def simhash_bit_bias_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bit_terms = " + ".join(
         f"(CASE WHEN AGGREGATE(words, 0, (acc, w) -> acc + "
-        f"CASE WHEN (SHIFTRIGHT({_spark_h32('w', 99)}, {b}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
+        f"CASE WHEN (SHIFTRIGHT({spark_hash('w', 99)}, {b}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
         f"THEN {1 << b} ELSE 0 END)"
         for b in range(_SIMHASH_BITS)
     )
@@ -3827,8 +3809,6 @@ _AGREE_DUCK_BITS = " + ".join(
 
 
 def _agree_oracle() -> str:
-    from instructions_mr_spark.queries._util import duck_h60
-
     return f"""
     WITH mm AS (
       SELECT GREATEST(10, COUNT(*) // {_AGREE_TARGET}) AS md FROM documents
@@ -3844,7 +3824,7 @@ def _agree_oracle() -> str:
              list_distinct(list_transform(range(1, len(words) - 1),
                i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
                AS tris,
-             list_transform(words, w -> {duck_h60("w", 7)}) AS hs
+             list_transform(words, w -> {duck_hash("w", 7, hex_digits=15)}) AS hs
       FROM s
     ),
     feat AS (
@@ -3885,8 +3865,6 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale), so the all-pairs comparison is bounded by
     construction; fingerprints reuse the staged one-digest-per-word
     SimHash pass; output is <= 8 rows."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     d = t(spark, sf_dir, "documents")
     n = d.count()
     mod = max(10, n // _AGREE_TARGET)
@@ -3910,7 +3888,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             " i -> concat(element_at(words, i), ' ',"
             " element_at(words, i + 1), ' ', element_at(words, i + 2))))"
             " AS tris",
-            f"TRANSFORM(words, w -> {spark_h60('w', 7)}) AS hs",
+            f"TRANSFORM(words, w -> {spark_hash('w', 7, hex_digits=15)}) AS hs",
         ).selectExpr("doc_id", "ws", "tris", f"{bit_terms} AS fp"),
     )
     a, b = feat.alias("a"), feat.alias("b")

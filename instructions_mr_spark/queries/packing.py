@@ -20,6 +20,9 @@ Scale: both shuffle once on the group key.  At 100 TB a single
 source's documents exceed one task — pre-shard the group key to
 (source, hash(doc_id) % K) and pack within shards; bin ids then get a
 shard prefix.  The fold itself is O(rows) per shard with O(1) state.
+Every hash here is the portable md5 digest of ``functions.spark_hash``
+/ ``functions.duck_hash``, so both engines pick the same shards,
+orders and masks.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -146,17 +150,9 @@ def pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PACK_SHARDS = 8  # K in the (source, h32(doc_id) % K) pre-shard
 
-# Shard-id fragments — the portable md5-derived 32-bit hash (see
-# llm_pipeline._spark_h32/_duck_h32) so Spark and DuckDB agree on the
-# shard every doc lands in.  h32 is non-negative, so % K == pmod.
-_SPARK_SHARD = (
-    "CAST(CONV(SUBSTRING(MD5(CAST(CAST(doc_id AS STRING) || '#shard' AS BINARY)),"
-    f" 1, 8), 16, 10) AS BIGINT) % {PACK_SHARDS}"
-)
-_DUCK_SHARD = (
-    "('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#shard'), 1, 8))::BIGINT"
-    f" % {PACK_SHARDS}"
-)
+# Shard ids use the portable 32-bit hash so Spark and DuckDB agree on
+# the shard every doc lands in.  h32 is non-negative, so % K == pmod.
+_DUCK_SHARD = duck_hash("CAST(doc_id AS VARCHAR) || '#shard'") + f" % {PACK_SHARDS}"
 
 
 @query(
@@ -196,7 +192,9 @@ def pack_greedy_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE walk per (source, shard)."""
     d = t(spark, sf_dir, "documents").select(
         "source",
-        F.expr(_SPARK_SHARD).cast("bigint").alias("shard"),
+        F.expr(spark_hash("CAST(doc_id AS STRING) || '#shard'") + f" % {PACK_SHARDS}")
+        .cast("bigint")
+        .alias("shard"),
         "doc_id",
         F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
         .cast("bigint")
@@ -229,7 +227,7 @@ def pack_greedy_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#77'), 1, 8))::BIGINT AS h
+             {duck_hash('CAST(doc_id AS VARCHAR)', 77)} AS h
       FROM documents
     ), c AS (
       SELECT doc_id, n_tokens,
@@ -264,12 +262,10 @@ def pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes the same stream with one plain window.
     tests/test_plans.py asserts the doc-level window exchange is
     bucket-keyed."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     d = t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens",
-        f"{_spark_h32('doc_id', 77)} AS h",
+        f"{spark_hash('doc_id', 77)} AS h",
     )
     d = d.withColumn("bucket", F.shiftright("h", 26))
     w_in = (
@@ -386,15 +382,13 @@ batch_padding_waste.__doc__ = (
 # h60(doc_id:pos) % 5 == 0 (~20%), and a masked token STARTS a span
 # iff pos == 0 or the previous position hashes unmasked — pure in-row
 # recomputation of the neighbor's coin, no window, no shuffle.
-from instructions_mr_spark.queries._util import duck_h60, spark_h60
-
 _MLM_SEED = 9041
 _MLM_POS = "doc_id || ':' || pos"
 _MLM_POS_PREV = "doc_id || ':' || (pos - 1)"
-_MLM_DUCK_MASK = "(" + duck_h60(_MLM_POS, _MLM_SEED) + ") % 5 = 0"
-_MLM_DUCK_PREV = "(" + duck_h60(_MLM_POS_PREV, _MLM_SEED) + ") % 5 = 0"
-_MLM_SPARK_MASK = "(" + spark_h60(_MLM_POS, _MLM_SEED) + ") % 5 = 0"
-_MLM_SPARK_PREV = "(" + spark_h60(_MLM_POS_PREV, _MLM_SEED) + ") % 5 = 0"
+_MLM_DUCK_MASK = "(" + duck_hash(_MLM_POS, _MLM_SEED, hex_digits=15) + ") % 5 = 0"
+_MLM_DUCK_PREV = "(" + duck_hash(_MLM_POS_PREV, _MLM_SEED, hex_digits=15) + ") % 5 = 0"
+_MLM_SPARK_MASK = "(" + spark_hash(_MLM_POS, _MLM_SEED, hex_digits=15) + ") % 5 = 0"
+_MLM_SPARK_PREV = "(" + spark_hash(_MLM_POS_PREV, _MLM_SEED, hex_digits=15) + ") % 5 = 0"
 
 
 @query(

@@ -12,8 +12,8 @@ operators oracle-checkable (the reference has no sampling at all;
 absence verified in SURVEY.md §2.6).
 
 The hash is the repo-wide portable md5-derived 32-bit hash
-(queries/llm_pipeline.py:149-154): identical fragments on both
-engines.
+(``functions.spark_hash`` / ``functions.duck_hash``): identical
+fragments on both engines.
 """
 
 from __future__ import annotations
@@ -22,8 +22,8 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import DEC_TOTAL, sum_d, t
-from instructions_mr_spark.queries.llm_pipeline import _duck_h32, _spark_h32
 from instructions_mr_spark.registry import query
 
 
@@ -32,7 +32,7 @@ from instructions_mr_spark.registry import query
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
-    WHERE {_duck_h32('o_orderkey', 7)} % 10 = 0
+    WHERE {duck_hash('o_orderkey', 7)} % 10 = 0
     ORDER BY o_orderkey
     """,
 )
@@ -43,7 +43,7 @@ def sample_hash_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (no shuffle, combines with column pruning)."""
     return (
         t(spark, sf_dir, "orders")
-        .filter(F.expr(f"{_spark_h32('o_orderkey', 7)} % 10 = 0"))
+        .filter(F.expr(f"{spark_hash('o_orderkey', 7)} % 10 = 0"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     )
@@ -57,7 +57,7 @@ def sample_hash_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split,
            COUNT(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM (SELECT n_chars, {_duck_h32('doc_id', 13)} % 100 AS b
+    FROM (SELECT n_chars, {duck_hash('doc_id', 13)} % 100 AS b
           FROM documents)
     GROUP BY 1 ORDER BY 1
     """,
@@ -68,7 +68,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a new doc never moves an old doc between splits, unlike
     randomSplit).  Returned as per-split stats; the split column
     itself is the reusable primitive."""
-    b = F.expr(f"{_spark_h32('doc_id', 13)} % 100")
+    b = F.expr(f"{spark_hash('doc_id', 13)} % 100")
     return (
         t(spark, sf_dir, "documents")
         .select(
@@ -89,7 +89,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            COUNT(*) AS n_total,
-           COUNT(*) FILTER (WHERE {_duck_h32('event_id', 21)} % 5 = 0)
+           COUNT(*) FILTER (WHERE {duck_hash('event_id', 21)} % 5 = 0)
              AS n_sample
     FROM events
     GROUP BY event_type ORDER BY event_type
@@ -102,7 +102,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the data — the conditional count shares the one aggregate
     scan (contrast sampleBy, which is per-partition-seeded and not
     reproducible)."""
-    in_sample = F.expr(f"{_spark_h32('event_id', 21)} % 5 = 0")
+    in_sample = F.expr(f"{spark_hash('event_id', 21)} % 5 = 0")
     return (
         t(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -121,7 +121,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
       SELECT o_custkey, o_totalprice,
              ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                ORDER BY {_duck_h32('o_orderkey', 31)}, o_orderkey)
+                                ORDER BY {duck_hash('o_orderkey', 31)}, o_orderkey)
                AS rk
       FROM orders)
     WHERE rk <= 3
@@ -136,7 +136,7 @@ def sample_reservoir_topup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-entity contributions in a training set (anti-spam / dedup by
     source).  Plan: one shuffle on the group key, WindowGroupLimit
     prunes to k per group before the full sort."""
-    w = F.expr(f"{_spark_h32('o_orderkey', 31)}")
+    w = F.expr(f"{spark_hash('o_orderkey', 31)}")
     from pyspark.sql import Window
 
     rk = F.row_number().over(
@@ -163,7 +163,7 @@ def sample_reservoir_topup(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, e.epoch,
              ROW_NUMBER() OVER (
                PARTITION BY e.epoch
-               ORDER BY {_duck_h32("CAST(doc_id AS VARCHAR) || '@' || CAST(e.epoch AS VARCHAR)", 11)}, doc_id
+               ORDER BY {duck_hash("CAST(doc_id AS VARCHAR) || '@' || CAST(e.epoch AS VARCHAR)", 11)}, doc_id
              ) AS shuffle_rank
       FROM documents, (SELECT 0 AS epoch UNION ALL SELECT 1) e
     )
@@ -180,7 +180,7 @@ def shuffle_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select("doc_id")
     epochs = d.sparkSession.range(2).select(F.col("id").cast("int").alias("epoch"))
     keyed = d.crossJoin(F.broadcast(epochs))
-    h = _spark_h32("CAST(doc_id AS STRING) || '@' || CAST(epoch AS STRING)", 11)
+    h = spark_hash("CAST(doc_id AS STRING) || '@' || CAST(epoch AS STRING)", 11)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("epoch").orderBy(F.expr(h), "doc_id")
@@ -195,7 +195,7 @@ def shuffle_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH ranked AS (
       SELECT source, doc_id,
              ROW_NUMBER() OVER (PARTITION BY source
-                                ORDER BY {_duck_h32('doc_id', 43)}, doc_id) AS rk,
+                                ORDER BY {duck_hash('doc_id', 43)}, doc_id) AS rk,
              COUNT(*) OVER (PARTITION BY source) AS n_before
       FROM documents
     ), nmin AS (SELECT MIN(n) AS n_min FROM (
@@ -229,7 +229,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.groupBy("source").count().agg(F.min("count").alias("n_min"))
     )
     rk = F.row_number().over(
-        W.partitionBy("source").orderBy(F.expr(_spark_h32("doc_id", 43)), "doc_id")
+        W.partitionBy("source").orderBy(F.expr(spark_hash("doc_id", 43)), "doc_id")
     )
     ranked = d.select("source", "doc_id").withColumn("rk", rk).crossJoin(
         F.broadcast(n_min)
@@ -380,13 +380,13 @@ def mixture_temperature_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- weighted reservoir sampling (A-Res)
 
-_ARES_DUCK = """
+_ARES_DUCK = f"""
     WITH keyed AS (
       SELECT o_orderkey,
              CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                AS weight_cents,
              CAST(CAST(ROUND(-LN(
-                   CAST((('0x' || substr(md5(o_orderkey || '#71'), 1, 15))::BIGINT
+                   CAST(({duck_hash('o_orderkey', 71, hex_digits=15)}
                          + 1) AS DOUBLE) / 1152921504606846976.0
                  ), 10) AS DECIMAL(12,10)) * 10000000000000000 AS BIGINT)
                // CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
@@ -417,10 +417,7 @@ def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, then a 20-row driver merge) — the same plan shape as
     topk_global, good at any corpus size."""
     o = t(spark, sf_dir, "orders")
-    h60 = (
-        "CAST(CONV(SUBSTRING(MD5(CAST(o_orderkey || '#71' AS BINARY)), 1, 15),"
-        " 16, 10) AS BIGINT)"
-    )
+    h60 = spark_hash("o_orderkey", 71, hex_digits=15)
     keyed = o.select(
         "o_orderkey",
         F.expr(
@@ -658,10 +655,10 @@ def contribution_bounding_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "group_kfold_assign",
-    oracle="""
+    oracle=f"""
     WITH folds AS (
       SELECT user_id, event_id,
-             ('0x' || substr(md5(user_id || '#41'), 1, 15))::BIGINT % 5 AS fold
+             {duck_hash('user_id', 41, hex_digits=15)} % 5 AS fold
       FROM events
     ),
     integrity AS (
@@ -693,12 +690,12 @@ def group_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fold is in-row hash arithmetic on the scan; one
     fold-keyed count plus a user-keyed distinct — both map-side
     combinable; 5 result rows."""
-    from instructions_mr_spark.queries._util import spark_h60, supersede_checkpoint
+    from instructions_mr_spark.queries._util import supersede_checkpoint
 
     folds = t(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_id",
-        f"({spark_h60('user_id', 41)}) % 5 AS fold",
+        f"({spark_hash('user_id', 41, hex_digits=15)}) % 5 AS fold",
     )
     folds = supersede_checkpoint("kfold_folds", folds)
     total = folds.agg(F.count(F.lit(1)).alias("tot"))

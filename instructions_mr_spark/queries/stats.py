@@ -18,6 +18,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import (
     DEC_PRICE,
     supersede_checkpoint,
@@ -271,13 +272,13 @@ def sketch_theta_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dataset_manifest",
-    oracle="""
+    oracle=f"""
     SELECT source,
            COUNT(*) AS n_docs,
            CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
            MIN(doc_id) AS min_doc_id,
            MAX(doc_id) AS max_doc_id,
-           CAST(SUM(('0x' || substr(md5(text), 1, 8))::BIGINT) AS BIGINT)
+           CAST(SUM({duck_hash('text')}) AS BIGINT)
              AS content_checksum
     FROM documents GROUP BY source
     """,
@@ -290,7 +291,7 @@ def dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity without re-shuffling anything.  Commutative sum means
     partial aggregation works and partition order never matters."""
     d = t(spark, sf_dir, "documents")
-    fp32 = F.expr("CAST(CONV(SUBSTRING(MD5(CAST(text AS BINARY)), 1, 8), 16, 10) AS BIGINT)")
+    fp32 = F.expr(spark_hash("text"))
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).cast("bigint").alias("n_tokens"),
@@ -1417,14 +1418,14 @@ _BLOOM_K = 3  # hash functions
     b AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 1),
     bits AS (
       SELECT DISTINCT
-             (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#' || CAST(j AS VARCHAR)),
-               1, 8))::BIGINT % {_BLOOM_M}) AS bit
+             ({duck_hash("CAST(doc_id AS VARCHAR) || '#' || CAST(j AS VARCHAR)")}
+               % {_BLOOM_M}) AS bit
       FROM a, (SELECT unnest([1, 2, 3]) AS j)
     ),
     probes AS (
       SELECT b.doc_id,
-             (('0x' || substr(md5(CAST(b.doc_id AS VARCHAR) || '#' || CAST(j AS VARCHAR)),
-               1, 8))::BIGINT % {_BLOOM_M}) AS bit
+             ({duck_hash("CAST(b.doc_id AS VARCHAR) || '#' || CAST(j AS VARCHAR)")}
+               % {_BLOOM_M}) AS bit
       FROM b, (SELECT unnest([1, 2, 3]) AS j)
     ),
     hits AS (
@@ -1461,7 +1462,7 @@ def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
     # hash-function index j folds into the hashed string ('id#j'),
     # mirroring the oracle's suffix — one md5 kernel, k logical hashes
-    h = "CAST(CONV(SUBSTRING(MD5(CAST(CAST(doc_id AS STRING) || '#' || CAST(j AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
+    h = spark_hash("CAST(doc_id AS STRING) || '#' || CAST(j AS STRING)")
     bits = (
         a.select("doc_id", j)
         .selectExpr(f"{h} % {_BLOOM_M} AS bit")
@@ -2772,9 +2773,7 @@ _CM_TOPK = 10
 
 
 def _cm_duck() -> str:
-    from instructions_mr_spark.queries._util import duck_h60
-
-    h = duck_h60("CAST(l_partkey AS VARCHAR)", "' || s.seed || '")
+    h = duck_hash("CAST(l_partkey AS VARCHAR) || '#' || s.seed", hex_digits=15)
     return f"""
     WITH kc AS (
       SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY 1
@@ -2816,13 +2815,11 @@ def sketch_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized, seeds x 1 narrow rows per key) — never by re-scanning rows
     per seed — and the {_CM_TOPK}-row top list joins the width-bounded
     sketch by broadcast."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     li = t(spark, sf_dir, "lineitem")
     kc = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
     kc = supersede_checkpoint("cm_key_counts", kc)
     seeds = spark.range(_CM_SEEDS).select(F.col("id").cast("int").alias("seed"))
-    h = spark_h60("CAST(l_partkey AS STRING)", "' || seed || '")
+    h = spark_hash("CAST(l_partkey AS STRING) || '#' || seed", hex_digits=15)
     keyed = kc.crossJoin(F.broadcast(seeds)).selectExpr(
         "l_partkey", "cnt", "seed", f"{h} % {_CM_WIDTH} AS bucket"
     )
@@ -2859,9 +2856,7 @@ _FH_BUCKETS = 4096
 
 
 def _fh_duck() -> str:
-    from instructions_mr_spark.queries._util import duck_h60
-
-    h = duck_h60("w", 91)
+    h = duck_hash("w", 91, hex_digits=15)
     return f"""
     WITH vocab AS (
       SELECT DISTINCT unnest(string_split(text, ' ')) AS w FROM documents
@@ -2896,15 +2891,13 @@ def feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one word-distinct aggregate is the corpus exchange;
     the bucket rollup and the summary run over bucket-bounded
     ({_FH_BUCKETS}-row) state."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     d = t(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
         .distinct()
     )
-    b = vocab.selectExpr(f"{spark_h60('w', 91)} % {_FH_BUCKETS} AS bucket").groupBy(
+    b = vocab.selectExpr(f"{spark_hash('w', 91, hex_digits=15)} % {_FH_BUCKETS} AS bucket").groupBy(
         "bucket"
     ).agg(F.count(F.lit(1)).alias("n_feat"))
     return b.agg(
@@ -3280,8 +3273,7 @@ _AMS_DUCK = f"""
     seeds AS (SELECT unnest(ARRAY{list(_AMS_SEEDS)}) AS seed),
     signed AS (
       SELECT s.seed,
-             CASE WHEN ('0x' || substr(md5(kc.l_partkey || '#' || s.seed),
-                                       1, 15))::BIGINT % 2 = 0
+             CASE WHEN {duck_hash("kc.l_partkey || '#' || s.seed", hex_digits=15)} % 2 = 0
                   THEN kc.c ELSE -kc.c END AS sc,
              kc.c
       FROM kc CROSS JOIN seeds s
@@ -3314,11 +3306,11 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     kc = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
     seeds = ", ".join(str(s) for s in _AMS_SEEDS)
     fan = kc.selectExpr("l_partkey", "c", f"explode(array({seeds})) AS seed")
+    sign = spark_hash("l_partkey || '#' || seed", hex_digits=15)
     signed = fan.selectExpr(
         "seed",
         "c",
-        "CASE WHEN CAST(CONV(SUBSTRING(MD5(CAST(l_partkey || '#' || seed"
-        " AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 2 = 0"
+        f"CASE WHEN {sign} % 2 = 0"
         " THEN c ELSE -c END AS sc",
     )
     return (
@@ -3854,13 +3846,12 @@ def _boot_sql(engine: str) -> str:
     with weight h(r, b) % 3 in {0,1,2} (mean 1 — a deterministic
     multinomial proxy), from the portable 60-bit md5 digest both
     engines compute byte-identically."""
-    from instructions_mr_spark.queries._util import duck_h60, spark_h60
-
-    h = (spark_h60 if engine == "spark" else duck_h60)(
+    h = (spark_hash if engine == "spark" else duck_hash)(
         "CAST(o_orderkey AS STRING) || ':' || CAST(b AS STRING)"
         if engine == "spark"
         else "CAST(o_orderkey AS VARCHAR) || ':' || CAST(b AS VARCHAR)",
         7,
+        hex_digits=15,
     )
     return f"({h}) % 3"
 
@@ -5820,9 +5811,6 @@ _KMV_K = 64
 _KMV_DOMAIN = 1 << 60
 
 
-from instructions_mr_spark.queries._util import duck_h60 as _u_duck_h60
-
-
 @query(
     "kmv_distinct_estimate",
     oracle=f"""
@@ -5836,7 +5824,7 @@ from instructions_mr_spark.queries._util import duck_h60 as _u_duck_h60
       )
     ),
     hashed AS (
-      SELECT source, {_u_duck_h60("w", 71)} AS h
+      SELECT source, {duck_hash("w", 71, hex_digits=15)} AS h
       FROM toks
     ),
     ranked AS (
@@ -5876,8 +5864,6 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers.  At 100 TB the sketch merges across partitions by
     construction — K BIGINTs per scope is the whole state."""
     d = t(spark, sf_dir, "documents")
-    from instructions_mr_spark.queries._util import spark_h60
-
     toks = (
         d.select("source", F.split("text", " ").alias("ws"))
         .filter(F.expr("size(ws) >= 2"))
@@ -5890,7 +5876,7 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w"),
         )
         .distinct()
-        .select("source", F.expr(spark_h60("w", 71)).alias("h"))
+        .select("source", F.expr(spark_hash("w", 71, hex_digits=15)).alias("h"))
     )
     w_src = Window.partitionBy("source").orderBy("h")
     ranked = toks.select(
@@ -5932,7 +5918,7 @@ kmv_distinct_estimate.__doc__ = (kmv_distinct_estimate.__doc__ or "").replace(
       )
     ),
     hashed AS (
-      SELECT source, {{h60}} AS h FROM toks
+      SELECT source, {duck_hash('w', 71, hex_digits=15)} AS h FROM toks
     ),
     per_source AS (
       SELECT source, h,
@@ -5953,7 +5939,7 @@ kmv_distinct_estimate.__doc__ = (kmv_distinct_estimate.__doc__ or "").replace(
            CAST(({_KMV_K} - 1) * CAST({_KMV_DOMAIN} AS HUGEINT)
                 // (SELECT h FROM kth) AS BIGINT) AS union_estimate,
            CAST((SELECT n_true FROM truth) AS BIGINT) AS true_union_distinct
-    """.replace("{h60}", _u_duck_h60("w", 71)),
+    """,
 )
 def kmv_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch MERGEABILITY — the property that makes the sketch a
@@ -5971,8 +5957,6 @@ def kmv_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge runs on |sources| x K = bounded rows (a TakeOrdered of
     K); truth is the one corpus-keyed distinct count (the thing the
     sketch exists to avoid — here it is the certification)."""
-    from instructions_mr_spark.queries._util import spark_h60
-
     d = t(spark, sf_dir, "documents")
     toks = (
         d.select("source", F.split("text", " ").alias("ws"))
@@ -5990,7 +5974,7 @@ def kmv_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = supersede_checkpoint(
         "kmv_union_toks", toks.select("source", "w")
     )
-    hashed = toks.select("source", F.expr(spark_h60("w", 71)).alias("h"))
+    hashed = toks.select("source", F.expr(spark_hash("w", 71, hex_digits=15)).alias("h"))
     w_src = Window.partitionBy("source").orderBy("h")
     sketches = hashed.select(
         "source", "h", F.row_number().over(w_src).alias("rnk")

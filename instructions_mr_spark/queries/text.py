@@ -14,11 +14,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.operators.arrow_map import map_columns
 from instructions_mr_spark.queries._util import (
-    duck_h60,
     kernel_floor,
-    spark_h60,
     supersede_checkpoint,
     t,
 )
@@ -200,11 +199,11 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(text) AS md5_full,
            md5(substring(lower(trim(text)), 1, 64)) AS md5_prefix64,
-           ('0x' || substr(md5(text), 1, 8))::BIGINT AS fp32
+           {duck_hash('text')} AS fp32
     FROM documents
     """,
 )
@@ -217,9 +216,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr("MD5(CAST(text AS BINARY))").alias("md5_full"),
         F.expr("MD5(CAST(SUBSTRING(LOWER(TRIM(text)), 1, 64) AS BINARY))").alias("md5_prefix64"),
-        F.expr(
-            "CAST(CONV(SUBSTRING(MD5(CAST(text AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
-        ).alias("fp32"),
+        F.expr(spark_hash("text")).alias("fp32"),
     )
 
 
@@ -808,20 +805,8 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 # portable 60-bit digest, never the gram TEXT — at 100 TB the gram
 # election exchange carries int64 keys (the docstring advice, now the
 # executed plan; r6 verdict item 5).  Seed 29 on both engines.
-_DUCK_GRAM_H60 = duck_h60("array_to_string(toks[i : i + 7], ' ')", 29)
-
-
-def _spark_gram_h60(g):
-    """Column twin of _DUCK_GRAM_H60 for an already-built gram string
-    (same bytes as queries/_util.spark_h60, Column API so it composes
-    inside F.transform lambdas)."""
-    return (
-        F.conv(
-            F.md5(F.concat(g, F.lit("#29")).cast("binary")).substr(1, 15),
-            16,
-            10,
-        ).cast("bigint")
-    )
+_DUCK_GRAM_H60 = duck_hash("array_to_string(toks[i : i + 7], ' ')", 29, hex_digits=15)
+_SPARK_GRAM_H60 = spark_hash("array_join(slice(toks, i, 8), ' ')", 29, hex_digits=15)
 
 
 @query(
@@ -880,12 +865,9 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     toked = d.select("doc_id", F.split("text", " ").alias("toks"))
-    gram_arr = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("toks") - 7, F.lit(0))),
-        lambda i: F.struct(
-            i.alias("pos"),
-            _spark_gram_h60(F.array_join(F.slice("toks", i, 8), " ")).alias("g"),
-        ),
+    gram_arr = F.expr(
+        "TRANSFORM(sequence(1, greatest(size(toks) - 7, 0)),"
+        f" i -> struct(i AS pos, {_SPARK_GRAM_H60} AS g))"
     )
     pos = toked.select("doc_id", F.explode(gram_arr).alias("p")).select(
         "doc_id", F.col("p.pos").alias("pos"), F.col("p.g").alias("g")
@@ -1020,12 +1002,9 @@ def _span_gram_pos(spark: SparkSession, sf_dir: str):
     d = t(spark, sf_dir, "documents")
     toked = d.select("doc_id", F.split("text", " ").alias("toks"))
     long_enough = toked.filter(F.size("toks") >= 8)
-    gram_arr = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - 7),
-        lambda i: F.struct(
-            i.alias("pos"),
-            _spark_gram_h60(F.array_join(F.slice("toks", i, 8), " ")).alias("g"),
-        ),
+    gram_arr = F.expr(
+        "TRANSFORM(sequence(1, size(toks) - 7),"
+        f" i -> struct(i AS pos, {_SPARK_GRAM_H60} AS g))"
     )
     pos = long_enough.select("doc_id", F.explode(gram_arr).alias("p")).select(
         "doc_id", F.col("p.pos").alias("pos"), F.col("p.g").alias("g")
@@ -1248,8 +1227,6 @@ _DSIR_SEED = 7
 
 
 def _dsir_oracle() -> str:
-    from instructions_mr_spark.queries.llm_pipeline import _duck_h32
-
     b = _DSIR_BUCKETS
     return f"""
     WITH grams AS (
@@ -1259,7 +1236,7 @@ def _dsir_oracle() -> str:
       FROM (SELECT doc_id, lang, string_split(text, ' ') AS words FROM documents)
       WHERE len(words) >= 2
     ), hashed AS (
-      SELECT doc_id, lang, {_duck_h32('g', _DSIR_SEED)} % {b} AS bkt FROM grams
+      SELECT doc_id, lang, {duck_hash('g', _DSIR_SEED)} % {b} AS bkt FROM grams
     ), tot AS (
       SELECT COUNT(*) AS n_r, COUNT(*) FILTER (WHERE lang = 'en') AS n_t
       FROM hashed
@@ -1297,8 +1274,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summed as DECIMAL (exact, order-free) per the float-stability
     convention.  Nothing here grows with corpus size except the two
     linear scans; the feature table stays 256 rows at 100 TB."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     b = _DSIR_BUCKETS
     d = t(spark, sf_dir, "documents")
     grams = (
@@ -1318,7 +1293,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hashed = grams.selectExpr(
-        "doc_id", "lang", f"{_spark_h32('g', _DSIR_SEED)} % {b} AS bkt"
+        "doc_id", "lang", f"{spark_hash('g', _DSIR_SEED)} % {b} AS bkt"
     )
     tot = hashed.agg(
         F.count(F.lit(1)).alias("n_r"),
@@ -2168,8 +2143,7 @@ _CDC_MOD = 8  # boundary when h32(word) % 8 == 0 -> ~8-word chunks
       SELECT doc_id,
              len(words) AS n_words,
              1 + len(list_filter(words[1:len(words)-1],
-                     w -> ('0x' || substr(md5(w || '#5'), 1, 8))::BIGINT
-                          % {_CDC_MOD} = 0)) AS n_chunks
+                     w -> {duck_hash('w', 5)} % {_CDC_MOD} = 0)) AS n_chunks
       FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
       WHERE len(words) > 0
     )
@@ -2193,10 +2167,8 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: boundary detection is IN-ROW array algebra on the
     scan (no explode); the histogram groups on the small
     chunks-per-doc domain."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
     d = t(spark, sf_dir, "documents")
-    h = _spark_h32("w", 5)
+    h = spark_hash("w", 5)
     per_doc = (
         d.select(
             "doc_id", F.split("text", " ").alias("words")
@@ -2383,7 +2355,7 @@ rank_fusion_borda.__doc__ = (rank_fusion_borda.__doc__ or "").replace(
     oracle=f"""
     WITH grams AS (
       SELECT DISTINCT doc_id, source,
-             {duck_h60('gram', 41)} AS gk
+             {duck_hash('gram', 41, hex_digits=15)} AS gk
       FROM (
         SELECT doc_id, source,
                unnest(list_distinct(list_transform(range(1, len(words) - 1),
@@ -2414,8 +2386,8 @@ def ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-visit budgets; boilerplate-heavy feeds decay toward zero.
 
     Scale shape: grams never shuffle as strings — each gram maps to
-    the portable 60-bit digest (spark_h60/duck_h60, the r7 digest-key
-    convention) at the scan, so the first-seen aggregate and the
+    the portable 60-bit digest (functions.spark_hash/duck_hash, the
+    r7 digest-key convention) at the scan, so the first-seen aggregate and the
     join back both exchange bare BIGINTs; the per-source rollup is
     map-side combinable.  Gram explosion is linear in corpus tokens
     and pipelined inside the scan stage."""
@@ -2442,7 +2414,7 @@ def ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("gram"),
         )
-        .selectExpr("doc_id", "source", f"{spark_h60('gram', 41)} AS gk")
+        .selectExpr("doc_id", "source", f"{spark_hash('gram', 41, hex_digits=15)} AS gk")
         .distinct()
     )
     first = grams.groupBy("gk").agg(F.min("doc_id").alias("first_doc"))
@@ -2549,7 +2521,7 @@ def filter_waterfall_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_vocab_overlap",
     oracle=f"""
     WITH v AS (
-      SELECT DISTINCT source, {duck_h60('tok', 43)} AS gk
+      SELECT DISTINCT source, {duck_hash('tok', 43, hex_digits=15)} AS gk
       FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
             FROM documents)
       WHERE tok <> ''
@@ -2591,7 +2563,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
-        .selectExpr("source", f"{spark_h60('tok', 43)} AS gk")
+        .selectExpr("source", f"{spark_hash('tok', 43, hex_digits=15)} AS gk")
         .distinct()
     )
     v = supersede_checkpoint("vocab_overlap_v", v)
@@ -2715,7 +2687,7 @@ def sentence_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "greedy_set_cover_sources",
     oracle=f"""
     WITH v AS MATERIALIZED (
-      SELECT DISTINCT source, {duck_h60('big', 47)} AS gk
+      SELECT DISTINCT source, {duck_hash('big', 47, hex_digits=15)} AS gk
       FROM (
         SELECT source,
                unnest(list_transform(range(1, len(words)),
@@ -2787,7 +2759,7 @@ def greedy_set_cover_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("big"),
         )
-        .selectExpr("source", f"{spark_h60('big', 47)} AS gk")
+        .selectExpr("source", f"{spark_hash('big', 47, hex_digits=15)} AS gk")
         .distinct()
     )
     v = supersede_checkpoint("setcover_v", v)
@@ -3091,7 +3063,7 @@ def charclass_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM w WHERE len(words) >= 2
     ),
     counts AS (
-      SELECT {duck_h60("gram", 8)} AS g, COUNT(*) AS c
+      SELECT {duck_hash("gram", 8, hex_digits=15)} AS g, COUNT(*) AS c
       FROM grams GROUP BY 1
     )
     SELECT CAST(LEAST(c, 11) AS BIGINT) AS c_bucket,
@@ -3125,7 +3097,7 @@ def good_turing_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gram")
     )
     counts = grams.groupBy(
-        F.expr(spark_h60("gram", 8)).alias("g")
+        F.expr(spark_hash("gram", 8, hex_digits=15)).alias("g")
     ).agg(F.count(F.lit(1)).alias("c"))
     return counts.groupBy(
         F.least(F.col("c"), F.lit(11)).cast("bigint").alias("c_bucket")
@@ -3143,7 +3115,7 @@ def good_turing_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ),
     freqs AS (
-      SELECT source, {duck_h60("w", 9)} AS wd, COUNT(*) AS c
+      SELECT source, {duck_hash("w", 9, hex_digits=15)} AS wd, COUNT(*) AS c
       FROM words WHERE w <> '' GROUP BY 1, 2
     )
     SELECT source,
@@ -3171,7 +3143,7 @@ def hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.col("w") != "")
     freqs = words.groupBy(
-        "source", F.expr(spark_h60("w", 9)).alias("wd")
+        "source", F.expr(spark_hash("w", 9, hex_digits=15)).alias("wd")
     ).agg(F.count(F.lit(1)).alias("c"))
     return freqs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("vocab"),
@@ -3314,10 +3286,9 @@ def _winnow_kernel():
     every value in DuckDB):
 
     * gram hash = first 8 md5 hex chars of the k-char substring,
-      parsed base-16 — identical to
-      CONV(SUBSTRING(MD5(CAST(. AS BINARY)), 1, 8), 16, 10) (md5 of
-      the UTF-8 bytes; Python str slicing is character-based like
-      substring());
+      parsed base-16 — identical to the 8-digit
+      functions.spark_hash/duck_hash of the gram (md5 of the UTF-8
+      bytes; Python str slicing is character-based like substring());
     * window min with the RIGHTMOST-occurrence tie rule via argmin
       over the reversed window;
     * fingerprint encoding pos * 2^32 + hash32, distinct, int64 sum
@@ -3377,7 +3348,7 @@ def _winnow_kernel():
     WITH g AS (
       SELECT doc_id,
              list_transform(range(1, length(substr(text, 1, {_WIN_CAP})) - {_WIN_K} + 2),
-               i -> ('0x' || substr(md5(substr(substr(text, 1, {_WIN_CAP}), i, {_WIN_K})), 1, 8))::BIGINT
+               i -> {duck_hash(f"substr(substr(text, 1, {_WIN_CAP}), i, {_WIN_K})")}
              ) AS gh
       FROM documents WHERE length(text) >= {_WIN_K}
     ),
@@ -4272,17 +4243,6 @@ mrr_at10_terms.__doc__ = (mrr_at10_terms.__doc__ or "").replace(
 # ---------------------------------- cross-doc CDC chunk dedup
 
 
-from instructions_mr_spark.queries._util import duck_h60 as _u_duck_h60
-
-
-def _h32_of(col: str, seed: int) -> str:
-    """Shared 32-bit digest fragment (delegates to the repo's portable
-    h32 so the convention lives in one place)."""
-    from instructions_mr_spark.queries.llm_pipeline import _spark_h32
-
-    return _spark_h32(col, seed)
-
-
 @query(
     "cdc_cross_doc_dedup",
     oracle=f"""
@@ -4295,8 +4255,7 @@ def _h32_of(col: str, seed: int) -> str:
     flagged AS (
       SELECT doc_id, w, pos,
              CASE WHEN pos > 1 AND pos < n
-                       AND ('0x' || substr(md5(w || '#5'), 1, 8))::BIGINT
-                           % {_CDC_MOD} = 0
+                       AND {duck_hash('w', 5)} % {_CDC_MOD} = 0
                   THEN 1 ELSE 0 END AS is_boundary  -- h32(w, seed 5)
       FROM words
     ),
@@ -4313,7 +4272,7 @@ def _h32_of(col: str, seed: int) -> str:
       FROM chunked GROUP BY 1, 2
     ),
     digests AS (
-      SELECT {_u_duck_h60("chunk_text", 9)} AS dg,
+      SELECT {duck_hash("chunk_text", 9, hex_digits=15)} AS dg,
              n_words
       FROM chunks
     ),
@@ -4355,7 +4314,6 @@ def cdc_cross_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern every dedup op here uses).  Output is one row of five
     integers."""
     d = t(spark, sf_dir, "documents")
-    from instructions_mr_spark.queries._util import spark_h60
     from pyspark.sql import Window
 
     words = d.select(
@@ -4369,7 +4327,7 @@ def cdc_cross_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos",
         F.expr(
             f"CASE WHEN pos > 1 AND pos < n AND"
-            f" {_h32_of('w', 5)} % {_CDC_MOD} = 0 THEN 1 ELSE 0 END"
+            f" {spark_hash('w', 5)} % {_CDC_MOD} = 0 THEN 1 ELSE 0 END"
         ).alias("is_boundary"),
     )
     w_doc = (
@@ -4391,7 +4349,7 @@ def cdc_cross_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_words"),
     )
     digests = chunks.select(
-        F.expr(spark_h60("chunk_text", 9)).alias("dg"), "n_words"
+        F.expr(spark_hash("chunk_text", 9, hex_digits=15)).alias("dg"), "n_words"
     )  # 60-bit digest: birthday-safe at corpus chunk counts
     uniq = digests.groupBy("dg").agg(
         F.max("n_words").alias("n_words"), F.count(F.lit(1)).alias("copies")

@@ -15,13 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.operators.urls import (
     PUBLIC_SUFFIXES_DEMO,
     normalize_url,
     registrable_domain,
     url_host,
 )
-from instructions_mr_spark.queries._util import duck_h60, spark_h60, t
+from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 from instructions_mr_spark.plans.guard import literal_df
 
@@ -89,7 +90,7 @@ def _synth_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     "url_dedup",
     oracle=f"""
     WITH {_DUCK_NORM_CTES}
-    SELECT {duck_h60('norm_url', 17)} AS url_h,
+    SELECT {duck_hash('norm_url', 17, hex_digits=15)} AS url_h,
            CAST(COUNT(*) AS BIGINT) AS n_dups,
            MIN(doc_id) AS kept_doc_id
     FROM norm GROUP BY 1
@@ -112,7 +113,7 @@ def url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _synth_urls(spark, sf_dir)
     return (
         u.select("doc_id", normalize_url("url").alias("norm_url"))
-        .select("doc_id", F.expr(spark_h60("norm_url", 17)).alias("url_h"))
+        .select("doc_id", F.expr(spark_hash("norm_url", 17, hex_digits=15)).alias("url_h"))
         .groupBy("url_h")
         .agg(
             F.count("*").alias("n_dups"),
@@ -134,9 +135,9 @@ def url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS domain,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(DISTINCT host) AS BIGINT) AS n_hosts,
-           CAST(COUNT(DISTINCT {duck_h60('norm_url', 17)}) AS BIGINT)
+           CAST(COUNT(DISTINCT {duck_hash('norm_url', 17, hex_digits=15)}) AS BIGINT)
              AS n_unique_urls,
-           CAST(COUNT(*) - COUNT(DISTINCT {duck_h60('norm_url', 17)}) AS BIGINT)
+           CAST(COUNT(*) - COUNT(DISTINCT {duck_hash('norm_url', 17, hex_digits=15)}) AS BIGINT)
              AS n_dup_urls
     FROM hosted GROUP BY 1
     """,
@@ -166,7 +167,7 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "domain",
             "host",
-            F.expr(spark_h60("norm_url", 17)).alias("url_h"),
+            F.expr(spark_hash("norm_url", 17, hex_digits=15)).alias("url_h"),
         )
         .groupBy("domain")
         .agg(
@@ -530,7 +531,7 @@ def robots_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_NORM_CTES},
     keyed AS (
       SELECT n.doc_id, md5(d.text) AS text_h,
-             {duck_h60('n.norm_url', 17)} AS url_h
+             {duck_hash('n.norm_url', 17, hex_digits=15)} AS url_h
       FROM norm n JOIN documents d ON n.doc_id = d.doc_id
     ),
     keep1 AS (
@@ -578,7 +579,7 @@ def dedup_cascade_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _synth_urls(spark, sf_dir)
     keyed = d.select("doc_id", md5("text").alias("text_h")).join(
         u.select("doc_id", normalize_url("url").alias("norm_url")).select(
-            "doc_id", F.expr(spark_h60("norm_url", 17)).alias("url_h")
+            "doc_id", F.expr(spark_hash("norm_url", 17, hex_digits=15)).alias("url_h")
         ),
         "doc_id",
     )

@@ -3,7 +3,7 @@
 The reference cannot stream at all (README.md:96-97 "Can Not
 Streaming E2E"); this module holds the engine's stateful streaming
 operators — sessionization with an event-time timeout, per-user stats
-via transformWithState or applyInPandasWithState, a running max — and
+via applyInPandasWithState, a running max — and
 its ``foreachBatch`` sinks, including an incremental MERGE emulation.
 ``session_funnel``'s batch twin,
 queries/streaming_batch.stream_funnel_sessions, is its DuckDB-oracled
@@ -191,76 +191,12 @@ def incremental_upsert_sink(
     return foreach_batch_sink(stream_df, fn, checkpoint, mode="append")
 
 
-def user_stats_tws(events: DataFrame) -> DataFrame:
+def user_stats_stateful(events: DataFrame) -> DataFrame:
     """Running per-user event/purchase counters via
-    ``transformWithStateInPandas`` — Spark 4.x's arbitrary-state API
-    (typed ValueState on the RocksDB state store, the successor to
-    ``applyInPandasWithState``).  Emits the updated totals for every
-    user touched by a micro-batch; the final emission per user must
-    equal the batch groupBy aggregate (tests/test_streaming.py).
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (the TWS-backing store) AND the
-    ``protobuf`` package (the TWS driver worker imports
-    google.protobuf; absent from this container, so the E2E test
-    skips itself when the import fails — the primary stateful path
-    remains ``applyInPandasWithState`` (session_funnel,
-    running_max_per_user), which has no such dependency)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("n_purchases", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("np", T.LongType()),
-        ]
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getValueState("counts", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = np_ = 0
-            if self._counts.exists():
-                n, np_ = self._counts.get()
-            for pdf in rows:
-                n += len(pdf)
-                np_ += int((pdf["event_type"] == "purchase").sum())
-            self._counts.update((n, np_))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "n_purchases": [np_]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def user_stats_apws(events: DataFrame) -> DataFrame:
-    """Protobuf-free twin of :func:`user_stats_tws`: identical running
-    per-user event/purchase counters, expressed with
-    ``applyInPandasWithState`` (no google.protobuf dependency, default
-    HDFS-backed state store).  Same output schema and same
-    final-emission semantics, so the two engines are interchangeable —
-    :func:`user_stats_stateful` picks whichever runs in the current
-    environment."""
+    ``applyInPandasWithState`` (default HDFS-backed state store).
+    Emits the updated totals for every user touched by a micro-batch;
+    the final emission per user equals the batch groupBy aggregate
+    (tests/test_streaming.py)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -297,18 +233,6 @@ def user_stats_apws(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def user_stats_stateful(events: DataFrame) -> DataFrame:
-    """Environment-adaptive stateful user stats: the TWS path
-    (RocksDB ValueState, Spark 4's arbitrary-state successor API) when
-    ``google.protobuf`` is importable, else the dependency-free
-    ``applyInPandasWithState`` twin."""
-    try:
-        import google.protobuf  # noqa: F401 - capability probe only
-    except ImportError:
-        return user_stats_apws(events)
-    return user_stats_tws(events)
 
 
 def running_max_per_user(events: DataFrame) -> DataFrame:

@@ -592,6 +592,19 @@ def test_checkpoint_free_only_in_guard():
     assert not offenders, f"checkpoint free outside plans/guard.py: {offenders}"
 
 
+def test_portable_digest_only_in_functions():
+    """The md5 -> BIGINT key digest is rendered only by
+    functions.spark_hash / duck_hash: both engines must produce the
+    same bits, so the format lives in one place instead of a hand-typed
+    copy per query."""
+    offenders = [
+        hit
+        for needle in ("substr(md5", "SUBSTRING(MD5", "F.substring(F.md5")
+        for hit in _package_lines_containing(needle, "functions/__init__.py")
+    ]
+    assert not offenders, f"portable digest outside functions/: {offenders}"
+
+
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):
     """The supersede_checkpoint certification must fire on a hinted
     unbounded subtree that would afterwards hide behind the

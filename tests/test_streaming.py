@@ -129,67 +129,13 @@ def test_stateful_running_max(spark, events_stream):
     assert (got["n"] == exp["n"]).all()
 
 
-def test_transform_with_state_user_stats(spark, events_stream):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API,
-    RocksDB-backed ValueState): final per-user emission must equal the
-    batch aggregate.  Skips when protobuf is absent (the TWS driver
-    worker imports google.protobuf; not in this container).
-
-    Vendoring investigated (r8, per the r7 verdict): the container has
-    no network (pip download resolves zero versions) and no protobuf
-    wheel anywhere on disk, and the generated StateMessage_pb2 needs
-    the full runtime (descriptor_pool + internal.builder + wire
-    format), which is not shimmable honestly — so this stays an env
-    gate, exercised wherever protobuf exists.  Re-affirmed round 12
-    (2026-08-16): `import google.protobuf` still raises and no wheel
-    is on disk; the protobuf-free applyInPandasWithState twin below
-    runs everywhere and covers the semantics."""
-    pytest.importorskip(
-        "google.protobuf", reason="TWS driver worker requires protobuf"
-    )
-    from instructions_mr_spark.streaming import user_stats_tws
-
-    stream, batch = events_stream
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = user_stats_tws(stream)
-        _run_to_completion(out, "tws_stats_t", "update")
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    got = {
-        r.user_id: (r.n, r.np)
-        for r in spark.sql(
-            "SELECT user_id, max(n_events) AS n, max(n_purchases) AS np "
-            "FROM tws_stats_t GROUP BY user_id"
-        ).collect()
-    }
-    want = {
-        r.user_id: (r.n, r.np)
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("np"),
-        )
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_user_stats_fallback_apws(spark, events_stream):
-    """The protobuf-free twin (applyInPandasWithState) must produce the
-    same final per-user stats as the batch aggregate — this runs in
-    EVERY environment, so user stats are never a silent skip."""
-    from instructions_mr_spark.streaming import user_stats_apws
+    """Stateful user stats (applyInPandasWithState) must produce the
+    same final per-user stats as the batch aggregate."""
+    from instructions_mr_spark.streaming import user_stats_stateful
 
     stream, batch = events_stream
-    out = user_stats_apws(stream)
+    out = user_stats_stateful(stream)
     _run_to_completion(out, "apws_stats_t", "update")
     got = {
         r.user_id: (r.n, r.np)
@@ -208,29 +154,6 @@ def test_user_stats_fallback_apws(spark, events_stream):
         .collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_user_stats_auto_engine_selection(spark, events_stream):
-    """user_stats_stateful must pick TWS exactly when protobuf imports,
-    and the apws twin otherwise — never raise, never silently no-op."""
-    from instructions_mr_spark import streaming as S
-
-    stream, _ = events_stream
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    called = {}
-    orig_tws, orig_apws = S.user_stats_tws, S.user_stats_apws
-    S.user_stats_tws = lambda df: called.setdefault("engine", "tws") and orig_tws(df)
-    S.user_stats_apws = lambda df: called.setdefault("engine", "apws") and orig_apws(df)
-    try:
-        S.user_stats_stateful(stream)
-    finally:
-        S.user_stats_tws, S.user_stats_apws = orig_tws, orig_apws
-    assert called["engine"] == ("tws" if has_protobuf else "apws")
 
 
 def test_stateful_session_funnel(spark, events_stream, sf_dir, tmp_path):
@@ -733,7 +656,7 @@ def test_stream_url_dedup(spark, sf_dir, tmp_path_factory):
     import os
 
     from instructions_mr_spark.operators.urls import normalize_url
-    from instructions_mr_spark.queries._util import spark_h60
+    from instructions_mr_spark.functions import spark_hash
     from instructions_mr_spark.queries.web import _URL_SYNTH
 
     raw = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -764,7 +687,7 @@ def test_stream_url_dedup(spark, sf_dir, tmp_path_factory):
                 normalize_url("url").alias("norm_url"),
             )
             .select(
-                "doc_id", "ts", F.expr(spark_h60("norm_url", 17)).alias("url_h")
+                "doc_id", "ts", F.expr(spark_hash("norm_url", 17, hex_digits=15)).alias("url_h")
             )
         )
 
