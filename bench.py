@@ -215,16 +215,8 @@ def main() -> None:
         try:
             with open(os.path.join(here, prev_files[-1]), encoding="utf-8") as fh:
                 prev = json.load(fh)
-            prev_q = prev_queries(prev)
-            for name, cur in timings.items():
-                if name in prev_q and prev_q[name] > 0:
-                    ratio = cur / prev_q[name]
-                    flag = "  <-- REGRESSION" if ratio > 1.5 else ""
-                    print(
-                        f"# delta vs {prev_files[-1]} {name}: "
-                        f"{prev_q[name]:.3f}s -> {cur:.3f}s ({ratio:.2f}x){flag}",
-                        file=sys.stderr,
-                    )
+            for line in delta_lines(prev_files[-1], prev, timings, sf):
+                print(line, file=sys.stderr)
         except (OSError, ValueError, AttributeError, TypeError, KeyError):
             pass
 
@@ -288,6 +280,26 @@ def prev_queries(prev: dict) -> dict:
         return {}
     q = parsed.get("queries", {})
     return q if isinstance(q, dict) else {}
+
+
+def delta_lines(prev_name: str, prev: dict, timings: dict, sf: str) -> list[str]:
+    """Per-query ``# delta vs <record>`` lines against a previous
+    round's bench record.  None when the record was taken at another
+    scale factor: an sf0.001 run read against an sf0.1 record shows
+    only the data size."""
+    if float(prev["sf"]) != float(sf):
+        return []
+    prev_q = prev_queries(prev)
+    out = []
+    for name, cur in timings.items():
+        if name in prev_q and prev_q[name] > 0:
+            ratio = cur / prev_q[name]
+            flag = "  <-- REGRESSION" if ratio > 1.5 else ""
+            out.append(
+                f"# delta vs {prev_name} {name}: "
+                f"{prev_q[name]:.3f}s -> {cur:.3f}s ({ratio:.2f}x){flag}"
+            )
+    return out
 
 
 def band(ratios: dict[str, float]) -> dict:

@@ -6,6 +6,22 @@ cast to DOUBLE), because summing doubles in engine-dependent order
 drifts in the low bits and can flip a rounded value at large
 magnitudes.  Fragments are shared verbatim between the Spark F.expr
 side and the DuckDB oracle string so the two sides cannot drift.
+
+Output-type rule: no query emits a DECIMAL column.  Spark's toPandas
+gives ``Decimal`` objects where DuckDB's ``.df()`` gives float64, so a
+DECIMAL output never compares equal across the engines
+(tests/test_oracle_types.py pins both sides).  A DECIMAL leaves a
+query as DOUBLE, and its value does not change:
+
+- by a plain CAST while its unscaled value stays below 2^53 at sf0.1.
+  There DuckDB 1.0's DECIMAL->DOUBLE cast is correctly rounded, as
+  Spark's always is;
+- through ``dec_double`` otherwise, and for every sum of squares or
+  products, whose size grows with the data.  DuckDB's cast misrounds
+  about a quarter of values above 2^53 at scale > 0, and some at scale
+  0 above 2^64.  Both engines render a DECIMAL as the same string and
+  parse a string to the nearest double.
+
 The portable md5 digest that dedup and sampling queries key on is
 rendered by ``functions.spark_hash`` / ``functions.duck_hash``.
 """
@@ -29,7 +45,15 @@ DEC_VALUE = "CAST(value AS DECIMAL(12,2))"
 
 
 def sum_d(fragment: str, alias: str) -> str:
+    """Plain-cast decimal sum: fragments up to scale 6 stay below 2^53
+    at sf0.1.  ``CHARGE`` (scale 10) does not; sum it with dec_double."""
     return f"CAST(SUM({fragment}) AS DOUBLE) AS {alias}"
+
+
+def dec_double(expr: str) -> str:
+    """A DECIMAL expression as the nearest DOUBLE, identically in Spark
+    SQL and DuckDB at any scale and magnitude (see the module rule)."""
+    return f"CAST(CAST({expr} AS STRING) AS DOUBLE)"
 
 
 def avg_d(fragment: str, alias: str) -> str:

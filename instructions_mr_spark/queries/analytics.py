@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.functions import duck_hash, spark_hash
-from instructions_mr_spark.queries._util import t
+from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
 
@@ -4726,7 +4726,7 @@ def markov_stationary_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------ log-log elasticity regression
 
-_ELAST_DUCK = """
+_ELAST_DUCK = f"""
     WITH per_part AS (
       SELECT p.p_brand, p.p_partkey,
              CAST(ROUND(LN(p.p_retailprice), 10) AS DECIMAL(12,10)) AS x,
@@ -4737,10 +4737,10 @@ _ELAST_DUCK = """
     )
     SELECT p_brand,
            CAST(COUNT(*) AS BIGINT) AS n_parts,
-           CAST(SUM(x) AS DECIMAL(38,10)) AS sx,
-           CAST(SUM(y) AS DECIMAL(38,10)) AS sy,
-           CAST(SUM(CAST(x * y AS DECIMAL(38,20))) AS DECIMAL(38,20)) AS sxy,
-           CAST(SUM(CAST(x * x AS DECIMAL(38,20))) AS DECIMAL(38,20)) AS sxx
+           CAST(SUM(x) AS DOUBLE) AS sx,
+           CAST(SUM(y) AS DOUBLE) AS sy,
+           {dec_double("SUM(CAST(x * y AS DECIMAL(38,20)))")} AS sxy,
+           {dec_double("SUM(CAST(x * x AS DECIMAL(38,20)))")} AS sxx
     FROM per_part
     GROUP BY 1 ORDER BY 1
 """
@@ -4754,9 +4754,10 @@ def elasticity_loglog_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader forms slope = (n*Sxy - Sx*Sy)/(n*Sxx - Sx^2) — the price
     elasticity a pricing team fits per brand.  Logs follow the 10-dp
     decimal convention (theil_index_terms) and the cross moments are
-    exact DECIMAL(38,20) products, so the emitted statistics are
-    bit-identical across engines (the final float division happens in
-    the reader, not the exchange).
+    exact DECIMAL(38,20) products; each exact sum leaves as the nearest
+    DOUBLE (the _util output-type rule: Sxy and Sxx pass 2^53 unscaled
+    and go through dec_double), so the emitted statistics are
+    bit-identical across engines.
 
     Scale shape: lineitem aggregates to per-part quantity first
     (map-side partial on l_partkey), the part join is dim-sized, and
@@ -4781,16 +4782,12 @@ def elasticity_loglog_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_part.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-            F.expr("CAST(SUM(x) AS DECIMAL(38,10)) AS sx"),
-            F.expr("CAST(SUM(y) AS DECIMAL(38,10)) AS sy"),
-            F.expr(
-                "CAST(SUM(CAST(x * y AS DECIMAL(38,20))) AS DECIMAL(38,20))"
-                " AS sxy"
-            ),
-            F.expr(
-                "CAST(SUM(CAST(x * x AS DECIMAL(38,20))) AS DECIMAL(38,20))"
-                " AS sxx"
-            ),
+            F.expr("CAST(SUM(x) AS DOUBLE) AS sx"),
+            F.expr("CAST(SUM(y) AS DOUBLE) AS sy"),
+            F.expr(dec_double("SUM(CAST(x * y AS DECIMAL(38,20)))"))
+            .alias("sxy"),
+            F.expr(dec_double("SUM(CAST(x * x AS DECIMAL(38,20)))"))
+            .alias("sxx"),
         )
         .orderBy("p_brand")
     )
@@ -6384,7 +6381,7 @@ def user_dominance_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "supplier_customer_hhi",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT l.l_suppkey, o.o_custkey,
              SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)) AS c
@@ -6394,8 +6391,7 @@ def user_dominance_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_suppkey,
            CAST(COUNT(*) AS BIGINT) AS n_customers,
            CAST(SUM(c) AS BIGINT) AS total_c,
-           CAST(SUM(CAST(c AS DECIMAL(38,0)) * c) AS DECIMAL(38,0))
-             AS sumsq_c,
+           {dec_double("SUM(CAST(c AS DECIMAL(38,0)) * c)")} AS sumsq_c,
            CAST(CAST(SUM(CAST(c AS DECIMAL(38,0)) * c) * 1000000 AS HUGEINT)
                 // CAST(CAST(SUM(c) AS DECIMAL(38,0)) * SUM(c) AS HUGEINT)
                 AS BIGINT) AS hhi_e6
@@ -6412,7 +6408,8 @@ def supplier_customer_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: lineitem->orders on the natural orderkey, one
     (supplier, customer) rollup, one supplier reduce — map-side
-    combinable; squares in DECIMAL(38,0)."""
+    combinable; squares in DECIMAL(38,0), whose sum leaves as the
+    nearest DOUBLE (the _util output-type rule)."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice"
     )
@@ -6429,8 +6426,7 @@ def supplier_customer_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spend.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("c").cast("bigint").alias("total_c"),
-        F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * c"))
-        .cast("decimal(38,0)")
+        F.expr(dec_double("SUM(CAST(c AS DECIMAL(38,0)) * c)"))
         .alias("sumsq_c"),
         F.expr(
             "CAST(SUM(CAST(c AS DECIMAL(38,0)) * c) * 1000000"

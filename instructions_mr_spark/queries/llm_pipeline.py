@@ -2237,7 +2237,7 @@ def quality_blocklist_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT {_PAIR_DOT.replace('ea.', 'a.').replace('eb.', 'b.')} AS cosine
       FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
     ), th(thr) AS (VALUES (0.5), (0.7), (0.8), (0.9))
-    SELECT th.thr,
+    SELECT CAST(th.thr AS DOUBLE) AS thr,
            CAST(COUNT(CASE WHEN p.cosine >= th.thr THEN 1 END) AS BIGINT)
              AS n_pairs
     FROM th CROSS JOIN pairs p

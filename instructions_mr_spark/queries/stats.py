@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from instructions_mr_spark.functions import duck_hash, spark_hash
 from instructions_mr_spark.queries._util import (
     DEC_PRICE,
+    dec_double,
     supersede_checkpoint,
     t,
     ts_epoch_seconds,
@@ -2630,7 +2631,7 @@ def spearman_rho_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------- Theil index
 
-_THEIL_DUCK = """
+_THEIL_DUCK = f"""
     WITH base AS (
       SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
                AS cents
@@ -2645,26 +2646,27 @@ _THEIL_DUCK = """
     )
     SELECT CAST(n AS BIGINT) AS n,
            CAST(total_cents AS BIGINT) AS total_cents,
-           CAST(sum_xlnx AS DECIMAL(38,10)) AS sum_xlnx,
-           CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10)
-                AS DECIMAL(28,10)) AS ln_total_r10,
-           CAST(ROUND(LN(CAST(n AS DOUBLE)), 10)
-                AS DECIMAL(28,10)) AS ln_n_r10
+           {dec_double("sum_xlnx")} AS sum_xlnx,
+           CAST(CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10)
+                     AS DECIMAL(28,10)) AS DOUBLE) AS ln_total_r10,
+           CAST(CAST(ROUND(LN(CAST(n AS DOUBLE)), 10)
+                     AS DECIMAL(28,10)) AS DOUBLE) AS ln_n_r10
     FROM s
 """
 
 
 @query("theil_index_terms", oracle=_THEIL_DUCK)
 def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil T inequality index of customer lifetime revenue, as exact
+    """Theil T inequality index of customer lifetime revenue, as
     sufficient statistics (the entropy-based complement of
     gini_revenue_inequality and hhi_concentration): T = sum(x ln x) /
-    total - (ln total - ln n), where the reader forms the final float
-    and the engines exchange only exact values.  Per-row logs follow
-    the column_entropy convention — ROUND(ln, 10) into DECIMAL so
-    sub-ulp libm differences between engines cannot reach the sum;
-    cents (< 2^31 per customer, DECIMAL(9,0)) times the 10-dp log
-    stays inside DECIMAL(38,10) exactly.
+    total - (ln total - ln n), where the reader forms the final float.
+    Per-row logs follow the column_entropy convention — ROUND(ln, 10)
+    into DECIMAL so sub-ulp libm differences between engines cannot
+    reach the sum; cents (< 2^31 per customer, DECIMAL(9,0)) times the
+    10-dp log stays inside DECIMAL(38,10) exactly.  The exact sum and
+    logs leave as the nearest DOUBLE (the _util output-type rule; the
+    sum's unscaled value passes 2^53, so it goes through dec_double).
 
     Scale shape: one custkey aggregate (map-side partial), one 1-row
     moment reduce — no window, no join."""
@@ -2686,10 +2688,11 @@ def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.selectExpr(
         "CAST(n AS BIGINT) AS n",
         "CAST(total_cents AS BIGINT) AS total_cents",
-        "CAST(sum_xlnx AS DECIMAL(38,10)) AS sum_xlnx",
-        "CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10) AS DECIMAL(28,10))"
-        " AS ln_total_r10",
-        "CAST(ROUND(LN(CAST(n AS DOUBLE)), 10) AS DECIMAL(28,10)) AS ln_n_r10",
+        f"{dec_double('sum_xlnx')} AS sum_xlnx",
+        "CAST(CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10)"
+        " AS DECIMAL(28,10)) AS DOUBLE) AS ln_total_r10",
+        "CAST(CAST(ROUND(LN(CAST(n AS DOUBLE)), 10) AS DECIMAL(28,10))"
+        " AS DOUBLE) AS ln_n_r10",
     )
 
 
@@ -2968,8 +2971,9 @@ _KM_DUCK = """
            CAST(n_risk AS BIGINT) AS n_risk,
            CAST(n_events AS BIGINT) AS n_events,
            CASE WHEN SUM(hit_zero) OVER (ORDER BY tenure_days) > 0 THEN NULL
-                ELSE CAST(SUM(ln1f) OVER (ORDER BY tenure_days)
-                          AS DECIMAL(38,10)) END AS ln_surv_r10
+                ELSE CAST(CAST(SUM(ln1f) OVER (ORDER BY tenure_days)
+                               AS DECIMAL(38,10)) AS DOUBLE) END
+             AS ln_surv_r10
     FROM factors
     WHERE n_events > 0
     ORDER BY tenure_days
@@ -2988,7 +2992,8 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-dp decimal log convention (theil_index_terms) keeps sub-ulp
     libm differences out of the cumulative sum, and ln_surv goes NULL
     from the first time the risk set is exhausted (S(t) = 0, where the
-    log diverges).
+    log diverges).  The running sum is exact in DECIMAL(38,10) and
+    leaves as the nearest DOUBLE (the _util output-type rule).
 
     Scale shape: one custkey aggregate, one tenure-histogram aggregate
     (value-domain bounded: tenure <= calendar span, so the table is a
@@ -3069,7 +3074,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_events").cast("bigint").alias("n_events"),
             F.expr(
                 "CASE WHEN _cum_zero > 0 THEN NULL"
-                " ELSE CAST(_cum_ln AS DECIMAL(38,10)) END"
+                " ELSE CAST(CAST(_cum_ln AS DECIMAL(38,10)) AS DOUBLE) END"
             ).alias("ln_surv_r10"),
         )
         .orderBy("tenure_days")
@@ -3387,7 +3392,7 @@ def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "moments34_terms",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT l_returnflag,
              CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT) AS qc
@@ -3396,23 +3401,23 @@ def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(qc) AS BIGINT) AS s1,
-           CAST(SUM(CAST(qc AS DECIMAL(38,0)) * qc) AS DECIMAL(38,0)) AS s2,
-           CAST(SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc) AS DECIMAL(38,0))
-             AS s3,
-           CAST(SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc * qc)
-                AS DECIMAL(38,0)) AS s4
+           {dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc)")} AS s2,
+           {dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc)")} AS s3,
+           {dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc * qc)")} AS s4
     FROM c GROUP BY l_returnflag
     """,
 )
 def moments34_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact raw moments through order 4 of line quantity (cents) per
-    return flag: skewness and kurtosis assemble from n, s1..s4 by the
-    standard central-moment identities at whatever precision the
-    consumer wants — the engine never emits a float, so both engines
-    agree bit-for-bit where Spark's built-in skewness()/kurtosis()
-    (streaming float central moments) and DuckDB's would differ in
-    low bits.  The shape screen behind outlier-heavy-tail detection
-    and normality checks on any metric column.
+    """Raw moments through order 4 of line quantity (cents) per return
+    flag: skewness and kurtosis assemble from n, s1..s4 by the
+    standard central-moment identities.  The power sums are exact and
+    leave through dec_double as the nearest DOUBLE (the _util
+    output-type rule; s4 passes BIGINT at sf0.1), so both engines agree
+    bit-for-bit
+    where Spark's built-in skewness()/kurtosis() (streaming float
+    central moments) and DuckDB's would differ in low bits.  The
+    shape screen behind outlier-heavy-tail detection and normality
+    checks on any metric column.
 
     Scale shape: ONE map-side-combinable aggregate on the natural
     flag key; all four power sums accumulate in DECIMAL(38,0) —
@@ -3425,14 +3430,10 @@ def moments34_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("qc").cast("bigint").alias("s1"),
-        F.sum(F.expr("CAST(qc AS DECIMAL(38,0)) * qc"))
-        .cast("decimal(38,0)")
-        .alias("s2"),
-        F.sum(F.expr("CAST(qc AS DECIMAL(38,0)) * qc * qc"))
-        .cast("decimal(38,0)")
+        F.expr(dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc)")).alias("s2"),
+        F.expr(dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc)"))
         .alias("s3"),
-        F.sum(F.expr("CAST(qc AS DECIMAL(38,0)) * qc * qc * qc"))
-        .cast("decimal(38,0)")
+        F.expr(dec_double("SUM(CAST(qc AS DECIMAL(38,0)) * qc * qc * qc)"))
         .alias("s4"),
     )
 
@@ -3552,18 +3553,18 @@ def weighted_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_REV_C = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
+
+
 @query(
     "anova_two_way_terms",
-    oracle="""
+    oracle=f"""
     SELECT CAST(FLOOR((l_quantity - 1) / 10) AS BIGINT) AS qty_band,
            CAST(FLOOR(l_discount * 20) AS BIGINT) AS disc_band,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS s_rev,
-           CAST(SUM(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
-                         AS DECIMAL(38,0))
-                    * CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                AS DECIMAL(38,0)) AS ss_rev
+           CAST(SUM({_REV_C}) AS BIGINT) AS s_rev,
+           {dec_double(f"SUM(CAST({_REV_C} AS DECIMAL(38,0)) * {_REV_C})")}
+             AS ss_rev
     FROM lineitem GROUP BY 1, 2
     """,
 )
@@ -3571,14 +3572,13 @@ def anova_two_way_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-way ANOVA input sheet: exact count / sum / sum-of-squares
     of line revenue (cents) in every (quantity band x discount band)
     cell — main effects, the interaction term and all the F
-    statistics assemble from these cells by exact arithmetic, which
-    is how you test 'does discount response DEPEND on order size'
-    without ever shipping a float between engines.  The cell grid is
-    the histogram_2d_grid bucketing carrying second moments.
+    statistics assemble from these cells, which is how you test 'does
+    discount response DEPEND on order size'.  The cell grid is the
+    histogram_2d_grid bucketing carrying second moments.
 
     Scale shape: ONE map-side-combinable aggregate onto the bounded
-    ~5x3 cell grid; squares accumulate in DECIMAL(38,0)."""
-    cents = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
+    ~5x3 cell grid; squares accumulate in DECIMAL(38,0) and leave as
+    the nearest DOUBLE (the _util output-type rule)."""
     return (
         t(spark, sf_dir, "lineitem")
         .groupBy(
@@ -3591,10 +3591,10 @@ def anova_two_way_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.expr(f"CAST(SUM({cents}) AS BIGINT)").alias("s_rev"),
-            F.sum(F.expr(f"CAST({cents} AS DECIMAL(38,0)) * {cents}"))
-            .cast("decimal(38,0)")
-            .alias("ss_rev"),
+            F.expr(f"CAST(SUM({_REV_C}) AS BIGINT)").alias("s_rev"),
+            F.expr(
+                dec_double(f"SUM(CAST({_REV_C} AS DECIMAL(38,0)) * {_REV_C})")
+            ).alias("ss_rev"),
         )
     )
 
@@ -3655,7 +3655,7 @@ def daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ratio_metric_terms",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id,
              user_id % 2 AS arm,
@@ -3668,10 +3668,10 @@ def daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(arm AS BIGINT) AS arm,
            CAST(COUNT(*) AS BIGINT) AS n_users,
            CAST(SUM(x) AS BIGINT) AS s_x,
-           CAST(SUM(CAST(x AS DECIMAL(38,0)) * x) AS DECIMAL(38,0)) AS s_xx,
+           {dec_double("SUM(CAST(x AS DECIMAL(38,0)) * x)")} AS s_xx,
            CAST(SUM(y) AS BIGINT) AS s_y,
-           CAST(SUM(CAST(y AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS s_yy,
-           CAST(SUM(CAST(x AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS s_xy
+           {dec_double("SUM(CAST(y AS DECIMAL(38,0)) * y)")} AS s_yy,
+           {dec_double("SUM(CAST(x AS DECIMAL(38,0)) * y)")} AS s_xy
     FROM per_user GROUP BY arm
     """,
 )
@@ -3686,8 +3686,9 @@ def ratio_metric_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     because users, not events, are the randomization unit).
 
     Scale shape: one user-keyed aggregate (the corpus exchange), one
-    2-row arm rollup — all map-side combinable; squares in
-    DECIMAL(38,0)."""
+    2-row arm rollup — all map-side combinable; squares accumulate in
+    DECIMAL(38,0) and leave as the nearest DOUBLE (the _util
+    output-type rule)."""
     per_user = (
         t(spark, sf_dir, "events")
         .groupBy("user_id", (F.col("user_id") % 2).alias("arm"))
@@ -3703,22 +3704,16 @@ def ratio_metric_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_user.groupBy(F.col("arm").cast("bigint").alias("arm")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.sum("x").cast("bigint").alias("s_x"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0)) * x"))
-        .cast("decimal(38,0)")
-        .alias("s_xx"),
+        F.expr(dec_double("SUM(CAST(x AS DECIMAL(38,0)) * x)")).alias("s_xx"),
         F.sum("y").cast("bigint").alias("s_y"),
-        F.sum(F.expr("CAST(y AS DECIMAL(38,0)) * y"))
-        .cast("decimal(38,0)")
-        .alias("s_yy"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0)) * y"))
-        .cast("decimal(38,0)")
-        .alias("s_xy"),
+        F.expr(dec_double("SUM(CAST(y AS DECIMAL(38,0)) * y)")).alias("s_yy"),
+        F.expr(dec_double("SUM(CAST(x AS DECIMAL(38,0)) * y)")).alias("s_xy"),
     )
 
 
 @query(
     "feature_target_corr_terms",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT CAST(FLOOR(l_quantity * 10000 + 0.5) AS BIGINT) AS f_qty,
              CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT) AS f_disc,
@@ -3735,9 +3730,9 @@ def ratio_metric_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(x) AS BIGINT) AS s_x,
            CAST(SUM(y) AS BIGINT) AS s_y,
-           CAST(SUM(CAST(x AS DECIMAL(38,0)) * x) AS DECIMAL(38,0)) AS s_xx,
-           CAST(SUM(CAST(y AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS s_yy,
-           CAST(SUM(CAST(x AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS s_xy
+           {dec_double("SUM(CAST(x AS DECIMAL(38,0)) * x)")} AS s_xx,
+           {dec_double("SUM(CAST(y AS DECIMAL(38,0)) * y)")} AS s_yy,
+           {dec_double("SUM(CAST(x AS DECIMAL(38,0)) * y)")} AS s_xy
     FROM long GROUP BY feature
     """,
 )
@@ -3752,8 +3747,9 @@ def feature_target_corr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass instead of N jobs.
 
     Scale shape: per-row stack (3 rows out per input row, no
-    shuffle), one 3-key map-side-combinable rollup; squares in
-    DECIMAL(38,0)."""
+    shuffle), one 3-key map-side-combinable rollup; squares accumulate
+    in DECIMAL(38,0) and leave as the nearest DOUBLE (the _util
+    output-type rule)."""
     base = t(spark, sf_dir, "lineitem").select(
         F.expr("CAST(FLOOR(l_quantity * 10000 + 0.5) AS BIGINT)").alias(
             "f_qty"
@@ -3775,15 +3771,9 @@ def feature_target_corr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s_x"),
         F.sum("y").cast("bigint").alias("s_y"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0)) * x"))
-        .cast("decimal(38,0)")
-        .alias("s_xx"),
-        F.sum(F.expr("CAST(y AS DECIMAL(38,0)) * y"))
-        .cast("decimal(38,0)")
-        .alias("s_yy"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0)) * y"))
-        .cast("decimal(38,0)")
-        .alias("s_xy"),
+        F.expr(dec_double("SUM(CAST(x AS DECIMAL(38,0)) * x)")).alias("s_xx"),
+        F.expr(dec_double("SUM(CAST(y AS DECIMAL(38,0)) * y)")).alias("s_yy"),
+        F.expr(dec_double("SUM(CAST(x AS DECIMAL(38,0)) * y)")).alias("s_xy"),
     )
 
 

@@ -567,12 +567,12 @@ def stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT hour_idx,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST((MIN(struct_pack(t := ts_us, e := event_id, v := v))).v
-                AS DECIMAL(12,4)) AS open,
-           CAST(MAX(v) AS DECIMAL(12,4)) AS high,
-           CAST(MIN(v) AS DECIMAL(12,4)) AS low,
+                AS DOUBLE) AS open,
+           CAST(MAX(v) AS DOUBLE) AS high,
+           CAST(MIN(v) AS DOUBLE) AS low,
            CAST((MAX(struct_pack(t := ts_us, e := event_id, v := v))).v
-                AS DECIMAL(12,4)) AS close,
-           CAST(SUM(v) AS DECIMAL(38,4)) AS volume
+                AS DOUBLE) AS close,
+           CAST(SUM(v) AS DOUBLE) AS volume
     FROM e GROUP BY 1
     """,
 )
@@ -583,8 +583,9 @@ def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lexicographically smallest/largest (ts, event_id) via MIN/MAX
     over a STRUCT — a deterministic argmin even when two events share
     a timestamp, identical on both engines (never min_by, whose tie
-    choice is unspecified).  Values are DECIMAL(12,4)-exact; the
-    volume sum is order-free DECIMAL.
+    choice is unspecified).  Values are DECIMAL(12,4)-exact and the
+    volume sum is order-free DECIMAL; all five leave as the nearest
+    DOUBLE (the _util output-type rule).
 
     Scale shape: ONE hour-keyed hash aggregate with full map-side
     partial combine (min/max/sum of narrow structs) — no window, no
@@ -605,11 +606,11 @@ def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = F.struct("ts_us", "event_id", "v")
     return e.groupBy("hour_idx").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.min(s).getField("v").cast("decimal(12,4)").alias("open"),
-        F.max("v").cast("decimal(12,4)").alias("high"),
-        F.min("v").cast("decimal(12,4)").alias("low"),
-        F.max(s).getField("v").cast("decimal(12,4)").alias("close"),
-        F.sum("v").cast("decimal(38,4)").alias("volume"),
+        F.min(s).getField("v").cast("double").alias("open"),
+        F.max("v").cast("double").alias("high"),
+        F.min("v").cast("double").alias("low"),
+        F.max(s).getField("v").cast("double").alias("close"),
+        F.sum("v").cast("double").alias("volume"),
     )
 
 

@@ -27,7 +27,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.queries._util import t
+from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
 # Daily orders revenue in whole dollars (BIGINT-safe squares through
@@ -227,7 +227,7 @@ def rsi_cutler_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(x AS BIGINT) AS x,
            CAST(n_win AS BIGINT) AS n_win,
            CAST(s_win AS BIGINT) AS s_win,
-           CAST(ss_win AS DECIMAL(38,0)) AS ss_win,
+           {dec_double("ss_win")} AS ss_win,
            CAST(CAST(n_win * x - s_win AS DECIMAL(19,0))
                   * CAST(n_win * x - s_win AS DECIMAL(19,0))
                 > 4 * (CAST(n_win AS DECIMAL(19,0)) * ss_win
@@ -243,10 +243,11 @@ def bollinger_breach_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     The breach test is the all-integer rearrangement
     (n*x - s)^2 > 4 * (n*ss - s^2) — both sides DECIMAL(38,0)-exact,
     so the boolean can never flip between engines the way a float
-    z-score comparison could; the emitted moments let a consumer
-    recover mean and sigma at any precision.  Holds to 100 TB: with
-    whole-dollar days up to ~1e10, (n*x - s)^2 stays under 1e23 and
-    n*ss under ~1e23, inside DECIMAL(38).
+    z-score comparison could; the emitted moments (ss_win as the
+    nearest DOUBLE, the _util output-type rule) let a consumer recover
+    mean and sigma.  Holds to 100 TB: with whole-dollar days up to
+    ~1e10, (n*x - s)^2 stays under 1e23 and n*ss under ~1e23, inside
+    DECIMAL(38).
 
     Scale shape: day-keyed aggregate (the corpus exchange), then a
     partitionless RANGE window over the calendar-bounded day grid
@@ -265,7 +266,7 @@ def bollinger_breach_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").cast("bigint").alias("x"),
         F.col("n_win").cast("bigint").alias("n_win"),
         F.col("s_win").cast("bigint").alias("s_win"),
-        F.col("ss0").cast("decimal(38,0)").alias("ss_win"),
+        F.expr(dec_double("ss0")).alias("ss_win"),
         F.expr(
             "CAST(CAST(n_win * x - s_win AS DECIMAL(19,0))"
             "       * CAST(n_win * x - s_win AS DECIMAL(19,0))"
@@ -570,7 +571,7 @@ def updown_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "poisson_dispersion_audit",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
@@ -580,7 +581,7 @@ def updown_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_days,
            CAST(SUM(n) AS BIGINT) AS s_n,
-           CAST(SUM(CAST(n AS DECIMAL(38,0)) * n) AS DECIMAL(38,0)) AS s_nn,
+           {dec_double("SUM(CAST(n AS DECIMAL(38,0)) * n)")} AS s_nn,
            CAST(CAST((COUNT(*) * SUM(CAST(n AS DECIMAL(38,0)) * n)
                       - CAST(SUM(n) AS DECIMAL(38,0)) * SUM(n)) * 1000000
                      AS HUGEINT)
@@ -620,9 +621,7 @@ def poisson_dispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.sum("n").cast("bigint").alias("s_n"),
-        F.sum(F.expr("CAST(n AS DECIMAL(38,0)) * n"))
-        .cast("decimal(38,0)")
-        .alias("s_nn"),
+        F.expr(dec_double("SUM(CAST(n AS DECIMAL(38,0)) * n)")).alias("s_nn"),
         F.expr(
             "CAST((COUNT(1) * SUM(CAST(n AS DECIMAL(38,0)) * n)"
             "      - CAST(SUM(n) AS DECIMAL(38,0)) * SUM(n)) * 1000000"

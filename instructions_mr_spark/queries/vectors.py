@@ -8,9 +8,10 @@ whether inner-product and cosine retrieval differ materially).
 
 All three follow the engine's integer-moments convention: embeddings
 quantize to 1e3 fixed point FIRST, every downstream moment is exact
-BIGINT/DECIMAL arithmetic, and anything irrational (sqrt, cosine) is
-left to the consumer with its exact numerator/denominator terms
-emitted — so both engines agree bit-for-bit at any scale.
+BIGINT/DECIMAL arithmetic (a DECIMAL sum leaves as the nearest DOUBLE,
+the _util output-type rule), and anything irrational (sqrt, cosine) is
+left to the consumer with its numerator/denominator terms emitted — so
+both engines agree bit-for-bit at any scale.
 
 Reference parity note: the reference engine (instructions-mr,
 /root/reference — a sequential LLM prompt-pipeline, ~1.1k LoC) has no
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.queries._util import t
+from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
 _QE_SPARK = (
@@ -71,8 +72,7 @@ def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT a.i, b.i AS j,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(a.x AS DECIMAL(38,0)) * b.x) AS DECIMAL(38,0))
-             AS s_xy,
+           {dec_double("SUM(CAST(a.x AS DECIMAL(38,0)) * b.x)")} AS s_xy,
            CAST(SUM(a.x) AS BIGINT) AS s_x,
            CAST(SUM(b.x) AS BIGINT) AS s_y
     FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND b.i >= a.i
@@ -88,7 +88,7 @@ def embedding_covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     entangled dimensions before trusting PCA or whitening on it.
     Cross products accumulate in DECIMAL(38,0): 1e12 rows x (4e3)^2
     per-row magnitude stays far inside the 38-digit envelope where
-    BIGINT would overflow.
+    BIGINT would overflow.  The sum leaves as the nearest DOUBLE.
 
     Scale shape: one posexplode (d rows per vector) and a SELF-join
     co-located on vec_id (the equi-key; the i<=j predicate filters
@@ -104,8 +104,7 @@ def embedding_covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.i").alias("i"), F.col("b.i").alias("j")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.expr("CAST(a.x AS DECIMAL(38,0)) * b.x"))
-        .cast("decimal(38,0)")
+        F.expr(dec_double("SUM(CAST(a.x AS DECIMAL(38,0)) * b.x)"))
         .alias("s_xy"),
         F.sum("a.x").cast("bigint").alias("s_x"),
         F.sum("b.x").cast("bigint").alias("s_y"),
@@ -135,12 +134,9 @@ def embedding_covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a.label AS label_a, b.label AS label_b,
            CAST(na.n_vecs AS BIGINT) AS n_a,
            CAST(nb.n_vecs AS BIGINT) AS n_b,
-           CAST(SUM(CAST(a.s AS DECIMAL(38,0)) * b.s) AS DECIMAL(38,0))
-             AS dot_q,
-           CAST(SUM(CAST(a.s AS DECIMAL(38,0)) * a.s) AS DECIMAL(38,0))
-             AS na2_q,
-           CAST(SUM(CAST(b.s AS DECIMAL(38,0)) * b.s) AS DECIMAL(38,0))
-             AS nb2_q
+           {dec_double("SUM(CAST(a.s AS DECIMAL(38,0)) * b.s)")} AS dot_q,
+           {dec_double("SUM(CAST(a.s AS DECIMAL(38,0)) * a.s)")} AS na2_q,
+           {dec_double("SUM(CAST(b.s AS DECIMAL(38,0)) * b.s)")} AS nb2_q
     FROM sums a
     JOIN sums b ON a.i = b.i AND a.label < b.label
     JOIN n na ON na.label = a.label
@@ -181,14 +177,11 @@ def centroid_affinity_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.label").alias("label_a"), F.col("b.label").alias("label_b")
         )
         .agg(
-            F.sum(F.expr("CAST(a.s AS DECIMAL(38,0)) * b.s"))
-            .cast("decimal(38,0)")
+            F.expr(dec_double("SUM(CAST(a.s AS DECIMAL(38,0)) * b.s)"))
             .alias("dot_q"),
-            F.sum(F.expr("CAST(a.s AS DECIMAL(38,0)) * a.s"))
-            .cast("decimal(38,0)")
+            F.expr(dec_double("SUM(CAST(a.s AS DECIMAL(38,0)) * a.s)"))
             .alias("na2_q"),
-            F.sum(F.expr("CAST(b.s AS DECIMAL(38,0)) * b.s"))
-            .cast("decimal(38,0)")
+            F.expr(dec_double("SUM(CAST(b.s AS DECIMAL(38,0)) * b.s)"))
             .alias("nb2_q"),
         )
         .join(F.broadcast(na), F.col("label_a") == F.col("la"))

@@ -60,6 +60,31 @@ class TestPrevQueries:
         assert bench.prev_queries(prev) == {}
 
 
+class TestDeltaLines:
+    PREV = {"sf": 0.1, "parsed": {"sf": 0.1, "queries": {"q1": 2.0}}}
+
+    def test_other_sf_record_gives_no_delta_lines(self):
+        # an sf0.001 run against the sf0.1 round record: the ratio would
+        # read the data size, not the code
+        assert bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 0.5}, "0.001") == []
+
+    def test_same_sf_record_gives_delta_lines(self):
+        lines = bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 4.0, "q9": 1.0}, "0.1")
+        assert lines == [
+            "# delta vs BENCH_r13.json q1: 2.000s -> 4.000s (2.00x)  <-- REGRESSION"
+        ]
+
+    def test_committed_record_against_other_sf_run(self):
+        # the committed round records keep sf at the top level
+        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        with open(os.path.join(here, "BENCH_r13.json"), encoding="utf-8") as fh:
+            prev = json.load(fh)
+        timings = {name: 1.0 for name in bench.prev_queries(prev)}
+        assert timings
+        assert bench.delta_lines("BENCH_r13.json", prev, timings, "0.001") == []
+        assert len(bench.delta_lines("BENCH_r13.json", prev, timings, "0.1")) == len(timings)
+
+
 class TestFinalLineLength:
     def _worst_case_timings(self):
         # every headline query at max realistic width: 4-digit seconds

@@ -1,29 +1,28 @@
 """Local emulation of the driver's correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
-on DuckDB over the same parquet tables, then compares row count,
-column-name set, and values (columns sorted by name, rows sorted by
-all columns; exact for non-floats, 1e-9 atol for floats — stricter
-than needed so driver-side hash mismatches show up here first).
+on DuckDB over the same parquet tables, then compares them with
+``perfbench.check.diff``: rows rendered as canonical strings (columns
+sorted by name, rows sorted), exact, with no float tolerance, so a
+``Decimal`` against a float or a last-digit difference fails here as it
+does under an exact value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
 
 import duckdb
-import numpy as np
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from instructions_mr_spark.session import get_spark
 from instructions_mr_spark.sources.tables import TABLE_NAMES
+from perfbench.check import diff
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -36,69 +35,6 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].map(lambda x: tuple(x) if isinstance(x, (list, np.ndarray)) else x)
-    sort_cols = list(df.columns)
-    try:
-        df = df.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-    except Exception:
-        df = df.sort_values(sort_cols, key=lambda s: s.map(str), kind="mergesort").reset_index(drop=True)
-    return df
-
-
-def compare(a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
-    problems: list[str] = []
-    if len(a) != len(b):
-        problems.append(f"row count: spark={len(a)} duckdb={len(b)}")
-    if sorted(a.columns) != sorted(b.columns):
-        problems.append(f"columns: spark={sorted(a.columns)} duckdb={sorted(b.columns)}")
-        return problems
-    if problems:
-        return problems
-    a, b = normalize(a), normalize(b)
-    for c in a.columns:
-        av, bv = a[c], b[c]
-        # int-vs-float dtype split: values can be numerically equal and
-        # still driver-hash-mismatch (int64 vs float64 — the r5
-        # mixture_weights red row, caused by DuckDB HUGEINT landing in
-        # pandas as float64).  The float-tolerance branch below would
-        # mask it, so fail it explicitly here.
-        if pd.api.types.is_integer_dtype(av) != pd.api.types.is_integer_dtype(bv) and (
-            pd.api.types.is_numeric_dtype(av) and pd.api.types.is_numeric_dtype(bv)
-        ):
-            problems.append(
-                f"col {c}: dtype split spark={av.dtype} duckdb={bv.dtype} "
-                "(driver hash WILL mismatch even on equal values)"
-            )
-            continue
-        if pd.api.types.is_float_dtype(av) or pd.api.types.is_float_dtype(bv):
-            aa = av.astype(float).to_numpy()
-            bb = bv.astype(float).to_numpy()
-            both_nan = np.isnan(aa) & np.isnan(bb)
-            close = np.isclose(aa, bb, rtol=1e-9, atol=1e-9) | both_nan
-            if not close.all():
-                i = int(np.argmin(close))
-                problems.append(f"col {c}: value diff at sorted-row {i}: {aa[i]!r} vs {bb[i]!r}")
-            else:
-                exact = (aa == bb) | both_nan
-                if not exact.all():
-                    i = int(np.argmin(exact))
-                    problems.append(
-                        f"col {c}: WARN inexact float (passes tol) row {i}: {aa[i]!r} vs {bb[i]!r}"
-                    )
-        else:
-            eq = (av == bv) | (av.isna() & bv.isna())
-            if not eq.all():
-                i = int(np.argmin(eq.to_numpy()))
-                problems.append(f"col {c}: value diff at sorted-row {i}: {av.iloc[i]!r} vs {bv.iloc[i]!r}")
-    return problems
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
     only = set(sys.argv[2:]) if len(sys.argv) > 2 else (
@@ -107,7 +43,11 @@ def main() -> int:
     from instructions_mr_spark import registry
 
     registry.load_all()
-    spark = get_spark("check_oracle")
+    # the console progress bar redraws its stderr line with \r, which
+    # hides result lines in a combined stdout+stderr log
+    spark = get_spark(
+        "check_oracle", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duck_con(sf_dir)
     n_fail = 0
     from instructions_mr_spark.queries._util import free_staged_checkpoints
@@ -135,16 +75,12 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {str(e).splitlines()[0]}")
             n_fail += 1
             continue
-        problems = compare(sdf, ddf)
-        real = [p for p in problems if not p.startswith("col") or "WARN" not in p]
-        if real:
-            print(f"FAIL  {name}: [{time.time()-t0:.1f}s]")
-            for p in problems:
-                print(f"      {p}")
+        problem = diff(sdf, ddf)
+        if problem:
+            print(f"FAIL  {name}: [{time.time()-t0:.1f}s]\n      {problem}")
             n_fail += 1
         else:
-            warn = "" if not problems else f" ({len(problems)} float-warns)"
-            print(f"ok    {name}: {len(sdf)} rows{warn}  [{time.time()-t0:.1f}s]")
+            print(f"ok    {name}: {len(sdf)} rows  [{time.time()-t0:.1f}s]")
     print("FAILURES:", n_fail)
     return 1 if n_fail else 0
 
