@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import cosine_sim
 from instructions_mr_spark.operators.simsearch import (
     ivf_search,
     pq_adc_search,
@@ -35,13 +36,11 @@ from instructions_mr_spark.session import get_spark
 
 
 def brute_top_k(e, query_vec, k):
-    from instructions_mr_spark.queries.llm_pipeline import _cosine_col
-
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return [
         r.vec_id
         for r in e.select(
-            "vec_id", _cosine_col(qlit, F.col("embedding")).alias("cosine")
+            "vec_id", cosine_sim(qlit, F.col("embedding")).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)

@@ -1,10 +1,17 @@
 """Reusable Column-level function library (SURVEY.md §2.7 scalar
 families + the LLM-pipeline kernels).
 
-Everything here returns Column expressions (JVM-side, codegen'd),
-except the portable digest: ``spark_hash`` / ``duck_hash`` render the
-same md5-derived integer as Spark SQL and DuckDB text, the one place
-the digest format lives.
+Most functions here return Column expressions (JVM-side).  The
+``spark_*`` / ``duck_*`` twins render the same formula as Spark SQL and
+DuckDB text, so a query and its oracle cannot drift; this module is the
+one place each of these formulas lives:
+
+- the portable digest: ``spark_hash`` / ``duck_hash``;
+- embedding similarity: ``dot_product``, ``l2_norm``,
+  ``cosine_with_norms`` and ``cosine_sim`` as Columns, ``spark_dot`` /
+  ``spark_sq_l2`` as Spark SQL, ``duck_dot`` / ``duck_cosine`` /
+  ``duck_sq_l2`` as DuckDB SQL;
+- the sign-bit LSH bucket: ``sign_bucket`` / ``duck_sign_bucket``.
 """
 
 from __future__ import annotations
@@ -42,22 +49,123 @@ def duck_hash(key: str, seed: int | None = None, hex_digits: int = 8) -> str:
     return f"('0x' || substr(md5({_salted(key, seed)}), 1, {hex_digits}))::BIGINT"
 
 
-def cosine_sim(a: Column, b: Column, digits: int = 6) -> Column:
-    """Cosine similarity of two float-array columns, computed in
-    doubles with a deterministic left-fold (order-stable across
-    engines), rounded for cross-engine comparability."""
-    dots = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    dot = F.aggregate(dots, F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    return F.round(dot / (na * nb), digits)
+# Embedding similarity.  Every dot product is a left fold, in
+# dimension order, of float components widened to double; cosine is
+# rounded to COSINE_DIGITS.  Both engines run the same IEEE operations
+# in the same order, so the two renderings below agree bit for bit.
+COSINE_DIGITS = 6
 
 
 def dot_product(a: Column, b: Column) -> Column:
+    """Dot product of two float-array columns, as a double left fold."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def l2_norm(a: Column) -> Column:
+    """L2 norm of a float-array column.  Pair joins hoist it into the
+    per-vector projection: higher-order functions run interpreted, so
+    two norms per candidate pair cost ~2.6 s of the SemDeDup join-back
+    at sf0.1 (178k pairs) where one pass over 2k vectors is cheap.  The
+    hoisted value is the same double."""
+    return F.sqrt(
+        F.aggregate(
+            a, F.lit(0.0),
+            lambda acc, x: acc + x.cast("double") * x.cast("double"),
+        )
+    )
+
+
+def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their L2 norms ``na``, ``nb``."""
+    return F.round(dot_product(a, b) / (na * nb), COSINE_DIGITS)
+
+
+def cosine_sim(a: Column, b: Column) -> Column:
+    """Cosine similarity of two float-array columns; ``duck_cosine`` is
+    its DuckDB twin."""
+    return cosine_with_norms(a, b, l2_norm(a), l2_norm(b))
+
+
+def spark_dot(a: str, b: str) -> str:
+    """:func:`dot_product` as Spark SQL text, for hand-built strings
+    whose second operand is a literal array (one parse instead of a
+    py4j call per literal)."""
+    return (
+        f"aggregate(zip_with({a}, {b},"
+        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def spark_sq_l2(a: str, b: str) -> str:
+    """Squared L2 distance as Spark SQL text; ``duck_sq_l2`` is its
+    DuckDB twin."""
+    return (
+        f"aggregate(zip_with({a}, {b},"
+        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def duck_dot(a: str, b: str, dims: int | None = None) -> str:
+    """DuckDB twin of :func:`dot_product` over the first ``dims``
+    components (all of them by default)."""
+    n = f"len({a})" if dims is None else dims
+    return (
+        f"list_reduce(list_transform(range(1, {n} + 1),"
+        f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
+        " (a, b) -> a + b)"
+    )
+
+
+def _duck_norm(a: str) -> str:
+    return f"sqrt(list_reduce(list_transform({a}, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))"
+
+
+def duck_cosine(a: str, b: str, dims: int | None = None) -> str:
+    """DuckDB twin of :func:`cosine_sim`; ``dims`` scores only the first
+    ``dims`` components, like ``cosine_sim`` over ``F.slice(.., 1, dims)``.
+    DuckDB rounds a cosine in (-5e-7, 0) to -0.0 where Spark gives 0.0;
+    adding 0.0 turns -0.0 into 0.0 and leaves every other value as is."""
+    na, nb = (a, b) if dims is None else (f"{a}[1:{dims}]", f"{b}[1:{dims}]")
+    return (
+        f"(ROUND({duck_dot(a, b, dims)}"
+        f" / ({_duck_norm(na)} * {_duck_norm(nb)}), {COSINE_DIGITS}) + 0.0)"
+    )
+
+
+def duck_sq_l2(a: str, b: str) -> str:
+    """DuckDB twin of :func:`spark_sq_l2`."""
+    d = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+    return (
+        f"list_reduce(list_transform(range(1, len({a}) + 1), i -> {d} * {d}),"
+        " (a, b) -> a + b)"
+    )
+
+
+def sign_bucket(a: str, dims: int) -> Column:
+    """Sign-bit LSH bucket: bit i is set when component i+1 of the
+    embedding is positive, over the first ``dims`` components."""
+    return F.aggregate(
+        F.zip_with(
+            F.slice(a, 1, dims),
+            F.array([F.lit(1 << i) for i in range(dims)]),
+            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+
+def duck_sign_bucket(a: str, dims: int) -> str:
+    """DuckDB twin of :func:`sign_bucket`."""
+    return (
+        f"list_aggregate(list_transform(range(1, {dims + 1}),"
+        f" i -> CASE WHEN {a}[i] > 0 THEN (1 << (i-1)) ELSE 0 END), 'sum')"
     )
 
 

@@ -14,8 +14,10 @@ Three tiers, trading exactness for scan reduction:
    the production ANN path.  At 100 TB the assignment is a write-time
    partition column, so probing becomes partition pruning.
 
-The cosine kernel is the JVM-side functions.cosine_sim everywhere —
-Python only appears in centroid training (bounded, sampled).
+The cosine kernel is the JVM-side functions.cosine_sim everywhere, and
+every dot product and squared L2 distance is rendered by functions
+(spark_dot / spark_sq_l2) — Python only appears in centroid training
+(bounded, sampled).
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import cosine_sim, dot_product, spark_hash
+from instructions_mr_spark.functions import cosine_sim, spark_dot, spark_hash, spark_sq_l2
 from instructions_mr_spark.plans.guard import sql_double, sql_double_array, sql_ident
 
 
@@ -120,19 +122,14 @@ def _centroid_dots_sql(vec_col: str, centroids: list[list[float]]) -> str:
     d=64 before any job ran.  A single F.expr parse is ~0.4 s warm.
     Value-identical: a '<repr>D' double literal parses to exactly the
     repr'd double (shortest-roundtrip both ways) and the fold is the
-    same aggregate/zip_with/CAST tree dot_product builds — verified
-    cell-identical on every sf0.1 vector before the swap."""
+    same aggregate/zip_with/CAST tree functions.dot_product builds —
+    verified cell-identical on every sf0.1 vector before the swap."""
     vec = sql_ident(vec_col)
-
-    def dot(j: int, c: list[float]) -> str:
-        arr = sql_double_array(c, f"centroid {j}")
-        return (
-            f"aggregate(zip_with({vec}, {arr},"
-            " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-            " 0.0D, (acc, x) -> acc + x)"
-        )
-
-    return "array(" + ",".join(dot(j, c) for j, c in enumerate(centroids)) + ")"
+    dots = (
+        spark_dot(vec, sql_double_array(c, f"centroid {j}"))
+        for j, c in enumerate(centroids)
+    )
+    return "array(" + ",".join(dots) + ")"
 
 
 def assign_ivf_cell(
@@ -269,11 +266,7 @@ def pq_encode(
             what = f"codebook {s} codeword {j}"
             arr = sql_double_array(c, what)
             half = sql_double(sum(x * x for x in c) / 2.0, what + " half-norm")
-            cells.append(
-                f"aggregate(zip_with({sub}, {arr},"
-                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                f" 0.0D, (acc, x) -> acc + x) - {half}"
-            )
+            cells.append(f"{spark_dot(sub, arr)} - {half}")
         col = f"__pq_s{s}"
         enc = enc.withColumn(col, F.expr("array(" + ",".join(cells) + ")"))
         packed_terms.append(
@@ -334,11 +327,7 @@ def pq_adc_search(
         .orderBy(F.col("approx_l2").asc(), F.col(id_col))
         .limit(rerank * top_k)
     )
-    exact_l2 = F.expr(
-        f"aggregate(zip_with({sql_ident(vec_col)}, {qarr},"
-        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
-        " 0.0D, (acc, x) -> acc + x)"
-    )
+    exact_l2 = F.expr(spark_sq_l2(sql_ident(vec_col), qarr))
     return (
         shortlist.select(id_col, F.round(exact_l2, 6).alias("l2"))
         .orderBy(F.col("l2").asc(), F.col(id_col))

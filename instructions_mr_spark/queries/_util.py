@@ -16,8 +16,9 @@ query as DOUBLE, and its value does not change:
 - by a plain CAST while its unscaled value stays below 2^53 at sf0.1.
   There DuckDB 1.0's DECIMAL->DOUBLE cast is correctly rounded, as
   Spark's always is;
-- through ``dec_double`` otherwise, and for every sum of squares or
-  products, whose size grows with the data.  DuckDB's cast misrounds
+- through ``dec_double`` otherwise, and for every sum (``sum_d`` and
+  ``avg_d`` always take it) and every sum of squares or products,
+  whose size grows with the data.  DuckDB's cast misrounds
   about a quarter of values above 2^53 at scale > 0, and some at scale
   0 above 2^64.  Both engines render a DECIMAL as the same string and
   parse a string to the nearest double.
@@ -44,20 +45,20 @@ DEC_BAL = "CAST(c_acctbal AS DECIMAL(12,2))"
 DEC_VALUE = "CAST(value AS DECIMAL(12,2))"
 
 
-def sum_d(fragment: str, alias: str) -> str:
-    """Plain-cast decimal sum: fragments up to scale 6 stay below 2^53
-    at sf0.1.  ``CHARGE`` (scale 10) does not; sum it with dec_double."""
-    return f"CAST(SUM({fragment}) AS DOUBLE) AS {alias}"
-
-
 def dec_double(expr: str) -> str:
     """A DECIMAL expression as the nearest DOUBLE, identically in Spark
     SQL and DuckDB at any scale and magnitude (see the module rule)."""
     return f"CAST(CAST({expr} AS STRING) AS DOUBLE)"
 
 
+def sum_d(fragment: str, alias: str) -> str:
+    """Exact decimal sum of ``fragment``, as the nearest DOUBLE."""
+    return f"{dec_double(f'SUM({fragment})')} AS {alias}"
+
+
 def avg_d(fragment: str, alias: str) -> str:
-    return f"CAST(SUM({fragment}) AS DOUBLE) / COUNT({fragment}) AS {alias}"
+    """Exact decimal sum of ``fragment`` over its count, as a DOUBLE."""
+    return f"{dec_double(f'SUM({fragment})')} / COUNT({fragment}) AS {alias}"
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

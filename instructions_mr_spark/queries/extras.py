@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import cosine_sim, duck_cosine
 from instructions_mr_spark.queries._util import DEC_QTY, sum_d, t, ts_epoch_seconds
 from instructions_mr_spark.registry import query
 
@@ -351,11 +352,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_kmeans_oracle() -> str:
-    from instructions_mr_spark.queries.llm_pipeline import _DOT
-
     return f"""
     WITH exact AS (
-      SELECT e.vec_id, {_DOT} AS cosine
+      SELECT e.vec_id, {duck_cosine('q.embedding', 'e.embedding')} AS cosine
       FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
       WHERE e.vec_id <> 0
       ORDER BY cosine DESC, e.vec_id LIMIT 10
@@ -382,8 +381,6 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_simsearch.py; n_probe=k here would equal
     sim_search_topk exactly)."""
     from instructions_mr_spark.operators.simsearch import ivf_search, train_ivf_centroids
-
-    from instructions_mr_spark.functions import cosine_sim
 
     e = t(spark, sf_dir, "embeddings")
     centroids = train_ivf_centroids(e, k=8, seed=42)

@@ -11,7 +11,10 @@ Dedup + similarity search use a cross-engine-portable hash:
 ``int(md5(x || seed)[:8], 16)``, rendered for Spark and DuckDB by
 ``functions.spark_hash`` / ``functions.duck_hash`` with the same bits
 on both engines, so even MinHash/LSH is hash-checkable, not just
-rows-only.
+rows-only.  Cosine, L2 norms, squared L2 and the sign-bit bucket come
+from the same module's Spark/DuckDB twins (``cosine_sim`` /
+``duck_cosine`` and kin), so each oracle folds the same operations in
+the same order as its builder.
 
 Scale notes: exact dedup is one hash-aggregate; MinHash-LSH is
 signature (narrow projection) -> band explode -> equi-join on band
@@ -21,13 +24,24 @@ broadcasts the query vector; the IVF variant prunes by sign-bucket.
 """
 
 from __future__ import annotations
-from instructions_mr_spark.plans.guard import literal_df
+from instructions_mr_spark.plans.guard import literal_df, sql_double_array
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import (
+    cosine_sim,
+    cosine_with_norms,
+    duck_cosine,
+    duck_hash,
+    duck_sign_bucket,
+    duck_sq_l2,
+    l2_norm,
+    sign_bucket,
+    spark_hash,
+    spark_sq_l2,
+)
 from instructions_mr_spark.operators.llm_map import group_concat_reduce, instr_fanout_map
 from instructions_mr_spark.queries._util import supersede_checkpoint, t
 from instructions_mr_spark.registry import query
@@ -786,57 +800,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- sim search
 
-_DOT = """
-    ROUND(
-      list_reduce(list_transform(range(1, len(q.embedding) + 1),
-                  i -> CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6)
-"""
-
-
-def _cosine_col(a, b):
-    dot = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    s = F.aggregate(dot, F.lit(0.0), lambda acc, x: acc + x)
-    return F.round(s / (_norm_col(a) * _norm_col(b)), 6)
-
-
-def _norm_col(a):
-    """L2 norm of an embedding array — the exact subexpression
-    _cosine_col uses, exposed so pair joins can hoist it to the
-    per-VECTOR projection (round 12): higher-order functions are
-    CodegenFallback (interpreted per element), so recomputing two
-    64-element norms per candidate PAIR cost ~2.6 s of the SemDeDup
-    join-back at sf0.1 (178k pairs) where the same norms are one HOF
-    pass over 2k vectors.  Hoisting is bit-identical: the aggregate
-    runs over the same array in the same order, so the double (and
-    the final round(dot/(na*nb), 6)) is unchanged."""
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-
-
-def _cosine_prenorm(ea, eb, na, nb):
-    """Pair cosine with per-vector norms hoisted (see _norm_col):
-    identical arithmetic to _cosine_col, ~3x less interpreted HOF
-    work per pair."""
-    dot = F.zip_with(ea, eb, lambda x, y: x.cast("double") * y.cast("double"))
-    s = F.aggregate(dot, F.lit(0.0), lambda acc, x: acc + x)
-    return F.round(s / (na * nb), 6)
-
-
 def _pair_cosine_joinback(id_pairs, e, cos_name: str = "cos",
                           threshold: float | None = None):
     """(vec_a, vec_b) id-pairs + the embeddings table -> scored pairs
     (vec_a, vec_b, <cos_name>): join the vectors back by id (narrow
     candidate ids dedupe BEFORE the arrays attach — guide §2.3) and
-    pay one hoisted-norm interpreted dot per pair (_cosine_prenorm —
-    bit-identical e6 cosine, see _norm_col).
+    pay one hoisted-norm interpreted dot per pair
+    (functions.cosine_with_norms — bit-identical e6 cosine, see
+    functions.l2_norm).
 
     Round-13 negatives, measured and recorded so they are not
     retried (this helper deduplicates the r12 shape shared by the
@@ -865,12 +836,12 @@ def _pair_cosine_joinback(id_pairs, e, cos_name: str = "cos",
     ea = e.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
+        l2_norm(F.col("embedding")).alias("na"),
     )
     eb = e.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
+        l2_norm(F.col("embedding")).alias("nb"),
     )
     scored = (
         id_pairs.join(ea, "vec_a")
@@ -878,7 +849,7 @@ def _pair_cosine_joinback(id_pairs, e, cos_name: str = "cos",
         .select(
             "vec_a",
             "vec_b",
-            _cosine_prenorm(
+            cosine_with_norms(
                 F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
             ).alias(cos_name),
         )
@@ -891,7 +862,7 @@ def _pair_cosine_joinback(id_pairs, e, cos_name: str = "cos",
 @query(
     "sim_search_topk",
     oracle=f"""
-    SELECT e.vec_id, {_DOT} AS cosine
+    SELECT e.vec_id, {duck_cosine('q.embedding', 'e.embedding')} AS cosine
     FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
     WHERE e.vec_id <> 0
     ORDER BY cosine DESC, e.vec_id LIMIT 10
@@ -908,7 +879,7 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
-        .select("vec_id", _cosine_col(F.col("q"), F.col("embedding")).alias("cosine"))
+        .select("vec_id", cosine_sim(F.col("q"), F.col("embedding")).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -919,12 +890,11 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH b AS (
       SELECT vec_id, embedding,
-             list_aggregate(list_transform(range(1, 5),
-               i -> CASE WHEN embedding[i] > 0 THEN (1 << (i-1)) ELSE 0 END), 'sum') AS bucket
+             {duck_sign_bucket('embedding', 4)} AS bucket
       FROM embeddings
     ),
     qb AS (SELECT embedding, bucket FROM b WHERE vec_id = 0)
-    SELECT e.vec_id, {_DOT} AS cosine
+    SELECT e.vec_id, {duck_cosine('q.embedding', 'e.embedding')} AS cosine
     FROM b e, qb q
     WHERE e.bucket = q.bucket AND e.vec_id <> 0
     ORDER BY cosine DESC, e.vec_id LIMIT 5
@@ -936,23 +906,14 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned.  The scale path — candidate set shrinks ~16× per probe;
     partition the lake by bucket to turn this into partition pruning."""
     e = t(spark, sf_dir, "embeddings")
-    bucket = F.aggregate(
-        F.zip_with(
-            F.slice("embedding", 1, 4),
-            F.array([F.lit(1), F.lit(2), F.lit(4), F.lit(8)]),
-            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    b = e.withColumn("bucket", bucket)
+    b = e.withColumn("bucket", sign_bucket("embedding", 4))
     qv = b.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"), F.col("bucket").alias("qbucket")
     )
     return (
         b.filter(F.col("vec_id") != 0)
         .join(F.broadcast(qv), F.col("bucket") == F.col("qbucket"))
-        .select("vec_id", _cosine_col(F.col("q"), F.col("embedding")).alias("cosine"))
+        .select("vec_id", cosine_sim(F.col("q"), F.col("embedding")).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(5)
     )
@@ -964,19 +925,6 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_EVAL_Q = 16
 _ANN_EVAL_K = 10
 
-# Cosine between q.qemb and e.embedding (the _DOT fragment generalized
-# to the eval CTE's aliases).
-_EVAL_DOT = """
-    ROUND(
-      list_reduce(list_transform(range(1, len(q.qemb) + 1),
-                  i -> CAST(q.qemb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(q.qemb, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6)
-"""
-
-
 def _ann_recall_oracle(cand_cond: str) -> str:
     """Oracle template for the ANN recall evals: ``cand_cond`` is the
     SQL predicate (over e.bucket / q.qbucket) defining the index's
@@ -984,8 +932,7 @@ def _ann_recall_oracle(cand_cond: str) -> str:
     return f"""
     WITH b AS (
       SELECT vec_id, embedding,
-             list_aggregate(list_transform(range(1, 5),
-               i -> CASE WHEN embedding[i] > 0 THEN (1 << (i-1)) ELSE 0 END), 'sum') AS bucket
+             {duck_sign_bucket('embedding', 4)} AS bucket
       FROM embeddings
     ),
     q AS (
@@ -994,7 +941,7 @@ def _ann_recall_oracle(cand_cond: str) -> str:
     ),
     scored AS (
       SELECT q.qid, e.vec_id, {cand_cond} AS is_cand,
-             {_EVAL_DOT} AS cosine
+             {duck_cosine('q.qemb', 'e.embedding')} AS cosine
       FROM b e, q
       WHERE e.vec_id <> q.qid
     ),
@@ -1038,16 +985,7 @@ def _ann_recall_eval(spark: SparkSession, sf_dir: str, cand_expr: str, key: str)
     from pyspark.sql import Window
 
     e = t(spark, sf_dir, "embeddings")
-    bucket = F.aggregate(
-        F.zip_with(
-            F.slice("embedding", 1, 4),
-            F.array([F.lit(1), F.lit(2), F.lit(4), F.lit(8)]),
-            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    b = e.withColumn("bucket", bucket)
+    b = e.withColumn("bucket", sign_bucket("embedding", 4))
     qs = b.filter(F.col("vec_id") < _ANN_EVAL_Q).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
@@ -1061,7 +999,7 @@ def _ann_recall_eval(spark: SparkSession, sf_dir: str, cand_expr: str, key: str)
             "qid",
             "vec_id",
             F.expr(cand_expr).alias("is_cand"),
-            _cosine_col(F.col("qemb"), F.col("embedding")).alias("cosine"),
+            cosine_sim(F.col("qemb"), F.col("embedding")).alias("cosine"),
         )
         ,
     )
@@ -1153,7 +1091,7 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "embedding_pair_cosine",
     oracle=f"""
-    SELECT e.vec_id AS vec_a, q.vec_id AS vec_b, {_DOT} AS cosine
+    SELECT e.vec_id AS vec_a, q.vec_id AS vec_b, {duck_cosine('q.embedding', 'e.embedding')} AS cosine
     FROM embeddings e JOIN embeddings q ON q.vec_id = e.vec_id + 1
     """,
 )
@@ -1166,19 +1104,8 @@ def embedding_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1).select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
-        _cosine_col(F.col("a.embedding"), F.col("b.embedding")).alias("cosine"),
+        cosine_sim(F.col("a.embedding"), F.col("b.embedding")).alias("cosine"),
     )
-
-
-_PAIR_DOT = """
-    ROUND(
-      list_reduce(list_transform(range(1, len(ea.embedding) + 1),
-                  i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6)
-"""
 
 
 # Sign-LSH blocking geometry: _EMB_BANDS bands of bits(n) sign bits
@@ -1252,7 +1179,7 @@ def _emb_dim0(band: int, j: int) -> int:
                      AND a.vec_id < b.vec_id
     )
     SELECT * FROM (
-      SELECT c.vec_a, c.vec_b, {_PAIR_DOT} AS cosine
+      SELECT c.vec_a, c.vec_b, {duck_cosine('ea.embedding', 'eb.embedding')} AS cosine
       FROM cand c
       JOIN embeddings ea ON ea.vec_id = c.vec_a
       JOIN embeddings eb ON eb.vec_id = c.vec_b
@@ -1593,19 +1520,11 @@ def _band_rows_of(docs: DataFrame) -> DataFrame:
 # ------------------------------------------------ product-quantized ANN
 
 
-_PQ_EXACT_L2 = """
-    list_reduce(list_transform(range(1, len(e.embedding) + 1),
-      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(q.embedding[i] AS DOUBLE))
-         * (CAST(e.embedding[i] AS DOUBLE) - CAST(q.embedding[i] AS DOUBLE))),
-      (a, b) -> a + b)
-"""
-
-
 @query(
     "sim_search_pq",
     oracle=f"""
     WITH exact AS (
-      SELECT e.vec_id, {_PQ_EXACT_L2} AS l2
+      SELECT e.vec_id, {duck_sq_l2('e.embedding', 'q.embedding')} AS l2
       FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
       WHERE e.vec_id <> 0
       ORDER BY l2 ASC, e.vec_id LIMIT 10
@@ -1641,20 +1560,9 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     corpus = e.filter(F.col("vec_id") != 0)
     approx = pq_adc_search(corpus, books, qv, top_k=10)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
+    qarr = sql_double_array(qv, "query_vec")
     exact = (
-        corpus.select(
-            "vec_id",
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    qlit,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("l2"),
-        )
+        corpus.select("vec_id", F.expr(spark_sq_l2("embedding", qarr)).alias("l2"))
         .orderBy(F.col("l2").asc(), F.col("vec_id"))
         .limit(10)
     )
@@ -1850,7 +1758,7 @@ def _cell_blocked_pairs(e, k: int, threshold: float,
     audit AS (
       SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b
       FROM s ea JOIN s eb ON ea.vec_id < eb.vec_id
-      WHERE {_PAIR_DOT} >= {_SEM_COS_T}
+      WHERE {duck_cosine('ea.embedding', 'eb.embedding')} >= {_SEM_COS_T}
     )
     SELECT CAST(GREATEST({_SEMDEDUP_K},
              (SELECT COUNT(*) FROM embeddings) // {_SEMDEDUP_CELL_TARGET})
@@ -1902,14 +1810,14 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sampled-recall audit: brute-force pairs among a capped
     # deterministic id slice (see _SEM_AUDIT_TARGET).
     s = e.filter(F.col("vec_id") % _audit_mod(n) == 0)
-    s = s.withColumn("nrm", _norm_col(F.col("embedding")))
+    s = s.withColumn("nrm", l2_norm(F.col("embedding")))
     sa, sb = s.alias("sa"), s.alias("sb")
     audit = (
         sa.join(sb, F.col("sa.vec_id") < F.col("sb.vec_id"))
         .select(
             F.col("sa.vec_id").alias("vec_a"),
             F.col("sb.vec_id").alias("vec_b"),
-            _cosine_prenorm(
+            cosine_with_norms(
                 F.col("sa.embedding"), F.col("sb.embedding"),
                 F.col("sa.nrm"), F.col("sb.nrm"),
             ).alias("cos"),
@@ -1984,7 +1892,7 @@ _PLANT_SHIFT = 10_000_000
       SELECT vec_id + {_PLANT_SHIFT} AS vec_id, embedding FROM s
     )
     SELECT * FROM (
-      SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {_PAIR_DOT} AS cosine
+      SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {duck_cosine('ea.embedding', 'eb.embedding')} AS cosine
       FROM corpus ea JOIN corpus eb ON ea.vec_id < eb.vec_id
     ) WHERE cosine >= {_SEMDEDUP_HI_T}
     ORDER BY vec_a, vec_b
@@ -2097,15 +2005,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KNN_PROBES = 8
 _KNN_K = 5
-_KNN_PAIR_DOT = """
-    ROUND(
-      list_reduce(list_transform(range(1, len(p.embedding) + 1),
-                  i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(p.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6)
-"""
 
 
 @query(
@@ -2113,9 +2012,9 @@ _KNN_PAIR_DOT = """
     oracle=f"""
     SELECT probe_id, vec_id, cosine, rnk FROM (
       SELECT p.vec_id AS probe_id, c.vec_id AS vec_id,
-             {_KNN_PAIR_DOT} AS cosine,
+             {duck_cosine('p.embedding', 'c.embedding')} AS cosine,
              ROW_NUMBER() OVER (PARTITION BY p.vec_id
-                                ORDER BY {_KNN_PAIR_DOT} DESC, c.vec_id) AS rnk
+                                ORDER BY {duck_cosine('p.embedding', 'c.embedding')} DESC, c.vec_id) AS rnk
       FROM embeddings p JOIN embeddings c
         ON p.vec_id < {_KNN_PROBES} AND c.vec_id >= {_KNN_PROBES}
     ) WHERE rnk <= {_KNN_K}
@@ -2150,7 +2049,7 @@ def knn_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "vec_id",
-            _cosine_col(F.col("q"), F.col("embedding")).alias("cosine"),
+            cosine_sim(F.col("q"), F.col("embedding")).alias("cosine"),
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _KNN_K)
@@ -2234,7 +2133,7 @@ def quality_blocklist_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_threshold_curve",
     oracle=f"""
     WITH pairs AS (
-      SELECT {_PAIR_DOT.replace('ea.', 'a.').replace('eb.', 'b.')} AS cosine
+      SELECT {duck_cosine('a.embedding', 'b.embedding')} AS cosine
       FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
     ), th(thr) AS (VALUES (0.5), (0.7), (0.8), (0.9))
     SELECT CAST(th.thr AS DOUBLE) AS thr,
@@ -2260,7 +2159,7 @@ def neardup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = e.alias("a")
     b = e.alias("b")
     pairs = a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1).select(
-        _cosine_col(F.col("a.embedding"), F.col("b.embedding")).alias("cosine")
+        cosine_sim(F.col("a.embedding"), F.col("b.embedding")).alias("cosine")
     )
     th = literal_df(e.sparkSession,
         [(0.5,), (0.7,), (0.8,), (0.9,)], "thr double"
@@ -2688,17 +2587,6 @@ def simhash_hamming_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRUNC_DIMS = 16  # matryoshka prefix length under evaluation
 
-_EVAL_DOT_TRUNC = f"""
-    ROUND(
-      list_reduce(list_transform(range(1, {_TRUNC_DIMS} + 1),
-                  i -> CAST(q.qemb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(q.qemb[1:{_TRUNC_DIMS}], x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(e.embedding[1:{_TRUNC_DIMS}], x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6)
-"""
-
-
 @query(
     "ann_recall_truncated_dims",
     oracle=f"""
@@ -2708,8 +2596,8 @@ _EVAL_DOT_TRUNC = f"""
     ),
     scored AS (
       SELECT q.qid, e.vec_id,
-             {_EVAL_DOT} AS cos_full,
-             {_EVAL_DOT_TRUNC} AS cos_trunc
+             {duck_cosine('q.qemb', 'e.embedding')} AS cos_full,
+             {duck_cosine('q.qemb', 'e.embedding', _TRUNC_DIMS)} AS cos_trunc
       FROM embeddings e, q
       WHERE e.vec_id <> q.qid
     ),
@@ -2761,8 +2649,8 @@ def ann_recall_truncated_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            _cosine_col(F.col("qemb"), F.col("embedding")).alias("cos_full"),
-            _cosine_col(
+            cosine_sim(F.col("qemb"), F.col("embedding")).alias("cos_full"),
+            cosine_sim(
                 F.slice(F.col("qemb"), 1, _TRUNC_DIMS),
                 F.slice(F.col("embedding"), 1, _TRUNC_DIMS),
             ).alias("cos_trunc"),
@@ -3172,7 +3060,10 @@ _MMR_K = 5
 
 # e6-integer cosine fragments (FLOOR(x*1e6 + 0.5) of the 6-dp-rounded
 # double — identical rounding on both engines, negative-safe).
-_CQ_E6_DUCK = f"CAST(FLOOR(({_DOT}) * 1000000 + 0.5) AS BIGINT)"
+_CQ_E6_DUCK = (
+    f"CAST(FLOOR(({duck_cosine('q.embedding', 'e.embedding')})"
+    " * 1000000 + 0.5) AS BIGINT)"
+)
 
 
 def _mmr_oracle() -> str:
@@ -3180,15 +3071,10 @@ def _mmr_oracle() -> str:
     oracle pattern): each step scores the remaining pool by
     rel - max-sim-to-picked (lambda = 1/2) and picks the argmax
     (ties to the smallest vec_id via ORDER BY ... LIMIT 1)."""
-    pair_dot_e6 = """
-    CAST(FLOOR(ROUND(
-      list_reduce(list_transform(range(1, len(ea.embedding) + 1),
-                  i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)),
-                  (a, b) -> a + b)
-      / (sqrt(list_reduce(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))
-         * sqrt(list_reduce(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * x), (a,b) -> a+b))),
-    6) * 1000000 + 0.5) AS BIGINT)
-    """
+    pair_dot_e6 = (
+        f"CAST(FLOOR(({duck_cosine('ea.embedding', 'eb.embedding')})"
+        " * 1000000 + 0.5) AS BIGINT)"
+    )
     steps = []
     prev = "p1"
     for k in range(2, _MMR_K + 1):
@@ -3258,29 +3144,29 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id",
                 "embedding",
-                _cosine_col(F.col("q"), F.col("embedding")).alias("cos6"),
+                cosine_sim(F.col("q"), F.col("embedding")).alias("cos6"),
             )
             .select("vec_id", "embedding", cq_e6.alias("cq_e6"))
             .orderBy(F.col("cq_e6").desc(), F.col("vec_id"))
             .limit(_MMR_POOL)
         ),
     )
-    # norms hoisted per pool vector (see _norm_col): bit-identical s6,
+    # norms hoisted per pool vector (see functions.l2_norm): bit-identical s6,
     # the pool self-join pays one interpreted dot per pair, not three
     ca = cand.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
+        l2_norm(F.col("embedding")).alias("na"),
     )
     cb = cand.select(
         F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
+        l2_norm(F.col("embedding")).alias("nb"),
     )
     sim = (
         ca.join(cb, F.col("va") != F.col("vb"))
         .select(
             "va",
             "vb",
-            _cosine_prenorm(
+            cosine_with_norms(
                 F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
             ).alias("s6"),
         )
@@ -3474,9 +3360,9 @@ _HN_K = 3
     SELECT probe_id, probe_label, cand_id, cand_label, cosine, rnk FROM (
       SELECT p.vec_id AS probe_id, p.label AS probe_label,
              c.vec_id AS cand_id, c.label AS cand_label,
-             {_KNN_PAIR_DOT} AS cosine,
+             {duck_cosine('p.embedding', 'c.embedding')} AS cosine,
              ROW_NUMBER() OVER (PARTITION BY p.vec_id
-                                ORDER BY {_KNN_PAIR_DOT} DESC, c.vec_id) AS rnk
+                                ORDER BY {duck_cosine('p.embedding', 'c.embedding')} DESC, c.vec_id) AS rnk
       FROM embeddings p JOIN embeddings c
         ON p.vec_id < {_HN_PROBES} AND c.label <> p.label
     ) WHERE rnk <= {_HN_K}
@@ -3519,7 +3405,7 @@ def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_label",
             F.col("vec_id").alias("cand_id"),
             F.col("label").alias("cand_label"),
-            _cosine_col(F.col("q"), F.col("embedding")).alias("cosine"),
+            cosine_sim(F.col("q"), F.col("embedding")).alias("cosine"),
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _HN_K)
@@ -3697,7 +3583,7 @@ _EPS_LEVELS = [5, 10, 20, 50]  # eps * 100: cos >= 0.95, 0.90, 0.80, 0.50
     ),
     n AS (SELECT COUNT(*) AS ns FROM s),
     pr AS (
-      SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {_PAIR_DOT} AS cos
+      SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {duck_cosine('ea.embedding', 'eb.embedding')} AS cos
       FROM s ea JOIN s eb ON ea.vec_id < eb.vec_id
     ),
     eps AS (SELECT UNNEST([{', '.join(str(x) for x in _EPS_LEVELS)}]) AS eps_e2)
@@ -3737,15 +3623,15 @@ def semdedup_eps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "embedding")
     s = supersede_checkpoint("eps_sweep_sample", s)
     n = s.agg(F.count(F.lit(1)).alias("ns"))
-    # norms hoisted per sample vector (see _norm_col): bit-identical
+    # norms hoisted per sample vector (see functions.l2_norm): bit-identical
     # cos, the all-pairs sweep pays one interpreted dot per pair
     ea = s.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
+        l2_norm(F.col("embedding")).alias("na"),
     )
     eb = s.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
+        l2_norm(F.col("embedding")).alias("nb"),
     )
     pr = (
         ea.crossJoin(eb)
@@ -3753,7 +3639,7 @@ def semdedup_eps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            _cosine_prenorm(
+            cosine_with_norms(
                 F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
             ).alias("cos"),
         )

@@ -26,7 +26,6 @@ from instructions_mr_spark.queries._util import (
     DEC_TOTAL,
     REVENUE,
     avg_d,
-    dec_double,
     sum_d,
     t,
 )
@@ -37,7 +36,7 @@ _Q1_AGGS = [
     sum_d(DEC_QTY, "sum_qty"),
     sum_d(DEC_PRICE, "sum_base_price"),
     sum_d(REVENUE, "sum_disc_price"),
-    f"{dec_double(f'SUM({CHARGE})')} AS sum_charge",
+    sum_d(CHARGE, "sum_charge"),
     avg_d(DEC_QTY, "avg_qty"),
     avg_d(DEC_PRICE, "avg_price"),
     "CAST(SUM(CAST(l_discount AS DECIMAL(8,4))) AS DOUBLE) / COUNT(*) AS avg_disc",

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_dot
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -127,13 +128,11 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_array_map",
-    oracle="""
+    oracle=f"""
     SELECT vec_id,
            len(embedding) AS dim,
            ROUND(CAST(embedding[1] AS DOUBLE), 6) AS first_val,
-           ROUND(list_reduce(list_transform(embedding[1:8],
-                                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                             (a, b) -> a + b), 6) AS sumsq8,
+           ROUND({duck_dot('embedding', 'embedding', 8)}, 6) AS sumsq8,
            len(list_filter(embedding, x -> x > 0)) AS n_pos
     FROM embeddings
     """,

@@ -18,7 +18,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, duck_sign_bucket, sign_bucket, spark_hash
 from instructions_mr_spark.queries._util import (
     DEC_PRICE,
     dec_double,
@@ -1122,12 +1122,10 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "label_agreement_kappa",
-    oracle="""
+    oracle=f"""
     WITH p AS (
       SELECT label,
-             CAST(list_aggregate(list_transform(range(1, 5),
-               i -> CASE WHEN embedding[i] > 0 THEN (1 << (i-1)) ELSE 0 END), 'sum')
-               % 10 AS INTEGER) AS pred
+             CAST({duck_sign_bucket('embedding', 4)} % 10 AS INTEGER) AS pred
       FROM embeddings
     ), c AS (
       SELECT label, pred, COUNT(*) AS cnt FROM p GROUP BY 1, 2
@@ -1169,17 +1167,8 @@ def label_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     kappa algebra all run on that tiny table — broadcast-joined, one
     output row."""
     e = t(spark, sf_dir, "embeddings")
-    bucket = F.aggregate(
-        F.zip_with(
-            F.slice("embedding", 1, 4),
-            F.array([F.lit(1), F.lit(2), F.lit(4), F.lit(8)]),
-            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     c = (
-        e.select("label", (bucket % 10).cast("int").alias("pred"))
+        e.select("label", (sign_bucket("embedding", 4) % 10).cast("int").alias("pred"))
         .groupBy("label", "pred")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -4063,11 +4052,9 @@ def sentinel_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_cell_imbalance",
-    oracle="""
+    oracle=f"""
     WITH b AS (
-      SELECT list_aggregate(list_transform(range(1, 9),
-               i -> CASE WHEN embedding[i] > 0 THEN (1 << (i-1)) ELSE 0 END),
-               'sum') AS cell
+      SELECT {duck_sign_bucket('embedding', 8)} AS cell
       FROM embeddings
     ),
     occ AS (SELECT cell, COUNT(*) AS sz FROM b GROUP BY cell),
@@ -4095,12 +4082,7 @@ def ivf_cell_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one projection + a 256-key aggregate + a 1-row
     readout — no joins, no pair materialization."""
     e = t(spark, sf_dir, "embeddings")
-    bits = [
-        F.when(F.element_at("embedding", i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(8)
-    ]
-    cell = sum(bits[1:], start=bits[0])
-    occ = e.select(cell.alias("cell")).groupBy("cell").agg(
+    occ = e.select(sign_bucket("embedding", 8).alias("cell")).groupBy("cell").agg(
         F.count(F.lit(1)).alias("sz")
     )
     return occ.agg(

@@ -66,7 +66,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lateness = shipped >30 days after the order date (the schema has
     no commit/receipt dates).  The semi join keeps only orders' columns
     flowing into the aggregate — lineitem is scanned once, projected to
-    two columns (pushdown visible in PLANS.md).
+    two columns (the pushdown shows in ``cli.py --explain`` or
+    ``plans.guard.optimized_plan``).
     """
     o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))

@@ -57,11 +57,8 @@ def test_knn_join_matches_per_probe_brute_force(spark, sf_dir):
     brute-force top-k for that probe (same cosine rounding, same
     vec_id tie-break)."""
     out = registry.QUERIES["knn_join_batch"](spark, sf_dir).collect()
-    from instructions_mr_spark.queries.llm_pipeline import (
-        _KNN_K,
-        _KNN_PROBES,
-        _cosine_col,
-    )
+    from instructions_mr_spark.functions import cosine_sim
+    from instructions_mr_spark.queries.llm_pipeline import _KNN_K, _KNN_PROBES
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     by_probe = {}
@@ -78,7 +75,7 @@ def test_knn_join_matches_per_probe_brute_force(spark, sf_dir):
             .crossJoin(F.broadcast(qv))
             .select(
                 "vec_id",
-                _cosine_col(F.col("q"), F.col("embedding")).alias("cosine"),
+                cosine_sim(F.col("q"), F.col("embedding")).alias("cosine"),
             )
             .orderBy(F.col("cosine").desc(), F.col("vec_id"))
             .limit(_KNN_K)

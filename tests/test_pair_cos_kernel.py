@@ -22,11 +22,8 @@ import math
 from pyspark.sql import functions as F
 
 from instructions_mr_spark import registry
-from instructions_mr_spark.queries.llm_pipeline import (
-    _cosine_prenorm,
-    _norm_col,
-    _pair_cosine_joinback,
-)
+from instructions_mr_spark.functions import cosine_with_norms, l2_norm
+from instructions_mr_spark.queries.llm_pipeline import _pair_cosine_joinback
 from instructions_mr_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -67,12 +64,12 @@ def test_joinback_matches_unfloored_expression_path(spark):
     ea = e.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
-        _norm_col(F.col("embedding")).alias("na"),
+        l2_norm(F.col("embedding")).alias("na"),
     )
     eb = e.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("eb"),
-        _norm_col(F.col("embedding")).alias("nb"),
+        l2_norm(F.col("embedding")).alias("nb"),
     )
     old = {
         (r.vec_a, r.vec_b): r.cos
@@ -81,7 +78,7 @@ def test_joinback_matches_unfloored_expression_path(spark):
         .select(
             "vec_a",
             "vec_b",
-            _cosine_prenorm(
+            cosine_with_norms(
                 F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
             ).alias("cos"),
         )

@@ -605,6 +605,45 @@ def test_portable_digest_only_in_functions():
     assert not offenders, f"portable digest outside functions/: {offenders}"
 
 
+def test_embedding_math_only_in_functions():
+    """Dot products, norms, cosine and squared L2 are rendered only by
+    the functions twins (cosine_sim / duck_cosine and kin): a query and
+    its oracle must fold the same operations in the same order, so the
+    formulas live in one place.  No module reaches into llm_pipeline's
+    private helpers for them either."""
+    import ast
+    import glob
+    import os
+    import pathlib
+
+    offenders = [
+        hit
+        for needle in (
+            "list_reduce(list_transform(",
+            "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)",
+            'x.cast("double") * y.cast("double")',
+        )
+        for hit in _package_lines_containing(needle, "functions/__init__.py")
+    ]
+    assert not offenders, f"embedding math outside functions/: {offenders}"
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    private = []
+    for sub in ("instructions_mr_spark", "examples"):
+        for path in glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True):
+            for node in ast.walk(ast.parse(pathlib.Path(path).read_text())):
+                if (
+                    isinstance(node, ast.ImportFrom)
+                    and (node.module or "").endswith("queries.llm_pipeline")
+                ):
+                    private += [
+                        f"{os.path.relpath(path, root)}:{node.lineno} {a.name}"
+                        for a in node.names
+                        if a.name.startswith("_")
+                    ]
+    assert not private, f"private llm_pipeline names imported: {private}"
+
+
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):
     """The supersede_checkpoint certification must fire on a hinted
     unbounded subtree that would afterwards hide behind the
