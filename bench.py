@@ -215,7 +215,10 @@ def main() -> None:
         try:
             with open(os.path.join(here, prev_files[-1]), encoding="utf-8") as fh:
                 prev = json.load(fh)
-            for line in delta_lines(prev_files[-1], prev, timings, sf):
+            for line in delta_lines(
+                prev_files[-1], prev, timings, sf,
+                spark.sparkContext.defaultParallelism,
+            ):
                 print(line, file=sys.stderr)
         except (OSError, ValueError, AttributeError, TypeError, KeyError):
             pass
@@ -282,12 +285,15 @@ def prev_queries(prev: dict) -> dict:
     return q if isinstance(q, dict) else {}
 
 
-def delta_lines(prev_name: str, prev: dict, timings: dict, sf: str) -> list[str]:
+def delta_lines(
+    prev_name: str, prev: dict, timings: dict, sf: str, cpus: int
+) -> list[str]:
     """Per-query ``# delta vs <record>`` lines against a previous
     round's bench record.  None when the record was taken at another
-    scale factor: an sf0.001 run read against an sf0.1 record shows
-    only the data size."""
-    if float(prev["sf"]) != float(sf):
+    scale factor or on another core count: an sf0.001 run read against
+    an sf0.1 record shows only the data size, and a 4-core run read
+    against a 32-core record shows only the machine."""
+    if float(prev["sf"]) != float(sf) or prev.get("cpus") != cpus:
         return []
     prev_q = prev_queries(prev)
     out = []

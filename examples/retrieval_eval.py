@@ -57,7 +57,7 @@ def run(sf_dir: str, k: int = 10, n_probes: int = 8) -> dict[str, float]:
     }
     corpus = e.filter(F.col("vec_id") >= n_probes)
 
-    centroids = train_ivf_centroids(corpus, k=8, seed=42)
+    centroids = train_ivf_centroids(corpus, k=8)
     codebooks = train_pq_codebooks(corpus, m=8, k=16)
 
     recalls: dict[str, list[float]] = {"ivf": [], "pq": []}

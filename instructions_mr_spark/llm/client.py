@@ -35,6 +35,26 @@ class LlmClient(Protocol):
     ) -> str: ...
 
 
+def request_body(
+    conf: LlmConfig,
+    messages: list[dict[str, str]],
+    json_schema: dict[str, Any] | None = None,
+) -> dict[str, Any]:
+    """The chat-completions request with the reference's determinism
+    knobs (llm_cli.py:60-82), in the key order both real clients send."""
+    body: dict[str, Any] = dict(
+        model=conf.model,
+        messages=messages,
+        seed=conf.seed,
+        temperature=conf.temperature,
+        top_p=conf.top_p,
+        max_tokens=conf.max_tokens,
+    )
+    if json_schema is not None:
+        body["response_format"] = {"type": "json_schema", "json_schema": json_schema}
+    return body
+
+
 class EchoLlmClient:
     """Deterministic stand-in: response = last user message content.
 
@@ -86,20 +106,9 @@ class OpenAILlmClient:
     def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str:
-        kwargs: dict[str, Any] = dict(
-            model=self.conf.model,
-            messages=messages,
-            seed=self.conf.seed,
-            temperature=self.conf.temperature,
-            top_p=self.conf.top_p,
-            max_tokens=self.conf.max_tokens,
+        resp = self.cli.chat.completions.create(
+            **request_body(self.conf, messages, json_schema)
         )
-        if json_schema is not None:
-            kwargs["response_format"] = {
-                "type": "json_schema",
-                "json_schema": json_schema,
-            }
-        resp = self.cli.chat.completions.create(**kwargs)
         return resp.choices[0].message.content or ""
 
 
@@ -140,20 +149,7 @@ class HttpLlmClient:
     def complete(
         self, messages: list[dict[str, str]], json_schema: dict[str, Any] | None = None
     ) -> str:
-        payload: dict[str, Any] = dict(
-            model=self.conf.model,
-            messages=messages,
-            seed=self.conf.seed,
-            temperature=self.conf.temperature,
-            top_p=self.conf.top_p,
-            max_tokens=self.conf.max_tokens,
-        )
-        if json_schema is not None:
-            payload["response_format"] = {
-                "type": "json_schema",
-                "json_schema": json_schema,
-            }
-        return self._post(payload)
+        return self._post(request_body(self.conf, messages, json_schema))
 
 
 def make_client(conf: LlmConfig) -> LlmClient:

@@ -72,16 +72,13 @@ def train_ivf_centroids(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 16,
-    seed: int = 42,
     train_cap: int = 100_000,
 ) -> list[list[float]]:
     """Train k coarse centroids with a deterministic driver-side
     Lloyd's k-means over a bounded sample (same construction as
     :func:`train_pq_codebooks`: hash-selected sample, k evenly spaced
     sample points as init, 20 mean/assign iterations — no RNG
-    anywhere, so the codebook is bit-stable across runs and engines;
-    ``seed`` is kept in the signature for call-site compatibility but
-    is unused).
+    anywhere, so the codebook is bit-stable across runs and engines).
 
     Round 12: this replaced the distributed pyspark.ml KMeans fit.
     Coarse-quantizer centroids need only a representative sample, so
@@ -169,7 +166,7 @@ def ivf_search(
     order = sorted(range(len(centroids)), key=lambda i: -cos(centroids[i], query_vec))
     probe = order[:n_probe]
     assigned = assign_ivf_cell(df, centroids, vec_col=vec_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = F.expr(sql_double_array(query_vec, "query vector"))
     return (
         assigned.filter(F.col("cell").isin(probe))
         .select(id_col, cosine_sim(F.col(vec_col), qlit).alias("cosine"))
@@ -388,10 +385,3 @@ def assign_topm_cells(
         .drop("__dots")
     )
 
-
-def assign_top2_cells(
-    df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Back-compat wrapper: top-2 multi-assignment (see
-    :func:`assign_topm_cells`)."""
-    return assign_topm_cells(df, centroids, vec_col=vec_col, m=2)

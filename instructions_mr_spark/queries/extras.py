@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from instructions_mr_spark.functions import cosine_sim, duck_cosine
+from instructions_mr_spark.plans.guard import sql_double_array
 from instructions_mr_spark.queries._util import DEC_QTY, sum_d, t, ts_epoch_seconds
 from instructions_mr_spark.registry import query
 
@@ -383,11 +384,11 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from instructions_mr_spark.operators.simsearch import ivf_search, train_ivf_centroids
 
     e = t(spark, sf_dir, "embeddings")
-    centroids = train_ivf_centroids(e, k=8, seed=42)
+    centroids = train_ivf_centroids(e, k=8)
     qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     corpus = e.filter(F.col("vec_id") != 0)
     approx = ivf_search(corpus, centroids, qv, top_k=10, n_probe=4)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
+    qlit = F.expr(sql_double_array(qv, "query vector"))
     exact = (
         corpus.select("vec_id", cosine_sim(F.col("embedding"), qlit).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))

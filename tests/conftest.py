@@ -3,13 +3,48 @@ from __future__ import annotations
 import os
 import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from instructions_mr_spark import registry
 from instructions_mr_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+registry.load_all()
+
+
+def write_tables(dir, **tables) -> None:
+    """Write hand-built tables as ``<dir>/<name>.parquet``, one file each,
+    in the driver's own parquet flavor.
+
+    ``tables`` maps a ``sources.tables.TABLE_NAMES`` table to its rows:
+    dicts, where a column a row does not name is null, or full-width
+    tuples in column order.  Columns, their order and their types come
+    from the footer of ``SF_SMALL/<name>.parquet``, so ``ts``,
+    ``o_orderdate`` and ``l_shipdate`` are tz-less microseconds that
+    Spark reads as TIMESTAMP_NTZ, exactly as the driver's data.  Both
+    ``load_table`` and ``tools/check_oracle.duck_con`` read the result.
+    """
+    os.makedirs(dir, exist_ok=True)
+    for name, rows in tables.items():
+        schema = pq.read_schema(os.path.join(SF_SMALL, f"{name}.parquet"))
+        rows = [
+            r if isinstance(r, dict) else dict(zip(schema.names, r, strict=True))
+            for r in rows
+        ]
+        unknown = set().union(*rows) - set(schema.names)
+        assert not unknown, f"{name} has no columns {sorted(unknown)}"
+        columns = [
+            pa.array([r.get(f.name) for r in rows], f.type) for f in schema
+        ]
+        pq.write_table(
+            pa.Table.from_arrays(columns, schema=schema.remove_metadata()),
+            os.path.join(dir, f"{name}.parquet"),
+        )
 
 
 @pytest.fixture(scope="session")

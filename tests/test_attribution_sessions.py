@@ -6,17 +6,7 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import write_tables
 
 
 def _ts(m, s=0):
@@ -36,7 +26,7 @@ def test_last_touch_attribution(spark, tmp_path):
         (6, _ts(1), 3, "view", 0.0, "{}"),
         (7, _ts(2), 3, "purchase", 1.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.channel: r.n_purchases
         for r in registry.QUERIES["event_attribution_last_touch"](
@@ -55,7 +45,7 @@ def test_session_bounce_rate_gap_split(spark, tmp_path):
         (3, _ts(0), 2, "signup", 0.0, "{}"),
         (4, _ts(40), 2, "error", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.first_type: r
         for r in registry.QUERIES["session_bounce_rate"](

@@ -5,8 +5,7 @@ lang-id confusion matrix."""
 from __future__ import annotations
 
 from instructions_mr_spark import registry
-
-registry.load_all()
+from tests.conftest import write_tables
 
 
 def test_k_anonymity_flags_small_classes(spark, tmp_path):
@@ -14,10 +13,7 @@ def test_k_anonymity_flags_small_classes(spark, tmp_path):
     (en, b, bucket0) has 5 (not below); histogram is exact."""
     rows = [(i, "w", "en", "a", 10) for i in range(2)]
     rows += [(10 + i, "w", "en", "b", 10) for i in range(5)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.class_size: r
         for r in registry.QUERIES["k_anonymity_audit"](spark, str(tmp_path)).collect()
@@ -38,8 +34,7 @@ def test_embedding_label_centroid_finds_planted_outlier(spark, tmp_path):
         (10, [1.0, 1.0], 1),
         (11, [1.0, 1.0], 1),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    df.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=rows)
     got = {
         r.label: r
         for r in registry.QUERIES["embedding_label_centroid"](
@@ -60,10 +55,7 @@ def test_langid_confusion_diagonal_and_off(spark, tmp_path):
         (0, fr, "fr", "s", 10),
         (1, fr, "en", "s", 10),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         (r.declared, r.predicted): r.n_docs
         for r in registry.QUERIES["langid_confusion"](spark, str(tmp_path)).collect()
@@ -81,10 +73,7 @@ def test_l_diversity_flags_homogeneous_classes(spark, tmp_path):
         (2, "w", "en", "b", 10),
         (3, "w", "en", "b", 10),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.l_distinct: r
         for r in registry.QUERIES["l_diversity_audit"](spark, str(tmp_path)).collect()
@@ -99,11 +88,7 @@ def test_zipf_fit_exact_power_law(spark, tmp_path):
     words = []
     for r, c in enumerate([720, 360, 240, 180, 144, 120], start=1):
         words += [f"w{r}"] * c
-    df = spark.createDataFrame(
-        [(0, " ".join(words), "en", "s", 1)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=[(0, " ".join(words), "en", "s", 1)])
     got = registry.QUERIES["zipf_vocab_fit"](spark, str(tmp_path)).collect()[0]
     assert got.n_vocab == 6
     assert abs(got.slope - (-1.0)) < 1e-4
@@ -122,11 +107,8 @@ def test_dataset_drift_zero_and_planted(spark, tmp_path):
         (1, "w", "en", "s", 10), (3, "w", "fr", "s", 10),
     ]
     for i, rows in enumerate((base, drift)):
-        df = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        )
         p = tmp_path / f"v{i}"
-        df.write.mode("overwrite").parquet(str(p / "documents.parquet"))
+        write_tables(p, documents=rows)
     zero = registry.QUERIES["dataset_drift_kl"](spark, str(tmp_path / "v0")).collect()[0]
     assert zero.kl_new_vs_old == 0.0 and zero.tv_distance == 0.0
     moved = registry.QUERIES["dataset_drift_kl"](spark, str(tmp_path / "v1")).collect()[0]

@@ -61,15 +61,20 @@ class TestPrevQueries:
 
 
 class TestDeltaLines:
-    PREV = {"sf": 0.1, "parsed": {"sf": 0.1, "queries": {"q1": 2.0}}}
+    PREV = {"sf": 0.1, "cpus": 32, "parsed": {"sf": 0.1, "queries": {"q1": 2.0}}}
 
     def test_other_sf_record_gives_no_delta_lines(self):
         # an sf0.001 run against the sf0.1 round record: the ratio would
         # read the data size, not the code
-        assert bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 0.5}, "0.001") == []
+        assert bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 0.5}, "0.001", 32) == []
+
+    def test_other_cpus_record_gives_no_delta_lines(self):
+        # a 4-core run against the 32-core round record: the ratio would
+        # read the machine, not the code
+        assert bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 4.0}, "0.1", 4) == []
 
     def test_same_sf_record_gives_delta_lines(self):
-        lines = bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 4.0, "q9": 1.0}, "0.1")
+        lines = bench.delta_lines("BENCH_r13.json", self.PREV, {"q1": 4.0, "q9": 1.0}, "0.1", 32)
         assert lines == [
             "# delta vs BENCH_r13.json q1: 2.000s -> 4.000s (2.00x)  <-- REGRESSION"
         ]
@@ -81,8 +86,9 @@ class TestDeltaLines:
             prev = json.load(fh)
         timings = {name: 1.0 for name in bench.prev_queries(prev)}
         assert timings
-        assert bench.delta_lines("BENCH_r13.json", prev, timings, "0.001") == []
-        assert len(bench.delta_lines("BENCH_r13.json", prev, timings, "0.1")) == len(timings)
+        assert bench.delta_lines("BENCH_r13.json", prev, timings, "0.001", 32) == []
+        assert bench.delta_lines("BENCH_r13.json", prev, timings, "0.1", 4) == []
+        assert len(bench.delta_lines("BENCH_r13.json", prev, timings, "0.1", 32)) == len(timings)
 
 
 class TestFinalLineLength:

@@ -85,7 +85,6 @@ def test_join_bucketed_query_plan_no_join_exchange(spark, sf_dir, no_broadcast):
     bucketed scans on both sides, no Exchange on either join key."""
     from instructions_mr_spark import registry
 
-    registry.load_all()
     df = registry.QUERIES["join_bucketed"](spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -4,16 +4,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from instructions_mr_spark import registry
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _load():
-    registry.load_all()
 
 
 def test_collocation_pmi_matches_pure_python(spark, sf_dir):

@@ -7,15 +7,7 @@ from __future__ import annotations
 import hashlib
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+from tests.conftest import write_tables
 
 
 def test_simhash_hamming_pairs_identical_and_permuted(spark, tmp_path):
@@ -25,10 +17,9 @@ def test_simhash_hamming_pairs_identical_and_permuted(spark, tmp_path):
     base = " ".join(f"w{i}" for i in range(40))
     perm = " ".join(f"w{i}" for i in reversed(range(40)))
     other = " ".join(f"z{i}" for i in range(40))
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (0, base, "en", "s", 1),
             (1, base, "en", "s", 1),
             (2, perm, "en", "s", 1),
@@ -54,10 +45,9 @@ def test_line_frequency_drops_everywhere(spark, tmp_path):
     p2 = " ".join(f"a{i}" for i in range(10))
     p3 = " ".join(f"b{i}" for i in range(10))
     p4 = " ".join(f"c{i}" for i in range(10))
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (0, p1 + " " + p2, "en", "s", 1),
             (1, p1 + " " + p3, "en", "s", 1),
             (2, p4, "en", "s", 1),
@@ -81,10 +71,7 @@ def test_new_ops_empty_documents(spark, tmp_path):
     for the Zipf fit, NaN-free single) result rather than crashing —
     the first thing that happens when an upstream filter matches
     nothing."""
-    df = spark.createDataFrame(
-        [], "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=[])
     from instructions_mr_spark import registry as reg
 
     for name in (
@@ -115,11 +102,8 @@ def test_line_frequency_order_invariance(spark, tmp_path):
     b = [(0, a[2][1], "en", "s", 1), (1, p_shared, "en", "s", 1), (2, p_shared, "en", "s", 1)]
     outs = []
     for i, rows in enumerate((a, b)):
-        d = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        )
         path = tmp_path / f"v{i}"
-        d.write.mode("overwrite").parquet(str(path / "documents.parquet"))
+        write_tables(path, documents=rows)
         got = reg.QUERIES["dedup_line_frequency"](spark, str(path)).collect()
         outs.append(sorted((r.n_paras, r.n_dropped) for r in got))
     assert outs[0] == outs[1]
@@ -134,10 +118,7 @@ def test_simhash_hamming_all_pairs_within_radius(spark, tmp_path):
     base = " ".join(f"w{i}" for i in range(30))
     rows = [(i, base, "en", "s", 1) for i in range(5)]  # 5 identical docs
     rows.append((9, " ".join(f"q{i}" for i in range(30)), "en", "s", 1))
-    d = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = reg.QUERIES["dedup_simhash_hamming"](spark, str(tmp_path)).collect()
     assert all(r.hamming <= 3 for r in got)
     zero_pairs = {(r.doc_a, r.doc_b) for r in got if r.hamming == 0}
@@ -153,10 +134,7 @@ def test_simhash_calibration_endpoints(spark, tmp_path):
     base = " ".join(f"w{i}" for i in range(30))
     other = " ".join(f"z{i}" for i in range(30))
     rows = [(0, base, "en", "s", 1), (1, base, "en", "s", 1), (2, other, "en", "s", 1)]
-    d = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         (r.doc_a, r.doc_b): r
         for r in reg.QUERIES["simhash_hamming_calibration"](
@@ -178,10 +156,7 @@ def test_batch_padding_waste_exact(spark, tmp_path):
         (2, "a b c d e f g", "en", "s", 1),
         (3, " ".join(["t"] * 10), "en", "s", 1),
     ]
-    d = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.bucket: r
         for r in reg.QUERIES["batch_padding_waste"](spark, str(tmp_path)).collect()

@@ -5,21 +5,13 @@ intersection, query-param mining, and politeness wave scheduling."""
 from __future__ import annotations
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+from tests.conftest import write_tables
 
 
 def test_bpe_pair_counts_weighted_by_word_freq(spark, tmp_path):
     """'aaab aaab ab': word counts aaab:2, ab:1; per-occurrence pairs
     of aaab are aa,aa,ab -> weighted aa:4, ab:2(+1 from word 'ab')."""
-    _write_docs(spark, tmp_path, [(0, "aaab aaab ab", "en", "s", 1)])
+    write_tables(tmp_path, documents=[(0, "aaab aaab ab", "en", "s", 1)])
     got = {
         r.pair: r.cnt
         for r in registry.QUERIES["bpe_pair_counts"](spark, str(tmp_path)).collect()
@@ -31,10 +23,9 @@ def test_topic_seed_assign_argmax_and_tiebreak(spark, tmp_path):
     """Doc 0 has 2 storage hits vs 1 exec hit -> storage; doc 1 is
     pure exec; doc 2 matches nothing and stays unlabeled; doc 3 ties
     storage/exec 1-1 -> lexicographically first topic (exec) wins."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (0, "table table scan", "en", "s", 1),
             (1, "scan fast", "en", "s", 1),
             (2, "nothing matches here", "en", "s", 1),
@@ -54,10 +45,9 @@ def test_topic_seed_assign_argmax_and_tiebreak(spark, tmp_path):
 def test_posting_list_intersect_requires_all_terms(spark, tmp_path):
     """Only the doc containing table AND scan AND merge qualifies;
     tf_total sums the three term frequencies."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (0, "table scan merge table", "en", "s", 1),
             (1, "table scan scan", "en", "s", 1),  # no merge
             (2, "merge merge", "en", "s", 1),
@@ -71,8 +61,9 @@ def test_posting_list_intersect_requires_all_terms(spark, tmp_path):
 def test_url_param_mining_counts_and_policy(spark, tmp_path):
     """Synthesized URLs of docs 0..5: utm_source on %3==0 docs, id on
     %3 in {0,1}, utm_campaign on %3==1; policy flags only utm_*."""
-    _write_docs(
-        spark, tmp_path, [(i, "w", "en", "s", 1) for i in range(6)]
+    write_tables(
+        tmp_path,
+        documents=[(i, "w", "en", "s", 1) for i in range(6)],
     )
     got = {
         r.param: r
@@ -87,10 +78,9 @@ def test_url_param_mining_counts_and_policy(spark, tmp_path):
 def test_crawl_frontier_politeness_one_fetch_per_host_per_wave(spark, tmp_path):
     """Three docs on host s.com queue up as waves 1,2,3; one doc on
     host tt.com lands in wave 1 -> histogram {1:2, 2:1, 3:1}."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (1, "w", "en", "s", 1),
             (3, "w", "en", "s", 1),
             (5, "w", "en", "s", 1),

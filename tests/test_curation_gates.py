@@ -65,7 +65,6 @@ def test_blocklist_word_exact_not_substring(spark):
 
 
 def test_registry_queries_run_on_corpus(spark, sf_dir):
-    registry.load_all()
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     norm = registry.QUERIES["dedup_exact_normalized"](spark, sf_dir)
     assert norm.agg(F.sum("n_copies")).first()[0] == n_docs

@@ -7,16 +7,9 @@ brute force.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from instructions_mr_spark import registry
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _load():
-    registry.load_all()
 
 
 def test_dsir_upweights_target_domain(spark, sf_dir):

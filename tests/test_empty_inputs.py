@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import write_tables
+
 
 def test_asof_empty_right(spark):
     from instructions_mr_spark.operators.asof import asof_join
@@ -99,12 +101,8 @@ def test_span_cut_keepfirst_no_repeats(spark, tmp_path):
     under both cut policies."""
     from instructions_mr_spark import registry
 
-    registry.load_all()
     docs = [(1, "one two three four five six seven eight nine", "en", "s", 9)]
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=docs)
     for name in ("dedup_span_cut", "dedup_span_cut_keepfirst"):
         r = registry.QUERIES[name](spark, str(tmp_path)).collect()[0]
         assert (r.n_tokens, r.n_kept) == (9, 9), name

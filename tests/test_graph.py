@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 from instructions_mr_spark import registry
 from instructions_mr_spark.operators.graph import connected_components
 
-registry.load_all()
-
 
 def test_cc_chain_and_isolated_pair(spark):
     """Transitivity: a chain 1-2-3-4 is ONE component even though 1

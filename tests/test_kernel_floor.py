@@ -79,7 +79,6 @@ def test_floored_queries_do_not_ride_a_single_split(spark, name):
     >= min(cores, 8) tasks even on a single-file input (sf0.001's
     documents table is one parquet file — exactly the under-split
     layout that caused the r11 winnowing wall)."""
-    registry.load_all()
     df = registry.QUERIES[name](spark, SF)
     plan = _plan(df)
     assert "RoundRobinPartitioning" in plan, (
@@ -94,7 +93,6 @@ def test_floored_queries_unchanged_results(spark, name):
     this pins floor-on == floor-off inside one session.)"""
     import instructions_mr_spark.queries.text as textmod
 
-    registry.load_all()
     floored = registry.QUERIES[name](spark, SF)
     # patch the name the query modules bound at import time
     orig = textmod.kernel_floor

@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 from instructions_mr_spark import registry
 from tests.conftest import SF_SMALL
 
-registry.load_all()
-
 # Queries whose round-3 implementations broke on NTZ input.
 NTZ_REGRESSED = [
     "join_asof_nearest",

@@ -65,7 +65,6 @@ def con() -> duckdb.DuckDBPyConnection:
 
 
 def test_no_oracle_column_is_hugeint(con: duckdb.DuckDBPyConnection) -> None:
-    registry.load_all()
     assert registry.ORACLES, "registry is empty — load_all() broken"
     offenders: list[str] = []
     for name, sql in registry.ORACLES.items():
@@ -110,7 +109,6 @@ def test_decimal_paths_recurse_into_nested_types() -> None:
 def test_no_spark_output_is_decimal(spark) -> None:
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"testdata dir missing: {SF_DIR}")
-    registry.load_all()
     offenders: list[str] = []
     for name in FORMER_DECIMAL_QUERIES:
         schema = registry.QUERIES[name](spark, SF_DIR).schema

@@ -21,7 +21,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from instructions_mr_spark import registry
 from instructions_mr_spark.functions import cosine_with_norms, l2_norm
 from instructions_mr_spark.queries.llm_pipeline import _pair_cosine_joinback
 from instructions_mr_spark.sources.tables import load_table
@@ -55,7 +54,6 @@ def _all_pairs(spark):
 
 
 def test_joinback_matches_unfloored_expression_path(spark):
-    registry.load_all()
     e, ids = _all_pairs(spark)
     new = {
         (r.vec_a, r.vec_b): r.cos
@@ -93,7 +91,6 @@ def test_joinback_matches_unfloored_expression_path(spark):
 
 
 def test_joinback_matches_pure_python_fold(spark):
-    registry.load_all()
     e, ids = _all_pairs(spark)
     vecs = {r.vec_id: list(r.embedding) for r in e.collect()}
     got = {

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 from instructions_mr_spark import registry
 
-registry.load_all()
-
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -642,6 +640,45 @@ def test_embedding_math_only_in_functions():
                         if a.name.startswith("_")
                     ]
     assert not private, f"private llm_pipeline names imported: {private}"
+
+
+def test_hand_built_tables_only_via_write_tables():
+    """Hand-built test tables are written only by
+    ``tests/conftest.write_tables``, in the driver's own parquet flavor
+    (tz-less timestamps that Spark reads as TIMESTAMP_NTZ).  A Spark
+    write of a ``TABLE_NAMES`` table, or a private ``_write_*`` helper,
+    would bring back a second flavor that the driver never produces.
+    Tests whose subject is the flavor or a sink keep their own writes."""
+    import ast
+    import glob
+    import os
+    import pathlib
+    import re
+
+    from instructions_mr_spark.sources.tables import TABLE_NAMES
+
+    allowed = {"conftest.py", "test_ntz_timestamps.py", "test_io.py", "test_streaming.py"}
+    table_file = re.compile(r"\b(%s)\.parquet\b" % "|".join(TABLE_NAMES))
+    here = os.path.dirname(__file__)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(here, "*.py"))):
+        name = os.path.basename(path)
+        if name in allowed:
+            continue
+        src = pathlib.Path(path).read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("_write_"):
+                offenders.append(f"{name}:{node.lineno} def {node.name}")
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            writer = node.func.attr == "write_table" or (
+                node.func.attr == "parquet"
+                and ".write" in ast.get_source_segment(src, node.func.value)
+            )
+            args = " ".join(ast.get_source_segment(src, a) for a in node.args)
+            if writer and table_file.search(args):
+                offenders.append(f"{name}:{node.lineno} {node.func.attr}")
+    assert not offenders, f"test tables written outside write_tables: {offenders}"
 
 
 def test_checkpoint_guard_catches_hidden_hint(spark, sf_dir):

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from instructions_mr_spark import registry
 
-registry.load_all()
-
 
 def test_partition_pruned_scan_prunes(spark, sf_dir):
     df = registry.QUERIES["partition_pruned_scan"](spark, sf_dir)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from instructions_mr_spark.config import Instruction
 from instructions_mr_spark.operators.prompts import build_sys_msg, prompt_template_sub
 from instructions_mr_spark.operators.scope import scope_in_record_order
+from tests.conftest import write_tables
 
 # text without surrogates (Spark/Arrow round-trip constraint)
 _txt = st.text(
@@ -205,7 +206,6 @@ def test_interval_concurrency_matches_bruteforce(spark, sf_dir):
 
     from instructions_mr_spark import registry
 
-    registry.load_all()
     out = {
         r.o_custkey: r.max_concurrent
         for r in registry.QUERIES["interval_concurrency"](spark, sf_dir)
@@ -247,11 +247,13 @@ def test_pack_greedy_fold_invariants(spark, tokens):
 
     from instructions_mr_spark.queries.packing import CAPACITY, pack_greedy
 
-    rows = [("s0", i, f"{'w ' * (t - 1)}w") for i, t in enumerate(tokens)]
-    df = spark.createDataFrame(rows, "source string, doc_id long, text string")
-    import tempfile, os
+    rows = [
+        {"source": "s0", "doc_id": i, "text": f"{'w ' * (t - 1)}w"}
+        for i, t in enumerate(tokens)
+    ]
+    import tempfile
     with tempfile.TemporaryDirectory() as tmp:
-        df.write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
+        write_tables(tmp, documents=rows)
         out = pack_greedy(spark, tmp).toPandas().sort_values("doc_id")
     assert list(out["doc_id"]) == list(range(len(tokens)))
     assert list(out["n_tokens"]) == tokens

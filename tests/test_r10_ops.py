@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from instructions_mr_spark import registry
 from instructions_mr_spark.queries._util import t
+from tests.conftest import write_tables
 
-registry.load_all()
 
 def test_zorder_layout_dominates_for_2d_box(spark, sf_dir):
     """The whole point of the audit: for a 2-D box predicate the
@@ -175,15 +175,11 @@ def test_kmv_union_merge_degenerate_corpus_nulls(spark, tmp_path):
     a 3-bigram corpus and require they agree exactly."""
     import duckdb
 
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma", "en", "web", 16),
-            (2, "alpha beta", "en", "book", 10),
-        ],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
     sf = str(tmp_path)
-    docs.coalesce(1).write.parquet(f"{sf}/documents.parquet")
+    write_tables(sf, documents=[
+        (1, "alpha beta gamma", "en", "web", 16),
+        (2, "alpha beta", "en", "book", 10),
+    ])
 
     row = registry.QUERIES["kmv_union_merge"](spark, sf).collect()[0]
     assert row.kth_min_hash is None
@@ -194,7 +190,7 @@ def test_kmv_union_merge_degenerate_corpus_nulls(spark, tmp_path):
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
+        f"read_parquet('{sf}/documents.parquet')"
     )
     o = con.execute(registry.ORACLES["kmv_union_merge"]).fetchone()
     assert o == (

@@ -7,15 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+from tests.conftest import write_tables
 
 
 def test_mixture_temperature_math(spark, tmp_path):
@@ -27,7 +19,7 @@ def test_mixture_temperature_math(spark, tmp_path):
         for _ in range(n):
             rows.append((did, "w", "en", src, 1))
             did += 1
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     out = {
         r.source: r
         for r in registry.QUERIES["mixture_temperature_shares"](
@@ -50,7 +42,7 @@ def test_pack_concat_chunks_tiles_the_stream(spark, tmp_path):
         (i, " ".join(["tok"] * (5 + (i * 7) % 90)), "en", "s", 10)
         for i in range(50)
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = registry.QUERIES["pack_concat_chunks"](spark, str(tmp_path)).collect()
     spans = sorted((r.cum_start, r.cum_start + r.n_tokens) for r in got)
     assert spans[0][0] == 0
@@ -68,11 +60,10 @@ def test_pack_concat_chunks_tiles_the_stream(spark, tmp_path):
 def test_join_fuzzy_blocked_matches(spark, tmp_path):
     """A one-char typo resolves back to its clean name at distance 1;
     clean pass-through rows match themselves at distance 0."""
-    parts = spark.createDataFrame(
-        [(0, "small ring"), (1, "red widget"), (2, "blue bolt")],
-        "p_partkey long, p_name string",
+    names = ["small ring", "red widget", "blue bolt"]
+    write_tables(
+        tmp_path, part=[{"p_partkey": k, "p_name": n} for k, n in enumerate(names)]
     )
-    parts.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
     got = {
         r.p_partkey: r
         for r in registry.QUERIES["join_fuzzy_blocked"](

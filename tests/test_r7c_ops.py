@@ -7,44 +7,15 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, suppkey, linenumber)"""
-    full = [
-        (ok, pk, sk, ln, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk, sk, ln in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk, sk, ln):
+    return (ok, pk, sk, ln, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, totalprice, orderdate)"""
-    full = [(ok, ck, "O", tp, od, "1-URGENT") for ok, ck, tp, od in rows]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+def _order(ok, ck, tp, od):
+    return (ok, ck, "O", tp, od, "1-URGENT")
 
 
 def _ts(m):
@@ -62,7 +33,7 @@ def test_event_transition_matrix(spark, tmp_path):
         (4, _ts(3), 1, "C", 0.0, "{}"),
         (5, _ts(0), 2, "A", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         (r.event_type, r.next_type): r
         for r in registry.QUERIES["event_transition_matrix"](
@@ -83,7 +54,7 @@ def test_event_transition_tie_breaks_on_event_id(spark, tmp_path):
         (2, _ts(0), 1, "B", 0.0, "{}"),
         (3, _ts(1), 1, "C", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         (r.event_type, r.next_type)
         for r in registry.QUERIES["event_transition_matrix"](
@@ -102,7 +73,7 @@ def test_customer_rfm_segments(spark, tmp_path):
     rows = [
         (k, k, 100.0 * k, datetime(2024, 1, k)) for k in range(1, 6)
     ]
-    _write_orders(spark, tmp_path, rows)
+    write_tables(tmp_path, orders=[_order(*r) for r in rows])
     got = {
         r.custkey: r
         for r in registry.QUERIES["customer_rfm_segments"](
@@ -131,7 +102,7 @@ def test_copurchase_pairs_support_threshold(spark, tmp_path):
         (3, 101, 1, 1),
         (3, 103, 1, 2),
     ]
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = registry.QUERIES["copurchase_pairs"](spark, str(tmp_path)).collect()
     assert len(got) == 1
     assert (got[0].part_a, got[0].part_b, got[0].n_orders) == (101, 102, 2)
@@ -146,7 +117,7 @@ def test_supplier_assortment_overlap(spark, tmp_path):
         (3, 102, 2, 1),
         (4, 103, 2, 1),
     ]
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = registry.QUERIES["supplier_assortment_overlap"](
         spark, str(tmp_path)
     ).collect()
@@ -154,13 +125,6 @@ def test_supplier_assortment_overlap(spark, tmp_path):
     r = got[0]
     assert (r.supp_a, r.supp_b, r.n_common, r.n_a, r.n_b) == (1, 2, 1, 2, 2)
     assert r.jaccard_e6 == 333_333
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
 
 def test_triangle_count_square_with_diagonal(spark, tmp_path):
@@ -175,7 +139,7 @@ def test_triangle_count_square_with_diagonal(spark, tmp_path):
             ok += 1
             rows.append((ok, 100 + a, 1, 1))
             rows.append((ok, 100 + b, 1, 2))
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     r = registry.QUERIES["graph_triangle_count"](spark, str(tmp_path)).collect()[0]
     assert (r.n_vertices, r.n_edges, r.n_triangles, r.n_wedges) == (4, 5, 2, 8)
     assert r.clustering_e6 == 750_000
@@ -196,7 +160,7 @@ def test_t_closeness_skewed_class_flagged(spark, tmp_path):
         rows.append((did, "x", "en", "long", 110)); did += 1
     # one doc in a middle bucket so m=3 and the EMD normalizer is m-1=2
     rows.append((did, "x", "en", "balanced", 60)); did += 1
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = {
         (r.lang, r.source): r
         for r in registry.QUERIES["t_closeness_audit"](spark, str(tmp_path)).collect()
@@ -218,7 +182,7 @@ def test_join_key_skew_profile(spark, tmp_path):
     for _ in range(101):
         ok += 1
         rows.append((ok, 1000, 10.0, datetime(2024, 1, 1)))
-    _write_orders(spark, tmp_path, rows)
+    write_tables(tmp_path, orders=[_order(*r) for r in rows])
     r = registry.QUERIES["join_key_skew_profile"](spark, str(tmp_path)).collect()[0]
     assert (r.distinct_keys, r.total_rows, r.max_count) == (100, 200, 101)
     assert r.top1_share_e6 == 505_000
@@ -230,7 +194,7 @@ def test_range_partition_bounds_tile_the_key_space(spark, tmp_path):
     """64 rows over keys 1..64 into 32 buckets -> every bucket gets
     exactly 2 rows and upper bounds 2,4,...,64."""
     rows = [(k, k, 1, 1) for k in range(1, 65)]
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = sorted(
         registry.QUERIES["range_partition_bounds"](spark, str(tmp_path)).collect(),
         key=lambda r: r.bucket,

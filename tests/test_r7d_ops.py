@@ -7,22 +7,7 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_embeddings(spark, tmp_path, rows):
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    df.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import write_tables
 
 
 def test_ann_recall_perfect_when_one_bucket(spark, tmp_path):
@@ -33,7 +18,7 @@ def test_ann_recall_perfect_when_one_bucket(spark, tmp_path):
         (i, [float(i + 1), float(i + 1), float(i + 1), float(i + 1)], 0)
         for i in range(20)
     ]
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     got = registry.QUERIES["ann_recall_at_k"](spark, str(tmp_path)).collect()
     assert len(got) == 16
     for r in got:
@@ -56,7 +41,7 @@ def test_ann_recall_drops_when_neighbor_crosses_bucket(spark, tmp_path):
     plant = [-eps, -eps, -eps, -eps] + [0.0] * 16
     plant[4] = 1.0  # same direction as probe 0
     rows.append((16, plant, 0))
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     got = {r.qid: r for r in registry.QUERIES["ann_recall_at_k"](spark, str(tmp_path)).collect()}
     assert got[0].n_candidates == 15 and got[0].n_hits == 9
     for q in range(1, 16):
@@ -73,7 +58,7 @@ def test_ts_linear_interpolate_bridges_interior_gap(spark, tmp_path):
         (2, h(0, 50), 1, "A", 1.00, "{}"),  # last of hour 0 wins
         (3, h(3), 1, "A", 4.00, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         (r.event_type, r.hour_start.hour): r
         for r in registry.QUERIES["ts_linear_interpolate"](spark, str(tmp_path)).collect()
@@ -94,7 +79,7 @@ def test_ts_linear_interpolate_edges_stay_null(spark, tmp_path):
         (2, h(3), 1, "A", 1.00, "{}"),  # A spans the grid
         (3, h(2), 1, "B", 7.50, "{}"),  # B observed once
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         (r.event_type, r.hour_start.hour): r
         for r in registry.QUERIES["ts_linear_interpolate"](spark, str(tmp_path)).collect()
@@ -117,39 +102,18 @@ def test_label_agreement_kappa_half(spark, tmp_path):
         (2, pos1, 1),  # pred 1, label 1: agree
         (3, neg, 1),   # pred 0, label 1: disagree
     ]
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     r = registry.QUERIES["label_agreement_kappa"](spark, str(tmp_path)).collect()[0]
     assert r.n == 4 and r.diag_agree == 3 and r.pe_num == 8
     assert r.kappa_e6 == 500_000
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, suppkey, linenumber)"""
-    full = [
-        (ok, pk, sk, ln, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk, sk, ln in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk, sk, ln):
+    return (ok, pk, sk, ln, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, priority)"""
-    full = [
-        (ok, ck, "O", 1.0, datetime(2024, 1, 1), pr) for ok, ck, pr in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+def _order(ok, ck, pr):
+    return (ok, ck, "O", 1.0, datetime(2024, 1, 1), pr)
 
 
 def test_clustering_coeff_square_with_diagonal(spark, tmp_path):
@@ -164,7 +128,7 @@ def test_clustering_coeff_square_with_diagonal(spark, tmp_path):
             ok += 1
             rows.append((ok, 100 + a, 1, 1))
             rows.append((ok, 100 + b, 1, 2))
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = {
         r.v: r
         for r in registry.QUERIES["graph_clustering_coeff"](spark, str(tmp_path)).collect()
@@ -182,15 +146,13 @@ def test_fd_candidate_audit_detects_violations(spark, tmp_path):
     breaks with max fan-out 2.  Lineitem: (orderkey, linenumber) is
     unique so the composite FD holds; part 101 ships from two
     suppliers so l_partkey->l_suppkey breaks in exactly one group."""
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, "1-URGENT"), (2, 1, "2-HIGH"), (3, 2, "1-URGENT")],
+        orders=[_order(*r) for r in [(1, 1, "1-URGENT"), (2, 1, "2-HIGH"), (3, 2, "1-URGENT")]],
     )
-    _write_lineitem(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 101, 1, 1), (1, 101, 2, 2), (2, 102, 1, 1)],
+        lineitem=[_line(*r) for r in [(1, 101, 1, 1), (1, 101, 2, 2), (2, 102, 1, 1)]],
     )
     got = {
         r.fd: r
@@ -205,17 +167,8 @@ def test_fd_candidate_audit_detects_violations(spark, tmp_path):
     assert (r4.n_groups, r4.n_violations, r4.max_variants, r4.holds) == (2, 1, 2, False)
 
 
-def _write_orders_rev(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, totalprice)"""
-    full = [
-        (ok, ck, "O", tp, datetime(2024, 1, 1), "1-URGENT") for ok, ck, tp in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+def _order_rev(ok, ck, tp):
+    return (ok, ck, "O", tp, datetime(2024, 1, 1), "1-URGENT")
 
 
 def test_pareto_revenue_share_deciles(spark, tmp_path):
@@ -224,7 +177,7 @@ def test_pareto_revenue_share_deciles(spark, tmp_path):
     share_e6 = 10000*1e6 // 55000 = 181818; the last cumulative share
     is exactly 1e6."""
     rows = [(i, i, float(110 - 10 * i)) for i in range(1, 11)]
-    _write_orders_rev(spark, tmp_path, rows)
+    write_tables(tmp_path, orders=[_order_rev(*r) for r in rows])
     got = {
         r.decile: r
         for r in registry.QUERIES["pareto_revenue_share"](spark, str(tmp_path)).collect()
@@ -248,7 +201,7 @@ def test_funnel_time_to_convert(spark, tmp_path):
         (4, h(9), 3, "purchase", 0.0, "{}"),
         (5, h(10), 3, "view", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.user_bucket: r
         for r in registry.QUERIES["funnel_time_to_convert"](spark, str(tmp_path)).collect()
@@ -277,7 +230,7 @@ def test_attribution_position_based_u_shape(spark, tmp_path):
         (7, m(6), 1, "purchase", 0.0, "{}"),
         (8, m(0), 2, "click", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.channel: r
         for r in registry.QUERIES["attribution_position_based"](spark, str(tmp_path)).collect()
@@ -292,7 +245,7 @@ def test_sketch_quantile_merge_uniform(spark, tmp_path):
     reported as the bin's lower bound in cents."""
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, 1, "view", float(10 * i), "{}") for i in range(10)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     r = registry.QUERIES["sketch_quantile_merge"](spark, str(tmp_path)).collect()[0]
     assert (r.n, r.n_bins) == (10, 10)
     assert r.p50_lo_cents == 4000
@@ -314,7 +267,7 @@ def test_trend_slope_by_type(spark, tmp_path):
         for _ in range(2):
             eid += 1
             rows.append((eid, h(hr), 2, "B", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.event_type: r
         for r in registry.QUERIES["trend_slope_by_type"](spark, str(tmp_path)).collect()
@@ -338,7 +291,7 @@ def test_ann_multiprobe_recovers_hamming1_neighbor(spark, tmp_path):
     plant = [-eps, eps, eps, eps] + [0.0] * 16  # bucket 14
     plant[4] = 1.0  # same direction as probe 0
     rows.append((16, plant, 0))
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     single = {r.qid: r for r in registry.QUERIES["ann_recall_at_k"](spark, str(tmp_path)).collect()}
     multi = {r.qid: r for r in registry.QUERIES["ann_recall_multiprobe"](spark, str(tmp_path)).collect()}
     assert single[0].n_hits == 9 and single[0].n_candidates == 15
@@ -361,16 +314,9 @@ def test_segment_bitmap_intersect_counts(spark, tmp_path):
         if u % 3 == 0:
             eid += 1
             rows.append((eid, h, u, "purchase", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     r = registry.QUERIES["segment_bitmap_intersect"](spark, str(tmp_path)).collect()[0]
     assert (r.n_click, r.n_purchase, r.n_both, r.n_either) == (21, 14, 7, 28)
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
 
 def test_dedup_cluster_size_hist(spark, tmp_path):
@@ -386,7 +332,7 @@ def test_dedup_cluster_size_hist(spark, tmp_path):
         (11, other + " tail", "en", "web", len(other) + 5),
         (20, "unrelated tiny snippet of text", "en", "web", 30),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = {
         r.size: r
         for r in registry.QUERIES["dedup_cluster_size_hist"](spark, str(tmp_path)).collect()
@@ -404,12 +350,7 @@ def test_features_point_in_time_exclusive_frame(spark, tmp_path):
     full = [
         (ok, ck, "O", tp, datetime(2024, 1, ok), "1-URGENT") for ok, ck, tp in rows
     ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=full)
     got = {
         r.o_orderkey: r
         for r in registry.QUERIES["features_point_in_time"](spark, str(tmp_path)).collect()
@@ -433,12 +374,7 @@ def test_session_path_topk(spark, tmp_path):
             rows.append((eid, m(u, i), u, typ, 0.0, "{}"))
     eid += 1
     rows.append((eid, m(3, 0), 3, "click", 0.0, "{}"))
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     got = {
         r.path: r.n_sessions
         for r in registry.QUERIES["session_path_topk"](spark, str(tmp_path)).collect()
@@ -449,10 +385,10 @@ def test_session_path_topk(spark, tmp_path):
 def test_join_size_estimate_identity(spark, tmp_path):
     """Histogram prediction equals executed join count: 2 orders with
     3 and 1 lineitems -> 4 rows, max key contribution 3."""
-    _write_orders(spark, tmp_path, [(1, 1, "1-URGENT"), (2, 1, "1-URGENT")])
-    _write_lineitem(
-        spark, tmp_path,
-        [(1, 101, 1, 1), (1, 102, 1, 2), (1, 103, 1, 3), (2, 101, 1, 1)],
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, "1-URGENT"), (2, 1, "1-URGENT")]])
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 101, 1, 1), (1, 102, 1, 2), (1, 103, 1, 3), (2, 101, 1, 1)]],
     )
     r = registry.QUERIES["join_size_estimate"](spark, str(tmp_path)).collect()[0]
     assert (r.actual_rows, r.predicted_rows, r.max_key_rows) == (4, 4, 3)
@@ -463,10 +399,10 @@ def test_negative_sampling_determinism_and_filter(spark, tmp_path):
     """Two runs produce identical counts (hash-seeded, not random);
     every kept negative avoids the customer's own positives, and each
     positive draws exactly two candidates."""
-    _write_orders(spark, tmp_path, [(1, 1, "1-URGENT"), (2, 2, "1-URGENT")])
-    _write_lineitem(
-        spark, tmp_path,
-        [(1, 101, 1, 1), (1, 102, 1, 2), (2, 103, 1, 1)],
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, "1-URGENT"), (2, 2, "1-URGENT")]])
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 101, 1, 1), (1, 102, 1, 2), (2, 103, 1, 1)]],
     )
     q = registry.QUERIES["negative_sampling_pairs"]
     a = sorted(map(tuple, q(spark, str(tmp_path)).collect()))
@@ -488,7 +424,7 @@ def test_dedup_quality_bias_buckets(spark, tmp_path):
         (1, base, "en", "web", 600),
         (2, base + " tail", "en", "web", 605),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = {
         r.len_bucket: r
         for r in registry.QUERIES["dedup_quality_bias"](spark, str(tmp_path)).collect()
@@ -509,7 +445,7 @@ def test_window_ewma_dyadic_halving(spark, tmp_path):
         for _ in range(cnt):
             eid += 1
             rows.append((eid, h(hr), 1, "A", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.hour_start.hour: r
         for r in registry.QUERIES["window_ewma_dyadic"](spark, str(tmp_path)).collect()
@@ -530,12 +466,7 @@ def test_skyline_price_size(spark, tmp_path):
         (4, "d", "B", "T", 5, 1.00),
         (5, "e", "B", "T", 8, 3.00),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+    write_tables(tmp_path, part=rows)
     got = [
         (r.p_partkey, r.price_cents, r.size)
         for r in registry.QUERIES["skyline_price_size"](spark, str(tmp_path)).collect()
@@ -548,7 +479,7 @@ def test_percentile_exact_twophase(spark, tmp_path):
     the 9th, p99 the 10th — exact discrete order statistics."""
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, 1, "view", (i + 1) / 100.0, "{}") for i in range(10)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     r = registry.QUERIES["percentile_exact_twophase"](spark, str(tmp_path)).collect()[0]
     assert (r.n, r.p50_cents, r.p90_cents, r.p99_cents) == (10, 5, 9, 10)
 
@@ -564,7 +495,7 @@ def test_time_weighted_avg_step_function(spark, tmp_path):
         (2, base + timedelta(seconds=30), 1, "A", 3.00, "{}"),
         (3, base + timedelta(seconds=40), 1, "A", 1.00, "{}"),  # closes
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     r = registry.QUERIES["time_weighted_avg"](spark, str(tmp_path)).collect()[0]
     assert (r.twap_num, r.twap_den, r.twap_cents) == (100 * 30 + 300 * 10, 40, 150)
 
@@ -578,7 +509,7 @@ def test_ann_recall_truncated_dims_detects_prefix_loss(spark, tmp_path):
     rows = [
         (i, [float(i + 1)] * 16 + [0.0] * 48, 0) for i in range(20)
     ]  # prefix-only structure, cosine 1.0 everywhere
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     got = registry.QUERIES["ann_recall_truncated_dims"](spark, str(tmp_path)).collect()
     assert len(got) == 16
     for r in got:
@@ -598,14 +529,7 @@ def test_abc_classification_boundaries(spark, tmp_path):
         (ok, pk, sk, ln, 1.0, price, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
         for ok, pk, sk, ln, price in rows
     ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=full)
     got = {
         r.abc_class: r
         for r in registry.QUERIES["abc_classification"](spark, str(tmp_path)).collect()
@@ -626,7 +550,7 @@ def test_cdc_chunk_stats_insertion_locality(spark, tmp_path):
         (2, ("alpha beta gamma INSERTED delta epsilon zeta eta theta iota kappa "
              + base).strip(), "en", "web", len(base) + 9),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = registry.QUERIES["cdc_chunk_stats"](spark, str(tmp_path)).collect()
     total_docs = sum(r.n_docs for r in got)
     assert total_docs == 3
@@ -641,7 +565,7 @@ def test_experiment_assignment_srm(spark, tmp_path):
     is in exactly one arm; the flag fires only past 10% imbalance."""
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, i, "view", 0.0, "{}") for i in range(200)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     q = registry.QUERIES["experiment_assignment_srm"]
     a = sorted(map(tuple, q(spark, str(tmp_path)).collect()))
     b = sorted(map(tuple, q(spark, str(tmp_path)).collect()))
@@ -658,7 +582,7 @@ def test_schema_merge_scan_evolution(spark, tmp_path):
     carry exactly 2x cents; nothing is lost in the merged read."""
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, 1, "view", 1.00, "{}") for i in range(6)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.batch: r
         for r in registry.QUERIES["schema_merge_scan"](spark, str(tmp_path)).collect()
@@ -673,7 +597,7 @@ def test_incremental_agg_merge_identity(spark, tmp_path):
     """Merged state+delta equals the full recompute on every group."""
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, 1, "view" if i % 2 else "click", float(i), "{}") for i in range(20)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = registry.QUERIES["incremental_agg_merge"](spark, str(tmp_path)).collect()
     assert got
     for r in got:
@@ -693,7 +617,7 @@ def test_rolling_corr_terms_perfect_correlation(spark, tmp_path):
             for _ in range(cnt):
                 eid += 1
                 rows.append((eid, h(hr), 1, typ, 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.hour_start.hour: r
         for r in registry.QUERIES["rolling_corr_terms"](spark, str(tmp_path)).collect()
@@ -714,7 +638,7 @@ def test_event_disorder_histogram(spark, tmp_path):
         (2, datetime(2024, 1, 1, 10, 5), 1, "A", 0.0, "{}"),
         (3, datetime(2024, 1, 1, 10, 4, 30), 1, "A", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.disorder_bucket: r.n
         for r in registry.QUERIES["event_disorder_histogram"](spark, str(tmp_path)).collect()
@@ -734,7 +658,7 @@ def test_rare_category_collapse(spark, tmp_path):
         for _ in range(cnt):
             eid += 1
             rows.append((eid, h, 1, "view", 0.0, '{"k": "%s"}' % k))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.category: r
         for r in registry.QUERIES["rare_category_collapse"](spark, str(tmp_path)).collect()
@@ -753,7 +677,7 @@ def test_seasonality_profile_peak_flag(spark, tmp_path):
         for _ in range(cnt):
             eid += 1
             rows.append((eid, datetime(2024, 1, 1, hr), 1, "view", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.hour_of_day: r
         for r in registry.QUERIES["seasonality_profile"](spark, str(tmp_path)).collect()
@@ -763,15 +687,8 @@ def test_seasonality_profile_peak_flag(spark, tmp_path):
     assert got[10].dow_idx == got[11].dow_idx  # same day
 
 
-def _write_part(spark, tmp_path, rows):
-    """rows: (partkey, name)"""
-    full = [(pk, nm, "B", "T", 1, 1.0) for pk, nm in rows]
-    df = spark.createDataFrame(
-        full,
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _part(pk, nm):
+    return (pk, nm, "B", "T", 1, 1.0)
 
 
 def test_entity_resolution_conflates_via_transitive_match(spark, tmp_path):
@@ -781,7 +698,7 @@ def test_entity_resolution_conflates_via_transitive_match(spark, tmp_path):
     ambiguity best-match-only linking would hide.  'omega shaft'
     stays its own cluster (n_clean = 1)."""
     rows = [(1, "alpha gear"), (2, "alphagear"), (3, "omega shaft")]
-    _write_part(spark, tmp_path, rows)
+    write_tables(tmp_path, part=[_part(*r) for r in rows])
     got = {
         r.n_clean: r
         for r in registry.QUERIES["entity_resolution_clusters"](spark, str(tmp_path)).collect()
@@ -799,7 +716,7 @@ def test_metric_change_contribution_additivity(spark, tmp_path):
         (3, datetime(2024, 1, 2, 0), 1, "A", 2.00, "{}"),
         (4, datetime(2024, 1, 2, 0), 1, "B", 1.00, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.event_type: r
         for r in registry.QUERIES["metric_change_contribution"](spark, str(tmp_path)).collect()
@@ -815,7 +732,7 @@ def test_percentile_group_twophase(spark, tmp_path):
     h = datetime(2024, 1, 1, 10)
     rows = [(i, h, 1, "A", (i + 1) / 100.0, "{}") for i in range(10)]
     rows += [(100 + i, h, 1, "B", 0.42, "{}") for i in range(4)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.event_type: r
         for r in registry.QUERIES["percentile_group_twophase"](spark, str(tmp_path)).collect()
@@ -829,7 +746,7 @@ def test_bloom_fpr_measured_vs_theory(spark, tmp_path):
     is a false positive; with m=4096 and few insertions the measured
     FPR must stay far below 100% and the bit count below k*n."""
     rows = [(i, "w%d" % i, "en", "web", 3) for i in range(200)]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     r = registry.QUERIES["bloom_fpr_calibration"](spark, str(tmp_path)).collect()[0]
     assert r.m == 4096 and r.k == 3
     assert r.n_inserted == 100 and r.n_probes == 100
@@ -847,7 +764,7 @@ def test_churn_label_table(spark, tmp_path):
         (3, datetime(2024, 1, 1), 2, "view", 0.0, "{}"),
         (4, datetime(2024, 1, 3), 3, "view", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.user_bucket: r
         for r in registry.QUERIES["churn_label_table"](spark, str(tmp_path)).collect()
@@ -868,7 +785,7 @@ def test_set_sim_join_prefix_exactness(spark, tmp_path):
         (10, b, "en", "web", len(b)),
         (20, "utterly different words entirely elsewhere", "en", "web", 40),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_tables(tmp_path, documents=rows)
     got = [
         (r.doc_a, r.doc_b, r.jaccard_e6)
         for r in registry.QUERIES["set_sim_join_prefix"](spark, str(tmp_path)).collect()
@@ -887,7 +804,7 @@ def test_graph_link_prediction_square(spark, tmp_path):
             ok += 1
             rows.append((ok, 100 + a, 1, 1))
             rows.append((ok, 100 + b, 1, 2))
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = {
         (r.part_a, r.part_b): r
         for r in registry.QUERIES["graph_link_prediction"](spark, str(tmp_path)).collect()
@@ -910,7 +827,7 @@ def test_experiment_uplift_report_consistency(spark, tmp_path):
             for _ in range(2):  # double purchase, single converter
                 eid += 1
                 rows.append((eid, h, u, "purchase", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     uplift = registry.QUERIES["experiment_uplift_report"](spark, str(tmp_path)).collect()
     srm = registry.QUERIES["experiment_assignment_srm"](spark, str(tmp_path)).collect()
     pop_u = {(r.stratum): 0 for r in srm}
@@ -932,7 +849,7 @@ def test_attribution_time_decay_halving(spark, tmp_path):
         (3, datetime(2024, 1, 1, 16), 1, "click", 0.0, "{}"),   # 20h -> 1
         (4, p, 1, "purchase", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         r.channel: r
         for r in registry.QUERIES["attribution_time_decay"](spark, str(tmp_path)).collect()
@@ -947,7 +864,7 @@ def test_ts_gap_report_contiguous_runs(spark, tmp_path):
     h = lambda hr: datetime(2024, 1, 1, hr)
     rows = [(i + 1, h(hr), 1, "A", 0.0, "{}") for i, hr in enumerate([0, 1, 4, 5])]
     rows += [(10 + i, h(hr), 1, "B", 0.0, "{}") for i, hr in enumerate(range(6))]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = registry.QUERIES["ts_gap_report"](spark, str(tmp_path)).collect()
     a_gaps = [r for r in got if r.event_type == "A"]
     assert len(a_gaps) == 1
@@ -966,7 +883,7 @@ def test_sequence_pattern_support_nonadjacent(spark, tmp_path):
         (2, m(1), 1, "error", 0.0, "{}"),
         (3, m(2), 1, "purchase", 0.0, "{}"),
     ]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = {
         (r.first_type, r.then_type): r
         for r in registry.QUERIES["sequence_pattern_support"](spark, str(tmp_path)).collect()

@@ -9,62 +9,23 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _order(ok, tp):
+    return (ok, 1, "O", tp, datetime(2024, 1, 1), "1-URGENT")
 
 
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, totalprice)"""
-    full = [
-        (ok, 1, "O", tp, datetime(2024, 1, 1), "1-URGENT") for ok, tp in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-
-
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey)"""
-    full = [
-        (ok, pk, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk):
+    return (ok, pk, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
 def test_phrase_match_consecutive_only(spark, tmp_path):
     """Doc 1 contains 'slow hash batch' twice; doc 2 has all three
     words but never consecutively -> only doc 1 matches, count 2."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (1, "slow hash batch x slow hash batch", "en", "s", 33),
             (2, "slow x hash x batch slow", "en", "s", 24),
         ],
@@ -80,10 +41,9 @@ def test_rank_fusion_borda_hand_scores(spark, tmp_path):
     ranks: doc 4 (5) -> 1, doc 2 (10) -> 2, doc 1 (20) -> 3.  Borda
     (2N - r_tf - r_len, N=3): doc 1 -> 2, doc 2 -> 2, doc 4 -> 2;
     fused order by rank-sum then doc_id: 1, 2, 4."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (1, "join merge sort", "en", "s", 20),
             (2, "join merge", "en", "s", 10),
             (3, "table scan", "en", "s", 1),
@@ -101,10 +61,9 @@ def test_target_encoding_loo_excludes_self(spark, tmp_path):
     is the sum of the OTHER two; singleton type B gets NULL
     denominator (no peers)."""
     h = datetime(2024, 1, 1, 0)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[
             (1, h, 1, "A", 1.00, "{}"),
             (2, h, 2, "A", 2.00, "{}"),
             (3, h, 3, "A", 3.00, "{}"),
@@ -132,7 +91,7 @@ def test_cusum_changepoint_level_shift(spark, tmp_path):
         for _ in range(cnt):
             eid += 1
             rows.append((eid, datetime(2024, 1, 1, hr, 30), 1, "A", 0.0, "{}"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = registry.QUERIES["cusum_changepoint"](spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
@@ -144,8 +103,9 @@ def test_benford_digit_audit_shares(spark, tmp_path):
     """Prices 1.00 x3 (digit 1) and 2.50 x1 (digit 2): observed
     shares 750000 / 250000 e6; expected columns are the Benford
     literals 301029 / 176091."""
-    _write_orders(
-        spark, tmp_path, [(1, 1.00), (2, 1.00), (3, 1.00), (4, 2.50)]
+    write_tables(
+        tmp_path,
+        orders=[_order(*r) for r in [(1, 1.00), (2, 1.00), (3, 1.00), (4, 2.50)]],
     )
     got = {
         r.digit: r
@@ -167,7 +127,7 @@ def test_degree_assortativity_path_graph(spark, tmp_path):
     rows = []
     for ok, (pa, pb) in [(10, (1, 2)), (11, (1, 2)), (12, (2, 3)), (13, (2, 3))]:
         rows += [(ok, pa), (ok, pb)]
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = registry.QUERIES["degree_assortativity_terms"](spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
@@ -180,10 +140,9 @@ def test_mad_robust_outliers_fence(spark, tmp_path):
     point is flagged."""
     h = datetime(2024, 1, 1, 0)
     vals = [1.00, 2.00, 2.00, 3.00, 100.00]
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [(i, h, i, "A", v, "{}") for i, v in enumerate(vals)],
+        events=[(i, h, i, "A", v, "{}") for i, v in enumerate(vals)],
     )
     got = registry.QUERIES["mad_robust_outliers"](spark, str(tmp_path)).collect()
     assert len(got) == 1
@@ -198,7 +157,7 @@ def test_ks_split_drift_disjoint_supports(spark, tmp_path):
     h = datetime(2024, 1, 1, 0)
     rows = [(i, h, i, "A", 1.00, "{}") for i in range(4)]
     rows += [(i, h, i, "A", 2.00, "{}") for i in (180, 181)]
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=rows)
     got = registry.QUERIES["ks_split_drift"](spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
@@ -215,7 +174,7 @@ def test_graph_bfs_hops_cap(spark, tmp_path):
         for _ in range(2):
             rows += [(ok, pa), (ok, pb)]
             ok += 1
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     got = {
         r.hop: r.n_vertices
         for r in registry.QUERIES["graph_bfs_hops"](spark, str(tmp_path)).collect()
@@ -227,20 +186,13 @@ def test_zone_map_skip_audit_layouts(spark, tmp_path):
     """Three 1-row chunks under natural orderkey layout (two fall
     wholly outside [1998-01-01, 1998-07-01) -> skippable); clustering
     collapses them into one straddling chunk -> zero skippable."""
-    _write_orders_dated = [
+    dated = [
         (500, datetime(1997, 6, 1)),
         (1500, datetime(1998, 3, 1)),
         (2500, datetime(1998, 9, 1)),
     ]
-    full = [
-        (ok, 1, "O", 1.0, dt, "1-URGENT") for ok, dt in _write_orders_dated
-    ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    full = [(ok, 1, "O", 1.0, dt, "1-URGENT") for ok, dt in dated]
+    write_tables(tmp_path, orders=full)
     got = {
         r.layout: r
         for r in registry.QUERIES["zone_map_skip_audit"](spark, str(tmp_path)).collect()

@@ -8,89 +8,47 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_customers(spark, tmp_path, rows):
-    """rows: (custkey, segment)"""
-    full = [(ck, f"Customer#{ck}", 1, 0.0, seg) for ck, seg in rows]
-    df = spark.createDataFrame(
-        full,
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, totalprice)"""
-    full = [
-        (ok, ck, "O", tp, datetime(2024, 1, 1), "1-URGENT")
-        for ok, ck, tp in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+def _customer(ck, seg):
+    return (ck, f"Customer#{ck}", 1, 0.0, seg)
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, extendedprice)  — discount/tax zero so the
-    line charge IS the extended price."""
-    full = [
-        (ok, 1, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, ep in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _order(ok, ck, tp):
+    return (ok, ck, "O", tp, datetime(2024, 1, 1), "1-URGENT")
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, ts, user_id)"""
-    full = [(eid, ts, uid, "view", 1.0, "{}") for eid, ts, uid in rows]
-    df = spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _line(ok, ep):
+    """Discount and tax are zero, so the line charge IS the extended price."""
+    return (ok, 1, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_docs(spark, tmp_path, rows):
-    """rows: (doc_id, lang, n_chars)"""
-    full = [(did, "x", lang, "s", nc) for did, lang, nc in rows]
-    df = spark.createDataFrame(
-        full, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _event(eid, ts, uid):
+    return (eid, ts, uid, "view", 1.0, "{}")
+
+
+def _doc(did, lang, nc):
+    return (did, "x", lang, "s", nc)
 
 
 def test_gini_hand_value(spark, tmp_path):
     """Revenues 10/20/30/40 in one segment: G = (2*30000 - 5*10000)
     / (4*10000) = 0.25; a second all-equal segment reads 0."""
-    _write_customers(
-        spark, tmp_path, [(1, "A"), (2, "A"), (3, "A"), (4, "A"), (5, "B"), (6, "B")]
-    )
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        customer=[_customer(*r) for r in [(1, "A"), (2, "A"), (3, "A"), (4, "A"), (5, "B"), (6, "B")]],
+    )
+    write_tables(
+        tmp_path,
+        orders=[_order(*r) for r in [
             (1, 1, 10.0),
             (2, 2, 20.0),
             (3, 3, 30.0),
             (4, 4, 40.0),
             (5, 5, 7.0),
             (6, 6, 7.0),
-        ],
+        ]],
     )
     got = {
         r.segment: r
@@ -106,8 +64,8 @@ def test_gini_hand_value(spark, tmp_path):
 def test_hhi_hand_value(spark, tmp_path):
     """Shares 1/4, 1/4, 1/2: HHI = 2*(1/16) + 1/4 = 0.375; top-1
     share = 0.5."""
-    _write_customers(spark, tmp_path, [(1, "A"), (2, "A"), (3, "A")])
-    _write_orders(spark, tmp_path, [(1, 1, 10.0), (2, 2, 10.0), (3, 3, 20.0)])
+    write_tables(tmp_path, customer=[_customer(*r) for r in [(1, "A"), (2, "A"), (3, "A")]])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 10.0), (2, 2, 10.0), (3, 3, 20.0)]])
     row = registry.QUERIES["hhi_concentration"](spark, str(tmp_path)).collect()[0]
     assert row.hhi_e6 == 375000
     assert row.top1_share_e6 == 500000
@@ -117,10 +75,9 @@ def test_hhi_hand_value(spark, tmp_path):
 def test_auc_ties_half_credit(spark, tmp_path):
     """pos lengths {3, 5}, neg lengths {1, 3}: U = 3.5 of 4 pairs
     (the 3-3 tie pays half) -> AUC 0.875."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "en", 3), (2, "en", 5), (3, "fr", 1), (4, "de", 3)],
+        documents=[_doc(*r) for r in [(1, "en", 3), (2, "en", 5), (3, "fr", 1), (4, "de", 3)]],
     )
     row = registry.QUERIES["auc_mann_whitney"](spark, str(tmp_path)).collect()[0]
     assert (row.n_pos, row.n_neg, row.u2, row.auc_e6) == (2, 2, 7, 875000)
@@ -129,15 +86,14 @@ def test_auc_ties_half_credit(spark, tmp_path):
 def test_dau_wau_hand_value(spark, tmp_path):
     """u1 active two days, u2 one day, same week: sum_dau = 3 over
     2 active days, WAU = 2 -> stickiness 3/(2*2) = 0.75."""
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1),
             (2, datetime(2024, 1, 1, 11), 1),
             (3, datetime(2024, 1, 2, 10), 1),
             (4, datetime(2024, 1, 1, 12), 2),
-        ],
+        ]],
     )
     row = registry.QUERIES["dau_wau_stickiness"](spark, str(tmp_path)).collect()[0]
     assert (row.wau, row.n_days, row.sum_dau, row.stickiness_e6) == (
@@ -152,10 +108,11 @@ def test_recon_exact_tolerance_and_orphan_header(spark, tmp_path):
     """Order 1 reconciles exactly, order 2 is off by 50 cents
     (within 1%% of $100), order 3 has no lines at all (off by its
     full $50)."""
-    _write_orders(
-        spark, tmp_path, [(1, 1, 20.0), (2, 1, 100.0), (3, 1, 50.0)]
+    write_tables(
+        tmp_path,
+        orders=[_order(*r) for r in [(1, 1, 20.0), (2, 1, 100.0), (3, 1, 50.0)]],
     )
-    _write_lineitem(spark, tmp_path, [(1, 20.0), (2, 99.5)])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 20.0), (2, 99.5)]])
     row = registry.QUERIES["recon_order_totals"](spark, str(tmp_path)).collect()[0]
     assert (
         row.n_orders,
@@ -165,48 +122,28 @@ def test_recon_exact_tolerance_and_orphan_header(spark, tmp_path):
     ) == (3, 1, 2, 5000)
 
 
-def _write_lineitem_full(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, linenumber, qty, returnflag, shipdate)"""
-    full = [
-        (ok, pk, 1, ln, float(q), 10.0, 0.0, 0.0, rf, "O", sd)
-        for ok, pk, ln, q, rf, sd in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line_full(ok, pk, ln, q, rf, sd):
+    return (ok, pk, 1, ln, float(q), 10.0, 0.0, 0.0, rf, "O", sd)
 
 
-def _write_valued_events(spark, tmp_path, rows):
-    """rows: (event_id, ts, value)"""
-    full = [(eid, ts, 1, "view", v, "{}") for eid, ts, v in rows]
-    df = spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _valued_event(eid, ts, v):
+    return (eid, ts, 1, "view", v, "{}")
 
 
 def test_hits_two_iterations_hand_values(spark, tmp_path):
     """Edges 1->2, 1->3, 2->3 (each pair in two orders): a1 = indeg
     (2:1, 3:2); h1(1)=3, h1(2)=2; a2(2)=3, a2(3)=5; h2(1)=8,
     h2(2)=5."""
-    _write_lineitem_full(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_full(*r) for r in [
             (1, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (1, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (1, 3, 3, 1, "N", datetime(2024, 1, 1)),
             (2, 1, 1, 1, "N", datetime(2024, 1, 2)),
             (2, 2, 2, 1, "N", datetime(2024, 1, 2)),
             (2, 3, 3, 1, "N", datetime(2024, 1, 2)),
-        ],
+        ]],
     )
     got = registry.QUERIES["graph_hits_unnormalized"](
         spark, str(tmp_path)
@@ -218,10 +155,9 @@ def test_hits_two_iterations_hand_values(spark, tmp_path):
 def test_itemset3_counts_only_repeated_triples(spark, tmp_path):
     """Orders 1 and 2 share basket {1,2,3}; order 3's {1,2,4} triple
     appears once -> only (1,2,3) with support 2 survives."""
-    _write_lineitem_full(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_full(*r) for r in [
             (1, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (1, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (1, 3, 3, 1, "N", datetime(2024, 1, 1)),
@@ -231,7 +167,7 @@ def test_itemset3_counts_only_repeated_triples(spark, tmp_path):
             (3, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (3, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (3, 4, 3, 1, "N", datetime(2024, 1, 1)),
-        ],
+        ]],
     )
     got = registry.QUERIES["itemset3_support"](spark, str(tmp_path)).collect()
     assert [(r.part_a, r.part_b, r.part_c, r.support) for r in got] == [
@@ -242,14 +178,13 @@ def test_itemset3_counts_only_repeated_triples(spark, tmp_path):
 def test_inventory_running_balance(spark, tmp_path):
     """Draw 5, restock 10, draw 3 -> balances -5, +5, +2: min -5,
     one below-zero move, mass 2."""
-    _write_lineitem_full(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_full(*r) for r in [
             (1, 7, 1, 5, "N", datetime(2024, 1, 1)),
             (2, 7, 1, 10, "R", datetime(2024, 1, 2)),
             (3, 7, 1, 3, "N", datetime(2024, 1, 3)),
-        ],
+        ]],
     )
     row = registry.QUERIES["inventory_stockout_scan"](
         spark, str(tmp_path)
@@ -261,14 +196,13 @@ def test_inventory_running_balance(spark, tmp_path):
 def test_kendall_terms_hand_values(spark, tmp_path):
     """Daily cents 1, 3, 2 -> pairs (1,3) and (1,2) concordant,
     (3,2) discordant."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 0.01),
             (2, datetime(2024, 1, 2, 10), 0.03),
             (3, datetime(2024, 1, 3, 10), 0.02),
-        ],
+        ]],
     )
     row = registry.QUERIES["kendall_tau_terms"](spark, str(tmp_path)).collect()[0]
     assert (row.n_days, row.concordant, row.discordant, row.tied) == (3, 2, 1, 0)
@@ -276,14 +210,13 @@ def test_kendall_terms_hand_values(spark, tmp_path):
 
 def test_ordinal_pattern_code(spark, tmp_path):
     """Window (1, 3, 2): up, down, up -> code 2*9 + 0*3 + 2 = 20."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 0.01),
             (2, datetime(2024, 1, 2, 10), 0.03),
             (3, datetime(2024, 1, 3, 10), 0.02),
-        ],
+        ]],
     )
     got = registry.QUERIES["ordinal_pattern_counts"](
         spark, str(tmp_path)
@@ -294,10 +227,9 @@ def test_ordinal_pattern_code(spark, tmp_path):
 def test_bellman_ford_weighted_costs(spark, tmp_path):
     """Edges (1,2) w=4 and (2,3) w=1 (weights 1+(a+b)%%5), seed 1:
     best costs 0, 4, 5 -> one vertex at each."""
-    _write_lineitem_full(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_full(*r) for r in [
             (1, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (1, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (2, 1, 1, 1, "N", datetime(2024, 1, 1)),
@@ -306,7 +238,7 @@ def test_bellman_ford_weighted_costs(spark, tmp_path):
             (3, 3, 2, 1, "N", datetime(2024, 1, 1)),
             (4, 2, 1, 1, "N", datetime(2024, 1, 1)),
             (4, 3, 2, 1, "N", datetime(2024, 1, 1)),
-        ],
+        ]],
     )
     got = sorted(
         (r.cost, r.n_vertices)
@@ -320,16 +252,12 @@ def test_bellman_ford_weighted_costs(spark, tmp_path):
 def test_ngram_novelty_first_seen(spark, tmp_path):
     """Doc 1 introduces both its grams; doc 2 repeats one of them;
     doc 3 (other source) only repeats -> A 3/4 novel, B 0/1."""
-    _write_docs_src = [
+    docs = [
         (1, "a b c d", "en", "A", 7),
         (2, "a b c x", "en", "A", 7),
         (3, "a b c", "en", "B", 5),
     ]
-    df = spark.createDataFrame(
-        _write_docs_src,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=docs)
     got = {
         r.source: r
         for r in registry.QUERIES["ngram_novelty_rate"](
@@ -351,10 +279,7 @@ def test_decile_lift_hand_values(spark, tmp_path):
     rows = [
         (i, "x", ("en" if i <= 2 else "fr"), "s", 11 - i) for i in range(1, 11)
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.decile: r
         for r in registry.QUERIES["decile_lift_table"](
@@ -371,10 +296,9 @@ def test_decile_lift_hand_values(spark, tmp_path):
 def test_winsorize_fences_and_sums(spark, tmp_path):
     """Cents 1..20: lo fence 1, hi fence 19 -> only the 20 clips,
     sum drops from 210 to 209."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [(i, datetime(2024, 1, 1, 10, i), i / 100.0) for i in range(1, 21)],
+        events=[_valued_event(i, datetime(2024, 1, 1, 10, i), i / 100.0) for i in range(1, 21)],
     )
     row = registry.QUERIES["winsorize_clip_stats"](spark, str(tmp_path)).collect()[0]
     assert (row.n, row.lo_cents, row.hi_cents) == (20, 1, 19)
@@ -385,14 +309,13 @@ def test_winsorize_fences_and_sums(spark, tmp_path):
 def test_acf_lag1_moments(spark, tmp_path):
     """Daily dollars 1, 2, 3: lag-1 pairs (1,2),(2,3) -> s_xy 8,
     s_x 3, s_y 5, s_xx 5, s_yy 13; no lag-7 pairs exist."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1.0),
             (2, datetime(2024, 1, 2, 10), 2.0),
             (3, datetime(2024, 1, 3, 10), 3.0),
-        ],
+        ]],
     )
     got = registry.QUERIES["acf_lag_terms"](spark, str(tmp_path)).collect()
     assert len(got) == 1 and got[0].lag == 1
@@ -409,10 +332,7 @@ def test_chi2_terms_hand_values(spark, tmp_path):
         (3, "x", "en", "B", 5),
         (4, "x", "fr", "A", 5),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         (r.lang, r.source): r
         for r in registry.QUERIES["chi2_lang_source_terms"](
@@ -427,45 +347,25 @@ def test_chi2_terms_hand_values(spark, tmp_path):
     assert got[("fr", "A")].contrib_e6 == 83333
 
 
-def _write_parts(spark, tmp_path, rows):
-    """rows: (partkey, brand)"""
-    full = [(pk, f"part{pk}", br, "TYPE", 1, 1.0) for pk, br in rows]
-    df = spark.createDataFrame(
-        full,
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _part(pk, br):
+    return (pk, f"part{pk}", br, "TYPE", 1, 1.0)
 
 
-def _write_lineitem_priced(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, extendedprice, shipdate)"""
-    full = [
-        (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", sd)
-        for ok, pk, ep, sd in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line_priced(ok, pk, ep, sd):
+    return (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", sd)
 
 
 def test_brand_share_shift_hand_values(spark, tmp_path):
     """Early half: both brands $100 (50/50).  Late half: only B1
     ($300) -> B1 gains 50 points, B2 loses 50."""
-    _write_parts(spark, tmp_path, [(1, "B1"), (2, "B2")])
-    _write_lineitem_priced(
-        spark,
+    write_tables(tmp_path, part=[_part(*r) for r in [(1, "B1"), (2, "B2")]])
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_priced(*r) for r in [
             (1, 1, 100.0, datetime(2024, 1, 1)),
             (2, 2, 100.0, datetime(2024, 1, 1)),
             (3, 1, 300.0, datetime(2024, 1, 11)),
-        ],
+        ]],
     )
     got = {
         r.brand: r
@@ -485,10 +385,9 @@ def test_backlog_aging_buckets(spark, tmp_path):
     base = datetime(2024, 12, 31)
     from datetime import timedelta
 
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, 10.0)],
+        orders=[_order(*r) for r in [(1, 1, 10.0)]],
     )
     rows = [
         (1, 1, "O", 10.0, base, "1-URGENT"),
@@ -497,12 +396,7 @@ def test_backlog_aging_buckets(spark, tmp_path):
         (4, 1, "O", 10.0, base - timedelta(days=1200), "1-URGENT"),
         (5, 1, "F", 10.0, base - timedelta(days=900), "1-URGENT"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=rows)
     got = sorted(
         (r.age_bucket, r.n_orders)
         for r in registry.QUERIES["backlog_aging_buckets"](
@@ -522,10 +416,7 @@ def test_filter_waterfall_stages(spark, tmp_path):
         (3, long_text, "en", "A", 50),
         (4, long_text, "fr", "A", 150),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.stage: r
         for r in registry.QUERIES["filter_waterfall_attrition"](
@@ -552,12 +443,7 @@ def test_stream_topk_types_batch_twin(spark, tmp_path):
         (6, datetime(2024, 1, 1, 10, 6), 1, "c", 1.0, "{}"),
         (7, datetime(2024, 1, 1, 10, 7), 1, "d", 1.0, "{}"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     got = sorted(
         (r.rnk, r.event_type, r.n)
         for r in registry.QUERIES["stream_topk_types"](
@@ -570,15 +456,14 @@ def test_stream_topk_types_batch_twin(spark, tmp_path):
 def test_runs_test_hand_values(spark, tmp_path):
     """Daily cents 1, 5, 5, 1 with median 1: signs 0,1,1,0 -> 3 runs,
     two days above, two at-or-below."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 0.01),
             (2, datetime(2024, 1, 2, 10), 0.05),
             (3, datetime(2024, 1, 3, 10), 0.05),
             (4, datetime(2024, 1, 4, 10), 0.01),
-        ],
+        ]],
     )
     row = registry.QUERIES["runs_test_counts"](spark, str(tmp_path)).collect()[0]
     assert (row.n_days, row.n_above, row.n_below, row.n_runs) == (4, 2, 2, 3)
@@ -590,18 +475,13 @@ def test_interpurchase_gaps(spark, tmp_path):
     from datetime import timedelta
 
     base = datetime(2024, 1, 1)
-    _write_customers(spark, tmp_path, [(1, "A")])
+    write_tables(tmp_path, customer=[_customer(*r) for r in [(1, "A")]])
     rows = [
         (1, 1, "O", 10.0, base, "1-URGENT"),
         (2, 1, "O", 10.0, base + timedelta(days=10), "1-URGENT"),
         (3, 1, "O", 10.0, base + timedelta(days=40), "1-URGENT"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=rows)
     row = registry.QUERIES["interpurchase_gap_profile"](
         spark, str(tmp_path)
     ).collect()[0]
@@ -610,13 +490,12 @@ def test_interpurchase_gaps(spark, tmp_path):
 
 def test_wow_revenue_delta(spark, tmp_path):
     """Week totals 100 then 150 cents -> delta +50, ratio 1.5e6."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1.00),
             (2, datetime(2024, 1, 15, 10), 1.50),
-        ],
+        ]],
     )
     got = registry.QUERIES["wow_revenue_delta"](spark, str(tmp_path)).collect()
     assert len(got) == 1
@@ -631,14 +510,13 @@ def test_wow_revenue_delta(spark, tmp_path):
 
 def test_shipment_latency_audit(spark, tmp_path):
     """Gaps 10 and 100 days: one SLA breach of two lines."""
-    _write_orders(spark, tmp_path, [(1, 1, 10.0)])
-    _write_lineitem_priced(
-        spark,
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 10.0)]])
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_priced(*r) for r in [
             (1, 1, 10.0, datetime(2024, 1, 11)),
             (1, 1, 10.0, datetime(2024, 4, 10)),
-        ],
+        ]],
     )
     row = registry.QUERIES["shipment_latency_audit"](
         spark, str(tmp_path)
@@ -653,7 +531,7 @@ def test_hash_shard_balance_matches_reference_digest(spark, tmp_path):
     of a single-row table is 32e6 on its shard."""
     import hashlib
 
-    _write_orders(spark, tmp_path, [(1, 1, 10.0)])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 10.0)]])
     expected_shard = int(hashlib.md5(b"1#13").hexdigest()[:15], 16) % 32
     got = registry.QUERIES["hash_shard_balance"](spark, str(tmp_path)).collect()
     assert len(got) == 1
@@ -673,12 +551,7 @@ def test_attribution_linear_even_split(spark, tmp_path):
         (3, datetime(2024, 1, 1, 10, 2), 1, "view", 1.0, "{}"),
         (4, datetime(2024, 1, 1, 10, 3), 1, "purchase", 1.0, "{}"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     got = {
         r.channel: r
         for r in registry.QUERIES["attribution_linear"](
@@ -691,14 +564,13 @@ def test_attribution_linear_even_split(spark, tmp_path):
 
 def test_user_acquisition_curve(spark, tmp_path):
     """u1 appears day 1; u1 and u2 day 2 -> new 1/1, cumulative 1/2."""
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1),
             (2, datetime(2024, 1, 2, 10), 1),
             (3, datetime(2024, 1, 2, 11), 2),
-        ],
+        ]],
     )
     got = sorted(
         (r.n_active, r.n_new, r.cum_users)
@@ -716,14 +588,7 @@ def test_discount_volume_curve(spark, tmp_path):
         (2, 1, 1, 1, 5.0, 10.0, 0.05, 0.0, "N", "O", datetime(2024, 1, 1)),
         (3, 1, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1)),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=rows)
     got = {
         r.discount_pct: r
         for r in registry.QUERIES["discount_volume_curve"](
@@ -748,10 +613,7 @@ def test_source_vocab_overlap_jaccard(spark, tmp_path):
         (1, "a b c", "en", "A", 5),
         (2, "b c d", "en", "B", 5),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = registry.QUERIES["source_vocab_overlap"](spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
@@ -762,17 +624,14 @@ def test_source_vocab_overlap_jaccard(spark, tmp_path):
 def test_dim_coverage_audit(spark, tmp_path):
     """Customer 2 of 2 never ordered -> 50%%; the single part and
     supplier are both referenced -> 100%%."""
-    _write_customers(spark, tmp_path, [(1, "A"), (2, "A")])
-    _write_orders(spark, tmp_path, [(1, 1, 10.0)])
-    _write_parts(spark, tmp_path, [(1, "B1")])
-    _write_lineitem_priced(
-        spark, tmp_path, [(1, 1, 10.0, datetime(2024, 1, 1))]
+    write_tables(tmp_path, customer=[_customer(*r) for r in [(1, "A"), (2, "A")]])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 10.0)]])
+    write_tables(tmp_path, part=[_part(*r) for r in [(1, "B1")]])
+    write_tables(
+        tmp_path,
+        lineitem=[_line_priced(*r) for r in [(1, 1, 10.0, datetime(2024, 1, 1))]],
     )
-    sup = spark.createDataFrame(
-        [(1, "Supplier#1", 1, 0.0)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    )
-    sup.write.mode("overwrite").parquet(str(tmp_path / "supplier.parquet"))
+    write_tables(tmp_path, supplier=[(1, "Supplier#1", 1, 0.0)])
     got = {
         r.dim: r
         for r in registry.QUERIES["dim_coverage_audit"](
@@ -788,22 +647,13 @@ def test_dim_coverage_audit(spark, tmp_path):
 def test_set_ops_bag_multiplicities(spark, tmp_path):
     """Customer nks {1,1,2}, supplier nks {1,3}: INTERSECT ALL keeps
     one copy of 1; EXCEPT ALL keeps the surplus 1 and the 2."""
-    _write_customers(spark, tmp_path, [(1, "A"), (2, "A"), (3, "A")])
-    cust = spark.createDataFrame(
-        [
-            (1, "c1", 1, 0.0, "A"),
-            (2, "c2", 1, 0.0, "A"),
-            (3, "c3", 2, 0.0, "A"),
-        ],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    )
-    cust.write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
-    sup = spark.createDataFrame(
-        [(1, "s1", 1, 0.0), (2, "s2", 3, 0.0)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    )
-    sup.write.mode("overwrite").parquet(str(tmp_path / "supplier.parquet"))
+    write_tables(tmp_path, customer=[_customer(*r) for r in [(1, "A"), (2, "A"), (3, "A")]])
+    write_tables(tmp_path, customer=[
+        (1, "c1", 1, 0.0, "A"),
+        (2, "c2", 1, 0.0, "A"),
+        (3, "c3", 2, 0.0, "A"),
+    ])
+    write_tables(tmp_path, supplier=[(1, "s1", 1, 0.0), (2, "s2", 3, 0.0)])
     got = sorted(
         (r.op, r.nk, r.n)
         for r in registry.QUERIES["set_ops_bag_semantics"](
@@ -826,12 +676,7 @@ def test_cart_abandonment_daily(spark, tmp_path):
         (3, datetime(2024, 1, 1, 10), 2, "click", 1.0, "{}"),
         (4, datetime(2024, 1, 1, 10), 3, "view", 1.0, "{}"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     got = registry.QUERIES["cart_abandonment_daily"](
         spark, str(tmp_path)
     ).collect()
@@ -843,20 +688,13 @@ def test_cart_abandonment_daily(spark, tmp_path):
 def test_brand_return_rates(spark, tmp_path):
     """Brand B1: one returned line of two (rate 0.5, 1000 cents
     back); B2 clean."""
-    _write_parts(spark, tmp_path, [(1, "B1"), (2, "B2")])
+    write_tables(tmp_path, part=[_part(*r) for r in [(1, "B1"), (2, "B2")]])
     rows = [
         (1, 1, 1, 1, 1.0, 10.0, 0.0, 0.0, "R", "O", datetime(2024, 1, 1)),
         (2, 1, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1)),
         (3, 2, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1)),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=rows)
     got = {
         r.brand: r
         for r in registry.QUERIES["brand_return_rates"](
@@ -871,24 +709,18 @@ def test_brand_return_rates(spark, tmp_path):
 def test_priceband_segment_mix_shares(spark, tmp_path):
     """Segment A buys $30 in band 90 and $10 in band 91 -> shares
     750000 / 250000 within the segment."""
-    _write_customers(spark, tmp_path, [(1, "A")])
-    _write_orders(spark, tmp_path, [(1, 1, 40.0)])
-    parts = spark.createDataFrame(
-        [
-            (1, "p1", "B1", "T", 1, 905.0),
-            (2, "p2", "B1", "T", 1, 915.0),
-        ],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    )
-    parts.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    _write_lineitem_priced(
-        spark,
+    write_tables(tmp_path, customer=[_customer(*r) for r in [(1, "A")]])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 40.0)]])
+    write_tables(tmp_path, part=[
+        (1, "p1", "B1", "T", 1, 905.0),
+        (2, "p2", "B1", "T", 1, 915.0),
+    ])
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_priced(*r) for r in [
             (1, 1, 30.0, datetime(2024, 1, 1)),
             (1, 2, 10.0, datetime(2024, 1, 1)),
-        ],
+        ]],
     )
     got = {
         r.price_band: r
@@ -904,10 +736,7 @@ def test_sentence_length_profile(spark, tmp_path):
     """Sentences of 2, 2 and 4 words: median 2, p90 4, 8 words
     total."""
     rows = [(1, "a b. c d. e f g h.", "en", "s", 18)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     row = registry.QUERIES["sentence_length_profile"](
         spark, str(tmp_path)
     ).collect()[0]
@@ -922,17 +751,16 @@ def test_sentence_length_profile(spark, tmp_path):
 def test_copurchase_lift_hand_values(spark, tmp_path):
     """Pair (1,2) in 2 of 4 baskets; item counts 3 and 2:
     conf 2/3 and 1, lift 2*4/(3*2) = 4/3."""
-    _write_lineitem_full(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line_full(*r) for r in [
             (1, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (1, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (2, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (2, 2, 2, 1, "N", datetime(2024, 1, 1)),
             (3, 1, 1, 1, "N", datetime(2024, 1, 1)),
             (4, 3, 1, 1, "N", datetime(2024, 1, 1)),
-        ],
+        ]],
     )
     got = registry.QUERIES["copurchase_lift"](spark, str(tmp_path)).collect()
     assert len(got) == 1
@@ -955,12 +783,7 @@ def test_segment_migration_antidiagonal(spark, tmp_path):
         (5, 2, "O", 2.0, base + timedelta(days=10), "1-URGENT"),
         (6, 3, "O", 3.0, base + timedelta(days=10), "1-URGENT"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=rows)
     got = sorted(
         (r.tier_early, r.tier_late, r.n_customers)
         for r in registry.QUERIES["segment_migration_matrix"](
@@ -973,14 +796,13 @@ def test_segment_migration_antidiagonal(spark, tmp_path):
 def test_user_activity_depth(spark, tmp_path):
     """u1 on 2 days, u2 on 1 day -> histogram {2: 1 user, 1: 1
     user}."""
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1),
             (2, datetime(2024, 1, 2, 10), 1),
             (3, datetime(2024, 1, 1, 10), 2),
-        ],
+        ]],
     )
     got = sorted(
         (r.n_active_days, r.n_users)
@@ -993,10 +815,9 @@ def test_user_activity_depth(spark, tmp_path):
 
 def test_basket_value_curve(spark, tmp_path):
     """Two 1-line baskets ($10, $30) and one 2-line basket ($50)."""
-    _write_lineitem(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 10.0), (2, 20.0), (2, 30.0), (3, 30.0)],
+        lineitem=[_line(*r) for r in [(1, 10.0), (2, 20.0), (2, 30.0), (3, 30.0)]],
     )
     got = {
         r.basket_size: r
@@ -1019,15 +840,14 @@ def test_basket_value_curve(spark, tmp_path):
 def test_session_duration_profile(spark, tmp_path):
     """Sessions of 600s, 0s, 0s: median 0, p90 600, 4 events in 3
     sessions."""
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10, 0), 1),
             (2, datetime(2024, 1, 1, 10, 10), 1),
             (3, datetime(2024, 1, 1, 11, 30), 1),
             (4, datetime(2024, 1, 1, 9, 0), 2),
-        ],
+        ]],
     )
     row = registry.QUERIES["session_duration_profile"](
         spark, str(tmp_path)
@@ -1048,14 +868,7 @@ def test_part_supplier_redundancy(spark, tmp_path):
         (2, 1, 2, 1, 1.0, 20.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1)),
         (3, 2, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1)),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=rows)
     got = {
         r.n_suppliers: r
         for r in registry.QUERIES["part_supplier_redundancy"](
@@ -1077,14 +890,13 @@ def test_part_supplier_redundancy(spark, tmp_path):
 def test_moving_7d_range_frame_ages_out(spark, tmp_path):
     """Cents 100/200/300 on days 1, 3, 10: the day-10 trailing sum
     is 300 alone — a ROWS frame would wrongly carry 600."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1.00),
             (2, datetime(2024, 1, 3, 10), 2.00),
             (3, datetime(2024, 1, 10, 10), 3.00),
-        ],
+        ]],
     )
     got = sorted(
         (r.day_idx, r.cents, r.trailing_7d_cents)
@@ -1098,14 +910,13 @@ def test_moving_7d_range_frame_ages_out(spark, tmp_path):
 def test_weekend_lift(spark, tmp_path):
     """Sat event worth 200 vs two weekday events worth 100 total:
     per-event lift 4x."""
-    _write_valued_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_valued_event(*r) for r in [
             (1, datetime(2024, 1, 6, 10), 2.00),
             (2, datetime(2024, 1, 8, 10), 0.40),
             (3, datetime(2024, 1, 8, 11), 0.60),
-        ],
+        ]],
     )
     row = registry.QUERIES["weekend_lift"](spark, str(tmp_path)).collect()[0]
     assert (row.weekend_cents, row.weekday_cents, row.weekend_events,
@@ -1120,10 +931,7 @@ def test_greedy_set_cover_rounds(spark, tmp_path):
         (2, "a b", "en", "B", 3),
         (3, "x y z", "en", "C", 5),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = sorted(
         (r.round, r.source, r.gain)
         for r in registry.QUERIES["greedy_set_cover_sources"](
@@ -1141,10 +949,7 @@ def test_hamilton_allocations_sum_exactly(spark, tmp_path):
         (2, "x", "en", "B", 1),
         (3, "x", "en", "C", 1),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     got = {
         r.source: r
         for r in registry.QUERIES["budget_apportion_hamilton"](
@@ -1159,14 +964,13 @@ def test_hamilton_allocations_sum_exactly(spark, tmp_path):
 def test_rolling_retention_7d(spark, tmp_path):
     """u1 returns on day 5 of 7-day window; u2 never; day-5 cohort
     is right-censored."""
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, datetime(2024, 1, 1, 10), 1),
             (2, datetime(2024, 1, 5, 10), 1),
             (3, datetime(2024, 1, 1, 11), 2),
-        ],
+        ]],
     )
     got = sorted(
         (r.n_users, r.n_retained, r.retention_e6)

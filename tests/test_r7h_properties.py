@@ -21,8 +21,7 @@ from datetime import datetime, timedelta
 import numpy as np
 
 from instructions_mr_spark import registry
-
-registry.load_all()
+from tests.conftest import write_tables
 
 
 def _gen_events(spark, tmp_path, seed, n=400, n_types=3):
@@ -40,12 +39,7 @@ def _gen_events(spark, tmp_path, seed, n=400, n_types=3):
                 "{}",
             )
         )
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
 
 
 def _gen_orders_customers(spark, tmp_path, seed, n_cust=40):
@@ -54,11 +48,7 @@ def _gen_orders_customers(spark, tmp_path, seed, n_cust=40):
         (i, f"c{i}", 1, 0.0, "SEG" + str(int(rng.integers(0, 2))))
         for i in range(1, n_cust + 1)
     ]
-    spark.createDataFrame(
-        custs,
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=custs)
     orders = []
     for ok in range(1, 4 * n_cust):
         orders.append(
@@ -71,11 +61,7 @@ def _gen_orders_customers(spark, tmp_path, seed, n_cust=40):
                 "1-URGENT",
             )
         )
-    spark.createDataFrame(
-        orders,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=orders)
 
 
 def test_gini_hhi_bounds_random(spark, tmp_path):
@@ -110,19 +96,13 @@ def test_auc_label_flip_antisymmetry(spark, tmp_path):
         )
         for i in range(300)
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=rows)
     r1 = registry.QUERIES["auc_mann_whitney"](spark, str(tmp_path)).collect()[0]
     flipped = [
         (i, x, "fr" if lang == "en" else "en", s, nc)
         for (i, x, lang, s, nc) in rows
     ]
-    spark.createDataFrame(
-        flipped,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=flipped)
     r2 = registry.QUERIES["auc_mann_whitney"](spark, str(tmp_path)).collect()[0]
     assert (r1.n_pos, r1.n_neg) == (r2.n_neg, r2.n_pos)
     assert r1.u2 + r2.u2 == 2 * r1.n_pos * r1.n_neg

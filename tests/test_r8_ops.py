@@ -8,58 +8,32 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, totalprice, date)"""
-    full = [(ok, ck, "O", tp, d, "1-URGENT") for ok, ck, tp, d in rows]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey)"""
-    full = [
-        (ok, pk, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _order(ok, ck, tp, d):
+    return (ok, ck, "O", tp, d, "1-URGENT")
 
 
-def _write_docs(spark, tmp_path, rows):
-    """rows: (doc_id, text)"""
-    full = [(did, txt, "en", "s", len(txt)) for did, txt in rows]
-    df = spark.createDataFrame(
-        full, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _line(ok, pk):
+    return (ok, pk, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
+
+
+def _doc(did, txt):
+    return (did, txt, "en", "s", len(txt))
 
 
 def test_spearman_perfect_anticorrelation(spark, tmp_path):
     """freq ranks 1/2/3 vs cents ranks 3/2/1: sum d^2 = 8, rho =
     1 - 6*8/(27-3) = -1 exactly."""
     d = datetime(2024, 1, 1)
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        orders=[_order(*r) for r in [
             (1, 1, 30.0, d),                     # c1: 1 order, 3000c
             (2, 2, 10.0, d), (3, 2, 10.0, d),    # c2: 2 orders, 2000c
             (4, 3, 2.0, d), (5, 3, 3.0, d), (6, 3, 5.0, d),  # c3: 3, 1000c
-        ],
+        ]],
     )
     r = registry.QUERIES["spearman_rho_terms"](spark, str(tmp_path)).collect()[0]
     assert r.n == 3 and r.sum_d2 == 8
@@ -71,7 +45,7 @@ def test_theil_equal_revenues_zero(spark, tmp_path):
     = ln(100) - ln(100) = 0; the emitted terms are the nearest doubles
     of the exact pieces."""
     d = datetime(2024, 1, 1)
-    _write_orders(spark, tmp_path, [(1, 1, 1.0, d), (2, 2, 1.0, d)])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 1.0, d), (2, 2, 1.0, d)]])
     r = registry.QUERIES["theil_index_terms"](spark, str(tmp_path)).collect()[0]
     assert r.n == 2 and r.total_cents == 200
     assert r.sum_xlnx == 921.0340372  # 200 * round(ln 100, 10)
@@ -86,14 +60,13 @@ def test_theil_equal_revenues_zero(spark, tmp_path):
 def test_mann_kendall_strictly_rising(spark, tmp_path):
     """Daily revenue 100/200/300 cents: all 3 pairs concordant,
     S = +3."""
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        orders=[_order(*r) for r in [
             (1, 1, 1.0, datetime(2024, 1, 1)),
             (2, 1, 2.0, datetime(2024, 1, 2)),
             (3, 1, 3.0, datetime(2024, 1, 3)),
-        ],
+        ]],
     )
     r = registry.QUERIES["mann_kendall_trend"](spark, str(tmp_path)).collect()[0]
     assert r.n_days == 3 and r.s_stat == 3
@@ -103,12 +76,11 @@ def test_mann_kendall_strictly_rising(spark, tmp_path):
 def test_countmin_never_undercounts(spark, tmp_path):
     """Parts with counts 5/3/1: every CM estimate >= the exact count
     (the sketch's one-sided guarantee), exact counts land verbatim."""
-    _write_lineitem(
-        spark,
+    write_tables(
         tmp_path,
-        [(i, 101) for i in range(5)]
+        lineitem=[_line(*r) for r in [(i, 101) for i in range(5)]
         + [(i, 202) for i in range(5, 8)]
-        + [(8, 303)],
+        + [(8, 303)]],
     )
     rows = registry.QUERIES["sketch_countmin_heavy"](
         spark, str(tmp_path)
@@ -126,7 +98,7 @@ def test_feature_hash_bucket_identity(spark, tmp_path):
     """Vocab {a,b,c}: 3 features; singleton buckets hold exactly one
     feature, so features - collided_features == buckets - collided
     buckets regardless of where the hashes land."""
-    _write_docs(spark, tmp_path, [(1, "a b"), (2, "b c")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "a b"), (2, "b c")]])
     r = registry.QUERIES["feature_hash_collision_audit"](
         spark, str(tmp_path)
     ).collect()[0]
@@ -140,42 +112,22 @@ def test_feature_hash_bucket_identity(spark, tmp_path):
     assert r.collision_rate_e6 == r.n_features_collided * 1000000 // r.n_features
 
 
-def _write_lineitem_lines(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, linenumber, extendedprice)"""
-    full = [
-        (ok, pk, 1, ln, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk, ln, ep in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line_priced(ok, pk, ln, ep):
+    return (ok, pk, 1, ln, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_purchases(spark, tmp_path, rows):
-    """rows: (event_id, ts, value)"""
-    full = [(eid, ts, 1, "purchase", v, "{}") for eid, ts, v in rows]
-    df = spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _purchase(eid, ts, v):
+    return (eid, ts, 1, "purchase", v, "{}")
 
 
 def test_assoc_rules_directional_confidence(spark, tmp_path):
     """Orders {A,B}, {A,B}, {A}: support(AB)=2, conf(A=>B)=2/3,
     conf(B=>A)=1 — the direction matters."""
-    _write_lineitem_lines(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 10, 1, 1.0), (1, 20, 2, 1.0),
+        lineitem=[_line_priced(*r) for r in [(1, 10, 1, 1.0), (1, 20, 2, 1.0),
          (2, 10, 1, 1.0), (2, 20, 2, 1.0),
-         (3, 10, 1, 1.0)],
+         (3, 10, 1, 1.0)]],
     )
     rows = registry.QUERIES["assoc_rules_confidence"](
         spark, str(tmp_path)
@@ -189,10 +141,9 @@ def test_assoc_rules_directional_confidence(spark, tmp_path):
 def test_cohort_ltv_cumulative(spark, tmp_path):
     """One customer, $1.00 in period 0 and $2.00 one 30-day period
     later: cum curve 100 -> 300 cents at ages 0 and 1."""
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, 1.0, datetime(2024, 1, 1)), (2, 1, 2.0, datetime(2024, 2, 5))],
+        orders=[_order(*r) for r in [(1, 1, 1.0, datetime(2024, 1, 1)), (2, 1, 2.0, datetime(2024, 2, 5))]],
     )
     rows = sorted(
         registry.QUERIES["cohort_ltv_curve"](spark, str(tmp_path)).collect(),
@@ -207,10 +158,9 @@ def test_cohort_ltv_cumulative(spark, tmp_path):
 def test_new_vs_returning_split(spark, tmp_path):
     """First period is all-new revenue; the next period's order from
     the same customer counts as returning."""
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, 1.0, datetime(2024, 1, 1)), (2, 1, 2.0, datetime(2024, 2, 5))],
+        orders=[_order(*r) for r in [(1, 1, 1.0, datetime(2024, 1, 1)), (2, 1, 2.0, datetime(2024, 2, 5))]],
     )
     rows = sorted(
         registry.QUERIES["new_vs_returning_split"](
@@ -226,10 +176,9 @@ def test_new_vs_returning_split(spark, tmp_path):
 def test_duplicate_line_audit(spark, tmp_path):
     """Part 5 entered on lines 1 and 3 of order 1: one flagged group;
     the clean order 2 stays silent."""
-    _write_lineitem_lines(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 5, 1, 1.0), (1, 5, 3, 1.0), (1, 6, 2, 9.0), (2, 5, 1, 4.0)],
+        lineitem=[_line_priced(*r) for r in [(1, 5, 1, 1.0), (1, 5, 3, 1.0), (1, 6, 2, 9.0), (2, 5, 1, 4.0)]],
     )
     rows = registry.QUERIES["duplicate_line_audit"](
         spark, str(tmp_path)
@@ -245,10 +194,9 @@ def test_ohlc_tie_broken_open_close(spark, tmp_path):
     """Two purchases share the opening timestamp: the lower event_id
     wins open (struct argmin, not min_by); close is the latest row."""
     h = datetime(2024, 1, 1, 10, 0, 1)
-    _write_purchases(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, h, 5.0), (2, h, 7.0), (3, datetime(2024, 1, 1, 10, 30), 3.0)],
+        events=[_purchase(*r) for r in [(1, h, 5.0), (2, h, 7.0), (3, datetime(2024, 1, 1, 10, 30), 3.0)]],
     )
     rows = registry.QUERIES["ts_ohlc_hourly"](spark, str(tmp_path)).collect()
     assert len(rows) == 1

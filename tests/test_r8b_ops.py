@@ -12,75 +12,27 @@ from datetime import datetime, timedelta
 from decimal import Decimal
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, totalprice, date)"""
-    full = [(ok, ck, "O", tp, d, "1-URGENT") for ok, ck, tp, d in rows]
-    df = spark.createDataFrame(
-        full,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, ts, user_id, event_type)"""
-    full = [(eid, ts, uid, et, 1.0, "{}") for eid, ts, uid, et in rows]
-    df = spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _order(ok, ck, tp, d):
+    return (ok, ck, "O", tp, d, "1-URGENT")
 
 
-def _write_part(spark, tmp_path, rows):
-    """rows: (partkey, brand, retailprice)"""
-    full = [(pk, f"part#{pk}", b, "TYPE_A", 1, rp) for pk, b, rp in rows]
-    df = spark.createDataFrame(
-        full,
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _event(eid, ts, uid, et):
+    return (eid, ts, uid, et, 1.0, "{}")
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, suppkey, quantity)"""
-    full = [
-        (ok, pk, sk, 1, qty, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk, sk, qty in rows
-    ]
-    df = spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _part(pk, b, rp):
+    return (pk, f"part#{pk}", b, "TYPE_A", 1, rp)
 
 
-def _write_docs(spark, tmp_path, rows):
-    """rows: (doc_id, text)"""
-    full = [(did, txt, "en", "s", len(txt)) for did, txt in rows]
-    df = spark.createDataFrame(
-        full, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _line(ok, pk, sk, qty):
+    return (ok, pk, sk, 1, qty, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_supplier(spark, tmp_path, rows):
-    """rows: (suppkey, name, nationkey, acctbal)"""
-    df = spark.createDataFrame(
-        rows,
-        "s_suppkey long, s_name string, s_nationkey long, s_acctbal double",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "supplier.parquet"))
+def _doc(did, txt):
+    return (did, txt, "en", "s", len(txt))
 
 
 def test_kaplan_meier_hand_curve(spark, tmp_path):
@@ -88,14 +40,13 @@ def test_kaplan_meier_hand_curve(spark, tmp_path):
     the horizon).  KM: S(10) = 2/3, S(50) = 1/3 — emitted as running
     10-dp ln sums; the censored tenure row is filtered (no events)."""
     d0 = datetime(2024, 1, 1)
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        orders=[_order(*r) for r in [
             (1, 1, 1.0, d0), (2, 1, 1.0, d0 + timedelta(days=10)),
             (3, 2, 1.0, d0), (4, 2, 1.0, d0 + timedelta(days=50)),
             (5, 3, 1.0, d0), (6, 3, 1.0, d0 + timedelta(days=200)),
-        ],
+        ]],
     )
     rows = registry.QUERIES["kaplan_meier_retention"](
         spark, str(tmp_path)
@@ -113,10 +64,9 @@ def test_stl_flat_series_zero_residuals(spark, tmp_path):
     (partial edge windows still average 100), seasonal = 0, residual
     = 0 everywhere."""
     d0 = datetime(2024, 1, 1)
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [(i + 1, 1, 1.0, d0 + timedelta(days=i)) for i in range(7)],
+        orders=[_order(i + 1, 1, 1.0, d0 + timedelta(days=i)) for i in range(7)],
     )
     rows = registry.QUERIES["stl_residual_daily"](spark, str(tmp_path)).collect()
     assert len(rows) == 7
@@ -129,16 +79,15 @@ def test_markov_two_state_alternator(spark, tmp_path):
     """A->B and B->A with probability 1: the uniform start vector is
     already stationary, so v3 = (500000, 500000) exactly."""
     t0 = datetime(2024, 1, 1)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, t0, 1, "A"),
             (2, t0 + timedelta(minutes=1), 1, "B"),
             (3, t0 + timedelta(minutes=2), 1, "A"),
             (4, t0, 2, "B"),
             (5, t0 + timedelta(minutes=1), 2, "A"),
-        ],
+        ]],
     )
     rows = registry.QUERIES["markov_stationary_power"](
         spark, str(tmp_path)
@@ -150,10 +99,9 @@ def test_markov_absorbing_state(spark, tmp_path):
     """A->B only, B dangles (self-loop): all of A's mass reaches B by
     step 1 and stays; v3 = (0, 1000000)."""
     t0 = datetime(2024, 1, 1)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, t0, 1, "A"), (2, t0 + timedelta(minutes=1), 1, "B")],
+        events=[_event(*r) for r in [(1, t0, 1, "A"), (2, t0 + timedelta(minutes=1), 1, "B")]],
     )
     rows = registry.QUERIES["markov_stationary_power"](
         spark, str(tmp_path)
@@ -164,8 +112,8 @@ def test_markov_absorbing_state(spark, tmp_path):
 def test_elasticity_unit_price_terms(spark, tmp_path):
     """Two parts of one brand at price 1.0 (x = ln 1 = 0), one unit
     sold each (y = ln 2): sx = sxx = sxy = 0, sy = 2 ln 2."""
-    _write_part(spark, tmp_path, [(101, "B1", 1.0), (102, "B1", 1.0)])
-    _write_lineitem(spark, tmp_path, [(1, 101, 1, 1.0), (2, 102, 1, 1.0)])
+    write_tables(tmp_path, part=[_part(*r) for r in [(101, "B1", 1.0), (102, "B1", 1.0)]])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 101, 1, 1.0), (2, 102, 1, 1.0)]])
     r = registry.QUERIES["elasticity_loglog_terms"](
         spark, str(tmp_path)
     ).collect()
@@ -179,8 +127,9 @@ def test_ares_matches_python_replay(spark, tmp_path):
     the A-Res key (md5-uniform, 10-dp rounded -ln, integer DIV by
     cents) — pinning hash portability AND the arithmetic."""
     d = datetime(2024, 1, 1)
-    _write_orders(
-        spark, tmp_path, [(ok, 1, float(ok), d) for ok in range(1, 31)]
+    write_tables(
+        tmp_path,
+        orders=[_order(ok, 1, float(ok), d) for ok in range(1, 31)],
     )
     expected = []
     for ok in range(1, 31):
@@ -201,10 +150,9 @@ def test_rrf_tie_breaks_by_doc_id(spark, tmp_path):
     fuse to the same RRF score (1e9//61 + 1e9//63); doc1 wins the tie
     on doc_id.  doc3 (rank 2 twice) scores 2 * 1e9//62, strictly
     less."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "join join merge aa"), (2, "join"), (3, "sort merge")],
+        documents=[_doc(*r) for r in [(1, "join join merge aa"), (2, "join"), (3, "sort merge")]],
     )
     rows = registry.QUERIES["rank_fusion_rrf"](spark, str(tmp_path)).collect()
     assert [r.doc_id for r in rows] == [1, 2, 3]
@@ -217,7 +165,7 @@ def test_orc_roundtrip_bit_exact(spark, tmp_path):
     """Rows written to ORC come back exactly, including negative
     DOUBLE balances."""
     data = [(1, "alpha", 3, -12.34), (2, "beta", 5, 9999.99)]
-    _write_supplier(spark, tmp_path, data)
+    write_tables(tmp_path, supplier=data)
     rows = registry.QUERIES["orc_roundtrip"](spark, str(tmp_path)).collect()
     assert sorted((r.s_suppkey, r.s_name, r.s_nationkey, r.s_acctbal) for r in rows) == data
 
@@ -228,7 +176,7 @@ def test_label_propagation_star(spark, tmp_path):
     the tied part labels); round 2 flips — parts converge on label 1,
     the supplier re-adopts the parts' round-1 label.  Communities:
     {1: 2 members, 1000000001: 1}."""
-    _write_lineitem(spark, tmp_path, [(1, 1, 1, 1.0), (2, 2, 1, 1.0)])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 1, 1, 1.0), (2, 2, 1, 1.0)]])
     rows = registry.QUERIES["label_propagation_2round"](
         spark, str(tmp_path)
     ).collect()
@@ -242,14 +190,13 @@ def test_theil_sen_hand_slopes(spark, tmp_path):
     """Days 0/1/2 at 100/200/400 cents: pairwise slopes 1e8, 1.5e8,
     2e8 — the median straddle is (1.5e8, 1.5e8)."""
     d0 = datetime(2024, 1, 1)
-    _write_orders(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        orders=[_order(*r) for r in [
             (1, 1, 1.0, d0),
             (2, 1, 2.0, d0 + timedelta(days=1)),
             (3, 1, 4.0, d0 + timedelta(days=2)),
-        ],
+        ]],
     )
     r = registry.QUERIES["theil_sen_slope"](spark, str(tmp_path)).collect()[0]
     assert r.n_pairs == 3
@@ -259,8 +206,9 @@ def test_theil_sen_hand_slopes(spark, tmp_path):
 def test_ams_f2_matches_python_replay(spark, tmp_path):
     """Counts {101: 2, 202: 1}: exact F2 = 5 on every seed row, the
     estimate is S^2, and S replays from the portable md5 parity."""
-    _write_lineitem(
-        spark, tmp_path, [(1, 101, 1, 1.0), (2, 101, 1, 1.0), (3, 202, 1, 1.0)]
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 101, 1, 1.0), (2, 101, 1, 1.0), (3, 202, 1, 1.0)]],
     )
     rows = registry.QUERIES["sketch_ams_f2"](spark, str(tmp_path)).collect()
     assert [r.seed for r in rows] == [31, 37, 41, 43]
@@ -276,10 +224,9 @@ def test_ams_f2_matches_python_replay(spark, tmp_path):
 def test_k_core_complete_bipartite_stable(spark, tmp_path):
     """K_{2,2} is its own 2-core: every node has degree 2, so the
     trace is flat at (4 nodes, 4 edges) for all three rounds."""
-    _write_lineitem(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, 1, 1.0), (2, 1, 2, 1.0), (3, 2, 1, 1.0), (4, 2, 2, 1.0)],
+        lineitem=[_line(*r) for r in [(1, 1, 1, 1.0), (2, 1, 2, 1.0), (3, 2, 1, 1.0), (4, 2, 2, 1.0)]],
     )
     rows = registry.QUERIES["k_core_peel3"](spark, str(tmp_path)).collect()
     assert [(r.round, r.n_nodes, r.n_edges) for r in rows] == [
@@ -293,7 +240,7 @@ def test_k_core_star_collapses(spark, tmp_path):
     """A star (supplier serving parts 1 and 2) has leaf degrees 1:
     round 1 keeps only the hub but no edges survive; rounds 2-3 are
     empty."""
-    _write_lineitem(spark, tmp_path, [(1, 1, 1, 1.0), (2, 2, 1, 1.0)])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 1, 1, 1.0), (2, 2, 1, 1.0)]])
     rows = registry.QUERIES["k_core_peel3"](spark, str(tmp_path)).collect()
     assert [(r.round, r.n_nodes, r.n_edges) for r in rows] == [
         (1, 1, 0.0),
@@ -305,16 +252,12 @@ def test_k_core_star_collapses(spark, tmp_path):
 def test_reciprocal_best_match_mutual_only(spark, tmp_path):
     """s1(10.00)-c1(10.50) are mutual nearest (50 cents); s2's best
     is also c1, so s2 matches nothing."""
-    _write_supplier(
-        spark, tmp_path, [(1, "s1", 1, 10.0), (2, "s2", 1, 20.0)]
+    write_tables(
+        tmp_path,
+        supplier=[(1, "s1", 1, 10.0), (2, "s2", 1, 20.0)],
     )
     cust = [(1, "c1", 1, 10.5, "A"), (2, "c2", 1, 30.0, "A")]
-    df = spark.createDataFrame(
-        cust,
-        "c_custkey long, c_name string, c_nationkey long, c_acctbal double,"
-        " c_mktsegment string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=cust)
     rows = registry.QUERIES["reciprocal_best_match"](
         spark, str(tmp_path)
     ).collect()
@@ -333,14 +276,13 @@ def test_markov_removal_symmetric_channels(spark, tmp_path):
     def ev(i, uid, minutes, typ):
         return (i, t0 + timedelta(minutes=minutes), uid, typ)
 
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             ev(1, 1, 0, "click"), ev(2, 1, 1, "purchase"),
             ev(3, 2, 0, "view"), ev(4, 2, 1, "purchase"),
             ev(5, 3, 0, "click"),
-        ],
+        ]],
     )
     rows = registry.QUERIES["attribution_markov_removal"](
         spark, str(tmp_path)
@@ -359,7 +301,7 @@ def test_ppr_star_hand_walk(spark, tmp_path):
     """Parts {1,2} under one supplier, seed part 1: four quantized
     damped steps give p1 = 465190625 e9-units and p2 = 315190625
     (hand-traced, including the per-step restart re-injection)."""
-    _write_lineitem(spark, tmp_path, [(1, 1, 1, 1.0), (2, 2, 1, 1.0)])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 1, 1, 1.0), (2, 2, 1, 1.0)]])
     rows = registry.QUERIES["ppr_recommend_parts"](
         spark, str(tmp_path)
     ).collect()

@@ -7,26 +7,21 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_orders_daily(spark, tmp_path, day_revenues):
+def _daily_orders(day_revenues):
     """One order per day with the given totalprice (whole dollars)."""
-    rows = [
+    return [
         (i + 1, 1, "O", float(rev), _D0 + timedelta(days=i), "1-URGENT")
         for i, rev in enumerate(day_revenues)
     ]
-    spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
 
 
-def _write_events_counts(spark, tmp_path, per_day_type_counts):
+def _counted_events(per_day_type_counts):
     """per_day_type_counts: {(day, event_type): n} -> n events that day."""
     rows = []
     eid = 0
@@ -37,16 +32,12 @@ def _write_events_counts(spark, tmp_path, per_day_type_counts):
                 (eid, _D0 + timedelta(days=day, minutes=eid % 60), 1, etype,
                  1.0, "{}")
             )
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    return rows
 
 
 def test_rsi_hand_series(spark, tmp_path):
     # revenue 10, 15, 5, 5 -> deltas +5, -10, 0
-    _write_orders_daily(spark, tmp_path, [10, 15, 5, 5])
+    write_tables(tmp_path, orders=_daily_orders([10, 15, 5, 5]))
     rows = {
         r["day_idx"]: r
         for r in registry.QUERIES["rsi_cutler_daily"](
@@ -64,13 +55,13 @@ def test_rsi_hand_series(spark, tmp_path):
 
 
 def test_rsi_flat_market_is_neutral(spark, tmp_path):
-    _write_orders_daily(spark, tmp_path, [7, 7, 7])
+    write_tables(tmp_path, orders=_daily_orders([7, 7, 7]))
     rows = registry.QUERIES["rsi_cutler_daily"](spark, str(tmp_path)).collect()
     assert rows and all(r["rsi_e6"] == 500000 for r in rows)
 
 
 def test_bollinger_flat_series_never_breaches(spark, tmp_path):
-    _write_orders_daily(spark, tmp_path, [9] * 25)
+    write_tables(tmp_path, orders=_daily_orders([9] * 25))
     rows = registry.QUERIES["bollinger_breach_daily"](
         spark, str(tmp_path)
     ).collect()
@@ -80,8 +71,9 @@ def test_bollinger_flat_series_never_breaches(spark, tmp_path):
 
 def test_bollinger_spike_breaches(spark, tmp_path):
     # 10 quiet days then a 100x spike: the spike day must breach
-    _write_orders_daily(spark, tmp_path, [10, 11, 10, 11, 10, 11, 10, 11,
-                                          10, 11, 1000])
+    write_tables(
+        tmp_path, orders=_daily_orders([10, 11, 10, 11, 10, 11, 10, 11, 10, 11, 1000])
+    )
     rows = {
         r["day_idx"]: r
         for r in registry.QUERIES["bollinger_breach_daily"](
@@ -99,7 +91,7 @@ def test_ccf_perfect_lag1_alignment(spark, tmp_path):
     # -> at lag 1 the series align perfectly (r = 1); moments pin it
     counts = {(i, "click"): i + 1 for i in range(4)}
     counts.update({(i + 1, "purchase"): i + 1 for i in range(4)})
-    _write_events_counts(spark, tmp_path, counts)
+    write_tables(tmp_path, events=_counted_events(counts))
     rows = {
         r["lag"]: r
         for r in registry.QUERIES["ccf_lag_terms"](
@@ -128,13 +120,7 @@ def test_vwap_anchored_hand_values(spark, tmp_path):
         (ok, pk, sk, ln, q, p, 0.0, 0.0, fl, "O", _D0 + timedelta(days=d))
         for ok, pk, sk, ln, q, p, d, fl in rows
     ]
-    spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=full)
     out = {
         (r["l_returnflag"], r["day_idx"]): r["avwap_e4"]
         for r in registry.QUERIES["vwap_anchored_daily"](
@@ -151,7 +137,7 @@ def test_vwap_anchored_hand_values(spark, tmp_path):
 def test_forecast_dow_naive_exact_wape(spark, tmp_path):
     # clicks: day 0 -> 10, day 7 -> 8: forecast 10, actual 8, wape 2/8
     counts = {(0, "click"): 10, (7, "click"): 8}
-    _write_events_counts(spark, tmp_path, counts)
+    write_tables(tmp_path, events=_counted_events(counts))
     rows = registry.QUERIES["forecast_dow_naive_terms"](
         spark, str(tmp_path)
     ).collect()

@@ -8,24 +8,17 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
 def test_join_null_safe_matches_null_buckets(spark, tmp_path):
     # customers: 2 in nation 1, 1 with negative balance (-> NULL bucket)
-    spark.createDataFrame(
-        [(1, "a", 1, 10.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 2, -5.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 10.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 2, -5.0, "X")])
     # suppliers: 1 in nation 1, 2 negative (-> NULL bucket)
-    spark.createDataFrame(
-        [(1, "s", 1, 10.0), (2, "t", 9, -1.0), (3, "u", 9, -2.0)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "supplier.parquet"))
+    write_tables(tmp_path, supplier=[(1, "s", 1, 10.0), (2, "t", 9, -1.0), (3, "u", 9, -2.0)])
     rows = {
         r["nkey"]: (r["n_cust"], r["n_supp"])
         for r in registry.QUERIES["join_null_safe"](
@@ -37,20 +30,12 @@ def test_join_null_safe_matches_null_buckets(spark, tmp_path):
 
 
 def test_not_in_null_semantics_standard(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 0.0, "X"), (2, "b", 1, 0.0, "X"), (3, "c", 1, 0.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 0.0, "X"), (2, "b", 1, 0.0, "X"), (3, "c", 1, 0.0, "X")])
     # customer 1 has an F order; 2 has only O; 3 has none
-    spark.createDataFrame(
-        [
-            (10, 1, "F", 5.0, _D0, "1-URGENT"),
-            (11, 2, "O", 5.0, _D0, "1-URGENT"),
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (10, 1, "F", 5.0, _D0, "1-URGENT"),
+        (11, 2, "O", 5.0, _D0, "1-URGENT"),
+    ])
     [r] = registry.QUERIES["not_in_null_semantics"](
         spark, str(tmp_path)
     ).collect()
@@ -65,21 +50,14 @@ def test_topk_with_ties_disciplines_diverge(spark, tmp_path):
     #   dense<=3: values 9, 7, 5 -> 4 + 1 + 2        -> 7
     #   row_number cutoff                            -> 3
     sizes = [9, 9, 9, 9, 7, 5, 5, 3]
-    spark.createDataFrame(
-        [(i + 1, "p", "B", "t", s, 1.0) for i, s in enumerate(sizes)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+    write_tables(tmp_path, part=[(i + 1, "p", "B", "t", s, 1.0) for i, s in enumerate(sizes)])
     [r] = registry.QUERIES["topk_with_ties"](spark, str(tmp_path)).collect()
     assert (r["n_rank_le3"], r["n_dense_le3"], r["n_rowno_le3"]) == (4, 7, 3)
     assert r["top_size"] == 9
 
 
 def test_hof_lambda_suite_hand_vector(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, [0.5, -0.25, 0.0], 0)],
-        "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=[(1, [0.5, -0.25, 0.0], 0)])
     [r] = registry.QUERIES["hof_lambda_suite"](spark, str(tmp_path)).collect()
     # qe = [500, -250, 0]; 0 is not > 0 so n_pos = 1
     assert (r["n_dims"], r["n_pos"]) == (3, 1)
@@ -95,16 +73,10 @@ def test_interval_merge_overlaps_hand_islands(spark, tmp_path):
         (2, 1, 1, 4.0, _D0 + timedelta(days=3)),  # [3, 8]
         (3, 1, 1, 1.0, _D0 + timedelta(days=10)),  # [10, 12]
     ]
-    spark.createDataFrame(
-        [
-            (ok, 100 + ok, sk, ln, qty, 1.0, 0.0, 0.0, "N", "O", ship)
-            for ok, ln, sk, qty, ship in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, 100 + ok, sk, ln, qty, 1.0, 0.0, 0.0, "N", "O", ship)
+        for ok, ln, sk, qty, ship in rows
+    ])
     [r] = registry.QUERIES["interval_merge_overlaps"](
         spark, str(tmp_path)
     ).collect()

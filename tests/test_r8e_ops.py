@@ -8,45 +8,30 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_orders_daily(spark, tmp_path, day_revenues):
-    rows = [
+def _daily_orders(day_revenues):
+    """One order per day with the given totalprice (whole dollars)."""
+    return [
         (i + 1, 1, "O", float(rev), _D0 + timedelta(days=i), "1-URGENT")
         for i, rev in enumerate(day_revenues)
     ]
-    spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
 
 
-def _write_lineitem_part(spark, tmp_path, lines, parts):
-    """lines: (orderkey, partkey, price, shipdate); parts: (key, type, brand)."""
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, 1.0, float(price), 0.0, 0.0, "N", "O", ship)
-            for ok, pk, price, ship in lines
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    spark.createDataFrame(
-        [(k, "p", brand, ptype, 1, 1.0) for k, ptype, brand in parts],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _line(ok, pk, price, ship):
+    return (ok, pk, 1, 1, 1.0, float(price), 0.0, 0.0, "N", "O", ship)
+
+
+def _part(k, ptype, brand):
+    return (k, "p", brand, ptype, 1, 1.0)
 
 
 def test_drawdown_hand_series(spark, tmp_path):
-    _write_orders_daily(spark, tmp_path, [10, 20, 15, 5])
+    write_tables(tmp_path, orders=_daily_orders([10, 20, 15, 5]))
     rows = sorted(
         registry.QUERIES["drawdown_daily"](spark, str(tmp_path)).collect(),
         key=lambda r: r["day_idx"],
@@ -57,7 +42,7 @@ def test_drawdown_hand_series(spark, tmp_path):
 
 def test_updown_streaks_hand_series(spark, tmp_path):
     # deltas: +1, +1, -1, -1, 0 -> streaks up(2), down(2), flat(1)
-    _write_orders_daily(spark, tmp_path, [1, 2, 3, 2, 1, 1])
+    write_tables(tmp_path, orders=_daily_orders([1, 2, 3, 2, 1, 1]))
     rows = {
         (r["dir"], r["len"]): r["n_streaks"]
         for r in registry.QUERIES["updown_streaks"](
@@ -78,11 +63,7 @@ def test_poisson_dispersion_hand_counts(spark, tmp_path):
                 (eid, _D0 + timedelta(days=day, minutes=eid), 1, "click",
                  1.0, "{}")
             )
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     [r] = registry.QUERIES["poisson_dispersion_audit"](
         spark, str(tmp_path)
     ).collect()
@@ -92,14 +73,13 @@ def test_poisson_dispersion_hand_counts(spark, tmp_path):
 
 def test_momentum_rank_monthly_hand_grid(spark, tmp_path):
     jan, feb = datetime(2024, 1, 15), datetime(2024, 2, 15)
-    _write_lineitem_part(
-        spark,
+    write_tables(
         tmp_path,
-        lines=[
+        lineitem=[_line(*r) for r in [
             (1, 1, 10.0, jan), (2, 1, 20.0, feb),   # brand A
             (3, 2, 30.0, jan), (4, 2, 15.0, feb),   # brand B
-        ],
-        parts=[(1, "STANDARD X", "A"), (2, "STANDARD Y", "B")],
+        ]],
+        part=[_part(*r) for r in [(1, "STANDARD X", "A"), (2, "STANDARD Y", "B")]],
     )
     rows = {
         (r["p_brand"], r["month_idx"]): r
@@ -117,14 +97,13 @@ def test_momentum_rank_monthly_hand_grid(spark, tmp_path):
 
 def test_promo_uplift_did_cells(spark, tmp_path):
     pre, post = datetime(1995, 6, 1), datetime(1996, 6, 1)
-    _write_lineitem_part(
-        spark,
+    write_tables(
         tmp_path,
-        lines=[
+        lineitem=[_line(*r) for r in [
             (1, 1, 1.0, pre), (2, 1, 3.0, post),    # treated (PROMO)
             (3, 2, 2.0, pre), (4, 2, 2.5, post),    # control
-        ],
-        parts=[(1, "PROMO ANODIZED", "A"), (2, "STANDARD X", "B")],
+        ]],
+        part=[_part(*r) for r in [(1, "PROMO ANODIZED", "A"), (2, "STANDARD X", "B")]],
     )
     [r] = registry.QUERIES["promo_uplift_did"](spark, str(tmp_path)).collect()
     assert (r["pre_treat_c"], r["post_treat_c"]) == (100, 300)

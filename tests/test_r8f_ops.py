@@ -7,30 +7,18 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _TS = datetime(1995, 6, 1)
 
 
-def _write_embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-
-
-def _write_lineitem(spark, tmp_path, lines):
-    """lines: (orderkey, partkey, discount)."""
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, i + 1, 1.0, 1.0, float(d), 0.0, "N", "O", _TS)
-            for i, (ok, pk, d) in enumerate(lines)
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _lines(lines):
+    """lines: (orderkey, partkey, discount), numbered from 1."""
+    return [
+        (ok, pk, 1, i + 1, 1.0, 1.0, float(d), 0.0, "N", "O", _TS)
+        for i, (ok, pk, d) in enumerate(lines)
+    ]
 
 
 def test_resource_allocation_hand_graph(spark, tmp_path):
@@ -42,7 +30,7 @@ def test_resource_allocation_hand_graph(spark, tmp_path):
                  (1, 4), (1, 4), (2, 4), (2, 4)]:
         ok += 1
         lines += [(ok, a, 0.0), (ok, b, 0.0)]
-    _write_lineitem(spark, tmp_path, lines)
+    write_tables(tmp_path, lineitem=_lines(lines))
     rows = {
         (r["part_a"], r["part_b"]): (r["n_common"], r["ra_e9"])
         for r in registry.QUERIES["graph_resource_allocation"](
@@ -53,8 +41,9 @@ def test_resource_allocation_hand_graph(spark, tmp_path):
 
 
 def test_embedding_covariance_hand_pairs(spark, tmp_path):
-    _write_embeddings(
-        spark, tmp_path, [(1, [1.0, 2.0], 0), (2, [3.0, -1.0], 0)]
+    write_tables(
+        tmp_path,
+        embeddings=[(1, [1.0, 2.0], 0), (2, [3.0, -1.0], 0)],
     )
     rows = {
         (r["i"], r["j"]): (r["n"], int(r["s_xy"]), r["s_x"], r["s_y"])
@@ -69,10 +58,9 @@ def test_embedding_covariance_hand_pairs(spark, tmp_path):
 
 def test_centroid_affinity_hand_labels(spark, tmp_path):
     # label 0: sums (4000, 0), n=2; label 1: sums (0, 2000), n=1
-    _write_embeddings(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, [1.0, 0.0], 0), (2, [3.0, 0.0], 0), (3, [0.0, 2.0], 1)],
+        embeddings=[(1, [1.0, 0.0], 0), (2, [3.0, 0.0], 0), (3, [0.0, 2.0], 1)],
     )
     [r] = registry.QUERIES["centroid_affinity_terms"](
         spark, str(tmp_path)
@@ -85,8 +73,9 @@ def test_centroid_affinity_hand_labels(spark, tmp_path):
 
 def test_norm_histogram_buckets(spark, tmp_path):
     # [1,0] -> sumsq 1e6 -> floor(log2) = 19; zero vector -> bucket -1
-    _write_embeddings(
-        spark, tmp_path, [(1, [1.0, 0.0], 0), (2, [0.0, 0.0], 0)]
+    write_tables(
+        tmp_path,
+        embeddings=[(1, [1.0, 0.0], 0), (2, [0.0, 0.0], 0)],
     )
     rows = {
         r["log2_bucket"]: (r["n"], r["min_sumsq"], r["max_sumsq"])
@@ -99,19 +88,15 @@ def test_norm_histogram_buckets(spark, tmp_path):
 
 def test_simpsons_flip(spark, tmp_path):
     # treat beats control INSIDE both strata but loses overall
-    spark.createDataFrame(
-        [
-            (1, "p", "B", "PROMO ANODIZED", 5, 1.0),
-            (2, "p", "B", "STANDARD X", 5, 1.0),
-            (3, "p", "B", "PROMO BURNISHED", 15, 1.0),
-            (4, "p", "B", "STANDARD Y", 15, 1.0),
-        ],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+    write_tables(tmp_path, part=[
+        (1, "p", "B", "PROMO ANODIZED", 5, 1.0),
+        (2, "p", "B", "STANDARD X", 5, 1.0),
+        (3, "p", "B", "PROMO BURNISHED", 15, 1.0),
+        (4, "p", "B", "STANDARD Y", 15, 1.0),
+    ])
     lines = [(100, 1, 0.09)] + [(100, 2, 0.08)] * 9  # stratum 0
     lines += [(101, 3, 0.02)] * 9 + [(101, 4, 0.01)]  # stratum 1
-    _write_lineitem(spark, tmp_path, lines)
+    write_tables(tmp_path, lineitem=_lines(lines))
     rows = {
         r["stratum"]: r
         for r in registry.QUERIES["simpsons_paradox_audit"](

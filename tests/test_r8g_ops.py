@@ -5,23 +5,18 @@ hapax ratio — handcrafted documents, hand-computed answers."""
 from __future__ import annotations
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
-
-def _write_docs(spark, tmp_path, rows):
-    """rows: (doc_id, text, lang, source)."""
-    spark.createDataFrame(
-        [(i, txt, lang, src, len(txt)) for i, txt, lang, src in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _doc(i, txt, lang, src):
+    return (i, txt, lang, src, len(txt))
 
 
 def test_truncation_loss_hand_docs(spark, tmp_path):
     long = "w " * 599 + "w"  # 600 tokens
-    _write_docs(
-        spark, tmp_path,
-        [(1, long, "en", "web"), (2, "a b c", "en", "web")],
+    write_tables(
+        tmp_path,
+        documents=[_doc(*r) for r in [(1, long, "en", "web"), (2, "a b c", "en", "web")]],
     )
     [r] = registry.QUERIES["doc_truncation_loss"](
         spark, str(tmp_path)
@@ -33,7 +28,7 @@ def test_truncation_loss_hand_docs(spark, tmp_path):
 
 def test_tokenizer_fertility_hand_docs(spark, tmp_path):
     # "don't stop": bpeish don|'|t|stop = 4, ws = 2 -> fertility 2.0
-    _write_docs(spark, tmp_path, [(1, "don't stop", "en", "web")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "don't stop", "en", "web")]])
     [r] = registry.QUERIES["tokenizer_fertility"](
         spark, str(tmp_path)
     ).collect()
@@ -41,7 +36,7 @@ def test_tokenizer_fertility_hand_docs(spark, tmp_path):
 
 
 def test_charclass_profile_hand_docs(spark, tmp_path):
-    _write_docs(spark, tmp_path, [(1, "ab 12 !", "en", "web")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "ab 12 !", "en", "web")]])
     [r] = registry.QUERIES["charclass_token_profile"](
         spark, str(tmp_path)
     ).collect()
@@ -52,9 +47,9 @@ def test_charclass_profile_hand_docs(spark, tmp_path):
 
 def test_good_turing_spectrum_hand_docs(spark, tmp_path):
     # bigrams: 'a b' x2, 'c d' x1 -> N_1 = 1 (mass 1), N_2 = 1 (mass 2)
-    _write_docs(
-        spark, tmp_path,
-        [(1, "a b", "en", "w"), (2, "a b", "en", "w"), (3, "c d", "en", "w")],
+    write_tables(
+        tmp_path,
+        documents=[_doc(*r) for r in [(1, "a b", "en", "w"), (2, "a b", "en", "w"), (3, "c d", "en", "w")]],
     )
     rows = {
         r["c_bucket"]: (r["n_grams"], r["occurrences"])
@@ -66,7 +61,7 @@ def test_good_turing_spectrum_hand_docs(spark, tmp_path):
 
 
 def test_hapax_ratio_hand_docs(spark, tmp_path):
-    _write_docs(spark, tmp_path, [(1, "x x y", "en", "w")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "x x y", "en", "w")]])
     [r] = registry.QUERIES["hapax_ratio_by_source"](
         spark, str(tmp_path)
     ).collect()

@@ -7,8 +7,8 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
@@ -21,11 +21,7 @@ def test_session_gap_sensitivity_hand_events(spark, tmp_path):
         (3, _D0 + timedelta(seconds=2000), 1, "click"),
         (4, _D0, 2, "click"),
     ]
-    spark.createDataFrame(
-        [(i, ts, u, e, 1.0, "{}") for i, ts, u, e in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[(i, ts, u, e, 1.0, "{}") for i, ts, u, e in rows])
     out = {
         r["gap_s"]: r["n_sessions"]
         for r in registry.QUERIES["session_gap_sensitivity"](
@@ -41,11 +37,7 @@ def test_audience_overlap_hand_events(spark, tmp_path):
         (4, 2, "purchase"), (5, 3, "purchase"),
         (6, 9, "view"),
     ]
-    spark.createDataFrame(
-        [(i, _D0, u, e, 1.0, "{}") for i, u, e in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[(i, _D0, u, e, 1.0, "{}") for i, u, e in rows])
     out = registry.QUERIES["audience_overlap_matrix"](
         spark, str(tmp_path)
     ).collect()
@@ -56,22 +48,18 @@ def test_audience_overlap_hand_events(spark, tmp_path):
     assert r["jaccard_e6"] == 2 * 1000000 // 3
 
 
-def _write_docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        [(i, txt, "en", "w", len(txt)) for i, txt in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _doc(i, txt):
+    return (i, txt, "en", "w", len(txt))
 
 
 def test_prefix_suffix_block_hand_docs(spark, tmp_path):
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[_doc(*r) for r in [
             (1, "P" * 32 + "X" + "S" * 32),
             (2, "P" * 32 + "Y" + "S" * 32),
             (3, "Q" * 70),
-        ],
+        ]],
     )
     rows = {
         r["doc_id"]: r
@@ -86,7 +74,7 @@ def test_prefix_suffix_block_hand_docs(spark, tmp_path):
 
 
 def test_array_set_relations_hand_doc(spark, tmp_path):
-    _write_docs(spark, tmp_path, [(1, "the cat the dog")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "the cat the dog")]])
     [r] = registry.QUERIES["array_set_relations"](
         spark, str(tmp_path)
     ).collect()
@@ -94,10 +82,6 @@ def test_array_set_relations_hand_doc(spark, tmp_path):
 
 
 def test_agg_bitwise_hand_keys(spark, tmp_path):
-    spark.createDataFrame(
-        [(5, "a", 1, 0.0, "X"), (6, "b", 1, 0.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(5, "a", 1, 0.0, "X"), (6, "b", 1, 0.0, "X")])
     [r] = registry.QUERIES["agg_bitwise"](spark, str(tmp_path)).collect()
     assert (r["n"], r["band"], r["bor"], r["bxor"]) == (2, 4, 7, 3)

@@ -7,38 +7,28 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _TS = datetime(1995, 6, 1)
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (quantity, price, flag)."""
-    spark.createDataFrame(
-        [
-            (i + 1, i + 1, 1, 1, float(q), float(p), 0.0, 0.0, fl, "O", _TS)
-            for i, (q, p, fl) in enumerate(rows)
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _lines(rows):
+    """rows: (quantity, price, flag), one order and part per line."""
+    return [
+        (i + 1, i + 1, 1, 1, float(q), float(p), 0.0, 0.0, fl, "O", _TS)
+        for i, (q, p, fl) in enumerate(rows)
+    ]
 
 
 def test_nth_value_hand_customers(spark, tmp_path):
     # segment X: balances 30 > 20 > 10 -> 3rd richest is custkey 3;
     # segment Y: only 2 rows -> NULL
-    spark.createDataFrame(
-        [
-            (1, "a", 1, 30.0, "X"), (2, "b", 1, 20.0, "X"),
-            (3, "c", 1, 10.0, "X"),
-            (4, "d", 1, 9.0, "Y"), (5, "e", 1, 8.0, "Y"),
-        ],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[
+        (1, "a", 1, 30.0, "X"), (2, "b", 1, 20.0, "X"),
+        (3, "c", 1, 10.0, "X"),
+        (4, "d", 1, 9.0, "Y"), (5, "e", 1, 8.0, "Y"),
+    ])
     rows = {
         r["c_mktsegment"]: (r["third_custkey"], r["n_rows"])
         for r in registry.QUERIES["window_nth_value"](
@@ -64,8 +54,9 @@ def test_calendar_dim_2024(spark, tmp_path):
 def test_percentile_disc_vs_cont_even_n(spark, tmp_path):
     # quantities 1,2,3,4: DISC p50 = 2 (first value reaching 0.5);
     # CONT p50 = 2.5 (interpolated)
-    _write_lineitem(
-        spark, tmp_path, [(1, 1, "N"), (2, 1, "N"), (3, 1, "N"), (4, 1, "N")]
+    write_tables(
+        tmp_path,
+        lineitem=_lines([(1, 1, "N"), (2, 1, "N"), (3, 1, "N"), (4, 1, "N")]),
     )
     [r] = registry.QUERIES["percentile_disc_vs_cont"](
         spark, str(tmp_path)
@@ -75,7 +66,7 @@ def test_percentile_disc_vs_cont_even_n(spark, tmp_path):
 
 def test_moments34_hand_values(spark, tmp_path):
     # quantities 1 and 2 -> cents 100, 200
-    _write_lineitem(spark, tmp_path, [(1, 1, "N"), (2, 1, "N")])
+    write_tables(tmp_path, lineitem=_lines([(1, 1, "N"), (2, 1, "N")]))
     [r] = registry.QUERIES["moments34_terms"](spark, str(tmp_path)).collect()
     assert (r["n"], r["s1"]) == (2, 300)
     assert int(r["s2"]) == 100**2 + 200**2
@@ -85,8 +76,9 @@ def test_moments34_hand_values(spark, tmp_path):
 
 def test_try_arithmetic_contract(spark, tmp_path):
     # one row at quantity 25 (divide-by-zero -> NULL), two clean rows
-    _write_lineitem(
-        spark, tmp_path, [(25, 7, "N"), (10, 7, "N"), (30, 7, "N")]
+    write_tables(
+        tmp_path,
+        lineitem=_lines([(25, 7, "N"), (10, 7, "N"), (30, 7, "N")]),
     )
     [r] = registry.QUERIES["try_arithmetic_nulls"](
         spark, str(tmp_path)

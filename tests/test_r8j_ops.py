@@ -7,24 +7,22 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        [(i, txt, "en", "w", len(txt)) for i, txt in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _doc(i, txt):
+    return (i, txt, "en", "w", len(txt))
 
 
 def test_explode_outer_preserves_empty_docs(spark, tmp_path):
     # doc 1 has two >15-char words, doc 2 has none
     long1, long2 = "a" * 16, "b" * 17
-    _write_docs(
-        spark, tmp_path, [(1, f"{long1} x {long2}"), (2, "only short words")]
+    write_tables(
+        tmp_path,
+        documents=[_doc(*r) for r in [(1, f"{long1} x {long2}"), (2, "only short words")]],
     )
     [r] = registry.QUERIES["explode_outer_semantics"](
         spark, str(tmp_path)
@@ -34,7 +32,7 @@ def test_explode_outer_preserves_empty_docs(spark, tmp_path):
 
 
 def test_array_index_contract_hand_doc(spark, tmp_path):
-    _write_docs(spark, tmp_path, [(1, "on the mat sat a cat")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "on the mat sat a cat")]])
     [r] = registry.QUERIES["array_index_contract"](
         spark, str(tmp_path)
     ).collect()
@@ -44,11 +42,7 @@ def test_array_index_contract_hand_doc(spark, tmp_path):
 
 
 def test_union_by_name_null_fill(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 7, 0.0, "S1"), (2, "b", 8, 0.0, "S2")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 7, 0.0, "S1"), (2, "b", 8, 0.0, "S2")])
     [r] = registry.QUERIES["union_by_name_contract"](
         spark, str(tmp_path)
     ).collect()
@@ -67,14 +61,10 @@ def test_locf_fill_hand_events(spark, tmp_path):
         (4, 30, 1, "click", 99.0),
         (5, 0, 2, "click", 99.0),
     ]
-    spark.createDataFrame(
-        [
-            (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
-            for i, s, u, e, v in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[
+        (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
+        for i, s, u, e, v in rows
+    ])
     out = {
         r["event_id"]: r["filled_c"]
         for r in registry.QUERIES["window_locf_fill"](
@@ -86,16 +76,10 @@ def test_locf_fill_hand_events(spark, tmp_path):
 
 def test_histogram_2d_hand_lines(spark, tmp_path):
     # qty 3 disc 0.04 -> bin (0, 4); qty 7 disc 0.04 -> (1, 4)
-    spark.createDataFrame(
-        [
-            (1, 1, 1, 1, 3.0, 10.0, 0.04, 0.0, "N", "O", _D0),
-            (2, 1, 1, 1, 7.0, 20.0, 0.04, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 3.0, 10.0, 0.04, 0.0, "N", "O", _D0),
+        (2, 1, 1, 1, 7.0, 20.0, 0.04, 0.0, "N", "O", _D0),
+    ])
     rows = {
         (r["qty_bin"], r["disc_bin"]): (r["n"], r["rev_c"])
         for r in registry.QUERIES["histogram_2d_grid"](

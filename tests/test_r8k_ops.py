@@ -7,49 +7,27 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, suppkey, linenumber, price)."""
-    spark.createDataFrame(
-        [
-            (ok, pk, sk, ln, 1.0, float(p), 0.0, 0.0, "N", "O", _D0)
-            for ok, pk, sk, ln, p in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk, sk, ln, p):
+    return (ok, pk, sk, ln, 1.0, float(p), 0.0, 0.0, "N", "O", _D0)
 
 
-def _write_orders(spark, tmp_path, rows):
-    """rows: (orderkey, custkey, day_offset)."""
-    spark.createDataFrame(
-        [
-            (ok, ck, "O", 1.0, _D0 + timedelta(days=d), "1-URGENT")
-            for ok, ck, d in rows
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+def _order(ok, ck, d):
+    return (ok, ck, "O", 1.0, _D0 + timedelta(days=d), "1-URGENT")
 
 
 def test_repeat_purchase_rate(spark, tmp_path):
     # brand A: cust 1 buys in orders 1+2 (repeat), cust 2 only order 3
-    spark.createDataFrame(
-        [(1, "p", "A", "t", 1, 1.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    _write_orders(spark, tmp_path, [(1, 1, 0), (2, 1, 5), (3, 2, 0)])
-    _write_lineitem(
-        spark, tmp_path,
-        [(1, 1, 1, 1, 10.0), (2, 1, 1, 1, 10.0), (3, 1, 1, 1, 10.0)],
+    write_tables(tmp_path, part=[(1, "p", "A", "t", 1, 1.0)])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 1, 0), (2, 1, 5), (3, 2, 0)]])
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 1, 1, 1, 10.0), (2, 1, 1, 1, 10.0), (3, 1, 1, 1, 10.0)]],
     )
     [r] = registry.QUERIES["repeat_purchase_rate_by_brand"](
         spark, str(tmp_path)
@@ -60,9 +38,9 @@ def test_repeat_purchase_rate(spark, tmp_path):
 
 def test_single_source_risk_buckets(spark, tmp_path):
     # part 1: one supplier (rev 10); part 2: two suppliers (rev 5)
-    _write_lineitem(
-        spark, tmp_path,
-        [(1, 1, 7, 1, 10.0), (2, 2, 7, 1, 2.0), (3, 2, 8, 1, 3.0)],
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 1, 7, 1, 10.0), (2, 2, 7, 1, 2.0), (3, 2, 8, 1, 3.0)]],
     )
     rows = {
         r["supp_bucket"]: (r["n_parts"], r["rev_c"])
@@ -75,17 +53,10 @@ def test_single_source_risk_buckets(spark, tmp_path):
 
 def test_nation_trade_balance_hand(spark, tmp_path):
     # nation 1 sells 10.00; nation 2's customer buys all 10.00
-    spark.createDataFrame(
-        [(7, "s", 1, 0.0)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "supplier.parquet"))
-    spark.createDataFrame(
-        [(5, "c", 2, 0.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
-    _write_orders(spark, tmp_path, [(1, 5, 0)])
-    _write_lineitem(spark, tmp_path, [(1, 1, 7, 1, 10.0)])
+    write_tables(tmp_path, supplier=[(7, "s", 1, 0.0)])
+    write_tables(tmp_path, customer=[(5, "c", 2, 0.0, "X")])
+    write_tables(tmp_path, orders=[_order(*r) for r in [(1, 5, 0)]])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 1, 7, 1, 10.0)]])
     rows = {
         r["nkey"]: (r["sell_c"], r["buy_c"], r["balance_c"])
         for r in registry.QUERIES["nation_trade_balance"](
@@ -98,8 +69,9 @@ def test_nation_trade_balance_hand(spark, tmp_path):
 def test_bgnbd_inputs_hand(spark, tmp_path):
     # cust 1: orders at days 0, 10, 30; cust 2: one order at day 20
     # horizon = day 30
-    _write_orders(
-        spark, tmp_path, [(1, 1, 0), (2, 1, 10), (3, 1, 30), (4, 2, 20)]
+    write_tables(
+        tmp_path,
+        orders=[_order(*r) for r in [(1, 1, 0), (2, 1, 10), (3, 1, 30), (4, 2, 20)]],
     )
     rows = {
         r["o_custkey"]: (r["x"], r["t_x_days"], r["cap_t_days"])
@@ -113,13 +85,13 @@ def test_bgnbd_inputs_hand(spark, tmp_path):
 def test_linenumber_contiguity(spark, tmp_path):
     # order 1: lines 1,2 (ok); order 2: lines 1,3 (gap);
     # order 3: lines 1,1 (dup, and max!=n is False: n=2, mx=1 -> noncontig)
-    _write_lineitem(
-        spark, tmp_path,
-        [
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [
             (1, 1, 1, 1, 1.0), (1, 1, 1, 2, 1.0),
             (2, 1, 1, 1, 1.0), (2, 1, 1, 3, 1.0),
             (3, 1, 1, 1, 1.0), (3, 1, 1, 1, 1.0),
-        ],
+        ]],
     )
     [r] = registry.QUERIES["linenumber_contiguity_audit"](
         spark, str(tmp_path)

@@ -7,25 +7,20 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, sec_offset_or_day, user, type) with seconds."""
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, e, 1.0, "{}") for i, s, u, e in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _event(i, s, u, e):
+    return (i, _D0 + timedelta(seconds=s), u, e, 1.0, "{}")
 
 
 def test_cooccurrence_band(spark, tmp_path):
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "click"), (2, 30, 1, "view"), (3, 200, 1, "purchase")],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "click"), (2, 30, 1, "view"), (3, 200, 1, "purchase")]],
     )
     rows = registry.QUERIES["event_cooccurrence_60s"](
         spark, str(tmp_path)
@@ -38,22 +33,14 @@ def test_cooccurrence_band(spark, tmp_path):
 
 
 def test_argminmax_tiebreak(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 10.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 1, 5.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 10.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 1, 5.0, "X")])
     [r] = registry.QUERIES["agg_argminmax"](spark, str(tmp_path)).collect()
     # balance tie at 10.0 resolves to the LARGER custkey for max
     assert (r["richest_key"], r["poorest_key"], r["n"]) == (2, 3, 3)
 
 
 def test_listagg_ordered(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 5.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 1, 1.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 5.0, "X"), (2, "b", 1, 10.0, "X"), (3, "c", 1, 1.0, "X")])
     [r] = registry.QUERIES["agg_listagg_ordered"](
         spark, str(tmp_path)
     ).collect()
@@ -62,23 +49,13 @@ def test_listagg_ordered(spark, tmp_path):
 
 
 def test_order_brand_diversity(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "p", "A", "t", 1, 1.0), (2, "p", "B", "t", 1, 1.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    spark.createDataFrame(
-        [
-            (1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-            (1, 1, 1, 2, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-            (1, 2, 1, 3, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-            (2, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, part=[(1, "p", "A", "t", 1, 1.0), (2, "p", "B", "t", 1, 1.0)])
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (1, 1, 1, 2, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (1, 2, 1, 3, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     rows = {
         r["n_brands"]: r["n_orders"]
         for r in registry.QUERIES["order_brand_diversity"](
@@ -98,7 +75,7 @@ def test_dominant_period_alternating(spark, tmp_path):
         for _ in range(n):
             eid += 1
             rows.append((eid, day * 86400 + eid % 60, 1, "click"))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=[_event(*r) for r in rows])
     [r] = registry.QUERIES["dominant_period_by_type"](
         spark, str(tmp_path)
     ).collect()

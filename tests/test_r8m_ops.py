@@ -8,19 +8,15 @@ import hashlib
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
 def test_filter_clause_hand_orders(spark, tmp_path):
     rows = [(1, "F", 10.0), (2, "O", 20.0), (3, "F", 5.0)]
-    spark.createDataFrame(
-        [(ok, 1, st, tp, _D0, "1-URGENT") for ok, st, tp in rows],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(ok, 1, st, tp, _D0, "1-URGENT") for ok, st, tp in rows])
     [r] = registry.QUERIES["agg_filter_clause"](spark, str(tmp_path)).collect()
     assert (r["n"], r["n_f"], r["rev_f_c"], r["rev_x_c"]) == (3, 2, 1500, 0)
 
@@ -45,14 +41,10 @@ def test_month_add_clamp(spark, tmp_path):
 def test_user_longest_streak_hand(spark, tmp_path):
     # user 1 active days 0,1,2 and 10 -> best 3; user 2 day 5 -> best 1
     rows = [(1, 0), (1, 1), (1, 2), (1, 10), (2, 5)]
-    spark.createDataFrame(
-        [
-            (i + 1, _D0 + timedelta(days=d, minutes=i), u, "click", 1.0, "{}")
-            for i, (u, d) in enumerate(rows)
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[
+        (i + 1, _D0 + timedelta(days=d, minutes=i), u, "click", 1.0, "{}")
+        for i, (u, d) in enumerate(rows)
+    ])
     out = {
         r["streak_days"]: r["n_users"]
         for r in registry.QUERIES["user_longest_streak"](
@@ -63,12 +55,10 @@ def test_user_longest_streak_hand(spark, tmp_path):
 
 
 def test_collect_set_sorted(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 0.0, "HOUSEHOLD"), (2, "b", 1, 0.0, "AUTOMOBILE"),
-         (3, "c", 1, 0.0, "HOUSEHOLD")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[
+        (1, "a", 1, 0.0, "HOUSEHOLD"), (2, "b", 1, 0.0, "AUTOMOBILE"),
+        (3, "c", 1, 0.0, "HOUSEHOLD"),
+    ])
     [r] = registry.QUERIES["agg_collect_set_sorted"](
         spark, str(tmp_path)
     ).collect()
@@ -78,10 +68,7 @@ def test_collect_set_sorted(spark, tmp_path):
 
 def test_hash_functions_match_python(spark, tmp_path):
     text = "hello spark"
-    spark.createDataFrame(
-        [(1, text, "en", "w", len(text))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=[(1, text, "en", "w", len(text))])
     [r] = registry.QUERIES["hash_functions_contract"](
         spark, str(tmp_path)
     ).collect()

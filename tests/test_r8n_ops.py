@@ -7,35 +7,27 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, sec, user, type, value)."""
-    spark.createDataFrame(
-        [
-            (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
-            for i, s, u, e, v in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _event(i, s, u, e, v):
+    return (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
 
 
 def test_session_dynamic_gap_hand(spark, tmp_path):
     # click at 0 (5m gap) and 240 merge; purchase at 1200 (30m) pulls
     # the click at 2700 (within 30m of 1200+1800) into one session
-    _write_events(
-        spark, tmp_path,
-        [
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [
             (1, 0, 1, "click", 1.0),
             (2, 240, 1, "click", 1.0),
             (3, 1200, 1, "purchase", 1.0),
             (4, 2700, 1, "click", 1.0),
-        ],
+        ]],
     )
     rows = sorted(
         registry.QUERIES["session_dynamic_gap"](
@@ -54,16 +46,10 @@ def test_session_dynamic_gap_hand(spark, tmp_path):
 
 def test_weighted_median_hand(spark, tmp_path):
     # qty 1 carries 1.00, qty 10 carries 9.00 -> half of 10.00 sits at 10
-    spark.createDataFrame(
-        [
-            (1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-            (2, 1, 1, 1, 10.0, 9.0, 0.0, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 1, 1, 1, 10.0, 9.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     [r] = registry.QUERIES["weighted_median_exact"](
         spark, str(tmp_path)
     ).collect()
@@ -71,7 +57,7 @@ def test_weighted_median_hand(spark, tmp_path):
 
 
 def test_csv_roundtrip_with_delimiterish_text(spark, tmp_path):
-    _write_events(spark, tmp_path, [(1, 0, 1, "click", 2.5)])
+    write_tables(tmp_path, events=[_event(*r) for r in [(1, 0, 1, "click", 2.5)]])
     [r] = registry.QUERIES["csv_column_roundtrip"](
         spark, str(tmp_path)
     ).collect()
@@ -81,10 +67,7 @@ def test_csv_roundtrip_with_delimiterish_text(spark, tmp_path):
 
 
 def test_nested_flatten_identity(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a b c d e", "en", "w", 9)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=[(1, "a b c d e", "en", "w", 9)])
     [r] = registry.QUERIES["nested_array_flatten"](
         spark, str(tmp_path)
     ).collect()
@@ -93,19 +76,11 @@ def test_nested_flatten_identity(spark, tmp_path):
 
 
 def test_catalog_dead_stock_hand(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "p", "A", "t", 1, 1.0), (2, "p", "A", "t", 1, 1.0),
-         (3, "p", "B", "t", 1, 1.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0)],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, part=[
+        (1, "p", "A", "t", 1, 1.0), (2, "p", "A", "t", 1, 1.0),
+        (3, "p", "B", "t", 1, 1.0),
+    ])
+    write_tables(tmp_path, lineitem=[(1, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0)])
     rows = {
         r["p_brand"]: (r["n_parts"], r["n_dead"], r["dead_e6"])
         for r in registry.QUERIES["catalog_dead_stock"](

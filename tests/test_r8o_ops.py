@@ -7,30 +7,21 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _TS = datetime(1995, 6, 1)
 
 
-def _write_lineitem_pairs(spark, tmp_path, pairs):
-    """pairs: (orderkey, partkey, suppkey) — one line per pair."""
-    spark.createDataFrame(
-        [
-            (ok, pk, sk, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _TS)
-            for ok, pk, sk in pairs
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk, sk):
+    return (ok, pk, sk, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _TS)
 
 
 def test_modularity_terms_two_cliques(spark, tmp_path):
     # two disjoint part-supplier stars: {p1,p2}-s1 and {p9}-s9
-    _write_lineitem_pairs(
-        spark, tmp_path, [(1, 1, 1), (2, 2, 1), (3, 9, 9)]
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 1, 1), (2, 2, 1), (3, 9, 9)]],
     )
     rows = registry.QUERIES["modularity_terms_lp"](
         spark, str(tmp_path)
@@ -51,11 +42,7 @@ def test_like_any_all_hand_parts(spark, tmp_path):
         "PROMO ANODIZED", "STANDARD X", "ECONOMY BRUSHED NICKEL",
         "BRUSHED COPPER",
     ]
-    spark.createDataFrame(
-        [(i + 1, "p", "B", ty, 1, 1.0) for i, ty in enumerate(types)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+    write_tables(tmp_path, part=[(i + 1, "p", "B", ty, 1, 1.0) for i, ty in enumerate(types)])
     [r] = registry.QUERIES["like_any_all_contract"](
         spark, str(tmp_path)
     ).collect()
@@ -66,11 +53,7 @@ def test_like_any_all_hand_parts(spark, tmp_path):
 
 def test_nulls_ordering_hand(spark, tmp_path):
     # custkey 1 has NULL key (negative bal); 2 and 3 have 5.00 < 9.00
-    spark.createDataFrame(
-        [(1, "a", 1, -1.0, "X"), (2, "b", 1, 5.0, "X"), (3, "c", 1, 9.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, -1.0, "X"), (2, "b", 1, 5.0, "X"), (3, "c", 1, 9.0, "X")])
     [r] = registry.QUERIES["nulls_ordering_contract"](
         spark, str(tmp_path)
     ).collect()
@@ -80,11 +63,7 @@ def test_nulls_ordering_hand(spark, tmp_path):
 
 
 def test_percent_rank_vs_cume_dist(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 1.0, "X"), (2, "b", 1, 2.0, "X"), (3, "c", 1, 3.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 1.0, "X"), (2, "b", 1, 2.0, "X"), (3, "c", 1, 3.0, "X")])
     rows = {
         r["c_custkey"]: (r["pr"], r["cd"])
         for r in registry.QUERIES["window_percent_rank"](
@@ -98,17 +77,11 @@ def test_percent_rank_vs_cume_dist(spark, tmp_path):
 
 def test_greatest_least_null_skip(spark, tmp_path):
     # qty 30 (>25): greatest(30, price_k); qty 10: greatest(NULL, price_k)
-    _write_lineitem_pairs(spark, tmp_path, [(1, 1, 1)])
-    spark.createDataFrame(
-        [
-            (1, 1, 1, 1, 30.0, 5000.0, 0.0, 0.0, "N", "O", _TS),
-            (2, 1, 1, 1, 10.0, 99000.0, 0.0, 0.0, "N", "O", _TS),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[_line(*r) for r in [(1, 1, 1)]])
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 30.0, 5000.0, 0.0, 0.0, "N", "O", _TS),
+        (2, 1, 1, 1, 10.0, 99000.0, 0.0, 0.0, "N", "O", _TS),
+    ])
     [r] = registry.QUERIES["greatest_least_null_contract"](
         spark, str(tmp_path)
     ).collect()

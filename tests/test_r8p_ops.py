@@ -8,8 +8,8 @@ import base64
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)  # a Monday
 
@@ -22,11 +22,7 @@ def test_lag_features_hand_series(spark, tmp_path):
             eid += 1
             rows.append((eid, _D0 + timedelta(days=day, minutes=eid), 1,
                          "click", 1.0, "{}"))
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=rows)
     out = {
         r["day_idx"] - 19723: (r["n"], r["n_lag1"], r["n_lag7"], r["delta1"])
         for r in registry.QUERIES["lag_features_daily"](
@@ -40,12 +36,10 @@ def test_lag_features_hand_series(spark, tmp_path):
 
 
 def test_hour_of_week_monday_zero(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, _D0 + timedelta(hours=9), 1, "click", 1.0, "{}"),
-         (2, _D0 + timedelta(days=6, hours=23), 2, "click", 1.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[
+        (1, _D0 + timedelta(hours=9), 1, "click", 1.0, "{}"),
+        (2, _D0 + timedelta(days=6, hours=23), 2, "click", 1.0, "{}"),
+    ])
     rows = {
         (r["dow"], r["hr"]): (r["n"], r["n_users"])
         for r in registry.QUERIES["hour_of_week_matrix"](
@@ -57,16 +51,10 @@ def test_hour_of_week_monday_zero(spark, tmp_path):
 
 
 def test_anova_cells_hand(spark, tmp_path):
-    spark.createDataFrame(
-        [
-            (1, 1, 1, 1, 5.0, 3.0, 0.0, 0.0, "N", "O", _D0),
-            (2, 1, 1, 1, 5.0, 4.0, 0.0, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 5.0, 3.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 1, 1, 1, 5.0, 4.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     [r] = registry.QUERIES["anova_two_way_terms"](
         spark, str(tmp_path)
     ).collect()
@@ -77,10 +65,7 @@ def test_anova_cells_hand(spark, tmp_path):
 
 def test_binary_encoding_matches_python(spark, tmp_path):
     text = "roundtrip me exactly!"
-    spark.createDataFrame(
-        [(1, text, "en", "w", len(text))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=[(1, text, "en", "w", len(text))])
     [r] = registry.QUERIES["binary_encoding_roundtrip"](
         spark, str(tmp_path)
     ).collect()
@@ -91,21 +76,11 @@ def test_binary_encoding_matches_python(spark, tmp_path):
 
 def test_captive_customers_majority(spark, tmp_path):
     # cust 1 spends 6.00 with supp 7 and 4.00 with supp 8 -> captive of 7
-    spark.createDataFrame(
-        [(1, 1, "O", 10.0, _D0, "1-URGENT")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    spark.createDataFrame(
-        [
-            (1, 1, 7, 1, 1.0, 6.0, 0.0, 0.0, "N", "O", _D0),
-            (1, 1, 8, 2, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, orders=[(1, 1, "O", 10.0, _D0, "1-URGENT")])
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 7, 1, 1.0, 6.0, 0.0, 0.0, "N", "O", _D0),
+        (1, 1, 8, 2, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     rows = {
         r["l_suppkey"]: (r["n_customers"], r["n_captive"], r["supplier_rev_c"])
         for r in registry.QUERIES["captive_customer_share"](

@@ -6,30 +6,24 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
 def test_share_of_parent_two_level_hand(spark, tmp_path):
     # category STANDARD: brand A 3.00, brand B 1.00; category PROMO: C 4.00
-    spark.createDataFrame(
-        [(1, "p", "A", "STANDARD X", 1, 1.0),
-         (2, "p", "B", "STANDARD Y", 1, 1.0),
-         (3, "p", "C", "PROMO Z", 1, 1.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 1.0, 3.0, 0.0, 0.0, "N", "O", _D0),
-         (2, 2, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-         (3, 3, 1, 1, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0)],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, part=[
+        (1, "p", "A", "STANDARD X", 1, 1.0),
+        (2, "p", "B", "STANDARD Y", 1, 1.0),
+        (3, "p", "C", "PROMO Z", 1, 1.0),
+    ])
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 1.0, 3.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 2, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (3, 3, 1, 1, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     rows = {
         (r["category"], r["p_brand"]): (r["share_of_cat_e6"], r["cat_share_e6"])
         for r in registry.QUERIES["share_of_parent_two_level"](
@@ -41,20 +35,16 @@ def test_share_of_parent_two_level_hand(spark, tmp_path):
     assert rows[("PROMO", "C")] == (1000000, 500000)
 
 
-def _write_events(spark, tmp_path, rows):
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, e, v, "{}") for i, s, u, e, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _event(i, s, u, e, v):
+    return (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
 
 
 def test_dwell_time_hand(spark, tmp_path):
     # user 1: click@0 -> view@30 -> purchase@30 (instant) -> (end)
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "click", 1.0), (2, 30, 1, "view", 1.0),
-         (3, 30, 1, "purchase", 1.0)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "click", 1.0), (2, 30, 1, "view", 1.0),
+         (3, 30, 1, "purchase", 1.0)]],
     )
     rows = {
         r["event_type"]: (r["n_dwells"], r["total_dwell_s"], r["n_instant"])
@@ -69,9 +59,9 @@ def test_dwell_time_hand(spark, tmp_path):
 
 def test_arpu_weekly_hand(spark, tmp_path):
     # week 0: users 1 (purchase 5.00) and 2 (click only) -> ARPU 2.50
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "purchase", 5.0), (2, 60, 2, "click", 9.0)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "purchase", 5.0), (2, 60, 2, "click", 9.0)]],
     )
     [r] = registry.QUERIES["arpu_weekly"](spark, str(tmp_path)).collect()
     assert (r["active_users"], r["revenue_c"]) == (2, 500)
@@ -79,12 +69,10 @@ def test_arpu_weekly_hand(spark, tmp_path):
 
 
 def test_daily_ribbon_hand(spark, tmp_path):
-    spark.createDataFrame(
-        [(k, 1, "O", float(v), _D0, "1-URGENT")
-         for k, v in enumerate([1.0, 2.0, 3.0, 4.0], start=1)],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (k, 1, "O", float(v), _D0, "1-URGENT")
+        for k, v in enumerate([1.0, 2.0, 3.0, 4.0], start=1)
+    ])
     [r] = registry.QUERIES["daily_value_ribbon"](spark, str(tmp_path)).collect()
     # DISC quartiles of {1,2,3,4}: p25=1, p50=2, p75=3
     assert (r["n"], r["p25_c"], r["p50_c"], r["p75_c"]) == (4, 100, 200, 300)
@@ -98,9 +86,7 @@ def test_knn_vote_planted_clusters(spark, tmp_path):
         rows.append((i * 2, [1.0 + i * 0.001, 0.0], 0))       # cluster A
         rows.append((i * 2 + 1, [0.0, 1.0 + i * 0.001], 1))   # cluster B
     rows.append((0 + 50, [0.0, 1.5], 1))  # vec 50: probe in cluster B
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=rows)
     out = {
         r["probe_label"]: (r["n_probes"], r["n_correct"], r["acc_e6"])
         for r in registry.QUERIES["knn_label_vote_accuracy"](

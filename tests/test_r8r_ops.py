@@ -7,27 +7,22 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, sec, user, type, value)."""
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, e, v, "{}") for i, s, u, e, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _event(i, s, u, e, v):
+    return (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
 
 
 def test_ratio_metric_terms_hand(spark, tmp_path):
     # arm 0: user 2 -> x=300 cents, y=2 events; arm 1: user 1 -> x=0, y=1
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 2, "purchase", 3.0), (2, 10, 2, "click", 1.0),
-         (3, 0, 1, "click", 9.0)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 2, "purchase", 3.0), (2, 10, 2, "click", 1.0),
+         (3, 0, 1, "click", 9.0)]],
     )
     rows = {
         r["arm"]: r
@@ -45,10 +40,10 @@ def test_ratio_metric_terms_hand(spark, tmp_path):
 
 def test_id_time_monotonicity_hand(spark, tmp_path):
     # user 1: ids 5 then 3 in time order -> one inversion; user 2 clean
-    _write_events(
-        spark, tmp_path,
-        [(5, 0, 1, "click", 1.0), (3, 10, 1, "click", 1.0),
-         (7, 0, 2, "click", 1.0), (8, 10, 2, "click", 1.0)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(5, 0, 1, "click", 1.0), (3, 10, 1, "click", 1.0),
+         (7, 0, 2, "click", 1.0), (8, 10, 2, "click", 1.0)]],
     )
     [r] = registry.QUERIES["id_time_monotonicity_audit"](
         spark, str(tmp_path)
@@ -59,14 +54,10 @@ def test_id_time_monotonicity_hand(spark, tmp_path):
 
 
 def test_topn_share_hand(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, pk, 1, 1, 1.0, float(v), 0.0, 0.0, "N", "O", _D0)
-         for pk, v in [(1, 6.0), (2, 3.0), (3, 1.0)]],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (1, pk, 1, 1, 1.0, float(v), 0.0, 0.0, "N", "O", _D0)
+        for pk, v in [(1, 6.0), (2, 3.0), (3, 1.0)]
+    ])
     rows = registry.QUERIES["topn_revenue_share"](
         spark, str(tmp_path)
     ).collect()
@@ -76,11 +67,7 @@ def test_topn_share_hand(spark, tmp_path):
 
 
 def test_empty_agg_shapes(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, "a", 1, 10.0, "X")],
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(1, "a", 1, 10.0, "X")])
     [r] = registry.QUERIES["empty_agg_contract"](spark, str(tmp_path)).collect()
     assert (r["global_count"], r["global_sum_null"], r["n_groups"]) == (
         0, True, 0,

@@ -7,20 +7,14 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
 def test_feature_target_terms_hand(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 2.0, 5.0, 0.1, 0.0, "N", "O", _D0)],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[(1, 1, 1, 1, 2.0, 5.0, 0.1, 0.0, "N", "O", _D0)])
     rows = {
         r["feature"]: (r["s_x"], r["s_y"], int(r["s_xy"]))
         for r in registry.QUERIES["feature_target_corr_terms"](
@@ -35,12 +29,10 @@ def test_feature_target_terms_hand(spark, tmp_path):
 
 def test_monthly_median_hand(spark, tmp_path):
     # Jan days: 10, 30, 20 dollars -> median day 20.00
-    spark.createDataFrame(
-        [(k, 1, "O", float(v), _D0 + timedelta(days=k - 1), "1-URGENT")
-         for k, v in [(1, 10.0), (2, 30.0), (3, 20.0)]],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (k, 1, "O", float(v), _D0 + timedelta(days=k - 1), "1-URGENT")
+        for k, v in [(1, 10.0), (2, 30.0), (3, 20.0)]
+    ])
     [r] = registry.QUERIES["monthly_median_daily_rev"](
         spark, str(tmp_path)
     ).collect()
@@ -50,14 +42,10 @@ def test_monthly_median_hand(spark, tmp_path):
 
 
 def test_cube3_levels(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 5.0, 1.0, 0.0, 0.0, "N", "O", _D0),
-         (2, 1, 1, 1, 30.0, 1.0, 0.0, 0.0, "R", "F", _D0)],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 1, 1, 5.0, 1.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 1, 1, 1, 30.0, 1.0, 0.0, 0.0, "R", "F", _D0),
+    ])
     rows = registry.QUERIES["cube3_grouping_flags"](
         spark, str(tmp_path)
     ).collect()
@@ -74,12 +62,10 @@ def test_cube3_levels(spark, tmp_path):
 def test_count_distinct_multi_hand(spark, tmp_path):
     rows = [(1, 0, 1, "click"), (2, 1, 1, "view"), (3, 2, 2, "click"),
             (4, 3, 1, "click")]
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, e, 1.0, "{}")
-         for i, s, u, e in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[
+        (i, _D0 + timedelta(seconds=s), u, e, 1.0, "{}")
+        for i, s, u, e in rows
+    ])
     [r] = registry.QUERIES["count_distinct_multi"](
         spark, str(tmp_path)
     ).collect()
@@ -88,11 +74,7 @@ def test_count_distinct_multi_hand(spark, tmp_path):
 
 def test_value_percentile_lookup_hand(spark, tmp_path):
     vals = [5000.0, 50000.0, 150000.0, 250000.0]
-    spark.createDataFrame(
-        [(k + 1, 1, "O", v, _D0, "1-URGENT") for k, v in enumerate(vals)],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(k + 1, 1, "O", v, _D0, "1-URGENT") for k, v in enumerate(vals)])
     [r] = registry.QUERIES["value_percentile_lookup"](
         spark, str(tmp_path)
     ).collect()

@@ -6,35 +6,22 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, suppkey, linenumber, qty, price)."""
-    spark.createDataFrame(
-        [
-            (ok, pk, sk, ln, float(q), float(p), 0.0, 0.0, "N", "O", _D0)
-            for ok, pk, sk, ln, q, p in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk, sk, ln, q, p):
+    return (ok, pk, sk, ln, float(q), float(p), 0.0, 0.0, "N", "O", _D0)
 
 
 def test_header_detail_both_directions(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, 1, "O", 1.0, _D0, "1-URGENT"), (2, 1, "O", 1.0, _D0, "1-URGENT")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(1, 1, "O", 1.0, _D0, "1-URGENT"), (2, 1, "O", 1.0, _D0, "1-URGENT")])
     # order 2 has no lines; line for order 9 has no header
-    _write_lineitem(
-        spark, tmp_path, [(1, 1, 1, 1, 1.0, 1.0), (9, 1, 1, 1, 1.0, 1.0)]
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [(1, 1, 1, 1, 1.0, 1.0), (9, 1, 1, 1, 1.0, 1.0)]],
     )
     [r] = registry.QUERIES["header_detail_integrity"](
         spark, str(tmp_path)
@@ -47,13 +34,13 @@ def test_fingerprint_order_insensitive_and_sensitive(spark, tmp_path):
     # orders 1 and 2 contain the SAME two lines in different linenumbers?
     # No — linenumber is hashed, so identical content = identical fields.
     # Orders 1 and 2: same lines -> same xor; order 3 differs by price.
-    _write_lineitem(
-        spark, tmp_path,
-        [
+    write_tables(
+        tmp_path,
+        lineitem=[_line(*r) for r in [
             (1, 10, 1, 1, 2.0, 5.0), (1, 11, 1, 2, 3.0, 7.0),
             (2, 10, 1, 1, 2.0, 5.0), (2, 11, 1, 2, 3.0, 7.0),
             (3, 10, 1, 1, 2.0, 5.0), (3, 11, 1, 2, 3.0, 7.5),
-        ],
+        ]],
     )
     rows = {
         r["l_orderkey"]: (r["n_lines"], r["content_xor"])
@@ -69,12 +56,10 @@ def test_fingerprint_order_insensitive_and_sensitive(spark, tmp_path):
 def test_burst_rate_hand(spark, tmp_path):
     # user 1: 3 events inside 60s, later 1 alone -> peak 3; user 2 -> 1
     rows = [(1, 0, 1), (2, 30, 1), (3, 59, 1), (4, 500, 1), (5, 0, 2)]
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, "click", 1.0, "{}")
-         for i, s, u in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[
+        (i, _D0 + timedelta(seconds=s), u, "click", 1.0, "{}")
+        for i, s, u in rows
+    ])
     out = {
         r["peak_events_60s"]: r["n_users"]
         for r in registry.QUERIES["burst_max_rate_per_user"](
@@ -87,12 +72,10 @@ def test_burst_rate_hand(spark, tmp_path):
 def test_banded_2d_neighbors(spark, tmp_path):
     # part 1 (100.0, size 4) and part 2 (105.0, size 5): within both
     # bands; part 3 (100.0, size 9): size too far
-    spark.createDataFrame(
-        [(1, "p", "B", "t", 4, 100.0), (2, "p", "B", "t", 5, 105.0),
-         (3, "p", "B", "t", 9, 100.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+    write_tables(tmp_path, part=[
+        (1, "p", "B", "t", 4, 100.0), (2, "p", "B", "t", 5, 105.0),
+        (3, "p", "B", "t", 9, 100.0),
+    ])
     rows = {
         r["part_a"]: r["n_neighbors"]
         for r in registry.QUERIES["join_range_banded_2d"](

@@ -6,8 +6,8 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
@@ -35,9 +35,7 @@ def test_triplet_margins_planted(spark, tmp_path):
         (50, [0.0, 0.95], 1),    # probe label 1, positive is vec 2
         (3, [0.05, 0.0], 0),     # weak other-label for probe 50
     ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=rows)
     out = {
         r["probe_label"]: (r["n_probes"], r["n_violations"])
         for r in registry.QUERIES["triplet_margin_stats"](
@@ -51,11 +49,7 @@ def test_user_dominance_hand(spark, tmp_path):
     # user 1: 3 clicks 1 view -> 75% band 7; user 2: all clicks -> band 10
     rows = [(1, 1, "click"), (2, 1, "click"), (3, 1, "click"), (4, 1, "view"),
             (5, 2, "click"), (6, 2, "click")]
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=i), u, e, 1.0, "{}") for i, u, e in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    write_tables(tmp_path, events=[(i, _D0 + timedelta(seconds=i), u, e, 1.0, "{}") for i, u, e in rows])
     out = {
         r["dominance_decile"]: r["n_users"]
         for r in registry.QUERIES["user_dominance_share"](
@@ -67,22 +61,12 @@ def test_user_dominance_hand(spark, tmp_path):
 
 def test_supplier_hhi_hand(spark, tmp_path):
     # supp 7: customers 60/40 split -> HHI = 0.52; supp 8: single -> 1.0
-    spark.createDataFrame(
-        [(1, 1, "O", 1.0, _D0, "1-URGENT"), (2, 2, "O", 1.0, _D0, "1-URGENT")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    spark.createDataFrame(
-        [
-            (1, 1, 7, 1, 1.0, 6.0, 0.0, 0.0, "N", "O", _D0),
-            (2, 1, 7, 1, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0),
-            (1, 1, 8, 2, 1.0, 5.0, 0.0, 0.0, "N", "O", _D0),
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, orders=[(1, 1, "O", 1.0, _D0, "1-URGENT"), (2, 2, "O", 1.0, _D0, "1-URGENT")])
+    write_tables(tmp_path, lineitem=[
+        (1, 1, 7, 1, 1.0, 6.0, 0.0, 0.0, "N", "O", _D0),
+        (2, 1, 7, 1, 1.0, 4.0, 0.0, 0.0, "N", "O", _D0),
+        (1, 1, 8, 2, 1.0, 5.0, 0.0, 0.0, "N", "O", _D0),
+    ])
     out = {
         r["l_suppkey"]: (r["n_customers"], r["hhi_e6"])
         for r in registry.QUERIES["supplier_customer_hhi"](

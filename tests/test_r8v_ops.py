@@ -6,28 +6,23 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, sec, user, type, value)."""
-    spark.createDataFrame(
-        [(i, _D0 + timedelta(seconds=s), u, e, v, "{}") for i, s, u, e, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _event(i, s, u, e, v):
+    return (i, _D0 + timedelta(seconds=s), u, e, v, "{}")
 
 
 def test_events_to_first_purchase_hand(spark, tmp_path):
     # user 1: click, view, purchase -> 2 before; user 2: purchase first -> 0
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "click", 1.0), (2, 10, 1, "view", 1.0),
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "click", 1.0), (2, 10, 1, "view", 1.0),
          (3, 20, 1, "purchase", 1.0), (4, 0, 2, "purchase", 1.0),
-         (5, 10, 2, "click", 1.0)],
+         (5, 10, 2, "click", 1.0)]],
     )
     out = {
         r["events_before_purchase"]: r["n_buyers"]
@@ -40,9 +35,9 @@ def test_events_to_first_purchase_hand(spark, tmp_path):
 
 def test_zero_day_share_hand(spark, tmp_path):
     # clicks on days 0 and 4 -> span 5, active 2, zero share 3/5
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "click", 1.0), (2, 4 * 86400, 1, "click", 1.0)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "click", 1.0), (2, 4 * 86400, 1, "click", 1.0)]],
     )
     [r] = registry.QUERIES["zero_day_share_by_type"](
         spark, str(tmp_path)
@@ -58,12 +53,10 @@ def test_double_charge_hand(spark, tmp_path):
         (1, 1, 10.0, 0), (2, 1, 10.0, 3), (3, 1, 10.0, 12),
         (4, 2, 10.0, 0),
     ]
-    spark.createDataFrame(
-        [(ok, ck, "O", v, _D0 + timedelta(days=d), "1-URGENT")
-         for ok, ck, v, d in rows],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (ok, ck, "O", v, _D0 + timedelta(days=d), "1-URGENT")
+        for ok, ck, v, d in rows
+    ])
     [r] = registry.QUERIES["double_charge_candidates"](
         spark, str(tmp_path)
     ).collect()
@@ -71,10 +64,10 @@ def test_double_charge_hand(spark, tmp_path):
 
 
 def test_value_range_audit_hand(spark, tmp_path):
-    _write_events(
-        spark, tmp_path,
-        [(1, 0, 1, "click", 0.0), (2, 1, 1, "click", -5.0),
-         (3, 2, 1, "click", 2000000.0), (4, 3, 1, "click", 3.5)],
+    write_tables(
+        tmp_path,
+        events=[_event(*r) for r in [(1, 0, 1, "click", 0.0), (2, 1, 1, "click", -5.0),
+         (3, 2, 1, "click", 2000000.0), (4, 3, 1, "click", 3.5)]],
     )
     [r] = registry.QUERIES["value_range_audit"](spark, str(tmp_path)).collect()
     assert (r["n"], r["n_zero"], r["n_negative"], r["n_huge"], r["n_null"]) \

@@ -6,20 +6,18 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 
-registry.load_all()
 
 _D0 = datetime(2024, 1, 1)
 
 
 def test_trend_accel_flat_series_reads_1e6(spark, tmp_path):
     # 30 identical days -> once both windows are saturated, accel = 1e6
-    spark.createDataFrame(
-        [(i + 1, 1, "O", 100.0, _D0 + timedelta(days=i), "1-URGENT")
-         for i in range(30)],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (i + 1, 1, "O", 100.0, _D0 + timedelta(days=i), "1-URGENT")
+        for i in range(30)
+    ])
     rows = sorted(
         registry.QUERIES["trend_accel_7v28"](spark, str(tmp_path)).collect(),
         key=lambda r: r["day_idx"],
@@ -37,14 +35,10 @@ def test_top_movers_hand(spark, tmp_path):
         (1, 1, 100.0, 0), (2, 1, 200.0, 7),
         (3, 2, 100.0, 0), (4, 2, 50.0, 7),
     ]
-    spark.createDataFrame(
-        [(ok, pk, 1, 1, 1.0, v, 0.0, 0.0, "N", "O", _D0 + timedelta(days=d))
-         for ok, pk, v, d in lines],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, 1.0, v, 0.0, 0.0, "N", "O", _D0 + timedelta(days=d))
+        for ok, pk, v, d in lines
+    ])
     rows = registry.QUERIES["top_movers_wow_parts"](
         spark, str(tmp_path)
     ).collect()

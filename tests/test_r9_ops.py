@@ -9,59 +9,34 @@ from __future__ import annotations
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey, quantity, extendedprice, shipdate)"""
-    full = [
-        (ok, pk, 1, 1, float(q), float(ep), 0.0, 0.0, "N", "O", d)
-        for ok, pk, q, ep, d in rows
-    ]
-    spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_part(spark, tmp_path, rows):
-    """rows: (partkey, brand)"""
-    full = [(pk, f"part{pk}", b, "TYPE", 1, 1.0) for pk, b in rows]
-    spark.createDataFrame(
-        full,
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _line(ok, pk, q, ep, d):
+    return (ok, pk, 1, 1, float(q), float(ep), 0.0, 0.0, "N", "O", d)
 
 
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, ts, user_id, event_type, value)"""
-    full = [(i, ts, u, et, float(v), "{}") for i, ts, u, et, v in rows]
-    spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+def _part(pk, b):
+    return (pk, f"part{pk}", b, "TYPE", 1, 1.0)
+
+
+def _event(i, ts, u, et, v):
+    return (i, ts, u, et, float(v), "{}")
 
 
 def test_price_volume_bridge_identity_and_sign(spark, tmp_path):
     """Volume effect uses base-month unit economics with the sign
     factored out of the truncating division; effects sum exactly to
     the revenue delta."""
-    _write_part(spark, tmp_path, [(1, "B1")])
-    _write_lineitem(
-        spark,
+    write_tables(tmp_path, part=[_part(*r) for r in [(1, "B1")]])
+    write_tables(
         tmp_path,
-        [
+        lineitem=[_line(*r) for r in [
             # base month: qty 10, revenue 10.00
             (1, 1, 10, 10.0, datetime(2024, 1, 5)),
             # last month: qty 5, revenue 9.00
             (2, 1, 5, 9.0, datetime(2024, 2, 5)),
-        ],
+        ]],
     )
     [r] = registry.QUERIES["price_volume_bridge"](spark, str(tmp_path)).collect()
     assert (r["q0"], r["q1"]) == (10, 5)
@@ -77,11 +52,10 @@ def test_xyz_classes_split_on_active_week_cv(spark, tmp_path):
     """cv^2 = 0 weekly demand lands in X; a 3-week (1,1,28) profile
     (cv^2 = 1.62) lands in Z."""
     d = [datetime(2024, 1, 1), datetime(2024, 1, 8), datetime(2024, 1, 15)]
-    _write_lineitem(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, 1, 10, 1.0, d[0]), (2, 1, 10, 1.0, d[1]), (3, 1, 10, 1.0, d[2]),
-         (4, 2, 1, 1.0, d[0]), (5, 2, 1, 1.0, d[1]), (6, 2, 28, 1.0, d[2])],
+        lineitem=[_line(*r) for r in [(1, 1, 10, 1.0, d[0]), (2, 1, 10, 1.0, d[1]), (3, 1, 10, 1.0, d[2]),
+         (4, 2, 1, 1.0, d[0]), (5, 2, 1, 1.0, d[1]), (6, 2, 28, 1.0, d[2])]],
     )
     rows = {
         r["xyz_class"]: (r["n_parts"], r["total_qty"])
@@ -99,7 +73,7 @@ def test_best_split_finds_the_level_shift(spark, tmp_path):
     rows = []
     for i, v in enumerate([100, 100, 100, 400, 400, 400]):
         rows.append((i, base.replace(day=1 + i), 1, "view", v))
-    _write_events(spark, tmp_path, rows)
+    write_tables(tmp_path, events=[_event(*r) for r in rows])
     [r] = registry.QUERIES["best_split_sse_terms"](spark, str(tmp_path)).collect()
     day3 = int(datetime(2024, 1, 3).timestamp() // 86400)
     assert r["n_days"] == 6
@@ -113,14 +87,13 @@ def test_session_entry_exit_pairs(spark, tmp_path):
     """Two sessions for one user: (view -> click) then a lone
     purchase 2h later."""
     t0 = datetime(2024, 3, 1, 10, 0, 0)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, t0, 7, "view", 1),
             (2, t0.replace(minute=10), 7, "click", 1),
             (3, t0.replace(hour=13), 7, "purchase", 1),
-        ],
+        ]],
     )
     rows = {
         (r["entry_type"], r["exit_type"]): r["n_sessions"]
@@ -135,9 +108,7 @@ def test_curriculum_positions_deal_round_robin(spark, tmp_path):
     """20 docs, 10 deciles of 2: positions 1..10 take each decile's
     best doc in decile order, 11..20 the runners-up."""
     docs = [(i, "x" * 10, "en", "s", 1000 - i) for i in range(20)]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=docs)
     rows = registry.QUERIES["curriculum_interleave_order"](
         spark, str(tmp_path)
     ).collect()
@@ -156,10 +127,7 @@ def test_mmr_prefers_diverse_over_duplicate(spark, tmp_path):
         (2, [1.0, 0.1, 0.0], 0),    # exact duplicate of 1
         (3, [1.0, -0.5, 0.0], 0),   # diverse -> should be pick 2
     ]
-    spark.createDataFrame(
-        [(i, [float(x) for x in v], l) for i, v, l in vecs],
-        "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=[(i, [float(x) for x in v], l) for i, v, l in vecs])
     rows = registry.QUERIES["mmr_diverse_topk"](spark, str(tmp_path)).collect()
     picks = [r["vec_id"] for r in rows]
     assert picks[0] == 1
@@ -171,11 +139,10 @@ def test_time_split_straddlers(spark, tmp_path):
     users also appears in train."""
     d1 = datetime(2024, 1, 1, 12)
     d9 = datetime(2024, 1, 9, 12)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, d1, 1, "view", 1), (2, d9, 1, "view", 1),
-         (3, d1, 2, "view", 1), (4, d9, 3, "view", 1)],
+        events=[_event(*r) for r in [(1, d1, 1, "view", 1), (2, d9, 1, "view", 1),
+         (3, d1, 2, "view", 1), (4, d9, 3, "view", 1)]],
     )
     [r] = registry.QUERIES["time_split_boundary_audit"](
         spark, str(tmp_path)
@@ -207,14 +174,13 @@ def test_bootstrap_replicates_shape(spark, sf_dir):
 def test_engagement_decay_dyadic_weights(spark, tmp_path):
     """Events 0/1/2 weeks before the anchor weigh 1e6 / 5e5 / 25e4."""
     mx = datetime(2024, 6, 30, 12)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, mx, 1, "view", 1),                      # age 0w -> 1e6
             (2, datetime(2024, 6, 23, 12), 1, "view", 1),  # 7d -> 5e5
             (3, datetime(2024, 6, 16, 12), 2, "view", 1),  # 14d -> 25e4
-        ],
+        ]],
     )
     rows = {
         r["band"]: (r["n_users"], r["sum_score_e6"])
@@ -237,20 +203,11 @@ def test_nzv_tie_rule_and_flag(spark, tmp_path):
         disc = 0.0 if i < 50 else 0.2
         rows.append((i, 1, 1, 1, 1.0, 1.0, disc, tax, "N", "O",
                      datetime(2024, 1, 1)))
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    spark.createDataFrame(
-        [(1, "p", "B", "T", 5, 1.0)],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    _write_events(spark, tmp_path, [(1, datetime(2024, 1, 1), 1, "view", v)
-                                    for v in (1, 2, 3, 4, 5, 6)])
+    write_tables(tmp_path, lineitem=rows)
+    write_tables(tmp_path, part=[(1, "p", "B", "T", 5, 1.0)])
+    write_tables(tmp_path, events=[
+        _event(1, datetime(2024, 1, 1), 1, "view", v) for v in (1, 2, 3, 4, 5, 6)
+    ])
     out = {
         r["col"]: r
         for r in registry.QUERIES["near_zero_variance_audit"](
@@ -273,9 +230,7 @@ def test_clip_calibration_rank_definition(spark, tmp_path):
     """With n=100 values 1..100 (e6-scaled), p01 = rank 1 and p99 =
     rank 99 under the ceil(q*n) convention."""
     vecs = [(i, [float(i + 1)], 0) for i in range(100)]
-    spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=vecs)
     [r] = registry.QUERIES["embedding_clip_calibration"](
         spark, str(tmp_path)
     ).collect()

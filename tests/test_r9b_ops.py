@@ -9,26 +9,15 @@ import math
 from datetime import datetime
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, ts, user_id, event_type, value)"""
-    full = [(i, ts, u, et, float(v), "{}") for i, ts, u, et, v in rows]
-    spark.createDataFrame(
-        full,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import write_tables
 
 
-def _write_documents(spark, tmp_path, rows):
-    """rows: (doc_id, text, lang, source)"""
-    full = [(i, txt, lang, src, len(txt)) for i, txt, lang, src in rows]
-    spark.createDataFrame(
-        full, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+def _event(i, ts, u, et, v):
+    return (i, ts, u, et, float(v), "{}")
+
+
+def _doc(i, txt, lang, src):
+    return (i, txt, lang, src, len(txt))
 
 
 def test_welch_ttest_terms_hand_computed(spark, tmp_path):
@@ -37,16 +26,15 @@ def test_welch_ttest_terms_hand_computed(spark, tmp_path):
     (df must land strictly between min(n)-1 and n_a+n_b-2)."""
     sat = datetime(2024, 1, 6)  # a Saturday
     mon = datetime(2024, 1, 8)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, sat, 1, "view", 1.0),
             (2, sat, 1, "view", 3.0),
             (3, mon, 1, "view", 10.0),
             (4, mon, 1, "view", 10.0),
             (5, mon, 1, "view", 16.0),
-        ],
+        ]],
     )
     [r] = registry.QUERIES["welch_ttest_terms"](spark, str(tmp_path)).collect()
     assert (r["n_a"], r["n_b"]) == (2, 3)
@@ -71,14 +59,13 @@ def test_welch_drops_single_observation_arms(spark, tmp_path):
     the row is filtered, not NaN-polluted."""
     sat = datetime(2024, 1, 6)
     mon = datetime(2024, 1, 8)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, sat, 1, "click", 1.0),
             (2, mon, 1, "click", 2.0),
             (3, mon, 1, "click", 3.0),
-        ],
+        ]],
     )
     assert registry.QUERIES["welch_ttest_terms"](spark, str(tmp_path)).count() == 0
 
@@ -102,7 +89,7 @@ def test_bh_keeps_planted_marker_rejects_uniform(spark, tmp_path):
         for i in range(60):
             docs.append((did, "base base", lang, "s1"))
             did += 1
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     rows = {
         r["term"]: r
         for r in registry.QUERIES["benjamini_hochberg_fdr"](
@@ -130,20 +117,15 @@ def test_cramers_v_perfect_and_independent(spark, tmp_path):
         for i in range(10):
             docs.append((did, "x", lang, src))
             did += 1
-    _write_documents(spark, tmp_path, docs)
-    _write_events(
-        spark,
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
+    write_tables(
         tmp_path,
-        [
-            (i, datetime(2024, 1, 1 + ((i // 2) % 4)), 1, ["a", "b"][i % 2], 1.0)
+        events=[
+            _event(i, datetime(2024, 1, 1 + ((i // 2) % 4)), 1, ["a", "b"][i % 2], 1.0)
             for i in range(80)
         ],
     )
-    spark.createDataFrame(
-        [(1, 1, "O", 10.0, datetime(2024, 1, 1), "1-URGENT")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(1, 1, "O", 10.0, datetime(2024, 1, 1), "1-URGENT")])
     out = {
         r["pair"]: r
         for r in registry.QUERIES["cramers_v_matrix"](spark, str(tmp_path)).collect()
@@ -161,16 +143,12 @@ def test_cramers_v_perfect_and_independent(spark, tmp_path):
 def test_distinct_on_contract_total_tiebreak(spark, tmp_path):
     """Two orders on the same date: the higher orderkey wins (the
     total-order tiebreak), never an arbitrary row."""
-    spark.createDataFrame(
-        [
-            (1, 7, "O", 10.0, datetime(2024, 3, 1), "P"),
-            (2, 7, "O", 20.0, datetime(2024, 3, 1), "P"),
-            (3, 7, "O", 30.0, datetime(2024, 2, 1), "P"),
-            (4, 8, "O", 40.0, datetime(2024, 1, 1), "P"),
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (1, 7, "O", 10.0, datetime(2024, 3, 1), "P"),
+        (2, 7, "O", 20.0, datetime(2024, 3, 1), "P"),
+        (3, 7, "O", 30.0, datetime(2024, 2, 1), "P"),
+        (4, 8, "O", 40.0, datetime(2024, 1, 1), "P"),
+    ])
     out = {
         r["custkey"]: r
         for r in registry.QUERIES["distinct_on_contract"](
@@ -192,10 +170,9 @@ def test_distinct_on_compiles_to_window_group_limit(spark):
 
 
 def test_posexplode_positions_zero_based(spark, tmp_path):
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "alpha beta gamma delta epsilon zeta", "en", "s1"), (2, "alpha", "en", "s1")],
+        documents=[_doc(*r) for r in [(1, "alpha beta gamma delta epsilon zeta", "en", "s1"), (2, "alpha", "en", "s1")]],
     )
     rows = registry.QUERIES["posexplode_contract"](spark, str(tmp_path)).collect()
     got = {(r["pos"], r["w"]): r["n"] for r in rows}
@@ -208,32 +185,23 @@ def test_posexplode_positions_zero_based(spark, tmp_path):
 def test_regexp_backrefs_swap_all_pairs(spark, tmp_path):
     """$2 $1 swaps EVERY adjacent pair (global replace), matching the
     DuckDB 'g'-flag oracle — 4 tokens give two swapped pairs."""
-    _write_documents(spark, tmp_path, [(1, "aa bb cc dd ee", "en", "s1")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "aa bb cc dd ee", "en", "s1")]])
     [r] = registry.QUERIES["regexp_replace_backrefs_contract"](
         spark, str(tmp_path)
     ).collect()
     assert r["swapped"] == "bb aa dd cc"
 
 
-def _write_embeddings(spark, tmp_path, rows):
-    """rows: (vec_id, embedding list[float], label)"""
-    spark.createDataFrame(
-        [(i, [float(x) for x in v], lb) for i, v, lb in rows],
-        "vec_id long, embedding array<double>, label long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-
-
 def test_isotropy_defect_extremes(spark, tmp_path):
     """Label 0: two antipodal vectors -> mean is zero -> defect 0.
     Label 1: two identical vectors -> mean IS the vector -> defect 1."""
-    _write_embeddings(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        embeddings=[
             (1, [0.5, 0.0], 0),
             (2, [-0.5, 0.0], 0),
-            (3, [0.3, 0.4], 1),
-            (4, [0.3, 0.4], 1),
+            (3, [0.0, 0.5], 1),
+            (4, [0.0, 0.5], 1),
         ],
     )
     out = {
@@ -253,7 +221,7 @@ def test_mahalanobis_flags_planted_outlier(spark, tmp_path):
     rank first, and a constant dim contributes nothing (no /0)."""
     rows = [(i, [0.001 * (i % 7 - 3), 0.002 * (i % 5 - 2), 0.42], 0) for i in range(49)]
     rows.append((99, [0.4, -0.4, 0.42], 1))  # dim 2 constant everywhere
-    _write_embeddings(spark, tmp_path, rows)
+    write_tables(tmp_path, embeddings=rows)
     out = registry.QUERIES["embedding_mahalanobis_outliers"](
         spark, str(tmp_path)
     ).collect()
@@ -272,28 +240,12 @@ def test_mahalanobis_compiles_to_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (orderkey, partkey)"""
-    full = [
-        (ok, pk, 1, 1, 1.0, 100.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-        for ok, pk in rows
-    ]
-    spark.createDataFrame(
-        full,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+def _line(ok, pk):
+    return (ok, pk, 1, 1, 1.0, 100.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
 
 
-def _write_part_brand(spark, tmp_path, rows):
-    """rows: (partkey, brand)"""
-    spark.createDataFrame(
-        [(pk, f"part{pk}", b, "T", 1, 1.0) for pk, b in rows],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _part(pk, b):
+    return (pk, f"part{pk}", b, "T", 1, 1.0)
 
 
 def test_degree_ccdf_monotone_and_exact(spark, tmp_path):
@@ -307,7 +259,7 @@ def test_degree_ccdf_monotone_and_exact(spark, tmp_path):
         for _ in range(2):  # support >= 2
             ok += 1
             rows += [(ok, a), (ok, b)]
-    _write_lineitem(spark, tmp_path, rows)
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
     out = registry.QUERIES["graph_degree_ccdf"](spark, str(tmp_path)).collect()
     got = {r["threshold"]: r["n_ge"] for r in out}
     assert got[1] == 3 and got[2] == 3 and got[4] == 0
@@ -327,8 +279,8 @@ def test_conductance_isolated_vs_bridged(spark, tmp_path):
         for _ in range(2):
             ok += 1
             rows += [(ok, a), (ok, b)]
-    _write_lineitem(spark, tmp_path, rows)
-    _write_part_brand(spark, tmp_path, [(1, "A"), (2, "A"), (3, "B"), (4, "C")])
+    write_tables(tmp_path, lineitem=[_line(*r) for r in rows])
+    write_tables(tmp_path, part=[_part(*r) for r in [(1, "A"), (2, "A"), (3, "B"), (4, "C")]])
     out = {
         r["brand"]: r
         for r in registry.QUERIES["graph_conductance_brand"](
@@ -344,38 +296,22 @@ def test_conductance_isolated_vs_bridged(spark, tmp_path):
 def test_cold_start_window_and_ranking(spark, tmp_path):
     """An order 40 days before the anchor is excluded; parts rank by
     recent revenue with partkey tiebreak."""
-    spark.createDataFrame(
-        [
-            (1, 1, "O", 1.0, datetime(2024, 3, 1), "P"),   # anchor day
-            (2, 1, "O", 1.0, datetime(2024, 2, 25), "P"),  # inside window
-            (3, 1, "O", 1.0, datetime(2024, 1, 20), "P"),  # outside
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (1, 1, "O", 1.0, datetime(2024, 3, 1), "P"),   # anchor day
+        (2, 1, "O", 1.0, datetime(2024, 2, 25), "P"),  # inside window
+        (3, 1, "O", 1.0, datetime(2024, 1, 20), "P"),  # outside
+    ])
     full = [
         (1, 10, 200.0),  # recent: 200
         (2, 11, 300.0),  # recent: 300 -> rank 1
         (3, 12, 999.0),  # stale: excluded
     ]
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-            for ok, pk, ep in full
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    spark.createDataFrame(
-        [(1, "alice", 7, "BUILDING", 0.0)],
-        "c_custkey long, c_name string, c_nationkey long,"
-        " c_mktsegment string, c_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
-    spark.createDataFrame(
-        [(7, "FRANCE", 1)], "n_nationkey long, n_name string, n_regionkey long"
-    ).write.mode("overwrite").parquet(str(tmp_path / "nation.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
+        for ok, pk, ep in full
+    ])
+    write_tables(tmp_path, customer=[(1, "alice", 7, 0.0, "BUILDING")])
+    write_tables(tmp_path, nation=[(7, "FRANCE", 1)])
     out = registry.QUERIES["cold_start_recs_by_nation"](spark, str(tmp_path)).collect()
     assert [(r["rnk"], r["partkey"], r["cents"]) for r in out] == [
         (1, 11, 30000),
@@ -387,8 +323,9 @@ def test_cold_start_window_and_ranking(spark, tmp_path):
 def test_readability_proxy_hand_computed(spark, tmp_path):
     """'go to it' = 3 words, 3 syllable-groups, 1 doc; a vowel-less
     token still costs one syllable (GREATEST floor)."""
-    _write_documents(
-        spark, tmp_path, [(1, "go to it", "en", "s1"), (2, "xyz qrst", "en", "s2")]
+    write_tables(
+        tmp_path,
+        documents=[_doc(*r) for r in [(1, "go to it", "en", "s1"), (2, "xyz qrst", "en", "s2")]],
     )
     out = {
         r["source"]: r
@@ -407,10 +344,9 @@ def test_readability_proxy_hand_computed(spark, tmp_path):
 def test_bigram_conditional_entropy_extremes(spark, tmp_path):
     """Alternating 'a b a b a' is perfectly predictable (H_cond = 0);
     'a a a b' has one uncertain continuation (H_cond = H2 - 0)."""
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "a b a b a", "alt", "alt"), (2, "a a a b", "skew", "skew")],
+        documents=[_doc(*r) for r in [(1, "a b a b a", "alt", "alt"), (2, "a a a b", "skew", "skew")]],
     )
     # documents writer uses (doc_id, text, lang, source)
     out = {
@@ -442,16 +378,10 @@ def test_variance_ratio_alternating_series(spark, tmp_path):
             rows.append((d + 1, 1, 2.0, datetime(2024, 1, 1 + d)))
     # one zero-revenue anchor line on day 0 so the spine starts there
     rows.append((100, 1, 0.0, datetime(2024, 1, 1)))
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", d)
-            for ok, pk, ep, d in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", d)
+        for ok, pk, ep, d in rows
+    ])
     out = {r["k"]: r for r in registry.QUERIES["variance_ratio_terms"](
         spark, str(tmp_path)).collect()}
     assert [out[k]["n_blocks"] for k in (1, 2, 4, 8)] == [8, 4, 2, 1]
@@ -475,7 +405,7 @@ def test_burstiness_metronome_vs_spread(spark, tmp_path):
         (5, base + timedelta(seconds=1), 2, "burst", 1.0),
         (6, base + timedelta(seconds=10), 2, "burst", 1.0),
     ]
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     out = {r["event_type"]: r for r in registry.QUERIES[
         "interarrival_burstiness_terms"](spark, str(tmp_path)).collect()}
     tick = out["tick"]
@@ -491,7 +421,7 @@ def test_mlm_mask_plan_deterministic_and_sane(spark, tmp_path):
     """Same fixture twice -> identical plans (hash-derived, no RNG);
     mask rate lands near the 1/5 coin and spans never exceed masks."""
     docs = [(i, " ".join(f"w{j}" for j in range(200)), "en", "s1") for i in range(20)]
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     q = registry.QUERIES["mlm_mask_plan_stats"]
     [a] = q(spark, str(tmp_path)).collect()
     [b] = q(spark, str(tmp_path)).collect()
@@ -505,10 +435,9 @@ def test_mlm_mask_plan_deterministic_and_sane(spark, tmp_path):
 def test_pivot_two_aggs_zero_fill_and_naming(spark, tmp_path):
     """A source with no zh docs gets zh_chars = zh_docs = 0 (never
     NULL); the flattened {value}_{alias} columns are the contract."""
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "abc", "en", "s1"), (2, "defgh", "en", "s1"), (3, "xy", "zh", "s2")],
+        documents=[_doc(*r) for r in [(1, "abc", "en", "s1"), (2, "defgh", "en", "s1"), (3, "xy", "zh", "s2")]],
     )
     out = {r["source"]: r for r in registry.QUERIES["pivot_two_aggs_contract"](
         spark, str(tmp_path)).collect()}
@@ -519,23 +448,17 @@ def test_pivot_two_aggs_zero_fill_and_naming(spark, tmp_path):
     assert cols[:3] == ["source", "de_chars", "de_docs"]
 
 
-def _write_part_sizes(spark, tmp_path, rows):
-    """rows: (partkey, brand, size, retailprice)"""
-    spark.createDataFrame(
-        [(pk, f"p{pk}", b, "T", sz, rp) for pk, b, sz, rp in rows],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
+def _part_sized(pk, b, sz, rp):
+    return (pk, f"p{pk}", b, "T", sz, rp)
 
 
 def test_groups_frame_peers_collapse(spark, tmp_path):
     """Two same-size rows form ONE peer group: size 1's frame must
     include BOTH size-2 rows plus itself (GROUPS semantics), and a
     gap (size 9) is still the adjacent GROUP, not an adjacent value."""
-    _write_part_sizes(
-        spark,
+    write_tables(
         tmp_path,
-        [(1, "B", 1, 1.0), (2, "B", 2, 2.0), (3, "B", 2, 3.0), (4, "B", 9, 10.0)],
+        part=[_part_sized(*r) for r in [(1, "B", 1, 1.0), (2, "B", 2, 2.0), (3, "B", 2, 3.0), (4, "B", 9, 10.0)]],
     )
     out = {r["p_size"]: r["frame_cents"] for r in registry.QUERIES[
         "groups_frame_emulation"](spark, str(tmp_path)).collect()}
@@ -552,16 +475,10 @@ def test_unit_price_dispersion_ranks_slip_first(spark, tmp_path):
         (4, 2, 2.0, 4.0), (5, 2, 2.0, 4.0), (6, 2, 2.0, 4.0),   # constant unit 2.0
         (7, 3, 1.0, 5.0), (8, 3, 1.0, 9.0),                     # only 2 sales
     ]
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, q, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-            for ok, pk, q, ep in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, q, ep, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
+        for ok, pk, q, ep in rows
+    ])
     out = registry.QUERIES["unit_price_dispersion_by_part"](
         spark, str(tmp_path)).collect()
     assert [r["partkey"] for r in out] == [1, 2]
@@ -575,13 +492,12 @@ def test_unit_price_dispersion_ranks_slip_first(spark, tmp_path):
 def test_char_js_divergence_extremes(spark, tmp_path):
     """Identical letter profiles -> JS 0; disjoint alphabets -> JS
     1 bit (the JS upper bound)."""
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[_doc(*r) for r in [
             (1, "abab", "en", "s"), (2, "ab", "de", "s"),   # same profile
             (3, "cccc", "fr", "s"),                          # disjoint letters
-        ],
+        ]],
     )
     out = {(r["lang_a"], r["lang_b"]): r["js_bits"] for r in registry.QUERIES[
         "char_js_divergence_langs"](spark, str(tmp_path)).collect()}
@@ -593,10 +509,9 @@ def test_char_js_divergence_extremes(spark, tmp_path):
 def test_hard_negatives_exclude_same_label(spark, tmp_path):
     """The nearest vector overall shares the probe's label — it must
     NOT appear; the top negative is the nearest OTHER-label vector."""
-    _write_embeddings(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        embeddings=[
             (0, [1.0, 0.0], 5),       # probe, label 5
             (20, [0.99, 0.01], 5),    # nearest but same label -> excluded
             (21, [0.9, 0.1], 7),      # nearest other-label
@@ -612,16 +527,12 @@ def test_hard_negatives_exclude_same_label(spark, tmp_path):
 
 
 def test_qualify_emulation_top2_per_nation(spark, tmp_path):
-    spark.createDataFrame(
-        [
-            (1, "a", 7, "B", 50.0),
-            (2, "b", 7, "B", 90.0),
-            (3, "c", 7, "B", 70.0),
-            (4, "d", 8, "B", 10.0),
-        ],
-        "c_custkey long, c_name string, c_nationkey long,"
-        " c_mktsegment string, c_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[
+        (1, "a", 7, 50.0, "B"),
+        (2, "b", 7, 90.0, "B"),
+        (3, "c", 7, 70.0, "B"),
+        (4, "d", 8, 10.0, "B"),
+    ])
     out = registry.QUERIES["qualify_emulation_contract"](
         spark, str(tmp_path)
     ).collect()
@@ -636,20 +547,15 @@ def test_cogroup_merge_matches_and_orphans(spark, tmp_path):
     from datetime import timedelta
 
     base = datetime(2024, 1, 10)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (1, base - timedelta(days=2), 1, "view", 1.0),
             (2, base + timedelta(seconds=100), 1, "view", 1.0),
             (3, base, 2, "view", 1.0),
-        ],
+        ]],
     )
-    spark.createDataFrame(
-        [(1, 1, "O", 1.0, base, "P"), (2, 3, "O", 1.0, base, "P")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(1, 1, "O", 1.0, base, "P"), (2, 3, "O", 1.0, base, "P")])
     out = {r["user_id"]: r for r in registry.QUERIES[
         "cogrouped_pandas_event_order_merge"](spark, str(tmp_path)).collect()}
     assert set(out) == {1, 2}  # user 3: orders only, no row
@@ -671,11 +577,7 @@ def test_approx_drift_flags_green_on_real_shape(spark):
 
 
 def test_xml_roundtrip_parses_back_exactly(spark, tmp_path):
-    spark.createDataFrame(
-        [(7, 1, "O", 12.345, datetime(2024, 1, 1), "P")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(7, 1, "O", 12.345, datetime(2024, 1, 1), "P")])
     [r] = registry.QUERIES["xml_roundtrip_contract"](spark, str(tmp_path)).collect()
     assert r["parsed_key"] == 7
     assert r["parsed_status"] == "O"
@@ -688,7 +590,7 @@ def test_shuffle_skew_forecast_uniform_vs_hot_key(spark, tmp_path):
     the median; k is the documented 200."""
     evs = [(i, datetime(2024, 1, 1), 999, "view", 1.0) for i in range(500)]
     evs += [(1000 + u, datetime(2024, 1, 1), u, "view", 1.0) for u in range(200)]
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     [r] = registry.QUERIES["shuffle_skew_forecast"](spark, str(tmp_path)).collect()
     assert r["k"] == 200
     assert r["max_rows"] >= 500          # the hot user's partition
@@ -709,7 +611,7 @@ def test_dim_broadcast_budget_flags(spark):
 def test_lateral_alias_shadowing_prefers_column(spark, tmp_path):
     """y chains the alias ((n+1)*2); p references a SHADOWED name and
     must read the underlying column (n+1, not (n*2)+1)."""
-    _write_documents(spark, tmp_path, [(1, "xxxxxxxxxx", "en", "s1")])  # n_chars 10
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "xxxxxxxxxx", "en", "s1")]])  # n_chars 10
     [r] = registry.QUERIES["lateral_alias_contract"](spark, str(tmp_path)).collect()
     assert r["sum_chained"] == 22   # (10+1)*2
     assert r["sum_shadowed"] == 11  # 10+1 — the column, not the alias
@@ -726,7 +628,7 @@ def test_top_p_keeps_best_classes_until_budget(spark, tmp_path):
     # source B: 50, 45, 5 -> cum_before of the 5-class is 95% >= 90%
     for sc in (50, 45, 5):
         docs.append((did, " ".join(["w"] * sc), "en", "B")); did += 1
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["source"]: r for r in registry.QUERIES["top_p_quality_filter"](
         spark, str(tmp_path)).collect()}
     assert out["A"]["n_docs_kept"] == 3 and out["A"]["share_kept"] == 1.0
@@ -742,7 +644,7 @@ def test_contribution_bounding_caps_exactly(spark, tmp_path):
 
     base = datetime(2024, 1, 1)
     evs = [(i, base + timedelta(seconds=i), 1, "view", 1.0) for i in range(6)]
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     out = {r["cap"]: r for r in registry.QUERIES["contribution_bounding_curve"](
         spark, str(tmp_path)).collect()}
     assert [out[c]["kept"] for c in (1, 2, 4, 8)] == [1, 2, 4, 6]
@@ -757,7 +659,7 @@ def test_group_kfold_no_split_users_and_balance(spark, tmp_path):
     for u in range(500):
         evs.append((2 * u, datetime(2024, 1, 1), u, "view", 1.0))
         evs.append((2 * u + 1, datetime(2024, 1, 2), u, "click", 1.0))
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     out = registry.QUERIES["group_kfold_assign"](spark, str(tmp_path)).collect()
     assert len(out) == 5
     assert all(r["split_users"] == 0 for r in out)
@@ -774,15 +676,14 @@ def test_ignore_nulls_locf_and_strict_before(spark, tmp_path):
     from datetime import timedelta
 
     b = datetime(2024, 1, 1)
-    _write_events(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        events=[_event(*r) for r in [
             (0, b, 1, "purchase", 5.0),
             (1, b + timedelta(seconds=1), 1, "view", 0.0),
             (2, b + timedelta(seconds=2), 1, "view", 0.0),
             (3, b + timedelta(seconds=3), 1, "purchase", 7.0),
-        ],
+        ]],
     )
     rows = {r["event_id"]: r for r in registry.QUERIES["ignore_nulls_contract"](
         spark, str(tmp_path)).collect()}
@@ -793,12 +694,10 @@ def test_ignore_nulls_locf_and_strict_before(spark, tmp_path):
 
 
 def test_map_semantics_missing_key_and_lambdas(spark, tmp_path):
-    spark.createDataFrame(
-        [(1, 1, "O", 150.0, datetime(2024, 1, 1), "P"),
-         (2, 1, "F", 50.0, datetime(2024, 1, 1), "P")],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[
+        (1, 1, "O", 150.0, datetime(2024, 1, 1), "P"),
+        (2, 1, "F", 50.0, datetime(2024, 1, 1), "P"),
+    ])
     out = {r["orderkey"]: r for r in registry.QUERIES["map_semantics_contract"](
         spark, str(tmp_path)).collect()}
     assert out[1]["status_val"] == "O" and out[2]["status_val"] == "F"
@@ -814,16 +713,10 @@ def test_sql_pipe_syntax_matches_standard(spark, tmp_path):
     rows = [
         (1, 1, 10.0), (2, 1, 40.0),  # only the 10 passes the filter
     ]
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
-            for ok, pk, q in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, q, 1.0, 0.0, 0.0, "N", "O", datetime(2024, 1, 1))
+        for ok, pk, q in rows
+    ])
     [r] = registry.QUERIES["sql_pipe_syntax_contract"](spark, str(tmp_path)).collect()
     assert (r["sum_qty"], r["n"]) == (10, 1)
     assert list(r.asDict()) == ["l_returnflag", "l_linestatus", "sum_qty", "n"]
@@ -832,13 +725,12 @@ def test_sql_pipe_syntax_matches_standard(spark, tmp_path):
 def test_hll_ie_exact_on_planted_overlap(spark, tmp_path):
     """Sources sharing exactly 2 of their terms: exact_inter = 2 and
     the I-E estimate stays within the audited envelope (flag 1)."""
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[_doc(*r) for r in [
             (1, "alpha beta gamma", "en", "A"),
             (2, "beta gamma delta epsilon", "en", "B"),
-        ],
+        ]],
     )
     [r] = registry.QUERIES["hll_intersection_audit"](spark, str(tmp_path)).collect()
     assert (r["src_a"], r["src_b"]) == ("A", "B")
@@ -850,7 +742,7 @@ def test_median_ci_brackets_median(spark, tmp_path):
     """Values 1..99 cents: median 50, CI strictly brackets it and
     widens no further than the data range."""
     evs = [(i, datetime(2024, 1, 1), 1, "view", i / 100) for i in range(1, 100)]
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     [r] = registry.QUERIES["median_ci_orderstat"](spark, str(tmp_path)).collect()
     assert r["n"] == 99
     assert r["median_cents"] == 50
@@ -869,7 +761,7 @@ def test_kneser_ney_frozen_collocation(spark, tmp_path):
     for w in ["cat", "dog", "sun", "map", "cup"]:
         for i in range(12):
             docs.append((did, w + " the", "en", "s")); did += 1
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["term"]: r for r in registry.QUERIES[
         "kneser_ney_continuation_terms"](spark, str(tmp_path)).collect()}
     fr = out["francisco"]
@@ -887,11 +779,7 @@ def test_hill_alpha_recovers_pareto_exponent(spark, tmp_path):
     for i in range(1, n + 1):
         x = (n / i) ** 0.5 * 100.0  # alpha = 2 tail
         rows.append((i, 1, "O", x, datetime(2024, 1, 1), "P"))
-    spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=rows)
     [r] = registry.QUERIES["hill_tail_index_terms"](spark, str(tmp_path)).collect()
     assert r["k"] == 100
     assert 1.7 < r["hill_alpha"] < 2.3
@@ -954,7 +842,7 @@ def test_lsh_band_tuning_monotone_sensitivity(spark, tmp_path):
         docs.append((i, base + f" tail{i}", "en", "s"))      # near-dups
     for i in range(60, 90):
         docs.append((i, f"u{i} v{i} w{i} x{i} y{i}", "en", "s"))  # uniques
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["cfg"]: r for r in registry.QUERIES["lsh_band_tuning_curve"](
         spark, str(tmp_path)).collect()}
     assert set(out) == {"2x6", "3x4", "4x3", "6x2"}
@@ -979,7 +867,7 @@ def test_semdedup_eps_sweep_monotone(spark, tmp_path):
     vecs.append((10, [1.0, 0.0, 0.0], 0))    # exact clone of 0 -> dropped
     vecs.append((20, [0.95, 0.3122, 0.0], 0))  # cos ~0.95 with 0
     vecs.append((30, [0.0, 1.0, 0.0], 1))    # orthogonal
-    _write_embeddings(spark, tmp_path, vecs)
+    write_tables(tmp_path, embeddings=vecs)
     out = {r["eps_e2"]: r for r in registry.QUERIES["semdedup_eps_sweep"](
         spark, str(tmp_path)).collect()}
     assert [out[e]["n_pairs"] for e in (5, 10, 20, 50)] == sorted(
@@ -995,7 +883,7 @@ def test_semdedup_eps_sweep_monotone(spark, tmp_path):
 def test_quality_feature_matrix_hand_computed(spark, tmp_path):
     """'aa aa bb': 3 tokens, 2 distinct (ttr 2/3), one adjacent
     repeat, avg token len 2, vowels 4/6 chars."""
-    _write_documents(spark, tmp_path, [(1, "aa aa bb", "en", "s1")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "aa aa bb", "en", "s1")]])
     [r] = registry.QUERIES["quality_feature_matrix"](spark, str(tmp_path)).collect()
     assert r["n_tokens"] == 3
     assert abs(r["ttr"] - round(2 / 3, 6)) < 1e-9
@@ -1010,7 +898,7 @@ def test_quality_logreg_separates_planted_junk(spark, tmp_path):
     docs = [(i, "aa aa aa aa aa aa", "en", "junk") for i in range(10)]
     docs += [(100 + i, "quick brown fox jumps over lazy dog", "en", "good")
              for i in range(10)]
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["source"]: r for r in registry.QUERIES["quality_logreg_score"](
         spark, str(tmp_path)).collect()}
     assert out["good"]["mean_score"] > out["junk"]["mean_score"]
@@ -1029,7 +917,7 @@ def test_psi_zero_for_identical_and_alerts_on_shift(spark, tmp_path):
     # source C: all mass in bucket 9 (very long docs)
     for i in range(40):
         docs.append((did, "x" * 1500, "en", "C")); did += 1
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["source"]: r for r in registry.QUERIES["drift_psi_by_source"](
         spark, str(tmp_path)).collect()}
     # A vs corpus: corpus includes C's bucket-9 mass, so A is not 0 —
@@ -1066,7 +954,7 @@ def test_state_sizing_partitions_scale_with_keys(spark, tmp_path):
     """10 distinct users -> est bytes = 10 x width and a single
     partition suffices at the 64 MB target."""
     evs = [(i, datetime(2024, 1, 1), i % 10, "view", 1.0) for i in range(50)]
-    _write_events(spark, tmp_path, evs)
+    write_tables(tmp_path, events=[_event(*r) for r in evs])
     out = {r["op"]: r for r in registry.QUERIES["stream_state_sizing_estimate"](
         spark, str(tmp_path)).collect()}
     rm = out["running_max_per_user"]
@@ -1079,7 +967,7 @@ def test_state_sizing_partitions_scale_with_keys(spark, tmp_path):
 def test_zip_longest_pads_to_five(spark, tmp_path):
     """A 2-token doc still zips to length 5; NULL tokens count 0 in
     the padded sum (150 + len('ab') + len('c'))."""
-    _write_documents(spark, tmp_path, [(1, "ab c", "en", "s1")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "ab c", "en", "s1")]])
     [r] = registry.QUERIES["zip_longest_contract"](spark, str(tmp_path)).collect()
     assert r["zipped_len"] == 5
     assert r["padded_sum"] == 150 + 2 + 1
@@ -1088,7 +976,7 @@ def test_zip_longest_pads_to_five(spark, tmp_path):
 def test_array_edit_insert_semantics(spark, tmp_path):
     """insert-at-2 shifts right; insert-at--1 APPENDS (not
     before-last); compact strips NULLs; substr(-8) is the tail."""
-    _write_documents(spark, tmp_path, [(1, "aa bb cc dd", "en", "s1")])
+    write_tables(tmp_path, documents=[_doc(*r) for r in [(1, "aa bb cc dd", "en", "s1")]])
     [r] = registry.QUERIES["array_edit_contract"](spark, str(tmp_path)).collect()
     assert r["inserted_at_2"] == "aa,INS,bb,cc"
     assert r["appended_neg1"] == "aa,bb,cc,TAIL"
@@ -1101,13 +989,7 @@ def test_array_edit_insert_semantics(spark, tmp_path):
 def test_sql_udf_nested_and_exact(spark, tmp_path):
     """The nested SQL UDF (discounted calls to_cents twice) matches
     hand arithmetic: 10.00 at 10% -> 900 cents."""
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 1.0, 10.0, 0.10, 0.0, "N", "O", datetime(2024, 1, 1))],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[(1, 1, 1, 1, 1.0, 10.0, 0.10, 0.0, "N", "O", datetime(2024, 1, 1))])
     [r] = registry.QUERIES["sql_udf_contract"](spark, str(tmp_path)).collect()
     assert r["cents"] == 1000
     assert r["discounted_cents"] == 900
@@ -1125,16 +1007,10 @@ def test_fourier_recovers_planted_harmonic(spark, tmp_path):
         cents = 100 + 50 * math.cos(2 * math.pi * (d % 365) / 365)
         # one line whose extendedprice floors to that cent value
         rows.append((d + 1, 1, cents / 100 + 1e-9, base + timedelta(days=d)))
-    spark.createDataFrame(
-        [
-            (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", dt)
-            for ok, pk, ep, dt in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    write_tables(tmp_path, lineitem=[
+        (ok, pk, 1, 1, 1.0, ep, 0.0, 0.0, "N", "O", dt)
+        for ok, pk, ep, dt in rows
+    ])
     [r] = registry.QUERIES["fourier_seasonality_terms"](
         spark, str(tmp_path)
     ).collect()
@@ -1149,14 +1025,13 @@ def test_ndcg_ideal_ordering_is_one(spark, tmp_path):
     """Relevance-sorted ranking == ideal ranking -> NDCG exactly 1e6;
     DCG uses the exact e6 integer discount table (top doc rel 3 at
     weight 1e6 + rel 1 at 630929)."""
-    _write_documents(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[_doc(*r) for r in [
             (1, "join join join filter", "en", "s"),
             (2, "join scan", "en", "s"),
             (3, "scan scan", "en", "s"),
-        ],
+        ]],
     )
     out = {r["term"]: r for r in registry.QUERIES["ndcg_at10_terms"](
         spark, str(tmp_path)).collect()}
@@ -1177,11 +1052,7 @@ def test_growth_accounting_identity_and_classes(spark, tmp_path):
         (3, 2, 2.0, datetime(2024, 2, 10)),
         (4, 2, 0.8, datetime(2024, 3, 5)),
     ]
-    spark.createDataFrame(
-        [(ok, ck, "O", tp, dt, "P") for ok, ck, tp, dt in rows],
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
+    write_tables(tmp_path, orders=[(ok, ck, "O", tp, dt, "P") for ok, ck, tp, dt in rows])
     out = {r["month_idx"]: r for r in registry.QUERIES[
         "revenue_growth_accounting"](spark, str(tmp_path)).collect()}
     jan, feb, mar = 2024 * 12 + 1, 2024 * 12 + 2, 2024 * 12 + 3
@@ -1203,7 +1074,7 @@ def test_crawl_drift_detects_planted_decay(spark, tmp_path):
         docs.append((i, "a b c d e f g h i j", "en", "s"))      # ttr 1.0
     for i in range(50, 100):
         docs.append((i, "a a a a a a a a a a", "en", "s"))      # ttr 0.1
-    _write_documents(spark, tmp_path, docs)
+    write_tables(tmp_path, documents=[_doc(*r) for r in docs])
     out = {r["decile"]: r for r in registry.QUERIES["crawl_quality_drift"](
         spark, str(tmp_path)).collect()}
     assert out[0]["mean_ttr_e6"] == 1_000_000
@@ -1216,11 +1087,7 @@ def test_pandas_grouped_agg_top3_and_mix_ban(spark, tmp_path):
     """Top-3 cents sum is exact; mixing GROUPED_AGG with a JVM
     aggregate raises INVALID_PANDAS_UDF_PLACEMENT (the pinned
     limitation)."""
-    spark.createDataFrame(
-        [(i, f"c{i}", 7, "BUILDING", float(i)) for i in range(1, 6)],
-        "c_custkey long, c_name string, c_nationkey long,"
-        " c_mktsegment string, c_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(i, f"c{i}", 7, float(i), "BUILDING") for i in range(1, 6)])
     [r] = registry.QUERIES["pandas_grouped_agg_udf"](spark, str(tmp_path)).collect()
     assert r["top3_cents"] == 500 + 400 + 300
     assert r["n_customers"] == 5
@@ -1243,11 +1110,7 @@ def test_pandas_grouped_agg_top3_and_mix_ban(spark, tmp_path):
 def test_pandas_window_udf_matches_builtin(spark, tmp_path):
     """The pandas window UDF's per-partition sum equals the native
     SUM OVER on every row."""
-    spark.createDataFrame(
-        [(i, f"c{i}", 7, ["A", "B"][i % 2], float(i)) for i in range(1, 7)],
-        "c_custkey long, c_name string, c_nationkey long,"
-        " c_mktsegment string, c_acctbal double",
-    ).write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
+    write_tables(tmp_path, customer=[(i, f"c{i}", 7, float(i), ["A", "B"][i % 2]) for i in range(1, 7)])
     out = registry.QUERIES["pandas_udf_over_window"](spark, str(tmp_path)).collect()
     segs = {}
     for r in out:

@@ -17,8 +17,6 @@ import os
 
 from instructions_mr_spark import registry
 
-registry.load_all()
-
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
 

@@ -30,7 +30,6 @@ def test_codegen_compiles_counts_a_new_class(spark):
 
 
 def test_warm_pass_compiles_no_new_classes(spark, sf_dir):
-    registry.load_all()
     # the first pass is cold, or partly warm after earlier tests
     first = _pass(spark, sf_dir)
     warm = [_pass(spark, sf_dir), _pass(spark, sf_dir)]

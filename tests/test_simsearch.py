@@ -23,7 +23,7 @@ def emb(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def centroids(emb):
-    return train_ivf_centroids(emb, k=8, seed=42)
+    return train_ivf_centroids(emb, k=8)
 
 
 def test_centroid_shape(centroids, emb):
@@ -109,14 +109,14 @@ def test_train_cap_bounds_kmeans_input(emb, monkeypatch):
     monkeypatch.setattr(ss, "_collect_train_sample", spy)
     cap = 50
     assert emb.count() > cap  # the cap must actually engage
-    c1 = train_ivf_centroids(emb, k=4, seed=42, train_cap=cap)
+    c1 = train_ivf_centroids(emb, k=4, train_cap=cap)
     assert seen["n"] <= cap
     assert len(c1) == 4
     # deterministic: same input + cap -> identical centroids
-    c2 = train_ivf_centroids(emb, k=4, seed=42, train_cap=cap)
+    c2 = train_ivf_centroids(emb, k=4, train_cap=cap)
     assert c1 == c2
     # cap=None keeps the legacy full-table path for tiny inputs
-    train_ivf_centroids(emb, k=4, seed=42, train_cap=None)
+    train_ivf_centroids(emb, k=4, train_cap=None)
     assert seen["n"] == emb.count()
 
 
@@ -214,11 +214,11 @@ def test_top2_cells_cover_singleton_assignment(emb, centroids):
     matches assign_ivf_cell's single assignment."""
     from instructions_mr_spark.operators.simsearch import (
         assign_ivf_cell,
-        assign_top2_cells,
+        assign_topm_cells,
     )
 
     single = {r.vec_id: r.cell for r in assign_ivf_cell(emb, centroids).collect()}
-    rows = assign_top2_cells(emb, centroids).select("vec_id", "cell").collect()
+    rows = assign_topm_cells(emb, centroids, m=2).select("vec_id", "cell").collect()
     by_vec = {}
     for r in rows:
         by_vec.setdefault(r.vec_id, []).append(r.cell)
@@ -232,13 +232,13 @@ def test_semdedup_recall_vs_brute_force(emb, spark, sf_dir):
     import numpy as np
 
     from instructions_mr_spark.operators.simsearch import (
-        assign_top2_cells,
+        assign_topm_cells,
         train_ivf_centroids,
     )
     from instructions_mr_spark.functions import cosine_sim
 
-    cents = train_ivf_centroids(emb, k=8, seed=42)
-    cells = assign_top2_cells(emb, cents).select("cell", "vec_id", "embedding")
+    cents = train_ivf_centroids(emb, k=8)
+    cells = assign_topm_cells(emb, cents, m=2).select("cell", "vec_id", "embedding")
     a, b = cells.alias("a"), cells.alias("b")
     found = {
         (r.vec_a, r.vec_b)
@@ -280,7 +280,7 @@ def test_semdedup_planted_duplicates_survive_large_k(spark):
 
     from instructions_mr_spark.functions import cosine_sim
     from instructions_mr_spark.operators.simsearch import (
-        assign_top2_cells,
+        assign_topm_cells,
         train_ivf_centroids,
     )
 
@@ -296,8 +296,8 @@ def test_semdedup_planted_duplicates_survive_large_k(spark):
         [(int(i), [float(x) for x in base[i]]) for i in range(len(base))],
         "vec_id long, embedding array<float>",
     ).repartition(8)
-    cents = train_ivf_centroids(df, k=32, seed=42)
-    cells = assign_top2_cells(df, cents).select("cell", "vec_id", "embedding")
+    cents = train_ivf_centroids(df, k=32)
+    cells = assign_topm_cells(df, cents, m=2).select("cell", "vec_id", "embedding")
     a, b = cells.alias("a"), cells.alias("b")
     found = {
         (r.vec_a, r.vec_b)

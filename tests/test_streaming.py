@@ -171,7 +171,6 @@ def test_stateful_session_funnel(spark, events_stream, sf_dir, tmp_path):
     from instructions_mr_spark import registry
     from instructions_mr_spark.streaming import session_funnel
 
-    registry.load_all()
     _, batch = events_stream
 
     # fresh stream dir: the real events file + a sentinel event far in
@@ -587,7 +586,6 @@ def test_stream_anomaly_detection_e2e(spark, events_stream, sf_dir):
     equal the batch twin's for every (window, type)."""
     from instructions_mr_spark import registry
 
-    registry.load_all()
     stream, batch = events_stream
     # "historical" per-type stats from the batch side (integer moments)
     counts = batch.groupBy(
@@ -772,7 +770,6 @@ def test_stream_quantile_bins_histogram_matches_batch(spark, events_stream, sf_d
     # fully-emitted window equals the batch twin's answer
     from instructions_mr_spark import registry as _reg
 
-    _reg.load_all()
     emitted_windows = {w for (w, _) in got}
     full = [
         w for w in emitted_windows
@@ -823,7 +820,6 @@ def test_stream_topk_types_matches_batch(spark, events_stream, sf_dir):
         assert expected[k] == v
     from instructions_mr_spark import registry as _reg
 
-    _reg.load_all()
     emitted_windows = {w for (w, _) in got}
     full = [
         w for w in emitted_windows

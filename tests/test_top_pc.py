@@ -6,8 +6,7 @@ from __future__ import annotations
 import math
 
 from instructions_mr_spark import registry
-
-registry.load_all()
+from tests.conftest import write_tables
 
 
 def test_top_pc_finds_planted_direction(spark, tmp_path):
@@ -22,8 +21,7 @@ def test_top_pc_finds_planted_direction(spark, tmp_path):
         noise_dim = i % d
         vec = [scale * w[j] + (0.1 if j == noise_dim else 0.0) for j in range(d)]
         rows.append((i, vec, 0))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    df.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    write_tables(tmp_path, embeddings=rows)
     got = sorted(
         registry.QUERIES["embedding_top_pc"](spark, str(tmp_path)).collect(),
         key=lambda r: r.dim,

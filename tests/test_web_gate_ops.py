@@ -4,25 +4,16 @@ precedence and the dedup cascade's per-stage attribution."""
 from __future__ import annotations
 
 from instructions_mr_spark import registry
-
-registry.load_all()
-
-
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+from tests.conftest import write_tables
 
 
 def test_robots_longest_match_allow_override(spark, tmp_path):
     """src0.com rules: Disallow /en/, Allow /en/page-1 (longer wins).
     doc 1 -> /en/page-1?... allowed by the override; doc 3 ->
     /en/page-3 blocked; doc 26 -> m.src2.com fully disallowed."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (1, "w", "en", "src0", 1),
             (3, "w", "en", "src0", 1),
             (26, "w", "en", "src2", 1),
@@ -40,10 +31,9 @@ def test_dedup_cascade_stage_attribution(spark, tmp_path):
     """Doc 1 dies at the exact stage (same body as doc 0) and never
     reaches URL dedup; doc 122 shares doc 2's canonical URL and dies
     at the url stage; docs 0, 2, 7 survive."""
-    _write_docs(
-        spark,
+    write_tables(
         tmp_path,
-        [
+        documents=[
             (0, "same text", "en", "src0", 1),
             (1, "same text", "en", "src0", 1),
             (2, "body a", "en", "src0", 1),

@@ -41,7 +41,6 @@ def _reference(text: str):
 
 
 def test_kernel_matches_brute_force_reference(spark):
-    registry.load_all()
     docs = {
         r.doc_id: r.text
         for r in load_table(spark, SF, "documents")
@@ -66,7 +65,6 @@ def test_kernel_matches_brute_force_reference(spark):
 def test_kernel_runs_on_the_arrow_boundary(spark):
     """The kernel crosses into Python through the one mapInArrow shell
     (operators/arrow_map.py), never pandas."""
-    registry.load_all()
     df = registry.QUERIES["winnowing_fingerprints"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
