@@ -11,7 +11,10 @@ one place each of these formulas lives:
   ``cosine_with_norms`` and ``cosine_sim`` as Columns, ``spark_dot`` /
   ``spark_sq_l2`` as Spark SQL, ``duck_dot`` / ``duck_cosine`` /
   ``duck_sq_l2`` as DuckDB SQL;
-- the sign-bit LSH bucket: ``sign_bucket`` / ``duck_sign_bucket``.
+- the sign-bit LSH bucket: ``sign_bucket`` / ``duck_sign_bucket``;
+- rounding: ``round_half`` (SQL text or Column); no other module
+  spells a ``ROUND``;
+- Jaccard similarity: ``jaccard`` / ``duck_jaccard``.
 """
 
 from __future__ import annotations
@@ -49,6 +52,25 @@ def duck_hash(key: str, seed: int | None = None, hex_digits: int = 8) -> str:
     return f"('0x' || substr(md5({_salted(key, seed)}), 1, {hex_digits}))::BIGINT"
 
 
+def round_half(x: str | Column, k: int) -> str | Column:
+    """``x`` rounded half away from zero to ``k`` decimals, as SQL text
+    (the same on both engines) or as a Column, that Spark and DuckDB
+    evaluate bit for bit.  A bare ``ROUND(x, k)`` is not portable: Spark
+    rounds the shortest decimal string HALF_UP, DuckDB computes
+    ``round(x * 10^k) / 10^k``; they part at k >= 9 and on exact halves.
+    ``+ 0.0`` turns DuckDB's -0.0 into Spark's 0.0.
+
+    Domain: a DOUBLE, FLOAT or integer ``x``; the result is a DOUBLE.  A
+    DECIMAL becomes a DOUBLE first by the ``queries._util`` output-type
+    rule (DuckDB's DECIMAL->DOUBLE cast misrounds above 2^53).  A 1-ulp
+    libm difference (LN, EXP) still flips a value within an ulp of a
+    rounding boundary."""
+    if isinstance(x, Column):
+        scale = F.lit(float(10**k))
+        return F.round(x * scale) / scale + F.lit(0.0)
+    return f"(ROUND(({x}) * 1e{k}) / 1e{k} + 0.0)"
+
+
 # Embedding similarity.  Every dot product is a left fold, in
 # dimension order, of float components widened to double; cosine is
 # rounded to COSINE_DIGITS.  Both engines run the same IEEE operations
@@ -81,7 +103,7 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine of ``a`` and ``b`` given their L2 norms ``na``, ``nb``."""
-    return F.round(dot_product(a, b) / (na * nb), COSINE_DIGITS)
+    return round_half(dot_product(a, b) / (na * nb), COSINE_DIGITS)
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
@@ -128,13 +150,10 @@ def _duck_norm(a: str) -> str:
 
 def duck_cosine(a: str, b: str, dims: int | None = None) -> str:
     """DuckDB twin of :func:`cosine_sim`; ``dims`` scores only the first
-    ``dims`` components, like ``cosine_sim`` over ``F.slice(.., 1, dims)``.
-    DuckDB rounds a cosine in (-5e-7, 0) to -0.0 where Spark gives 0.0;
-    adding 0.0 turns -0.0 into 0.0 and leaves every other value as is."""
+    ``dims`` components, like ``cosine_sim`` over ``F.slice(.., 1, dims)``."""
     na, nb = (a, b) if dims is None else (f"{a}[1:{dims}]", f"{b}[1:{dims}]")
-    return (
-        f"(ROUND({duck_dot(a, b, dims)}"
-        f" / ({_duck_norm(na)} * {_duck_norm(nb)}), {COSINE_DIGITS}) + 0.0)"
+    return round_half(
+        f"{duck_dot(a, b, dims)} / ({_duck_norm(na)} * {_duck_norm(nb)})", COSINE_DIGITS
     )
 
 
@@ -189,12 +208,17 @@ def rolling_hash(text: Column, length: int = 64, base: int = 31, mod: int = 1_00
     return F.aggregate(chars, init, step, lambda acc: acc["h"])
 
 
-def jaccard(a: Column, b: Column, digits: int = 6) -> Column:
-    """Jaccard similarity of two array columns (set semantics)."""
-    return F.round(
-        F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b)),
-        digits,
-    )
+def jaccard(a: Column | str, b: Column | str) -> Column:
+    """Jaccard similarity of two array columns (set semantics), rounded
+    to 6 digits; ``duck_jaccard`` is its DuckDB twin."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    return round_half(inter / F.size(F.array_union(a, b)), 6)
+
+
+def duck_jaccard(a: str, b: str) -> str:
+    """DuckDB twin of :func:`jaccard`."""
+    inter = f"CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+    return round_half(f"{inter} / len(list_distinct({a} || {b}))", 6)
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:

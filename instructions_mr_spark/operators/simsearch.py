@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import cosine_sim, spark_dot, spark_hash, spark_sq_l2
+from instructions_mr_spark.functions import cosine_sim, round_half, spark_dot, spark_hash, spark_sq_l2
 from instructions_mr_spark.plans.guard import sql_double, sql_double_array, sql_ident
 
 
@@ -326,7 +326,7 @@ def pq_adc_search(
     )
     exact_l2 = F.expr(spark_sq_l2(sql_ident(vec_col), qarr))
     return (
-        shortlist.select(id_col, F.round(exact_l2, 6).alias("l2"))
+        shortlist.select(id_col, round_half(exact_l2, 6).alias("l2"))
         .orderBy(F.col("l2").asc(), F.col(id_col))
         .limit(top_k)
     )

@@ -23,8 +23,10 @@ query as DOUBLE, and its value does not change:
   0 above 2^64.  Both engines render a DECIMAL as the same string and
   parse a string to the nearest double.
 
-The portable md5 digest that dedup and sampling queries key on is
-rendered by ``functions.spark_hash`` / ``functions.duck_hash``.
+Every rounding goes through ``functions.round_half``, a DOUBLE-only
+seam both engines evaluate bit for bit (a DECIMAL is first cast by the
+rule above).  The portable md5 digest that dedup and sampling queries key on is rendered by
+``functions.spark_hash`` / ``functions.duck_hash``.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
-from instructions_mr_spark.functions import duck_hash
+from instructions_mr_spark.functions import duck_hash, round_half
 from instructions_mr_spark.queries._util import REVENUE, sum_d, t, ts_epoch_seconds
 from instructions_mr_spark.registry import query
 
@@ -164,11 +164,11 @@ def sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_percentile",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50,
-           ROUND(quantile_cont(l_quantity, 0.9), 4) AS p90,
-           ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS price_p50
+           {round_half('quantile_cont(l_quantity, 0.5)', 4)} AS p50,
+           {round_half('quantile_cont(l_quantity, 0.9)', 4)} AS p90,
+           {round_half('quantile_cont(l_extendedprice, 0.5)', 4)} AS price_p50
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -180,18 +180,18 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
-            F.round(F.expr("percentile(l_quantity, 0.5)"), 4).alias("p50"),
-            F.round(F.expr("percentile(l_quantity, 0.9)"), 4).alias("p90"),
-            F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("price_p50"),
+            round_half(F.expr("percentile(l_quantity, 0.5)"), 4).alias("p50"),
+            round_half(F.expr("percentile(l_quantity, 0.9)"), 4).alias("p90"),
+            round_half(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("price_p50"),
         )
     )
 
 
 @query(
     "agg_percentile_approx",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS exact_p50,
+           {round_half('quantile_cont(l_extendedprice, 0.5)', 4)} AS exact_p50,
            TRUE AS approx_in_band
     FROM lineitem GROUP BY l_returnflag
     """,
@@ -208,7 +208,7 @@ def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.percentile_approx("l_extendedprice", 0.5, 1000).alias("__approx"),
-            F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("exact_p50"),
+            round_half(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("exact_p50"),
             F.expr("percentile(l_extendedprice, 0.45)").alias("__lo"),
             F.expr("percentile(l_extendedprice, 0.55)").alias("__hi"),
         )
@@ -225,8 +225,8 @@ def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_pandas_scalar",
-    oracle="""
-    SELECT o_orderkey, ROUND(1 / (1 + exp(-(o_totalprice / 500000))), 6) AS saturation
+    oracle=f"""
+    SELECT o_orderkey, {round_half('1 / (1 + exp(-(o_totalprice / 500000)))', 6)} AS saturation
     FROM orders WHERE o_orderkey < 2000
     """,
 )
@@ -251,7 +251,7 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     "udaf_grouped_pandas",
     oracle="""
     SELECT c_mktsegment,
-           CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS top10_sum,
+           CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS top10_sum,
            CAST(10 AS BIGINT) AS n_top
     FROM (
       SELECT c_mktsegment, c_acctbal,
@@ -593,7 +593,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join_range_banded",
     oracle="""
     SELECT a.s_suppkey AS supp_a, b.s_suppkey AS supp_b,
-           CAST(ROUND(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)), 2) AS DOUBLE) AS bal_gap
+           CAST(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal_gap
     FROM supplier a JOIN supplier b
       ON a.s_suppkey < b.s_suppkey
      AND a.s_acctbal BETWEEN b.s_acctbal - 500 AND b.s_acctbal + 500
@@ -635,7 +635,7 @@ def join_range_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a_key").alias("supp_a"),
             F.col("b_key").alias("supp_b"),
             F.expr(
-                "CAST(ROUND(CAST(a_bal AS DECIMAL(12,2)) - CAST(b_bal AS DECIMAL(12,2)), 2) AS DOUBLE)"
+                "CAST(CAST(a_bal AS DECIMAL(12,2)) - CAST(b_bal AS DECIMAL(12,2)) AS DOUBLE)"
             ).alias("bal_gap"),
         )
     )
@@ -645,8 +645,8 @@ def join_range_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     "udaf_grouped_arrow",
     oracle="""
     SELECT c_mktsegment,
-           CAST(ROUND(MIN(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS min_bal,
-           CAST(ROUND(MAX(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS max_bal,
+           CAST(MIN(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS min_bal,
+           CAST(MAX(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS max_bal,
            COUNT(*) AS n
     FROM customer GROUP BY c_mktsegment
     """,

@@ -10,7 +10,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
 from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
@@ -119,11 +119,11 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "heavy_hitters",
-    oracle="""
+    oracle=f"""
     WITH c AS (SELECT user_id, COUNT(*) AS n FROM events GROUP BY user_id),
     tot AS (SELECT SUM(n) AS total FROM c)
     SELECT user_id, n,
-           ROUND(CAST(n AS DOUBLE) / total, 6) AS share
+           {round_half('CAST(n AS DOUBLE) / total', 6)} AS share
     FROM c, tot
     WHERE n > total / 200
     ORDER BY n DESC, user_id
@@ -146,7 +146,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "n",
-            F.round(F.col("n").cast("double") / F.col("total"), 6).alias("share"),
+            round_half(F.col("n").cast("double") / F.col("total"), 6).alias("share"),
         )
         .orderBy(F.col("n").desc(), F.col("user_id"))
         .limit(25)
@@ -419,7 +419,7 @@ def recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sql_scripting_param",
     oracle="""
     SELECT c_mktsegment, COUNT(*) AS n_vip,
-           CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS vip_bal
+           CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS vip_bal
     FROM customer WHERE c_acctbal > 9000.0
     GROUP BY c_mktsegment
     """,
@@ -438,7 +438,7 @@ def sql_scripting_param(spark: SparkSession, sf_dir: str) -> DataFrame:
         BEGIN
           DECLARE vip_cutoff DOUBLE DEFAULT 9000.0;
           SELECT c_mktsegment, COUNT(*) AS n_vip,
-                 CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE)
+                 CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
                    AS vip_bal
           FROM customer WHERE c_acctbal > vip_cutoff
           GROUP BY c_mktsegment;
@@ -449,7 +449,7 @@ def sql_scripting_param(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "table_profile",
-    oracle="""
+    oracle=f"""
     SELECT 'o_custkey' AS col, COUNT(*) AS n_rows,
            CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
            COUNT(DISTINCT o_custkey) AS n_distinct,
@@ -466,8 +466,8 @@ def sql_scripting_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'o_totalprice', COUNT(*),
            CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
            COUNT(DISTINCT o_totalprice),
-           CAST(ROUND(MIN(o_totalprice), 2) AS VARCHAR),
-           CAST(ROUND(MAX(o_totalprice), 2) AS VARCHAR)
+           CAST({round_half('MIN(o_totalprice)', 2)} AS VARCHAR),
+           CAST({round_half('MAX(o_totalprice)', 2)} AS VARCHAR)
     FROM orders
     """,
 )
@@ -480,8 +480,8 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
 
     def stats(col: str, numeric: bool) -> list:
-        mn = F.round(F.min(col), 2) if numeric else F.min(col)
-        mx = F.round(F.max(col), 2) if numeric else F.max(col)
+        mn = round_half(F.min(col), 2) if numeric else F.min(col)
+        mx = round_half(F.max(col), 2) if numeric else F.max(col)
         return [
             F.count(F.lit(1)).alias(f"{col}__n"),
             F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(f"{col}__nulls"),
@@ -703,7 +703,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream.  Deterministic: event_id breaks timestamp ties, and
     the probability is emitted as p_e6 integer units under one
     truncating division (the cross-engine tie-safety convention —
-    never a ROUND(double) final)."""
+    never a rounded double final)."""
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = e.select(
@@ -729,7 +729,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_rfm_segments",
-    oracle="""
+    oracle=f"""
     WITH ref AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS refdate FROM orders),
     base AS (
       SELECT o_custkey AS custkey,
@@ -741,7 +741,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT custkey, recency_days, frequency,
-             ROUND(CAST(monetary_dec AS DOUBLE), 2) AS monetary,
+             {round_half('CAST(monetary_dec AS DOUBLE)', 2)} AS monetary,
              NTILE(5) OVER (ORDER BY recency_days DESC, custkey) AS r_score,
              NTILE(5) OVER (ORDER BY frequency ASC, custkey) AS f_score,
              NTILE(5) OVER (ORDER BY monetary_dec ASC, custkey) AS m_score
@@ -811,7 +811,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "custkey",
         F.col("recency_days").cast("bigint").alias("recency_days"),
         "frequency",
-        F.round(F.col("monetary_dec").cast("double"), 2).alias("monetary"),
+        round_half(F.col("monetary_dec").cast("double"), 2).alias("monetary"),
         F.expr(exact_ntile_sql("_rrn", "_n", 5)).alias("r_score"),
         F.expr(exact_ntile_sql("_frn", "_n", 5)).alias("f_score"),
         F.expr(exact_ntile_sql("_mrn", "_n", 5)).alias("m_score"),
@@ -4729,9 +4729,8 @@ def markov_stationary_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ELAST_DUCK = f"""
     WITH per_part AS (
       SELECT p.p_brand, p.p_partkey,
-             CAST(ROUND(LN(p.p_retailprice), 10) AS DECIMAL(12,10)) AS x,
-             CAST(ROUND(LN(1.0 + SUM(CAST(l.l_quantity AS DECIMAL(12,2)))),
-                        10) AS DECIMAL(12,10)) AS y
+             CAST({round_half('LN(p.p_retailprice)', 10)} AS DECIMAL(12,10)) AS x,
+             CAST({round_half('LN(1.0 + SUM(CAST(l.l_quantity AS DECIMAL(12,2))))', 10)} AS DECIMAL(12,10)) AS y
       FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
       GROUP BY 1, 2, p.p_retailprice
     )
@@ -4771,10 +4770,10 @@ def elasticity_loglog_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "p_brand",
             F.expr(
-                "CAST(ROUND(LN(p_retailprice), 10) AS DECIMAL(12,10))"
+                f"CAST({round_half('LN(p_retailprice)', 10)} AS DECIMAL(12,10))"
             ).alias("x"),
             F.expr(
-                "CAST(ROUND(LN(1.0 + _qty), 10) AS DECIMAL(12,10))"
+                f"CAST({round_half('LN(1.0 + _qty)', 10)} AS DECIMAL(12,10))"
             ).alias("y"),
         )
     )

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import cosine_sim, duck_cosine
+from instructions_mr_spark.functions import cosine_sim, duck_cosine, round_half
 from instructions_mr_spark.plans.guard import sql_double_array
 from instructions_mr_spark.queries._util import DEC_QTY, sum_d, t, ts_epoch_seconds
 from instructions_mr_spark.registry import query
@@ -40,8 +40,8 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vector_avg_by_label",
-    oracle="""
-    SELECT label, pos, ROUND(AVG(CAST(v AS DOUBLE)), 6) AS avg_val, COUNT(*) AS n
+    oracle=f"""
+    SELECT label, pos, {round_half('AVG(CAST(v AS DOUBLE))', 6)} AS avg_val, COUNT(*) AS n
     FROM (
       SELECT label,
              generate_subscripts(embedding, 1) AS pos,
@@ -63,7 +63,7 @@ def vector_avg_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("label", (F.col("pos0") + 1).cast("bigint").alias("pos"), "v")
         .groupBy("label", "pos")
         .agg(
-            F.round(F.avg(F.col("v").cast("double")), 6).alias("avg_val"),
+            round_half(F.avg(F.col("v").cast("double")), 6).alias("avg_val"),
             F.count("*").alias("n"),
         )
     )
@@ -280,7 +280,7 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_quantize_int8",
-    oracle="""
+    oracle=f"""
     WITH scaled AS (
       SELECT vec_id,
              list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS max_abs,
@@ -288,37 +288,37 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings
     )
     SELECT vec_id,
-           ROUND(max_abs, 6) AS scale_max,
+           {round_half('max_abs', 6)} AS scale_max,
            list_sum(list_transform(embedding,
-             x -> CASE WHEN abs(CAST(round(CAST(x AS DOUBLE) / max_abs * 127) AS BIGINT)) > 120
+             x -> CASE WHEN abs(CAST({round_half('CAST(x AS DOUBLE) / max_abs * 127', 0)} AS BIGINT)) > 120
                        THEN 1 ELSE 0 END))::BIGINT AS n_saturated,
-           ROUND(list_max(list_transform(embedding,
-             x -> abs(CAST(x AS DOUBLE)
-                      - CAST(round(CAST(x AS DOUBLE) / max_abs * 127) AS BIGINT)
-                        * max_abs / 127))), 6) AS max_abs_err
+           {round_half("list_max(list_transform(embedding,"
+             " x -> abs(CAST(x AS DOUBLE)"
+                      f" - CAST({round_half('CAST(x AS DOUBLE) / max_abs * 127', 0)} AS BIGINT)"
+                        " * max_abs / 127)))", 6)} AS max_abs_err
     FROM scaled
     """,
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 scalar quantization of embeddings (the 4x storage
     + SIMD-distance path for 100 TB vector corpora): per-vector scale =
-    max|x|, q = round(x/scale*127).  Output: scale, saturation count,
+    max|x|, q = x/scale*127 rounded to an integer.  Output: scale, saturation count,
     and max dequantization error — all JVM-side array folds, rounded
     identically on both engines."""
     e = t(spark, sf_dir, "embeddings")
     xd = lambda x: x.cast("double")  # noqa: E731
     max_abs = F.array_max(F.transform("embedding", lambda x: F.abs(xd(x))))
     e = e.withColumn("max_abs", max_abs)
-    q = lambda x: F.round(xd(x) / F.col("max_abs") * 127).cast("bigint")  # noqa: E731
+    q = lambda x: round_half(xd(x) / F.col("max_abs") * 127, 0).cast("bigint")  # noqa: E731
     return e.select(
         "vec_id",
-        F.round(F.col("max_abs"), 6).alias("scale_max"),
+        round_half(F.col("max_abs"), 6).alias("scale_max"),
         F.aggregate(
             F.transform("embedding", lambda x: F.when(F.abs(q(x)) > 120, 1).otherwise(0)),
             F.lit(0).cast("bigint"),
             lambda acc, x: acc + x,
         ).alias("n_saturated"),
-        F.round(
+        round_half(
             F.array_max(
                 F.transform(
                     "embedding",
@@ -484,15 +484,14 @@ def text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q14_promo_share",
-    oracle="""
-    SELECT ROUND(
-             100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                          THEN CAST(l_extendedprice AS DECIMAL(12,2))
-                               * (1 - CAST(l_discount AS DECIMAL(8,4)))
-                          ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-             / CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                        * (1 - CAST(l_discount AS DECIMAL(8,4)))) AS DOUBLE),
-           6) AS promo_share,
+    oracle=f"""
+    SELECT {round_half(
+             "100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'"
+                          " THEN CAST(l_extendedprice AS DECIMAL(12,2))"
+                               " * (1 - CAST(l_discount AS DECIMAL(8,4)))"
+                          " ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)"
+             " / CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))"
+                        " * (1 - CAST(l_discount AS DECIMAL(8,4)))) AS DOUBLE)", 6)} AS promo_share,
            COUNT(*) AS n
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
@@ -513,9 +512,9 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.expr(
-                f"ROUND(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {rev} "
-                f"ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) "
-                f"/ CAST(SUM({rev}) AS DOUBLE), 6)"
+                round_half(f"100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {rev} "
+                           "ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) "
+                           f"/ CAST(SUM({rev}) AS DOUBLE)", 6)
             ).alias("promo_share"),
             F.count("*").alias("n"),
         )
@@ -602,11 +601,11 @@ def funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_corr_covar",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           ROUND(corr(l_quantity, l_discount), 4) AS corr_qd,
-           ROUND(covar_samp(l_quantity, l_discount), 4) AS covar_qd,
-           ROUND(regr_slope(l_extendedprice, l_quantity), 2) AS price_per_qty
+           {round_half('corr(l_quantity, l_discount)', 4)} AS corr_qd,
+           {round_half('covar_samp(l_quantity, l_discount)', 4)} AS covar_qd,
+           {round_half('regr_slope(l_extendedprice, l_quantity)', 2)} AS price_per_qty
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -617,9 +616,9 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries/_util.py for the exact-decimal rule used for raw sums."""
     li = t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        F.round(F.corr("l_quantity", "l_discount"), 4).alias("corr_qd"),
-        F.round(F.covar_samp("l_quantity", "l_discount"), 4).alias("covar_qd"),
-        F.round(F.regr_slope("l_extendedprice", "l_quantity"), 2).alias("price_per_qty"),
+        round_half(F.corr("l_quantity", "l_discount"), 4).alias("corr_qd"),
+        round_half(F.covar_samp("l_quantity", "l_discount"), 4).alias("covar_qd"),
+        round_half(F.regr_slope("l_extendedprice", "l_quantity"), 2).alias("price_per_qty"),
     )
 
 
@@ -765,7 +764,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q8_market_share",
-    oracle="""
+    oracle=f"""
     WITH volumes AS (
       SELECT EXTRACT(year FROM o_orderdate) AS o_year,
              CAST(l_extendedprice AS DECIMAL(12,2))
@@ -781,9 +780,9 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE r_name = 'ASIA'
     )
     SELECT o_year,
-           ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume
-                               ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-                 / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
+           {round_half("CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume"
+                               " ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)"
+                 " / CAST(SUM(volume) AS DOUBLE)", 6)} AS mkt_share
     FROM volumes GROUP BY o_year
     """,
 )
@@ -815,9 +814,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
         .agg(
             F.expr(
-                f"ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN {vol} "
-                f"ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) "
-                f"/ CAST(SUM({vol}) AS DOUBLE), 6)"
+                round_half(f"CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN {vol} "
+                           "ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) "
+                           f"/ CAST(SUM({vol}) AS DOUBLE)", 6)
             ).alias("mkt_share")
         )
     )
@@ -872,7 +871,7 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_by_segment",
-    oracle="""
+    oracle=f"""
     WITH flagged AS (
       SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
              CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -909,7 +908,7 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(v.v_ts) AS n_view,
            COUNT(k.c_ts) AS n_view_click,
            COUNT(b.p_ts) AS n_full_funnel,
-           ROUND(CAST(COUNT(b.p_ts) AS DOUBLE) / COUNT(*), 6) AS conversion
+           {round_half('CAST(COUNT(b.p_ts) AS DOUBLE) / COUNT(*)', 6)} AS conversion
     FROM sess s
     JOIN customer ON c_custkey = s.user_id
     LEFT JOIN views v ON v.user_id = s.user_id AND v.sid = s.sid
@@ -970,9 +969,7 @@ def funnel_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("v_ts").alias("n_view"),
             F.count("c_ts").alias("n_view_click"),
             F.count("p_ts").alias("n_full_funnel"),
-            F.round(
-                F.count("p_ts").cast("double") / F.count("*"), 6
-            ).alias("conversion"),
+            round_half(F.count("p_ts").cast("double") / F.count("*"), 6).alias("conversion"),
         )
         .orderBy("segment")
     )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 # Imported for the side effect of registering dedup_minhash_lsh's
 # oracle before we compose it into the recursive-CTE oracle below.
 import instructions_mr_spark.queries.llm_pipeline as _llm  # noqa: F401
+from instructions_mr_spark.functions import round_half
 from instructions_mr_spark.operators.asof import asof_join
 from instructions_mr_spark.operators.graph import connected_components
 from instructions_mr_spark.queries._util import DEC_VALUE, sum_d, t
@@ -595,7 +596,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node local clustering coefficient over the co-purchase
     graph: lcc(v) = 2 * triangles(v) / (deg(v) * (deg(v)-1)) for
     deg >= 2, emitted as lcc_e6 integer units under one truncating
-    division (never a ROUND(double) final).  The community-density
+    division (never a rounded double final).  The community-density
     signal recommendation and fraud pipelines compute next to the
     global triangle count.
 
@@ -1690,8 +1691,8 @@ _CCDF_EDGES_SQL = """
     SELECT th.threshold,
            CAST(SUM(CASE WHEN deg.d >= th.threshold THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_ge,
-           ROUND(CAST(SUM(CASE WHEN deg.d >= th.threshold THEN 1 ELSE 0 END)
-                      AS DOUBLE) / MAX(n.nv), 6) AS frac_ge
+           {round_half('CAST(SUM(CASE WHEN deg.d >= th.threshold THEN 1 ELSE 0 END)'
+                      ' AS DOUBLE) / MAX(n.nv)', 6)} AS frac_ge
     FROM th CROSS JOIN deg CROSS JOIN n
     GROUP BY th.threshold
     ORDER BY th.threshold
@@ -1733,7 +1734,7 @@ def graph_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("d") >= F.col("threshold"), 1).otherwise(0))
             .cast("bigint")
             .alias("n_ge"),
-            F.round(
+            round_half(
                 F.sum(
                     F.when(F.col("d") >= F.col("threshold"), 1).otherwise(0)
                 ).cast("double")
@@ -1769,8 +1770,8 @@ def graph_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vol.brand, CAST(vol.n_vertices AS BIGINT) AS n_vertices,
            CAST(vol.vol AS BIGINT) AS vol,
            CAST(COALESCE(cut.cut, 0) AS BIGINT) AS cut,
-           ROUND(CAST(COALESCE(cut.cut, 0) AS DOUBLE)
-                 / NULLIF(LEAST(vol.vol, m.vol_total - vol.vol), 0), 6)
+           {round_half('CAST(COALESCE(cut.cut, 0) AS DOUBLE)'
+                 ' / NULLIF(LEAST(vol.vol, m.vol_total - vol.vol), 0)', 6)}
              AS conductance
     FROM vol LEFT JOIN cut USING (brand), m
     ORDER BY vol.brand
@@ -1830,8 +1831,10 @@ def graph_conductance_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_vertices AS BIGINT) AS n_vertices",
             "CAST(vol AS BIGINT) AS vol",
             "CAST(COALESCE(cut, 0) AS BIGINT) AS cut",
-            "ROUND(CAST(COALESCE(cut, 0) AS DOUBLE)"
-            " / NULLIF(LEAST(vol, vol_total - vol), 0), 6) AS conductance",
+            round_half(
+                "CAST(COALESCE(cut, 0) AS DOUBLE) / NULLIF(LEAST(vol, vol_total - vol), 0)", 6
+            )
+            + " AS conductance",
         )
         .orderBy("brand")
     )

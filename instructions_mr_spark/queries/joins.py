@@ -204,7 +204,7 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join_theta_range",
     oracle="""
     SELECT a.s_suppkey AS supp_a, b.s_suppkey AS supp_b,
-           CAST(ROUND(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)), 2) AS DOUBLE) AS bal_gap
+           CAST(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal_gap
     FROM supplier a JOIN supplier b
       ON a.s_suppkey < b.s_suppkey
      AND a.s_acctbal BETWEEN b.s_acctbal - 500 AND b.s_acctbal + 500
@@ -227,7 +227,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.s_suppkey").alias("supp_a"),
         F.col("b.s_suppkey").alias("supp_b"),
         F.expr(
-            "CAST(ROUND(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)), 2) AS DOUBLE)"
+            "CAST(CAST(a.s_acctbal AS DECIMAL(12,2)) - CAST(b.s_acctbal AS DECIMAL(12,2)) AS DOUBLE)"
         ).alias("bal_gap"),
     )
 

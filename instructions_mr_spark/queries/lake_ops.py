@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -185,7 +185,7 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     string-pack MAX (portable argmax — no max_by tuple keys), and the
     interpolated value is the all-integer lerp numerator under ONE
     truncating division (Spark ``div`` == DuckDB ``//``), emitted as
-    value_e6 = value * 1e6 units — never a ROUND(double) final.
+    value_e6 = value * 1e6 units — never a rounded double final.
 
     Scale shape: the only corpus-sized operation is the (type, hour)
     group-by; the grid (hours x types) is broadcast-tiny, and the
@@ -1907,8 +1907,8 @@ _SKEW_K = 200  # the hypothetical shuffle partition count being sized
            CAST(MAX(CASE WHEN rn = CEIL(np / 2.0) THEN rows_in END) AS BIGINT)
              AS p50_rows,
            CAST(MAX(rows_in) AS BIGINT) AS max_rows,
-           ROUND(CAST(MAX(rows_in) AS DOUBLE)
-                 / MAX(CASE WHEN rn = CEIL(np / 2.0) THEN rows_in END), 6)
+           {round_half('CAST(MAX(rows_in) AS DOUBLE)'
+                 ' / MAX(CASE WHEN rn = CEIL(np / 2.0) THEN rows_in END)', 6)}
              AS skew_ratio
     FROM ranked
     """,
@@ -1949,8 +1949,8 @@ def shuffle_skew_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p50_rows"),
         F.max("rows_in").cast("bigint").alias("max_rows"),
         F.expr(
-            "ROUND(CAST(MAX(rows_in) AS DOUBLE)"
-            " / MAX(CASE WHEN rn = CEIL(np / 2.0) THEN rows_in END), 6)"
+            round_half("CAST(MAX(rows_in) AS DOUBLE)"
+                       " / MAX(CASE WHEN rn = CEIL(np / 2.0) THEN rows_in END)", 6)
         ).alias("skew_ratio"),
     )
 

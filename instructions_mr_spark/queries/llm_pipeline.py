@@ -35,9 +35,12 @@ from instructions_mr_spark.functions import (
     cosine_with_norms,
     duck_cosine,
     duck_hash,
+    duck_jaccard,
     duck_sign_bucket,
     duck_sq_l2,
+    jaccard,
     l2_norm,
+    round_half,
     sign_bucket,
     spark_hash,
     spark_sq_l2,
@@ -280,8 +283,7 @@ _LSH_ORACLE_SQL = f"""
     )
     SELECT doc_a, doc_b, jaccard FROM (
       SELECT doc_a, doc_b,
-             ROUND(CAST(len(list_intersect(wa.ws, wb.ws)) AS DOUBLE)
-                   / len(list_distinct(wa.ws || wb.ws)), 6) AS jaccard
+             {duck_jaccard('wa.ws', 'wb.ws')} AS jaccard
       FROM cand
       JOIN (SELECT doc_id, shingles AS ws FROM ({_DUCK_SHINGLE_DOCS})) wa
         ON cand.doc_a = wa.doc_id
@@ -437,7 +439,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared integer-exactly as 2·|∩| >= |∪|, no float round).
     Output: per-source test-doc count, leaked count, leak rate
     (emitted UNROUNDED — one IEEE division of two exact BIGINTs is
-    bit-identical cross-engine; ROUND(double) ties are not).
+    bit-identical cross-engine and needs no rounding).
 
     Scale shape: one staged signature pass (shared with the LSH
     entries via the lsh_sigs checkpoint); the cross-split candidate
@@ -535,11 +537,7 @@ def _verify_lsh_pairs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.round(
-                F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
-                / F.size(F.array_union("ws_a", "ws_b")),
-                6,
-            ).alias("jaccard"),
+            jaccard("ws_a", "ws_b").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= _LSH_THRESHOLD)
     )
@@ -665,7 +663,7 @@ def dedup_minhash_lsh_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(words) - 1),
@@ -674,8 +672,7 @@ def dedup_minhash_lsh_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE len(words) >= 3
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / len(list_distinct(a.shingles || b.shingles)), 6) AS jaccard
+           {duck_jaccard('a.shingles', 'b.shingles')} AS jaccard
     FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
     """,
 )
@@ -708,17 +705,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(
-            F.size(F.array_intersect("a.shingles", "b.shingles")).cast("double")
-            / F.size(F.array_union("a.shingles", "b.shingles")),
-            6,
-        ).alias("jaccard"),
+        jaccard("a.shingles", "b.shingles").alias("jaccard"),
     )
 
 
 @query(
     "dedup_containment",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(words) - 1),
@@ -727,8 +720,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE len(words) >= 3
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / len(a.shingles), 6) AS containment_a_in_b
+           {round_half('CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)'
+                 ' / len(a.shingles)', 6)} AS containment_a_in_b
     FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
     """,
 )
@@ -762,7 +755,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(
+        round_half(
             F.size(F.array_intersect("a.shingles", "b.shingles")).cast("double")
             / F.size("a.shingles"),
             6,
@@ -1049,7 +1042,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe query — the evaluation harness every production ANN deploy
     runs before trusting the index.  Emits all-integer rows
     (qid, n_candidates, n_hits, k) so recall = n_hits/k is computed by
-    the reader, never a ROUND(double) final (cross-engine tie-safety
+    the reader, never a rounded double final (cross-engine tie-safety
     convention).
 
     Scale shape: the probe set is FIXED (16 queries) so the scored
@@ -1440,8 +1433,7 @@ _CONTAM_THRESHOLD = 0.5
     )
     SELECT doc_id, bench_id, jaccard FROM (
       SELECT cand.doc_id, cand.bench_id,
-             ROUND(CAST(len(list_intersect(wc.ws, wb.ws)) AS DOUBLE)
-                   / len(list_distinct(wc.ws || wb.ws)), 6) AS jaccard
+             {duck_jaccard('wc.ws', 'wb.ws')} AS jaccard
       FROM cand
       JOIN (SELECT doc_id, shingles AS ws FROM ({_DUCK_SHINGLE_CORPUS})) wc
         ON cand.doc_id = wc.doc_id
@@ -1482,11 +1474,7 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cand.select(
         "doc_id",
         "bench_id",
-        F.round(
-            F.size(F.array_intersect("ws_c", "ws_b")).cast("double")
-            / F.size(F.array_union("ws_c", "ws_b")),
-            6,
-        ).alias("jaccard"),
+        jaccard("ws_c", "ws_b").alias("jaccard"),
     ).filter(F.col("jaccard") >= _CONTAM_THRESHOLD)
 
 
@@ -2154,7 +2142,7 @@ def neardup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: cosines computed once (JVM-side), then a 4-row
     threshold table cross-joins as a broadcast — one pass over the
     pair table produces the whole curve; comparisons are on the
-    ROUND(,6) value both engines share."""
+    6-digit rounded value both engines share."""
     e = t(spark, sf_dir, "embeddings")
     a = e.alias("a")
     b = e.alias("b")
@@ -2247,10 +2235,9 @@ def source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM sh
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-                 / len(list_distinct(sa.shingles || sb.shingles)), 6) AS true_jaccard,
-           ROUND(({' + '.join(f"CASE WHEN a.mh{s} = b.mh{s} THEN 1 ELSE 0 END" for s in range(_MINHASH_K))})
-                 / {float(_MINHASH_K)}, 6) AS est_jaccard
+           {duck_jaccard('sa.shingles', 'sb.shingles')} AS true_jaccard,
+           {round_half('(' + ' + '.join(f"CASE WHEN a.mh{s} = b.mh{s} THEN 1 ELSE 0 END" for s in range(_MINHASH_K))
+                       + f') / {float(_MINHASH_K)}', 6)} AS est_jaccard
     FROM sig a JOIN sig b ON b.doc_id = a.doc_id + 1
     JOIN sh sa ON sa.doc_id = a.doc_id
     JOIN sh sb ON sb.doc_id = b.doc_id
@@ -2284,12 +2271,8 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.round(
-                F.size(F.array_intersect("sa.shingles", "sb.shingles")).cast("double")
-                / F.size(F.array_union("sa.shingles", "sb.shingles")),
-                6,
-            ).alias("true_jaccard"),
-            F.round(est, 6).alias("est_jaccard"),
+            jaccard("sa.shingles", "sb.shingles").alias("true_jaccard"),
+            round_half(est, 6).alias("est_jaccard"),
         )
     )
 
@@ -3376,7 +3359,7 @@ def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives that actually move an embedding model, vs the
     uninformative random negatives of negative_sampling_pairs.  Exact
     brute-force cosine (both engines fold the dot product
-    left-to-right over the same element order, so the ROUND(...,6)
+    left-to-right over the same element order, so the 6-digit rounded
     values are identical; ranks tie-break on candidate id).
 
     Scale shape: the bounded probe batch broadcasts onto the corpus
@@ -3447,8 +3430,7 @@ def _tune_band_rows_duck() -> str:
     pairs AS (SELECT DISTINCT doc_a, doc_b FROM cand),
     jac AS (
       SELECT doc_a, doc_b,
-             ROUND(CAST(len(list_intersect(wa.ws, wb.ws)) AS DOUBLE)
-                   / len(list_distinct(wa.ws || wb.ws)), 6) AS jaccard
+             {duck_jaccard('wa.ws', 'wb.ws')} AS jaccard
       FROM pairs
       JOIN (SELECT doc_id, shingles AS ws FROM ({_DUCK_SHINGLE_DOCS})) wa
         ON pairs.doc_a = wa.doc_id
@@ -3466,8 +3448,8 @@ def _tune_band_rows_duck() -> str:
     ),
     ref AS (SELECT n_true AS ref_true FROM per_cfg WHERE cfg = '6x2')
     SELECT cfg, n_cand, n_true,
-           ROUND(CAST(n_true AS DOUBLE) / NULLIF(n_cand, 0), 6) AS precision_,
-           ROUND(CAST(n_true AS DOUBLE) / NULLIF(ref.ref_true, 0), 6)
+           {round_half('CAST(n_true AS DOUBLE) / NULLIF(n_cand, 0)', 6)} AS precision_,
+           {round_half('CAST(n_true AS DOUBLE) / NULLIF(ref.ref_true, 0)', 6)}
              AS recall_vs_most_sensitive
     FROM per_cfg, ref
     ORDER BY cfg
@@ -3537,11 +3519,7 @@ def lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.round(
-                F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
-                / F.size(F.array_distinct(F.concat("ws_a", "ws_b"))),
-                6,
-            ).alias("jaccard"),
+            jaccard("ws_a", "ws_b").alias("jaccard"),
         )
     )
     scored = cand.join(jac, ["doc_a", "doc_b"]).select(
@@ -3560,8 +3538,8 @@ def lsh_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cfg",
             "n_cand",
             "n_true",
-            "ROUND(CAST(n_true AS DOUBLE) / NULLIF(n_cand, 0), 6) AS precision_",
-            "ROUND(CAST(n_true AS DOUBLE) / NULLIF(ref_true, 0), 6)"
+            f"{round_half('CAST(n_true AS DOUBLE) / NULLIF(n_cand, 0)', 6)} AS precision_",
+            f"{round_half('CAST(n_true AS DOUBLE) / NULLIF(ref_true, 0)', 6)}"
             " AS recall_vs_most_sensitive",
         )
         .orderBy("cfg")
@@ -3592,9 +3570,9 @@ _EPS_LEVELS = [5, 10, 20, 50]  # eps * 100: cos >= 0.95, 0.90, 0.80, 0.50
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
            CAST(COUNT(DISTINCT CASE WHEN pr.cos >= 1 - eps.eps_e2 / 100.0
                     THEN pr.vec_b END) AS BIGINT) AS n_dropped,
-           ROUND(1 - CAST(COUNT(DISTINCT CASE WHEN
-                    pr.cos >= 1 - eps.eps_e2 / 100.0 THEN pr.vec_b END)
-                    AS DOUBLE) / MAX(n.ns), 6) AS keep_rate
+           {round_half('1 - CAST(COUNT(DISTINCT CASE WHEN'
+                    ' pr.cos >= 1 - eps.eps_e2 / 100.0 THEN pr.vec_b END)'
+                    ' AS DOUBLE) / MAX(n.ns)', 6)} AS keep_rate
     FROM eps CROSS JOIN pr CROSS JOIN n
     GROUP BY eps.eps_e2
     ORDER BY eps.eps_e2
@@ -3660,7 +3638,7 @@ def semdedup_eps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_dropped"),
-            F.round(
+            round_half(
                 1
                 - F.countDistinct(
                     F.when(

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -414,8 +414,8 @@ _MLM_SPARK_PREV = "(" + spark_hash(_MLM_POS_PREV, _MLM_SEED, hex_digits=15) + ")
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
            CAST(SUM(m) AS BIGINT) AS n_masked,
            CAST(SUM(starts) AS BIGINT) AS n_spans,
-           ROUND(CAST(SUM(m) AS DOUBLE) / COUNT(*), 6) AS mask_rate,
-           ROUND(CAST(SUM(m) AS DOUBLE) / NULLIF(SUM(starts), 0), 6)
+           {round_half('CAST(SUM(m) AS DOUBLE) / COUNT(*)', 6)} AS mask_rate,
+           {round_half('CAST(SUM(m) AS DOUBLE) / NULLIF(SUM(starts), 0)', 6)}
              AS avg_span_len
     FROM flags GROUP BY source
     ORDER BY source
@@ -463,8 +463,8 @@ def mlm_mask_plan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_masked",
             "n_spans",
-            "ROUND(CAST(n_masked AS DOUBLE) / n_tokens, 6) AS mask_rate",
-            "ROUND(CAST(n_masked AS DOUBLE) / NULLIF(n_spans, 0), 6)"
+            f"{round_half('CAST(n_masked AS DOUBLE) / n_tokens', 6)} AS mask_rate",
+            f"{round_half('CAST(n_masked AS DOUBLE) / NULLIF(n_spans, 0)', 6)}"
             " AS avg_span_len",
         )
         .orderBy("source")

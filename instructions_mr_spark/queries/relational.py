@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import round_half
 from instructions_mr_spark.registry import query
 from instructions_mr_spark.queries._util import (
     CHARGE,
@@ -208,12 +209,12 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_stats",
-    oracle="""
+    oracle=f"""
     SELECT l_linestatus,
-           ROUND(AVG(l_discount), 6) AS avg_disc,
-           ROUND(STDDEV_SAMP(l_discount), 6) AS sd_disc,
-           ROUND(MIN(l_discount), 6) AS min_disc,
-           ROUND(MAX(l_discount), 6) AS max_disc
+           {round_half('AVG(l_discount)', 6)} AS avg_disc,
+           {round_half('STDDEV_SAMP(l_discount)', 6)} AS sd_disc,
+           {round_half('MIN(l_discount)', 6)} AS min_disc,
+           {round_half('MAX(l_discount)', 6)} AS max_disc
     FROM lineitem GROUP BY l_linestatus
     """,
 )
@@ -224,10 +225,10 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .groupBy("l_linestatus")
         .agg(
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.round(F.stddev_samp("l_discount"), 6).alias("sd_disc"),
-            F.round(F.min("l_discount"), 6).alias("min_disc"),
-            F.round(F.max("l_discount"), 6).alias("max_disc"),
+            round_half(F.avg("l_discount"), 6).alias("avg_disc"),
+            round_half(F.stddev_samp("l_discount"), 6).alias("sd_disc"),
+            round_half(F.min("l_discount"), 6).alias("min_disc"),
+            round_half(F.max("l_discount"), 6).alias("max_disc"),
         )
     )
 
@@ -263,14 +264,17 @@ def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PRICE_UP = "CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 110 / 100 AS DOUBLE)"
+
+
 @query(
     "project_expr",
-    oracle="""
+    oracle=f"""
     SELECT p_partkey,
            UPPER(p_brand) AS brand_uc,
            SUBSTRING(p_name, 1, 10) AS name10,
            p_size * 2 + 1 AS size2,
-           CAST(ROUND(CAST(p_retailprice AS DECIMAL(12,2)) * 110 / 100, 2) AS DOUBLE) AS price_up,
+           {round_half(_PRICE_UP, 2)} AS price_up,
            CASE WHEN p_size >= 25 THEN 'large' WHEN p_size >= 10 THEN 'mid' ELSE 'small' END AS size_class
     FROM part
     """,
@@ -281,9 +285,7 @@ def project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.upper("p_brand").alias("brand_uc"),
         F.substring("p_name", 1, 10).alias("name10"),
         (F.col("p_size") * 2 + 1).alias("size2"),
-        F.expr("CAST(ROUND(CAST(p_retailprice AS DECIMAL(12,2)) * 110 / 100, 2) AS DOUBLE)").alias(
-            "price_up"
-        ),
+        F.expr(round_half(_PRICE_UP, 2)).alias("price_up"),
         F.when(F.col("p_size") >= 25, "large")
         .when(F.col("p_size") >= 10, "mid")
         .otherwise("small")

@@ -22,7 +22,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
 from instructions_mr_spark.queries._util import DEC_TOTAL, sum_d, t
 from instructions_mr_spark.registry import query
 
@@ -385,10 +385,9 @@ _ARES_DUCK = f"""
       SELECT o_orderkey,
              CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                AS weight_cents,
-             CAST(CAST(ROUND(-LN(
-                   CAST(({duck_hash('o_orderkey', 71, hex_digits=15)}
-                         + 1) AS DOUBLE) / 1152921504606846976.0
-                 ), 10) AS DECIMAL(12,10)) * 10000000000000000 AS BIGINT)
+             CAST(CAST({round_half(
+                   f"-LN(CAST(({duck_hash('o_orderkey', 71, hex_digits=15)} + 1) AS DOUBLE)"
+                   " / 1152921504606846976.0)", 10)} AS DECIMAL(12,10)) * 10000000000000000 AS BIGINT)
                // CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                AS ares_key
       FROM orders
@@ -409,7 +408,7 @@ def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel and fully deterministic (the 'random' u is the portable
     60-bit key digest, so any engine, any partitioning, any day picks
     the same 20 orders).  The score is integerized as
-    ROUND(-ln u, 10) * 1e16 DIV cents — one truncating division, no
+    round_half(-ln u, 10) * 1e16 DIV cents — one truncating division, no
     float comparisons at the selection boundary.
 
     Scale shape: per-row expressions ride the scan (no shuffle), and
@@ -424,8 +423,9 @@ def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)"
         ).alias("weight_cents"),
         F.expr(
-            f"CAST(CAST(ROUND(-LN(CAST(({h60} + 1) AS DOUBLE)"
-            " / 1152921504606846976.0), 10) AS DECIMAL(12,10))"
+            "CAST(CAST("
+            + round_half(f"-LN(CAST(({h60} + 1) AS DOUBLE) / 1152921504606846976.0)", 10)
+            + " AS DECIMAL(12,10))"
             " * 10000000000000000 AS BIGINT)"
             " DIV CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)"
         ).alias("ares_key"),
@@ -504,7 +504,7 @@ def curriculum_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_p_quality_filter",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
       SELECT source, len(string_split(text, ' ')) AS score
       FROM documents
@@ -525,7 +525,7 @@ def curriculum_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MIN(score) AS BIGINT) AS threshold_score,
            CAST(SUM(n_docs) AS BIGINT) AS n_docs_kept,
            CAST(SUM(tokens) AS BIGINT) AS tokens_kept,
-           ROUND(CAST(SUM(tokens) AS DOUBLE) / MAX(total), 6) AS share_kept
+           {round_half('CAST(SUM(tokens) AS DOUBLE) / MAX(total)', 6)} AS share_kept
     FROM cum
     WHERE 10 * cum_before < 9 * total
     GROUP BY source
@@ -580,9 +580,7 @@ def top_p_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("score").cast("bigint").alias("threshold_score"),
             F.sum("n_docs").cast("bigint").alias("n_docs_kept"),
             F.sum("tokens").cast("bigint").alias("tokens_kept"),
-            F.round(
-                F.sum("tokens").cast("double") / F.max("total"), 6
-            ).alias("share_kept"),
+            round_half(F.sum("tokens").cast("double") / F.max("total"), 6).alias("share_kept"),
         )
         .orderBy("source")
     )
@@ -590,7 +588,7 @@ def top_p_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "contribution_bounding_curve",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT event_type,
              ROW_NUMBER() OVER (PARTITION BY user_id, event_type
@@ -603,8 +601,8 @@ def top_p_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN ranked.rn <= caps.cap THEN 1 ELSE 0 END)
                 AS BIGINT) AS kept,
            CAST(COUNT(*) AS BIGINT) AS total,
-           ROUND(CAST(SUM(CASE WHEN ranked.rn <= caps.cap THEN 1 ELSE 0 END)
-                      AS DOUBLE) / COUNT(*), 6) AS kept_share
+           {round_half('CAST(SUM(CASE WHEN ranked.rn <= caps.cap THEN 1 ELSE 0 END)'
+                      ' AS DOUBLE) / COUNT(*)', 6)} AS kept_share
     FROM ranked CROSS JOIN caps
     GROUP BY caps.cap, ranked.event_type
     ORDER BY cap, event_type
@@ -647,7 +645,7 @@ def contribution_bounding_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "kept",
             "total",
-            "ROUND(CAST(kept AS DOUBLE) / total, 6) AS kept_share",
+            f"{round_half('CAST(kept AS DOUBLE) / total', 6)} AS kept_share",
         )
         .orderBy("cap", "event_type")
     )
@@ -667,8 +665,8 @@ def contribution_bounding_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT fold,
            CAST(COUNT(DISTINCT f.user_id) AS BIGINT) AS n_users,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           ROUND(CAST(COUNT(*) AS DOUBLE)
-                 / (SELECT COUNT(*) FROM folds), 6) AS event_share,
+           {round_half('CAST(COUNT(*) AS DOUBLE)'
+                 ' / (SELECT COUNT(*) FROM folds)', 6)} AS event_share,
            CAST((SELECT SUM(CASE WHEN nf > 1 THEN 1 ELSE 0 END)
                  FROM integrity) AS BIGINT) AS split_users
     FROM folds f
@@ -720,7 +718,7 @@ def group_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fold",
             "n_users",
             "n_events",
-            "ROUND(CAST(n_events AS DOUBLE) / tot, 6) AS event_share",
+            f"{round_half('CAST(n_events AS DOUBLE) / tot', 6)} AS event_share",
             "split_users",
         )
         .orderBy("fold")

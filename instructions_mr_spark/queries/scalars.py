@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_dot
+from instructions_mr_spark.functions import duck_dot, round_half
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -99,13 +99,13 @@ def scalar_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_math",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey, l_linenumber,
            ABS(l_quantity - 25) AS dev25,
            CAST(CEIL(l_quantity / 7) AS BIGINT) AS q7,
            CAST(FLOOR(l_extendedprice / 1000) AS BIGINT) AS price_k,
-           ROUND(SQRT(l_quantity), 6) AS sqrt_q,
-           ROUND(LN(l_extendedprice), 6) AS ln_price,
+           {round_half('SQRT(l_quantity)', 6)} AS sqrt_q,
+           {round_half('LN(l_extendedprice)', 6)} AS ln_price,
            CAST(l_quantity AS BIGINT) % 5 AS mod5,
            POWER(2, CAST(l_linenumber AS INT)) AS pow2
     FROM lineitem WHERE l_orderkey < 1000
@@ -119,8 +119,8 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("l_quantity") - 25).alias("dev25"),
         F.ceil(F.col("l_quantity") / 7).alias("q7"),
         F.floor(F.col("l_extendedprice") / 1000).alias("price_k"),
-        F.round(F.sqrt("l_quantity"), 6).alias("sqrt_q"),
-        F.round(F.log("l_extendedprice"), 6).alias("ln_price"),
+        round_half(F.sqrt("l_quantity"), 6).alias("sqrt_q"),
+        round_half(F.log("l_extendedprice"), 6).alias("ln_price"),
         (F.col("l_quantity").cast("bigint") % 5).alias("mod5"),
         F.pow(F.lit(2), F.col("l_linenumber").cast("int")).alias("pow2"),
     )
@@ -131,8 +131,8 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT vec_id,
            len(embedding) AS dim,
-           ROUND(CAST(embedding[1] AS DOUBLE), 6) AS first_val,
-           ROUND({duck_dot('embedding', 'embedding', 8)}, 6) AS sumsq8,
+           {round_half('CAST(embedding[1] AS DOUBLE)', 6)} AS first_val,
+           {round_half(f"{duck_dot('embedding', 'embedding', 8)}", 6)} AS sumsq8,
            len(list_filter(embedding, x -> x > 0)) AS n_pos
     FROM embeddings
     """,
@@ -145,8 +145,8 @@ def scalar_array_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size("embedding").cast("bigint").alias("dim"),
-        F.round(F.element_at("embedding", 1).cast("double"), 6).alias("first_val"),
-        F.round(
+        round_half(F.element_at("embedding", 1).cast("double"), 6).alias("first_val"),
+        round_half(
             F.aggregate(
                 F.slice("embedding", 1, 8),
                 F.lit(0.0).cast("double"),

@@ -18,7 +18,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, duck_sign_bucket, sign_bucket, spark_hash
+from instructions_mr_spark.functions import duck_hash, duck_sign_bucket, round_half, sign_bucket, spark_hash
 from instructions_mr_spark.queries._util import (
     DEC_PRICE,
     dec_double,
@@ -31,16 +31,14 @@ from instructions_mr_spark.registry import query
 # z-score from EXACT decimal moments, shared verbatim by both engines
 # (the float-stability rule in _util.py): native AVG/STDDEV over
 # millions of doubles accumulate in engine-dependent order and can
-# flip a ROUND(...,6) hash at scale; decimal S1/S2 are exact, and the
+# flip a 6-digit rounding at scale; decimal S1/S2 are exact, and the
 # double arithmetic derived from them is bit-identical everywhere.
 _Z_WIN = "OVER (PARTITION BY l_returnflag)"
 _Z_N = f"COUNT(*) {_Z_WIN}"
 _Z_S1 = f"CAST(SUM({DEC_PRICE}) {_Z_WIN} AS DOUBLE)"
 _Z_S2 = f"CAST(SUM({DEC_PRICE} * {DEC_PRICE}) {_Z_WIN} AS DOUBLE)"
-_Z_EXPR = (
-    f"ROUND((l_extendedprice - {_Z_S1} / {_Z_N}) / "
-    f"SQRT(({_Z_S2} - {_Z_S1} * {_Z_S1} / {_Z_N}) / ({_Z_N} - 1)), 6)"
-)
+_Z_EXPR = round_half(f"(l_extendedprice - {_Z_S1} / {_Z_N}) / "
+                     f"SQRT(({_Z_S2} - {_Z_S1} * {_Z_S1} / {_Z_N}) / ({_Z_N} - 1))", 6)
 
 
 @query(
@@ -66,7 +64,7 @@ def zscore_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "outlier_iqr",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT event_type,
              quantile_cont(value, 0.25) AS q1,
@@ -74,7 +72,7 @@ def zscore_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events GROUP BY event_type
     )
     SELECT e.event_id, e.event_type, e.value,
-           ROUND(q.q3 + 1.5 * (q.q3 - q.q1), 6) AS upper_fence
+           {round_half('q.q3 + 1.5 * (q.q3 - q.q1)', 6)} AS upper_fence
     FROM events e JOIN q USING (event_type)
     WHERE e.value > q.q3 + 1.5 * (q.q3 - q.q1)
     """,
@@ -97,14 +95,17 @@ def outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "value",
-            F.round(fence, 6).alias("upper_fence"),
+            round_half(fence, 6).alias("upper_fence"),
         )
     )
 
 
+_ENTROPY_CELL = round_half("(CAST(c.c AS DOUBLE) / t.n) * log2(CAST(c.c AS DOUBLE) / t.n)", 10)
+
+
 @query(
     "column_entropy",
-    oracle="""
+    oracle=f"""
     WITH counted AS (
       SELECT column_name, v, COUNT(*) AS c FROM (
         SELECT 'lang' AS column_name, lang AS v FROM documents
@@ -116,9 +117,8 @@ def outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counted GROUP BY column_name
     )
     SELECT c.column_name, t.n_distinct,
-           ROUND(-CAST(SUM(CAST(ROUND(
-               (CAST(c.c AS DOUBLE) / t.n) * log2(CAST(c.c AS DOUBLE) / t.n),
-             10) AS DECIMAL(38,10))) AS DOUBLE), 6) AS entropy_bits
+           {round_half(f"-CAST(SUM(CAST({_ENTROPY_CELL} AS DECIMAL(38,10))) AS DOUBLE)", 6)}
+             AS entropy_bits
     FROM counted c JOIN tot t USING (column_name)
     GROUP BY c.column_name, t.n_distinct
     """,
@@ -152,28 +152,28 @@ def column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order-free under any partitioning/engine (the float-stability
     # convention the LM-score oracles use), so the output can carry
     # 6 decimals instead of the old 4-decimal accepted-drift bound.
-    term = F.round(p * F.log2(p), 10).cast("decimal(38,10)")
+    term = round_half(p * F.log2(p), 10).cast("decimal(38,10)")
     return (
         counted.join(tot, "column_name")
         .groupBy("column_name", "n_distinct")
         .agg(
-            F.round((-F.sum(term)).cast("double"), 6).alias("entropy_bits")
+            round_half((-F.sum(term)).cast("double"), 6).alias("entropy_bits")
         )
     )
 
 
 @query(
     "token_percentiles",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT len(string_split(text, ' ')) AS n_tokens, n_chars FROM documents
     )
-    SELECT ROUND(quantile_cont(n_tokens, 0.10), 6) AS tok_p10,
-           ROUND(quantile_cont(n_tokens, 0.50), 6) AS tok_p50,
-           ROUND(quantile_cont(n_tokens, 0.90), 6) AS tok_p90,
-           ROUND(quantile_cont(n_tokens, 0.99), 6) AS tok_p99,
-           ROUND(quantile_cont(n_chars, 0.50), 6) AS chars_p50,
-           ROUND(quantile_cont(n_chars, 0.99), 6) AS chars_p99
+    SELECT {round_half('quantile_cont(n_tokens, 0.10)', 6)} AS tok_p10,
+           {round_half('quantile_cont(n_tokens, 0.50)', 6)} AS tok_p50,
+           {round_half('quantile_cont(n_tokens, 0.90)', 6)} AS tok_p90,
+           {round_half('quantile_cont(n_tokens, 0.99)', 6)} AS tok_p99,
+           {round_half('quantile_cont(n_chars, 0.50)', 6)} AS chars_p50,
+           {round_half('quantile_cont(n_chars, 0.99)', 6)} AS chars_p99
     FROM m
     """,
 )
@@ -185,7 +185,7 @@ def token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         F.size(F.split("text", " ")).alias("n_tokens"), "n_chars"
     )
-    pct = lambda c, p: F.round(F.expr(f"percentile({c}, {p})"), 6)  # noqa: E731
+    pct = lambda c, p: round_half(F.expr(f"percentile({c}, {p})"), 6)  # noqa: E731
     return d.agg(
         pct("n_tokens", 0.10).alias("tok_p10"),
         pct("n_tokens", 0.50).alias("tok_p50"),
@@ -383,20 +383,20 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_dim_stats",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT u.i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 100000000) AS BIGINT) AS xi
+             CAST({round_half('CAST(embedding[u.i] AS DOUBLE) * 100000000', 0)} AS BIGINT) AS xi
       FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) u
     )
     SELECT dim,
            COUNT(*) AS n,
-           ROUND(CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*), 9) AS mean,
-           ROUND(CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)
-             - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))
-               * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)), 9) AS var,
-           ROUND(CAST(MIN(xi) AS DOUBLE) / 1e8, 9) AS min_x,
-           ROUND(CAST(MAX(xi) AS DOUBLE) / 1e8, 9) AS max_x
+           {round_half('CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)', 9)} AS mean,
+           {round_half('CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)'
+             ' - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))'
+               ' * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))', 9)} AS var,
+           {round_half('CAST(MIN(xi) AS DOUBLE) / 1e8', 9)} AS min_x,
+           {round_half('CAST(MAX(xi) AS DOUBLE) / 1e8', 9)} AS max_x
     FROM dims GROUP BY dim
     """,
 )
@@ -419,18 +419,18 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge (measured 1e-9 var drift)
     dims = e.select(F.posexplode("embedding").alias("dim", "raw")).select(
         "dim",
-        F.expr("CAST(ROUND(CAST(raw AS DOUBLE) * 100000000) AS BIGINT)").alias("xi"),
+        F.expr(f"CAST({round_half('CAST(raw AS DOUBLE) * 100000000', 0)} AS BIGINT)").alias("xi"),
     )
     return dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr("ROUND(CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*), 9)").alias("mean"),
+        F.expr(round_half('CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)', 9)).alias("mean"),
         F.expr(
-            "ROUND(CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)"
-            " - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))"
-            " * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)), 9)"
+            round_half("CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)"
+                       " - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))"
+                       " * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))", 9)
         ).alias("var"),
-        F.expr("ROUND(CAST(MIN(xi) AS DOUBLE) / 1e8, 9)").alias("min_x"),
-        F.expr("ROUND(CAST(MAX(xi) AS DOUBLE) / 1e8, 9)").alias("max_x"),
+        F.expr(round_half('CAST(MIN(xi) AS DOUBLE) / 1e8', 9)).alias("min_x"),
+        F.expr(round_half('CAST(MAX(xi) AS DOUBLE) / 1e8', 9)).alias("max_x"),
     )
 
 
@@ -470,7 +470,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one group-by on the quasi-identifier tuple, then a
     tiny group-by on class size.  Floor-division buckets the
     continuous column so both engines agree exactly (integer
-    arithmetic, no ROUND(double))."""
+    arithmetic, no rounded double)."""
     d = t(spark, sf_dir, "documents")
     classes = d.groupBy(
         "lang",
@@ -492,10 +492,10 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_label_centroid",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT vec_id, label, u.i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 100000000) AS BIGINT) AS xi
+             CAST({round_half('CAST(embedding[u.i] AS DOUBLE) * 100000000', 0)} AS BIGINT) AS xi
       FROM embeddings,
            LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) u
     ),
@@ -513,11 +513,11 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           ROUND(CAST(SUM(num) AS DOUBLE)
-                 / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))
-                 / COUNT(*), 9) AS mean_dist2,
-           ROUND(CAST(MAX(num) AS DOUBLE)
-                 / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE)), 9)
+           {round_half('CAST(SUM(num) AS DOUBLE)'
+                 ' / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))'
+                 ' / COUNT(*)', 9)} AS mean_dist2,
+           {round_half('CAST(MAX(num) AS DOUBLE)'
+                 ' / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))', 9)}
              AS max_dist2,
            CAST(split_part(MAX(lpad(CAST(num AS VARCHAR), 40, '0') || '_'
                 || lpad(CAST(vec_id AS VARCHAR), 12, '0')), '_', 2) AS BIGINT)
@@ -554,7 +554,7 @@ def embedding_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "dim",
-        F.expr("CAST(ROUND(CAST(raw AS DOUBLE) * 100000000) AS BIGINT)").alias("xi"),
+        F.expr(f"CAST({round_half('CAST(raw AS DOUBLE) * 100000000', 0)} AS BIGINT)").alias("xi"),
     )
     cent = dims.groupBy("label", "dim").agg(
         F.sum("xi").alias("sx"), F.count("*").alias("n")
@@ -575,13 +575,13 @@ def embedding_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_vec.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
         F.expr(
-            "ROUND(CAST(SUM(num) AS DOUBLE)"
-            " / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))"
-            " / COUNT(*), 9)"
+            round_half("CAST(SUM(num) AS DOUBLE)"
+                       " / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))"
+                       " / COUNT(*)", 9)
         ).alias("mean_dist2"),
         F.expr(
-            "ROUND(CAST(MAX(num) AS DOUBLE)"
-            " / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE)), 9)"
+            round_half("CAST(MAX(num) AS DOUBLE)"
+                       " / (1e16 * CAST(MAX(n) AS DOUBLE) * CAST(MAX(n) AS DOUBLE))", 9)
         ).alias("max_dist2"),
         # tie-safe argmax shared with the oracle: zero-padded string
         # pack orders identically in both engines (num >= 0, scale 0)
@@ -607,9 +607,9 @@ def _duck_pc_iter_ctes(n_iters: int) -> str:
     are exact; rescale is decimal-digit-length + truncating // so both
     engines see identical integers at every step."""
     parts = [
-        """dims AS (
+        f"""dims AS (
       SELECT vec_id, u.i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 100000000) AS BIGINT) AS xi
+             CAST({round_half('CAST(embedding[u.i] AS DOUBLE) * 100000000', 0)} AS BIGINT) AS xi
       FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) u
     ),
     v0 AS (SELECT DISTINCT dim, CAST(1 AS HUGEINT) AS v FROM dims)"""
@@ -643,9 +643,9 @@ def _duck_pc_iter_ctes(n_iters: int) -> str:
       FROM v{_PC_ITERS - 1} a JOIN v{_PC_ITERS} b USING (dim)
     )
     SELECT dim, CAST(v AS BIGINT) AS pc_fixed,
-           ROUND(CAST(v AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 9) AS loading,
-           ROUND(CAST(ab AS DOUBLE)
-                 / (sqrt(CAST(aa AS DOUBLE)) * sqrt(CAST(bb AS DOUBLE))), 9)
+           {round_half('CAST(v AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE))', 9)} AS loading,
+           {round_half('CAST(ab AS DOUBLE)'
+                 ' / (sqrt(CAST(aa AS DOUBLE)) * sqrt(CAST(bb AS DOUBLE)))', 9)}
              AS conv_cos
     FROM v{_PC_ITERS}, n2, conv ORDER BY dim
     """,
@@ -682,7 +682,7 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "dim",
-        F.expr("CAST(ROUND(CAST(raw AS DOUBLE) * 100000000) AS BIGINT)").alias("xi"),
+        F.expr(f"CAST({round_half('CAST(raw AS DOUBLE) * 100000000', 0)} AS BIGINT)").alias("xi"),
     )
     v = dims.select("dim").distinct().select(
         "dim", F.expr("CAST(1 AS DECIMAL(38,0))").alias("v")
@@ -738,11 +738,10 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim",
             F.expr("CAST(v AS BIGINT)").alias("pc_fixed"),
             F.expr(
-                "ROUND(CAST(v AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE)), 9)"
+                round_half('CAST(v AS DOUBLE) / sqrt(CAST(n2 AS DOUBLE))', 9)
             ).alias("loading"),
             F.expr(
-                "ROUND(CAST(ab AS DOUBLE)"
-                " / (sqrt(CAST(aa AS DOUBLE)) * sqrt(CAST(bb AS DOUBLE))), 9)"
+                round_half("CAST(ab AS DOUBLE) / (sqrt(CAST(aa AS DOUBLE)) * sqrt(CAST(bb AS DOUBLE)))", 9)
             ).alias("conv_cos"),
         )
     )
@@ -816,7 +815,7 @@ l_diversity_audit.__doc__ = (l_diversity_audit.__doc__ or "").replace(
 
 @query(
     "dataset_drift_kl",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
       SELECT lang, source,
              SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS a,
@@ -828,17 +827,17 @@ l_diversity_audit.__doc__ = (l_diversity_audit.__doc__ or "").replace(
     ),
     terms AS (
       SELECT
-        CAST(ROUND(
-          (CAST(b + 1 AS DOUBLE) / (nb + k))
-          * ln((CAST(b + 1 AS DOUBLE) / (nb + k))
-               / (CAST(a + 1 AS DOUBLE) / (na + k))), 10)
+        CAST({round_half(
+          '(CAST(b + 1 AS DOUBLE) / (nb + k))'
+          ' * ln((CAST(b + 1 AS DOUBLE) / (nb + k))'
+               ' / (CAST(a + 1 AS DOUBLE) / (na + k)))', 10)}
           AS DECIMAL(38,10)) AS kl_term,
         abs((b + 1) * (na + k) - (a + 1) * (nb + k)) AS tv_num,
         k, na, nb
       FROM cells, tot
     )
     SELECT CAST(MAX(k) AS BIGINT) AS n_cells,
-           ROUND(CAST(SUM(kl_term) AS DOUBLE), 6) AS kl_new_vs_old,
+           {round_half('CAST(SUM(kl_term) AS DOUBLE)', 6)} AS kl_new_vs_old,
            CAST(SUM(tv_num) AS DOUBLE)
              / (2.0 * (MAX(na) + MAX(k)) * (MAX(nb) + MAX(k))) AS tv_distance
     FROM terms
@@ -854,7 +853,8 @@ def dataset_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix before it skews a training run.
 
     Exactness: KL terms are 10-decimal-rounded doubles summed as
-    DECIMAL (the column_entropy libm-absorbing convention); total
+    DECIMAL (the column_entropy convention; a 1-ulp libm difference
+    still flips a term within an ulp of a rounding boundary); total
     variation never divides per-cell — the numerator is the exact
     integer |cross-multiply| summed as BIGINT, divided ONCE by the
     common denominator (emitted unrounded from identical integers).
@@ -872,9 +872,11 @@ def dataset_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = cells.crossJoin(F.broadcast(tot)).select(
         F.expr(
-            "CAST(ROUND((CAST(b + 1 AS DOUBLE) / (nb + k))"
-            " * ln((CAST(b + 1 AS DOUBLE) / (nb + k))"
-            " / (CAST(a + 1 AS DOUBLE) / (na + k))), 10) AS DECIMAL(38,10))"
+            "CAST("
+            + round_half("(CAST(b + 1 AS DOUBLE) / (nb + k))"
+                         " * ln((CAST(b + 1 AS DOUBLE) / (nb + k))"
+                         " / (CAST(a + 1 AS DOUBLE) / (na + k)))", 10)
+            + " AS DECIMAL(38,10))"
         ).alias("kl_term"),
         F.expr("abs((b + 1) * (na + k) - (a + 1) * (nb + k))").alias("tv_num"),
         "k",
@@ -883,7 +885,7 @@ def dataset_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return terms.agg(
         F.expr("CAST(MAX(k) AS BIGINT)").alias("n_cells"),
-        F.expr("ROUND(CAST(SUM(kl_term) AS DOUBLE), 6)").alias("kl_new_vs_old"),
+        F.expr(round_half('CAST(SUM(kl_term) AS DOUBLE)', 6)).alias("kl_new_vs_old"),
         F.expr(
             "CAST(SUM(tv_num) AS DOUBLE)"
             " / (2.0 * (MAX(na) + MAX(k)) * (MAX(nb) + MAX(k)))"
@@ -1158,7 +1160,7 @@ def label_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay as raw numerators over n and n^2 (diag_agree, pe_num), and
     kappa lands as kappa_e6 = (n*diag - pe) * 1e6 under one truncating
     division by (n^2 - pe) — Spark ``div`` == DuckDB ``//``, no
-    ROUND(double) final.  BIGINT holds to ~3e9 rows; past that, swap
+    rounded double final.  BIGINT holds to ~3e9 rows; past that, swap
     the products to DECIMAL(38,0) (the HUGEINT pattern the logprob
     family uses).
 
@@ -2629,16 +2631,16 @@ _THEIL_DUCK = f"""
     s AS (
       SELECT COUNT(*) AS n, SUM(cents) AS total_cents,
              SUM(CAST(cents AS DECIMAL(9,0))
-                 * CAST(ROUND(LN(CAST(cents AS DOUBLE)), 10)
+                 * CAST({round_half('LN(CAST(cents AS DOUBLE))', 10)}
                         AS DECIMAL(28,10))) AS sum_xlnx
       FROM base
     )
     SELECT CAST(n AS BIGINT) AS n,
            CAST(total_cents AS BIGINT) AS total_cents,
            {dec_double("sum_xlnx")} AS sum_xlnx,
-           CAST(CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10)
+           CAST(CAST({round_half('LN(CAST(total_cents AS DOUBLE))', 10)}
                      AS DECIMAL(28,10)) AS DOUBLE) AS ln_total_r10,
-           CAST(CAST(ROUND(LN(CAST(n AS DOUBLE)), 10)
+           CAST(CAST({round_half('LN(CAST(n AS DOUBLE))', 10)}
                      AS DECIMAL(28,10)) AS DOUBLE) AS ln_n_r10
     FROM s
 """
@@ -2650,9 +2652,9 @@ def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistics (the entropy-based complement of
     gini_revenue_inequality and hhi_concentration): T = sum(x ln x) /
     total - (ln total - ln n), where the reader forms the final float.
-    Per-row logs follow the column_entropy convention — ROUND(ln, 10)
-    into DECIMAL so sub-ulp libm differences between engines cannot
-    reach the sum; cents (< 2^31 per customer, DECIMAL(9,0)) times the
+    Per-row logs follow the column_entropy convention — ln rounded to
+    10 digits into DECIMAL, so the sum is order-free (a 1-ulp libm
+    difference still flips a log within an ulp of a rounding boundary); cents (< 2^31 per customer, DECIMAL(9,0)) times the
     10-dp log stays inside DECIMAL(38,10) exactly.  The exact sum and
     logs leave as the nearest DOUBLE (the _util output-type rule; the
     sum's unscaled value passes 2^53, so it goes through dec_double).
@@ -2670,7 +2672,7 @@ def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("total_cents"),
         F.expr(
             "SUM(CAST(cents AS DECIMAL(9,0))"
-            " * CAST(ROUND(LN(CAST(cents AS DOUBLE)), 10)"
+            f" * CAST({round_half('LN(CAST(cents AS DOUBLE))', 10)}"
             " AS DECIMAL(28,10)))"
         ).alias("sum_xlnx"),
     )
@@ -2678,9 +2680,9 @@ def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(n AS BIGINT) AS n",
         "CAST(total_cents AS BIGINT) AS total_cents",
         f"{dec_double('sum_xlnx')} AS sum_xlnx",
-        "CAST(CAST(ROUND(LN(CAST(total_cents AS DOUBLE)), 10)"
+        f"CAST(CAST({round_half('LN(CAST(total_cents AS DOUBLE))', 10)}"
         " AS DECIMAL(28,10)) AS DOUBLE) AS ln_total_r10",
-        "CAST(CAST(ROUND(LN(CAST(n AS DOUBLE)), 10) AS DECIMAL(28,10))"
+        f"CAST(CAST({round_half('LN(CAST(n AS DOUBLE))', 10)} AS DECIMAL(28,10))"
         " AS DOUBLE) AS ln_n_r10",
     )
 
@@ -2918,7 +2920,7 @@ feature_hash_collision_audit.__doc__ = (
 
 _KM_CHURN_GAP_DAYS = 90
 
-_KM_DUCK = """
+_KM_DUCK = f"""
     WITH per_cust AS (
       SELECT o_custkey,
              MIN(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000)
@@ -2950,7 +2952,7 @@ _KM_DUCK = """
     factors AS (
       SELECT tenure_days, n_risk, n_events,
              CASE WHEN n_events < n_risk THEN
-               CAST(ROUND(LN(1.0 - CAST(n_events AS DOUBLE) / n_risk), 10)
+               CAST({round_half('LN(1.0 - CAST(n_events AS DOUBLE) / n_risk)', 10)}
                     AS DECIMAL(16,10))
              ELSE CAST(0 AS DECIMAL(16,10)) END AS ln1f,
              CASE WHEN n_events >= n_risk THEN 1 ELSE 0 END AS hit_zero
@@ -2977,9 +2979,10 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     censored (contributes to the risk set through their observed
     tenure but is not a churn event).  Emitted as exact terms — per
     event-time: n_risk, n_events, and the running sum of
-    ROUND(ln(1 - d/n), 10) (the reader exponentiates for S(t)); the
-    10-dp decimal log convention (theil_index_terms) keeps sub-ulp
-    libm differences out of the cumulative sum, and ln_surv goes NULL
+    ln(1 - d/n) rounded to 10 digits (the reader exponentiates for
+    S(t)); the 10-dp decimal log convention (theil_index_terms) makes
+    the cumulative sum order-free, short of a 1-ulp libm flip at a
+    rounding boundary, and ln_surv goes NULL
     from the first time the risk set is exhausted (S(t) = 0, where the
     log diverges).  The running sum is exact in DECIMAL(38,10) and
     leaves as the nearest DOUBLE (the _util output-type rule).
@@ -3033,7 +3036,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.expr(
             "CASE WHEN n_events < n_risk THEN"
-            " CAST(ROUND(LN(1.0 - CAST(n_events AS DOUBLE) / n_risk), 10)"
+            f" CAST({round_half('LN(1.0 - CAST(n_events AS DOUBLE) / n_risk)', 10)}"
             " AS DECIMAL(16,10))"
             " ELSE CAST(0 AS DECIMAL(16,10)) END"
         ).alias("ln1f"),
@@ -4372,12 +4375,10 @@ _WELCH_MB = "CAST(sum_b AS DOUBLE) / n_b"
 _WELCH_VA = "(CAST(ss_a AS DOUBLE) - CAST(sum_a AS DOUBLE) * sum_a / n_a) / (n_a - 1)"
 _WELCH_VB = "(CAST(ss_b AS DOUBLE) - CAST(sum_b AS DOUBLE) * sum_b / n_b) / (n_b - 1)"
 _WELCH_SE2 = f"({_WELCH_VA} / n_a + {_WELCH_VB} / n_b)"
-_WELCH_T = f"ROUND(({_WELCH_MA} - {_WELCH_MB}) / SQRT({_WELCH_SE2}), 6)"
-_WELCH_DF = (
-    f"ROUND({_WELCH_SE2} * {_WELCH_SE2} / "
-    f"(({_WELCH_VA} / n_a) * ({_WELCH_VA} / n_a) / (n_a - 1) + "
-    f"({_WELCH_VB} / n_b) * ({_WELCH_VB} / n_b) / (n_b - 1)), 6)"
-)
+_WELCH_T = round_half(f'({_WELCH_MA} - {_WELCH_MB}) / SQRT({_WELCH_SE2})', 6)
+_WELCH_DF = round_half(f"{_WELCH_SE2} * {_WELCH_SE2} / "
+                       f"(({_WELCH_VA} / n_a) * ({_WELCH_VA} / n_a) / (n_a - 1) + "
+                       f"({_WELCH_VB} / n_b) * ({_WELCH_VB} / n_b) / (n_b - 1))", 6)
 
 
 @query(
@@ -4522,7 +4523,7 @@ _BH_P = "EXP(-chi2_e6 / 2e6) * (1 + chi2_e6 / 2e6)"
       FROM chi
     )
     SELECT w AS term, CAST(n_t AS BIGINT) AS n_t, chi2_e6,
-           ROUND(p, 9) AS p_value, CAST(rn AS BIGINT) AS rn,
+           {round_half('p', 9)} AS p_value, CAST(rn AS BIGINT) AS rn,
            CASE WHEN rn <= COALESCE(
                   MAX(CASE WHEN p <= 0.05 * rn / m THEN rn END) OVER (), 0)
                 THEN 1 ELSE 0 END AS kept
@@ -4594,7 +4595,7 @@ def benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").alias("term"),
             F.col("n_t").cast("bigint").alias("n_t"),
             "chi2_e6",
-            F.round("p", 9).alias("p_value"),
+            round_half(F.col("p"), 9).alias("p_value"),
             F.col("rn").cast("bigint").alias("rn"),
             F.when(F.col("rn") <= F.coalesce(thr, F.lit(0)), 1)
             .otherwise(0)
@@ -4606,10 +4607,8 @@ def benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NULL (not an error) when a pair is degenerate: min(r,c)=1 has no
 # association to normalize (and Spark's ANSI mode would throw on /0)
-_CRAMERS_V = (
-    "ROUND(SQRT(CAST(chi2_e6 AS DOUBLE) / 1e6"
-    " / (n * NULLIF(LEAST(r_levels, c_levels) - 1, 0))), 6)"
-)
+_CRAMERS_V = round_half("SQRT(CAST(chi2_e6 AS DOUBLE) / 1e6"
+                        " / (n * NULLIF(LEAST(r_levels, c_levels) - 1, 0)))", 6)
 
 
 def _duck_cramers_pair(pair: str, table: str, a: str, b: str) -> str:
@@ -4733,7 +4732,7 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the final ratios are one shared expression over exact terms.
 _ISO_MEAN_NORM2 = "CAST(ss_all AS DOUBLE) / 1e16 / n"
 _ISO_NORM2_OF_MEAN = "CAST(s2 AS DOUBLE) / 1e16 / n / n"
-_ISO_RATIO = f"ROUND(({_ISO_NORM2_OF_MEAN}) / ({_ISO_MEAN_NORM2}), 9)"
+_ISO_RATIO = round_half(f'({_ISO_NORM2_OF_MEAN}) / ({_ISO_MEAN_NORM2})', 9)
 
 
 @query(
@@ -4741,7 +4740,7 @@ _ISO_RATIO = f"ROUND(({_ISO_NORM2_OF_MEAN}) / ({_ISO_MEAN_NORM2}), 9)"
     oracle=f"""
     WITH dims AS (
       SELECT label, u.i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 100000000) AS BIGINT)
+             CAST({round_half('CAST(embedding[u.i] AS DOUBLE) * 100000000', 0)} AS BIGINT)
                AS xi
       FROM embeddings,
            LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) u
@@ -4759,8 +4758,8 @@ _ISO_RATIO = f"ROUND(({_ISO_NORM2_OF_MEAN}) / ({_ISO_MEAN_NORM2}), 9)"
     ),
     n_tab AS (SELECT label, COUNT(*) AS n FROM embeddings GROUP BY label)
     SELECT l.label, CAST(n.n AS BIGINT) AS n,
-           ROUND({_ISO_MEAN_NORM2}, 9) AS mean_norm2,
-           ROUND({_ISO_NORM2_OF_MEAN}, 9) AS norm2_of_mean,
+           {round_half(_ISO_MEAN_NORM2, 9)} AS mean_norm2,
+           {round_half(_ISO_NORM2_OF_MEAN, 9)} AS norm2_of_mean,
            {_ISO_RATIO} AS isotropy_defect
     FROM (SELECT label, CAST(s2 AS DOUBLE) AS s2,
                  CAST(ss_all AS DOUBLE) AS ss_all FROM per_label) l
@@ -4791,7 +4790,7 @@ def embedding_isotropy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         "dim",
-        F.expr("CAST(ROUND(CAST(x AS DOUBLE) * 100000000) AS BIGINT)").alias("xi"),
+        F.expr(f"CAST({round_half('CAST(x AS DOUBLE) * 100000000', 0)} AS BIGINT)").alias("xi"),
     )
     per_dim = dims.groupBy("label", "dim").agg(
         F.sum("xi").alias("s"),
@@ -4812,8 +4811,8 @@ def embedding_isotropy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "label",
             "CAST(n AS BIGINT) AS n",
-            f"ROUND({_ISO_MEAN_NORM2}, 9) AS mean_norm2",
-            f"ROUND({_ISO_NORM2_OF_MEAN}, 9) AS norm2_of_mean",
+            f"{round_half(_ISO_MEAN_NORM2, 9)} AS mean_norm2",
+            f"{round_half(_ISO_NORM2_OF_MEAN, 9)} AS norm2_of_mean",
             f"{_ISO_RATIO} AS isotropy_defect",
         )
         .orderBy("label")
@@ -4822,10 +4821,10 @@ def embedding_isotropy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_mahalanobis_outliers",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT vec_id, label, u.i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[u.i] AS DOUBLE) * 100000000) AS BIGINT)
+             CAST({round_half('CAST(embedding[u.i] AS DOUBLE) * 100000000', 0)} AS BIGINT)
                AS xi
       FROM embeddings,
            LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) u
@@ -4872,7 +4871,7 @@ def embedding_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFram
         "vec_id",
         "label",
         "dim",
-        F.expr("CAST(ROUND(CAST(x AS DOUBLE) * 100000000) AS BIGINT)").alias("xi"),
+        F.expr(f"CAST({round_half('CAST(x AS DOUBLE) * 100000000', 0)} AS BIGINT)").alias("xi"),
     )
     g = dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4896,10 +4895,8 @@ def embedding_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFram
 # Variance ratio from exact terms: block-level integer sums; the
 # float VR derives from (n, s, ss) of the k-blocks against the k=1
 # row by one shared expression.
-_VR = (
-    "ROUND((ss_b / n_b - (CAST(s_b AS DOUBLE) / n_b) * (CAST(s_b AS DOUBLE) / n_b))"
-    " / (k * (ss1 / n1 - (CAST(s1 AS DOUBLE) / n1) * (CAST(s1 AS DOUBLE) / n1))), 6)"
-)
+_VR = round_half("(ss_b / n_b - (CAST(s_b AS DOUBLE) / n_b) * (CAST(s_b AS DOUBLE) / n_b))"
+                 " / (k * (ss1 / n1 - (CAST(s1 AS DOUBLE) / n1) * (CAST(s1 AS DOUBLE) / n1)))", 6)
 
 
 @query(
@@ -5056,12 +5053,12 @@ _BURST_CV = f"SQRT({_BURST_VAR}) / ({_BURST_MEAN})"
     terms AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_gaps,
              CAST(SUM(gap) AS BIGINT) AS sum_gap,
-             CAST(SUM(CAST(gap AS HUGEINT) * gap) AS DOUBLE) AS ss_gap
+             {dec_double('SUM(CAST(gap AS HUGEINT) * gap)')} AS ss_gap
       FROM gaps WHERE gap IS NOT NULL GROUP BY 1
     )
     SELECT event_type, n_gaps, sum_gap, ss_gap,
-           ROUND({_BURST_CV}, 6) AS cv,
-           ROUND(({_BURST_CV} - 1) / ({_BURST_CV} + 1), 6) AS burstiness
+           {round_half(_BURST_CV, 6)} AS cv,
+           {round_half(f'({_BURST_CV} - 1) / ({_BURST_CV} + 1)', 6)} AS burstiness
     FROM terms
     ORDER BY event_type
     """,
@@ -5079,7 +5076,7 @@ def interarrival_burstiness_terms(spark: SparkSession, sf_dir: str) -> DataFrame
     parallel partitions), never per type (5 corpus-sized partitions
     would serialize the sort at scale); the type roll-up is a
     map-side-combinable sum of BIGINT gap terms (ss 128-bit-widened,
-    exposed as DOUBLE); cv and B derive by one shared expression."""
+    exposed as DOUBLE by dec_double); cv and B derive by one shared expression."""
     from instructions_mr_spark.queries._util import ts_epoch_seconds
 
     e = t(spark, sf_dir, "events").select(
@@ -5094,17 +5091,15 @@ def interarrival_burstiness_terms(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_gaps"),
             F.sum("gap").cast("bigint").alias("sum_gap"),
-            F.sum(F.expr("CAST(gap AS DECIMAL(38,0)) * gap"))
-            .cast("double")
-            .alias("ss_gap"),
+            F.expr(dec_double("SUM(CAST(gap AS DECIMAL(38,0)) * gap)")).alias("ss_gap"),
         )
         .selectExpr(
             "event_type",
             "n_gaps",
             "sum_gap",
             "ss_gap",
-            f"ROUND({_BURST_CV}, 6) AS cv",
-            f"ROUND(({_BURST_CV} - 1) / ({_BURST_CV} + 1), 6) AS burstiness",
+            f"{round_half(_BURST_CV, 6)} AS cv",
+            f"{round_half(f'({_BURST_CV} - 1) / ({_BURST_CV} + 1)', 6)} AS burstiness",
         )
         .orderBy("event_type")
     )
@@ -5418,15 +5413,15 @@ _HILL_K = 100
     ),
     xk AS (SELECT c AS c_k FROM topk WHERE rn = {_HILL_K + 1}),
     lnsum AS (
-      SELECT CAST(SUM(CAST(ROUND(LN(CAST(t.c AS DOUBLE) / xk.c_k), 10)
+      SELECT CAST(SUM(CAST({round_half('LN(CAST(t.c AS DOUBLE) / xk.c_k)', 10)}
                            AS DECIMAL(38,10))) AS DOUBLE) AS s,
              COUNT(*) AS k
       FROM topk t, xk WHERE t.rn <= {_HILL_K}
     )
     SELECT CAST(k AS BIGINT) AS k,
            CAST((SELECT c_k FROM xk) AS BIGINT) AS threshold_cents,
-           ROUND(s / k, 9) AS mean_log_excess,
-           ROUND(k / s, 6) AS hill_alpha
+           {round_half('s / k', 9)} AS mean_log_excess,
+           {round_half('k / s', 6)} AS hill_alpha
     FROM lnsum
     """,
 )
@@ -5436,7 +5431,7 @@ def hill_tail_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha < 2 means infinite variance (means and A/B tests on this
     metric are unstable; use medians), alpha > 3 means a tame tail.
     The one-number answer to 'can I trust the mean of this revenue
-    column'.  Log cells cross the engines as ROUND(.,10) DECIMALs
+    column'.  Log cells cross the engines as 10-digit round_half DECIMALs
     (the entropy-cell idiom) so the k-term sum is order-free; the
     top-(k+1) election is a TakeOrdered, never a full sort.
 
@@ -5461,7 +5456,7 @@ def hill_tail_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(xk))
         .agg(
             F.expr(
-                "CAST(SUM(CAST(ROUND(LN(CAST(c AS DOUBLE) / c_k), 10)"
+                f"CAST(SUM(CAST({round_half('LN(CAST(c AS DOUBLE) / c_k)', 10)}"
                 " AS DECIMAL(38,10))) AS DOUBLE)"
             ).alias("s"),
             F.count(F.lit(1)).alias("k"),
@@ -5471,12 +5466,12 @@ def hill_tail_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lnsum.selectExpr(
         "CAST(k AS BIGINT) AS k",
         "CAST(c_k AS BIGINT) AS threshold_cents",
-        "ROUND(s / k, 9) AS mean_log_excess",
-        "ROUND(k / s, 6) AS hill_alpha",
+        f"{round_half('s / k', 9)} AS mean_log_excess",
+        f"{round_half('k / s', 6)} AS hill_alpha",
     )
 
 
-# PSI cells cross as ROUND(.,10) DECIMALs (entropy-cell idiom); p and
+# PSI cells cross as 8-digit round_half DECIMALs (entropy-cell idiom); p and
 # q are Laplace-smoothed (+1 per bucket) so empty cells never divide
 # or log zero.
 # explicit DOUBLE casts: a bare 1.0 literal is DECIMAL to Spark's
@@ -5485,7 +5480,7 @@ def hill_tail_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSI_P = "((CAST(cs AS DOUBLE) + 1) / (ns + 10))"
 _PSI_Q = "((CAST(cc AS DOUBLE) + 1) / (nc + 10))"
 _PSI_CELL = (
-    f"CAST(ROUND(({_PSI_P} - {_PSI_Q}) * LN({_PSI_P} / {_PSI_Q}), 8)"
+    f"CAST({round_half(f'({_PSI_P} - {_PSI_Q}) * LN({_PSI_P} / {_PSI_Q})', 8)}"
     " AS DECIMAL(38,8))"
 )
 
@@ -5508,9 +5503,9 @@ _PSI_CELL = (
       nc_t t
     )
     SELECT source,
-           CAST(ROUND(SUM({_PSI_CELL}), 6) AS DOUBLE) AS psi,
+           {round_half(f'CAST(SUM({_PSI_CELL}) AS DOUBLE)', 6)} AS psi,
            CAST(SUM(cs) AS BIGINT) AS n_docs,
-           CAST(CASE WHEN ROUND(SUM({_PSI_CELL}), 6) >= 0.2
+           CAST(CASE WHEN {round_half(f'CAST(SUM({_PSI_CELL}) AS DOUBLE)', 6)} >= 0.2
                 THEN 1 ELSE 0 END AS BIGINT) AS drift_alert
     FROM grid GROUP BY source
     ORDER BY source
@@ -5525,9 +5520,9 @@ def drift_psi_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric KL, PSI is the symmetric-by-construction variant risk
     teams actually threshold on.  Laplace-smoothed (+1) so a source
     missing a bucket contributes a finite penalty instead of a log of
-    zero; cells cross as ROUND(.,8) DECIMALs — coarse enough that a
-    1-ulp libm LN disagreement (~1e-16) can never flip a cell, which
-    a first cut at 10 decimals measurably did.
+    zero; cells cross as 8-digit DECIMALs.  A 1-ulp libm LN difference
+    still flips a cell within an ulp of a rounding boundary; 8 digits
+    make that rarer than the 10 of a first cut, which flipped one.
 
     Scale shape: one (source, bucket) count over the scan (10 fixed
     length buckets); the grid and the PSI roll-up are
@@ -5549,7 +5544,7 @@ def drift_psi_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         grid.groupBy("source")
         .agg(
-            F.round(F.sum(F.expr(_PSI_CELL)), 6).cast("double").alias("psi"),
+            round_half(F.sum(F.expr(_PSI_CELL)).cast("double"), 6).alias("psi"),
             F.sum("cs").cast("bigint").alias("n_docs"),
         )
         .selectExpr(
@@ -5563,14 +5558,14 @@ def drift_psi_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Quantize the BASIS, not the product: ROUND(COS(theta), 4) as an
-# exact DECIMAL(6,4) — a 1-ulp libm cos() disagreement cannot flip a
-# 4-decimal rounding (margin ~1e-12 vs ulp ~1e-16), and BIGINT cents
+# Quantize the BASIS, not the product: COS(theta) rounded to 4 digits
+# as an exact DECIMAL(6,4) (a 1-ulp libm cos() difference still flips a
+# value within an ulp of a rounding boundary), and BIGINT cents
 # times an exact decimal is exact, so the regression sums are
 # order-free.  (Rounding the PRODUCT instead leaves ~1e-7 ulp noise
 # against a 5e-5 boundary — a measurable flip risk at 2,500 cells.)
-_FOURIER_C = "CAST(ROUND(COS(2 * PI() * doy / 365), 4) AS DECIMAL(6,4))"
-_FOURIER_S = "CAST(ROUND(SIN(2 * PI() * doy / 365), 4) AS DECIMAL(6,4))"
+_FOURIER_C = f"CAST({round_half('COS(2 * PI() * doy / 365)', 4)} AS DECIMAL(6,4))"
+_FOURIER_S = f"CAST({round_half('SIN(2 * PI() * doy / 365)', 4)} AS DECIMAL(6,4))"
 
 
 @query(
@@ -5594,11 +5589,11 @@ _FOURIER_S = "CAST(ROUND(SIN(2 * PI() * doy / 365), 4) AS DECIMAL(6,4))"
       FROM basis
     )
     SELECT n, sy,
-           ROUND(2 * syc / n, 4) AS a1_cents,
-           ROUND(2 * sys / n, 4) AS b1_cents,
-           ROUND(SQRT((2 * syc / n) * (2 * syc / n)
-                      + (2 * sys / n) * (2 * sys / n)), 4) AS amplitude_cents,
-           ROUND(ATAN2(2 * sys / n, 2 * syc / n), 6) AS phase_rad
+           {round_half('2 * syc / n', 4)} AS a1_cents,
+           {round_half('2 * sys / n', 4)} AS b1_cents,
+           {round_half('SQRT((2 * syc / n) * (2 * syc / n)'
+                      ' + (2 * sys / n) * (2 * sys / n))', 4)} AS amplitude_cents,
+           {round_half('ATAN2(2 * sys / n, 2 * syc / n)', 6)} AS phase_rad
     FROM sums
     """,
 )
@@ -5638,11 +5633,11 @@ def fourier_seasonality_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.selectExpr(
         "n",
         "sy",
-        "ROUND(2 * syc / n, 4) AS a1_cents",
-        "ROUND(2 * sys / n, 4) AS b1_cents",
-        "ROUND(SQRT((2 * syc / n) * (2 * syc / n)"
-        " + (2 * sys / n) * (2 * sys / n)), 4) AS amplitude_cents",
-        "ROUND(ATAN2(2 * sys / n, 2 * syc / n), 6) AS phase_rad",
+        f"{round_half('2 * syc / n', 4)} AS a1_cents",
+        f"{round_half('2 * sys / n', 4)} AS b1_cents",
+        round_half("SQRT((2 * syc / n) * (2 * syc / n) + (2 * sys / n) * (2 * sys / n))", 4)
+        + " AS amplitude_cents",
+        f"{round_half('ATAN2(2 * sys / n, 2 * syc / n)', 6)} AS phase_rad",
     )
 
 

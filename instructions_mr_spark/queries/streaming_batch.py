@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import round_half
 from instructions_mr_spark.queries._util import DEC_VALUE, sum_d, t, ts_epoch_micros
 from instructions_mr_spark.registry import query
 
@@ -280,7 +281,7 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_anomaly_zscore",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
              event_type, COUNT(*) AS c
@@ -290,12 +291,12 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counts GROUP BY event_type
     )
     SELECT c.window_start, c.event_type, c.c AS n_events,
-           ROUND((c.c - CAST(s.s1 AS DOUBLE) / s.n_w)
-                 / sqrt((s.s2 - CAST(s.s1 AS DOUBLE) * s.s1 / s.n_w)
-                        / (s.n_w - 1)), 6) AS z,
-           ABS(ROUND((c.c - CAST(s.s1 AS DOUBLE) / s.n_w)
-                 / sqrt((s.s2 - CAST(s.s1 AS DOUBLE) * s.s1 / s.n_w)
-                        / (s.n_w - 1)), 6)) >= 2.0 AS anomalous
+           {round_half('(c.c - CAST(s.s1 AS DOUBLE) / s.n_w)'
+                 ' / sqrt((s.s2 - CAST(s.s1 AS DOUBLE) * s.s1 / s.n_w)'
+                        ' / (s.n_w - 1))', 6)} AS z,
+           ABS({round_half('(c.c - CAST(s.s1 AS DOUBLE) / s.n_w)'
+                 ' / sqrt((s.s2 - CAST(s.s1 AS DOUBLE) * s.s1 / s.n_w)'
+                        ' / (s.n_w - 1))', 6)}) >= 2.0 AS anomalous
     FROM counts c JOIN stats s USING (event_type)
     WHERE s.n_w > 1
       AND (s.s2 - CAST(s.s1 AS DOUBLE) * s.s1 / s.n_w) > 0
@@ -311,7 +312,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float stability: the per-type moments are INTEGER sums (count,
     sum, sum-of-squares) — order-free by construction; the z formula
     is then a per-row function of identical integers on both engines,
-    so ROUND(...,6) is exact.  Scale shape: one window-count aggregate,
+    so the 6-digit rounding is identical.  Scale shape: one window-count aggregate,
     a type-keyed reaggregate (tiny, broadcasts back), no second corpus
     pass."""
     e = t(spark, sf_dir, "events")
@@ -329,7 +330,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_w") > 1)
         & (F.col("s2") - F.col("s1").cast("double") * F.col("s1") / F.col("n_w") > 0)
     )
-    z = F.round(
+    z = round_half(
         (F.col("c") - F.col("s1").cast("double") / F.col("n_w"))
         / F.sqrt(
             (F.col("s2") - F.col("s1").cast("double") * F.col("s1") / F.col("n_w"))

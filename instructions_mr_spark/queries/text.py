@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from instructions_mr_spark.functions import duck_hash, spark_hash
+from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
 from instructions_mr_spark.operators.arrow_map import map_columns
 from instructions_mr_spark.queries._util import (
     kernel_floor,
@@ -26,11 +26,11 @@ from instructions_mr_spark.registry import query
 
 @query(
     "text_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            LENGTH(text) AS n_char,
            len(string_split(text, ' ')) AS n_tokens,
-           ROUND(CAST(LENGTH(text) AS DOUBLE) / len(string_split(text, ' ')), 6) AS chars_per_token,
+           {round_half("CAST(LENGTH(text) AS DOUBLE) / len(string_split(text, ' '))", 6)} AS chars_per_token,
            LENGTH(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
            LENGTH(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
     FROM documents
@@ -43,7 +43,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.length("text").cast("bigint").alias("n_char"),
         toks.alias("n_tokens"),
-        F.round(F.length("text").cast("double") / toks, 6).alias("chars_per_token"),
+        round_half(F.length("text").cast("double") / toks, 6).alias("chars_per_token"),
         F.length(F.regexp_replace("text", r"[^.,;:!?]", "")).cast("bigint").alias("n_punct"),
         F.length(F.regexp_replace("text", r"[^0-9]", "")).cast("bigint").alias("n_digit"),
     )
@@ -157,18 +157,17 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_score",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           ROUND(
-             LEAST(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-             + (1.0 - LEAST(CAST(LENGTH(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-                            / LENGTH(text), 1.0)) * 0.3
-             + CASE WHEN len(string_split(text, ' ')) > 0
-                    THEN CAST(len(list_filter(string_split(lower(text), ' '),
-                                  w -> w IN ('the','and','of','to','a','in','is'))) AS DOUBLE)
-                         / len(string_split(text, ' '))
-                    ELSE 0 END * 0.2,
-           6) AS quality
+           {round_half(
+             "LEAST(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5"
+             " + (1.0 - LEAST(CAST(LENGTH(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)"
+                            " / LENGTH(text), 1.0)) * 0.3"
+             " + CASE WHEN len(string_split(text, ' ')) > 0"
+                    " THEN CAST(len(list_filter(string_split(lower(text), ' '),"
+                                  " w -> w IN ('the','and','of','to','a','in','is'))) AS DOUBLE)"
+                         " / len(string_split(text, ' '))"
+                    " ELSE 0 END * 0.2", 6)} AS quality
     FROM documents
     """,
 )
@@ -188,7 +187,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = F.size(F.expr("FILTER(words, w -> w IN ('the','and','of','to','a','in','is'))"))
     return d.select(
         "doc_id",
-        F.round(
+        round_half(
             F.least(toks / 100, F.lit(1.0)) * 0.5
             + (F.lit(1.0) - F.least(punct / F.length("text"), F.lit(1.0))) * 0.3
             + F.when(toks > 0, stop.cast("double") / toks).otherwise(0.0) * 0.2,
@@ -361,7 +360,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tf_idf_top_terms",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
       FROM documents
@@ -374,7 +373,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents
     ), scored AS (
       SELECT t.doc_id, t.w,
-             ROUND(t.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) AS tfidf
+             {round_half('t.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df)', 6)} AS tfidf
       FROM terms t JOIN df ON t.w = df.w CROSS JOIN n
     )
     SELECT doc_id, w, tfidf FROM (
@@ -404,7 +403,7 @@ def tf_idf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "w",
-            F.round(
+            round_half(
                 F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 6
             ).alias("tfidf"),
         )
@@ -487,16 +486,16 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mixture_weights",
-    oracle="""
+    oracle=f"""
     WITH per_source AS (
       SELECT source, COUNT(*) AS n_docs,
              CAST(SUM(n_chars) AS BIGINT) AS n_chars_total
       FROM documents GROUP BY source
     ), tot AS (SELECT SUM(n_docs) AS n FROM per_source)
     SELECT source, n_docs, n_chars_total,
-           ROUND(CAST(n_docs AS DOUBLE) / tot.n, 6) AS actual_share,
-           ROUND((1.0 / (SELECT COUNT(*) FROM per_source))
-                 / (CAST(n_docs AS DOUBLE) / tot.n), 6) AS upsample_factor
+           {round_half('CAST(n_docs AS DOUBLE) / tot.n', 6)} AS actual_share,
+           {round_half('(1.0 / (SELECT COUNT(*) FROM per_source))'
+                 ' / (CAST(n_docs AS DOUBLE) / tot.n)', 6)} AS upsample_factor
     FROM per_source, tot
     """,
 )
@@ -517,8 +516,8 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_chars_total",
-        F.round(F.col("n_docs").cast("double") / F.col("n"), 6).alias("actual_share"),
-        F.round(
+        round_half(F.col("n_docs").cast("double") / F.col("n"), 6).alias("actual_share"),
+        round_half(
             (F.lit(1.0) / F.col("n_sources"))
             / (F.col("n_docs").cast("double") / F.col("n")),
             6,
@@ -528,15 +527,15 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_repetition",
-    oracle="""
+    oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
     base AS (
       SELECT doc_id,
              len(words) AS n_words,
-             ROUND(1.0 - CAST(len(list_distinct(words)) AS DOUBLE) / len(words), 6)
+             {round_half('1.0 - CAST(len(list_distinct(words)) AS DOUBLE) / len(words)', 6)}
                AS dup_word_frac,
-             ROUND(CAST(list_aggregate(list_transform(words, x -> length(x)), 'sum')
-                        AS DOUBLE) / len(words), 6) AS mean_word_len,
+             {round_half("CAST(list_aggregate(list_transform(words, x -> length(x)), 'sum')"
+                        " AS DOUBLE) / len(words)", 6)} AS mean_word_len,
              list_transform(range(1, len(words)), i -> words[i] || ' ' || words[i+1])
                AS bigrams
       FROM w
@@ -548,7 +547,7 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     top AS (SELECT doc_id, MAX(c) AS top_c, SUM(c) AS tot FROM bg GROUP BY doc_id)
     SELECT b.doc_id, b.n_words, b.dup_word_frac, b.mean_word_len,
-           ROUND(COALESCE(CAST(top.top_c AS DOUBLE) / top.tot, 0.0), 6)
+           {round_half('COALESCE(CAST(top.top_c AS DOUBLE) / top.tot, 0.0)', 6)}
              AS top_bigram_frac
     FROM base b LEFT JOIN top ON b.doc_id = top.doc_id
     """,
@@ -579,12 +578,12 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "words",
         n_words.alias("n_words"),
-        F.round(
+        round_half(
             F.lit(1.0)
             - F.size(F.array_distinct("words")).cast("double") / n_words.cast("double"),
             6,
         ).alias("dup_word_frac"),
-        F.round(sum_len.cast("double") / n_words.cast("double"), 6).alias(
+        round_half(sum_len.cast("double") / n_words.cast("double"), 6).alias(
             "mean_word_len"
         ),
     )
@@ -607,7 +606,7 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "dup_word_frac",
         "mean_word_len",
-        F.round(
+        round_half(
             F.coalesce(F.col("top_c").cast("double") / F.col("tot"), F.lit(0.0)), 6
         ).alias("top_bigram_frac"),
     )
@@ -615,7 +614,7 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "boilerplate_ngrams",
-    oracle="""
+    oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
     g AS (
       SELECT doc_id,
@@ -627,8 +626,8 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            COUNT(*) AS n_grams,
            CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-           ROUND(CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 6) AS shared_frac
+           {round_half('CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE)'
+                 ' / COUNT(*)', 6)} AS shared_frac
     FROM g JOIN cnt USING (gram) GROUP BY doc_id
     """,
 )
@@ -662,9 +661,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_grams"),
             F.sum(shared).cast("bigint").alias("n_shared"),
-            F.round(
-                F.sum(shared).cast("double") / F.count("*"), 6
-            ).alias("shared_frac"),
+            round_half(F.sum(shared).cast("double") / F.count("*"), 6).alias("shared_frac"),
         )
     )
 
@@ -689,11 +686,11 @@ _BM25_TERMS = ("spark", "table", "query")
       FROM tf
     )
     SELECT doc_id,
-           ROUND({" + ".join(
+           {round_half(" + ".join(
              f"(ln((g.n - g.df_{t} + 0.5) / (g.df_{t} + 0.5) + 1.0) * "
              f"(tf.tf_{t} * ({_BM25_K1} + 1.0)) / "
              f"(tf.tf_{t} + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * tf.dl / g.avgdl)))"
-             for t in _BM25_TERMS)}, 6) AS bm25
+             for t in _BM25_TERMS), 6)} AS bm25
     FROM tf CROSS JOIN g
     ORDER BY bm25 DESC, doc_id
     LIMIT 10
@@ -743,7 +740,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         score = part if score is None else score + part
     return (
         tf.crossJoin(F.broadcast(g))
-        .select("doc_id", F.round(score, 6).alias("bm25"))
+        .select("doc_id", round_half(score, 6).alias("bm25"))
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(10)
     )
@@ -751,10 +748,10 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_filter_gopher",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, n_words,
-           ROUND(mean_word_len, 6) AS mean_word_len,
-           ROUND(alpha_word_ratio, 6) AS alpha_word_ratio,
+           {round_half('mean_word_len', 6)} AS mean_word_len,
+           {round_half('alpha_word_ratio', 6)} AS alpha_word_ratio,
            (n_words BETWEEN 50 AND 100000
             AND mean_word_len BETWEEN 3 AND 10
             AND alpha_word_ratio >= 0.8) AS keep
@@ -795,8 +792,8 @@ def quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         n_words.alias("n_words"),
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(alpha_ratio, 6).alias("alpha_word_ratio"),
+        round_half(mean_wl, 6).alias("mean_word_len"),
+        round_half(alpha_ratio, 6).alias("alpha_word_ratio"),
         keep.alias("keep"),
     )
 
@@ -840,7 +837,7 @@ _SPARK_GRAM_H60 = spark_hash("array_join(slice(toks, i, 8), ' ')", 29, hex_digit
     )
     SELECT t.doc_id, len(t.toks) AS n_tokens,
            CAST(COALESCE(c.covered, 0) AS BIGINT) AS covered_tokens,
-           ROUND(CAST(COALESCE(c.covered, 0) AS DOUBLE) / len(t.toks), 6)
+           {round_half('CAST(COALESCE(c.covered, 0) AS DOUBLE) / len(t.toks)', 6)}
              AS coverage_frac
     FROM toked t LEFT JOIN cov c ON t.doc_id = c.doc_id
     """,
@@ -893,7 +890,7 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.size("toks").cast("long").alias("n_tokens"),
             F.coalesce(F.col("covered"), F.lit(0)).alias("covered_tokens"),
-            F.round(
+            round_half(
                 F.coalesce(F.col("covered"), F.lit(0)).cast("double")
                 / F.size("toks"),
                 6,
@@ -1161,12 +1158,12 @@ def dedup_span_cut_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_unigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
     ), vocab AS (
-      SELECT w, CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE)
-                              / (SELECT COUNT(*) FROM words)), 4)
+      SELECT w, CAST({round_half('LN(CAST(COUNT(*) AS DOUBLE)'
+                              ' / (SELECT COUNT(*) FROM words))', 4)}
                      AS DECIMAL(18,4)) AS logp
       FROM words GROUP BY w
     )
@@ -1202,7 +1199,7 @@ def quality_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "w",
             F.expr(
-                "CAST(ROUND(LN(CAST(cnt AS DOUBLE) / n_total), 4)"
+                f"CAST({round_half('LN(CAST(cnt AS DOUBLE) / n_total)', 4)}"
                 " AS DECIMAL(18,4))"
             ).alias("logp"),
         )
@@ -1242,9 +1239,9 @@ def _dsir_oracle() -> str:
       FROM hashed
     ), ratio AS (
       SELECT bkt,
-             CAST(ROUND(LN((COUNT(*) FILTER (WHERE lang = 'en') + 1.0)
-                             / (tot.n_t + {b}))
-                        - LN((COUNT(*) + 1.0) / (tot.n_r + {b})), 4)
+             CAST({round_half("LN((COUNT(*) FILTER (WHERE lang = 'en') + 1.0)"
+                             f" / (tot.n_t + {b}))"
+                        f" - LN((COUNT(*) + 1.0) / (tot.n_r + {b}))", 4)}
                   AS DECIMAL(18,4)) AS lr
       FROM hashed, tot GROUP BY bkt, tot.n_t, tot.n_r
     )
@@ -1308,8 +1305,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .selectExpr(
             "bkt",
-            f"CAST(ROUND(LN((c_t + 1.0) / (n_t + {b}))"
-            f" - LN((c_r + 1.0) / (n_r + {b})), 4) AS DECIMAL(18,4)) AS lr",
+            "CAST("
+            + round_half(f"LN((c_t + 1.0) / (n_t + {b})) - LN((c_r + 1.0) / (n_r + {b}))", 4)
+            + " AS DECIMAL(18,4)) AS lr",
         )
     )
     return (
@@ -1341,7 +1339,7 @@ _PMI_MIN_COUNT = 3
       SELECT w2, SUM(c12) AS c2 FROM pairs GROUP BY w2
     ), tot AS (SELECT SUM(c12) AS n FROM pairs)
     SELECT p.w1, p.w2, p.c12,
-           ROUND(LN(CAST(p.c12 AS DOUBLE) * tot.n / (l.c1 * r.c2)), 6) AS pmi
+           {round_half('LN(CAST(p.c12 AS DOUBLE) * tot.n / (l.c1 * r.c2))', 6)} AS pmi
     FROM pairs p
     JOIN lefts l USING (w1) JOIN rights r USING (w2), tot
     WHERE p.c12 >= {_PMI_MIN_COUNT}
@@ -1358,7 +1356,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     table itself (vocab-sized reaggregates, no second corpus scan) and
     BROADCAST back onto it with the 1-row total.  PMI is a pure per-row
     function of exact integer counts — no float accumulation, so the
-    ROUND(...,6) is engine-stable by construction."""
+    6-digit round_half is engine-stable up to libm's ln."""
     d = t(spark, sf_dir, "documents")
     pairs = (
         d.select(F.split("text", " ").alias("words"))
@@ -1395,7 +1393,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w1",
             "w2",
             "c12",
-            F.round(
+            round_half(
                 F.log(F.col("c12").cast("double") * F.col("n") / (F.col("c1") * F.col("c2"))),
                 6,
             ).alias("pmi"),
@@ -1462,7 +1460,7 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_bigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH grams AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(words)),
@@ -1476,7 +1474,7 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), vocab AS (SELECT COUNT(DISTINCT w2) AS v FROM pairs),
     scored AS (
       SELECT p.w1, p.w2,
-             CAST(ROUND(LN((p.c12 + 1.0) / (l.c1 + vocab.v)), 4)
+             CAST({round_half('LN((p.c12 + 1.0) / (l.c1 + vocab.v))', 4)}
                   AS DECIMAL(18,4)) AS logp
       FROM pairs p JOIN lefts l USING (w1), vocab
     )
@@ -1540,7 +1538,7 @@ def quality_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "w1",
             "w2",
-            "CAST(ROUND(LN((c12 + 1.0) / (c1 + v)), 4) AS DECIMAL(18,4)) AS logp",
+            f"CAST({round_half('LN((c12 + 1.0) / (c1 + v))', 4)} AS DECIMAL(18,4)) AS logp",
         )
     )
     return (
@@ -1618,12 +1616,12 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_bucket_shares",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
     ), vocab AS (
-      SELECT w, CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE)
-                              / (SELECT COUNT(*) FROM words)), 4)
+      SELECT w, CAST({round_half('LN(CAST(COUNT(*) AS DOUBLE)'
+                              ' / (SELECT COUNT(*) FROM words))', 4)}
                      AS DECIMAL(18,4)) AS logp
       FROM words GROUP BY w
     ), scored AS (
@@ -2024,7 +2022,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "zipf_vocab_fit",
-    oracle="""
+    oracle=f"""
     WITH wc AS (
       SELECT word, COUNT(*) AS c
       FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -2044,8 +2042,8 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM wc w JOIN base b USING (c)
     ),
     pts AS (
-      SELECT CAST(ROUND(ln(CAST(r AS DOUBLE)), 10) AS DECIMAL(18,10)) AS x,
-             CAST(ROUND(ln(CAST(c AS DOUBLE)), 10) AS DECIMAL(18,10)) AS y
+      SELECT CAST({round_half('ln(CAST(r AS DOUBLE))', 10)} AS DECIMAL(18,10)) AS x,
+             CAST({round_half('ln(CAST(c AS DOUBLE))', 10)} AS DECIMAL(18,10)) AS y
       FROM ranked
     ),
     s AS (
@@ -2054,15 +2052,15 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pts
     )
     SELECT CAST(n AS BIGINT) AS n_vocab,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
+           {round_half('(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))'
+                 ' / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))', 6)}
              AS slope,
-           ROUND((CAST(sy AS DOUBLE) - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / n, 6)
+           {round_half('(CAST(sy AS DOUBLE) - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))'
+                 ' / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / n', 6)}
              AS intercept,
-           ROUND(POWER(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE), 2)
-                 / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                    * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+           {round_half('POWER(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE), 2)'
+                 ' / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))'
+                    ' * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))', 6)}
              AS r2
     FROM s
     """,
@@ -2082,9 +2080,9 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     word then ranks within its frequency class only (vocab-sized
     exchange partitioned BY COUNT VALUE, deterministic word
     tie-break).  The regression sums are DECIMAL-exact over
-    10-decimal-rounded logs (the column_entropy convention: rounding
-    absorbs sub-ulp libm differences between engines), so both
-    engines divide identical numbers once at the end."""
+    10-decimal-rounded logs (the column_entropy convention), so both
+    engines divide the same numbers once at the end, short of a 1-ulp
+    libm flip of a log within an ulp of a rounding boundary."""
     d = t(spark, sf_dir, "documents")
     wc = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -2107,8 +2105,8 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c", (F.col("rank_base") + F.row_number().over(win)).alias("r")
     )
     pts = ranked.select(
-        F.expr("CAST(ROUND(ln(CAST(r AS DOUBLE)), 10) AS DECIMAL(18,10))").alias("x"),
-        F.expr("CAST(ROUND(ln(CAST(c AS DOUBLE)), 10) AS DECIMAL(18,10))").alias("y"),
+        F.expr(f"CAST({round_half('ln(CAST(r AS DOUBLE))', 10)} AS DECIMAL(18,10))").alias("x"),
+        F.expr(f"CAST({round_half('ln(CAST(c AS DOUBLE))', 10)} AS DECIMAL(18,10))").alias("y"),
     )
     s = pts.agg(
         F.count("*").alias("n"),
@@ -2120,16 +2118,16 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.selectExpr(
         "CAST(n AS BIGINT) AS n_vocab",
-        "ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)"
-        " AS slope",
-        "ROUND((CAST(sy AS DOUBLE) - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / n, 6)"
-        " AS intercept",
-        "ROUND(POWER(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE), 2)"
-        " / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-        " * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)"
-        " AS r2",
+        round_half("(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+                   " / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))", 6)
+        + " AS slope",
+        round_half("(CAST(sy AS DOUBLE) - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+                   " / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / n", 6)
+        + " AS intercept",
+        round_half("POWER(n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE), 2)"
+                   " / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
+                   " * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))", 6)
+        + " AS r2",
     )
 
 
@@ -3432,10 +3430,8 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus has no sentence punctuation, so each DOCUMENT is the
 # sentence unit (documented proxy).  One shared expression derives
 # the floats from exact BIGINT sums.
-_FLESCH = (
-    "ROUND(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_docs)"
-    " - 84.6 * (CAST(n_syll AS DOUBLE) / n_words), 6)"
-)
+_FLESCH = round_half("206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_docs)"
+                     " - 84.6 * (CAST(n_syll AS DOUBLE) / n_words)", 6)
 
 
 @query(
@@ -3455,7 +3451,7 @@ _FLESCH = (
       FROM per_doc GROUP BY source
     )
     SELECT source, n_docs, n_words, n_syll,
-           ROUND(CAST(n_syll AS DOUBLE) / n_words, 6) AS syll_per_word,
+           {round_half('CAST(n_syll AS DOUBLE) / n_words', 6)} AS syll_per_word,
            {_FLESCH} AS flesch_proxy
     FROM agg
     ORDER BY source
@@ -3494,18 +3490,18 @@ def readability_proxy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "n_words",
             "n_syll",
-            "ROUND(CAST(n_syll AS DOUBLE) / n_words, 6) AS syll_per_word",
+            f"{round_half('CAST(n_syll AS DOUBLE) / n_words', 6)} AS syll_per_word",
             f"{_FLESCH} AS flesch_proxy",
         )
         .orderBy("source")
     )
 
 
-# Entropy cells cross the engines as ROUND(p*log2(p), 10) DECIMALs
-# (the column_entropy idiom): the per-cell double is rounded far below
-# any libm 1-ulp disagreement, and the SUM is decimal — order-free.
+# Entropy cells cross the engines as p*log2(p) rounded to 10 digits,
+# as DECIMALs (the column_entropy idiom), so the SUM is order-free; a
+# 1-ulp libm difference still flips a cell at a rounding boundary.
 _ENT_CELL = (
-    "CAST(ROUND((CAST(c AS DOUBLE) / n) * log2(CAST(c AS DOUBLE) / n), 10)"
+    f"CAST({round_half('(CAST(c AS DOUBLE) / n) * log2(CAST(c AS DOUBLE) / n)', 10)}"
     " AS DECIMAL(38,10))"
 )
 
@@ -3530,9 +3526,9 @@ _ENT_CELL = (
       FROM c1 JOIN n USING (source) GROUP BY 1
     )
     SELECT n.source, CAST(n.n AS BIGINT) AS n_bigrams,
-           ROUND(h2.h, 6) AS h_bigram,
-           ROUND(h1.h, 6) AS h_prefix,
-           ROUND(h2.h - h1.h, 6) AS h_cond
+           {round_half('h2.h', 6)} AS h_bigram,
+           {round_half('h1.h', 6)} AS h_prefix,
+           {round_half('h2.h - h1.h', 6)} AS h_cond
     FROM n JOIN h2 USING (source) JOIN h1 USING (source)
     ORDER BY n.source
     """,
@@ -3587,27 +3583,27 @@ def bigram_conditional_entropy_by_source(
         .selectExpr(
             "source",
             "CAST(n AS BIGINT) AS n_bigrams",
-            "ROUND(h2, 6) AS h_bigram",
-            "ROUND(h1, 6) AS h_prefix",
-            "ROUND(h2 - h1, 6) AS h_cond",
+            f"{round_half('h2', 6)} AS h_bigram",
+            f"{round_half('h1', 6)} AS h_prefix",
+            f"{round_half('h2 - h1', 6)} AS h_cond",
         )
         .orderBy("source")
     )
 
 
-# JS divergence cells cross the engines as ROUND(x*log2(x), 10)
-# DECIMALs (the column_entropy idiom).  p, q, m = (p+q)/2 derive from
+# JS divergence cells cross the engines as x*log2(x) rounded to 10
+# digits, as DECIMALs (the column_entropy idiom).  p, q, m = (p+q)/2 derive from
 # integer char counts; each of the three entropy sums is order-free.
 _JS_CELL_P = (
-    "CAST(ROUND((CAST(cp AS DOUBLE) / np) * log2(CAST(cp AS DOUBLE) / np), 10)"
+    f"CAST({round_half('(CAST(cp AS DOUBLE) / np) * log2(CAST(cp AS DOUBLE) / np)', 10)}"
     " AS DECIMAL(38,10))"
 )
 _JS_CELL_Q = (
-    "CAST(ROUND((CAST(cq AS DOUBLE) / nq) * log2(CAST(cq AS DOUBLE) / nq), 10)"
+    f"CAST({round_half('(CAST(cq AS DOUBLE) / nq) * log2(CAST(cq AS DOUBLE) / nq)', 10)}"
     " AS DECIMAL(38,10))"
 )
 _JS_M = "(CAST(cp AS DOUBLE) / np + CAST(cq AS DOUBLE) / nq) / 2"
-_JS_CELL_M = f"CAST(ROUND(({_JS_M}) * log2({_JS_M}), 10) AS DECIMAL(38,10))"
+_JS_CELL_M = f"CAST({round_half(f'({_JS_M}) * log2({_JS_M})', 10)} AS DECIMAL(38,10))"
 
 
 @query(
@@ -3635,12 +3631,12 @@ _JS_CELL_M = f"CAST(ROUND(({_JS_M}) * log2({_JS_M}), 10) AS DECIMAL(38,10))"
       LEFT JOIN cnt cb ON cb.lang = p.lang_b AND cb.c = c.c
     )
     SELECT lang_a, lang_b,
-           ROUND(
-             -CAST(SUM(CASE WHEN cp > 0 OR cq > 0 THEN {_JS_CELL_M} END)
-                   AS DOUBLE)
-             + (CAST(SUM(CASE WHEN cp > 0 THEN {_JS_CELL_P} END) AS DOUBLE)
-                + CAST(SUM(CASE WHEN cq > 0 THEN {_JS_CELL_Q} END) AS DOUBLE))
-               / 2, 6) AS js_bits
+           {round_half(
+             f'-CAST(SUM(CASE WHEN cp > 0 OR cq > 0 THEN {_JS_CELL_M} END)'
+                   ' AS DOUBLE)'
+             f' + (CAST(SUM(CASE WHEN cp > 0 THEN {_JS_CELL_P} END) AS DOUBLE)'
+                f' + CAST(SUM(CASE WHEN cq > 0 THEN {_JS_CELL_Q} END) AS DOUBLE))'
+               ' / 2', 6)} AS js_bits
     FROM cells
     GROUP BY lang_a, lang_b
     ORDER BY lang_a, lang_b
@@ -3656,7 +3652,7 @@ def char_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier than character statistics.
 
     Cross-engine exactness: char counts are integers; each entropy
-    cell crosses as a ROUND(x*log2 x, 10) DECIMAL (column_entropy
+    cell crosses as x*log2 x rounded to 10 digits, a DECIMAL (column_entropy
     idiom), so the three sums are order-free and js_bits is exact to
     the rounding contract.
 
@@ -3699,12 +3695,12 @@ def char_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.groupBy("lang_a", "lang_b")
         .agg(
             F.expr(
-                f"""ROUND(
-              -CAST(SUM(CASE WHEN cp > 0 OR cq > 0 THEN {_JS_CELL_M} END)
-                    AS DOUBLE)
-              + (CAST(SUM(CASE WHEN cp > 0 THEN {_JS_CELL_P} END) AS DOUBLE)
-                 + CAST(SUM(CASE WHEN cq > 0 THEN {_JS_CELL_Q} END) AS DOUBLE))
-                / 2, 6)"""
+                f"""{round_half(
+              f'-CAST(SUM(CASE WHEN cp > 0 OR cq > 0 THEN {_JS_CELL_M} END)'
+                    ' AS DOUBLE)'
+              f' + (CAST(SUM(CASE WHEN cp > 0 THEN {_JS_CELL_P} END) AS DOUBLE)'
+                 f' + CAST(SUM(CASE WHEN cq > 0 THEN {_JS_CELL_Q} END) AS DOUBLE))'
+                ' / 2', 6)}"""
             ).alias("js_bits")
         )
         .orderBy("lang_a", "lang_b")
@@ -3713,7 +3709,7 @@ def char_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kneser_ney_continuation_terms",
-    oracle="""
+    oracle=f"""
     WITH bi AS (
       SELECT DISTINCT ws[p] AS w1, ws[p + 1] AS w2
       FROM (SELECT string_split(text, ' ') AS ws FROM documents),
@@ -3729,9 +3725,9 @@ def char_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot AS (SELECT COUNT(*) AS n_bigram_types FROM bi)
     SELECT fc.w AS term, CAST(fc.c AS BIGINT) AS freq,
            CAST(COALESCE(cont.n_left, 0) AS BIGINT) AS n_left_contexts,
-           ROUND(CAST(COALESCE(cont.n_left, 0) AS DOUBLE)
-                 / tot.n_bigram_types, 9) AS p_continuation,
-           ROUND(CAST(COALESCE(cont.n_left, 0) AS DOUBLE) / fc.c, 6)
+           {round_half('CAST(COALESCE(cont.n_left, 0) AS DOUBLE)'
+                 ' / tot.n_bigram_types', 9)} AS p_continuation,
+           {round_half('CAST(COALESCE(cont.n_left, 0) AS DOUBLE) / fc.c', 6)}
              AS context_diversity
     FROM fc LEFT JOIN cont ON cont.w = fc.w, tot
     WHERE fc.c >= 50
@@ -3783,9 +3779,9 @@ def kneser_ney_continuation_terms(spark: SparkSession, sf_dir: str) -> DataFrame
             "w AS term",
             "CAST(c AS BIGINT) AS freq",
             "CAST(COALESCE(n_left, 0) AS BIGINT) AS n_left_contexts",
-            "ROUND(CAST(COALESCE(n_left, 0) AS DOUBLE) / n_bigram_types, 9)"
+            f"{round_half('CAST(COALESCE(n_left, 0) AS DOUBLE) / n_bigram_types', 9)}"
             " AS p_continuation",
-            "ROUND(CAST(COALESCE(n_left, 0) AS DOUBLE) / c, 6)"
+            f"{round_half('CAST(COALESCE(n_left, 0) AS DOUBLE) / c', 6)}"
             " AS context_diversity",
         )
         .orderBy("term")
@@ -3794,19 +3790,19 @@ def kneser_ney_continuation_terms(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "quality_feature_matrix",
-    oracle="""
+    oracle=f"""
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
            lang, source,
            CAST(n_chars AS BIGINT) AS n_chars,
            CAST(len(ws) AS BIGINT) AS n_tokens,
-           ROUND(CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6) AS ttr,
+           {round_half('CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws)', 6)} AS ttr,
            CAST(len(list_filter(range(1, len(ws)),
                                 i -> ws[i] = ws[i + 1])) AS BIGINT)
              AS n_adjacent_repeats,
-           ROUND((CAST(LENGTH(text) AS DOUBLE) - (len(ws) - 1)) / len(ws), 6)
+           {round_half('(CAST(LENGTH(text) AS DOUBLE) - (len(ws) - 1)) / len(ws)', 6)}
              AS avg_token_len,
-           ROUND(CAST(len(regexp_extract_all(text, '[aeiou]')) AS DOUBLE)
-                 / LENGTH(replace(text, ' ', '')), 6) AS vowel_ratio
+           {round_half("CAST(len(regexp_extract_all(text, '[aeiou]')) AS DOUBLE)"
+                 " / LENGTH(replace(text, ' ', ''))", 6)} AS vowel_ratio
     FROM (SELECT doc_id, lang, source, n_chars, text,
                  string_split(text, ' ') AS ws
           FROM documents)
@@ -3835,19 +3831,19 @@ def quality_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.col("n_chars").cast("bigint").alias("n_chars"),
             F.size("ws").cast("bigint").alias("n_tokens"),
-            F.round(
+            round_half(
                 F.size(F.array_distinct("ws")).cast("double") / F.size("ws"), 6
             ).alias("ttr"),
             F.expr(
                 "CAST(size(filter(sequence(1, size(ws) - 1),"
                 " i -> ws[i - 1] = ws[i])) AS BIGINT)"
             ).alias("n_adjacent_repeats"),
-            F.round(
+            round_half(
                 (F.length("text").cast("double") - (F.size("ws") - 1))
                 / F.size("ws"),
                 6,
             ).alias("avg_token_len"),
-            F.round(
+            round_half(
                 F.size(F.expr("regexp_extract_all(text, '[aeiou]', 0)")).cast(
                     "double"
                 )
@@ -3887,9 +3883,9 @@ _LR_SCORE = (
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN {_LR_SCORE} >= 0.5 THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_kept,
-           ROUND(CAST(SUM(CASE WHEN {_LR_SCORE} >= 0.5 THEN 1 ELSE 0 END)
-                      AS DOUBLE) / COUNT(*), 6) AS keep_rate,
-           ROUND(AVG(ROUND({_LR_SCORE}, 9)), 6) AS mean_score
+           {round_half(f'CAST(SUM(CASE WHEN {_LR_SCORE} >= 0.5 THEN 1 ELSE 0 END)'
+                      ' AS DOUBLE) / COUNT(*)', 6)} AS keep_rate,
+           {round_half(f"AVG({round_half(_LR_SCORE, 9)})", 6)} AS mean_score
     FROM feat GROUP BY source
     ORDER BY source
     """,
@@ -3903,7 +3899,7 @@ def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigmoid per document, one source-keyed rollup, zero shuffles
     before the rollup.  Float discipline: the sigmoid is a single
     shared expression over in-row doubles, and the only cross-row
-    float (mean_score) averages ROUND(.,9) values.
+    float (mean_score) averages values rounded to 9 digits.
 
     Scale shape: scan projection + map-side-combinable aggregate; 20
     result rows."""
@@ -3937,13 +3933,13 @@ def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr(f"CASE WHEN {_LR_SCORE} >= 0.5 THEN 1 ELSE 0 END"))
             .cast("bigint")
             .alias("n_kept"),
-            F.round(F.avg(F.expr(f"ROUND({_LR_SCORE}, 9)")), 6).alias("mean_score"),
+            round_half(F.avg(F.expr(round_half(_LR_SCORE, 9))), 6).alias("mean_score"),
         )
         .selectExpr(
             "source",
             "n_docs",
             "n_kept",
-            "ROUND(CAST(n_kept AS DOUBLE) / n_docs, 6) AS keep_rate",
+            f"{round_half('CAST(n_kept AS DOUBLE) / n_docs', 6)} AS keep_rate",
             "mean_score",
         )
         .orderBy("source")
@@ -4064,11 +4060,11 @@ def ndcg_at10_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "crawl_quality_drift",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT MAX(doc_id) + 1 AS n FROM documents),
     per_doc AS (
       SELECT CAST(doc_id * 10 // mx.n AS BIGINT) AS decile,
-             CAST(ROUND(1000000.0 * len(list_distinct(ws)) / len(ws))
+             CAST({round_half('CAST(1000000.0 * len(list_distinct(ws)) AS DOUBLE) / len(ws)', 0)}
                   AS BIGINT) AS ttr_e6
       FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents), mx
     ),
@@ -4108,8 +4104,10 @@ def crawl_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.expr("CAST(doc_id * 10 DIV n AS BIGINT)").alias("decile"),
             F.expr(
-                "CAST(ROUND(1000000.0 * size(array_distinct(split(text, ' ')))"
-                " / size(split(text, ' '))) AS BIGINT)"
+                "CAST("
+                + round_half("CAST(1000000.0 * size(array_distinct(split(text, ' '))) AS DOUBLE)"
+                             " / size(split(text, ' '))", 0)
+                + " AS BIGINT)"
             ).alias("ttr_e6"),
         )
     )

@@ -149,8 +149,7 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct hosts, distinct canonical URLs, and the duplicate-URL
     count — the signal that drives per-domain fetch budgets and
     mirror blacklisting.  (Duplication is emitted as the exact integer
-    pair n_unique_urls/n_dup_urls, never a rounded rate — cross-engine
-    ROUND(double) ties are the one thing that red-rows a float hash.)
+    pair n_unique_urls/n_dup_urls, never a rounded rate.)
 
     Scale shape: one projection + one domain-keyed aggregate; the
     distinct-URL count keys on the 60-bit digest (int64, not the URL

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import round_half
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -91,13 +92,13 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_moving_avg",
-    oracle="""
+    oracle=f"""
     SELECT l_suppkey, l_orderkey, l_linenumber,
-           CAST(ROUND(AVG(CAST(l_quantity AS DECIMAL(12,2)))
-                OVER (PARTITION BY l_suppkey
-                      ORDER BY l_shipdate, l_orderkey, l_linenumber,
-                               l_quantity, l_extendedprice
-                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS DOUBLE)
+           {round_half('CAST(AVG(CAST(l_quantity AS DECIMAL(12,2)))'
+                ' OVER (PARTITION BY l_suppkey'
+                      ' ORDER BY l_shipdate, l_orderkey, l_linenumber,'
+                               ' l_quantity, l_extendedprice'
+                      ' ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE)', 4)}
              AS qty_ma4
     FROM lineitem
     """,
@@ -120,18 +121,18 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         "l_orderkey",
         "l_linenumber",
-        F.round(F.avg(F.col("l_quantity").cast("decimal(12,2)")).over(w), 4)
-        .cast("double")
-        .alias("qty_ma4"),
+        round_half(
+            F.avg(F.col("l_quantity").cast("decimal(12,2)")).over(w).cast("double"), 4
+        ).alias("qty_ma4"),
     )
 
 
 @query(
     "window_ntile_cume",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey,
            NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS quartile,
-           ROUND(CUME_DIST() OVER (ORDER BY c_acctbal, c_custkey), 8) AS cume
+           {round_half('CUME_DIST() OVER (ORDER BY c_acctbal, c_custkey)', 8)} AS cume
     FROM customer WHERE c_mktsegment = 'BUILDING'
     """,
 )
@@ -145,14 +146,14 @@ def window_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_custkey",
             F.ntile(4).over(w).cast("bigint").alias("quartile"),
-            F.round(F.cume_dist().over(w), 8).alias("cume"),
+            round_half(F.cume_dist().over(w), 8).alias("cume"),
         )
     )
 
 
 @query(
     "window_ratio_to_report",
-    oracle="""
+    oracle=f"""
     WITH nrev AS (
       SELECT n_regionkey, n_name,
              SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS bal
@@ -160,9 +161,8 @@ def window_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY n_regionkey, n_name)
     SELECT n_name,
            CAST(bal AS DOUBLE) AS nation_bal,
-           ROUND(CAST(bal AS DOUBLE)
-                 / CAST(SUM(bal) OVER (PARTITION BY n_regionkey) AS DOUBLE),
-                 6) AS region_share
+           {round_half('CAST(bal AS DOUBLE)'
+                 ' / CAST(SUM(bal) OVER (PARTITION BY n_regionkey) AS DOUBLE)', 6)} AS region_share
     FROM nrev
     ORDER BY n_name
     """,
@@ -186,9 +186,7 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nrev.select(
         "n_name",
         F.col("bal").cast("double").alias("nation_bal"),
-        F.round(
-            F.col("bal").cast("double") / total.cast("double"), 6
-        ).alias("region_share"),
+        round_half(F.col("bal").cast("double") / total.cast("double"), 6).alias("region_share"),
     ).orderBy("n_name")
 
 
@@ -232,11 +230,11 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_moving_median",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey,
-           ROUND(quantile_cont(o_totalprice, 0.5) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS median5
+           {round_half('quantile_cont(o_totalprice, 0.5) OVER ('
+             ' PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey'
+             ' ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)', 4)} AS median5
     FROM orders
     """,
 )
@@ -255,7 +253,7 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.expr("percentile(o_totalprice, 0.5)").over(w), 4).alias("median5"),
+        round_half(F.expr("percentile(o_totalprice, 0.5)").over(w), 4).alias("median5"),
     )
 
 
@@ -578,10 +576,10 @@ def nulls_ordering_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_percent_rank",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey,
-           ROUND(PERCENT_RANK() OVER w, 8) AS pr,
-           ROUND(CUME_DIST() OVER w, 8) AS cd
+           {round_half('PERCENT_RANK() OVER w', 8)} AS pr,
+           {round_half('CUME_DIST() OVER w', 8)} AS cd
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment
                  ORDER BY c_acctbal, c_custkey)
@@ -600,6 +598,6 @@ def window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return t(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.round(F.percent_rank().over(w), 8).alias("pr"),
-        F.round(F.cume_dist().over(w), 8).alias("cd"),
+        round_half(F.percent_rank().over(w), 8).alias("pr"),
+        round_half(F.cume_dist().over(w), 8).alias("cd"),
     )

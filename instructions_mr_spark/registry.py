@@ -8,8 +8,9 @@ Every implemented operator from SURVEY.md §2 registers here:
   rows-only check).
 
 Column names must match between the two sides — the driver sorts
-columns by name before hashing values.  Float aggregates are rounded
-identically on both sides to keep the value hash stable.
+columns by name before hashing values.  Float outputs are rounded
+only through ``functions.round_half``, which both engines evaluate bit
+for bit, so the value hash stays stable.
 """
 
 from __future__ import annotations

@@ -30,6 +30,7 @@ import pytest
 from pyspark.sql import types as T
 
 from instructions_mr_spark import registry
+from tests.conftest import write_tables
 from tools.check_oracle import duck_con
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
@@ -117,3 +118,64 @@ def test_no_spark_output_is_decimal(spark) -> None:
         "Spark output columns of DECIMAL type (cast to DOUBLE by the "
         "queries/_util.py output-type rule):\n  " + "\n  ".join(offenders)
     )
+
+
+def test_dec_double_is_bit_identical_across_engines(spark, tmp_path) -> None:
+    """``_util.dec_double`` turns random DECIMAL(38, s) values, s = 0..20,
+    unscaled both below and above 2^53, into the same double on Spark
+    and DuckDB.  A plain CAST(x AS DOUBLE) does not on the same file:
+    DuckDB's direct cast misrounds above 2^53."""
+    import decimal
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from instructions_mr_spark.queries._util import dec_double
+
+    rng = random.Random(16)
+    scales = range(21)
+
+    def unscaled(i: int) -> int:
+        top = 2**53 if i % 2 else 10**38 - 1
+        low = 0 if i % 2 else 2**53
+        return rng.choice((-1, 1)) * rng.randint(low, top)
+
+    cols = {
+        f"d{s}": pa.array(
+            [decimal.Decimal(f"{unscaled(i)}E-{s}") for i in range(100)],
+            pa.decimal128(38, s),
+        )
+        for s in scales
+    }
+    path = str(tmp_path / "dec.parquet")
+    pq.write_table(pa.table({"id": pa.array(range(100), pa.int64()), **cols}), path)
+    exprs = [dec_double(c) for c in cols] + [f"CAST({c} AS DOUBLE)" for c in cols]
+    got = spark.read.parquet(path).selectExpr("id", *exprs).collect()
+    want = duckdb.sql(
+        "SELECT id, " + ", ".join(exprs) + f" FROM read_parquet('{path}')"
+    ).fetchall()
+    spark_rows = {r[0]: [float(v).hex() for v in r[1:]] for r in got}
+    duck_rows = {r[0]: [float(v).hex() for v in r[1:]] for r in want}
+    n = len(cols)
+    bad = [
+        (i, j)
+        for i in duck_rows
+        for j in range(n)
+        if spark_rows[i][j] != duck_rows[i][j]
+    ]
+    assert not bad, f"{len(bad)} dec_double values differ, first: {bad[:3]}"
+    plain = sum(
+        spark_rows[i][n + j] != duck_rows[i][n + j] for i in duck_rows for j in range(n)
+    )
+    assert plain > 0, "a plain CAST agreed everywhere: the test cannot see the fault"
+
+
+def test_duck_con_views_only_the_tables_present(tmp_path) -> None:
+    """A directory holding only documents.parquet still runs a
+    documents-only oracle; a table that is not there gets no view."""
+    write_tables(tmp_path, documents=[(1, "alpha beta gamma", "en", "web", 16)])
+    con = duck_con(str(tmp_path))
+    assert con.sql(registry.ORACLES["kmv_union_merge"]).fetchone()[0] == 2
+    with pytest.raises(duckdb.CatalogException):
+        con.sql("SELECT * FROM orders")

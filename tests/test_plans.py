@@ -642,6 +642,53 @@ def test_embedding_math_only_in_functions():
     assert not private, f"private llm_pipeline names imported: {private}"
 
 
+def test_rounding_only_in_functions():
+    """Every rounding is rendered by functions.round_half: a bare
+    ROUND(x, k) evaluates differently on Spark
+    (HALF_UP on the shortest decimal string) and DuckDB
+    (round(x * 10^k) / 10^k), so no SQL string in the package or the
+    examples spells ROUND, and no Column code calls F.round or
+    F.bround.  The Jaccard ratio is rendered only by functions.jaccard /
+    duck_jaccard."""
+    import ast
+    import glob
+    import os
+    import pathlib
+    import re
+
+    sql_round = re.compile(r"(?i)(?<![\w.])round\(")
+    jaccard = re.compile(
+        r"CAST\(len\(list_intersect\([^()]*\)\) AS DOUBLE\)\s*/\s*len\(list_distinct\("
+        r"|F\.size\(F\.array_intersect\([^()]*\)\)\.cast\(\"double\"\)\s*"
+        r"/\s*F\.size\(F\.array_(union|distinct)\("
+    )
+    root = os.path.join(os.path.dirname(__file__), "..")
+    seam = os.path.join("instructions_mr_spark", "functions", "__init__.py")
+    offenders = []
+    for sub in ("instructions_mr_spark", "examples"):
+        for path in sorted(glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True)):
+            rel = os.path.relpath(path, root)
+            if rel == seam:
+                continue
+            src = pathlib.Path(path).read_text()
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if sql_round.search(node.value):
+                        offenders.append(f"{rel}:{node.lineno} ROUND(")
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("round", "bround")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "F"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} F.{node.attr}")
+            offenders += [
+                f"{rel}:{src.count(chr(10), 0, m.start()) + 1} jaccard"
+                for m in jaccard.finditer(src)
+            ]
+    assert not offenders, f"rounding outside functions/: {offenders}"
+
+
 def test_hand_built_tables_only_via_write_tables():
     """Hand-built test tables are written only by
     ``tests/conftest.write_tables``, in the driver's own parquet flavor

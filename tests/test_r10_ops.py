@@ -173,7 +173,7 @@ def test_kmv_union_merge_degenerate_corpus_nulls(spark, tmp_path):
     NULL kth_min_hash / union_estimate; the Spark side must emit the
     identical NULLs instead of max-of-available.  Pin both engines on
     a 3-bigram corpus and require they agree exactly."""
-    import duckdb
+    from tools.check_oracle import duck_con
 
     sf = str(tmp_path)
     write_tables(sf, documents=[
@@ -187,12 +187,7 @@ def test_kmv_union_merge_degenerate_corpus_nulls(spark, tmp_path):
     assert row.merged_input_rows == 3          # 3 distinct (source, bigram)
     assert row.true_union_distinct == 2        # 2 distinct bigrams
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet')"
-    )
-    o = con.execute(registry.ORACLES["kmv_union_merge"]).fetchone()
+    o = duck_con(sf).execute(registry.ORACLES["kmv_union_merge"]).fetchone()
     assert o == (
         row.merged_input_rows,
         row.kth_min_hash,

@@ -123,7 +123,6 @@ def test_span_dedup_equals_oracles_with_one_gram_in_every_doc(spark, tmp_path):
         _repeated_gram_hits,
         _span_gram_pos,
     )
-    from instructions_mr_spark.sources.tables import TABLE_NAMES
     from perfbench.check import diff
     from tools.check_oracle import duck_con
 
@@ -131,11 +130,7 @@ def test_span_dedup_equals_oracles_with_one_gram_in_every_doc(spark, tmp_path):
     hot = "the quick brown fox jumps over the dog"
     texts = [f"w{i}a w{i}b {hot} w{i}c" for i in range(n_docs)]
     docs = [(i, text, "en", "s", len(text)) for i, text in enumerate(texts)]
-    write_tables(
-        tmp_path,
-        documents=docs,
-        **{name: [] for name in TABLE_NAMES if name != "documents"},
-    )
+    write_tables(tmp_path, documents=docs)
     con = duck_con(str(tmp_path))
     for name in ("dedup_span_cut", "dedup_span_coverage"):
         got = registry.QUERIES[name](spark, str(tmp_path)).toPandas()
