@@ -14,6 +14,8 @@ one place each of these formulas lives:
 - the sign-bit LSH bucket: ``sign_bucket`` / ``duck_sign_bucket``;
 - rounding: ``round_half`` (SQL text or Column); no other module
   spells a ``ROUND``;
+- event time: ``spark_epoch`` / ``duck_epoch``, whole units since the
+  epoch; no other module spells an epoch function;
 - Jaccard similarity: ``jaccard`` / ``duck_jaccard``.
 """
 
@@ -69,6 +71,43 @@ def round_half(x: str | Column, k: int) -> str | Column:
         scale = F.lit(float(10**k))
         return F.round(x * scale) / scale + F.lit(0.0)
     return f"(ROUND(({x}) * 1e{k}) / 1e{k} + 0.0)"
+
+
+# Microseconds per unit of ``spark_epoch`` / ``duck_epoch``.
+_EPOCH_US = {
+    "us": 1,
+    "s": 1_000_000,
+    "hour": 3_600_000_000,
+    "day": 86_400_000_000,
+    "week": 604_800_000_000,
+}
+
+
+def _epoch_div(unit: str, op: str) -> str:
+    if unit not in _EPOCH_US:
+        raise ValueError(f"epoch unit {unit!r} is not one of {sorted(_EPOCH_US)}")
+    return "" if unit == "us" else f" {op} {_EPOCH_US[unit]}"
+
+
+def spark_epoch(x: str, unit: str = "us") -> str:
+    """Whole ``unit``s since 1970-01-01 UTC of the SQL expression ``x``,
+    as Spark SQL text; :func:`duck_epoch` renders the same value in
+    DuckDB.  ``unit`` is one of ``us``, ``s``, ``hour``, ``day``,
+    ``week``; a column caller wraps the text in ``F.expr``.
+
+    Domain: ``x`` is a TIMESTAMP, TIMESTAMP_NTZ or DATE; the result is
+    a BIGINT, truncated toward zero on both engines, which equals the
+    floor at or after 1970 (the tables hold 1995-2024).  ``unix_micros``
+    rejects TIMESTAMP_NTZ, so Spark casts through TIMESTAMP first; the
+    cast is exact because the session time zone is UTC.  DuckDB takes
+    no cast, so a UTC-adjusted file does not depend on its
+    ``TimeZone``."""
+    return f"(unix_micros(CAST(({x}) AS TIMESTAMP)){_epoch_div(unit, 'DIV')})"
+
+
+def duck_epoch(x: str, unit: str = "us") -> str:
+    """DuckDB twin of :func:`spark_epoch` (same arguments, same value)."""
+    return f"(epoch_us({x}){_epoch_div(unit, '//')})"
 
 
 # Embedding similarity.  Every dot product is a left fold, in

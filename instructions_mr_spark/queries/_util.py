@@ -26,7 +26,10 @@ query as DOUBLE, and its value does not change:
 Every rounding goes through ``functions.round_half``, a DOUBLE-only
 seam both engines evaluate bit for bit (a DECIMAL is first cast by the
 rule above).  The portable md5 digest that dedup and sampling queries key on is rendered by
-``functions.spark_hash`` / ``functions.duck_hash``.
+``functions.spark_hash`` / ``functions.duck_hash``.  Every timestamp ->
+epoch-unit conversion (seconds, hour, day or week indices, epoch
+micros) is rendered by ``functions.spark_epoch`` /
+``functions.duck_epoch``.
 """
 
 from __future__ import annotations
@@ -65,22 +68,6 @@ def avg_d(fragment: str, alias: str) -> str:
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def ts_epoch_seconds(col):
-    """Event-time column -> epoch seconds, NTZ-safe.
-
-    ``CAST(ts AS BIGINT)`` is rejected for TIMESTAMP_NTZ (the flavor
-    tz-less parquet reads as under Spark 4); casting through TIMESTAMP
-    first is exact because the session timezone is pinned UTC
-    (session.py).  Use this — never a bare ``.cast("long")`` — for any
-    ``events.ts`` / ``orders.o_orderdate`` arithmetic; round 3's
-    driver failure was exactly that bare cast.
-    """
-    from pyspark.sql import Column, functions as F
-
-    c = F.col(col) if not isinstance(col, Column) else col
-    return c.cast("timestamp").cast("long")
 
 
 _STAGED_CKPTS: list[DataFrame] = []
@@ -194,15 +181,6 @@ def kernel_floor(df: DataFrame, full: bool = False) -> DataFrame:
     if df.rdd.getNumPartitions() >= floor:
         return df
     return df.repartition(cores)
-
-
-def ts_epoch_micros(col):
-    """Event-time column -> epoch microseconds, NTZ-safe (see
-    ts_epoch_seconds)."""
-    from pyspark.sql import Column, functions as F
-
-    c = F.col(col) if not isinstance(col, Column) else col
-    return F.unix_micros(c.cast("timestamp"))
 
 
 def two_phase_rank(

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructions_mr_spark.config import Instruction, LlmConfig, Stage
-from instructions_mr_spark.functions import duck_hash, round_half
-from instructions_mr_spark.queries._util import REVENUE, sum_d, t, ts_epoch_seconds
+from instructions_mr_spark.functions import duck_epoch, duck_hash, round_half, spark_epoch
+from instructions_mr_spark.queries._util import REVENUE, sum_d, t
 from instructions_mr_spark.registry import query
 
 # ------------------------------------------------------- TPC-H shapes
@@ -1060,15 +1060,15 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cogrouped_pandas_event_order_merge",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     o AS (
       SELECT o_custkey AS user_id,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 1000000 AS osec
+             {duck_epoch('o_orderdate', 's')} AS osec
       FROM orders
     ),
     matched AS (
@@ -1107,11 +1107,11 @@ def cogrouped_pandas_event_order_merge(
     grouped as-of is ONE vectorized ``merge_asof(by='user_id')``,
     then a pandas groupby emits one row per user."""
     e = t(spark, sf_dir, "events").select(
-        "user_id", "event_id", ts_epoch_seconds("ts").alias("sec")
+        "user_id", "event_id", F.expr(spark_epoch("ts", "s")).alias("sec")
     ).withColumn("bkt", F.pmod("user_id", F.lit(256)))
     o = t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
-        ts_epoch_seconds("o_orderdate").alias("osec"),
+        F.expr(spark_epoch("o_orderdate", "s")).alias("osec"),
     ).withColumn("bkt", F.pmod("user_id", F.lit(256)))
     out_schema = "user_id long, n_events long, n_matched long, gap_sum_sec long"
 

@@ -10,7 +10,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
+from instructions_mr_spark.functions import duck_epoch, duck_hash, round_half, spark_epoch, spark_hash
 from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
@@ -582,8 +582,8 @@ _SESS_GAP_S = 1800
     WITH ordered AS (
       SELECT user_id, event_id, event_type, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
-                       OR epoch_us(CAST(ts AS TIMESTAMP))
-                          - epoch_us(CAST(LAG(ts) OVER w AS TIMESTAMP))
+                       OR {duck_epoch('ts')}
+                          - {duck_epoch('LAG(ts) OVER w')}
                           > {_SESS_GAP_S} * 1000000
                   THEN 1 ELSE 0 END AS new_sess
       FROM events
@@ -597,7 +597,7 @@ _SESS_GAP_S = 1800
     ),
     per_sess AS (
       SELECT user_id, sess_id, COUNT(*) AS n_events,
-             split_part(MIN(lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR), 20, '0')
+             split_part(MIN(lpad(CAST({duck_epoch('ts')} AS VARCHAR), 20, '0')
                  || '_' || lpad(CAST(event_id AS VARCHAR), 12, '0')
                  || '_' || event_type), '_', 3) AS first_type
       FROM sess GROUP BY user_id, sess_id
@@ -626,11 +626,9 @@ def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning); the first-event election is a tie-safe string-pack
     MIN (timestamp micros + event_id + type), not a second window.
     NTZ-safe time math (epoch micros through TIMESTAMP cast)."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     lag_us = F.lag(us).over(w)
     new_sess = F.when(
         lag_us.isNull() | ((us - lag_us) > _SESS_GAP_S * 1_000_000), 1
@@ -644,7 +642,7 @@ def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     pack = F.concat(
-        F.lpad(ts_epoch_micros("ts").cast("string"), 20, "0"),
+        F.lpad(F.expr(spark_epoch("ts")).cast("string"), 20, "0"),
         F.lit("_"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
         F.lit("_"),
@@ -1244,7 +1242,7 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_time_to_convert",
-    oracle="""
+    oracle=f"""
     WITH fv AS (
       SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS first_view
       FROM events WHERE event_type = 'view' GROUP BY 1
@@ -1261,11 +1259,11 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_viewers,
            CAST(SUM(CASE WHEN first_purchase IS NOT NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_converted,
-           CAST(MIN(epoch_us(first_purchase) - epoch_us(first_view))
+           CAST(MIN({duck_epoch('first_purchase')} - {duck_epoch('first_view')})
                 AS BIGINT) AS min_delta_us,
-           CAST(MAX(epoch_us(first_purchase) - epoch_us(first_view))
+           CAST(MAX({duck_epoch('first_purchase')} - {duck_epoch('first_view')})
                 AS BIGINT) AS max_delta_us,
-           CAST(SUM(epoch_us(first_purchase) - epoch_us(first_view))
+           CAST(SUM({duck_epoch('first_purchase')} - {duck_epoch('first_view')})
                 AS BIGINT) AS sum_delta_us
     FROM conv GROUP BY 1
     """,
@@ -1283,8 +1281,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (user, purchase), pre-filtered by the view-time predicate;
     the bucket rollup is 8 rows.  NTZ-safe: all time math through
     TIMESTAMP-cast epoch micros."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
     fv = (
         e.filter(F.col("event_type") == "view")
@@ -1304,7 +1300,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "first_view")
         .agg(F.min("p_ts").alias("first_purchase"))
     )
-    delta = ts_epoch_micros("first_purchase") - ts_epoch_micros("first_view")
+    delta = F.expr(spark_epoch("first_purchase")) - F.expr(spark_epoch("first_view"))
     return conv.groupBy((F.col("user_id") % 8).alias("user_bucket")).agg(
         F.count(F.lit(1)).alias("n_viewers"),
         F.sum(F.when(F.col("first_purchase").isNotNull(), 1).otherwise(0))
@@ -1431,11 +1427,9 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trend_slope_by_type",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-      SELECT event_type,
-             CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP)))
-                  AS BIGINT) // 3600 AS hidx,
+      SELECT event_type, {duck_epoch('ts', 'hour')} AS hidx,
              COUNT(*) AS cnt
       FROM events GROUP BY 1, 2
     ),
@@ -1472,14 +1466,9 @@ def trend_slope_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     small; zero-traffic hours are excluded by construction (this is
     a trend over active hours — compose with ts_gap_fill's grid for
     the zero-filled variant)."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     e = t(spark, sf_dir, "events")
     h = e.groupBy(
-        "event_type",
-        F.floor(ts_epoch_seconds(F.date_trunc("hour", F.col("ts"))) / F.lit(3600))
-        .cast("long")
-        .alias("hidx"),
+        "event_type", F.expr(spark_epoch("ts", "hour")).alias("hidx")
     ).agg(F.count(F.lit(1)).alias("cnt"))
     m = h.agg(F.min("hidx").alias("h0"))
     x = h.crossJoin(F.broadcast(m)).select(
@@ -1622,8 +1611,8 @@ def features_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH ordered AS (
       SELECT user_id, event_id, event_type, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
-                       OR epoch_us(CAST(ts AS TIMESTAMP))
-                          - epoch_us(CAST(LAG(ts) OVER w AS TIMESTAMP))
+                       OR {duck_epoch('ts')}
+                          - {duck_epoch('LAG(ts) OVER w')}
                           > 1800 * 1000000
                   THEN 1 ELSE 0 END AS new_sess
       FROM events
@@ -1664,11 +1653,9 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|event_types|^3 max) and top-10 is TakeOrderedAndProject.
     Deterministic: event_id breaks ts ties, path string breaks count
     ties."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     lag_us = F.lag(us).over(w)
     new_sess = F.when(
         lag_us.isNull() | ((us - lag_us) > 1800 * 1_000_000), 1
@@ -2126,10 +2113,10 @@ def rare_category_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "seasonality_profile",
-    oracle="""
+    oracle=f"""
     WITH g AS (
-      SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) % 7 AS dow_idx,
-             (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hour_of_day,
+      SELECT {duck_epoch('ts', 'day')} % 7 AS dow_idx,
+             {duck_epoch('ts', 'hour')} % 24 AS hour_of_day,
              COUNT(*) AS n
       FROM events GROUP BY 1, 2
     )
@@ -2153,13 +2140,10 @@ def seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the 168-row matrix."""
     from pyspark.sql import Window
 
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
-    us = ts_epoch_micros("ts")
     g = e.select(
-        ((us / F.lit(86400000000)).cast("long") % 7).alias("dow_idx"),
-        ((us / F.lit(3600000000)).cast("long") % 24).alias("hour_of_day"),
+        (F.expr(spark_epoch("ts", "day")) % 7).alias("dow_idx"),
+        (F.expr(spark_epoch("ts", "hour")) % 24).alias("hour_of_day"),
     ).groupBy("dow_idx", "hour_of_day").agg(F.count(F.lit(1)).alias("n"))
     return g.select(
         "dow_idx",
@@ -2176,15 +2160,15 @@ def seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "metric_change_contribution",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
-      SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS lo,
-             MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS hi
+      SELECT MIN({duck_epoch('ts')}) AS lo,
+             MAX({duck_epoch('ts')}) AS hi
       FROM events
     ),
     halves AS (
       SELECT event_type,
-             CASE WHEN 2 * (epoch_us(CAST(ts AS TIMESTAMP)) - lo)
+             CASE WHEN 2 * ({duck_epoch('ts')} - lo)
                        < hi - lo THEN 1 ELSE 2 END AS half,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
       FROM events, bounds
@@ -2216,10 +2200,8 @@ def metric_change_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus-sized (segment, half) conditional
     aggregate with the 2-value bounds row broadcast; the window runs
     over the segment table."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     bounds = e.agg(F.min(us).alias("lo"), F.max(us).alias("hi"))
     halves = e.crossJoin(F.broadcast(bounds)).select(
         "event_type",
@@ -2255,15 +2237,15 @@ def metric_change_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "churn_label_table",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
-      SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS lo,
-             MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS hi
+      SELECT MIN({duck_epoch('ts')}) AS lo,
+             MAX({duck_epoch('ts')}) AS hi
       FROM events
     ),
     marked AS (
       SELECT user_id,
-             CASE WHEN 2 * (epoch_us(CAST(ts AS TIMESTAMP)) - lo)
+             CASE WHEN 2 * ({duck_epoch('ts')} - lo)
                        < hi - lo THEN 1 ELSE 2 END AS half
       FROM events, bounds
     ),
@@ -2295,10 +2277,8 @@ def churn_label_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed conditional aggregate; the bucket
     rollup is 8 rows.  In production the two windows slide — the
     query shape is identical per snapshot date."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     bounds = e.agg(F.min(us).alias("lo"), F.max(us).alias("hi"))
     marked = e.crossJoin(F.broadcast(bounds)).select(
         "user_id",
@@ -2386,10 +2366,10 @@ def experiment_uplift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "attribution_time_decay",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, event_id, event_type, ts,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS tsu,
+             {duck_epoch('ts')} AS tsu,
              SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                OVER (PARTITION BY user_id ORDER BY ts, event_id
                      ROWS UNBOUNDED PRECEDING) AS cum_p
@@ -2432,11 +2412,9 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed exchange for the running purchase
     counter and journey join (same skeleton as
     attribution_position_based); the weight is in-row bit math."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     ordered = e.select(
         "user_id",
         "event_id",
@@ -2479,8 +2457,8 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH ordered AS (
       SELECT user_id, event_id, event_type, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
-                       OR epoch_us(CAST(ts AS TIMESTAMP))
-                          - epoch_us(CAST(LAG(ts) OVER w AS TIMESTAMP))
+                       OR {duck_epoch('ts')}
+                          - {duck_epoch('LAG(ts) OVER w')}
                           > 1800 * 1000000
                   THEN 1 ELSE 0 END AS new_sess
       FROM events
@@ -2494,7 +2472,7 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     firsts AS (
       SELECT user_id, sess_id, event_type,
-             MIN(lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR), 20, '0')
+             MIN(lpad(CAST({duck_epoch('ts')} AS VARCHAR), 20, '0')
                  || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS first_key
       FROM sess GROUP BY user_id, sess_id, event_type
     ),
@@ -2522,11 +2500,9 @@ def sequence_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts is one (session, type) aggregate; the pattern join is
     per-session over at most |types| rows each side; output is
     |types|^2 with the session total attached for support ratios."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = ts_epoch_micros("ts")
+    us = F.expr(spark_epoch("ts"))
     lag_us = F.lag(us).over(w)
     new_sess = F.when(
         lag_us.isNull() | ((us - lag_us) > 1800 * 1_000_000), 1
@@ -2540,7 +2516,7 @@ def sequence_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = sess.groupBy("user_id", "sess_id", "event_type").agg(
         F.min(
             F.concat(
-                F.lpad(ts_epoch_micros("ts").cast("string"), 20, "0"),
+                F.lpad(F.expr(spark_epoch("ts")).cast("string"), 20, "0"),
                 F.lpad(F.col("event_id").cast("string"), 12, "0"),
             )
         ).alias("first_key")
@@ -2725,10 +2701,10 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dau_wau_stickiness",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT DISTINCT
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              user_id
       FROM events
     ),
@@ -2766,7 +2742,7 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         t(spark, sf_dir, "events")
         .selectExpr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day_idx",
+            f"{spark_epoch('ts', 'day')} AS day_idx",
             "user_id",
         )
         .distinct()
@@ -2946,10 +2922,10 @@ def inventory_stockout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "brand_share_shift",
-    oracle="""
+    oracle=f"""
     WITH li AS (
       SELECT p.p_brand AS brand,
-             epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('l_shipdate', 'day')}
                AS day_idx,
              CAST(FLOOR(CAST(l_extendedprice AS DECIMAL(12,2))
                         * (1 - CAST(l_discount AS DECIMAL(8,4)))
@@ -3000,8 +2976,7 @@ def brand_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .selectExpr(
             "p_brand AS brand",
-            "unix_micros(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000000"
-            " AS day_idx",
+            f"{spark_epoch('l_shipdate', 'day')} AS day_idx",
             "CAST(FLOOR(CAST(l_extendedprice AS DECIMAL(12,2))"
             " * (1 - CAST(l_discount AS DECIMAL(8,4))) * 100) AS BIGINT)"
             " AS cents",
@@ -3042,10 +3017,10 @@ def brand_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "backlog_aging_buckets",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_orderpriority,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                AS day_idx,
              CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100)
                   AS BIGINT) AS cents
@@ -3076,8 +3051,7 @@ def backlog_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "O")
         .selectExpr(
             "o_orderpriority",
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-            " AS day_idx",
+            f"{spark_epoch('o_orderdate', 'day')} AS day_idx",
             "CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)"
             " AS cents",
         )
@@ -3103,10 +3077,10 @@ def backlog_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "interpurchase_gap_profile",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT c.c_mktsegment AS segment, o.o_custkey,
-             epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o.o_orderdate', 'day')}
                AS day_idx,
              o.o_orderkey
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -3160,8 +3134,7 @@ def interpurchase_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "c_mktsegment AS segment",
             "o_custkey",
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-            " AS day_idx",
+            f"{spark_epoch('o_orderdate', 'day')} AS day_idx",
             "o_orderkey",
         )
     )
@@ -3193,10 +3166,10 @@ def interpurchase_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "wow_revenue_delta",
-    oracle="""
+    oracle=f"""
     WITH weekly AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS week_idx,
+             {duck_epoch('ts', 'week')} AS week_idx,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS cents
       FROM events GROUP BY 1, 2
     ),
@@ -3229,9 +3202,7 @@ def wow_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 604800000000"
-            ).alias("week_idx"),
+            F.expr(spark_epoch("ts", "week")).alias("week_idx"),
         )
         .agg(
             F.expr(
@@ -3356,10 +3327,10 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "user_acquisition_curve",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT DISTINCT
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              user_id
       FROM events
     ),
@@ -3395,7 +3366,7 @@ def user_acquisition_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         t(spark, sf_dir, "events")
         .selectExpr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day_idx",
+            f"{spark_epoch('ts', 'day')} AS day_idx",
             "user_id",
         )
         .distinct()
@@ -3470,9 +3441,9 @@ def discount_volume_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cart_abandonment_daily",
-    oracle="""
+    oracle=f"""
     WITH d AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+      SELECT {duck_epoch('ts', 'day')} AS day_idx,
              user_id,
              MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                AS clicked,
@@ -3504,9 +3475,7 @@ def cart_abandonment_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         t(spark, sf_dir, "events")
         .groupBy(
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
             "user_id",
         )
         .agg(
@@ -3768,10 +3737,10 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "segment_migration_matrix",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_custkey,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                AS day_idx,
              CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100)
                   AS BIGINT) AS cents
@@ -3820,8 +3789,7 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from instructions_mr_spark.queries._util import two_phase_rank
     o = t(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        " AS day_idx",
+        f"{spark_epoch('o_orderdate', 'day')} AS day_idx",
         "CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)"
         " AS cents",
     )
@@ -3867,10 +3835,10 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "user_activity_depth",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT DISTINCT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx
+             {duck_epoch('ts', 'day')} AS day_idx
       FROM events
     ),
     per_user AS (SELECT user_id, COUNT(*) AS n_days FROM d GROUP BY 1)
@@ -3893,7 +3861,7 @@ def user_activity_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .selectExpr(
             "user_id",
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day_idx",
+            f"{spark_epoch('ts', 'day')} AS day_idx",
         )
         .distinct()
     )
@@ -3959,10 +3927,10 @@ def basket_value_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_duration_profile",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     flagged AS (
@@ -4015,7 +3983,7 @@ def session_duration_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     values only."""
     e = t(spark, sf_dir, "events").selectExpr(
         "user_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) DIV 1000000 AS sec",
+        f"{spark_epoch('ts', 's')} AS sec",
     )
     wu = Window.partitionBy("user_id").orderBy("sec")
     flagged = e.select(
@@ -4131,10 +4099,10 @@ def part_supplier_redundancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "moving_7d_revenue",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS cents
       FROM events GROUP BY 1, 2
     )
@@ -4160,9 +4128,7 @@ def moving_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -4188,10 +4154,10 @@ def moving_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weekend_lift",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT event_type,
-             CASE WHEN (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 4)
+             CASE WHEN ({duck_epoch('ts', 'day')} + 4)
                        % 7 IN (5, 6) THEN 1 ELSE 0 END AS weekend,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
       FROM events
@@ -4231,7 +4197,7 @@ def weekend_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     d = t(spark, sf_dir, "events").selectExpr(
         "event_type",
-        "CASE WHEN (unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 + 4)"
+        f"CASE WHEN ({spark_epoch('ts', 'day')} + 4)"
         " % 7 IN (5, 6) THEN 1 ELSE 0 END AS weekend",
         "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
     )
@@ -4262,10 +4228,10 @@ def weekend_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rolling_retention_7d",
-    oracle="""
+    oracle=f"""
     WITH d AS MATERIALIZED (
       SELECT DISTINCT
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              user_id
       FROM events
     ),
@@ -4303,7 +4269,7 @@ def rolling_retention_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         t(spark, sf_dir, "events")
         .selectExpr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day_idx",
+            f"{spark_epoch('ts', 'day')} AS day_idx",
             "user_id",
         )
         .distinct()
@@ -4422,7 +4388,7 @@ _LTV_PERIOD_DAYS = 30
     oracle=f"""
     WITH o AS (
       SELECT o_custkey,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                // {_LTV_PERIOD_DAYS} AS period,
              CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)
                AS cents
@@ -4461,8 +4427,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window state is metadata-sized at any corpus size."""
     o = t(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
-        f"unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        f" DIV {_LTV_PERIOD_DAYS} AS period",
+        f"{spark_epoch('o_orderdate', 'day')} DIV {_LTV_PERIOD_DAYS} AS period",
         "CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)"
         " AS cents",
     )
@@ -4512,7 +4477,7 @@ cohort_ltv_curve.__doc__ = (cohort_ltv_curve.__doc__ or "").replace(
     oracle=f"""
     WITH o AS (
       SELECT o_custkey,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                // {_LTV_PERIOD_DAYS} AS period,
              CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)
                AS cents
@@ -4545,8 +4510,7 @@ def new_vs_returning_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver state."""
     o = t(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
-        f"unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        f" DIV {_LTV_PERIOD_DAYS} AS period",
+        f"{spark_epoch('o_orderdate', 'day')} DIV {_LTV_PERIOD_DAYS} AS period",
         "CAST(FLOOR(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT)"
         " AS cents",
     )
@@ -5207,10 +5171,10 @@ def simpsons_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_gap_sensitivity",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     d AS (
@@ -5248,10 +5212,8 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization exchange), one global conditional aggregate, and
     a 3-row unpivot of that single row — the threshold sweep costs
     nothing extra."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
-        "user_id", ts_epoch_seconds(F.col("ts")).alias("sec")
+        "user_id", F.expr(spark_epoch("ts", "s")).alias("sec")
     )
     w = Window.partitionBy("user_id").orderBy("sec", "user_id")
     d = ev.select((F.col("sec") - F.lag("sec").over(w)).alias("delta"))
@@ -5522,10 +5484,10 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bgnbd_input_terms",
-    oracle="""
+    oracle=f"""
     WITH days AS (
       SELECT o_custkey,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                AS day_idx
       FROM orders
     ),
@@ -5557,9 +5519,7 @@ def bgnbd_input_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     house refdate idiom — no second scan, no collect)."""
     days = t(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.expr(
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        ).alias("day_idx"),
+        F.expr(spark_epoch("o_orderdate", "day")).alias("day_idx"),
     )
     per = days.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_ord"),
@@ -5577,10 +5537,10 @@ def bgnbd_input_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_cooccurrence_60s",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     )
     SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -5605,10 +5565,8 @@ def event_cooccurrence_60s(spark: SparkSession, sf_dir: str) -> DataFrame:
     the +/-60 s band is a residual predicate inside the join, never a
     cross product) — per-user event counts bound the wedge volume,
     and the rollup is map-side combinable."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
-        "user_id", "event_type", ts_epoch_seconds(F.col("ts")).alias("sec")
+        "user_id", "event_type", F.expr(spark_epoch("ts", "s")).alias("sec")
     )
     a, b = ev.alias("a"), ev.alias("b")
     pairs = a.join(
@@ -5751,10 +5709,10 @@ def order_brand_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dominant_period_by_type",
-    oracle="""
+    oracle=f"""
     WITH daily AS MATERIALIZED (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              COUNT(*) AS n
       FROM events GROUP BY 1, 2
     ),
@@ -5815,7 +5773,7 @@ def dominant_period_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").alias(
+        F.expr(spark_epoch("ts", "day")).alias(
             "day_idx"
         ),
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -5870,10 +5828,10 @@ def dominant_period_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "user_longest_streak",
-    oracle="""
+    oracle=f"""
     WITH days AS (
       SELECT DISTINCT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
+             {duck_epoch('ts', 'day')} AS d
       FROM events
     ),
     isl AS (
@@ -5909,9 +5867,7 @@ def user_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .select(
             "user_id",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("d"),
+            F.expr(spark_epoch("ts", "day")).alias("d"),
         )
         .distinct()
     )
@@ -6097,10 +6053,10 @@ def share_of_parent_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dwell_time_by_type",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     d AS (
@@ -6130,13 +6086,11 @@ def dwell_time_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one LEAD window partitioned by user_id (the
     sessionization exchange), one map-side-combinable per-type
     rollup."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
-        ts_epoch_seconds(F.col("ts")).alias("sec"),
+        F.expr(spark_epoch("ts", "s")).alias("sec"),
     )
     w = Window.partitionBy("user_id").orderBy("sec", "event_id")
     d = ev.select(
@@ -6154,9 +6108,9 @@ def dwell_time_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "arpu_weekly",
-    oracle="""
+    oracle=f"""
     WITH wk AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // (86400000000 * 7) AS week_idx,
+      SELECT {duck_epoch('ts', 'week')} AS week_idx,
              user_id,
              CASE WHEN event_type = 'purchase'
                   THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
@@ -6182,9 +6136,7 @@ def arpu_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE aggregate keyed on the bounded week grid; the
     distinct-user count partial-aggregates; no join at all."""
     wk = t(spark, sf_dir, "events").select(
-        F.expr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV (86400000000 * 7)"
-        ).alias("week_idx"),
+        F.expr(spark_epoch("ts", "week")).alias("week_idx"),
         "user_id",
         F.expr(
             "CASE WHEN event_type = 'purchase'"
@@ -6291,10 +6243,10 @@ def value_percentile_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "burst_max_rate_per_user",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     rate AS (
@@ -6320,10 +6272,8 @@ def burst_max_rate_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one RANGE window partitioned by user_id (the
     sessionization exchange), a per-user max, and a rollup onto the
     small peak-rate domain — all map-side combinable."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
-        "user_id", ts_epoch_seconds(F.col("ts")).alias("sec")
+        "user_id", F.expr(spark_epoch("ts", "s")).alias("sec")
     )
     w = (
         Window.partitionBy("user_id")
@@ -6436,10 +6386,10 @@ def supplier_customer_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_to_first_purchase",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS us
+             {duck_epoch('ts')} AS us
       FROM events
     ),
     firstbuy AS (
@@ -6472,13 +6422,11 @@ def events_to_first_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: first-purchase election is a keyed argmin; the
     before-count is one equi-join on user_id with the tuple
     comparison as a residual; both rollups map-side combinable."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
-        ts_epoch_micros(F.col("ts")).alias("us"),
+        F.expr(spark_epoch("ts")).alias("us"),
     )
     firstbuy = (
         ev.filter(F.col("event_type") == "purchase")
@@ -6501,10 +6449,10 @@ def events_to_first_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "zero_day_share_by_type",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
+             {duck_epoch('ts', 'day')} AS d
       FROM events GROUP BY 1, 2
     )
     SELECT event_type,
@@ -6529,9 +6477,7 @@ def zero_day_share_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .select(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("d"),
+            F.expr(spark_epoch("ts", "day")).alias("d"),
         )
         .distinct()
     )
@@ -6547,11 +6493,11 @@ def zero_day_share_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "double_charge_candidates",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_orderkey, o_custkey,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS total_c,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS d
+             {duck_epoch('o_orderdate', 'day')} AS d
       FROM orders
     ),
     pairs AS (
@@ -6585,9 +6531,7 @@ def double_charge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
             "total_c"
         ),
-        F.expr(
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        ).alias("d"),
+        F.expr(spark_epoch("o_orderdate", "day")).alias("d"),
     )
     a, b = o.alias("a"), o.alias("b")
     pairs = a.join(
@@ -6766,10 +6710,10 @@ def price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "xyz_demand_variability",
-    oracle="""
+    oracle=f"""
     WITH wk AS (
       SELECT l_partkey,
-             epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 604800000000 AS w,
+             {duck_epoch('l_shipdate', 'week')} AS w,
              CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
       FROM lineitem GROUP BY 1, 2
     ),
@@ -6809,7 +6753,7 @@ def xyz_demand_variability(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .selectExpr(
             "l_partkey",
-            "unix_micros(CAST(l_shipdate AS TIMESTAMP)) DIV 604800000000 AS w",
+            f"{spark_epoch('l_shipdate', 'week')} AS w",
             "CAST(l_quantity AS BIGINT) AS qty",
         )
         .groupBy("l_partkey", "w")
@@ -6898,10 +6842,10 @@ def effect_size_cohens_d_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_entry_exit_matrix",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec
+             {duck_epoch('ts', 's')} AS sec
       FROM events
     ),
     gaps AS (
@@ -6936,11 +6880,9 @@ def session_entry_exit_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization AND both first/last window passes (same
     partitioning, re-sorted in place); the matrix rollup groups on a
     bounded |types|^2 key space."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     e = t(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type",
-        ts_epoch_seconds(F.col("ts")).alias("sec"),
+        F.expr(spark_epoch("ts", "s")).alias("sec"),
     )
     w = Window.partitionBy("user_id").orderBy("sec", "event_id")
     brk = F.when(
@@ -6970,9 +6912,9 @@ def session_entry_exit_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "best_split_sse_terms",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {duck_epoch('ts', 'day')} AS day,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) // 100 AS x
       FROM events GROUP BY 1
     ),
@@ -7023,7 +6965,7 @@ def best_split_sse_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         t(spark, sf_dir, "events")
         .selectExpr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day",
+            f"{spark_epoch('ts', 'day')} AS day",
             "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c",
         )
         .groupBy("day")
@@ -7074,10 +7016,10 @@ def best_split_sse_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "time_split_boundary_audit",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {duck_epoch('ts', 'day')} AS day
       FROM events
     ),
     thr AS (SELECT (MIN(day) + MAX(day)) // 2 AS t FROM e),
@@ -7114,7 +7056,7 @@ def time_split_boundary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout is a global sum."""
     e = t(spark, sf_dir, "events").selectExpr(
         "user_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day",
+        f"{spark_epoch('ts', 'day')} AS day",
     )
     thr = e.agg(F.expr("(MIN(day) + MAX(day)) DIV 2").alias("t"))
     per_user = (
@@ -7143,10 +7085,10 @@ def time_split_boundary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "engagement_decay_scores",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {duck_epoch('ts', 'day')} AS day
       FROM events
     ),
     mx AS (SELECT MAX(day) AS mday FROM e),
@@ -7177,7 +7119,7 @@ def engagement_decay_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded band rollup."""
     e = t(spark, sf_dir, "events").selectExpr(
         "user_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day",
+        f"{spark_epoch('ts', 'day')} AS day",
     )
     mx = e.agg(F.max("day").alias("mday"))
     scored = (
@@ -7265,15 +7207,15 @@ def cart_split_gain_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cold_start_recs_by_nation",
-    oracle="""
+    oracle=f"""
     WITH anchor AS (
-      SELECT MAX(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000)
+      SELECT MAX({duck_epoch('o_orderdate', 'day')})
                AS max_day
       FROM orders
     ),
     recent AS (
       SELECT o_orderkey FROM orders, anchor
-      WHERE epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+      WHERE {duck_epoch('o_orderdate', 'day')}
             > anchor.max_day - 30
     ),
     rev AS (
@@ -7313,12 +7255,10 @@ def cold_start_recs_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nationkey, partkey); the per-nation top-3 window compiles to
     WindowGroupLimit (map-side top-k before the exchange); the
     25-row nation dim is the one justified broadcast."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.floor(ts_epoch_seconds("o_orderdate") / F.lit(86400)).alias("day"),
+        F.expr(spark_epoch("o_orderdate", "day")).alias("day"),
     )
     anchor = o.agg(F.max("day").alias("max_day"))
     recent = (

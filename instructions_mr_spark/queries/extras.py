@@ -8,9 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import cosine_sim, duck_cosine, round_half
+from instructions_mr_spark.functions import cosine_sim, duck_cosine, duck_epoch, round_half, spark_epoch
 from instructions_mr_spark.plans.guard import sql_double_array
-from instructions_mr_spark.queries._util import DEC_QTY, sum_d, t, ts_epoch_seconds
+from instructions_mr_spark.queries._util import DEC_QTY, sum_d, t
 from instructions_mr_spark.registry import query
 
 
@@ -103,9 +103,9 @@ def doc_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_range_frame",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey,
-           COUNT(*) OVER (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
+           COUNT(*) OVER (PARTITION BY o_custkey ORDER BY {duck_epoch('o_orderdate', 's')}
                           RANGE BETWEEN 7776000 PRECEDING AND CURRENT ROW) AS orders_90d
     FROM orders
     """,
@@ -115,7 +115,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer (value-based frame, not row-based)."""
     w = (
         W.partitionBy("o_custkey")
-        .orderBy(F.unix_timestamp("o_orderdate"))
+        .orderBy(F.expr(spark_epoch("o_orderdate", "s")))
         .rangeBetween(-90 * 24 * 3600, W.currentRow)
     )
     return t(spark, sf_dir, "orders").select(
@@ -565,9 +565,8 @@ def funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, session), so the funnel scales with users, not events."""
     e = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = W.partitionBy("user_id").orderBy("ts")
-    gap_new = F.when(
-        (ts_epoch_seconds("ts") - F.lag(ts_epoch_seconds("ts")).over(w)) <= 1800, 0
-    ).otherwise(1)
+    sec = F.expr(spark_epoch("ts", "s"))
+    gap_new = F.when((sec - F.lag(sec).over(w)) <= 1800, 0).otherwise(1)
     numbered = e.withColumn(
         "sid",
         F.sum(gap_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
@@ -933,9 +932,8 @@ def funnel_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
     w = W.partitionBy("user_id").orderBy("ts")
-    gap_new = F.when(
-        (ts_epoch_seconds("ts") - F.lag(ts_epoch_seconds("ts")).over(w)) <= 1800, 0
-    ).otherwise(1)
+    sec = F.expr(spark_epoch("ts", "s"))
+    gap_new = F.when((sec - F.lag(sec).over(w)) <= 1800, 0).otherwise(1)
     numbered = e.withColumn(
         "sid",
         F.sum(gap_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),

@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
+from instructions_mr_spark.functions import duck_epoch, duck_hash, round_half, spark_epoch, spark_hash
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -116,11 +116,11 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_linear_interpolate",
-    oracle="""
+    oracle=f"""
     WITH e2 AS (
       SELECT event_type, event_id,
              date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS tsm,
+             {duck_epoch('ts')} AS tsm,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
       FROM events
     ), obs AS (
@@ -141,7 +141,7 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT DISTINCT event_type FROM events
     ), g AS (
       SELECT ty.event_type, gr.hour_start,
-             CAST(epoch(gr.hour_start) AS BIGINT) // 3600 AS hidx,
+             {duck_epoch('gr.hour_start', 'hour')} AS hidx,
              o.obs_cents
       FROM grid gr CROSS JOIN types ty
       LEFT JOIN obs o
@@ -196,14 +196,12 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     device-month, not the lake."""
     from pyspark.sql import Window
 
-    from instructions_mr_spark.queries._util import ts_epoch_micros, ts_epoch_seconds
-
     e = t(spark, sf_dir, "events")
     e2 = e.select(
         "event_type",
         F.date_trunc("hour", F.col("ts")).alias("hour_start"),
         F.concat(
-            F.lpad(ts_epoch_micros(F.col("ts")).cast("string"), 20, "0"),
+            F.lpad(F.expr(spark_epoch("ts")).cast("string"), 20, "0"),
             F.lpad(F.col("event_id").cast("string"), 12, "0"),
             F.lit(":"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").cast("string"),
@@ -232,9 +230,7 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "hour_start",
-            F.floor(ts_epoch_seconds(F.col("hour_start")) / F.lit(3600))
-            .cast("long")
-            .alias("hidx"),
+            F.expr(spark_epoch("hour_start", "hour")).alias("hidx"),
             "obs_cents",
         )
     )
@@ -673,10 +669,10 @@ range_partition_bounds.__doc__ = (range_partition_bounds.__doc__ or "").replace(
 
 @query(
     "time_weighted_avg",
-    oracle="""
+    oracle=f"""
     WITH e2 AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS tsec,
+             {duck_epoch('ts', 's')} AS tsec,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
              event_id
       FROM events
@@ -710,13 +706,11 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     move to DECIMAL(38,0), the shape is unchanged."""
     from pyspark.sql import Window
 
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     e = t(spark, sf_dir, "events")
     e2 = e.select(
         "event_type",
         "event_id",
-        ts_epoch_seconds(F.col("ts")).alias("tsec"),
+        F.expr(spark_epoch("ts", "s")).alias("tsec"),
         F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias("cents"),
     )
     w = Window.partitionBy("event_type").orderBy("tsec", "event_id")
@@ -870,7 +864,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_gap_report",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT date_trunc('hour', MIN(CAST(ts AS TIMESTAMP))) AS lo,
              date_trunc('hour', MAX(CAST(ts AS TIMESTAMP))) AS hi
@@ -886,7 +880,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     missing AS (
       SELECT ty.event_type, g.hour_start,
-             epoch_us(CAST(g.hour_start AS TIMESTAMP)) // 3600000000 AS hidx
+             {duck_epoch('g.hour_start', 'hour')} AS hidx
       FROM grid g CROSS JOIN types ty
       LEFT JOIN have h
         ON h.event_type = ty.event_type AND h.hour_start = g.hour_start
@@ -919,8 +913,6 @@ def ts_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hours x types), partitioned per series."""
     from pyspark.sql import Window
 
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     e = t(spark, sf_dir, "events")
     grid = (
         e.agg(
@@ -944,9 +936,7 @@ def ts_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "hour_start",
-            F.floor(ts_epoch_seconds(F.col("hour_start")) / F.lit(3600))
-            .cast("long")
-            .alias("hidx"),
+            F.expr(spark_epoch("hour_start", "hour")).alias("hidx"),
         )
     )
     runs = missing.withColumn(
@@ -1240,11 +1230,11 @@ def recon_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shipment_latency_audit",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT o.o_orderpriority,
-             epoch_us(CAST(l.l_shipdate AS TIMESTAMP)) // 86400000000
-             - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('l.l_shipdate', 'day')}
+             - {duck_epoch('o.o_orderdate', 'day')}
                AS gap_days
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     )
@@ -1273,14 +1263,12 @@ def shipment_latency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable onto 5 priority rows."""
     li = t(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey",
-        "unix_micros(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000000"
-        " AS ship_day",
+        f"{spark_epoch('l_shipdate', 'day')} AS ship_day",
     )
     o = t(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderpriority",
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        " AS order_day",
+        f"{spark_epoch('o_orderdate', 'day')} AS order_day",
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
         "o_orderpriority", (F.col("ship_day") - F.col("order_day")).alias("gap_days")
@@ -1616,10 +1604,10 @@ def linenumber_contiguity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "id_time_monotonicity_audit",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS us
+             {duck_epoch('ts')} AS us
       FROM events
     ),
     d AS (
@@ -1648,10 +1636,8 @@ def id_time_monotonicity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one LAG window partitioned by user, one global
     conditional rollup — the standard sessionization exchange."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     ev = t(spark, sf_dir, "events").select(
-        "user_id", "event_id", ts_epoch_micros(F.col("ts")).alias("us")
+        "user_id", "event_id", F.expr(spark_epoch("ts")).alias("us")
     )
     from pyspark.sql import Window
 
@@ -2025,7 +2011,7 @@ _ZQ_DY_LO, _ZQ_DY_HI = 32, 95
     WITH base AS (
       SELECT o_orderkey,
              o_custkey,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('o_orderdate', 'day')}
                AS day_idx
       FROM orders
     ),
@@ -2107,8 +2093,7 @@ def zorder_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_custkey",
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        " AS day_idx",
+        f"{spark_epoch('o_orderdate', 'day')} AS day_idx",
     )
     bounds = base.agg(
         F.max("o_custkey").alias("maxc"),

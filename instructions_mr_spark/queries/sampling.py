@@ -22,7 +22,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, round_half, spark_hash
+from instructions_mr_spark.functions import duck_epoch, duck_hash, round_half, spark_epoch, spark_hash
 from instructions_mr_spark.queries._util import DEC_TOTAL, sum_d, t
 from instructions_mr_spark.registry import query
 
@@ -592,7 +592,7 @@ def top_p_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH ranked AS (
       SELECT event_type,
              ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                ORDER BY epoch_us(CAST(ts AS TIMESTAMP)),
+                                ORDER BY {duck_epoch('ts')},
                                          event_id) AS rn
       FROM events
     ),
@@ -622,11 +622,7 @@ def contribution_bounding_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the ranked rows into a map-side-combinable conditional
     sum — 4 x |types| result rows."""
     from pyspark.sql import Window
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        ts_epoch_seconds("ts"), "event_id"
-    )
+    w = Window.partitionBy("user_id", "event_type").orderBy(F.expr(spark_epoch("ts")), "event_id")
     ranked = t(spark, sf_dir, "events").select(
         "event_type", F.row_number().over(w).alias("rn")
     )

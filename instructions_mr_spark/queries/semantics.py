@@ -23,6 +23,7 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_epoch, spark_epoch
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -260,8 +261,8 @@ def hof_lambda_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- interval merge (gaps & islands)
 
-_SHIP_DAY = "unix_micros(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000000"
-_DUCK_SHIP_DAY = "epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000"
+_SHIP_DAY = spark_epoch("l_shipdate", "day")
+_DUCK_SHIP_DAY = duck_epoch("l_shipdate", "day")
 
 
 @query(
@@ -1389,11 +1390,11 @@ def regexp_extract_all_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "distinct_on_contract",
-    oracle="""
+    oracle=f"""
     SELECT DISTINCT ON (o_custkey)
            CAST(o_custkey AS BIGINT) AS custkey,
            CAST(o_orderkey AS BIGINT) AS latest_orderkey,
-           CAST(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+           CAST({duck_epoch('o_orderdate', 'day')}
                 AS BIGINT) AS latest_epoch_day,
            CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS latest_cents
     FROM orders
@@ -1414,8 +1415,6 @@ def distinct_on_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rn=1 filter to WindowGroupLimit (top-1 per key runs map-side
     before the shuffle), so the exchange carries one row per customer
     — the DISTINCT ON plan, recovered by the optimizer."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
     )
@@ -1432,9 +1431,7 @@ def distinct_on_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_custkey").cast("bigint").alias("custkey"),
             F.col("o_orderkey").cast("bigint").alias("latest_orderkey"),
-            F.floor(ts_epoch_seconds("o_orderdate") / F.lit(86400))
-            .cast("bigint")
-            .alias("latest_epoch_day"),
+            F.expr(spark_epoch("o_orderdate", "day")).alias("latest_epoch_day"),
             F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
                 "latest_cents"
             ),
@@ -1796,10 +1793,10 @@ def lateral_alias_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ignore_nulls_contract",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+             {duck_epoch('ts')} AS us,
              CASE WHEN event_type = 'purchase'
                   THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END AS pc
       FROM events
@@ -1837,12 +1834,10 @@ def ignore_nulls_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: user-keyed windows end to end (thousands of
     partitions); no join, no global sort."""
-    from instructions_mr_spark.queries._util import ts_epoch_micros
-
     e = t(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
-        ts_epoch_micros("ts").alias("us"),
+        F.expr(spark_epoch("ts")).alias("us"),
         F.expr(
             "CASE WHEN event_type = 'purchase'"
             " THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END"

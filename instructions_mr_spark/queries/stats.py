@@ -18,13 +18,14 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import duck_hash, duck_sign_bucket, round_half, sign_bucket, spark_hash
+from instructions_mr_spark.functions import (
+    duck_epoch, duck_hash, duck_sign_bucket, round_half, sign_bucket, spark_epoch, spark_hash,
+)
 from instructions_mr_spark.queries._util import (
     DEC_PRICE,
     dec_double,
     supersede_checkpoint,
     t,
-    ts_epoch_seconds,
 )
 from instructions_mr_spark.registry import query
 
@@ -381,6 +382,13 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DIM_MEAN = "CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)"
+_DIM_VAR = round_half(
+    f"{dec_double('SUM(CAST(xi AS DECIMAL(38,0)) * xi)')} / 1e16 / COUNT(*)"
+    f" - ({_DIM_MEAN}) * ({_DIM_MEAN})", 9
+)
+
+
 @query(
     "embedding_dim_stats",
     oracle=f"""
@@ -391,10 +399,8 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT dim,
            COUNT(*) AS n,
-           {round_half('CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)', 9)} AS mean,
-           {round_half('CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)'
-             ' - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))'
-               ' * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))', 9)} AS var,
+           {round_half(_DIM_MEAN, 9)} AS mean,
+           {_DIM_VAR} AS var,
            {round_half('CAST(MIN(xi) AS DOUBLE) / 1e8', 9)} AS min_x,
            {round_half('CAST(MAX(xi) AS DOUBLE) / 1e8', 9)} AS max_x
     FROM dims GROUP BY dim
@@ -423,12 +429,8 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr(round_half('CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*)', 9)).alias("mean"),
-        F.expr(
-            round_half("CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e16 / COUNT(*)"
-                       " - (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))"
-                       " * (CAST(SUM(xi) AS DOUBLE) / 1e8 / COUNT(*))", 9)
-        ).alias("var"),
+        F.expr(round_half(_DIM_MEAN, 9)).alias("mean"),
+        F.expr(_DIM_VAR).alias("var"),
         F.expr(round_half('CAST(MIN(xi) AS DOUBLE) / 1e8', 9)).alias("min_x"),
         F.expr(round_half('CAST(MAX(xi) AS DOUBLE) / 1e8', 9)).alias("max_x"),
     )
@@ -1948,10 +1950,10 @@ def auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kendall_tau_terms",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                AS cents
       FROM events GROUP BY 1, 2
@@ -1987,9 +1989,7 @@ def kendall_tau_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -2022,10 +2022,10 @@ def kendall_tau_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ordinal_pattern_counts",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                AS cents
       FROM events GROUP BY 1, 2
@@ -2067,9 +2067,7 @@ def ordinal_pattern_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -2293,10 +2291,10 @@ def winsorize_clip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "acf_lag_terms",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) // 100 AS x
       FROM events GROUP BY 1, 2
     ),
@@ -2333,9 +2331,7 @@ def acf_lag_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -2435,10 +2431,10 @@ def chi2_lang_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "runs_test_counts",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS cents
       FROM events GROUP BY 1, 2
     ),
@@ -2495,9 +2491,7 @@ def runs_test_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -2689,9 +2683,9 @@ def theil_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- Mann-Kendall trend test
 
-_MK_DUCK = """
+_MK_DUCK = f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+      SELECT {duck_epoch('o_orderdate', 'day')}
                AS day_idx,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
                AS cents
@@ -2726,8 +2720,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     locale drift)."""
     o = t(spark, sf_dir, "orders")
     daily = o.selectExpr(
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-        " AS day_idx",
+        f"{spark_epoch('o_orderdate', 'day')} AS day_idx",
         "CAST(o_totalprice AS DECIMAL(12,2)) AS p",
     ).groupBy("day_idx").agg(
         F.expr("CAST(SUM(p) * 100 AS BIGINT)").alias("cents")
@@ -2923,9 +2916,9 @@ _KM_CHURN_GAP_DAYS = 90
 _KM_DUCK = f"""
     WITH per_cust AS (
       SELECT o_custkey,
-             MIN(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000)
+             MIN({duck_epoch('o_orderdate', 'day')})
                AS first_day,
-             MAX(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000)
+             MAX({duck_epoch('o_orderdate', 'day')})
                AS last_day
       FROM orders GROUP BY 1
     ),
@@ -2996,9 +2989,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from instructions_mr_spark.queries._util import two_phase_cumsum
 
     o = t(spark, sf_dir, "orders")
-    day = F.expr(
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-    )
+    day = F.expr(spark_epoch("o_orderdate", "day"))
     per_cust = o.groupBy("o_custkey").agg(
         F.min(day).alias("first_day"), F.max(day).alias("last_day")
     )
@@ -3080,9 +3071,9 @@ kaplan_meier_retention.__doc__ = (kaplan_meier_retention.__doc__ or "").replace(
 
 # --------------------------------- STL-style daily residual decompose
 
-_STL_DUCK = """
+_STL_DUCK = f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+      SELECT {duck_epoch('o_orderdate', 'day')}
                AS day_idx,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
                AS cents
@@ -3131,7 +3122,7 @@ def stl_residual_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, and the top-25 is TakeOrderedAndProject."""
     o = t(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000")
+        F.expr(spark_epoch("o_orderdate", "day"))
         .alias("day_idx")
     ).agg(
         F.expr(
@@ -3176,9 +3167,9 @@ def stl_residual_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------- Theil-Sen slope
 
-_TSEN_DUCK = """
+_TSEN_DUCK = f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+      SELECT {duck_epoch('o_orderdate', 'day')}
                AS day_idx,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) * 100 AS BIGINT)
                AS cents
@@ -3225,7 +3216,7 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded histogram."""
     o = t(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000")
+        F.expr(spark_epoch("o_orderdate", "day"))
         .alias("day_idx")
     ).agg(
         F.expr(
@@ -3593,8 +3584,8 @@ def anova_two_way_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "daily_value_ribbon",
-    oracle="""
-    SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000
+    oracle=f"""
+    SELECT {duck_epoch('o_orderdate', 'day')}
              AS day_idx,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(FLOOR(quantile_disc(o_totalprice, 0.25) * 100 + 0.5)
@@ -3622,10 +3613,7 @@ def daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t(spark, sf_dir, "orders")
         .groupBy(
-            F.expr(
-                "unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-                " DIV 86400000000"
-            ).alias("day_idx")
+            F.expr(spark_epoch("o_orderdate", "day")).alias("day_idx")
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3771,11 +3759,11 @@ def feature_target_corr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "monthly_median_daily_rev",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT date_part('year', o_orderdate) * 12
                + date_part('month', o_orderdate) AS month_idx,
-             epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS d,
+             {duck_epoch('o_orderdate', 'day')} AS d,
              SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
       FROM orders GROUP BY 1, 2
     )
@@ -3801,9 +3789,7 @@ def monthly_median_daily_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)"
             ).alias("month_idx"),
-            F.expr(
-                "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-            ).alias("d"),
+            F.expr(spark_epoch("o_orderdate", "day")).alias("d"),
         )
         .agg(
             F.expr(
@@ -3968,7 +3954,7 @@ def kanon_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sentinel_value_audit",
-    oracle="""
+    oracle=f"""
     WITH checks AS (
       SELECT 'events.value' AS col,
              COUNT(*) AS n_rows,
@@ -3979,7 +3965,7 @@ def kanon_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL
       SELECT 'events.ts', COUNT(*),
              0, 0,
-             SUM(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) = 0 THEN 1 ELSE 0 END),
+             SUM(CASE WHEN {duck_epoch('ts')} = 0 THEN 1 ELSE 0 END),
              0
       FROM events
       UNION ALL
@@ -4028,7 +4014,7 @@ def sentinel_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint").alias("zeroish"),
         F.lit(0).cast("bigint").alias("negative"),
         F.sum(
-            F.when(F.expr("unix_micros(CAST(ts AS TIMESTAMP))") == 0, 1).otherwise(0)
+            F.when(F.expr(spark_epoch("ts")) == 0, 1).otherwise(0)
         ).cast("bigint").alias("epoch_zero"),
         F.lit(0).cast("bigint").alias("empty_str"),
     )
@@ -4386,7 +4372,7 @@ _WELCH_DF = round_half(f"{_WELCH_SE2} * {_WELCH_SE2} / "
     oracle=f"""
     WITH d AS (
       SELECT event_type,
-             CASE WHEN (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 4)
+             CASE WHEN ({duck_epoch('ts', 'day')} + 4)
                        % 7 IN (6, 0) THEN 1 ELSE 0 END AS sat_sun,
              CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
       FROM events
@@ -4424,8 +4410,7 @@ def welch_ttest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable conditional aggregate keyed
     by event_type (5 groups); the t/df arithmetic runs on the 5-row
     result.  No window, no join."""
-    sec = ts_epoch_seconds("ts")
-    dow = (F.floor(sec / F.lit(86400)).cast("bigint") + 4) % 7
+    dow = (F.expr(spark_epoch("ts", "day")) + 4) % 7
     d = t(spark, sf_dir, "events").select(
         "event_type",
         F.when(dow.isin(6, 0), 1).otherwise(0).alias("sat_sun"),
@@ -4642,7 +4627,7 @@ def _duck_cramers_pair(pair: str, table: str, a: str, b: str) -> str:
     oracle=f"""
     WITH ev AS (
       SELECT event_type,
-             (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 4) % 7 AS dow
+             ({duck_epoch('ts', 'day')} + 4) % 7 AS dow
       FROM events
     )
     {_duck_cramers_pair("doc_lang_x_source", "documents", "lang", "source")}
@@ -4707,10 +4692,8 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sec = ts_epoch_seconds("ts")
     ev = t(spark, sf_dir, "events").select(
-        "event_type",
-        ((F.floor(sec / F.lit(86400)).cast("bigint") + 4) % 7).alias("dow"),
+        "event_type", ((F.expr(spark_epoch("ts", "day")) + 4) % 7).alias("dow"),
     )
     out = (
         pair("doc_lang_x_source", t(spark, sf_dir, "documents"), "lang", "source")
@@ -4761,8 +4744,8 @@ _ISO_RATIO = round_half(f'({_ISO_NORM2_OF_MEAN}) / ({_ISO_MEAN_NORM2})', 9)
            {round_half(_ISO_MEAN_NORM2, 9)} AS mean_norm2,
            {round_half(_ISO_NORM2_OF_MEAN, 9)} AS norm2_of_mean,
            {_ISO_RATIO} AS isotropy_defect
-    FROM (SELECT label, CAST(s2 AS DOUBLE) AS s2,
-                 CAST(ss_all AS DOUBLE) AS ss_all FROM per_label) l
+    FROM (SELECT label, {dec_double('s2')} AS s2,
+                 {dec_double('ss_all')} AS ss_all FROM per_label) l
     JOIN n_tab n USING (label)
     ORDER BY l.label
     """,
@@ -4804,8 +4787,8 @@ def embedding_isotropy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_label.selectExpr(
             "label",
-            "CAST(s2 AS DOUBLE) AS s2",
-            "CAST(ss_all AS DOUBLE) AS ss_all",
+            f"{dec_double('s2')} AS s2",
+            f"{dec_double('ss_all')} AS ss_all",
         )
         .join(F.broadcast(n_tab), "label")
         .selectExpr(
@@ -4903,7 +4886,7 @@ _VR = round_half("(ss_b / n_b - (CAST(s_b AS DOUBLE) / n_b) * (CAST(s_b AS DOUBL
     "variance_ratio_terms",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {duck_epoch('l_shipdate', 'day')} AS day,
              CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
                             * (1 - CAST(l_discount AS DECIMAL(8,4)))) * 100)
                   AS BIGINT) AS cents
@@ -4929,7 +4912,7 @@ _VR = round_half("(ss_b / n_b - (CAST(s_b AS DOUBLE) / n_b) * (CAST(s_b AS DOUBL
     terms AS (
       SELECT k, CAST(COUNT(*) AS BIGINT) AS n_b,
              CAST(SUM(bc) AS BIGINT) AS s_b,
-             CAST(SUM(CAST(bc AS HUGEINT) * bc) AS DOUBLE) AS ss_b
+             {dec_double('SUM(CAST(bc AS HUGEINT) * bc)')} AS ss_b
       FROM bsums GROUP BY k
     ),
     base AS (SELECT n_b AS n1, s_b AS s1, ss_b AS ss1 FROM terms WHERE k = 1)
@@ -4956,12 +4939,10 @@ def variance_ratio_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one day-keyed aggregate (calendar-bounded) is the
     only corpus exchange; the spine, block roll-ups and the 4-row
     ratio all run on day-grid-sized tables.  No window."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     daily = (
         t(spark, sf_dir, "lineitem")
         .select(
-            F.floor(ts_epoch_seconds("l_shipdate") / F.lit(86400)).alias("day"),
+            F.expr(spark_epoch("l_shipdate", "day")).alias("day"),
             F.expr(
                 "CAST(l_extendedprice AS DECIMAL(12,2))"
                 " * (1 - CAST(l_discount AS DECIMAL(8,4)))"
@@ -5006,9 +4987,7 @@ def variance_ratio_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_b"),
             F.sum("bc").cast("bigint").alias("s_b"),
-            F.sum(F.expr("CAST(bc AS DECIMAL(38,0)) * bc"))
-            .cast("double")
-            .alias("ss_b"),
+            F.expr(dec_double("SUM(CAST(bc AS DECIMAL(38,0)) * bc)")).alias("ss_b"),
         )
     )
     base = terms.filter("k = 1").selectExpr(
@@ -5040,7 +5019,7 @@ _BURST_CV = f"SQRT({_BURST_VAR}) / ({_BURST_MEAN})"
     oracle=f"""
     WITH e AS (
       SELECT user_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
+             {duck_epoch('ts', 's')} AS sec,
              event_id
       FROM events
     ),
@@ -5077,10 +5056,8 @@ def interarrival_burstiness_terms(spark: SparkSession, sf_dir: str) -> DataFrame
     would serialize the sort at scale); the type roll-up is a
     map-side-combinable sum of BIGINT gap terms (ss 128-bit-widened,
     exposed as DOUBLE by dec_double); cv and B derive by one shared expression."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     e = t(spark, sf_dir, "events").select(
-        "user_id", "event_type", ts_epoch_seconds("ts").alias("sec"), "event_id"
+        "user_id", "event_type", F.expr(spark_epoch("ts", "s")).alias("sec"), "event_id"
     )
     w = Window.partitionBy("user_id", "event_type").orderBy("sec", "event_id")
     gaps = e.select(
@@ -5572,7 +5549,7 @@ _FOURIER_S = f"CAST({round_half('SIN(2 * PI() * doy / 365)', 4)} AS DECIMAL(6,4)
     "fourier_seasonality_terms",
     oracle=f"""
     WITH daily AS (
-      SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {duck_epoch('l_shipdate', 'day')} AS day,
              CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
                             * (1 - CAST(l_discount AS DECIMAL(8,4)))) * 100)
                   AS BIGINT) AS cents
@@ -5584,8 +5561,8 @@ _FOURIER_S = f"CAST({round_half('SIN(2 * PI() * doy / 365)', 4)} AS DECIMAL(6,4)
     sums AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(cents) AS BIGINT) AS sy,
-             CAST(SUM(cents * {_FOURIER_C}) AS DOUBLE) AS syc,
-             CAST(SUM(cents * {_FOURIER_S}) AS DOUBLE) AS sys
+             {dec_double(f'SUM(cents * {_FOURIER_C})')} AS syc,
+             {dec_double(f'SUM(cents * {_FOURIER_S})')} AS sys
       FROM basis
     )
     SELECT n, sy,
@@ -5609,12 +5586,10 @@ def fourier_seasonality_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one day-keyed aggregate (calendar-bounded) is the
     corpus exchange; the regression sums run over the day grid and
     collapse to one row."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     daily = (
         t(spark, sf_dir, "lineitem")
         .select(
-            F.floor(ts_epoch_seconds("l_shipdate") / F.lit(86400)).alias("day"),
+            F.expr(spark_epoch("l_shipdate", "day")).alias("day"),
             F.expr(
                 "CAST(l_extendedprice AS DECIMAL(12,2))"
                 " * (1 - CAST(l_discount AS DECIMAL(8,4)))"
@@ -5627,8 +5602,8 @@ def fourier_seasonality_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = basis.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("sy"),
-        F.expr(f"CAST(SUM(cents * {_FOURIER_C}) AS DOUBLE)").alias("syc"),
-        F.expr(f"CAST(SUM(cents * {_FOURIER_S}) AS DOUBLE)").alias("sys"),
+        F.expr(dec_double(f"SUM(cents * {_FOURIER_C})")).alias("syc"),
+        F.expr(dec_double(f"SUM(cents * {_FOURIER_S})")).alias("sys"),
     )
     return sums.selectExpr(
         "n",

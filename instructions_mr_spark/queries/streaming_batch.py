@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import round_half
-from instructions_mr_spark.queries._util import DEC_VALUE, sum_d, t, ts_epoch_micros
+from instructions_mr_spark.functions import duck_epoch, round_half, spark_epoch
+from instructions_mr_spark.queries._util import DEC_VALUE, sum_d, t
 from instructions_mr_spark.registry import query
 
 
@@ -111,7 +111,7 @@ _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, micros
     oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
+             {duck_epoch('ts')} AS ts_us
       FROM events
     ), flagged AS (
       SELECT *,
@@ -157,7 +157,7 @@ def stream_funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "event_type",
-        ts_epoch_micros("ts").alias("ts_us"),
+        F.expr(spark_epoch("ts")).alias("ts_us"),
     )
     w = W.partitionBy("user_id").orderBy("ts_us", "event_id")
     prev = F.lag("ts_us").over(w)
@@ -234,10 +234,10 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_join_interval",
-    oracle="""
+    oracle=f"""
     SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-           CAST((epoch_us(CAST(c.ts AS TIMESTAMP))
-                 - epoch_us(CAST(v.ts AS TIMESTAMP))) // 1000000 AS BIGINT)
+           CAST(({duck_epoch('c.ts')}
+                 - {duck_epoch('v.ts')}) // 1000000 AS BIGINT)
              AS lag_sec
     FROM (SELECT * FROM events WHERE event_type = 'view') v
     JOIN (SELECT * FROM events WHERE event_type = 'click') c
@@ -272,7 +272,7 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") < F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
     lag_sec = (
-        ts_epoch_micros(F.col("c_ts")) - ts_epoch_micros(F.col("v_ts"))
+        F.expr(spark_epoch("c_ts")) - F.expr(spark_epoch("v_ts"))
     ) / 1_000_000
     return j.select(
         "user_id", "view_id", "click_id", lag_sec.cast("long").alias("lag_sec")
@@ -425,11 +425,11 @@ def stream_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_disorder_histogram",
-    oracle="""
+    oracle=f"""
     WITH arr AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS tsu,
-             MAX(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
+             {duck_epoch('ts')} AS tsu,
+             MAX({duck_epoch('ts')}) OVER (
                PARTITION BY event_type ORDER BY event_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS seen_max
       FROM events
@@ -464,7 +464,7 @@ def event_disorder_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = t(spark, sf_dir, "events")
-    tsu = ts_epoch_micros("ts")
+    tsu = F.expr(spark_epoch("ts"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("event_id")
@@ -557,10 +557,10 @@ def stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_ohlc_hourly",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour_idx,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
+      SELECT {duck_epoch('ts', 'hour')} AS hour_idx,
+             {duck_epoch('ts')} AS ts_us,
              event_id,
              CAST(value AS DECIMAL(12,4)) AS v
       FROM events WHERE event_type = 'purchase'
@@ -596,10 +596,8 @@ def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
-            (ts_epoch_micros("ts") / F.lit(3600000000)).cast("long").alias(
-                "hour_idx"
-            ),
-            ts_epoch_micros("ts").alias("ts_us"),
+            F.expr(spark_epoch("ts", "hour")).alias("hour_idx"),
+            F.expr(spark_epoch("ts")).alias("ts_us"),
             "event_id",
             F.expr("CAST(value AS DECIMAL(12,4))").alias("v"),
         )
@@ -617,10 +615,10 @@ def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_dynamic_gap",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
+             {duck_epoch('ts', 's')} AS sec,
              CASE WHEN event_type = 'click' THEN 300 ELSE 1800 END AS gap_s
       FROM events
     ),
@@ -661,8 +659,6 @@ def session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange partitioned by user_id plus a group-local sort — the
     same cost as plain sessionization; the dynamic gap is a per-row
     expression, not a second pass."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         F.col("ts").cast("timestamp").alias("tts"),
@@ -676,12 +672,8 @@ def session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "user_id",
-        ts_epoch_seconds(F.col("session_window.start"))
-        .cast("bigint")
-        .alias("start_sec"),
-        ts_epoch_seconds(F.col("session_window.end"))
-        .cast("bigint")
-        .alias("end_sec"),
+        F.expr(spark_epoch("session_window.start", "s")).alias("start_sec"),
+        F.expr(spark_epoch("session_window.end", "s")).alias("end_sec"),
         "n_events",
     )
 

@@ -27,14 +27,15 @@ from instructions_mr_spark.plans.guard import literal_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from instructions_mr_spark.functions import duck_epoch, spark_epoch
 from instructions_mr_spark.queries._util import dec_double, t
 from instructions_mr_spark.registry import query
 
 # Daily orders revenue in whole dollars (BIGINT-safe squares through
 # ~1e9x scale-up, same bound as acf_lag_terms): cents-exact floor,
 # then whole-dollar truncation.  Shared verbatim with the oracles.
-_DAY_IDX_ORD = "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000"
-_DUCK_DAY_ORD = "epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000"
+_DAY_IDX_ORD = spark_epoch("o_orderdate", "day")
+_DUCK_DAY_ORD = duck_epoch("o_orderdate", "day")
 _REV_DOLLARS = "SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) DIV 100"
 _DUCK_REV = "SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) // 100"
 
@@ -53,14 +54,14 @@ def _orders_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ccf_lag_terms",
-    oracle="""
+    oracle=f"""
     WITH cx AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+      SELECT {duck_epoch('ts', 'day')} AS day_idx,
              COUNT(*) AS x
       FROM events WHERE event_type = 'click' GROUP BY 1
     ),
     py AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+      SELECT {duck_epoch('ts', 'day')} AS day_idx,
              SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) // 100 AS y
       FROM events WHERE event_type = 'purchase' GROUP BY 1
     ),
@@ -93,7 +94,7 @@ def ccf_lag_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily grids (equi-join on shifted day index against a broadcast
     4-row lag table) and the moment rollup is map-side combinable."""
     ev = t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
+    day = F.expr(spark_epoch("ts", "day"))
     cx = (
         ev.filter(F.col("event_type") == "click")
         .groupBy(day.alias("day_idx"))
@@ -282,10 +283,10 @@ def bollinger_breach_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vwap_anchored_daily",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT l_returnflag,
-             epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000
+             {duck_epoch('l_shipdate', 'day')}
                AS day_idx,
              SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
                AS p_cents,
@@ -325,9 +326,7 @@ def vwap_anchored_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .groupBy(
             "l_returnflag",
-            F.expr(
-                "unix_micros(CAST(l_shipdate AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("l_shipdate", "day")).alias("day_idx"),
         )
         .agg(
             F.expr(
@@ -368,10 +367,10 @@ def vwap_anchored_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "forecast_dow_naive_terms",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              COUNT(*) AS n
       FROM events GROUP BY 1, 2
     )
@@ -404,9 +403,7 @@ def forecast_dow_naive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -574,7 +571,7 @@ def updown_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              COUNT(*) AS n
       FROM events GROUP BY 1, 2
     )
@@ -612,9 +609,7 @@ def poisson_dispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -768,10 +763,10 @@ def promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lag_features_daily",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_idx,
+             {duck_epoch('ts', 'day')} AS day_idx,
              COUNT(*) AS n
       FROM events GROUP BY 1, 2
     )
@@ -801,9 +796,7 @@ def lag_features_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("day_idx"),
+            F.expr(spark_epoch("ts", "day")).alias("day_idx"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -916,11 +909,10 @@ def trend_accel_7v28(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_movers_wow_parts",
-    oracle="""
+    oracle=f"""
     WITH wk AS (
       SELECT l_partkey,
-             epoch_us(CAST(l_shipdate AS TIMESTAMP))
-               // (86400000000 * 7) AS week_idx,
+             {duck_epoch('l_shipdate', 'week')} AS week_idx,
              SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
       FROM lineitem GROUP BY 1, 2
     ),
@@ -954,10 +946,7 @@ def top_movers_wow_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .groupBy(
             "l_partkey",
-            F.expr(
-                "unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-                " DIV (86400000000 * 7)"
-            ).alias("week_idx"),
+            F.expr(spark_epoch("l_shipdate", "week")).alias("week_idx"),
         )
         .agg(
             F.expr(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from instructions_mr_spark.functions import round_half
+from instructions_mr_spark.functions import duck_epoch, round_half, spark_epoch
 from instructions_mr_spark.queries._util import t
 from instructions_mr_spark.registry import query
 
@@ -337,11 +337,11 @@ def window_ewma_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rolling_corr_terms",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT CAST(date_trunc('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
                AS hour_start,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr,
+             {duck_epoch('ts', 'hour')} AS hr,
              SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
              SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y
       FROM events GROUP BY 1, 2
@@ -381,7 +381,7 @@ def rolling_corr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
     h = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000").alias("hr"),
+        F.expr(spark_epoch("ts", "hour")).alias("hr"),
     ).agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("x"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("y"),
@@ -450,10 +450,10 @@ def window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_locf_fill",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT event_id, user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
+             {duck_epoch('ts', 's')} AS sec,
              CASE WHEN event_type = 'click' THEN NULL
                   ELSE CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END AS v
       FROM events
@@ -480,12 +480,10 @@ def window_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE window partitioned by user_id (the natural key)
     with last(ignorenulls) over a running ROWS frame — the same
     single exchange plain sessionization costs."""
-    from instructions_mr_spark.queries._util import ts_epoch_seconds
-
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        ts_epoch_seconds(F.col("ts")).alias("sec"),
+        F.expr(spark_epoch("ts", "s")).alias("sec"),
         F.expr(
             "CASE WHEN event_type = 'click' THEN NULL"
             " ELSE CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END"

@@ -165,6 +165,79 @@ def test_round_half_is_bit_identical_across_engines(spark, tmp_path):
     assert bare[0] > 0 and bare[1] > 0, bare
 
 
+# microseconds per unit of functions.spark_epoch / duck_epoch
+_EPOCH_UNITS = {
+    "us": 1, "s": 10**6, "hour": 3600 * 10**6, "day": 86400 * 10**6, "week": 604800 * 10**6,
+}
+
+
+def _epoch_inputs() -> list[int]:
+    """~20k microsecond timestamps: uniform over 1906-2096 (most carry a
+    sub-second part, a third fall before 1970), exact multiples of every
+    seam unit and their +-1 us neighbours on both sides of the epoch,
+    and 0."""
+    import random
+
+    rng = random.Random(18)
+    lo, hi = -2_019_686_400_000_000, 3_999_744_000_000_000  # 1906 .. 2096
+    xs = [rng.randrange(lo, hi) for _ in range(16_000)]
+    for n in _EPOCH_UNITS.values():
+        for k in rng.sample(range(-(abs(lo) // n), hi // n), 250) + [-1, 1]:
+            xs += [k * n - 1, k * n, k * n + 1]
+    return xs + [0]
+
+
+def test_epoch_units_agree_across_engines(spark, tmp_path):
+    """spark_epoch on Spark and duck_epoch on DuckDB read one tz-less
+    Parquet file (TIMESTAMP_NTZ in Spark) and one UTC-adjusted file
+    (an instant) and must give the same BIGINT at every unit, with
+    DuckDB's TimeZone set to UTC and to a non-UTC zone.  The spellings
+    the seam replaced fail on the same file: a Spark cast to BIGINT
+    floors pre-1970 seconds and DuckDB's ``CAST(epoch(ts) AS BIGINT)``
+    rounds them to nearest.  Any other unit raises."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from instructions_mr_spark.functions import duck_epoch, spark_epoch
+
+    for twin in (spark_epoch, duck_epoch):
+        with pytest.raises(ValueError):
+            twin("ts", "minute")
+    xs = _epoch_inputs()
+    ids = pa.array(range(len(xs)), pa.int64())
+    for tz in (None, "UTC"):
+        path = str(tmp_path / f"ts_{tz}.parquet")
+        pq.write_table(pa.table({"id": ids, "ts": pa.array(xs, pa.timestamp("us", tz))}), path)
+        got = spark.read.parquet(path).select(
+            "id", *[F.expr(spark_epoch("ts", u)).alias(u) for u in _EPOCH_UNITS]
+        )
+        spark_rows = {r[0]: tuple(r[1:]) for r in got.collect()}
+        assert len(spark_rows) == len(xs)
+        for i, x in enumerate(xs):  # whole units since the epoch, truncated toward zero
+            sign = 1 if x >= 0 else -1
+            assert spark_rows[i] == tuple(sign * (abs(x) // n) for n in _EPOCH_UNITS.values()), x
+        for zone in ("UTC", "America/New_York"):
+            con = duckdb.connect()
+            con.execute(f"SET TimeZone = '{zone}'")
+            want = con.sql(
+                "SELECT id, " + ", ".join(duck_epoch("ts", u) for u in _EPOCH_UNITS)
+                + f" FROM read_parquet('{path}')"
+            ).fetchall()
+            bad = [(xs[r[0]], spark_rows[r[0]], r[1:]) for r in want if spark_rows[r[0]] != r[1:]]
+            assert not bad, f"{tz}/{zone}: {len(bad)} values differ, first: {bad[:3]}"
+    # the fault the seam removes is visible on the tz-less file
+    path = str(tmp_path / "ts_None.parquet")
+    old_spark = dict(
+        spark.read.parquet(path).selectExpr("id", "CAST(CAST(ts AS TIMESTAMP) AS BIGINT)").collect()
+    )
+    old_duck = dict(
+        duckdb.sql(f"SELECT id, CAST(epoch(ts) AS BIGINT) FROM read_parquet('{path}')").fetchall()
+    )
+    assert sum(old_spark[i] != old_duck[i] for i in old_duck) > 0
+
+
 def test_hamming64(spark):
     df = spark.createDataFrame([(0b1011, 0b0011), (5, 5)], "a long, b long")
     got = [r.h for r in df.select(hamming64(F.col("a"), F.col("b")).alias("h")).collect()]

@@ -5,6 +5,9 @@ BIGINT)``, ``unix_micros(ts)``).  The driver's testdata is written
 tz-less, so every events/orders time expression must be NTZ-safe —
 this file pins that contract after round 3's ``join_asof_nearest``
 driver failure (DATATYPE_MISMATCH.CAST_WITHOUT_SUGGESTION).
+Epoch arithmetic goes only through ``functions.spark_epoch`` /
+``duck_epoch``, which cast through TIMESTAMP on Spark (a guard in
+tests/test_plans.py fails on any other spelling).
 """
 
 from __future__ import annotations
@@ -21,6 +24,27 @@ NTZ_REGRESSED = [
     "funnel_sessions",
     "funnel_by_segment",
     "stream_funnel_sessions",
+]
+
+# registry.DRIVER_WINDOW queries whose event time goes through spark_epoch.
+EPOCH_SEAM_WINDOW = [
+    "kendall_tau_terms",
+    "ordinal_pattern_counts",
+    "acf_lag_terms",
+    "backlog_aging_buckets",
+    "interpurchase_gap_profile",
+    "wow_revenue_delta",
+    "runs_test_counts",
+    "shipment_latency_audit",
+    "user_acquisition_curve",
+    "cart_abandonment_daily",
+    "user_activity_depth",
+    "session_duration_profile",
+    "moving_7d_revenue",
+    "weekend_lift",
+    "rolling_retention_7d",
+    "mann_kendall_trend",
+    "ts_ohlc_hourly",
 ]
 
 
@@ -75,7 +99,8 @@ def test_regressed_queries_run_on_nanos_flavor(spark, tmp_path):
     TIMESTAMP(NANOS), which load_table reads as bigint (nanosAsLong)
     and normalizes via timestamp_micros.  The same queries must run
     unchanged — this pins both flavors so a driver-side regeneration
-    can never break one of them again."""
+    can never break one of them again.  The ``EPOCH_SEAM_WINDOW``
+    queries run here too, on the rewritten column."""
     import os
 
     import pyarrow as pa
@@ -98,6 +123,6 @@ def test_regressed_queries_run_on_nanos_flavor(spark, tmp_path):
     for name in ("customer", "orders", "lineitem", "documents"):
         os.symlink(f"{SF_SMALL}/{name}.parquet", flavor_dir / f"{name}.parquet")
 
-    for name in NTZ_REGRESSED + ["join_asof_forward"]:
+    for name in NTZ_REGRESSED + ["join_asof_forward"] + EPOCH_SEAM_WINDOW:
         df = registry.QUERIES[name](spark, str(flavor_dir))
         assert df.count() >= 0, name

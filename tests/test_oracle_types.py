@@ -179,3 +179,24 @@ def test_duck_con_views_only_the_tables_present(tmp_path) -> None:
     assert con.sql(registry.ORACLES["kmv_union_merge"]).fetchone()[0] == 2
     with pytest.raises(duckdb.CatalogException):
         con.sql("SELECT * FROM orders")
+
+
+@pytest.mark.parametrize(
+    "args, named",
+    [([f"{SF_DIR}x"], f"{SF_DIR}x"), ([SF_DIR, "theil_index_term"], "theil_index_term")],
+    ids=["mistyped_dir", "mistyped_query"],
+)
+def test_check_oracle_refuses_an_argument_it_cannot_check(args, named) -> None:
+    """A mistyped directory or query name ends the gate with a non-zero
+    status and a message naming it, before Spark starts, instead of a
+    sweep of nothing that prints ``FAILURES: 0``."""
+    import subprocess
+    import sys
+
+    tool = os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py")
+    run = subprocess.run(
+        [sys.executable, tool, *args], capture_output=True, text=True, timeout=300
+    )
+    assert run.returncode != 0, run.stdout[-500:]
+    assert named in run.stderr, run.stderr[-500:]
+    assert "FAILURES" not in run.stdout and "SparkContext" not in run.stderr

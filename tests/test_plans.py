@@ -689,6 +689,51 @@ def test_rounding_only_in_functions():
     assert not offenders, f"rounding outside functions/: {offenders}"
 
 
+def test_event_time_only_in_functions():
+    """Every timestamp -> epoch-unit conversion is rendered by
+    functions.spark_epoch / duck_epoch.  The hand-typed spellings did
+    not agree: DuckDB's ``// 1000000`` truncates where a Spark cast to
+    BIGINT floors, ``CAST(epoch(ts) AS BIGINT)`` rounds DOUBLE seconds
+    to nearest, and DuckDB's ``CAST(ts AS TIMESTAMP)`` on a UTC-adjusted
+    file depends on its ``TimeZone``.  So no SQL string in the package
+    or the examples calls an epoch function, no Column code calls an
+    ``F.unix_*`` function, and the retired ``_util.ts_epoch_*`` helpers
+    are not named.  Calendar fields and interval differences
+    (``date_part``, ``dayofweek``, ``datediff``) are out of scope."""
+    import ast
+    import glob
+    import os
+    import pathlib
+    import re
+
+    sql_epoch = re.compile(
+        r"(?i)\b(unix_micros|unix_millis|unix_seconds|unix_timestamp|epoch_us|epoch_ms|epoch)\s*\("
+    )
+    root = os.path.join(os.path.dirname(__file__), "..")
+    seam = os.path.join("instructions_mr_spark", "functions", "__init__.py")
+    offenders = []
+    for sub in ("instructions_mr_spark", "examples"):
+        for path in sorted(glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True)):
+            rel = os.path.relpath(path, root)
+            if rel == seam:
+                continue
+            for node in ast.walk(ast.parse(pathlib.Path(path).read_text())):
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if sql_epoch.search(node.value):
+                        offenders.append(f"{rel}:{node.lineno} epoch(")
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and node.attr.startswith("unix_")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "F"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} F.{node.attr}")
+                elif isinstance(node, ast.Name) and node.id in (
+                    "ts_epoch_seconds", "ts_epoch_micros"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} {node.id}")
+    assert not offenders, f"event time outside functions/: {offenders}"
+
 def test_hand_built_tables_only_via_write_tables():
     """Hand-built test tables are written only by
     ``tests/conftest.write_tables``, in the driver's own parquet flavor

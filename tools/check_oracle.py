@@ -8,6 +8,9 @@ sorted by name, rows sorted), exact, with no float tolerance, so a
 does under an exact value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+An argument that is neither the data directory nor a registered query
+name ends the run with status 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -40,6 +43,22 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def arg_error(args: list[str], names) -> str | None:
+    """The first argument a sweep could not check, described, or None.
+    A leading directory is the data; any other argument with a path
+    separator is a directory that does not exist, and every remaining
+    one must be a registered query name, so that a typo cannot turn
+    the run into a sweep of nothing that prints ``FAILURES: 0``."""
+    for i, a in enumerate(args):
+        if i == 0 and os.path.isdir(a):
+            continue
+        if os.sep in a:
+            return f"not a directory: {a}"
+        if a not in names:
+            return f"no such query: {a}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
     only = set(sys.argv[2:]) if len(sys.argv) > 2 else (
@@ -48,6 +67,10 @@ def main() -> int:
     from instructions_mr_spark import registry
 
     registry.load_all()
+    problem = arg_error(sys.argv[1:], registry.QUERIES)
+    if problem:
+        print(f"check_oracle: {problem}", file=sys.stderr)
+        return 2
     # the console progress bar redraws its stderr line with \r, which
     # hides result lines in a combined stdout+stderr log
     spark = get_spark(
